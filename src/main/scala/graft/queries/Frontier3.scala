@@ -1142,20 +1142,13 @@ object Frontier3 {
     cat
   }
 
-  /** Every DSv2 scan description in a frame's optimized plan (V1-bridged
-    * scans unwrapped) — what the manifest-aggregate queries REQUIRE their
-    * plan shape against.
+  /** Every DSv2 scan description in a frame's optimized plan — what the
+    * manifest-aggregate queries REQUIRE their plan shape against.
     */
   private def scanDescriptions(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-          r.scan.getClass
-            .getMethod("v1Scan")
-            .invoke(r.scan)
-            .asInstanceOf[org.apache.spark.sql.connector.read.Scan]
-            .description()
-        else r.scan.description()
+        r.scan.description()
     }
 
   /** The rest of the dashboard reflexes at q195/q197's economics, through
@@ -1241,8 +1234,8 @@ object Frontier3 {
   // -- q214: storage-partitioned join — co-partitioned tables, no shuffle
 
   /** The 100 TB join story: two snapshot tables hive-partitioned on the
-    * same `day` key join with ZERO shuffles on either side. The v2 batch
-    * path ([[graft.sources.snap.SnapV2BatchScan]]) reports every file's
+    * same `day` key join with ZERO shuffles on either side. The snapshot
+    * batch scan ([[graft.sources.snap.SnapV2BatchScan]]) reports every file's
     * typed partition key under a `KeyGroupedPartitioning(identity(day))`;
     * Spark (v2 bucketing, default-on in Spark 4) groups same-key files
     * into co-located input splits and satisfies the join's distribution
@@ -1284,7 +1277,6 @@ object Frontier3 {
     graft.sources.Snapshots.commit(s, new org.apache.hadoop.fs.Path(base, "by_user").toString, Seq("day"))
     withConfs(
       s,
-      "spark.graft.snapshot.batchscan" -> "v2",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
       val joined = s.sql(s"""
@@ -1378,7 +1370,6 @@ object Frontier3 {
       .createOrReplaceTempView(s"graft_q215_dim")
     withConfs(
       s,
-      "spark.graft.snapshot.batchscan" -> "v2",
       // fixture-scale stats would make the benefit estimator decline what
       // it accepts at warehouse scale — bypass the estimate, not the path
       "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false") {
@@ -1394,7 +1385,7 @@ object Frontier3 {
             if r.scan.isInstanceOf[graft.sources.snap.SnapV2BatchScan] =>
           r.scan.asInstanceOf[graft.sources.snap.SnapV2BatchScan]
       }
-      require(scans.size == 1, s"expected the v2 fact scan: ${df.queryExecution.optimizedPlan}")
+      require(scans.size == 1, s"expected the fact scan: ${df.queryExecution.optimizedPlan}")
       val out = freeze(s, df) // executes THIS plan — runtime filter fires here
       val kept = scans.head.currentRels
       require(
@@ -2174,7 +2165,7 @@ object Frontier3 {
   // -- q226: merge-on-read DELETE (deletion vectors) ----------------------
 
   /** SQL DELETE priced as METADATA, not data: with
-    * `spark.graft.delete.mode=mor` the catalog routes `DELETE FROM` to
+    * `spark.graft.rowlevel.mode=mor` the catalog routes `DELETE FROM` to
     * [[graft.sources.DeleteVectors.deleteWhere]] — matched row POSITIONS
     * land in hidden sidecars, the manifest delta re-states the touched
     * files' DV pointers, and not one data file is rewritten. The hash
@@ -2191,7 +2182,7 @@ object Frontier3 {
   def q226(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq226", Seq("day"))
     val files1 = graft.sources.Snapshots.files(s, dir).toSet
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     // sticky MoR: no conf this time — the table already carries DVs
@@ -2246,7 +2237,7 @@ object Frontier3 {
     val (cat, dir) = statsTable(s, d, "snapq227", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // superset: overlap merges
     }
@@ -2292,7 +2283,7 @@ object Frontier3 {
     */
   def q228(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq228", Seq("day"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     s.sql(s"UPDATE $cat.ev SET n = n * 2 WHERE event_type = 'view'")
@@ -2331,7 +2322,7 @@ object Frontier3 {
     val (cat, _) = statsTable(s, d, "snapq229", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
@@ -2370,7 +2361,7 @@ object Frontier3 {
     */
   def q230(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq230", Seq("day"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     val rewritten =
@@ -2711,7 +2702,7 @@ object Frontier3 {
     val pinnedV =
       s.sql(s"CALL $cat.create_ref(table => 'ev', name => 'prelaunch')").head().getLong(0)
     val zeroCopy = graft.sources.Snapshots.files(s, dir).toSet == filesBefore
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // v2
     }
     s.sql(s"""
@@ -3015,7 +3006,7 @@ object Frontier3 {
     // delete vectoring a file the branch vectored too
     s.sql(s"INSERT INTO $cat.ev (day, event_type, n, sum_u) " +
       "VALUES (DATE'1999-12-31', '__main', CAST(1 AS BIGINT), CAST(10 AS BIGINT))")
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$m'")
     }
     val divergeRefused = scala.util
@@ -3124,7 +3115,7 @@ object Frontier3 {
         .divide(new java.math.BigDecimal(nGroups), 6, java.math.RoundingMode.HALF_UP)) == 0
     // merge-on-read: vector one day's clicks — the same SUM goes hybrid,
     // scanning exactly the one DV'd file (the corrupt file stays folded)
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     val hybrid = s.sql(s"SELECT sum(rev) AS rev_after FROM $cat.ev")
@@ -3262,7 +3253,7 @@ object Frontier3 {
       s, dir, "dev",
       s.sql("SELECT DATE'1999-12-31' AS day, '__branch' AS event_type, " +
         "CAST(7 AS BIGINT) AS n, CAST(42 AS BIGINT) AS sum_u"))
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     }
     val divergeRefused = scala.util
@@ -3349,7 +3340,7 @@ object Frontier3 {
     val row1 = clean.head()
     // merge-on-read: vector one day's clicks, the same SUM goes hybrid —
     // sidecar folds for every clean file, ONE bounded scan of the DV'd one
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     val hybrid = s.sql(s"SELECT sum(n) AS sum_after FROM $cat.ev")
@@ -3401,7 +3392,7 @@ object Frontier3 {
   def q234(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq234", Seq("day", "n"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     }
     // corrupt a CLEAN day's data file (crc sidecar removed, bytes junked):
@@ -3473,7 +3464,7 @@ object Frontier3 {
     val (cat, dir) = statsTable(s, d, "snapq233", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.delete.mode" -> "mor") {
+    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'") // v2
       s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$cut'") // v3
     }

@@ -66,7 +66,15 @@ object Snapshots {
   private def checkpointEvery(spark: SparkSession): Int =
     spark.conf
       .getOption("spark.graft.snapshot.checkpointInterval")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
+      .map(v =>
+        // refuse loudly like the sibling confs: a swallowed typo would
+        // silently restore the default chain length
+        try v.trim.toInt
+        catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(
+              s"spark.graft.snapshot.checkpointInterval must be an integer, got '$v'")
+        })
       .getOrElse(DefaultCheckpointInterval)
 
   /** Set for the duration of [[checkpoint]]'s commit on ITS thread only —
@@ -626,7 +634,7 @@ object Snapshots {
   val RowCountKey = "__rows"
 
   /** Pseudo-column under which a v2 manifest records each file's byte
-    * length — lets scan statistics ([[graft.sources.snap.SnapBatchScan]])
+    * length — lets scan statistics ([[graft.sources.snap.SnapV2BatchScan]])
     * and the metadata tables answer size questions from the manifest
     * alone instead of one getFileStatus RPC per file per planning pass.
     */

@@ -6,13 +6,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsDelete, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
@@ -48,16 +48,20 @@ import graft.sources.Snapshots
   *    counts — no data file (not even a footer) opens. Spark only offers the
   *    aggregate when no residual filters exist, so the pushdown is sound by
   *    construction.
-  *  - '''Plan-time statistics''' ([[SupportsReportStatistics]]): manifest
-  *    row counts + on-disk byte sizes feed join planning, so a small
-  *    snapshot table broadcast-joins without a manual hint.
+  *  - '''Plan-time statistics'''
+  *    ([[org.apache.spark.sql.connector.read.SupportsReportStatistics]]):
+  *    manifest row counts + on-disk byte sizes feed join planning, so a
+  *    small snapshot table broadcast-joins without a manual hint.
   *
-  * The data path reuses the battle-tested [[Snapshots.scanRels]] scan
-  * (Spark's own vectorized parquet reader, hive partition inference, the
-  * recorded schema enforced for evolution-safe pinned reads) through the
-  * public [[V1Scan]] bridge — one Row conversion at the scan boundary, and
-  * everything below it is the same explicit-file-list plan `readSnapshot`
-  * builds. DML writes work: `INSERT INTO` appends + commits the next
+  * Every data read is ONE native DSv2 batch scan ([[SnapV2BatchScan]]):
+  * the manifest-pruned file list read through the spliced parquet reader
+  * (recorded schema enforced for evolution-safe pinned reads, typed hive
+  * partition values from the path), with storage-partitioned joins,
+  * runtime file pruning and files-read/pruned SQL metrics on every read.
+  * Manifest-only answers (pushed aggregates, metadata tables) are
+  * [[org.apache.spark.sql.connector.read.LocalScan]]s planned as one
+  * driver-local table scan ([[SnapLocalScanStrategy]]) — zero Spark
+  * jobs. DML writes work: `INSERT INTO` appends + commits the next
   * manifest version (keeping the table's stats-column discipline), and
   * `INSERT OVERWRITE` archives the replaced files so the overwrite is
   * itself time-travelable ([[SnapWriteBuilder]]); DDL is refused — a
@@ -77,6 +81,7 @@ class GraftCatalog
     rootDir = Option(options.get("root")).getOrElse(
       throw new IllegalArgumentException(
         s"GraftCatalog '$name' needs spark.sql.catalog.$name.root = <base directory of snapshot tables>"))
+    SnapLocalScanStrategy.register(spark)
   }
 
   override def name(): String = catName
@@ -376,14 +381,22 @@ object SnapTable {
   val PosMetaCol = "_pos"
 
   /** THE merge-on-read switch, one predicate for the whole DML surface:
-    * either conf flips SQL DELETE (the pushable SupportsDelete path) AND
-    * UPDATE/MERGE/un-pushable DELETE (the delta-based row-level path) to
-    * MoR together — a split surface (deletes rewriting files while
-    * updates write vectors) would be incoherent.
+    * `spark.graft.rowlevel.mode=mor` flips SQL DELETE (the pushable
+    * SupportsDelete path) AND UPDATE/MERGE/un-pushable DELETE (the
+    * delta-based row-level path) to MoR together — a split surface
+    * (deletes rewriting files while updates write vectors) would be
+    * incoherent. `cow` (the default) or `mor`; any other value refuses
+    * naming the key, so a typo never silently means copy-on-write.
     */
   def morEnabled(spark: SparkSession): Boolean =
-    Seq("spark.graft.rowlevel.mode", "spark.graft.delete.mode").exists(k =>
-      spark.conf.getOption(k).exists(_.equalsIgnoreCase("mor")))
+    spark.conf.getOption("spark.graft.rowlevel.mode") match {
+      case None => false
+      case Some(m) if m.trim.equalsIgnoreCase("cow") => false
+      case Some(m) if m.trim.equalsIgnoreCase("mor") => true
+      case Some(m) =>
+        throw new IllegalArgumentException(
+          s"spark.graft.rowlevel.mode must be 'cow' or 'mor', got '$m'")
+    }
 }
 
 class SnapTable(val dir: String, version: Long, val branch: Option[String] = None)
@@ -528,7 +541,7 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => SnapFilters.toColumn(f).isDefined)
 
-  /** Delete mode: `spark.graft.delete.mode=mor` opts the session into
+  /** Delete mode: `spark.graft.rowlevel.mode=mor` opts the session into
     * merge-on-read (record deletion vectors, rewrite nothing); the default
     * stays copy-on-write. STICKY per table: once any file carries a DV,
     * later SQL deletes stay MoR regardless of the conf (the COW path reads
@@ -544,8 +557,8 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
             s"cannot translate delete predicate $f — canDeleteWhere should have refused it")))
       .reduceOption(_ && _)
       .getOrElse(lit(true))
-    // either MoR switch flips this path too — the pushable DELETE must
-    // not silently rewrite files while UPDATE/MERGE run merge-on-read
+    // the MoR switch flips this path too — the pushable DELETE must not
+    // silently rewrite files while UPDATE/MERGE run merge-on-read
     val morConf = SnapTable.morEnabled(spark)
     // short-circuit: the O(files) stat sweep only runs when the conf
     // alone doesn't already decide the route
@@ -649,19 +662,20 @@ class SnapMetaTable(dir: String, version: Long, kind: String) extends Table with
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
-    new V1Scan {
-      override def readSchema(): StructType = tableSchema
-      override def description(): String = s"GraftSnapMetaScan $dir#$kind (manifest-only)"
-      override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-        new SnapMetaRelation(context, dir, version, kind, tableSchema).asInstanceOf[T]
-    }
+    new SnapMetaScan(dir, version, kind, tableSchema)
 }
 
-class SnapMetaRelation(ctx: SQLContext, dir: String, version: Long, kind: String, val schema: StructType)
-    extends BaseRelation
-    with TableScan {
+/** The metadata relation's rows, computed on the driver when Spark plans
+  * the scan — a [[LocalScan]], so the answer runs as a local table scan
+  * with zero Spark jobs ([[SnapLocalScanStrategy]]).
+  */
+class SnapMetaScan(dir: String, version: Long, kind: String, schema: StructType) extends LocalScan {
 
-  override def sqlContext: SQLContext = ctx
+  override def readSchema(): StructType = schema
+
+  override def description(): String = s"GraftSnapMetaScan $dir#$kind (manifest-only)"
+
+  override def rows(): Array[InternalRow] = SnapLocalRows.toInternal(schema, metaRows)
 
   /** Manifest-recorded byte length when present (zero I/O), else one
     * getFileStatus (pre-LengthKey manifests), None if vacuumed.
@@ -677,9 +691,9 @@ class SnapMetaRelation(ctx: SQLContext, dir: String, version: Long, kind: String
       } catch { case _: Exception => None } // vacuumed
     }
 
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    val rows: Seq[Row] = kind match {
+  private def metaRows: Seq[Row] = {
+    val spark = SparkSession.active
+    kind match {
       case "snapshots" =>
         // a version pin shows history AS OF that version, not beyond it
         val all = Snapshots.manifestVersions(spark, dir)
@@ -781,7 +795,56 @@ class SnapMetaRelation(ctx: SQLContext, dir: String, version: Long, kind: String
           Row(rel, nRows, bytesOf(spark, mv.stats, rel).map(_.asInstanceOf[Any]).orNull, archived)
         }
     }
-    ctx.sparkContext.parallelize(rows, 1)
+  }
+}
+
+/** External [[Row]]s → the catalyst rows a [[LocalScan]] hands Spark. */
+private[snap] object SnapLocalRows {
+  def toInternal(schema: StructType, rows: Seq[Row]): Array[InternalRow] = {
+    val conv = CatalystTypeConverters.createToCatalystConverter(schema)
+    rows.map(r => conv(r).asInstanceOf[InternalRow]).toArray
+  }
+}
+
+/** Plans a filter/projection over a manifest-only scan ([[SnapAggScan]],
+  * [[SnapMetaScan]]) as ONE driver-local table scan, the projection
+  * applied to the rows at planning time. Spark's own [[LocalScan]]
+  * planning keeps a ProjectExec above the local scan (a pushed
+  * aggregate's output is always aliased), and collecting through it
+  * launches a Spark job for rows the driver already holds. Registered on
+  * the session by [[GraftCatalog.initialize]]; anything it cannot
+  * evaluate on the driver falls through to Spark's planning.
+  */
+private[snap] object SnapLocalScanStrategy extends org.apache.spark.sql.execution.SparkStrategy {
+  import org.apache.spark.sql.catalyst.expressions.{And, Expression, Predicate, SubqueryExpression, UnsafeProjection}
+  import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+  import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+
+  private def driverEvaluable(e: Expression): Boolean =
+    e.deterministic && !SubqueryExpression.hasSubquery(e)
+
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalOperation(project, filters, r: DataSourceV2ScanRelation)
+        if (r.scan.isInstanceOf[SnapAggScan] || r.scan.isInstanceOf[SnapMetaScan]) &&
+          (project ++ filters).forall(driverEvaluable) =>
+      val keep = filters.reduceOption(And).map(Predicate.create(_, r.output))
+      val proj = UnsafeProjection.create(project, r.output)
+      val rows = r.scan
+        .asInstanceOf[LocalScan]
+        .rows()
+        .iterator
+        .filter(row => keep.forall(_.eval(row)))
+        .map(row => proj(row).copy(): InternalRow)
+        .toVector
+      LocalTableScanExec(project.map(_.toAttribute), rows, None) :: Nil
+    case _ => Nil
+  }
+
+  def register(spark: SparkSession): Unit = synchronized {
+    val es = spark.experimental
+    if (!es.extraStrategies.contains(this)) es.extraStrategies = es.extraStrategies :+ this
   }
 }
 
@@ -1065,8 +1128,8 @@ object SnapWriteBuilder {
   }
 }
 
-/** Filter translations shared by the scan builder and the V1 relation —
-  * one implementation, and a function value that closes over nothing.
+/** Filter translations shared by the scan builder, SQL DELETE, the
+  * overwrite writer and the streaming source — one implementation.
   */
 private[sources] object SnapFilters {
 
@@ -1091,9 +1154,10 @@ private[sources] object SnapFilters {
     case _ => None
   }
 
-  /** Can this filter be re-evaluated by the inner snapshot DataFrame
-    * (pushing it below the V1 boundary re-enables parquet row-group /
-    * page skipping)? Nested fields (dotted names) are left to Spark.
+  /** The filter as a Column, when the translation can express it: the
+    * SQL DELETE predicate, and the test for a residual the scan lists as
+    * pushed (its reader re-applies it for parquet row-group skipping).
+    * Nested fields (dotted names) are left to Spark.
     */
   def toColumn(f: Filter): Option[Column] = {
     def ref(a: String): Option[Column] = if (a.contains(".")) None else Some(col(a))
@@ -1594,50 +1658,26 @@ class SnapScanBuilder(
               vs.exists(v => Snapshots.bloomMightContain(SparkSession.active, dir, rel, c, v))
             }
           }
-      // the native v2 batch path (storage-partitioned joins + runtime
-      // file pruning) is an EXPLICIT opt-in: per-read option or the
-      // session-wide graft conf (for SQL-only clients that can't pass
-      // read options). NOT keyed on spark.sql.sources.v2.bucketing.enabled
-      // — that is default-TRUE on Spark 4, and the default scan path must
-      // stay the vectorized V1 bridge
-      val v2Requested =
-        options.get("batchscan").exists(_.equalsIgnoreCase("v2")) ||
-          SparkSession.active.conf
-            .getOption("spark.graft.snapshot.batchscan")
-            .exists(_.equalsIgnoreCase("v2"))
-      if (v2Requested)
-        // consumed filters ride along for display and (V1 path) harmless
-        // idempotent re-application — they were already file-exact
-        new SnapV2BatchScan(
-          dir,
-          view,
-          tableSchema,
-          required,
-          kept,
-          (translated ++ consumed).toSeq,
-          options,
-          consumed.toSeq)
-      else
-        new SnapBatchScan(
-          dir,
-          planView.version,
-          tableSchema,
-          required,
-          kept,
-          totalFiles.toInt,
-          (translated ++ consumed).toSeq,
-          planView.stats,
-          options,
-          consumed.toSeq,
-          ndvCols = bloomCols)
+      // consumed filters ride along for display only: they were already
+      // file-exact, and the reader drops filters on spliced path columns
+      new SnapV2BatchScan(
+        dir,
+        planView,
+        totalFiles,
+        tableSchema,
+        required,
+        kept,
+        (translated ++ consumed).toSeq,
+        options,
+        consumed.toSeq)
   }
 }
 
-/** Manifest-derived scan statistics, shared by both batch paths: byte
-  * sizes from the recorded per-file lengths (zero I/O; one getFileStatus
-  * RPC per file only for pre-LengthKey manifests), row counts when every
-  * kept file records one — what lets join planning broadcast a small
-  * snapshot table without a hint.
+/** Manifest-derived statistics of the batch scan: byte sizes from the
+  * recorded per-file lengths (zero I/O; one getFileStatus RPC per file
+  * only for pre-LengthKey manifests), row counts when every kept file
+  * records one — what lets join planning broadcast a small snapshot
+  * table without a hint.
   */
 private[snap] object SnapScanStats {
   def of(
@@ -1717,7 +1757,7 @@ class SnapAggScan(
     fields: Seq[SnapAggScan.Field],
     /** The version's FULL live-file count (the view may be dir-pruned). */
     totalFiles: Long = -1L)
-    extends V1Scan {
+    extends LocalScan {
 
   import SnapAggScan._
 
@@ -1807,7 +1847,7 @@ class SnapAggScan(
     * value tuple grouped — clean files folded from the manifest view
     * alone, DV'd files from [[scanned]].
     */
-  private[snap] lazy val rows: Seq[Seq[Any]] =
+  private lazy val answer: Seq[Seq[Any]] =
     if (groupCols.isEmpty) Seq(aggRow(Seq.empty, rels))
     else
       rels.groupBy(groupKeyOf).toSeq.map { case (key, group) =>
@@ -1971,8 +2011,8 @@ class SnapAggScan(
       s"[${rendered.mkString(", ")}]$grouped$filtered$mode"
   }
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new SnapAggRelation(context, readSchema(), rows).asInstanceOf[T]
+  override def rows(): Array[InternalRow] =
+    SnapLocalRows.toInternal(readSchema(), answer.map(vs => Row(vs: _*)))
 }
 
 object SnapAggScan {
@@ -2012,113 +2052,5 @@ object SnapAggScan {
     case LongType => raw.toLong
     case DateType => java.sql.Date.valueOf(raw)
     case _ => raw
-  }
-}
-
-class SnapAggRelation(ctx: SQLContext, val schema: StructType, rows: Seq[Seq[Any]])
-    extends BaseRelation
-    with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def buildScan(): RDD[Row] =
-    ctx.sparkContext.parallelize(rows.map(vs => Row(vs: _*)), 1)
-}
-
-/** The pruned snapshot scan: delegates the data path to
-  * [[Snapshots.scanRels]] (vectorized parquet + hive partition inference +
-  * enforced recorded schema) over the manifest files that survived
-  * stats pruning, with pushed filters re-applied inside so parquet-level
-  * skipping still engages. Reports manifest-derived statistics so join
-  * planning can broadcast small snapshot tables.
-  */
-class SnapBatchScan(
-    dir: String,
-    version: Long,
-    tableSchema: StructType,
-    required: StructType,
-    val keptRels: Seq[String],
-    totalFiles: Int,
-    filters: Seq[Filter],
-    stats: Map[String, Map[String, Snapshots.ColStat]],
-    options: Map[String, String] = Map.empty,
-    consumedFilters: Seq[Filter] = Seq.empty,
-    ndvCols: Seq[String] = Seq.empty)
-    extends V1Scan
-    with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  /** `spark.readStream.table("cat.t")` — the manifest-log streaming
-    * source ([[SnapMicroBatchStream]]); stats pruning and the version pin
-    * don't apply (the stream's own offsets are versions), but column
-    * pruning does — `required` carries through.
-    */
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SnapMicroBatchStream(dir, required, tableSchema, options, consumedFilters)
-
-  override def description(): String =
-    s"GraftSnapScan $dir v$version files=${keptRels.size}/$totalFiles " +
-      s"PushedFilters: [${filters.mkString(", ")}], ReadSchema: ${required.simpleString}"
-
-  override def estimateStatistics(): Statistics =
-    SnapScanStats.of(SparkSession.active, dir, keptRels, stats, ndvCols)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
-    // rel → (sidecar rel, deleted count) of the kept files: the relation
-    // applies merge-on-read deletes via scanRels' anti-join
-    val dv: Map[String, (String, Long)] =
-      keptRels.flatMap(r => stats.get(r).flatMap(Snapshots.dvOf).map(r -> _)).toMap
-    new SnapRelation(context, dir, tableSchema, required, keptRels, filters, SnapFilters.toColumn, dv)
-      .asInstanceOf[T]
-  }
-}
-
-class SnapRelation(
-    ctx: SQLContext,
-    dir: String,
-    tableSchema: StructType,
-    required: StructType,
-    keptRels: Seq[String],
-    filters: Seq[Filter],
-    toColumn: Filter => Option[Column],
-    dv: Map[String, (String, Long)] = Map.empty)
-    extends BaseRelation
-    with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    // `_file` provenance is produced INSIDE scanRels (scan-local
-    // input_file_name on clean files; the metadata column on DV'd files,
-    // where a post-anti-join input_file_name would evaluate post-exchange
-    // and yield "") — needed whenever a pushed predicate references it,
-    // even if the projection doesn't
-    val needFile = required.fieldNames.contains(SnapTable.FileMetaCol) ||
-      filters.exists(_.references.contains(SnapTable.FileMetaCol))
-    val needPos = required.fieldNames.contains(SnapTable.PosMetaCol) ||
-      filters.exists(_.references.contains(SnapTable.PosMetaCol))
-    var df: DataFrame =
-      if (keptRels.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tableSchema)
-      else
-        Snapshots.scanRels(
-          spark,
-          dir,
-          keptRels,
-          Some(tableSchema),
-          dv,
-          fileCol = if (needFile) Some(SnapTable.FileMetaCol) else None,
-          posCol = if (needPos) Some(SnapTable.PosMetaCol) else None)
-    if (needFile && keptRels.isEmpty)
-      df = df.withColumn(
-        SnapTable.FileMetaCol,
-        org.apache.spark.sql.functions.input_file_name())
-    if (needPos && keptRels.isEmpty)
-      df = df.withColumn(SnapTable.PosMetaCol, org.apache.spark.sql.functions.lit(0L))
-    filters.flatMap(toColumn).reduceOption(_ && _).foreach(c => df = df.filter(c))
-    df = df.select(required.fieldNames.toIndexedSeq.map(n => df(n)): _*)
-    df.rdd
   }
 }

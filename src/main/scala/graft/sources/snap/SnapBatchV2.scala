@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Snapshots
 
-/** The NATIVE DSv2 batch path of a snapshot scan — what the [[V1Scan]]
-  * bridge structurally cannot express, and the two biggest join wins a
-  * 100 TB table has:
+/** THE batch scan of a snapshot table — every catalog data read plans
+  * as this one native DSv2 scan, which carries the two biggest join wins
+  * a 100 TB table has:
   *
   *  - '''Storage-partitioned joins''' ([[SupportsReportPartitioning]]):
   *    every file reports its hive partition values as a typed partition
@@ -32,12 +32,12 @@ import graft.sources.Snapshots
   *    filtered dimension reads only the matching partitions — planned
   *    from the manifest, zero file opens.
   *
-  * Selected by [[SnapScanBuilder]] on explicit opt-in only —
-  * `.option("batchscan", "v2")` per read, or session conf
-  * `spark.graft.snapshot.batchscan=v2` for SQL-only clients; the default
-  * stays the vectorized [[SnapBatchScan]] V1 bridge. (Spark 4 ships
-  * `spark.sql.sources.v2.bucketing.enabled` default-true, so an opted-in
-  * scan gets SPJ grouping with no further conf.) Executors read through the SAME
+  * Built by [[SnapScanBuilder]] from its PLANNING view — on a cold
+  * partition-pruned plan that is the dir-pruned manifest slice plus the
+  * recorded total file count, so neither the description, the statistics
+  * nor the pruning metrics ever force the full file list. (Spark 4 ships
+  * `spark.sql.sources.v2.bucketing.enabled` default-true, so every read
+  * gets SPJ grouping with no further conf.) Executors read through the SAME
   * [[SnapStreamReadFactory]] the streaming source uses (bridged
   * `ParquetReadSupport`: schema clipping null-fills ALTER-added columns,
   * sanctioned widenings read in place, typed partition values spliced
@@ -48,7 +48,12 @@ import graft.sources.Snapshots
   */
 class SnapV2BatchScan(
     dir: String,
+    /** The planning view: holds every initial rel and its stats; may be a
+      * dir-pruned slice of the pinned version.
+      */
     view: Snapshots.ManifestView,
+    /** The pinned version's FULL live-file count. */
+    totalFiles: Long,
     tableSchema: StructType,
     required: StructType,
     initialRels: Seq[String],
@@ -87,15 +92,17 @@ class SnapV2BatchScan(
 
   override def toBatch: Batch = this
 
-  /** Streaming through a v2-enabled session still works: same manifest-log
-    * source the V1 bridge scan hands out.
+  /** `spark.readStream.table("cat.t")` — the manifest-log streaming
+    * source ([[SnapMicroBatchStream]]); stats pruning and the version pin
+    * don't apply (the stream's own offsets are versions), but column
+    * pruning does — `required` carries through.
     */
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapMicroBatchStream(dir, required, tableSchema, options, consumedFilters)
 
   override def description(): String =
-    s"GraftSnapV2Scan $dir v${view.version} files=${rels.size}/${view.rels.size} " +
+    s"GraftSnapScan $dir v${view.version} files=${rels.size}/$totalFiles " +
       s"keyedBy=[${partCols.mkString(", ")}] PushedFilters: [${filters.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
@@ -224,7 +231,7 @@ class SnapV2BatchScan(
     */
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
     val read = rels.size.toLong
-    val prunedTotal = view.rels.size.toLong - read
+    val prunedTotal = totalFiles - read
     Array(
       SnapV2BatchScan.taskMetric("snapFilesRead", read),
       SnapV2BatchScan.taskMetric("snapFilesPruned", prunedTotal))

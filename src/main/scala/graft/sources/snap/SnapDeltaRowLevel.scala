@@ -40,9 +40,8 @@ import graft.sources.{DeleteVectors, Snapshots}
   * from "rewrite every matched multi-GB file" to "write the matched rows
   * plus kilobytes of sidecar": an update of 0.01 % of rows costs 0.01 %
   * of the bytes. Selected per session with
-  * `spark.graft.rowlevel.mode=mor` (or `spark.graft.delete.mode=mor` —
-  * one MoR switch flips the whole DML surface); the default stays
-  * copy-on-write.
+  * `spark.graft.rowlevel.mode=mor` (one MoR switch flips the whole DML
+  * surface); the default stays copy-on-write.
   *
   * Change feed and streaming integrate for free: the commit is DV
   * restates + added files, so `cat.t.changes` emits precise per-position
@@ -85,8 +84,6 @@ class SnapDeltaRowLevelOperation(
       override def build(): Scan = {
         val dvByRel: Map[String, String] = Snapshots.dvPathByRel(view)
         super.build() match {
-          case b: SnapBatchScan =>
-            new SnapRowLevelScan(dir, b.keptRels, b.readSchema(), tableSchema, dvByRel)
           case v: SnapV2BatchScan =>
             new SnapRowLevelScan(dir, v.currentRels, v.readSchema(), tableSchema, dvByRel)
           case s => s

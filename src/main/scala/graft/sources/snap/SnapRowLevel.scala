@@ -176,15 +176,9 @@ class SnapRowLevelOperation(
         // applies to surviving rels)
         val dvByRel: Map[String, String] = Snapshots.dvPathByRel(view)
         super.build() match {
-          case b: SnapBatchScan =>
-            scannedRels = b.keptRels
-            // the row-level read path plans a true DSv2 Batch (no V1
-            // bridge exists under ReplaceData): same pruned file list,
-            // read through Spark's own parquet row materializer
-            new SnapRowLevelScan(dir, b.keptRels, b.readSchema(), tableSchema, dvByRel)
           case v: SnapV2BatchScan =>
-            // a session opted into the v2 batch path: same file list,
-            // same row-level read shape
+            // same pruned file list, one input partition per file and no
+            // runtime filtering: the write replaces exactly these files
             scannedRels = v.currentRels
             new SnapRowLevelScan(dir, v.currentRels, v.readSchema(), tableSchema, dvByRel)
           case s => s // count-style scans never appear under a row-level op
@@ -254,58 +248,6 @@ class SnapRowLevelScan(
       org.apache.spark.sql.graft.Bridge.serializableConf(
         org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)),
       spark.conf.get("spark.sql.session.timeZone"))
-  }
-}
-
-case class SnapFileInput(path: String) extends org.apache.spark.sql.connector.read.InputPartition
-
-case class SnapParquetReadFactory(schemaJson: String, conf: java.io.Serializable)
-    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-
-  override def createReader(p: org.apache.spark.sql.connector.read.InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[SnapFileInput].path
-    val required =
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // `_file` is OURS to produce, not parquet's: read the data columns,
-    // splice the partition's file path into the metadata slot per row
-    val fileIdx = required.fieldNames.indexOf(SnapTable.FileMetaCol)
-    val dataSchema =
-      if (fileIdx < 0) required
-      else StructType(required.fields.filterNot(_.name == SnapTable.FileMetaCol))
-    val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-      new Path(path),
-      dataSchema,
-      org.apache.spark.sql.graft.Bridge.confOf(conf))
-    if (fileIdx < 0)
-      new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = { cur = reader.read(); cur != null }
-        override def get(): InternalRow = cur
-        override def close(): Unit = reader.close()
-      }
-    else {
-      val fileVal = org.apache.spark.unsafe.types.UTF8String.fromString(path)
-      val outIdx = required.fieldNames.zipWithIndex.collect {
-        case (n, i) if n != SnapTable.FileMetaCol => i
-      }
-      val dataTypes = dataSchema.fields.map(_.dataType)
-      new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-        private var cur: InternalRow = _
-        override def next(): Boolean = { cur = reader.read(); cur != null }
-        override def get(): InternalRow = {
-          val out = new Array[Any](required.length)
-          var i = 0
-          while (i < dataTypes.length) {
-            out(outIdx(i)) = if (cur.isNullAt(i)) null else cur.get(i, dataTypes(i))
-            i += 1
-          }
-          out(fileIdx) = fileVal
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-        }
-        override def close(): Unit = reader.close()
-      }
-    }
   }
 }
 

@@ -54,9 +54,10 @@ class MvRewriteSpec extends SparkSpec {
         allScans(a.inputPlan)
     }.flatten
 
+  // the FULL root path: the base name alone ("mv") also matches the
+  // fixture's temp dir prefix inside every fact scan's description
   private def scannedUnder(df: DataFrame, root: String): Boolean =
-    allScans(df.queryExecution.executedPlan)
-      .exists(_.contains(new java.io.File(root).getName))
+    allScans(df.queryExecution.executedPlan).exists(_.contains(root))
 
   private def answeredFromMv(df: DataFrame, mvRoot: String, factRoot: String): Boolean = {
     val noAgg = df.queryExecution.optimizedPlan.collectFirst {

@@ -394,16 +394,17 @@ class DeleteVectorsSpec extends SparkSpec {
   test("v2 batch scan (SPJ/DPP path) applies deletion vectors too") {
     val (_, dir) = catalogTable("dvv2")
     DeleteVectors.deleteWhere(spark, dir, $"id" % 2 === 0)
-    val v1 = spark.sql("SELECT id, v FROM dvv2.ev ORDER BY id").collect().map(_.getLong(0)).toSeq
-    val v2 = spark.read
-      .option("batchscan", "v2")
-      .table("dvv2.ev")
+    val viaCatalog =
+      spark.sql("SELECT id, v FROM dvv2.ev ORDER BY id").collect().map(_.getLong(0)).toSeq
+    // the scanRels path (anti-join on the vectors) agrees
+    val direct = Snapshots
+      .readSnapshot(spark, dir)
       .select($"id")
       .orderBy($"id")
       .collect()
       .map(_.getLong(0))
       .toSeq
-    assert(v1 == Seq(1L, 3L) && v2 == v1, s"v1=$v1 v2=$v2")
+    assert(viaCatalog == Seq(1L, 3L) && direct == viaCatalog, s"catalog=$viaCatalog direct=$direct")
   }
 
   test("insert-only stream: a DV commit is a change commit — fails loudly, skippable") {
@@ -499,10 +500,7 @@ class DeleteVectorsSpec extends SparkSpec {
         "FROM dvhyb.ev GROUP BY day ORDER BY day")
     val descs = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-          r.scan.getClass.getMethod("v1Scan").invoke(r.scan)
-            .asInstanceOf[org.apache.spark.sql.connector.read.Scan].description()
-        else r.scan.description()
+        r.scan.description()
     }
     assert(
       descs.exists(d => d.contains("GraftSnapAggScan") && d.contains("hybrid: 1/4")),
@@ -531,10 +529,7 @@ class DeleteVectorsSpec extends SparkSpec {
     val cnt = spark.sql("SELECT count(*) AS n FROM dvhyb.ev")
     val cntDescs = cnt.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-          r.scan.getClass.getMethod("v1Scan").invoke(r.scan)
-            .asInstanceOf[org.apache.spark.sql.connector.read.Scan].description()
-        else r.scan.description()
+        r.scan.description()
     }
     assert(cntDescs.exists(_.contains("manifest-only, zero file opens")), cntDescs.toString)
     assert(cnt.head().getLong(0) == 4L)
@@ -546,10 +541,7 @@ class DeleteVectorsSpec extends SparkSpec {
     val df = spark.sql("SELECT day, count(*) AS n FROM dvgrp.ev GROUP BY day ORDER BY day")
     val descs = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-          r.scan.getClass.getMethod("v1Scan").invoke(r.scan)
-            .asInstanceOf[org.apache.spark.sql.connector.read.Scan].description()
-        else r.scan.description()
+        r.scan.description()
     }
     assert(descs.exists(_.contains("GraftSnapAggScan")), s"expected pushdown, got $descs")
     val rows = df.collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSeq

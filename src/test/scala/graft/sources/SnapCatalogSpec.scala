@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.snap.{GraftCatalog, SnapBatchScan, SnapAggScan}
+import graft.sources.snap.{GraftCatalog, SnapAggScan, SnapV2BatchScan}
 
 /** The SQL face of the snapshot format: identifiers, `VERSION AS OF` /
   * `TIMESTAMP AS OF`, manifest-stats file pruning driven by pushed SQL
@@ -36,17 +36,48 @@ class SnapCatalogSpec extends SparkSpec {
     (base, dir)
   }
 
+  /** The executed batch scan node of an already-collected `df`,
+    * descending through AQE stage boundaries (query stages are leaves to
+    * plain collect).
+    */
+  private def batchScanExecOf(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.datasources.v2.BatchScanExec = {
+    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        allNodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allNodes(q.plan)
+      case other => other.children.flatMap(allNodes)
+    })
+    allNodes(df.queryExecution.executedPlan)
+      .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+      .getOrElse(fail(s"no BatchScanExec in final plan:\n${df.queryExecution.executedPlan}"))
+  }
+
+  /** Spark jobs launched by `body`, counted with the listener bus drained
+    * before (no earlier work leaks in) and after (every job of `body` is
+    * delivered before counting).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
+
   private def scanOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.connector.read.Scan =
     df.queryExecution.optimizedPlan
       .collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-          // V1Scan-based scans plan as a V1ScanWrapper holding ours
-          if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-            r.scan.getClass
-              .getMethod("v1Scan")
-              .invoke(r.scan)
-              .asInstanceOf[org.apache.spark.sql.connector.read.Scan]
-          else r.scan
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
       }
       .headOption
       .getOrElse(fail(s"no DSv2 scan in plan:\n${df.queryExecution.optimizedPlan}"))
@@ -91,14 +122,14 @@ class SnapCatalogSpec extends SparkSpec {
     assert(df.as[Long].head() == 5L)
     // with a residual filter the aggregate must NOT push (sound fallback)
     val filtered = spark.sql("SELECT count(*) FROM snapc3.ev WHERE event_type = 'view'")
-    assert(scanOf(filtered).isInstanceOf[SnapBatchScan])
+    assert(scanOf(filtered).isInstanceOf[SnapV2BatchScan])
     assert(filtered.as[Long].head() == 3L)
   }
 
   test("scan reports manifest-derived statistics (rows + bytes) for join planning") {
     val (_, _) = fixture("snapc4")
     val scan = scanOf(spark.sql("SELECT * FROM snapc4.ev"))
-      .asInstanceOf[SnapBatchScan]
+      .asInstanceOf[SnapV2BatchScan]
     val st = scan.estimateStatistics()
     assert(st.numRows().getAsLong == 5L)
     assert(st.sizeInBytes().getAsLong > 0L)
@@ -131,7 +162,7 @@ class SnapCatalogSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.snapc6", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.snapc6.root", base)
     val df = spark.sql("SELECT count(*) FROM snapc6.t")
-    assert(scanOf(df).isInstanceOf[SnapBatchScan], "no row counts in a v1 manifest: must scan")
+    assert(scanOf(df).isInstanceOf[SnapV2BatchScan], "no row counts in a v1 manifest: must scan")
     assert(df.as[Long].head() == 2L)
     assert(spark.sql("SELECT sum(v) FROM snapc6.t").as[Double].head() == 3.0)
   }
@@ -373,7 +404,9 @@ class SnapCatalogSpec extends SparkSpec {
     Snapshots.lastManifestBytesRead.set(0L)
     val q = spark.sql("SELECT id FROM snapc27.t WHERE day = 'day-005' ORDER BY id")
     val desc = scanOf(q).description()
-    assert(q.as[Long].collect().toSeq == Seq(5L, 125L))
+    // collect q ITSELF: its executed scan node is the one whose metrics
+    // are checked below
+    assert(q.collect().map(_.getLong(0)).toSeq == Seq(5L, 125L))
     assert(desc.contains("files=1/120"), desc)
     val bytes = Snapshots.lastManifestBytesRead.get()
     assert(bytes > 0L, "pruned catalog plan must go through the indexed path")
@@ -381,6 +414,12 @@ class SnapCatalogSpec extends SparkSpec {
     assert(
       Snapshots.fullViewParses.get() == parses0,
       "a partition-pruned cold plan must never reconstruct the full file list")
+    // a plain SELECT's scan node reports the pruning outcome as SQL
+    // metrics, off the recorded total — still no full-list parse
+    val scanExec = batchScanExecOf(q)
+    assert(scanExec.metrics("snapFilesRead").value == 1L, scanExec.metrics.toString)
+    assert(scanExec.metrics("snapFilesPruned").value == 119L, scanExec.metrics.toString)
+    assert(Snapshots.fullViewParses.get() == parses0, "scan metrics must not parse the full list")
     // manifest-only aggregate through the same cold path: consumed day
     // filter + COUNT(*) from the pruned groups' recorded row counts
     Snapshots.viewCache.clear()
@@ -1288,7 +1327,7 @@ class SnapCatalogSpec extends SparkSpec {
     val base = emptyCatalog("snagg2")
     // floating point: footer stats are NaN-unaware, must fall back
     aggFixtureQuery("snagg2f", "SELECT min(score) AS m FROM snagg2f.t") { (scan, df) =>
-      assert(scan.isInstanceOf[SnapBatchScan], scan.description())
+      assert(scan.isInstanceOf[SnapV2BatchScan], scan.description())
       assert(df.head().getDouble(0) == 1.5)
     }
     // long ASCII strings differing only past position 100: footer stats
@@ -1308,7 +1347,7 @@ class SnapCatalogSpec extends SparkSpec {
     Sources.writeParquet(Seq((1L, "żółć"), (2L, "apple")).toDF("id", "s"), dir3)
     Snapshots.commit(spark, dir3, statsCols = Seq("s"))
     val uq = spark.sql("SELECT max(s) AS mx FROM snagg2.uni")
-    assert(scanOf(uq).isInstanceOf[SnapBatchScan], scanOf(uq).description())
+    assert(scanOf(uq).isInstanceOf[SnapV2BatchScan], scanOf(uq).description())
     assert(uq.head().getString(0) == "żółć")
   }
 
@@ -1356,7 +1395,7 @@ class SnapCatalogSpec extends SparkSpec {
       rows.toSeq.toString)
     // grouping on a non-path column must fall back to a real scan
     val bad = spark.sql("SELECT cat, count(*) AS n FROM snagg5.t GROUP BY cat")
-    assert(scanOf(bad).isInstanceOf[SnapBatchScan], scanOf(bad).description())
+    assert(scanOf(bad).isInstanceOf[SnapV2BatchScan], scanOf(bad).description())
     assert(bad.count() == 3L) // alpha, omega, null groups — computed, not guessed
   }
 
@@ -1393,8 +1432,8 @@ class SnapCatalogSpec extends SparkSpec {
       ("2024-01-01", 10L), ("2024-01-02", 30L), ("2024-01-03", 42L), ("2024-01-04", null)), gs.toSeq)
     // honest fallbacks BEFORE the canary (they read data): floating sums
     // are order-sensitive and DISTINCT sums have no per-file fold
-    assert(scanOf(spark.sql("SELECT sum(score) AS s FROM snsum.t")).isInstanceOf[SnapBatchScan])
-    assert(scanOf(spark.sql("SELECT sum(DISTINCT m) AS s FROM snsum.t")).isInstanceOf[SnapBatchScan])
+    assert(scanOf(spark.sql("SELECT sum(score) AS s FROM snsum.t")).isInstanceOf[SnapV2BatchScan])
+    assert(scanOf(spark.sql("SELECT sum(DISTINCT m) AS s FROM snsum.t")).isInstanceOf[SnapV2BatchScan])
     // zero-opens canary: physically junk a clean file — the pushed SUM
     // must not notice
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1465,7 +1504,7 @@ class SnapCatalogSpec extends SparkSpec {
     // NO bloom columns declared: a routine commit pays no sum-building
     // data read (the table never opted in), so SUM falls back to a scan…
     Snapshots.commit(spark, dir, Seq("day", "m"))
-    assert(scanOf(spark.sql("SELECT sum(m) AS sm FROM snsumnb.t")).isInstanceOf[SnapBatchScan])
+    assert(scanOf(spark.sql("SELECT sum(m) AS sm FROM snsumnb.t")).isInstanceOf[SnapV2BatchScan])
     // …until the explicit upgrade: CALL ndv_backfill builds the sum
     // sidecars independently of blooms, and the discipline then sticks
     Snapshots.backfillNdv(spark, dir)
@@ -1595,10 +1634,10 @@ class SnapCatalogSpec extends SparkSpec {
     assert(
       g.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
         Seq(("a:1", 1L), ("b#2", 1L), ("plain", 1L)))
-    // the v2 batch path splices the true value too
-    val v2 = spark.read.option("batchscan", "v2").table("snagesc.t").orderBy("id")
+    // row reads splice the true value too
+    val read = spark.read.table("snagesc.t").orderBy("id")
     assert(
-      v2.select("tag").as[String].collect().toSeq == Seq("a:1", "b#2", "plain"),
+      read.select("tag").as[String].collect().toSeq == Seq("a:1", "b#2", "plain"),
       "spliced partition values must be unescaped")
   }
 
@@ -1629,7 +1668,7 @@ class SnapCatalogSpec extends SparkSpec {
     assert(rowsRead.as[Long].collect().toSeq == Seq(1L, 2L))
     // a filter on a NON-path column still blocks pushdown (sound fallback)
     val res = spark.sql("SELECT count(*) AS n FROM snagcf1.t WHERE cat = 'alpha'")
-    assert(scanOf(res).isInstanceOf[SnapBatchScan], scanOf(res).description())
+    assert(scanOf(res).isInstanceOf[SnapV2BatchScan], scanOf(res).description())
     assert(res.as[Long].head() == 1L)
   }
 
@@ -1652,7 +1691,7 @@ class SnapCatalogSpec extends SparkSpec {
       s"partition inference should type hour as int: $schema")
     val n = spark.sql("SELECT count(*) AS n FROM snagpad.t WHERE hour = 0")
     assert(
-      scanOf(n).isInstanceOf[SnapBatchScan],
+      scanOf(n).isInstanceOf[SnapV2BatchScan],
       s"non-canonical dirs must NOT consume: ${scanOf(n).description()}")
     assert(n.as[Long].head() == 2L, "rows under hour=00 must still count")
     assert(
@@ -1661,7 +1700,7 @@ class SnapCatalogSpec extends SparkSpec {
     // a non-castable dir value would splice to NULL rows while its
     // segment is present, so segment presence cannot answer IS NOT NULL
     val nn = spark.sql("SELECT count(*) AS n FROM snagpad.t WHERE hour IS NOT NULL")
-    assert(scanOf(nn).isInstanceOf[SnapBatchScan], scanOf(nn).description())
+    assert(scanOf(nn).isInstanceOf[SnapV2BatchScan], scanOf(nn).description())
     assert(nn.as[Long].head() == 3L)
   }
 
@@ -1733,7 +1772,6 @@ class SnapCatalogSpec extends SparkSpec {
       partitionCols = Seq("day"))
     Snapshots.commit(spark, s"$base/dim", statsCols = Seq("day"))
     withConfs(
-      "spark.graft.snapshot.batchscan" -> "v2",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") {
       val joined = spark.sql(
@@ -1749,26 +1787,26 @@ class SnapCatalogSpec extends SparkSpec {
       assert(
         shuffles.isEmpty,
         s"storage-partitioned join must not shuffle either side:\n${joined.queryExecution.executedPlan}")
-      // and the scans really were the keyed v2 path
+      // and both scans are the keyed snapshot scan
       val scans = joined.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
       }
-      assert(scans.size == 2 && scans.forall(_.isInstanceOf[snap.SnapV2BatchScan]), scans.toString)
+      assert(scans.size == 2 && scans.forall(_.isInstanceOf[SnapV2BatchScan]), scans.toString)
     }
   }
 
-  test("the v2 batch path reads value-identically to the V1 bridge (nulls, dates, pruning)") {
-    aggFixture("v2eq1")
-    val v1 = spark.read.table("v2eq1.t")
-    val v2 = spark.read.option("batchscan", "v2").table("v2eq1.t")
-    assert(scanOf(v2).isInstanceOf[snap.SnapV2BatchScan], scanOf(v2).description())
-    assert(scanOf(v1).isInstanceOf[SnapBatchScan], scanOf(v1).description())
-    assert(v1.schema == v2.schema, s"${v1.schema} vs ${v2.schema}")
+  test("a catalog read is value-identical to Snapshots.readSnapshot (nulls, dates, pruning)") {
+    val dir = s"${aggFixture("v2eq1")}/t"
+    val viaCatalog = spark.read.table("v2eq1.t")
+    assert(scanOf(viaCatalog).isInstanceOf[SnapV2BatchScan], scanOf(viaCatalog).description())
+    val direct = Snapshots.readSnapshot(spark, dir).select(viaCatalog.columns.map(col).toIndexedSeq: _*)
+    assert(
+      viaCatalog.schema.map(f => (f.name, f.dataType)) == direct.schema.map(f => (f.name, f.dataType)),
+      s"${viaCatalog.schema} vs ${direct.schema}")
     val key = (r: org.apache.spark.sql.Row) => r.toSeq.map(String.valueOf(_)).mkString("|")
-    assert(v1.collect().map(key).sorted.toSeq == v2.collect().map(key).sorted.toSeq)
-    // stats pruning runs in the builder for both paths
+    assert(viaCatalog.collect().map(key).sorted.toSeq == direct.collect().map(key).sorted.toSeq)
+    // stats pruning runs in the scan builder, off the manifest alone
     val pruned = spark.read
-      .option("batchscan", "v2")
       .table("v2eq1.t")
       .filter(col("day") === "2024-01-02")
     assert(scanOf(pruned).description().contains("files=1/3"), scanOf(pruned).description())
@@ -1784,7 +1822,6 @@ class SnapCatalogSpec extends SparkSpec {
       "INSERT INTO snagrg1.ev SELECT id, event_type, v, CAST(day AS DATE), score FROM snagrg1_more")
     // data-column predicates travel into the per-file parquet reader
     val ids = spark.read
-      .option("batchscan", "v2")
       .table("snagrg1.ev")
       .filter(col("id") >= 3L && col("v") < 100.0)
       .select("id")
@@ -1797,7 +1834,6 @@ class SnapCatalogSpec extends SparkSpec {
     // (their null-filled rows are excluded by Spark's residual) while the
     // post-ALTER file applies it natively
     val scored = spark.read
-      .option("batchscan", "v2")
       .table("snagrg1.ev")
       .filter(col("score") > 0.5)
       .select("id")
@@ -1830,7 +1866,6 @@ class SnapCatalogSpec extends SparkSpec {
       .parquet(s"$base/dimraw")
     spark.read.parquet(s"$base/dimraw").createOrReplaceTempView("dpp1_dim")
     withConfs(
-      "spark.graft.snapshot.batchscan" -> "v2",
       // the DPP benefit estimator uses column stats neither tiny side
       // has; at fixture scale it would decline what it accepts at real
       // scale — bypass the estimate, keep the mechanism under test
@@ -1839,8 +1874,8 @@ class SnapCatalogSpec extends SparkSpec {
         "SELECT f.id FROM dpp1.fact f JOIN dpp1_dim d ON f.day = d.day WHERE d.tag = 'keep' " +
           "ORDER BY f.id")
       val scan = scanOf(df)
-      assert(scan.isInstanceOf[snap.SnapV2BatchScan], scan.description())
-      val v2 = scan.asInstanceOf[snap.SnapV2BatchScan]
+      assert(scan.isInstanceOf[SnapV2BatchScan], scan.description())
+      val v2 = scan.asInstanceOf[SnapV2BatchScan]
       assert(v2.currentRels.size == 6, "all 6 day files before execution")
       // collect df ITSELF: .as[...] would build a fresh QueryExecution
       // with its own scan instance, and the assert below must observe the
@@ -1850,18 +1885,7 @@ class SnapCatalogSpec extends SparkSpec {
         v2.currentRels.size == 1,
         s"runtime filter must prune to the one matching day file, kept: ${v2.currentRels}")
       // the pruning outcome is a first-class SQL metric on the scan node
-      // (descend through AQE stage boundaries — query stages are leaves
-      // to plain collect)
-      def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allNodes(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allNodes(q.plan)
-        case other => other.children.flatMap(allNodes)
-      })
-      val scanExec = allNodes(df.queryExecution.executedPlan)
-        .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
-        .getOrElse(fail(s"no BatchScanExec in final plan:\n${df.queryExecution.executedPlan}"))
+      val scanExec = batchScanExecOf(df)
       assert(scanExec.metrics("snapFilesRead").value == 1L, scanExec.metrics.toString)
       assert(scanExec.metrics("snapFilesPruned").value == 5L, scanExec.metrics.toString)
     }
@@ -2064,7 +2088,7 @@ class SnapCatalogSpec extends SparkSpec {
     Snapshots.commit(spark, dir, statsCols = Seq("hour"))
     val g = spark.sql("SELECT hour, count(*) AS n FROM snagpadg.t GROUP BY hour")
     assert(
-      scanOf(g).isInstanceOf[SnapBatchScan],
+      scanOf(g).isInstanceOf[SnapV2BatchScan],
       s"non-canonical dirs must refuse grouped pushdown: ${scanOf(g).description()}")
     val rows = g.collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     assert(rows == Map(0 -> 3L), rows.toString)
@@ -2085,7 +2109,6 @@ class SnapCatalogSpec extends SparkSpec {
     Snapshots.commit(spark, dir)
     withConfs("spark.sql.ansi.enabled" -> "true") {
       val got = spark.read
-        .option("batchscan", "v2")
         .table("snaglegc.t")
         .select("id", "uid")
         .collect()
@@ -2138,5 +2161,76 @@ class SnapCatalogSpec extends SparkSpec {
       spark.sql("SELECT * FROM snapmetapin.ev.mv VERSION AS OF 1").collect()
     }
     assert(e2.getMessage.contains("always-current"), e2.getMessage)
+  }
+
+  test("manifest-only answers run zero Spark jobs; a hybrid aggregate over DV'd files still scans") {
+    val base = aggFixture("snzero")
+    // filter-free COUNT(*): the manifest's recorded row counts
+    val cnt = spark.sql("SELECT count(*) AS n FROM snzero.t")
+    assert(scanOf(cnt).isInstanceOf[SnapAggScan], scanOf(cnt).description())
+    var n = -1L
+    assert(jobsOf { n = cnt.collect().head.getLong(0) } == 0, "COUNT(*) must run no job")
+    assert(n == 5L)
+    // grouped MIN/MAX under a consumed partition filter
+    val g = spark.sql(
+      "SELECT day, min(id) AS mn, max(id) AS mx FROM snzero.t " +
+        "WHERE day IN (DATE'2024-01-01', DATE'2024-01-03') GROUP BY day")
+    assert(scanOf(g).isInstanceOf[SnapAggScan], scanOf(g).description())
+    var grouped = Seq.empty[(String, Long, Long)]
+    assert(
+      jobsOf {
+        grouped = g.collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toSeq
+      } == 0,
+      "grouped MIN/MAX must run no job")
+    assert(grouped.sorted == Seq(("2024-01-01", 1L, 2L), ("2024-01-03", 4L, 5L)), grouped.toString)
+    // the metadata tables
+    Seq("snapshots" -> 1L, "partitions" -> 3L).foreach { case (kind, rows) =>
+      val m = spark.sql(s"SELECT * FROM snzero.t.$kind")
+      var got = -1L
+      assert(jobsOf { got = m.collect().length.toLong } == 0, s"cat.t.$kind must run no job")
+      assert(got == rows, s"cat.t.$kind rows: $got")
+    }
+    // hybrid: the DV'd file holds the table's max, which the manifest
+    // interval still records — the answer must come from scanning it
+    DeleteVectors.deleteWhere(spark, s"$base/t", col("id") === 5L)
+    val h = spark.sql("SELECT min(id) AS mn, max(id) AS mx FROM snzero.t")
+    assert(scanOf(h).description().contains("hybrid: 1/3"), scanOf(h).description())
+    var ext = (0L, 0L)
+    assert(jobsOf { ext = h.collect().map(r => (r.getLong(0), r.getLong(1))).head } > 0)
+    assert(ext == ((1L, 4L)), ext.toString)
+  }
+
+  test("malformed graft confs fail naming the key") {
+    val base = emptyCatalog("snbadconf")
+    // (key, malformed value, op over a committed table with id stats +
+    // bloom). Every op reaches the conf: a commit reads the checkpoint
+    // interval and builds the new file's sidecars; the deletes read the
+    // DML-mode, rewrite-size and deletion-vector confs
+    def appendAndCommit(dir: String): Unit = {
+      Seq((9L, "z")).toDF("id", "s").coalesce(1).write.mode("append").parquet(dir)
+      Snapshots.commit(spark, dir)
+      ()
+    }
+    val cases: Seq[(String, String, String => Unit)] = Seq(
+      ("spark.graft.snapshot.checkpointInterval", "20x", appendAndCommit),
+      ("spark.graft.sidecar.driverBuildMaxBytes", "32MB", appendAndCommit),
+      (
+        "spark.graft.rowlevel.mode",
+        "mro",
+        dir => { spark.sql(s"DELETE FROM snbadconf.${dir.split('/').last} WHERE id = 1"); () }),
+      ("spark.graft.rewrite.targetBytes", "128m", dir => { Sources.deleteWhere(spark, dir, col("id") === 1L); () }),
+      ("spark.graft.dv.maxDeletedFraction", "most", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }),
+      ("spark.graft.dv.driverWriteMaxRows", "lots", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }))
+    cases.zipWithIndex.foreach { case ((key, bad, op), i) =>
+      val dir = s"$base/t$i"
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1).write.parquet(dir)
+      Snapshots.commit(spark, dir, Seq("id"), Seq("id"))
+      spark.conf.set(key, bad)
+      val e =
+        try intercept[Exception](op(dir))
+        finally spark.conf.unset(key)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(msgs.exists(m => m != null && m.contains(key) && m.contains(bad)), s"$key: ${msgs.mkString(" / ")}")
+    }
   }
 }

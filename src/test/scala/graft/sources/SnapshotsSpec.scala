@@ -122,10 +122,7 @@ class SnapshotsSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.ndvcat.root", baseA)
     val scans = spark.table("ndvcat.t").queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        if (r.scan.getClass.getSimpleName == "V1ScanWrapper")
-          r.scan.getClass.getMethod("v1Scan").invoke(r.scan)
-            .asInstanceOf[org.apache.spark.sql.connector.read.Scan]
-        else r.scan
+        r.scan
     }
     val reported = scans.collectFirst {
       case s: org.apache.spark.sql.connector.read.SupportsReportStatistics =>
