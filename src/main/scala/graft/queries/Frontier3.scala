@@ -345,10 +345,9 @@ object Frontier3 {
     * cat.ev WHERE event_type='click' AND day <= cutoff` goes through
     * [[graft.sources.snap.SnapTable]]'s `SupportsDelete` — Spark translates
     * the WHERE into pushed filters, the table re-expresses them as a Column
-    * and runs the same copy-on-write [[graft.sources.Sources.deleteWhere]]
-    * the programmatic API uses: only the files holding matching rows are
-    * rewritten (a whole-file match is archived from its footer count, no
-    * data read), and the commit inherits the table's stats discipline. The
+    * and runs the merge-on-read [[graft.sources.DeleteVectors.deleteWhere]]:
+    * matched row positions become deletion vectors, no data file is
+    * rewritten, and the commit inherits the table's stats discipline. The
     * query then reads per-type totals from BOTH worlds in one statement —
     * `VERSION AS OF 1` vs live — and the oracle recomputes them from raw
     * events, so the hash proves the SQL delete removed exactly the
@@ -713,21 +712,22 @@ object Frontier3 {
     (cat, dir)
   }
 
-  // -- q207: SQL UPDATE through group-based row-level operations ----------
+  // -- q207: SQL UPDATE through the row-level operation --------------------
 
   /** `UPDATE cat.ev SET n = n*2, sum_u = sum_u + n WHERE …` — q203's
-    * update, now issued as PLAIN SQL and executed by Spark's group-based
-    * row-level machinery over [[graft.sources.snap.SnapRowLevelOperation]]:
-    * the operation's scan prunes the day-clustered file list with the
-    * UPDATE's condition (manifest stats, zero footer opens), Spark computes
-    * the replacement rows (SET right-hand sides against the OLD row — SQL
-    * semantics for free), and the connector's DSv2 write lands them as
-    * parquet and archives exactly the scanned files under the table lock.
-    * The oracle is q203's: per type, live n gains exactly the matched raw
-    * count and live sum the same, v1 keeps the originals — so the hash
-    * proves SQL UPDATE ≡ the programmatic copy-on-write update. At 100 TB
-    * a day-bounded correction rewrites that day band's files only, issued
-    * from any SQL client.
+    * update, now issued as PLAIN SQL and executed by Spark's delta-based
+    * row-level machinery over
+    * [[graft.sources.snap.SnapDeltaRowLevelOperation]]: the operation's
+    * scan prunes the day-clustered file list with the UPDATE's condition
+    * (manifest stats, zero footer opens), Spark computes the new row
+    * images (SET right-hand sides against the OLD row — SQL semantics for
+    * free), and the connector's DSv2 write records the old images as
+    * deletion-vector positions and lands the new ones as appended parquet
+    * in one commit. The oracle is q203's: per type, live n gains exactly
+    * the matched raw count and live sum the same, v1 keeps the originals
+    * — so the hash proves SQL UPDATE ≡ the programmatic copy-on-write
+    * update. At 100 TB a day-bounded correction writes the changed rows
+    * only, issued from any SQL client.
     */
   def q207(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = flatStatsTable(s, d, "snapq207")
@@ -755,7 +755,7 @@ object Frontier3 {
 
   // -- q208: SQL MERGE INTO -----------------------------------------------
 
-  /** `MERGE INTO` through the same group-based machinery, hash-proved: the
+  /** `MERGE INTO` through the same delta-based machinery, hash-proved: the
     * delta (recomputed from raw events, NOT from the target) carries
     * doubled click stats for the first three days plus one brand-new
     * `__synthetic` key; WHEN MATCHED updates, WHEN NOT MATCHED inserts.
@@ -763,8 +763,8 @@ object Frontier3 {
     * q203's arithmetic (n gains the matched raw count, sum likewise), the
     * synthetic key exists only live, and v1 is untouched — the oracle
     * recomputes all of it from raw events. At 100 TB this is the CDC
-    * apply statement — one SQL MERGE, copy-on-write selective rewrite,
-    * time-travelable result.
+    * apply statement — one SQL MERGE, merge-on-read (vectors + appended
+    * rows), time-travelable result.
     */
   def q208(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = flatStatsTable(s, d, "snapq208")
@@ -1525,13 +1525,12 @@ object Frontier3 {
   // -- q218: SQL MERGE INTO a hive-partitioned table ---------------------
 
   /** q208's CDC-apply MERGE, now against the DAY-PARTITIONED stats table —
-    * the 100 TB default layout the row-level path previously refused. The
-    * rewrite is partition-aware end to end: the operation's scan splices
-    * each file's `day=` path value into the replacement rows, the writer
-    * routes every row back to its partition directory by the row's OWN
-    * day (stripping the column from the file bytes — hive layout
-    * preserved), and the synthetic not-matched key lands in a brand-new
-    * `day=1999-12-31/` directory. The closing `n_day_dirs` column counts
+    * the 100 TB default layout. The write is partition-aware end to end:
+    * the operation's scan splices each file's `day=` path value into the
+    * matched rows, the writer routes every new row image to its partition
+    * directory by the row's OWN day (stripping the column from the file
+    * bytes — hive layout preserved), and the synthetic not-matched key
+    * lands in a brand-new `day=1999-12-31/` directory. The closing `n_day_dirs` column counts
     * the table's partition directories from the manifest, so the hash
     * proves the routing: distinct event days + exactly one new dir — a
     * writer that flattened the layout or fan-out-duplicated directories
@@ -1682,8 +1681,8 @@ object Frontier3 {
 
   /** The row-level change feed as a queryable SQL table — `cat.t.changes`
     * ([[graft.sources.snap.SnapChangesTable]], the `table_changes()` /
-    * Delta-CDF surface). The lifecycle: a partitioned DELETE rewrite
-    * (un-pushable predicate), a compaction, and an UPDATE land on the
+    * Delta-CDF surface). The lifecycle: a merge-on-read DELETE (deletion
+    * vectors), a compaction, and an UPDATE land on the
     * day-partitioned stats table; the query then aggregates the ENTIRE
     * feed after the creation image. Hash-proof of the CDF contract:
     * deleted rows surface as `delete`, the UPDATE as its delete+insert
@@ -1700,7 +1699,7 @@ object Frontier3 {
     val ev = Tables.events(s, d)
     val m = ev.agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    // v2: DELETE with a non-partition conjunct — the partitioned rewrite
+    // v2: DELETE with a non-partition conjunct — deletion vectors
     s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
     // v3: compaction — MUST net to zero in the feed
     graft.sources.Sources.compactInPlace(s, dir)
@@ -2164,28 +2163,23 @@ object Frontier3 {
 
   // -- q226: merge-on-read DELETE (deletion vectors) ----------------------
 
-  /** SQL DELETE priced as METADATA, not data: with
-    * `spark.graft.rowlevel.mode=mor` the catalog routes `DELETE FROM` to
+  /** SQL DELETE priced as METADATA, not data: the catalog routes
+    * `DELETE FROM` to
     * [[graft.sources.DeleteVectors.deleteWhere]] — matched row POSITIONS
     * land in hidden sidecars, the manifest delta re-states the touched
     * files' DV pointers, and not one data file is rewritten. The hash
     * proves all of it: per-type totals show the deleted types gone from
     * the live side while `VERSION AS OF 1` still reads them
     * (snapshot-isolated, time-travelable); `zero_rewrite` certifies the
-    * live FILE LIST is byte-identical across BOTH deletes — including the
-    * second one issued WITHOUT the conf (MoR is sticky once a table
-    * carries a DV: the copy-on-write path reads raw files and must not
-    * run); `dv_files` counts the pointers. At 100 TB this is the GDPR
+    * live FILE LIST is byte-identical across BOTH deletes (the second
+    * merges into the first's vectors); `dv_files` counts the pointers. At 100 TB this is the GDPR
     * erasure that costs the match scan plus kilobytes of sidecar instead
     * of rewriting every touched multi-GB file.
     */
   def q226(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq226", Seq("day"))
     val files1 = graft.sources.Snapshots.files(s, dir).toSet
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
-    }
-    // sticky MoR: no conf this time — the table already carries DVs
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view'")
     val files3 = graft.sources.Snapshots.files(s, dir).toSet
     val nDv = graft.sources.Snapshots.dvByRel(graft.sources.Snapshots.manifestView(s, dir)).size
@@ -2237,10 +2231,8 @@ object Frontier3 {
     val (cat, dir) = statsTable(s, d, "snapq227", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // superset: overlap merges
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // superset: overlap merges
     val cnt = s.sql(s"SELECT count(*) AS n_rows FROM $cat.ev")
     require(
       scanDescriptions(cnt).exists(d0 =>
@@ -2268,24 +2260,21 @@ object Frontier3 {
       |  (SELECT min(n) FROM per WHERE event_type <> 'click') AS min_n,
       |  (SELECT max(n) FROM per WHERE event_type <> 'click') AS max_n""".stripMargin
 
-  // -- q228: copy-on-write UPDATE over deletion vectors (no resurrection) -
+  // -- q228: SQL UPDATE over deletion vectors (no resurrection) ----------
 
-  /** The MIXED-DML hazard, hash-proved: a MoR delete leaves deleted rows
-    * physically PRESENT in the data files; the SQL UPDATE that follows is
-    * a copy-on-write rewrite of every file holding a match — if its
-    * row-level scan read the raw bytes, the rewrite would RESURRECT the
-    * deleted rows into the replacement files. The row-level reader
-    * subtracts each scanned file's DV ([[graft.sources.snap
-    * .SnapRowLevelScan]] → the position-skipping reader), so the rewrite
-    * materializes the vectors as a side effect: clicks stay gone, views
-    * double, and the replacement files carry no pointers. `VERSION AS OF
-    * 1` still reads the original world.
+  /** The stacked-DML hazard, hash-proved: a MoR delete leaves deleted rows
+    * physically PRESENT in the data files; the SQL UPDATE that follows
+    * scans every file holding a match — if its row-level scan read the
+    * raw bytes, already-deleted rows would match again and their new
+    * images would RESURRECT them. The row-level reader subtracts each
+    * scanned file's DV ([[graft.sources.snap.SnapRowLevelScan]] → the
+    * position-skipping reader), and the UPDATE's own positions merge into
+    * the same vectors: clicks stay gone, views double. `VERSION AS OF 1`
+    * still reads the original world.
     */
   def q228(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = statsTable(s, d, "snapq228", Seq("day"))
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     s.sql(s"UPDATE $cat.ev SET n = n * 2 WHERE event_type = 'view'")
     s.sql(s"""
       |SELECT v1.event_type AS event_type,
@@ -2322,10 +2311,8 @@ object Frontier3 {
     val (cat, _) = statsTable(s, d, "snapq229", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day <= DATE'$cut'")
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     s.sql(s"""
       |SELECT _commit_version AS v, _change_type AS change,
       |       CAST(count(*) AS BIGINT) AS n_changes, CAST(sum(n) AS BIGINT) AS sum_n
@@ -2361,9 +2348,7 @@ object Frontier3 {
     */
   def q230(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq230", Seq("day"))
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     val rewritten =
       s.sql(s"CALL $cat.dv_materialize(table => 'ev')").head().getLong(0)
     val nDv = graft.sources.Snapshots.dvByRel(graft.sources.Snapshots.manifestView(s, dir)).size
@@ -2392,24 +2377,21 @@ object Frontier3 {
   // -- q231: merge-on-read SQL UPDATE (delta-based row-level op) ----------
 
   /** `UPDATE` priced like the data it CHANGES, not the files it touches:
-    * with `spark.graft.rowlevel.mode=mor` the catalog plans Spark's
-    * delta-based row-level operation ([[graft.sources.snap
+    * the catalog plans Spark's delta-based row-level operation ([[graft.sources.snap
     * .SnapDeltaRowLevelOperation]], `SupportsDelta` with rowId
     * `(_file, _pos)`) — matched rows' old images become deletion-vector
     * positions, their new images land in APPENDED files, and ONE manifest
     * commit covers both. The hash proves: view totals doubled live while
     * `VERSION AS OF 1` reads the original world; `originals_kept`
     * certifies every pre-update file is STILL LISTED live (nothing
-    * rewritten or archived — the group-based path would have replaced
+    * rewritten or archived — a copy-on-write update would have replaced
     * every file holding a view row); `dv_files_ok` pins the vectors. At
     * 100 TB: updating 0.01 % of rows writes 0.01 % of the bytes.
     */
   def q231(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq231", Seq("day"))
     val files1 = graft.sources.Snapshots.files(s, dir).toSet
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"UPDATE $cat.ev SET n = n * 2 WHERE event_type = 'view'")
-    }
+    s.sql(s"UPDATE $cat.ev SET n = n * 2 WHERE event_type = 'view'")
     val files2 = graft.sources.Snapshots.files(s, dir).toSet
     val nDv = graft.sources.Snapshots.dvByRel(graft.sources.Snapshots.manifestView(s, dir)).size
     s.sql(s"""
@@ -2457,15 +2439,13 @@ object Frontier3 {
       .unionByName(s.sql(
         "SELECT DATE'1999-12-31' AS day, '__synthetic' AS event_type, 'ins' AS op"))
     src.createOrReplaceTempView(s"${cat}_msrc")
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"""
-        |MERGE INTO $cat.ev t USING ${cat}_msrc s
-        |ON t.day = s.day AND t.event_type = s.event_type
-        |WHEN MATCHED AND s.op = 'del' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET n = t.n * 3
-        |WHEN NOT MATCHED THEN INSERT (day, event_type, n, sum_u)
-        |  VALUES (s.day, s.event_type, CAST(7 AS BIGINT), CAST(42 AS BIGINT))""".stripMargin)
-    }
+    s.sql(s"""
+      |MERGE INTO $cat.ev t USING ${cat}_msrc s
+      |ON t.day = s.day AND t.event_type = s.event_type
+      |WHEN MATCHED AND s.op = 'del' THEN DELETE
+      |WHEN MATCHED THEN UPDATE SET n = t.n * 3
+      |WHEN NOT MATCHED THEN INSERT (day, event_type, n, sum_u)
+      |  VALUES (s.day, s.event_type, CAST(7 AS BIGINT), CAST(42 AS BIGINT))""".stripMargin)
     val files2 = graft.sources.Snapshots.files(s, dir).toSet
     val v2 = graft.sources.Snapshots.latestVersion(s, dir)
     s.sql(s"""
@@ -2558,15 +2538,13 @@ object Frontier3 {
     finally q.stop()
     val filesAfter = graft.sources.Snapshots.files(s, dirA).toSet
     changes.createOrReplaceTempView(s"${catB}_csrc")
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"""
-        |MERGE INTO $catB.ev t USING ${catB}_csrc s
-        |ON t.day = s.day AND t.event_type = s.event_type
-        |WHEN MATCHED AND s.op = 'd' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET n = s.n, sum_u = s.sum_u
-        |WHEN NOT MATCHED AND s.op <> 'd' THEN INSERT (day, event_type, n, sum_u)
-        |  VALUES (s.day, s.event_type, s.n, s.sum_u)""".stripMargin)
-    }
+    s.sql(s"""
+      |MERGE INTO $catB.ev t USING ${catB}_csrc s
+      |ON t.day = s.day AND t.event_type = s.event_type
+      |WHEN MATCHED AND s.op = 'd' THEN DELETE
+      |WHEN MATCHED THEN UPDATE SET n = s.n, sum_u = s.sum_u
+      |WHEN NOT MATCHED AND s.op <> 'd' THEN INSERT (day, event_type, n, sum_u)
+      |  VALUES (s.day, s.event_type, s.n, s.sum_u)""".stripMargin)
     val a = s.sql(s"SELECT day, event_type, n, sum_u FROM $catA.ev")
     val b = s.sql(s"SELECT day, event_type, n, sum_u FROM $catB.ev")
     // one action instead of two — same boolean (see q235)
@@ -2702,9 +2680,7 @@ object Frontier3 {
     val pinnedV =
       s.sql(s"CALL $cat.create_ref(table => 'ev', name => 'prelaunch')").head().getLong(0)
     val zeroCopy = graft.sources.Snapshots.files(s, dir).toSet == filesBefore
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // v2
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'") // v2
     s.sql(s"""
       |INSERT INTO $cat.ev
       |VALUES ('__synthetic', CAST(7 AS BIGINT), CAST(42 AS BIGINT), DATE'1999-12-31')""".stripMargin) // v3
@@ -2821,14 +2797,12 @@ object Frontier3 {
     val nDv = graft.sources.Snapshots.dvByRel(graft.sources.Snapshots.manifestView(s, dirA)).size
     // BATCH twin: the same changes as ONE SQL MERGE through the delta path
     src.createOrReplaceTempView(s"${catB}_usrc")
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"""
-        |MERGE INTO $catB.ev t USING ${catB}_usrc s
-        |ON t.day = s.day AND t.event_type = s.event_type
-        |WHEN MATCHED THEN UPDATE SET n = s.n, sum_u = s.sum_u
-        |WHEN NOT MATCHED THEN INSERT (day, event_type, n, sum_u)
-        |  VALUES (s.day, s.event_type, s.n, s.sum_u)""".stripMargin)
-    }
+    s.sql(s"""
+      |MERGE INTO $catB.ev t USING ${catB}_usrc s
+      |ON t.day = s.day AND t.event_type = s.event_type
+      |WHEN MATCHED THEN UPDATE SET n = s.n, sum_u = s.sum_u
+      |WHEN NOT MATCHED THEN INSERT (day, event_type, n, sum_u)
+      |  VALUES (s.day, s.event_type, s.n, s.sum_u)""".stripMargin)
     val a = s.sql(s"SELECT day, event_type, n, sum_u FROM $catA.ev")
     val b = s.sql(s"SELECT day, event_type, n, sum_u FROM $catB.ev")
     // one action instead of two: (A∖B) ∪ (B∖A) is empty iff both
@@ -3006,9 +2980,7 @@ object Frontier3 {
     // delete vectoring a file the branch vectored too
     s.sql(s"INSERT INTO $cat.ev (day, event_type, n, sum_u) " +
       "VALUES (DATE'1999-12-31', '__main', CAST(1 AS BIGINT), CAST(10 AS BIGINT))")
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$m'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$m'")
     val divergeRefused = scala.util
       .Try(s.sql(s"CALL $cat.fast_forward(table => 'ev', name => 'replay')").collect())
       .isFailure
@@ -3115,9 +3087,7 @@ object Frontier3 {
         .divide(new java.math.BigDecimal(nGroups), 6, java.math.RoundingMode.HALF_UP)) == 0
     // merge-on-read: vector one day's clicks — the same SUM goes hybrid,
     // scanning exactly the one DV'd file (the corrupt file stays folded)
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     val hybrid = s.sql(s"SELECT sum(rev) AS rev_after FROM $cat.ev")
     val hybridOk = scanDescriptions(hybrid).exists(d0 =>
       d0.contains("GraftSnapAggScan") && d0.contains("SUM(rev)") && d0.contains("hybrid: 1/"))
@@ -3253,9 +3223,7 @@ object Frontier3 {
       s, dir, "dev",
       s.sql("SELECT DATE'1999-12-31' AS day, '__branch' AS event_type, " +
         "CAST(7 AS BIGINT) AS n, CAST(42 AS BIGINT) AS sum_u"))
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click'")
     val divergeRefused = scala.util
       .Try(s.sql(s"CALL $cat.fast_forward(table => 'ev', name => 'dev')").collect())
       .isFailure
@@ -3340,9 +3308,7 @@ object Frontier3 {
     val row1 = clean.head()
     // merge-on-read: vector one day's clicks, the same SUM goes hybrid —
     // sidecar folds for every clean file, ONE bounded scan of the DV'd one
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     val hybrid = s.sql(s"SELECT sum(n) AS sum_after FROM $cat.ev")
     val hybridOk = scanDescriptions(hybrid).exists(d0 =>
       d0.contains("GraftSnapAggScan") && d0.contains("SUM(n)") && d0.contains("hybrid: 1/"))
@@ -3392,9 +3358,7 @@ object Frontier3 {
   def q234(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq234", Seq("day", "n"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'")
     // corrupt a CLEAN day's data file (crc sidecar removed, bytes junked):
     // its manifest stats still answer, but any read of it now fails — the
     // canary that proves only the DV'd file is opened
@@ -3464,10 +3428,8 @@ object Frontier3 {
     val (cat, dir) = statsTable(s, d, "snapq233", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
     val cut = m.plusDays(2).toString
-    withConfs(s, "spark.graft.rowlevel.mode" -> "mor") {
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'") // v2
-      s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$cut'") // v3
-    }
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'click' AND day = DATE'$m'") // v2
+    s.sql(s"DELETE FROM $cat.ev WHERE event_type = 'view' AND day = DATE'$cut'") // v3
     // a second file in day=m: the dir becomes a compaction target
     s.sql(s"INSERT INTO $cat.ev VALUES ('__extra', CAST(7 AS BIGINT), CAST(42 AS BIGINT), DATE'$m')") // v4
     val dvBefore = graft.sources.Snapshots.dvByRel(graft.sources.Snapshots.manifestView(s, dir))

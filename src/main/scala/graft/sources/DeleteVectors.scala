@@ -589,9 +589,10 @@ object DeleteVectors {
     * retries safe: only the winning attempt's names are committed,
     * orphans die in vacuum.
     *
-    * `rawRowBound`: the candidates' raw recorded row count when every
-    * candidate has one — at or below [[dvDriverWriteMaxRows]] the matched
-    * pairs are provably collectable and the sidecars write driver-side in
+    * `rawRowBound`: an upper bound on the matched pairs — the candidates'
+    * raw recorded row count when every candidate has one, or the delta
+    * DML's exact position total — at or below [[dvDriverWriteMaxRows]] the
+    * matched pairs are provably collectable and the sidecars write driver-side in
     * the match scan's own job (no shuffle, no second job): the dominant
     * fixed cost of every small keyed epoch (guide §2.4).
     */

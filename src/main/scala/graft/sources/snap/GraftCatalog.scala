@@ -379,24 +379,6 @@ object SnapTable {
     * reads.
     */
   val PosMetaCol = "_pos"
-
-  /** THE merge-on-read switch, one predicate for the whole DML surface:
-    * `spark.graft.rowlevel.mode=mor` flips SQL DELETE (the pushable
-    * SupportsDelete path) AND UPDATE/MERGE/un-pushable DELETE (the
-    * delta-based row-level path) to MoR together — a split surface
-    * (deletes rewriting files while updates write vectors) would be
-    * incoherent. `cow` (the default) or `mor`; any other value refuses
-    * naming the key, so a typo never silently means copy-on-write.
-    */
-  def morEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.rowlevel.mode") match {
-      case None => false
-      case Some(m) if m.trim.equalsIgnoreCase("cow") => false
-      case Some(m) if m.trim.equalsIgnoreCase("mor") => true
-      case Some(m) =>
-        throw new IllegalArgumentException(
-          s"spark.graft.rowlevel.mode must be 'cow' or 'mor', got '$m'")
-    }
 }
 
 class SnapTable(val dir: String, version: Long, val branch: Option[String] = None)
@@ -512,61 +494,87 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new SnapWriteBuilder(dir, info)
 
-  /** SQL `UPDATE` / `MERGE INTO` (and the rewrite path for un-pushable
-    * DELETEs) — group-based copy-on-write via [[SnapRowLevelBuilder]]:
-    * the operation's scan prunes to the files that can hold matches
-    * (manifest stats + blooms), and its write replaces exactly those
-    * files under the table lock, archiving the originals. Refused on
-    * hive-partitioned tables (replacement rows would embed partition
-    * values as data) — those use the programmatic per-partition ops.
+  /** SQL `UPDATE` / `MERGE INTO` (and un-pushable DELETEs) —
+    * merge-on-read through [[SnapDeltaRowLevelOperation]]: the
+    * operation's scan prunes to the files that can hold matches (manifest
+    * stats + blooms), matched rows' positions become deletion vectors and
+    * new row images land as appended files, all in one atomic commit.
+    * Hive-partitioned tables work too: inserted rows route to partition
+    * directories by their own values.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    SnapRowLevelBuilder(dir, view, tableSchema, info)
+      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
+    requireRecordedSchema(info.command.toString, view)
+    () => new SnapDeltaRowLevelOperation(dir, view, tableSchema, info.command)
+  }
 
-  /** `DELETE FROM cat.t WHERE …` — the SQL face of the copy-on-write
-    * delete ([[graft.sources.Sources.deleteWhere]]): only files containing
-    * matching rows are rewritten (whole-file matches are ARCHIVED from the
-    * footer count alone, no data read), the pre-delete state stays pinned
-    * under every committed manifest, and the post-delete commit inherits
-    * the table's stats discipline — metadata-only COUNT(*) and stats
-    * pruning keep working across SQL deletes. A WHERE-less DELETE (or SQL
-    * TRUNCATE) archives every live file — restorable time travel, not
-    * destruction. `canDeleteWhere` accepts exactly the predicates our
-    * filter translation can re-express as a Column; Spark re-checks this
-    * before planning, so an untranslatable WHERE fails loudly at analysis
-    * rather than silently deleting the wrong rows.
+  /** `DELETE FROM cat.t WHERE …` with a predicate our filter translation
+    * can re-express (Spark plans the row-level operation above for the
+    * rest). A partition-exact predicate — WHERE-less, SQL TRUNCATE, or
+    * only partition-exact filters on hive partition columns over a
+    * canonical layout ([[SnapFilters.partitionExactFiles]]) — ARCHIVES
+    * the matched files in one metadata commit: no scan, no vector, and
+    * the pre-delete state stays pinned and restorable. Any other
+    * predicate is a merge-on-read delete
+    * ([[graft.sources.DeleteVectors.deleteWhere]]): matched positions
+    * become deletion vectors, no data file is rewritten until its deleted
+    * fraction passes the bound. Either way the commit inherits the
+    * table's stats discipline, so metadata-only COUNT(*) and stats
+    * pruning keep working. `canDeleteWhere` accepts exactly the
+    * translatable predicates; Spark re-checks this before planning, so an
+    * untranslatable WHERE takes the row-level operation instead of
+    * silently deleting the wrong rows.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => SnapFilters.toColumn(f).isDefined)
 
-  /** Delete mode: `spark.graft.rowlevel.mode=mor` opts the session into
-    * merge-on-read (record deletion vectors, rewrite nothing); the default
-    * stays copy-on-write. STICKY per table: once any file carries a DV,
-    * later SQL deletes stay MoR regardless of the conf (the COW path reads
-    * raw files and must not run on a DV'd table) until
-    * `CALL cat.dv_materialize` folds the vectors in.
+  override def deleteWhere(filters: Array[Filter]): Unit =
+    Snapshots.withTableLock(spark, dir) {
+      val latest = Snapshots.manifestView(spark, dir)
+      requireRecordedSchema("DELETE", latest)
+      val partCols =
+        if (latest.partCols.nonEmpty) latest.partCols
+        else Snapshots.partitionColsFromRels(latest.rels)
+      SnapFilters.partitionExactFiles(latest.rels, partCols, latest.schema.get, filters.toSeq) match {
+        case Right(matched) if matched.nonEmpty =>
+          val rootPath = new Path(dir)
+          val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val done = mutable.ArrayBuffer.empty[String]
+          try {
+            matched.foreach { rel =>
+              Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel))
+              done += rel
+            }
+            Snapshots.commitRestated(spark, dir, Map.empty, removedRels = matched)
+          } catch {
+            case e: Throwable =>
+              Snapshots.rollbackRefusedLanding(fs, rootPath, Seq.empty, done.toSeq)
+              throw e
+          }
+        case Right(_) => () // nothing matched: no commit
+        case Left(_) => // some filter is not partition-exact, so there is at least one
+          val pred = filters
+            .map(f =>
+              SnapFilters
+                .toColumn(f)
+                .getOrElse(throw new UnsupportedOperationException(
+                  s"cannot translate delete predicate $f — canDeleteWhere should have refused it")))
+            .reduce(_ && _)
+          graft.sources.DeleteVectors.deleteWhere(spark, dir, pred)
+      }
+      ()
+    }
+
+  /** SQL DML runs merge-on-read, which needs the table schema the
+    * manifest records: a v1 manifest (committed without stats columns)
+    * refuses, naming the upgrade.
     */
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val pred = filters
-      .map(f =>
-        SnapFilters
-          .toColumn(f)
-          .getOrElse(throw new UnsupportedOperationException(
-            s"cannot translate delete predicate $f — canDeleteWhere should have refused it")))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-    // the MoR switch flips this path too — the pushable DELETE must not
-    // silently rewrite files while UPDATE/MERGE run merge-on-read
-    val morConf = SnapTable.morEnabled(spark)
-    // short-circuit: the O(files) stat sweep only runs when the conf
-    // alone doesn't already decide the route
-    def hasDvAlready = Snapshots.latestVersion(spark, dir) > 0L &&
-      Snapshots.manifestView(spark, dir).stats.values.exists(Snapshots.hasDv)
-    if (morConf || hasDvAlready) graft.sources.DeleteVectors.deleteWhere(spark, dir, pred)
-    else graft.sources.Sources.deleteWhere(spark, dir, pred)
-  }
+  private def requireRecordedSchema(cmd: String, v: Snapshots.ManifestView): Unit =
+    if (v.schema.isEmpty)
+      throw new UnsupportedOperationException(
+        s"SQL $cmd on $dir needs a manifest that records the table schema; this table's " +
+          "manifest predates it — upgrade with Snapshots.commit(spark, root, statsCols)")
 }
 
 /** A snapshot table's metadata relation (`snapshots` or `files`),
@@ -1043,48 +1051,19 @@ object SnapWriteBuilder {
         // DSv2 batch write — the partitions the tasks actually wrote.)
         val rootPath = new Path(dir)
         val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val live = Snapshots.listDataFiles(spark, dir)
-        val tableSchema = latest.schema.getOrElse(data.schema)
-        def declaredType(c: String): org.apache.spark.sql.types.DataType =
-          tableSchema.fields
-            .find(_.name == c)
-            .map(_.dataType)
-            .getOrElse(org.apache.spark.sql.types.StringType)
-        def requireCanonicalLayout(cols: Seq[String]): Unit =
-          cols.foreach { c =>
-            require(partCols.contains(c), s"'$c' is not a partition column of $dir")
-            live.foreach { rel =>
-              val segs = SnapFilters.partSegments(rel)
-              val raw = segs.getOrElse(
-                c,
-                throw new UnsupportedOperationException(
-                  s"INSERT OVERWRITE on $dir: file $rel lacks a '$c=' segment — a mixed " +
-                    "layout cannot be partition-overwritten"))
-              SnapFilters.segValue(raw).foreach { v =>
-                if (!SnapFilters.canonicalValue(v, declaredType(c)))
-                  throw new UnsupportedOperationException(
-                    s"INSERT OVERWRITE on $dir: '$c=$v' in $rel is not the canonical " +
-                      "rendering of its declared type — partition matching would be unsound")
-              }
-            }
-          }
-        val replaced: Seq[String] =
-          if (owFilters.get.exists(_.isInstanceOf[AlwaysTrue])) live
-          else {
-            val matchers = owFilters.get.toSeq.map { f =>
-              SnapFilters
-                .partMatcher(f)
-                .getOrElse(throw new UnsupportedOperationException(
-                  s"INSERT OVERWRITE on $dir: filter $f is not a partition-exact predicate — " +
-                    "only partition-spec overwrites (and full overwrites) are supported; use " +
-                    "DELETE + INSERT for row-level replacement"))
-            }
-            requireCanonicalLayout(matchers.map(_.col).distinct)
-            live.filter { rel =>
-              val segs = SnapFilters.partSegments(rel)
-              matchers.forall(m => m.keep(segs.get(m.col).flatMap(SnapFilters.segValue)))
-            }
-          }
+        val replaced: Seq[String] = SnapFilters
+          .partitionExactFiles(
+            Snapshots.listDataFiles(spark, dir),
+            partCols,
+            latest.schema.getOrElse(data.schema),
+            owFilters.get.toSeq)
+          .fold(
+            reason =>
+              throw new UnsupportedOperationException(
+                s"INSERT OVERWRITE on $dir: $reason — only partition-spec overwrites (and full " +
+                  "overwrites) over a canonical hive layout are supported; use DELETE + INSERT " +
+                  "for row-level replacement"),
+            identity)
         replaced.foreach(rel => Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel)))
         archivedForRollback = replaced
       }
@@ -1280,6 +1259,49 @@ private[sources] object SnapFilters {
     case IsNotNull(a) => Some(PartMatcher(a, _.isDefined))
     case _ => None
   }
+
+  /** The files a partition-exact predicate selects, decided from paths
+    * alone — what `INSERT OVERWRITE … PARTITION` archives before writing
+    * and what a partition-exact SQL DELETE archives without a scan. Every
+    * filter must be [[AlwaysTrue]] or have a [[partMatcher]] on a
+    * partition column, and every file must carry that column's segment
+    * rendered canonically in its declared type: then a dir value is the
+    * value of every row in the file and the selection is exact. Left
+    * names why it is not.
+    */
+  def partitionExactFiles(
+      rels: Seq[String],
+      partCols: Seq[String],
+      schema: StructType,
+      filters: Seq[Filter]): Either[String, Seq[String]] = {
+    val conds = filters.filterNot(_.isInstanceOf[AlwaysTrue])
+    conds.find(partMatcher(_).isEmpty) match {
+      case Some(f) => Left(s"filter $f is not a partition-exact predicate")
+      case None =>
+        val matchers = conds.flatMap(partMatcher)
+        val layoutProblem = matchers.map(_.col).distinct.iterator.flatMap { c =>
+          if (!partCols.contains(c)) Iterator(s"'$c' is not a partition column")
+          else {
+            val declared = schema.fields.find(_.name == c).map(_.dataType).getOrElse(StringType)
+            rels.iterator.flatMap { rel =>
+              partSegments(rel).get(c) match {
+                case None =>
+                  Some(s"file $rel lacks a '$c=' segment — a mixed layout has no exact partition match")
+                case Some(raw) =>
+                  segValue(raw).filterNot(canonicalValue(_, declared)).map { v =>
+                    s"'$c=$v' in $rel is not the canonical rendering of its declared type — " +
+                      "partition matching would be unsound"
+                  }
+              }
+            }
+          }
+        }
+        layoutProblem.nextOption().toLeft(rels.filter { rel =>
+          val segs = partSegments(rel)
+          matchers.forall(m => m.keep(segs.get(m.col).flatMap(segValue)))
+        })
+    }
+  }
 }
 
 /** Pushdown surface of a snapshot scan. Filters prune the manifest's file
@@ -1318,8 +1340,8 @@ class SnapScanBuilder(
     }
 
   /** Whether this builder may consume partition-exact filters at all —
-    * the row-level operation path overrides to false (its rewrite
-    * machinery documents and relies on every filter staying residual).
+    * the row-level operation path overrides to false (Spark re-applies
+    * the operation's condition row-level, so every filter stays residual).
     */
   protected def allowConsumption: Boolean = true
 

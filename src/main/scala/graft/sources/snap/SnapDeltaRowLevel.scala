@@ -21,11 +21,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{DeleteVectors, Snapshots}
 
-/** DELTA-BASED (merge-on-read) row-level operations — Spark's
-  * [[SupportsDelta]] planned natively: instead of rewriting every file
-  * holding a match (the group-based copy-on-write path,
-  * [[SnapRowLevelOperation]]), the engine receives the CHANGED ROWS ONLY
-  * and writes them as deltas:
+/** SQL `UPDATE cat.t SET …`, `MERGE INTO cat.t` and un-pushable
+  * `DELETE`s — Spark's DELTA-BASED row-level operation ([[SupportsDelta]])
+  * planned natively, merge-on-read: the engine receives the CHANGED ROWS
+  * ONLY and writes them as deltas:
   *
   *  - a deleted row becomes a position in its file's deletion vector;
   *  - an inserted row (MERGE not-matched, or the new image of an UPDATE —
@@ -36,12 +35,12 @@ import graft.sources.{DeleteVectors, Snapshots}
   * The rowId is `(_file, _pos)` — the table's stable row identity, served
   * by the same spliced reader every scan path uses (the `_pos` ordinal IS
   * the deletion-vector coordinate, so the write side records exactly what
-  * the read side subtracts). At 100 TB this reprices `UPDATE`/`MERGE`
-  * from "rewrite every matched multi-GB file" to "write the matched rows
-  * plus kilobytes of sidecar": an update of 0.01 % of rows costs 0.01 %
-  * of the bytes. Selected per session with
-  * `spark.graft.rowlevel.mode=mor` (one MoR switch flips the whole DML
-  * surface); the default stays copy-on-write.
+  * the read side subtracts). At 100 TB this prices `UPDATE`/`MERGE` at
+  * "write the matched rows plus kilobytes of sidecar", not "rewrite every
+  * matched multi-GB file": an update of 0.01 % of rows costs 0.01 % of
+  * the bytes. Vector growth stays bounded: the commit rewrites a file
+  * once its deleted fraction passes `spark.graft.dv.maxDeletedFraction`
+  * ([[DeleteVectors.boundedCommit]]).
   *
   * Change feed and streaming integrate for free: the commit is DV
   * restates + added files, so `cat.t.changes` emits precise per-position
@@ -94,11 +93,7 @@ class SnapDeltaRowLevelOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = {
-        // the insert side routes rows by their own partition values —
-        // SAME validation as the group-based writer (layout coherence
-        // AND path-renderable partition types)
-        val partCols =
-          SnapRowLevelWriteChecks.validatedPartCols(dir, view, tableSchema, cmd)
+        val partCols = validatedPartCols()
         new DeltaWrite {
           override def description(): String = s"GraftSnapDeltaWrite $dir"
           override def toBatch: DeltaBatchWrite =
@@ -106,6 +101,50 @@ class SnapDeltaRowLevelOperation(
         }
       }
     }
+
+  /** Write-build validation of the insert side, which routes rows to
+    * directories by the rows' OWN partition values: a hive-partitioned
+    * table must have a coherent layout (every file carries every
+    * partition segment) and path-renderable partition types — a
+    * non-renderable type would silently corrupt directory names. Returns
+    * the effective partition columns.
+    */
+  private def validatedPartCols(): Seq[String] = {
+    val partCols =
+      if (view.partCols.nonEmpty) view.partCols
+      else Snapshots.partitionColsFromRels(view.rels)
+    if (partCols.nonEmpty) {
+      val incoherent = view.rels.filterNot { r =>
+        val segs = SnapFilters.partSegments(r)
+        partCols.forall(segs.contains)
+      }
+      if (incoherent.nonEmpty)
+        throw new UnsupportedOperationException(
+          s"row-level $cmd on $dir: ${incoherent.size} file(s) lack the " +
+            s"[${partCols.mkString(", ")}] hive layout — a mixed layout cannot be " +
+            "written partition-aware; compact the table to one layout first")
+      partCols.foreach { c =>
+        val t = tableSchema.fields
+          .find(_.name == c)
+          .map(_.dataType)
+          .getOrElse(throw new UnsupportedOperationException(
+            s"partition column '$c' is not in the table schema"))
+        t match {
+          case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
+              org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
+              org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.DateType |
+              org.apache.spark.sql.types.BooleanType =>
+            ()
+          case other =>
+            throw new UnsupportedOperationException(
+              s"row-level $cmd on $dir: partition column '$c' of type " +
+                s"${other.simpleString} has no canonical path rendering — use the " +
+                "programmatic per-partition rewrites instead")
+        }
+      }
+    }
+    partCols
+  }
 }
 
 /** One task's outcome: inserted staged files (stage-relative, hive dirs
@@ -151,9 +190,9 @@ class SnapDeltaBatchWrite(
     val rootPath = new Path(dir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Snapshots.withTableLock(spark, dir) {
-      // OPTIMISTIC CONCURRENCY, like the group-based write: the scan read
-      // `scannedVersion`; anything committed since may have moved rows —
-      // abort loudly, the caller retries
+      // OPTIMISTIC CONCURRENCY: the scan read `scannedVersion` outside the
+      // lock; anything committed since may have moved rows — abort
+      // loudly, the caller retries
       val current = Snapshots.latestVersion(spark, dir)
       if (current != scannedVersion) {
         abort(messages)
@@ -180,12 +219,14 @@ class SnapDeltaBatchWrite(
           landed ::= to
         }
         // 2. fold the DV fragments with any existing sidecars into one
-        //    new sidecar per touched file — the same distributed
-        //    sorted-merge the MoR DELETE uses. ONLY the fragment files
-        //    the committed task messages name are read: a dead task
-        //    attempt's orphan fragment in the stage dir could cover a rel
-        //    no message lists, and merging it WITHOUT that rel's old
-        //    sidecar would shrink the vector — resurrecting deleted rows.
+        //    new sidecar per touched file — the same sorted-merge kernel
+        //    the MoR DELETE uses. ONLY the fragment files the committed
+        //    task messages name are read: a dead task attempt's orphan
+        //    fragment in the stage dir could cover a rel no message lists,
+        //    and merging it WITHOUT that rel's old sidecar would shrink
+        //    the vector — resurrecting deleted rows. The messages' exact
+        //    position total is the collect bound that selects the
+        //    driver-side write for a small epoch, as for the DELETE.
         val fragPaths = results.flatMap(_.fragments.map(f => new Path(dvStagePath, f._2).toString))
         val touched = results.flatMap(_.fragments.map(_._1)).distinct
         val view = Snapshots.manifestView(spark, dir, scannedVersion)
@@ -195,12 +236,14 @@ class SnapDeltaBatchWrite(
             val oldDvByRel = touched.flatMap { rel =>
               Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map(d => rel -> d._1)
             }.toMap
-            val fragments = spark.read
-              .parquet(fragPaths: _*)
-              .select(
-                org.apache.spark.sql.functions.col("rel"),
-                org.apache.spark.sql.functions.col("pos"))
-            DeleteVectors.writeSidecars(spark, dir, fragments, oldDvByRel, tag)
+            val fragments = spark.read.schema(SnapDeltaDataWriter.FragmentSchema).parquet(fragPaths: _*)
+            DeleteVectors.writeSidecars(
+              spark,
+              dir,
+              fragments,
+              oldDvByRel,
+              tag,
+              rawRowBound = Some(results.map(_.fragments.map(_._3).sum).sum))
           }
         // 3. ONE commit covers both sides — readers see the delete and
         //    the insert atomically or not at all. boundedCommit applies
@@ -345,11 +388,8 @@ class SnapDeltaDataWriter(
       java.util.Arrays.sort(positions)
       fragSeq += 1
       val fragRel = f"frag-$partitionId%05d-$taskId-$fragSeq%04d.parquet"
-      val schema = StructType(Seq(
-        org.apache.spark.sql.types.StructField("rel", org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
       val w = org.apache.spark.sql.graft.Bridge
-        .parquetRowWriter(new Path(dvStageDir, fragRel), schema, conf)
+        .parquetRowWriter(new Path(dvStageDir, fragRel), SnapDeltaDataWriter.FragmentSchema, conf)
       val relU = org.apache.spark.unsafe.types.UTF8String.fromString(rel)
       var last = Long.MinValue
       var n = 0L
@@ -370,4 +410,12 @@ class SnapDeltaDataWriter(
   override def abort(): Unit = inner.abort()
 
   override def close(): Unit = inner.close()
+}
+
+object SnapDeltaDataWriter {
+
+  /** One DV fragment row: a deleted position of a data file. */
+  val FragmentSchema: StructType = StructType(Seq(
+    org.apache.spark.sql.types.StructField("rel", org.apache.spark.sql.types.StringType, nullable = false),
+    org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
 }

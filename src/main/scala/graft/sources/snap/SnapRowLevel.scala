@@ -3,207 +3,24 @@ package graft.sources.snap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.connector.write.{
   BatchWrite,
   DataWriter,
   DataWriterFactory,
-  LogicalWriteInfo,
   PhysicalWriteInfo,
-  RowLevelOperation,
-  RowLevelOperationBuilder,
-  RowLevelOperationInfo,
   Write,
-  WriteBuilder,
   WriterCommitMessage
 }
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.Snapshots
 
-/** Group-based (copy-on-write) row-level operations for snapshot tables —
-  * the machinery behind SQL `UPDATE cat.t SET …` and `MERGE INTO cat.t`
-  * (and the rewrite fallback for un-pushable DELETEs):
-  *
-  *  1. Spark asks the table for a [[RowLevelOperation]] and builds BOTH its
-  *     read and write side from the SAME instance — which is the whole
-  *     coordination trick: the operation's scan records exactly the files
-  *     it planned (after manifest-stats + bloom pruning of the operation's
-  *     pushed condition), and its write later replaces exactly those files.
-  *  2. The scan is the ordinary pruned snapshot scan: an UPDATE whose WHERE
-  *     prunes to one day reads (and therefore rewrites) only that day's
-  *     files — untouched files are never read or written, the same
-  *     selective-rewrite economics the programmatic `updateWhere` has.
-  *  3. Spark computes the full replacement row set (updated matches +
-  *     untouched rows of the scanned files) and hands it back as
-  *     InternalRows; [[SnapReplaceBatchWrite]] writes them as parquet in a
-  *     staging dir via Spark's own `ParquetWriteSupport` (bridged — bytes
-  *     identical to a DataFrame write), then commits under the table lock:
-  *     land staged files, ARCHIVE the replaced ones (pinned manifests keep
-  *     resolving; the op is time-travelable and restorable), commit the
-  *     next manifest version inheriting the table's stats/bloom columns.
-  *
-  * Hive-partitioned tables work too: the scan splices partition values
-  * from each file's path, and [[SnapHivePartitionedDataWriter]] routes
-  * replacement rows back to partition directories by the rows' own
-  * values (stripping the columns from the file bytes), so cross-
-  * partition row moves land correctly. Mixed layouts and partition
-  * types without a canonical path rendering refuse at write-build time.
-  */
-class SnapRowLevelBuilder(dir: String, view: Snapshots.ManifestView, tableSchema: StructType)
-    extends RowLevelOperationBuilder {
-  override def build(): RowLevelOperation = {
-    // merge-on-read opt-in: [[SnapTable.morEnabled]] (one predicate for
-    // the whole DML surface) plans Spark's DELTA-BASED operation instead
-    // of the group-based rewrite: deletes become deletion-vector
-    // positions, inserts become appended files, one atomic commit
-    // ([[SnapDeltaRowLevelOperation]])
-    if (SnapTable.morEnabled(org.apache.spark.sql.SparkSession.active))
-      new SnapDeltaRowLevelOperation(dir, view, tableSchema, cmd)
-    else new SnapRowLevelOperation(dir, view, tableSchema, this)
-  }
-  private[snap] var cmd: RowLevelOperation.Command = _
-}
-
-private[snap] object SnapRowLevelWriteChecks {
-
-  /** Shared write-build validation for BOTH row-level paths (group-based
-    * rewrite and delta-based merge-on-read): a hive-partitioned table
-    * must have a coherent layout (every file carries every partition
-    * segment) and path-renderable partition types — the writers route
-    * replacement/inserted rows to directories by the rows' OWN values,
-    * and a non-renderable type would silently corrupt directory names.
-    * Returns the effective partition columns.
-    */
-  def validatedPartCols(
-      dir: String,
-      view: Snapshots.ManifestView,
-      tableSchema: StructType,
-      cmd: RowLevelOperation.Command): Seq[String] = {
-    val partCols =
-      if (view.partCols.nonEmpty) view.partCols
-      else Snapshots.partitionColsFromRels(view.rels)
-    if (partCols.nonEmpty) {
-      val incoherent = view.rels.filterNot { r =>
-        val segs = SnapFilters.partSegments(r)
-        partCols.forall(segs.contains)
-      }
-      if (incoherent.nonEmpty)
-        throw new UnsupportedOperationException(
-          s"row-level $cmd on $dir: ${incoherent.size} file(s) lack the " +
-            s"[${partCols.mkString(", ")}] hive layout — a mixed layout cannot be " +
-            "rewritten partition-aware; compact the table to one layout first")
-      partCols.foreach { c =>
-        val t = tableSchema.fields
-          .find(_.name == c)
-          .map(_.dataType)
-          .getOrElse(throw new UnsupportedOperationException(
-            s"partition column '$c' is not in the table schema"))
-        t match {
-          case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-              org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-              org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.DateType |
-              org.apache.spark.sql.types.BooleanType =>
-            ()
-          case other =>
-            throw new UnsupportedOperationException(
-              s"row-level $cmd on $dir: partition column '$c' of type " +
-                s"${other.simpleString} has no canonical path rendering — use the " +
-                "programmatic per-partition rewrites instead")
-        }
-      }
-    }
-    partCols
-  }
-}
-
-object SnapRowLevelBuilder {
-  def apply(
-      dir: String,
-      view: Snapshots.ManifestView,
-      tableSchema: StructType,
-      info: RowLevelOperationInfo): SnapRowLevelBuilder = {
-    // NO partitioned-table check here: Spark builds the operation for
-    // EVERY delete/update/merge on the table, including deletes that the
-    // metadata-only optimization later reclaims (DeleteFromTableWithFilters
-    // never executes the rewrite). The refusal lives at write-build time —
-    // the first point that proves the rewrite will actually run.
-    val b = new SnapRowLevelBuilder(dir, view, tableSchema)
-    b.cmd = info.command
-    b
-  }
-}
-
-class SnapRowLevelOperation(
-    dir: String,
-    view: Snapshots.ManifestView,
-    tableSchema: StructType,
-    parent: SnapRowLevelBuilder)
-    extends RowLevelOperation {
-
-  // set when Spark builds the operation's scan; the write replaces exactly
-  // these files. Defaults to the whole pinned file list (an unprunable
-  // condition rewrites the table — correct copy-on-write, just not cheap).
-  @volatile private[snap] var scannedRels: Seq[String] = view.rels
-
-  override def command(): RowLevelOperation.Command = parent.cmd
-
-  override def description(): String = s"GraftSnapRowLevel ${command()} $dir"
-
-  /** Declaring `_file` does double duty: the writer gets provenance, and —
-    * decisive — it makes Spark plan the `DataAndMetadataWritingSparkTask`,
-    * the only exec path that applies `ReplaceDataProjections` before the
-    * connector's writer (the metadata-free task hands the writer the RAW
-    * rewrite rows, `__row_operation` included).
-    */
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(SnapTable.FileMetaCol))
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SnapScanBuilder(dir, view, tableSchema) {
-      // the rewrite machinery documents (and SnapRowLevelScan relies on)
-      // every pushed filter staying residual, so Spark re-applies the
-      // operation's condition row-level — partition-exact consumption
-      // must never strip that Filter here
-      override protected def allowConsumption: Boolean = false
-      override def build(): Scan = {
-        // the rewrite must NOT copy rows a merge-on-read delete already
-        // removed: the row-level reader subtracts each scanned file's
-        // deletion vector (and the replacement file, having materialized
-        // them, carries no pointer — the commit's stats carry only
-        // applies to surviving rels)
-        val dvByRel: Map[String, String] = Snapshots.dvPathByRel(view)
-        super.build() match {
-          case v: SnapV2BatchScan =>
-            // same pruned file list, one input partition per file and no
-            // runtime filtering: the write replaces exactly these files
-            scannedRels = v.currentRels
-            new SnapRowLevelScan(dir, v.currentRels, v.readSchema(), tableSchema, dvByRel)
-          case s => s // count-style scans never appear under a row-level op
-        }
-      }
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
-    override def build(): Write = {
-      // hive-partitioned tables: replacement rows carry partition values
-      // as data columns, and the writer routes each row to its partition
-      // directory (partition columns stripped from the file bytes — the
-      // hive layout), so an UPDATE that moves a row across partitions
-      // lands it in its NEW directory. Requires a coherent layout and
-      // path-renderable partition types; anything else refuses loudly.
-      val partCols =
-        SnapRowLevelWriteChecks.validatedPartCols(dir, view, tableSchema, command())
-      new Write {
-        override def description(): String = s"GraftSnapReplaceData $dir files=${scannedRels.size}"
-        override def toBatch: BatchWrite =
-          new SnapReplaceBatchWrite(dir, scannedRels, info.schema(), view.version, partCols)
-      }
-    }
-  }
-}
+// Row-level plumbing of the snapshot table's DSv2 writes: the read side
+// of SQL UPDATE / MERGE INTO / un-pushable DELETE ([[SnapRowLevelScan]],
+// planned by [[SnapDeltaRowLevelOperation]]) and the staging writers
+// every DSv2 write lands parquet through — the merge-on-read insert side,
+// the streaming sink and dynamic partition overwrite.
 
 /** The row-level operation's read side: the pruned file list as a true
   * DSv2 [[org.apache.spark.sql.connector.read.Batch]] — one input
@@ -254,109 +71,11 @@ class SnapRowLevelScan(
 /** Commit message: one staged file written by one task. */
 case class SnapStagedFile(path: String, rows: Long) extends WriterCommitMessage
 
-/** Commit message of a hive-partitioned rewrite task: one staged file per
+/** Commit message of a hive-partitioned staging task: one staged file per
   * partition value the task saw, stage-relative so the landing preserves
   * the `k=v` directory structure.
   */
 case class SnapStagedPartFiles(rels: Seq[String], rows: Long) extends WriterCommitMessage
-
-class SnapReplaceBatchWrite(
-    dir: String,
-    replacedRels: Seq[String],
-    schema: StructType,
-    scannedVersion: Long,
-    partCols: Seq[String] = Seq.empty)
-    extends BatchWrite {
-
-  private def spark: SparkSession = SparkSession.active
-
-  // staging lives INSIDE the table dir (same filesystem → rename is a
-  // move) but dot-prefixed, invisible to listings and manifests
-  private val stage = s".replace-${java.util.UUID.randomUUID().toString}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // the SESSION's hadoop conf (SQLConf entries included), so the staged
-    // parquet honors the session timezone / parquet write settings exactly
-    // like a DataFrame write would
-    val conf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    val fs = new Path(dir).getFileSystem(conf)
-    fs.mkdirs(new Path(new Path(dir), stage))
-    if (partCols.isEmpty)
-      SnapParquetWriterFactory(
-        s"$dir/$stage",
-        schema,
-        org.apache.spark.sql.graft.Bridge.serializableConf(conf))
-    else
-      SnapHivePartWriterFactory(
-        s"$dir/$stage",
-        schema,
-        partCols,
-        org.apache.spark.sql.graft.Bridge.serializableConf(conf))
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val rootPath = new Path(dir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Snapshots.withTableLock(spark, dir) {
-      // OPTIMISTIC CONCURRENCY: the rewrite read version `scannedVersion`;
-      // if anything committed since (another UPDATE, a compaction, an
-      // ingest), landing our replacement would duplicate or drop rows the
-      // other commit moved — fail loudly instead, the caller retries. The
-      // programmatic ops hold the lock across scan+rewrite+commit; the SQL
-      // row-level path scans outside the lock, so it must validate here.
-      val current = Snapshots.latestVersion(spark, dir)
-      if (current != scannedVersion) {
-        abort(messages)
-        sys.error(
-          s"concurrent update detected on $dir: row-level operation scanned manifest " +
-            s"v$scannedVersion but the table is now at v$current — retry the statement")
-      }
-      // land the replacement files FIRST, then archive the replaced ones —
-      // the compactInPlace window discipline; manifest readers are the
-      // consistency surface and the closing commit defines the result
-      val stagePath = new Path(rootPath, stage)
-      def land(stageRel: String): Unit = {
-        val from = new Path(stagePath, stageRel)
-        val to = new Path(rootPath, stageRel)
-        fs.mkdirs(to.getParent)
-        if (!fs.rename(from, to)) sys.error(s"replace-data landing failed: $from")
-      }
-      messages.foreach {
-        case SnapStagedFile(p, _) if p.nonEmpty => land(new Path(p).getName)
-        case SnapStagedFile(_, _) => () // empty task: nothing staged
-        case SnapStagedPartFiles(rels, _) => rels.foreach(land)
-        case other => sys.error(s"unexpected commit message $other")
-      }
-      replacedRels.foreach { rel =>
-        val live = new Path(rootPath, rel)
-        if (fs.exists(live)) Snapshots.archiveFile(fs, rootPath, live)
-      }
-      fs.delete(stagePath, true)
-      Snapshots.commit(spark, dir) // inherits the table's stats + bloom discipline
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val rootPath = new Path(dir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(rootPath, stage), true)
-  }
-}
-
-case class SnapParquetWriterFactory(
-    stageDir: String,
-    schema: StructType,
-    conf: java.io.Serializable)
-    extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SnapParquetDataWriter(
-      new Path(
-        stageDir,
-        f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID().toString}.parquet"),
-      schema,
-      org.apache.spark.sql.graft.Bridge.confOf(conf))
-}
 
 case class SnapHivePartWriterFactory(
     stageDir: String,
@@ -374,15 +93,14 @@ case class SnapHivePartWriterFactory(
       f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID().toString}.parquet")
 }
 
-/** Dynamic hive-partitioned staging writer: routes each replacement row
-  * to its partition directory by the row's OWN partition-column values
-  * (so an UPDATE that changes a partition value moves the row), strips
-  * the partition columns from the file bytes (the hive layout — readers
+/** Dynamic hive-partitioned staging writer: routes each row to its
+  * partition directory by the row's OWN partition-column values (so an
+  * UPDATE that changes a partition value moves the row), strips the
+  * partition columns from the file bytes (the hive layout — readers
   * splice them back from the path), and renders directory names with
-  * Spark's own escaping so rewritten partitions land in exactly the
+  * Spark's own escaping so written partitions land in exactly the
   * directories the table already uses. One open writer per partition
-  * value seen by the task — the rewrite scan is file-per-partition-dir,
-  * so a task normally sees one.
+  * value seen by the task.
   */
 class SnapHivePartitionedDataWriter(
     stageDir: String,
@@ -420,7 +138,7 @@ class SnapHivePartitionedDataWriter(
   private var rows = 0L
 
   /** Concurrently-open writer cap — a memory bound on parquet row-group
-    * buffering, NOT a fan-out bound. Batch rewrites EVICT on overflow
+    * buffering, NOT a fan-out bound. Batch writes EVICT on overflow
     * (close + rotate on reopen — safe: batch staging is attempt-unique).
     * Streaming epochs close the least-recently-used value PERMANENTLY
     * instead: the catalog Write declares a within-task sort by the

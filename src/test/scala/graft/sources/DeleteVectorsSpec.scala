@@ -1160,27 +1160,39 @@ class DeleteVectorsSpec extends SparkSpec {
   }
 
   test("driver-side DV sidecar write: byte parity with the distributed path, fewer jobs") {
-    // The SAME delete on the SAME table state, once forced down the
+    // The SAME op on the SAME table state, once forced down the
     // distributed shuffle path and once (after a restore) under the
     // default driver fast path: the sidecar FILE BYTES must match per
     // served rel (same merge kernel ⇒ same rows ⇒ same bytes), and the
     // fast path must cost strictly fewer Spark jobs. A prior delete gives
-    // both runs an existing sidecar to merge (the old-positions arm).
+    // both runs an existing sidecar to merge (the old-positions arm). The
+    // ops: a programmatic MoR DELETE, and a SQL UPDATE (the delta DML
+    // commit sizes its sidecar write from its task messages' exact
+    // position total).
     val dir = Files.createTempDirectory("dv_driverwrite").toString + "/t"
     table(dir)
+    driverWriteParity(dir)(DeleteVectors.deleteWhere(spark, dir, $"id" % 2 === 0))
+    val (_, catDir) = catalogTable("dvdriverupd")
+    driverWriteParity(catDir) {
+      spark.sql("UPDATE dvdriverupd.ev SET v = v + 1.0 WHERE id % 2 = 0"); ()
+    }
+  }
+
+  private def driverWriteParity(dir: String)(op: => Unit): Unit = {
     DeleteVectors.deleteWhere(spark, dir, $"id" === 1L)
     val vPre = Snapshots.latestVersion(spark, dir)
-    def timedDelete(): Int = {
+    def timedOp(): Int = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val l = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           jobs.incrementAndGet(); ()
         }
       }
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
       spark.sparkContext.addSparkListener(l)
       try {
-        DeleteVectors.deleteWhere(spark, dir, $"id" % 2 === 0)
-        Thread.sleep(500) // drain the async listener bus
+        op
+        org.apache.spark.SpecBus.drain(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(l)
       jobs.get()
     }
@@ -1192,13 +1204,13 @@ class DeleteVectorsSpec extends SparkSpec {
             .toSeq
       }
     spark.conf.set("spark.graft.dv.driverWriteMaxRows", "0")
-    val jobsSlow = try timedDelete()
+    val jobsSlow = try timedOp()
     finally spark.conf.unset("spark.graft.dv.driverWriteMaxRows")
     val slow = sidecarBytes()
     val slowRows = rowSet(Snapshots.readSnapshot(spark, dir))
-    // back to the pre-delete state, rerun under the default driver path
+    // back to the pre-op state, rerun under the default driver path
     Snapshots.restore(spark, dir, vPre)
-    val jobsFast = timedDelete()
+    val jobsFast = timedOp()
     val fast = sidecarBytes()
     assert(fast.nonEmpty && fast.keySet == slow.keySet, s"${fast.keySet} vs ${slow.keySet}")
     val diff = fast.keys.filter(k => fast(k) != slow(k))

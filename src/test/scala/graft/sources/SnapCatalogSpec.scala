@@ -516,14 +516,14 @@ class SnapCatalogSpec extends SparkSpec {
 
   test("an un-pushable DELETE predicate on a partitioned table falls back to the rewrite") {
     val (_, dir) = fixture("snapc13")
-    // the metadata delete can't translate length(); the row-level rewrite
-    // fallback is now partition-aware, so the statement executes exactly
+    // the pushed delete can't translate length(); the statement runs as
+    // the partition-aware row-level operation and executes exactly
     spark.sql("DELETE FROM snapc13.ev WHERE length(event_type) = 5")
     assert(
       spark.sql("SELECT id FROM snapc13.ev ORDER BY id").as[Long].collect().toSeq ==
         Seq(2L, 4L, 5L),
       "only the 'click' rows (length 5) may be deleted")
-    // the rewrite preserved the hive layout and the pre-delete pin
+    // the hive layout and the pre-delete pin survive
     assert(Snapshots.files(spark, dir).forall(_.startsWith("day=")))
     assert(spark.sql("SELECT count(*) FROM snapc13.ev VERSION AS OF 1").as[Long].head() == 5L)
   }
@@ -560,10 +560,14 @@ class SnapCatalogSpec extends SparkSpec {
     val before = dataFiles(dir)
     assert(before.size == 4)
     spark.sql("UPDATE snapc16.t SET v = v + 1000 WHERE id = 150")
-    // stats pruning localized the rewrite: the three non-matching files
-    // were neither read nor replaced
+    // merge-on-read: no original file is replaced — the old image is one
+    // deletion-vector position in the one file holding id 150, and the
+    // new image lands in one appended file
     val after = dataFiles(dir)
-    assert(after.count { case (n, st) => before.get(n).contains(st) } == 3, s"$before vs $after")
+    assert(after.count { case (n, st) => before.get(n).contains(st) } == 4, s"$before vs $after")
+    assert(after.size == 5, s"$before vs $after")
+    val dv = Snapshots.dvByRel(Snapshots.manifestView(spark, dir))
+    assert(dv.size == 1 && dv.values.head._2 == 1L, dv.toString)
     assert(spark.sql("SELECT v FROM snapc16.t WHERE id = 150").as[Long].head() == 150L % 7 + 1000L)
     assert(spark.sql("SELECT count(*) FROM snapc16.t").as[Long].head() == 400L)
     // the pre-update version still reads the original value
@@ -586,7 +590,7 @@ class SnapCatalogSpec extends SparkSpec {
     // v1 pins the pre-merge world
     assert(
       spark.sql("SELECT count(*) FROM snapc17.t VERSION AS OF 1").as[Long].head() == 400L)
-    // a DELETE the filter API cannot express runs as a row-level rewrite
+    // a DELETE the filter API cannot express runs as the row-level operation
     spark.sql("DELETE FROM snapc17.t WHERE length(CAST(v AS STRING)) = 3")
     assert(spark.sql("SELECT count(*) FROM snapc17.t").as[Long].head() == 399L)
     assert(
@@ -604,7 +608,7 @@ class SnapCatalogSpec extends SparkSpec {
       .collect()
     assert(per.map(_._2).sum == 400L && per.forall(_._2 > 0L))
     // a partitioned UPDATE whose predicate prunes NO partitions still
-    // executes exactly (whole-table copy-on-write, layout preserved)
+    // executes exactly (every file scanned, layout preserved)
     fixture("snapc19")
     spark.sql("UPDATE snapc19.ev SET v = v + 1 WHERE event_type = 'click'")
     val vs = spark.sql("SELECT id, v FROM snapc19.ev ORDER BY id")
@@ -641,8 +645,9 @@ class SnapCatalogSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.snapc21", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.snapc21.root", base)
     spark.sql("UPDATE snapc21.t SET d = d * 2 WHERE id >= 25")
-    // every row went through the DSv2 parquet read+write round trip; all
-    // columns must be byte-faithful, with d doubled on the matched half
+    // the matched half's new images went through the DSv2 read + parquet
+    // write round trip; all columns must be byte-faithful, with d doubled
+    // on the matched half
     val expect = df.withColumn("d", when(col("id") >= 25, col("d") * 2).otherwise(col("d")))
     val back = spark.sql("SELECT * FROM snapc21.t")
     assert(back.count() == 50L)
@@ -1044,11 +1049,11 @@ class SnapCatalogSpec extends SparkSpec {
   test("row-level commit detects a concurrent version change and aborts instead of duplicating") {
     val (_, dir) = flatFixture("snapc20")
     // a write whose scan pinned v1; someone else commits v2 before it lands
-    val stale = new graft.sources.snap.SnapReplaceBatchWrite(
+    val stale = new graft.sources.snap.SnapDeltaBatchWrite(
       dir,
-      Seq.empty,
       new org.apache.spark.sql.types.StructType(),
-      scannedVersion = 1L)
+      scannedVersion = 1L,
+      partCols = Seq.empty)
     Snapshots.commit(spark, dir) // v2
     val e = intercept[Exception](stale.commit(Array.empty))
     assert(e.getMessage.contains("concurrent update"), e.getMessage)
@@ -2027,23 +2032,24 @@ class SnapCatalogSpec extends SparkSpec {
         day -> (rel -> new java.io.File(s"$dir/$rel").length())
       }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val before = filesByDay
-    // UPDATE narrowed to one day: only that day's file may be rewritten
+    // UPDATE narrowed to one day: only that day's directory may change
     spark.sql("UPDATE snappdml.ev SET v = v + 100 WHERE day = DATE'2024-01-02'")
     val afterUpdate = filesByDay
     before.keySet.filterNot(_ == "day=2024-01-02").foreach { d =>
       assert(afterUpdate(d) == before(d), s"untouched partition $d was rewritten")
     }
-    assert(afterUpdate("day=2024-01-02") != before("day=2024-01-02"), "target partition must rewrite")
+    assert(afterUpdate("day=2024-01-02") != before("day=2024-01-02"), "target partition must change")
     val got = spark.sql("SELECT id, v FROM snappdml.ev ORDER BY id")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == Seq((1L, 10.0), (2L, 11.0), (3L, 120.0), (4L, 30.0), (5L, 40.0)), got.toString)
-    // partition values still splice from the path (files must NOT carry a
-    // day column — the hive layout survived the rewrite)
-    val rewritten = Snapshots.files(spark, dir).filter(_.startsWith("day=2024-01-02"))
-    assert(rewritten.size == 1, rewritten.toString)
+    // partition values still splice from the path: the new image's file
+    // landed in the day's directory WITHOUT a day column (hive layout)
+    val beforeRels = before("day=2024-01-02").map(_._1).toSet
+    val added = Snapshots.files(spark, dir).filter(_.startsWith("day=2024-01-02")).filterNot(beforeRels)
+    assert(added.size == 1, added.toString)
     assert(
-      !spark.read.parquet(s"$dir/${rewritten.head}").columns.contains("day"),
-      "rewritten file must not embed the partition column")
+      !spark.read.parquet(s"$dir/${added.head}").columns.contains("day"),
+      "written file must not embed the partition column")
     // MERGE: update one day, insert a row into a NEW day — routed by the
     // row's own partition value
     Seq((3L, "2024-01-02", "click", 999.0), (9L, "2024-01-09", "view", 90.0))
@@ -2072,7 +2078,7 @@ class SnapCatalogSpec extends SparkSpec {
       spark.sql("SELECT day FROM snappdml.ev WHERE id = 5").head().getDate(0).toString ==
         "2024-01-05")
     assert(Snapshots.files(spark, dir).exists(_.startsWith("day=2024-01-05")))
-    assert(!Snapshots.files(spark, dir).exists(_.startsWith("day=2024-01-04")))
+    assert(spark.sql("SELECT count(*) FROM snappdml.ev WHERE day = DATE'2024-01-04'").as[Long].head() == 0L)
     // time travel still pins the pre-DML state
     assert(spark.sql("SELECT count(*) FROM snappdml.ev VERSION AS OF 1").as[Long].head() == 5L)
   }
@@ -2201,11 +2207,11 @@ class SnapCatalogSpec extends SparkSpec {
   }
 
   test("malformed graft confs fail naming the key") {
-    val base = emptyCatalog("snbadconf")
+    val base = Files.createTempDirectory("snbadconf").toString
     // (key, malformed value, op over a committed table with id stats +
     // bloom). Every op reaches the conf: a commit reads the checkpoint
     // interval and builds the new file's sidecars; the deletes read the
-    // DML-mode, rewrite-size and deletion-vector confs
+    // rewrite-size and deletion-vector confs
     def appendAndCommit(dir: String): Unit = {
       Seq((9L, "z")).toDF("id", "s").coalesce(1).write.mode("append").parquet(dir)
       Snapshots.commit(spark, dir)
@@ -2214,10 +2220,6 @@ class SnapCatalogSpec extends SparkSpec {
     val cases: Seq[(String, String, String => Unit)] = Seq(
       ("spark.graft.snapshot.checkpointInterval", "20x", appendAndCommit),
       ("spark.graft.sidecar.driverBuildMaxBytes", "32MB", appendAndCommit),
-      (
-        "spark.graft.rowlevel.mode",
-        "mro",
-        dir => { spark.sql(s"DELETE FROM snbadconf.${dir.split('/').last} WHERE id = 1"); () }),
       ("spark.graft.rewrite.targetBytes", "128m", dir => { Sources.deleteWhere(spark, dir, col("id") === 1L); () }),
       ("spark.graft.dv.maxDeletedFraction", "most", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }),
       ("spark.graft.dv.driverWriteMaxRows", "lots", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }))
@@ -2232,5 +2234,142 @@ class SnapCatalogSpec extends SparkSpec {
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
       assert(msgs.exists(m => m != null && m.contains(key) && m.contains(bad)), s"$key: ${msgs.mkString(" / ")}")
     }
+  }
+
+  /** A byte copy of a table directory (data, manifests, sidecars) — the
+    * same table at a second root, for the programmatic reference ops.
+    */
+  private def copyTable(dir: String, to: String): String = {
+    val src = new org.apache.hadoop.fs.Path(dir)
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(
+      fs, src, fs, new org.apache.hadoop.fs.Path(to), false, spark.sparkContext.hadoopConfiguration)
+    to
+  }
+
+  /** Live rows of the catalog table `t` equal the reference table's at
+    * `refDir`, as multisets (maps compared as entry arrays).
+    */
+  private def assertSameRows(t: String, refDir: String): Unit = {
+    val got = spark.table(t)
+    val cols = got.columns.toSeq.filterNot(_.startsWith("_"))
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map { c =>
+        if (df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+          map_entries(col(c)).as(c)
+        else col(c)
+      }: _*)
+    val a = norm(got)
+    val b = norm(Snapshots.readSnapshot(spark, refDir))
+    assert(a.count() == b.count(), s"$t: ${a.count()} rows vs reference ${b.count()}")
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$t differs from the reference")
+  }
+
+  test("SQL DELETE, UPDATE and MERGE leave the same rows as the programmatic copy-on-write ops") {
+    // flat table with NULLs in v: a NULL predicate row is never matched
+    val flatBase = Files.createTempDirectory("snapequiv_flat").toString
+    spark
+      .range(0L, 200L)
+      .select($"id", when($"id" % 10 === 0, lit(null)).otherwise($"id" % 7).as("v"))
+      .repartitionByRange(2, $"id")
+      .write
+      .parquet(s"$flatBase/t")
+    Snapshots.commit(spark, s"$flatBase/t", Seq("id"))
+    spark.conf.set("spark.sql.catalog.snapeq1", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snapeq1.root", flatBase)
+    val flatRef = copyTable(s"$flatBase/t", s"$flatBase/ref")
+    spark.sql("DELETE FROM snapeq1.t WHERE v = 3") // pushable: deletion vectors
+    Sources.deleteWhere(spark, flatRef, col("v") === 3)
+    spark.sql("DELETE FROM snapeq1.t WHERE v + 0 = 4") // un-pushable: row-level operation
+    Sources.deleteWhere(spark, flatRef, col("v") + 0 === 4)
+    spark.sql("UPDATE snapeq1.t SET v = v * 10 WHERE id % 3 = 0 AND v > 1")
+    Sources.updateWhere(spark, flatRef, col("id") % 3 === 0 && col("v") > 1, Map("v" -> col("v") * 10))
+    spark.range(0L, 200L, 4L).toDF("sid").createOrReplaceTempView("snapeq1_src")
+    spark.sql("""MERGE INTO snapeq1.t t USING snapeq1_src s ON t.id = s.sid
+      WHEN MATCHED AND t.v = 5 THEN DELETE
+      WHEN MATCHED THEN UPDATE SET v = t.v + 100""")
+    Sources.deleteWhere(spark, flatRef, col("id") % 4 === 0 && col("v") === 5)
+    Sources.updateWhere(spark, flatRef, col("id") % 4 === 0, Map("v" -> (col("v") + 100)))
+    assertSameRows("snapeq1.t", flatRef)
+    assert(spark.sql("SELECT count(*) FROM snapeq1.t WHERE v IS NULL").as[Long].head() == 20L)
+
+    // hive-partitioned: a data-column DELETE, a partition-exact DELETE,
+    // an UPDATE across partitions and a MERGE
+    val (_, dir) = fixture("snapeq2")
+    val hiveRef = copyTable(dir, dir + "_ref")
+    spark.sql("DELETE FROM snapeq2.ev WHERE event_type = 'click' AND v > 15")
+    Sources.deleteWhere(spark, hiveRef, col("event_type") === "click" && col("v") > 15)
+    spark.sql("DELETE FROM snapeq2.ev WHERE day = DATE'2024-01-04'")
+    Sources.deleteWhere(spark, hiveRef, col("day") === lit(java.sql.Date.valueOf("2024-01-04")))
+    spark.sql("UPDATE snapeq2.ev SET v = v + 1 WHERE day = DATE'2024-01-03' OR id = 1")
+    Sources.updateWhere(
+      spark,
+      hiveRef,
+      col("day") === lit(java.sql.Date.valueOf("2024-01-03")) || col("id") === 1L,
+      Map("v" -> (col("v") + 1)))
+    Seq(2L, 4L).toDF("sid").createOrReplaceTempView("snapeq2_src")
+    spark.sql("""MERGE INTO snapeq2.ev t USING snapeq2_src s ON t.id = s.sid
+      WHEN MATCHED THEN UPDATE SET v = t.v * 2""")
+    Sources.updateWhere(spark, hiveRef, col("id").isin(2L, 4L), Map("v" -> (col("v") * 2)))
+    assertSameRows("snapeq2.ev", hiveRef)
+
+    // every column shape, map included
+    val shapesBase = Files.createTempDirectory("snapequiv_types").toString
+    spark.sql("""
+      SELECT id,
+             CAST(id AS DOUBLE) / 4.0 AS d,
+             timestamp'2024-03-01 10:30:00' + make_interval(0,0,0,0,0,0,id) AS ts,
+             date_add(DATE'2024-03-01', CAST(id AS INT)) AS day,
+             CAST(id AS DECIMAL(10,2)) / 3 AS dec,
+             id % 2 = 0 AS flag,
+             array(id, id * 2) AS arr,
+             named_struct('a', id, 'b', concat('s', CAST(id AS STRING))) AS st,
+             map(concat('k', CAST(id AS STRING)), id) AS m
+      FROM range(0, 50)""").coalesce(2).write.parquet(s"$shapesBase/t")
+    Snapshots.commit(spark, s"$shapesBase/t", Seq("id"))
+    spark.conf.set("spark.sql.catalog.snapeq3", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snapeq3.root", shapesBase)
+    val shapesRef = copyTable(s"$shapesBase/t", s"$shapesBase/ref")
+    spark.sql("UPDATE snapeq3.t SET d = d * 2 WHERE id >= 25")
+    Sources.updateWhere(spark, shapesRef, col("id") >= 25, Map("d" -> (col("d") * 2)))
+    spark.sql("DELETE FROM snapeq3.t WHERE flag AND id < 10")
+    Sources.deleteWhere(spark, shapesRef, col("flag") && col("id") < 10)
+    assertSameRows("snapeq3.t", shapesRef)
+  }
+
+  test("a partition-exact SQL DELETE archives the matched files in zero Spark jobs, no vector") {
+    val (_, dir) = fixture("snappx") // day-partitioned: 4 day dirs, 5 rows
+    val before = Snapshots.files(spark, dir)
+    val day01 = before.filter(_.startsWith("day=2024-01-01/"))
+    assert(day01.nonEmpty)
+    def archived(rel: String) = new java.io.File(s"$dir/${Snapshots.ArchiveDirName}/$rel").exists()
+    assert(jobsOf { spark.sql("DELETE FROM snappx.ev WHERE day = DATE'2024-01-01'"); () } == 0)
+    assert(Snapshots.files(spark, dir) == before.filterNot(day01.contains))
+    assert(day01.forall(archived), "the matched files move to the archive")
+    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).isEmpty, "no vector written")
+    assert(spark.sql("SELECT id FROM snappx.ev ORDER BY id").as[Long].collect().toSeq == Seq(3L, 4L, 5L))
+    // WHERE-less: every remaining file archives, still without a job
+    assert(jobsOf { spark.sql("DELETE FROM snappx.ev"); () } == 0)
+    assert(Snapshots.files(spark, dir).isEmpty)
+    assert(before.forall(archived))
+    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).isEmpty)
+    // the pre-delete versions still read every row, and restore brings them back
+    assert(spark.sql("SELECT count(*) FROM snappx.ev VERSION AS OF 1").as[Long].head() == 5L)
+    assert(spark.sql("SELECT count(*) FROM snappx.ev VERSION AS OF 2").as[Long].head() == 3L)
+    spark.sql("CALL snappx.restore(table => 'ev', version => 1)").collect()
+    assert(
+      spark.sql("SELECT id FROM snappx.ev ORDER BY id").as[Long].collect().toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+    // a v1 manifest records no schema: SQL DML refuses, naming the upgrade
+    val v1Base = Files.createTempDirectory("snappx_v1").toString
+    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v").write.parquet(s"$v1Base/t")
+    Snapshots.commit(spark, s"$v1Base/t")
+    spark.conf.set("spark.sql.catalog.snappxv1", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snappxv1.root", v1Base)
+    Seq("DELETE FROM snappxv1.t WHERE id = 1", "UPDATE snappxv1.t SET v = 0.0 WHERE id = 1").foreach { q =>
+      val e = intercept[Exception](spark.sql(q))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(msgs.exists(m => m != null && m.contains("Snapshots.commit(spark, root, statsCols)")), msgs.mkString(" / "))
+    }
+    assert(spark.sql("SELECT count(*) FROM snappxv1.t").as[Long].head() == 2L)
   }
 }

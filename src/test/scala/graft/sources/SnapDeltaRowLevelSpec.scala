@@ -29,12 +29,6 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     (base, dir)
   }
 
-  private def withMor[T](body: => T): T = {
-    spark.conf.set("spark.graft.rowlevel.mode", "mor")
-    try body
-    finally spark.conf.unset("spark.graft.rowlevel.mode")
-  }
-
   private def liveIdV(dir: String): Set[(Long, Double)] =
     Snapshots
       .readSnapshot(spark, dir)
@@ -46,7 +40,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
   test("MoR SQL UPDATE: matched rows move to new files via DV + append, originals untouched") {
     val (_, dir) = fixture("mord1")
     val filesBefore = Snapshots.files(spark, dir).toSet
-    withMor(spark.sql("UPDATE mord1.ev SET v = v * 2 WHERE id IN (2, 3)"))
+    spark.sql("UPDATE mord1.ev SET v = v * 2 WHERE id IN (2, 3)")
     assert(liveIdV(dir) == Set((1L, 10.0), (2L, 22.0), (3L, 40.0), (4L, 30.0)))
     val after = Snapshots.files(spark, dir).toSet
     // every pre-update file is STILL LISTED (nothing rewritten/archived);
@@ -68,12 +62,12 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
       .toDF("id", "nv", "op")
       .createOrReplaceTempView("mord2_src")
     val vBefore = Snapshots.latestVersion(spark, dir)
-    withMor(spark.sql("""
+    spark.sql("""
       |MERGE INTO mord2.ev t USING mord2_src s ON t.id = s.id
       |WHEN MATCHED AND s.op = 'del' THEN DELETE
       |WHEN MATCHED THEN UPDATE SET v = s.nv
       |WHEN NOT MATCHED THEN INSERT (id, day, v) VALUES (s.id, DATE'2024-01-09', s.nv)
-      |""".stripMargin))
+      |""".stripMargin)
     assert(Snapshots.latestVersion(spark, dir) == vBefore + 1L, "one atomic commit")
     assert(liveIdV(dir) == Set((1L, 10.0), (2L, 99.0), (3L, 20.0), (9L, 90.0)))
     // the new partition dir exists (insert routed by the row's own value)
@@ -83,7 +77,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
 
   test("MoR UPDATE moves a row across partitions (SET on the partition column)") {
     val (_, dir) = fixture("mord3")
-    withMor(spark.sql("UPDATE mord3.ev SET day = DATE'2024-02-01' WHERE id = 4"))
+    spark.sql("UPDATE mord3.ev SET day = DATE'2024-02-01' WHERE id = 4")
     val files = Snapshots.files(spark, dir)
     assert(files.exists(_.startsWith("day=2024-02-01/")), files.mkString(", "))
     val moved = spark.sql("SELECT day FROM mord3.ev WHERE id = 4").head().getDate(0).toString
@@ -100,7 +94,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     val (_, dir) = fixture("mord4")
     Seq(2L, 3L).toDF("bad").createOrReplaceTempView("mord4_bad")
     val filesBefore = Snapshots.files(spark, dir).toSet
-    withMor(spark.sql("DELETE FROM mord4.ev WHERE id IN (SELECT bad FROM mord4_bad)"))
+    spark.sql("DELETE FROM mord4.ev WHERE id IN (SELECT bad FROM mord4_bad)")
     assert(Snapshots.files(spark, dir).toSet == filesBefore, "delete must not touch the file list")
     assert(liveIdV(dir).map(_._1) == Set(1L, 4L))
     assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).values.map(_._2).sum == 2L)
@@ -117,7 +111,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     // after a MoR delete of the pos=0 row, the survivor keeps ITS ordinal
     // (positions are file coordinates, not renumbered)
     val victim = idPos.head._1
-    withMor(spark.sql(s"DELETE FROM mord5.ev WHERE id = $victim"))
+    spark.sql(s"DELETE FROM mord5.ev WHERE id = $victim")
     val after = spark
       .sql("SELECT id, _pos FROM mord5.ev WHERE day = DATE'2024-01-01'")
       .collect()
@@ -127,7 +121,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
 
   test("CDC after a MoR UPDATE shows the standard delete+insert pair") {
     val (_, dir) = fixture("mord6")
-    withMor(spark.sql("UPDATE mord6.ev SET v = 111.0 WHERE id = 3"))
+    spark.sql("UPDATE mord6.ev SET v = 111.0 WHERE id = 3")
     val v = Snapshots.latestVersion(spark, dir)
     val changes = spark.read
       .option("startingVersion", v)
@@ -142,11 +136,11 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
 
   test("_pos resolves over a MIXED live/archived pinned read (metadata attaches per scan)") {
     val (_, dir) = fixture("mord8")
-    // COW update archives day=2024-01-01's file; v1 now reads a mix of
-    // archived (that file) and live (the untouched days) — _pos must
-    // still resolve (Union propagates no metadata output, so the ordinal
-    // has to attach below the union)
-    spark.sql("UPDATE mord8.ev SET v = 0.0 WHERE id = 1")
+    // a copy-on-write update archives day=2024-01-01's file; v1 now reads
+    // a mix of archived (that file) and live (the untouched days) — _pos
+    // must still resolve (Union propagates no metadata output, so the
+    // ordinal has to attach below the union)
+    Sources.updateWhere(spark, dir, col("id") === 1L, Map("v" -> lit(0.0)))
     val pinned = spark
       .sql("SELECT id, _pos FROM mord8.ev VERSION AS OF 1 ORDER BY id")
       .collect()
@@ -166,7 +160,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     spark.conf.set(s"spark.sql.catalog.morbad", classOf[graft.sources.snap.GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.morbad.root", base)
     val e = intercept[Exception](
-      withMor(spark.sql("UPDATE morbad.t SET v = 0.0 WHERE id = 1")))
+      spark.sql("UPDATE morbad.t SET v = 0.0 WHERE id = 1"))
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(
@@ -181,7 +175,7 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
       val v1 = Snapshots.latestVersion(spark, dir)
       val day01Before = Snapshots.files(spark, dir).filter(_.startsWith("day=2024-01-01/"))
       // deletes 1 of day=01's 2 rows: fraction 0.5 > 0.4 with a survivor
-      withMor(spark.sql("UPDATE mord9.ev SET v = 111.0 WHERE id = 1"))
+      spark.sql("UPDATE mord9.ev SET v = 111.0 WHERE id = 1")
       assert(Snapshots.latestVersion(spark, dir) == v1 + 1L, "one atomic version")
       val view = Snapshots.manifestView(spark, dir)
       assert(Snapshots.dvByRel(view).isEmpty, "over-threshold file must rewrite, not point")
@@ -201,10 +195,12 @@ class SnapDeltaRowLevelSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.dv.maxDeletedFraction")
   }
 
-  test("copy-on-write remains the default: no conf, UPDATE rewrites and leaves no vectors") {
+  test("SQL UPDATE always writes vectors: no conf, the old image becomes a DV position") {
     val (_, dir) = fixture("mord7")
+    val filesBefore = Snapshots.files(spark, dir).toSet
     spark.sql("UPDATE mord7.ev SET v = v + 1.0 WHERE id = 1")
-    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).isEmpty)
+    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).values.map(_._2).sum == 1L)
+    assert(filesBefore.subsetOf(Snapshots.files(spark, dir).toSet), "nothing rewritten")
     assert(liveIdV(dir).contains((1L, 11.0)))
   }
 }
