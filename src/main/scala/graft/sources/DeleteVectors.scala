@@ -490,22 +490,14 @@ object DeleteVectors {
     * below this, the matched (rel, pos) pairs are collected in the match
     * scan's own job and the sidecars stream out through the same merge
     * kernel the distributed tasks run — no repartition/sort shuffle, no
-    * second job. Parameterised: a large delete/backfill epoch exceeds the
+    * second job. A large delete/backfill epoch exceeds the
     * bound and keeps the distributed path, so at 100 TB this only serves
     * the small-epoch case it is meant for. Driver cost is bounded by the
-    * ceiling itself (≤ a few MB of longs, a sort, a streamed write).
+    * ceiling itself (≤ a few MB of longs, a sort, a streamed write). A
+    * constant, 2^18 rows; specs lower it with `withValue(0L)` to force
+    * the shuffle path.
     */
-  private def dvDriverWriteMaxRows(spark: SparkSession): Long =
-    spark.conf
-      .getOption("spark.graft.dv.driverWriteMaxRows")
-      .map(v =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"spark.graft.dv.driverWriteMaxRows must be a row count, got '$v'")
-        })
-      .getOrElse(1L << 18)
+  private[sources] val dvDriverWriteMaxRows = new scala.util.DynamicVariable[Long](1L << 18)
 
   /** Raw recorded rows across `rels` — the sound collect bound for a match
     * over those files (a match scan reads RAW rows, deleted included).
@@ -606,7 +598,7 @@ object DeleteVectors {
     import spark.implicits._
     val rootStr = root
     val dvDir = Snapshots.DvDirName
-    if (rawRowBound.exists(_ <= dvDriverWriteMaxRows(spark))) {
+    if (rawRowBound.exists(_ <= dvDriverWriteMaxRows.value)) {
       val collected = matches
         .select(col("rel").as("_1"), col("pos").as("_2"))
         .as[(String, Long)]

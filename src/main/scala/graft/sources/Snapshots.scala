@@ -1279,7 +1279,7 @@ object Snapshots {
       // SUM sidecars ride the pass even on a bloom-less stats table —
       // manifest-only SUM/AVG must not silently require declared blooms
       if (bloomCols.nonEmpty || statsCols.nonEmpty)
-        buildBloomSidecars(spark, root, files, bloomCols, statsCols = statsCols)
+        buildSidecars(spark, root, files, bloomCols, statsCols = statsCols)
       // DELTA vs checkpoint: off-interval v2 commits record only what
       // changed vs the previous version — the manifest WRITE becomes
       // O(delta) like the footer-stat pass (a million-file table's append
@@ -1446,7 +1446,7 @@ object Snapshots {
           lastCommitFooterReads.set(reads.get())
         }
         if ((prev.bloomCols.nonEmpty || statsCols.nonEmpty) && !bloomsBuilt) {
-          buildBloomSidecars(spark, root, fresh, prev.bloomCols, statsCols = statsCols)
+          buildSidecars(spark, root, fresh, prev.bloomCols, statsCols = statsCols)
           bloomsBuilt = true
         }
         def statOf(rel: String): Map[String, ColStat] =
@@ -1610,7 +1610,7 @@ object Snapshots {
         }
       }
       if ((prev.bloomCols.nonEmpty || prev.statsCols.nonEmpty) && added.nonEmpty && !bloomsBuilt) {
-        buildBloomSidecars(spark, root, added, prev.bloomCols, statsCols = prev.statsCols)
+        buildSidecars(spark, root, added, prev.bloomCols, statsCols = prev.statsCols)
         bloomsBuilt = true
       }
       def statOf(rel: String): Map[String, ColStat] =
@@ -2510,23 +2510,27 @@ object Snapshots {
     override def initialValue(): Long = 0L
   }
 
-  /** Build the MISSING (file, column) bloom sidecars. One small Spark job
-    * per new file (driver-pooled 8-wide, the footer-read discipline) puts
-    * every value of the column — rendered through `CAST(col AS STRING)`,
-    * the same string domain the manifest stats and pushed-filter values
-    * use — into a `BloomFilter` sized for the file's rows at 1% fpp,
-    * capped at 1 MiB of bits per sidecar (a bigger file degrades fpp
-    * instead of bloating metadata). Written temp + rename; a crash leaves
-    * at worst a missing sidecar, which reads as "cannot exclude".
+  /** Build the MISSING per-file sidecars of `rels` in one pass per file:
+    * bloom filters and NDV registers over `bloomCols`, exact SUMs over
+    * `statsCols`. Every value reaches the blooms and registers through
+    * `CAST(col AS STRING)`, the same string domain the manifest stats and
+    * pushed-filter values use. A bloom is sized for the file's footer row
+    * count at 1% fpp, capped at 1 MiB of bits per sidecar (a bigger file
+    * degrades fpp instead of bloating metadata). Files at or under
+    * [[sidecarDriverBuildMaxBytes]] are read once on the driver (zero
+    * Spark jobs); larger files batch into one distributed job per ≤64-file
+    * chunk. Both paths fold rows through [[SidecarKernel.fold]], so their
+    * bytes are identical by construction. Written temp + rename; a crash
+    * leaves at worst a missing sidecar, which reads as "cannot exclude" /
+    * "scan instead of fold".
     */
-  private def buildBloomSidecars(
+  private def buildSidecars(
       spark: SparkSession,
       root: String,
       rels: Seq[String],
       bloomCols: Seq[String],
       backfill: Boolean = false,
       statsCols: Seq[String] = Seq.empty): Unit = {
-    import org.apache.spark.util.sketch.BloomFilter
     val rootPath = new Path(root)
     val fs = fsOf(spark, rootPath)
     fs.mkdirs(new Path(manifestDir(rootPath), "bloom"))
@@ -2548,7 +2552,7 @@ object Snapshots {
     } yield (rel, c, needBloom, needNdv)
     // SUM sidecars ride the same pass under the same upgrade gate: new
     // files (missing a bloom) — or an explicit backfill — get their
-    // integral stats columns' exact sums recorded while the data is
+    // summable stats columns' exact sums recorded while the data is
     // being read anyway; pre-feature files are never re-read by a
     // routine commit
     // a bloom-less stats table has no "missing bloom" signal for newness
@@ -2565,192 +2569,176 @@ object Snapshots {
           fs.exists(sumDir) && fs.listStatusIterator(sumDir).hasNext
         if (disciplineOn) rels.distinct else Seq.empty
       } else missing.collect { case (r, _, nb, _) if nb => r }.distinct
-    buildSumSidecars(spark, root, freshRels, statsCols, upgradeNa = backfill)
-    if (missing.isEmpty) return
-    // SMALL files build their sidecars driver-side in one streamed pass
-    // (guide §1.2: a per-(file, column) Spark build is pure fixed overhead
-    // — plan, codegen, 1-task stages — measured ~18 s across the 8
-    // heaviest bench queries at sf0.1 while the data read is
-    // microseconds). The outputs are BYTE-IDENTICAL: same CAST-to-string
-    // domain (the live Cast expression), same md5 register arithmetic,
-    // same BloomFilter sizing and putBinary insertion the distributed
-    // aggregate uses (BinaryUpdater). Files above the threshold batch
-    // into ONE distributed pass per commit (guide §2.4): at 100 TB a
-    // commit of K files × C columns must cost O(1) job launches, not K·C
-    // sequentialized ones — the pass shuffles only the sketches (map-side
-    // partials), and tasks write the sidecars directly.
-    val thr = sidecarDriverMaxBytes(spark)
-    val lenOf: Map[String, Long] = missing.map(_._1).distinct.map { rel =>
-      rel -> (try fs.getFileStatus(resolve(spark, root, rel)).getLen
-              catch { case _: java.io.IOException => Long.MaxValue })
-    }.toMap
-    val (small, large) = missing.partition { case (rel, _, _, _) => lenOf(rel) <= thr }
-    parEach(small) { case (rel, c, needBloom, needNdv) =>
+    // `backfill` also upgrades: a sum sidecar recorded `na` under an OLDER
+    // summability rule (pre-DECIMAL builds wrote `na` once per decimal
+    // column, permanently) counts as missing and is recomputed under the
+    // current rule — without it the documented backfill upgrade path can
+    // never enable DECIMAL SUM pushdown on a pre-feature table
+    val sumWant: Map[String, Seq[String]] =
+      if (statsCols.isEmpty) Map.empty
+      else {
+        fs.mkdirs(new Path(manifestDir(rootPath), "sum"))
+        freshRels
+          .map(rel =>
+            rel -> statsCols.filter(c =>
+              !fs.exists(sumPath(rootPath, rel, c)) ||
+                (backfill && fileSumOf(spark, root, rel, c).isEmpty)))
+          .filter(_._2.nonEmpty)
+          .toMap
+      }
+    val bloomWant = missing.groupBy(_._1)
+    val work = (missing.map(_._1) ++ freshRels.filter(sumWant.contains)).distinct
+    if (work.isEmpty) return
+    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val driverMaxBytes = sidecarDriverBuildMaxBytes.value
+    val large = new java.util.concurrent.ConcurrentLinkedQueue[(Path, SidecarKernel.FileSpec)]()
+    parEach(work) { rel =>
       val p = resolve(spark, root, rel)
-      // schema from the FOOTER (driver metadata): DataFrameReader schema
-      // inference launches one Spark job per call — pure fixed overhead
-      val schema = footerSchemaOf(spark, p)
-      require(
-        schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-        s"bloom column '$c' is not a physical column of $rel — hive partition values " +
-          "prune exactly from the path; blooms are for data columns")
-      val field = schema.fields.find(_.name.equalsIgnoreCase(c)).get
-      buildOneDriverSide(spark, rootPath, fs, p, rel, c, field, needBloom, needNdv)
+      // schema, row count and length from the FOOTER (driver metadata):
+      // DataFrameReader schema inference launches one Spark job per call
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val (schema, rows) =
+        try (
+          org.apache.spark.sql.graft.BridgeSchema
+            .footerSchema(spark, r.getFooter.getFileMetaData.getSchema),
+          r.getRecordCount)
+        finally r.close()
+      val spec = fileSpec(
+        rootPath, rel, schema, rows, bloomWant.getOrElse(rel, Nil), sumWant.getOrElse(rel, Nil), backfill)
+      if (spec.schema.nonEmpty && in.getLength > driverMaxBytes) large.add((p, spec))
+      else {
+        val sketches =
+          if (spec.schema.isEmpty) SidecarKernel.fold(spec, tz, Iterator.empty)
+          else {
+            val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(p, spec.schema, hconf)
+            try SidecarKernel.fold(spec, tz, Iterator.continually(reader.read()).takeWhile(_ != null))
+            finally reader.close()
+          }
+        sidecarsWritten(root, spec, SidecarKernel.write(hconf, spec, sketches))
+      }
     }
-    if (large.nonEmpty) buildSidecarsBatched(spark, root, rootPath, fs, large)
+    if (!large.isEmpty) buildSidecarsDistributed(spark, root, tz, large.asScala.toSeq)
   }
 
-  /** ONE distributed pass for a commit batch's large-file bloom/NDV
-    * sidecars — the §2.4 shape: per file, a stacked projection renders
-    * every needed column through the SAME `CAST(col AS STRING)` domain
-    * the per-file build used; per partition, sketches accumulate locally
-    * (BloomFilter.putBinary + [[ndvUpdate]] — identical bytes by
-    * construction); only the SKETCHES shuffle (reduceByKey merge:
-    * bitset OR / register max, both order-independent); the merged
-    * (file, column) sketches are written to their sidecar paths by the
-    * reduce tasks themselves, NDV strictly before bloom (the crash-order
-    * invariant — see the commit gate in [[buildBloomSidecars]]).
-    * Event-log shape: O(1) jobs per commit batch (one per ≤64-file chunk)
-    * instead of 3 jobs per (file, column). Files whose key never reaches
-    * the reduce (zero rows, or an entirely-NULL column) get their
-    * explicit empty sketches written driver-side afterwards — the same
-    * bytes the per-file build's empty-filter branch produced.
+  /** Size ceiling of the driver-side sidecar build: at or under 32 MiB a
+    * file's one streamed read costs microseconds to milliseconds, while a
+    * Spark job per commit batch is pure fixed overhead (plan, codegen,
+    * 1-task stages). At 100 TB the large files always take the
+    * distributed path. A constant; specs lower it with `withValue(0L)` to
+    * force the distributed path.
     */
-  private def buildSidecarsBatched(
-      spark: SparkSession,
-      root: String,
+  private[sources] val sidecarDriverBuildMaxBytes =
+    new scala.util.DynamicVariable[Long](32L * 1024 * 1024)
+
+  /** What one file still needs, resolved on the driver: the read schema
+    * (the union of its missing columns, physical names) and, per read
+    * column, the bloom/NDV/SUM sidecar targets. Stats columns the file
+    * cannot sum — non-summable types, or hive path columns that are not
+    * physical — record the `na` sentinel without a read. A bloom column
+    * must be physical: hive partition values prune exactly from the path.
+    */
+  private def fileSpec(
       rootPath: Path,
-      fs: FileSystem,
-      missing: Seq[(String, String, Boolean, Boolean)]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.util.sketch.BloomFilter
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // driver-side metadata per rel: physical schema (column presence) and
-    // footer row count (bloom sizing — never a count() job)
-    val metas: Map[String, (Path, org.apache.spark.sql.types.StructType, Long)] =
-      missing.map(_._1).distinct.map { rel =>
-        val p = resolve(spark, root, rel)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-        val (schema, n) =
-          try (
-            org.apache.spark.sql.graft.BridgeSchema
-              .footerSchema(spark, r.getFooter.getFileMetaData.getSchema),
-            r.getRecordCount)
-          finally r.close()
-        rel -> ((p, schema, n))
-      }.toMap
-    missing.foreach { case (rel, c, _, _) =>
+      rel: String,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Long,
+      blooms: Seq[(String, String, Boolean, Boolean)],
+      sums: Seq[String],
+      replaceSums: Boolean): SidecarKernel.FileSpec = {
+    def fieldOf(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
+    blooms.foreach { case (_, c, _, _) =>
       require(
-        metas(rel)._2.fieldNames.exists(_.equalsIgnoreCase(c)),
+        fieldOf(c).isDefined,
         s"bloom column '$c' is not a physical column of $rel — hive partition values " +
           "prune exactly from the path; blooms are for data columns")
     }
-    // (rel, col) -> (needBloom, needNdv, expectedItems, numBits): the same
-    // footer-count sizing the per-file build used
-    val sizing: Map[(String, String), (Boolean, Boolean, Long, Long)] =
-      missing.map { case (rel, c, nb, nn) =>
-        val n = math.max(metas(rel)._3, 1L)
-        val bits = math.min(BloomFilter.optimalNumOfBits(n, 0.01), 8L * 1024 * 1024)
-        (rel, c) -> ((nb, nn, n, bits))
-      }.toMap
-    // target sidecar paths resolved DRIVER-side and shipped by broadcast —
-    // task closures must not call back into this object (module capture)
-    val targets: Map[(String, String), (String, String)] =
-      missing.map { case (rel, c, _, _) =>
-        (rel, c) -> ((ndvPath(rootPath, rel, c).toString, bloomPath(rootPath, rel, c).toString))
-      }.toMap
-    val serConf = org.apache.spark.sql.graft.Bridge.serializableConf(
-      org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark))
-    // chunk the per-file scans so one job's plan stays bounded — job
-    // count is O(files/64) per commit, not O(files × columns)
-    missing.groupBy(_._1).toSeq.sortBy(_._1).grouped(64).foreach { chunk =>
-      val frames = chunk.map { case (rel, ms) =>
-        val schema = metas(rel)._2
-        val fields = ms.map { case (_, c, _, _) =>
-          c -> schema.fields.find(_.name.equalsIgnoreCase(c)).get
-        }
-        val parts = fields.map { case (c, f) =>
-          val lbl = c.replace("\\", "\\\\").replace("'", "\\'")
-          s"'$lbl', CAST(`${f.name.replace("`", "``")}` AS STRING)"
-        }
+    val (summable, na) = sums.partition(c => fieldOf(c).exists(f => isSummable(f.dataType)))
+    val read = (blooms.map(b => fieldOf(b._2).get) ++ summable.map(c => fieldOf(c).get))
+      .distinctBy(_.name)
+      .map(_.copy(nullable = true))
+    def colAt(cols: Seq[String]): Array[String] =
+      read.map(f => cols.find(f.name.equalsIgnoreCase).orNull).toArray
+    def targets(cols: Array[String], path: (Path, String, String) => Path): Array[String] =
+      cols.map(c => if (c == null) null else path(rootPath, rel, c).toString)
+    val sumCols = colAt(summable)
+    SidecarKernel.FileSpec(
+      rel = rel,
+      schema = org.apache.spark.sql.types.StructType(read),
+      rows = rows,
+      bloom = targets(colAt(blooms.collect { case (_, c, true, _) => c }), bloomPath),
+      ndv = targets(colAt(blooms.collect { case (_, c, _, true) => c }), ndvPath),
+      sumCols = sumCols,
+      sum = targets(sumCols, sumPath),
+      naSums = na.map(c => c -> sumPath(rootPath, rel, c).toString),
+      replaceSums = replaceSums)
+  }
+
+  /** The driver-side half of every sidecar write: drop the read caches'
+    * entries for the sidecars that just landed. A cached absent NDV or
+    * SUM, or a cached `na` decode, is now stale; and a real sum means the
+    * table MAY be complete for its column — the next planning pass
+    * re-probes (an `na` changes nothing).
+    */
+  private def sidecarsWritten(
+      root: String,
+      spec: SidecarKernel.FileSpec,
+      sums: Seq[(String, String, String)]): Unit = {
+    spec.ndv.foreach(t => if (t != null) ndvMissCache.remove(t))
+    sums.foreach { case (c, target, content) =>
+      sumMissCache.remove(target)
+      sumCache.remove(target)
+      if (content != SumNa) sumIncompleteCache.remove(sumMemoKey(root, c))
+    }
+  }
+
+  /** ONE distributed job per ≤64-file chunk of large files: each file's
+    * scan splits fold their rows into per-file partial sketches (the
+    * kernel the driver path runs), only the SKETCHES shuffle (bitset OR,
+    * register max, SUM and count add — all order-independent), and the
+    * reduce tasks write the merged sidecars themselves. Files whose key
+    * never reaches the reduce (zero rows) get their empty sketches — the
+    * explicit empty filter, zero registers, sum `0` — written driver-side
+    * afterwards. Event-log shape: O(1) jobs per commit batch.
+    */
+  private def buildSidecarsDistributed(
+      spark: SparkSession,
+      root: String,
+      tz: String,
+      files: Seq[(Path, SidecarKernel.FileSpec)]): Unit = {
+    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
+    val serConf = org.apache.spark.sql.graft.Bridge.serializableConf(hconf)
+    files.sortBy(_._2.rel).grouped(64).foreach { chunk =>
+      val specs = chunk.map { case (_, spec) => spec.rel -> spec }.toMap
+      val partials = chunk.map { case (p, spec) =>
         spark.read
           // explicit pruned schema: no per-call inference job
-          .schema(org.apache.spark.sql.types.StructType(fields.map(_._2).distinct))
-          .parquet(metas(rel)._1.toString)
-          .selectExpr(s"stack(${ms.size}, ${parts.mkString(", ")}) AS (c, v)")
-          .select(lit(rel).as("r"), col("c"), col("v"))
-          .where(col("v").isNotNull)
+          .schema(spec.schema)
+          .parquet(p.toString)
+          .queryExecution
+          .toRdd
+          .mapPartitions(rows =>
+            if (rows.hasNext) Iterator(spec.rel -> SidecarKernel.fold(spec, tz, rows))
+            else Iterator.empty)
       }
-      val bSizing = spark.sparkContext.broadcast(sizing)
-      val bTargets = spark.sparkContext.broadcast(targets)
-      val nReg = NdvRegisters
-      val written = frames
-        .reduce(_ unionByName _)
-        .rdd
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val acc = scala.collection.mutable.HashMap
-            .empty[(String, String), (BloomFilter, Array[Byte])]
-          it.foreach { row =>
-            val key = (row.getString(0), row.getString(1))
-            val (nb, nn, n, bits) = bSizing.value(key)
-            val (bf, reg) = acc.getOrElseUpdate(
-              key,
-              (
-                if (nb) BloomFilter.create(n, bits) else null,
-                if (nn) new Array[Byte](nReg) else null))
-            val bytes = row.getString(2).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            if (bf != null) bf.putBinary(bytes)
-            if (reg != null) SidecarKernel.ndvUpdate(md, bytes, reg)
+      // session confs reach the tasks: the kernel's CAST runs there
+      val written = org.apache.spark.sql.graft.Bridge.withSqlConfPropagated(spark) {
+        spark.sparkContext
+          .union(partials)
+          .reduceByKey(SidecarKernel.merge _)
+          .map { case (rel, sketches) =>
+            val conf = org.apache.spark.sql.graft.Bridge.confOf(serConf)
+            rel -> SidecarKernel.write(conf, specs(rel), sketches)
           }
-          acc.iterator.map { case (k, (bf, reg)) =>
-            k -> ((if (bf == null) null else SidecarKernel.bloomToBytes(bf), reg))
-          }
-        }
-        .reduceByKey { (x, y) =>
-          val ((b1, r1), (b2, r2)) = (x, y)
-          val b =
-            if (b1 == null) b2
-            else if (b2 == null) b1
-            else {
-              val m = BloomFilter.readFrom(new java.io.ByteArrayInputStream(b1))
-              m.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(b2)))
-              SidecarKernel.bloomToBytes(m)
-            }
-          val r =
-            if (r1 == null) r2
-            else if (r2 == null) r1
-            else {
-              var i = 0
-              while (i < r1.length) { if (r2(i) > r1(i)) r1(i) = r2(i); i += 1 }
-              r1
-            }
-          (b, r)
-        }
-        .map { kv =>
-          val ((rel, c), (bloomBytes, reg)) = kv
-          val (ndvT, bloomT) = bTargets.value((rel, c))
-          val tfs = new Path(ndvT).getFileSystem(
-            org.apache.spark.sql.graft.Bridge.confOf(serConf))
-          // NDV strictly BEFORE bloom — the crash-order invariant
-          if (reg != null) SidecarKernel.put(tfs, ndvT, reg)
-          if (bloomBytes != null) SidecarKernel.put(tfs, bloomT, bloomBytes)
-          (rel, c)
-        }
-        .collect()
-        .toSet
-      // keys the pass never saw — zero-row files or entirely-NULL columns:
-      // the explicit empty filter / zero registers, exactly the per-file
-      // build's empty branch
-      chunk.flatMap(_._2).foreach { case (rel, c, nb, nn) =>
-        if (!written((rel, c))) {
-          val (_, _, n, bits) = sizing((rel, c))
-          val (ndvT, bloomT) = targets((rel, c))
-          if (nn) SidecarKernel.put(fs, ndvT, new Array[Byte](NdvRegisters))
-          if (nb) SidecarKernel.put(fs, bloomT, SidecarKernel.bloomToBytes(BloomFilter.create(n, bits)))
-        }
-        if (nn) ndvMissCache.remove(ndvPath(rootPath, rel, c).toString)
+          .collect()
+          .toMap
+      }
+      chunk.foreach { case (_, spec) =>
+        val sums = written.getOrElse(
+          spec.rel,
+          SidecarKernel.write(hconf, spec, SidecarKernel.fold(spec, tz, Iterator.empty)))
+        sidecarsWritten(root, spec, sums)
       }
     }
   }
@@ -2769,118 +2757,183 @@ object Snapshots {
     finally r.close()
   }
 
-  /** File-size ceiling under which a commit builds a file's bloom/NDV
-    * sidecars driver-side (one streamed parquet read, zero Spark jobs)
-    * instead of one distributed job per (file, column). Parameterised:
-    * production tables with large files always take the distributed path.
-    */
-  private def sidecarDriverMaxBytes(spark: SparkSession): Long =
-    spark.conf
-      .getOption("spark.graft.sidecar.driverBuildMaxBytes")
-      .map(v =>
-        // a malformed value must fail naming the conf key, not throw a bare
-        // NumberFormatException from deep inside every commit (ADVICE r18)
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"spark.graft.sidecar.driverBuildMaxBytes must be a byte count, got '$v'")
-        })
-      .getOrElse(32L * 1024 * 1024)
-
-  /** The driver-side twin of the distributed sidecar build — used for
-    * small files only (see [[sidecarDriverMaxBytes]]). Produces
-    * byte-identical sidecars: values stream through the SAME
-    * `Cast(col, string)` expression the distributed pass evaluates, the
-    * NDV registers replicate [[ndvRegistersOf]]'s md5 arithmetic exactly,
-    * and the bloom uses the same footer-count sizing and the same
-    * `putBinary(utf8)` insertion `bloom_filter_agg`'s BinaryUpdater
-    * performs (bitset OR-merge makes insertion order irrelevant).
-    * Crash-order invariant preserved: NDV lands before the bloom.
-    */
-  private def buildOneDriverSide(
-      spark: SparkSession,
-      rootPath: Path,
-      fs: FileSystem,
-      p: Path,
-      rel: String,
-      c: String,
-      field: org.apache.spark.sql.types.StructField,
-      needBloom: Boolean,
-      needNdv: Boolean): Unit = {
-    val dt = field.dataType
-    import org.apache.spark.util.sketch.BloomFilter
-    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    // exact footer row count — the same number the distributed path sizes
-    // the bloom with
-    val n = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-      try r.getRecordCount
-      finally r.close()
-    }
-    val bf: org.apache.spark.util.sketch.BloomFilter =
-      if (needBloom) {
-        val optimal = BloomFilter.optimalNumOfBits(math.max(n, 1L), 0.01)
-        BloomFilter.create(math.max(n, 1L), math.min(optimal, 8L * 1024 * 1024))
-      } else null
-    val reg = if (needNdv) new Array[Byte](NdvRegisters) else null
-    val cast = org.apache.spark.sql.catalyst.expressions.Cast(
-      org.apache.spark.sql.catalyst.expressions.BoundReference(0, dt, nullable = true),
-      org.apache.spark.sql.types.StringType,
-      Some(spark.conf.get("spark.sql.session.timeZone")))
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-      p,
-      org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField(field.name, dt, nullable = true))),
-      hconf)
-    try {
-      var row = reader.read()
-      while (row != null) {
-        val v = cast.eval(row)
-        if (v != null) {
-          val bytes = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-          if (needBloom) bf.putBinary(bytes)
-          if (needNdv) SidecarKernel.ndvUpdate(md, bytes, reg)
-        }
-        row = reader.read()
-      }
-    } finally reader.close()
-    if (needNdv) {
-      val target = ndvPath(rootPath, rel, c)
-      val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try out.write(reg)
-      finally out.close()
-      if (!fs.rename(tmp, target)) fs.delete(tmp, false) // benign race: identical content
-      ndvMissCache.remove(target.toString)
-    }
-    if (needBloom) {
-      val target = bloomPath(rootPath, rel, c)
-      val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try bf.writeTo(out)
-      finally out.close()
-      if (!fs.rename(tmp, target)) fs.delete(tmp, false)
-    }
-  }
-
-  /** Executor-safe sketch kernel: everything the batched build's task
+  /** Executor-safe sidecar kernel: everything the distributed build's task
     * closures call lives HERE (a sibling object) and not on [[Snapshots]]
     * itself — a lambda calling a method of its own enclosing object
     * captures the (non-serializable) module instance, while calls into a
-    * separate object resolve statically at execution time.
+    * separate object resolve statically at execution time. The driver
+    * path calls the same [[fold]] and [[write]], so the two paths can
+    * never silently diverge (byte parity law in SnapshotsSpec).
     */
   private[sources] object SidecarKernel {
+    import java.math.BigInteger
+
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    import org.apache.spark.util.sketch.BloomFilter
+
+    /** One file's pending sidecars, resolved on the driver. Per column of
+      * the read `schema`: the bloom, NDV and SUM target paths (null where
+      * that sidecar exists already), and `sumCols` the stats column each
+      * SUM records. `naSums` are (column, target) pairs recorded `na`
+      * without a read; `replaceSums` lets a SUM replace an existing
+      * (stale `na`) sidecar — the explicit backfill's upgrade.
+      */
+    final case class FileSpec(
+        rel: String,
+        schema: StructType,
+        rows: Long,
+        bloom: Array[String],
+        ndv: Array[String],
+        sumCols: Array[String],
+        sum: Array[String],
+        naSums: Seq[(String, String)],
+        replaceSums: Boolean)
+
+    /** One file's sketches, partial or whole: per read column, a bloom
+      * and NDV registers (null where not needed), and an exact unscaled
+      * SUM with its non-null count.
+      */
+    final class Sketches(
+        val blooms: Array[BloomFilter],
+        val regs: Array[Array[Byte]],
+        val sums: Array[BigInteger],
+        val counts: Array[Long])
+        extends Serializable
+
+    /** Fold `rows` (laid out as `spec.schema`) into fresh sketches. Bloom
+      * and NDV see each non-null value through the live
+      * `Cast(col, StringType)` and `putBinary(utf8)`, the insertion
+      * `bloom_filter_agg`'s BinaryUpdater performs; the bloom is sized for
+      * the footer row count at 1% fpp, capped at 8 Mi bits.
+      */
+    def fold(spec: FileSpec, tz: String, rows: Iterator[InternalRow]): Sketches = {
+      val n = math.max(spec.rows, 1L)
+      val bits = math.min(BloomFilter.optimalNumOfBits(n, 0.01), 8L * 1024 * 1024)
+      val k = spec.schema.length
+      val out = new Sketches(
+        spec.bloom.map(t => if (t == null) null else BloomFilter.create(n, bits)),
+        spec.ndv.map(t => if (t == null) null else new Array[Byte](NdvRegisters)),
+        Array.fill(k)(BigInteger.ZERO),
+        new Array[Long](k))
+      val casts = Array.tabulate(k) { i =>
+        if (spec.bloom(i) == null && spec.ndv(i) == null) null
+        else
+          org.apache.spark.sql.catalyst.expressions.Cast(
+            org.apache.spark.sql.catalyst.expressions
+              .BoundReference(i, spec.schema(i).dataType, nullable = true),
+            StringType,
+            Some(tz))
+      }
+      val md = java.security.MessageDigest.getInstance("MD5")
+      rows.foreach { row =>
+        var i = 0
+        while (i < k) {
+          if (!row.isNullAt(i)) {
+            if (casts(i) != null) {
+              val bytes =
+                casts(i).eval(row).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
+              if (out.blooms(i) != null) out.blooms(i).putBinary(bytes)
+              if (out.regs(i) != null) ndvUpdate(md, bytes, out.regs(i))
+            }
+            if (spec.sum(i) != null) {
+              out.counts(i) += 1L
+              out.sums(i) = out.sums(i).add(unscaled(row, i, spec.schema(i).dataType))
+            }
+          }
+          i += 1
+        }
+      }
+      out
+    }
+
+    /** A summable value in its exact unscaled integer domain. */
+    private def unscaled(row: InternalRow, i: Int, dt: DataType): BigInteger = dt match {
+      case d: DecimalType => row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.unscaledValue()
+      case LongType => BigInteger.valueOf(row.getLong(i))
+      case IntegerType => BigInteger.valueOf(row.getInt(i).toLong)
+      case ShortType => BigInteger.valueOf(row.getShort(i).toLong)
+      case _ => BigInteger.valueOf(row.getByte(i).toLong)
+    }
+
+    /** Merge two partials of one file (into `a`): bitset OR, register
+      * max, SUM and count add — associative and commutative, so split
+      * order never shows in the bytes.
+      */
+    def merge(a: Sketches, b: Sketches): Sketches = {
+      var i = 0
+      while (i < a.counts.length) {
+        if (a.blooms(i) != null) a.blooms(i).mergeInPlace(b.blooms(i))
+        if (a.regs(i) != null) {
+          val (r1, r2) = (a.regs(i), b.regs(i))
+          var j = 0
+          while (j < r1.length) { if (r2(j) > r1(j)) r1(j) = r2(j); j += 1 }
+        }
+        a.sums(i) = a.sums(i).add(b.sums(i))
+        a.counts(i) += b.counts(i)
+        i += 1
+      }
+      a
+    }
+
+    /** Registers per NDV sketch — see [[Snapshots.NdvRegisters]]. */
+    val NdvRegisters = 256
+
+    /** The SUM sidecar sentinel for "no exact sum: scan instead of fold". */
+    val SumNa = "na"
+
+    private val Max38 = BigInteger.TEN.pow(38)
+
+    /** Write a file's finished sketches, NDV and SUM strictly BEFORE the
+      * bloom: the bloom is the "file is new" marker, so a crash between
+      * them leaves the bloom missing and the next commit still treats the
+      * file as new, building whatever it lacks. A SUM
+      * records `0` when the file has no non-null value (the manifest null
+      * count disambiguates) and `na` when |sum| ≥ 10^38, past
+      * Decimal(38, s) — fall back to scanning rather than fold a value no
+      * SUM result type can hold. Returns the (column, target, content) of
+      * every SUM written.
+      */
+    def write(
+        conf: org.apache.hadoop.conf.Configuration,
+        spec: FileSpec,
+        sk: Sketches): Seq[(String, String, String)] = {
+      def fs(t: String) = new Path(t).getFileSystem(conf)
+      spec.ndv.indices.foreach { i =>
+        if (spec.ndv(i) != null) put(fs(spec.ndv(i)), spec.ndv(i), sk.regs(i))
+      }
+      val sums = spec.naSums.map { case (c, t) => (c, t, SumNa) } ++
+        spec.sum.indices.filter(spec.sum(_) != null).map { i =>
+          val content =
+            if (sk.counts(i) == 0L) "0"
+            else if (sk.sums(i).abs.compareTo(Max38) >= 0) SumNa
+            else sk.sums(i).toString
+          (spec.sumCols(i), spec.sum(i), content)
+        }
+      sums.foreach { case (_, t, content) =>
+        put(fs(t), t, content.getBytes("UTF-8"), replace = spec.replaceSums)
+      }
+      spec.bloom.indices.foreach { i =>
+        if (spec.bloom(i) != null) {
+          val baos = new java.io.ByteArrayOutputStream()
+          sk.blooms(i).writeTo(baos)
+          put(fs(spec.bloom(i)), spec.bloom(i), baos.toByteArray)
+        }
+      }
+      sums
+    }
 
     /** Fold one CAST-to-string value into a 256-register NDV sketch — the
-      * first 15 hex chars of the md5: 13 for rho, 2 for the bucket,
-      * exactly [[ndvRegistersOf]]'s substring arithmetic. Shared by the
-      * driver-side fast path and the batched executor-side build so the
-      * two can never silently diverge (byte parity law in SnapshotsSpec).
+      * portable HyperLogLog behind `approxCountDistinct`. The DuckDB
+      * oracle recomputes the merged estimate bit-for-bit (q237), so this
+      * arithmetic is a contract: take the md5 hex of the value; its first
+      * 13 hex digits with leading zeros stripped give rho = 4 × (zero
+      * digits) + (4 − bit length of the first non-zero digit) + 1, or 53
+      * when all 13 are zero; hex digits 14–15 give the bucket; a register
+      * keeps its bucket's max rho (≤ 53 fits a byte; absent buckets stay
+      * 0). Nulls never reach it — `count(DISTINCT c)`'s own rule.
       */
-    def ndvUpdate(
+    private def ndvUpdate(
         md: java.security.MessageDigest,
         bytes: Array[Byte],
         reg: Array[Byte]): Unit = {
@@ -2915,34 +2968,35 @@ object Snapshots {
 
     private val NdvHexDigits = "0123456789abcdef".toCharArray
 
-    /** The on-disk bytes of a bloom filter — `writeTo`'s stream format,
-      * exactly what the per-file build wrote to its sidecar.
+    /** Atomic sidecar write: temp + rename. A lost rename race is benign
+      * (identical content — sketches are deterministic per (file, col));
+      * with `replace` (the backfill's stale-`na` upgrade) the existing
+      * target is replaced instead.
       */
-    def bloomToBytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
-      val baos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(baos)
-      baos.toByteArray
-    }
-
-    /** Atomic sidecar write: temp + rename; a lost rename race is benign
-      * (identical content — sketches are deterministic per (file, col)).
-      */
-    def put(tfs: FileSystem, targetStr: String, bytes: Array[Byte]): Unit = {
+    private def put(tfs: FileSystem, targetStr: String, bytes: Array[Byte], replace: Boolean = false): Unit = {
       val target = new Path(targetStr)
       val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID().toString}")
       val out = tfs.create(tmp, true)
       try out.write(bytes)
       finally out.close()
-      if (!tfs.rename(tmp, target)) tfs.delete(tmp, false)
+      if (!tfs.rename(tmp, target)) {
+        if (replace) {
+          tfs.delete(target, false)
+          if (!tfs.rename(tmp, target)) tfs.delete(tmp, false)
+        } else tfs.delete(tmp, false)
+      }
     }
   }
 
   /** Build the MISSING NDV register AND SUM sidecars for every pinned
     * file of the latest manifest — the explicit upgrade pass for tables
-    * whose bloom sidecars predate those features (a routine commit
-    * deliberately skips them; see [[buildBloomSidecars]]). One bounded
-    * data-reading pass over exactly the files that lack a sidecar;
-    * returns how many NDV (file, column) sidecars were built.
+    * whose sidecars predate those features (a routine commit
+    * deliberately skips them; see [[buildSidecars]]). It also re-records
+    * stale `na` SUMs written under an older, narrower summability rule,
+    * and it is how a bloom-less stats table opts into SUM sidecars (the
+    * only way its pre-feature files ever get manifest-only SUM/AVG). One
+    * bounded data-reading pass over exactly the files that lack a
+    * sidecar; returns how many NDV (file, column) sidecars were built.
     * SQL: `CALL cat.ndv_backfill`.
     */
   def backfillNdv(spark: SparkSession, root: String): Long =
@@ -2950,15 +3004,7 @@ object Snapshots {
       val version = latestVersion(spark, root)
       if (version == 0L) return 0L
       val view = manifestView(spark, root, version)
-      if (view.bloomCols.isEmpty) {
-        // no blooms means no NDV registers — but a bloom-less stats table
-        // still deserves the SUM upgrade path (the backfill is the only
-        // way pre-feature files ever get manifest-only SUM/AVG — and it
-        // also re-records stale `na` sidecars written under an older,
-        // narrower summability rule)
-        buildSumSidecars(spark, root, view.rels, view.statsCols, upgradeNa = true)
-        return 0L
-      }
+      if (view.bloomCols.isEmpty && view.statsCols.isEmpty) return 0L
       val rootPath = new Path(root)
       val fs = fsOf(spark, rootPath)
       val missing = (for {
@@ -2966,7 +3012,7 @@ object Snapshots {
         c <- view.bloomCols
         if !fs.exists(ndvPath(rootPath, rel, c))
       } yield (rel, c)).size.toLong
-      buildBloomSidecars(
+      buildSidecars(
         spark, root, view.rels, view.bloomCols, backfill = true, statsCols = view.statsCols)
       missing
     }
@@ -2992,7 +3038,7 @@ object Snapshots {
   private def sumPath(root: Path, rel: String, colName: String): Path =
     new Path(new Path(manifestDir(root), "sum"), s"${hex(rel)}.${hex(colName)}")
 
-  private val SumNa = "na"
+  private val SumNa = SidecarKernel.SumNa
 
   private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
     case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
@@ -3092,189 +3138,6 @@ object Snapshots {
     } catch { case _: Exception => None }
   }
 
-  /** Build the missing SUM sidecars for `rels` (already restricted by the
-    * caller to genuinely new — or explicitly backfilled — files): one
-    * pooled job per file covering ALL its missing columns, exact in the
-    * decimal domain, `na` for columns the file cannot sum (non-integral,
-    * or hive path columns that aren't physical). Temp + rename like every
-    * sidecar; a crash leaves at worst a missing sidecar (= fall back).
-    */
-  private def buildSumSidecars(
-      spark: SparkSession,
-      root: String,
-      rels: Seq[String],
-      statsCols: Seq[String],
-      upgradeNa: Boolean = false): Unit = {
-    if (statsCols.isEmpty) return
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    fs.mkdirs(new Path(manifestDir(rootPath), "sum"))
-    // `upgradeNa` (the explicit backfill only): a sidecar recorded `na`
-    // under an OLDER summability rule (pre-DECIMAL builds wrote `na` once
-    // per decimal column, permanently) counts as missing and is
-    // recomputed under the current rule — without it the documented
-    // backfill upgrade path can never enable DECIMAL SUM pushdown on a
-    // pre-feature table
-    val work = rels
-      .map(rel =>
-        rel -> statsCols.filter(c =>
-          !fs.exists(sumPath(rootPath, rel, c)) ||
-            (upgradeNa && fileSumOf(spark, root, rel, c).isEmpty)))
-      .filter(_._2.nonEmpty)
-    if (work.isEmpty) return
-    def writeOne(rel: String, c: String, content: String): Unit = {
-      val target = sumPath(rootPath, rel, c)
-      val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try out.write(content.getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, target)) {
-        // dst exists: identical content on the fresh-file path (benign
-        // race), a stale `na` on the upgrade path — replace it there
-        if (upgradeNa) {
-          fs.delete(target, false)
-          if (!fs.rename(tmp, target)) fs.delete(tmp, false)
-        } else fs.delete(tmp, false)
-      }
-      sumMissCache.remove(target.toString)
-      sumCache.remove(target.toString) // a cached `na` decode is now stale
-      // a real sum landed: the table MAY be complete for this column now —
-      // let the next planning pass re-probe (an `na` changes nothing)
-      if (content != SumNa) sumIncompleteCache.remove(sumMemoKey(root, c))
-    }
-    // large files batch into one Spark job per (columns, scales) group —
-    // the §2.4 single-pass discipline; collected during the driver pool's
-    // per-file pass, processed after it
-    val largeSums = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Path, Seq[String], Seq[org.apache.spark.sql.types.StructField])]()
-    parEach(work) { case (rel, want) =>
-      val p = resolve(spark, root, rel)
-      // footer schema, not DataFrameReader inference — see footerSchemaOf
-      val schema = footerSchemaOf(spark, p)
-      def fieldOf(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
-      val (summable, na) = want.partition(c => fieldOf(c).exists(f => isSummable(f.dataType)))
-      na.foreach(c => writeOne(rel, c, SumNa))
-      // small files sum driver-side in one streamed pass (the bloom/NDV
-      // fast-path discipline, [[buildOneDriverSide]]): BigInteger
-      // accumulation in the column's unscaled domain is exactly the
-      // Decimal(38, scale) fold, overflow guard included — a per-file
-      // aggregate job is pure fixed overhead at this size
-      val fileLen =
-        try fs.getFileStatus(p).getLen
-        catch { case _: java.io.IOException => Long.MaxValue }
-      if (summable.nonEmpty && fileLen <= sidecarDriverMaxBytes(spark)) {
-        val fields = summable.map(c => fieldOf(c).get)
-        val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-        val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-          p,
-          org.apache.spark.sql.types.StructType(
-            fields.map(f =>
-              org.apache.spark.sql.types.StructField(f.name, f.dataType, nullable = true))),
-          hconf)
-        val sums = Array.fill(fields.size)(java.math.BigInteger.ZERO)
-        val counts = new Array[Long](fields.size)
-        try {
-          var row = reader.read()
-          while (row != null) {
-            var i = 0
-            while (i < fields.size) {
-              if (!row.isNullAt(i)) {
-                counts(i) += 1L
-                val add = fields(i).dataType match {
-                  case d: org.apache.spark.sql.types.DecimalType =>
-                    row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.unscaledValue()
-                  case org.apache.spark.sql.types.LongType =>
-                    java.math.BigInteger.valueOf(row.getLong(i))
-                  case org.apache.spark.sql.types.IntegerType =>
-                    java.math.BigInteger.valueOf(row.getInt(i).toLong)
-                  case org.apache.spark.sql.types.ShortType =>
-                    java.math.BigInteger.valueOf(row.getShort(i).toLong)
-                  case _ => java.math.BigInteger.valueOf(row.getByte(i).toLong)
-                }
-                sums(i) = sums(i).add(add)
-              }
-              i += 1
-            }
-            row = reader.read()
-          }
-        } finally reader.close()
-        // Decimal(38, s) overflows to null past 38 unscaled digits; the
-        // distributed path records `na` there — reproduce the bound.
-        // Parity assumption (ADVICE r18): Spark's decimal Sum nulls only
-        // on FINAL-result overflow; if a Spark version ever nulled on an
-        // intermediate partial-sum overflow, this exact BigInteger fold
-        // would record a value where the distributed path records `na` —
-        // the written value is still the exact sum, so reads stay correct
-        // either way (na only means "scan instead of fold").
-        val max38 = java.math.BigInteger.TEN.pow(38)
-        summable.zipWithIndex.foreach { case (c, i) =>
-          val content =
-            if (counts(i) == 0L) "0"
-            else if (sums(i).abs.compareTo(max38) >= 0) SumNa
-            else sums(i).toString
-          writeOne(rel, c, content)
-        }
-      } else if (summable.nonEmpty) {
-        largeSums.add((rel, p, summable, summable.map(c => fieldOf(c).get)))
-      }
-    }
-    // ONE aggregation job per (columns, scales) group of large files: each
-    // file contributes a single partial-aggregated row (sum widened to
-    // precision 38 AT THE COLUMN'S SCALE — exact; a single file would need
-    // ~10^(38-p) rows to overflow — plus the non-null count), the rows
-    // union into one plan, and the whole batch is one collect. The
-    // recorded value is the UNSCALED BigInt, exactly the per-file path.
-    locally {
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
-      import scala.jdk.CollectionConverters._
-      def scaleOf(f: org.apache.spark.sql.types.StructField): Int = f.dataType match {
-        case d: org.apache.spark.sql.types.DecimalType => d.scale
-        case _ => 0
-      }
-      largeSums.asScala.toSeq
-        .groupBy { case (_, _, cols, fields) => (cols, fields.map(scaleOf)) }
-        .toSeq
-        .sortBy(_._1.toString)
-        .foreach { case ((summable, scales), group) =>
-          group.grouped(64).foreach { chunk =>
-            val frames = chunk.map { case (rel, p, _, fields) =>
-              val aggs = summable.zip(fields).flatMap { case (c, f) =>
-                Seq(
-                  sum(col(f.name).cast(
-                    org.apache.spark.sql.types.DecimalType(38, scaleOf(f)))).as(s"s_$c"),
-                  count(col(f.name)).as(s"c_$c"))
-              }
-              spark.read
-                // explicit pruned schema: no per-call inference job
-                .schema(org.apache.spark.sql.types.StructType(fields.distinct))
-                .parquet(p.toString)
-                .agg(aggs.head, aggs.tail: _*)
-                .withColumn("__graft_sum_rel__", lit(rel))
-            }
-            val rows = frames.reduce(_ unionByName _).collect()
-            rows.foreach { row =>
-              val rel = row.getAs[String]("__graft_sum_rel__")
-              summable.zip(scales).foreach { case (c, scale) =>
-                val v = row.getAs[java.math.BigDecimal](s"s_$c")
-                val nonNull = row.getAs[Long](s"c_$c")
-                // SUM over an all-null file is null; 0 is the correct FOLD
-                // contribution (the read side emits NULL iff no file in the
-                // group has a non-null value, via the recorded null counts).
-                // Null WITH non-null rows is a 38-digit overflow: record
-                // `na` — fall back to scanning forever rather than fold a
-                // wrong number.
-                val content =
-                  if (v == null && nonNull == 0L) "0"
-                  else if (v == null) SumNa
-                  else v.setScale(scale).unscaledValue().toString
-                writeOne(rel, c, content)
-              }
-            }
-          }
-        }
-    }
-  }
-
   // ---- NDV register sidecars (portable HyperLogLog) -----------------------
 
   /** Registers per (file, column) NDV sketch: 256 — the q48 scheme, kept
@@ -3285,38 +3148,10 @@ object Snapshots {
     * partition of history into commits yields the same table-level
     * estimate as a single pass (merge invariance).
     */
-  val NdvRegisters = 256
+  val NdvRegisters: Int = SidecarKernel.NdvRegisters
 
   private def ndvPath(root: Path, rel: String, colName: String): Path =
     new Path(new Path(manifestDir(root), "ndv"), s"${hex(rel)}.${hex(colName)}")
-
-  /** One small Spark job: the file's 256 HLL registers for `c` (max rho
-    * per md5-derived bucket; nulls excluded — `count(DISTINCT c)`'s own
-    * rule). `c` arrives pre-cast to the string domain from [[
-    * buildBloomSidecars]]'s shared pass (the inner cast is then a no-op).
-    * rho ≤ 53 fits a byte; absent buckets stay 0.
-    */
-  private def ndvRegistersOf(df: org.apache.spark.sql.DataFrame, c: String): Array[Byte] = {
-    import org.apache.spark.sql.functions.{col, conv, length, lit, ltrim, max, md5, substring, when}
-    val hexCol = md5(col(c).cast("string"))
-    val stripped = ltrim(substring(hexCol, 1, 13), "0")
-    val firstDigit = substring(stripped, 1, 1)
-    val bits = when(firstDigit.isin("8", "9", "a", "b", "c", "d", "e", "f"), 4)
-      .when(firstDigit.isin("4", "5", "6", "7"), 3)
-      .when(firstDigit.isin("2", "3"), 2)
-      .otherwise(1)
-    val rho = when(length(stripped) === 0, lit(53))
-      .otherwise(lit(4) * (lit(13) - length(stripped)) + (lit(4) - bits) + lit(1))
-    val rows = df
-      .filter(col(c).isNotNull)
-      .select(conv(substring(hexCol, 14, 2), 16, 10).cast("int").as("b"), rho.as("r"))
-      .groupBy(col("b"))
-      .agg(max(col("r")).as("r"))
-      .collect()
-    val reg = new Array[Byte](NdvRegisters)
-    rows.foreach(r => reg(r.getInt(0)) = r.getInt(1).toByte)
-    reg
-  }
 
   // decoded register sidecars are immutable and tiny (256 B): cache per
   // JVM like blooms, bounded
@@ -3326,7 +3161,7 @@ object Snapshots {
   // ABSENCE is cached too: a pre-NDV or partially-sidecar'd table would
   // otherwise pay O(kept rels × ndv cols) fs.exists RPCs on EVERY stats
   // estimation (columnStats runs per plan). Entries are invalidated by
-  // the one writer that can create a sidecar (buildBloomSidecars).
+  // the one writer that can create a sidecar (buildSidecars).
   private val ndvMissCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
@@ -4888,7 +4723,7 @@ object Snapshots {
       statsByRel.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, bv.statsCols))
     }
     if (bv.bloomCols.nonEmpty || bv.statsCols.nonEmpty)
-      buildBloomSidecars(spark, root, rels, bv.bloomCols, statsCols = bv.statsCols)
+      buildSidecars(spark, root, rels, bv.bloomCols, statsCols = bv.statsCols)
     rels.sorted.map(rel => rel -> statsByRel.get(rel))
   }
 

@@ -177,6 +177,15 @@ object Bridge {
       spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
+  /** Run `body` with the session's SQL confs propagated to the tasks it
+    * launches — what a Dataset action does for its own plan. An RDD job
+    * started from engine code needs it when its tasks evaluate Catalyst
+    * expressions that read SQLConf.
+    */
+  def withSqlConfPropagated[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution
+      .withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession])(body)
+
   /** Serializable Hadoop Configuration for shipping to executors
     * (`SerializableConfiguration` is `private[spark]`, so callers hold it
     * as an opaque Serializable and unwrap through [[confOf]]).

@@ -1203,9 +1203,7 @@ class DeleteVectorsSpec extends SparkSpec {
             .readAllBytes(java.nio.file.Paths.get(s"$dir/$dvRel"))
             .toSeq
       }
-    spark.conf.set("spark.graft.dv.driverWriteMaxRows", "0")
-    val jobsSlow = try timedOp()
-    finally spark.conf.unset("spark.graft.dv.driverWriteMaxRows")
+    val jobsSlow = DeleteVectors.dvDriverWriteMaxRows.withValue(0L)(timedOp())
     val slow = sidecarBytes()
     val slowRows = rowSet(Snapshots.readSnapshot(spark, dir))
     // back to the pre-op state, rerun under the default driver path

@@ -2210,8 +2210,7 @@ class SnapCatalogSpec extends SparkSpec {
     val base = Files.createTempDirectory("snbadconf").toString
     // (key, malformed value, op over a committed table with id stats +
     // bloom). Every op reaches the conf: a commit reads the checkpoint
-    // interval and builds the new file's sidecars; the deletes read the
-    // rewrite-size and deletion-vector confs
+    // interval; the deletes read the rewrite-size and deletion-vector confs
     def appendAndCommit(dir: String): Unit = {
       Seq((9L, "z")).toDF("id", "s").coalesce(1).write.mode("append").parquet(dir)
       Snapshots.commit(spark, dir)
@@ -2219,10 +2218,8 @@ class SnapCatalogSpec extends SparkSpec {
     }
     val cases: Seq[(String, String, String => Unit)] = Seq(
       ("spark.graft.snapshot.checkpointInterval", "20x", appendAndCommit),
-      ("spark.graft.sidecar.driverBuildMaxBytes", "32MB", appendAndCommit),
       ("spark.graft.rewrite.targetBytes", "128m", dir => { Sources.deleteWhere(spark, dir, col("id") === 1L); () }),
-      ("spark.graft.dv.maxDeletedFraction", "most", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }),
-      ("spark.graft.dv.driverWriteMaxRows", "lots", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }))
+      ("spark.graft.dv.maxDeletedFraction", "most", dir => { DeleteVectors.deleteWhere(spark, dir, col("id") === 1L); () }))
     cases.zipWithIndex.foreach { case ((key, bad, op), i) =>
       val dir = s"$base/t$i"
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").coalesce(1).write.parquet(dir)

@@ -1555,6 +1555,7 @@ class SnapshotsSpec extends SparkSpec {
     // with nulls, longs, doubles, timestamps — the driver fast path must
     // reproduce the distributed aggregate's bytes exactly
     val dir = Files.createTempDirectory("snap_sidecar_parity").toString + "/t"
+    val zeros37 = "0" * 37
     spark
       .range(0L, 500L)
       .select(
@@ -1564,10 +1565,18 @@ class SnapshotsSpec extends SparkSpec {
         ($"id" * 1.5 - 250.0).as("d"),
         (to_timestamp(lit("2024-03-01 10:00:00")) + expr("make_interval(0,0,0,0,0,0,id*61)")).as("ts"),
         ($"id" * 37 % 1000).cast("decimal(12,3)").as("dec"),
-        // entirely-NULL column: the batched build's key never reaches the
-        // reduce — the explicit empty-filter/zero-register branch must
-        // still produce the per-file build's exact bytes
-        lit(null).cast("string").as("nul"))
+        // entirely-NULL column: no value ever reaches its sketches — the
+        // empty filter and zero registers must match on both paths
+        lit(null).cast("string").as("nul"),
+        // 9e37 per row: every file's sum passes 38 digits → `na` on both
+        // paths (the distributed path used to fail the commit on ANSI
+        // decimal overflow)
+        expr(s"CAST('9$zeros37' AS DECIMAL(38,0))").as("big"),
+        // ±6e37 by parity: a running sum can pass 38 digits while the
+        // file's total does not — one exact rule decides, in any row order
+        expr(
+          s"CAST(CASE WHEN id % 2 = 0 THEN '6' ELSE '-6' END || '$zeros37' AS DECIMAL(38,0)) " +
+            "+ CAST(id AS DECIMAL(38,0))").as("mix"))
       .repartition(3)
       .write
       .parquet(dir)
@@ -1580,7 +1589,8 @@ class SnapshotsSpec extends SparkSpec {
       }.toMap
     }
     // files are tiny → the commit builds via the driver fast path
-    Snapshots.commit(spark, dir, Seq("id", "s", "ts", "dec"), Seq("id", "s", "ts", "nul"))
+    Snapshots.commit(
+      spark, dir, Seq("id", "s", "ts", "dec", "big", "mix"), Seq("id", "s", "ts", "nul"))
     val fast = sidecarBytes()
     assert(fast.nonEmpty && fast.keys.exists(_.startsWith("bloom/")))
     assert(fast.keys.exists(_.startsWith("sum/")))
@@ -1589,40 +1599,65 @@ class SnapshotsSpec extends SparkSpec {
       new java.io.File(s"$dir/${Snapshots.ManifestDirName}/$kind")
         .listFiles().filterNot(_.getName.startsWith(".")).foreach(_.delete())
     }
-    spark.conf.set("spark.graft.sidecar.driverBuildMaxBytes", "0")
-    try Snapshots.backfillNdv(spark, dir)
-    finally spark.conf.unset("spark.graft.sidecar.driverBuildMaxBytes")
+    Snapshots.sidecarDriverBuildMaxBytes.withValue(0L)(Snapshots.backfillNdv(spark, dir))
     val slow = sidecarBytes()
     assert(slow.keySet == fast.keySet, s"sidecar sets differ: ${slow.keySet} vs ${fast.keySet}")
     val diff = fast.keys.filter(k => fast(k) != slow(k))
     assert(diff.isEmpty, s"sidecar bytes differ for: ${diff.mkString(", ")}")
+    // the overflow rule: `na` iff |exact file sum| >= 10^38
+    val rels = Snapshots.files(spark, dir)
+    val max38 = BigInt(10).pow(38)
+    rels.foreach { rel =>
+      assert(Snapshots.fileSumOf(spark, dir, rel, "big").isEmpty, s"big must record na: $rel")
+      val exact = spark.read
+        .parquet(Snapshots.resolve(spark, dir, rel).toString)
+        .select($"mix")
+        .as[java.math.BigDecimal]
+        .collect()
+        .map(v => BigInt(v.toBigInteger))
+        .sum
+      val want = if (exact.abs >= max38) None else Some(exact)
+      assert(Snapshots.fileSumOf(spark, dir, rel, "mix") == want, s"mix sum of $rel")
+    }
   }
   test("batched sidecar build: a commit batch costs O(1) jobs, not O(files x columns)") {
     // 4 files x 3 bloom columns + 3 sum columns: the old distributed path
-    // launched ~3 jobs per (file, column) (>=36); the batched pass is one
-    // bloom/NDV job per <=64-file chunk plus one sum job per schema group
-    val dir = Files.createTempDirectory("snap_sidecar_jobs").toString + "/t"
-    spark
-      .range(0L, 300L)
-      .select($"id", ($"id" % 17).cast("string").as("s"), ($"id" * 3).as("v"))
-      .repartition(4)
-      .write
-      .parquet(dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    // launched ~3 jobs per (file, column) (>=36); the one sidecar pass is
+    // one job per <=64-file chunk covering bloom, NDV and SUM together,
+    // and the driver-side build runs none
+    def fixture(): String = {
+      val dir = Files.createTempDirectory("snap_sidecar_jobs").toString + "/t"
+      spark
+        .range(0L, 300L)
+        .select($"id", ($"id" % 17).cast("string").as("s"), ($"id" * 3).as("v"))
+        .repartition(4)
+        .write
+        .parquet(dir)
+      dir
     }
-    spark.sparkContext.addSparkListener(listener)
-    spark.conf.set("spark.graft.sidecar.driverBuildMaxBytes", "0") // force the distributed path
-    try Snapshots.commit(spark, dir, Seq("id", "s", "v"), Seq("id", "s", "v"))
-    finally spark.conf.unset("spark.graft.sidecar.driverBuildMaxBytes")
-    Thread.sleep(1500) // listener bus delivery is async
-    spark.sparkContext.removeSparkListener(listener)
-    val n = jobs.get()
-    assert(n > 0, "the forced-distributed commit must have run Spark jobs")
-    assert(n <= 8, s"commit launched $n jobs — the batched sidecar build should need O(1)")
+    def jobsOf(op: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        op
+        org.apache.spark.SpecBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    val small = fixture()
+    val nDriver = jobsOf(Snapshots.commit(spark, small, Seq("id", "s", "v"), Seq("id", "s", "v")))
+    assert(nDriver == 0, s"the driver-side sidecar build ran $nDriver Spark jobs")
+    val dir = fixture()
+    val n = Snapshots.sidecarDriverBuildMaxBytes.withValue(0L) {
+      jobsOf(Snapshots.commit(spark, dir, Seq("id", "s", "v"), Seq("id", "s", "v")))
+    }
+    assert(n == 1, s"the forced-distributed commit launched $n jobs — one sidecar job expected")
     // and the sidecars it wrote are complete: every (file, column) pair
     val rels = Snapshots.files(spark, dir)
     val fsPath = new java.io.File(s"$dir/${Snapshots.ManifestDirName}")
