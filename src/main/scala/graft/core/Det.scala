@@ -24,6 +24,14 @@ object Det {
   def r4(c: Column): Column = r(c, 4)
   def r6(c: Column): Column = r(c, 6)
 
+  /** [[r4]] on a JVM double, for kernels that must agree with the Column
+    * form to the bit. Spark's `floor` of a double is a BIGINT
+    * (`(long) Math.floor(x)`, so NaN floors to 0 and ±∞ saturate), and the
+    * division widens it back to double: this is that expression tree
+    * written out, and SimilaritySpec checks it against the Column form.
+    */
+  def r4(x: Double): Double = math.floor(x * 10000.0 + 0.5).toLong.toDouble / 10000.0
+
   /** The DuckDB-SQL twin of [[r]] — splice into oracle SQL strings. */
   def sqlR(expr: String, n: Int): String = {
     val p = math.pow(10, n).toLong

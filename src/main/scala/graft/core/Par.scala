@@ -1,5 +1,9 @@
 package graft.core
 
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.SparkSession
+
 /** Overlap INDEPENDENT Spark jobs from driver threads (optimization guide
   * §2.6): Spark's scheduler happily runs several jobs at once inside one
   * application — actions are sequential only because driver code calls
@@ -20,27 +24,41 @@ package graft.core
 object Par {
 
   /** Run the thunks concurrently (one thread each — callers pass 2-4) and
-    * return their results in order. Exceptions rethrow to the caller after
-    * every thread finishes, so a failure cannot leave a detached runaway
-    * job submitting work mid-bench.
+    * return their results in order. Each thunk runs in its own Spark job
+    * group with `interruptOnCancel`; the first failure cancels every
+    * sibling group, its running jobs and any job it would submit next, and
+    * is rethrown after every thread has joined — so a failure can neither
+    * leave a detached runaway job submitting work mid-bench nor wait for
+    * a sibling's long job to finish. A thunk's jobs run in its own group,
+    * not in a group the calling thread set.
     */
   def all[A](thunks: (() => A)*): Seq[A] = {
     if (thunks.sizeIs <= 1) return thunks.map(_())
-    val results = new Array[Either[Throwable, A]](thunks.size)
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val run = java.util.UUID.randomUUID()
+    val groups = thunks.indices.map(i => s"graft-par-$run-$i")
+    val firstFailure = new AtomicReference[Throwable]()
+    val results = new Array[Any](thunks.size)
     val threads = thunks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(
-        () =>
-          results(i) =
-            try Right(t())
-            catch { case e: Throwable => Left(e) },
+        () => {
+          sc.foreach(_.setJobGroup(groups(i), s"graft.core.Par thunk $i", interruptOnCancel = true))
+          try results(i) = t()
+          catch {
+            case e: Throwable =>
+              if (firstFailure.compareAndSet(null, e))
+                for (c <- sc; g <- groups if g != groups(i))
+                  c.cancelJobGroupAndFutureJobs(g, s"sibling graft.core.Par thunk $i failed")
+          }
+        },
         s"graft-par-$i")
       th.setDaemon(true)
       th.start()
       th
     }
     threads.foreach(_.join())
-    results.foreach { case Left(e) => throw e; case _ => () }
-    results.toSeq.map(_.toOption.get)
+    Option(firstFailure.get).foreach(e => throw e)
+    results.toSeq.asInstanceOf[Seq[A]]
   }
 
   /** Two-ary convenience keeping call sites typed. */

@@ -414,10 +414,17 @@ object Similarity {
     * true-neighbor buckets. Shared by [[lshTopK]] and the graph search so
     * build-side and search-side probing can never silently diverge.
     */
-  private def probeBuckets(bucket: Column, planes: Int, probes: Int): Column = {
+  private[llm] def probeBuckets(bucket: Column, planes: Int, probes: Int): Column = {
     val nFlips = math.min(planes, math.max(0, probes - 1))
     array((bucket +: (0 until nFlips).map(b => bucket.bitwiseXOR(lit(1L << b)))): _*)
   }
+
+  /** The id-hash cover bucket graph seeding unions with the LSH bucket,
+    * at the LSH bucketing's granularity. Shared by the build, the append
+    * and the append kernel.
+    */
+  private[llm] def coverBucket(id: Column, planes: Int): Column =
+    pmod(hash(id), lit(1 << planes)).cast("long")
 
   // ---- navigable k-NN graph ANN (NSW / HNSW family, Spark-first) -------
 
@@ -478,7 +485,7 @@ object Similarity {
     // would otherwise start edgeless, and NN-descent can only ever reach
     // nodes that have edges)
     val lshB = c.withColumn("bucket", Vectors.lshBucket(col("embedding"), planes, dims))
-    val coverB = c.withColumn("bucket", pmod(hash(col("vec_id")), lit(1 << planes)).cast("long"))
+    val coverB = c.withColumn("bucket", coverBucket(col("vec_id"), planes))
     // per-bucket NBR-SIDE cap before the self-join: real embedding corpora
     // are clustered (that is WHY graph indexes work), so hot LSH buckets
     // are the expected case, and an uncapped bucket self-join is O(|b|²)
@@ -549,18 +556,42 @@ object Similarity {
     *     UNION graph (old edges + the new ones, undirected), so new nodes
     *     navigate INTO the old graph's neighborhoods; the old graph is
     *     read, never recomputed. ≤ ~4·degree² candidates per new node per
-    *     round, `localCheckpoint` per round (the loop discipline).
+    *     round.
     *  3. BACK-LINK: an old node named by a new edge adopts the new node
     *     into its candidate list and re-cuts to `degree` (cosine is
     *     symmetric — the reversed edge carries the same sim), so searches
     *     entering through old nodes can REACH the slice; old nodes no new
-    *     edge touches carry over verbatim — zero work for the untouched
-    *     99.99 % of a 100 TB corpus.
+    *     edge touches carry over verbatim.
     *
     * Same orphan repair and determinism guarantees as the build; returns
     * the extended (node, nbr, sim) graph covering corpus ∪ fresh.
+    *
+    * Two paths, one answer. While the union's vectors and the graph's
+    * edges fit [[GraphKernels.maxIndexBytes]] (32 MiB; observed while
+    * collecting them), the index is collected and broadcast once and the
+    * seeds and each round are one job over the new vectors, back-links and
+    * orphan repair run on the driver, and the result is a driver-built
+    * frame: a fixed handful of jobs plus one per round. Above the ceiling
+    * — the 100 TB case — each step is a join loop: seed self-joins, per
+    * round a neighbor-of-neighbor self-join, two vector fetches and a
+    * window, `localCheckpoint`ed, and anti-joins that leave the untouched
+    * 99.99 % of the graph verbatim. SimilaritySpec pins that both paths
+    * return the same edges.
     */
   def knnGraphAppend(
+      graph: DataFrame,
+      corpus: DataFrame,
+      fresh: DataFrame,
+      degree: Int,
+      rounds: Int,
+      planes: Int,
+      dims: Int): DataFrame =
+    GraphKernels
+      .append(graph, corpus, fresh, degree, rounds, planes, dims)
+      .getOrElse(knnGraphAppendJoin(graph, corpus, fresh, degree, rounds, planes, dims))
+
+  /** [[knnGraphAppend]] as a join loop, `localCheckpoint` per round. */
+  private def knnGraphAppendJoin(
       graph: DataFrame,
       corpus: DataFrame,
       fresh: DataFrame,
@@ -583,8 +614,7 @@ object Similarity {
     }
     val newIds = fresh.select(col("vec_id"))
     val lshAll = all.withColumn("bucket", Vectors.lshBucket(col("embedding"), planes, dims))
-    val coverAll =
-      all.withColumn("bucket", pmod(hash(col("vec_id")), lit(1 << planes)).cast("long"))
+    val coverAll = all.withColumn("bucket", coverBucket(col("vec_id"), planes))
     def newSeeds(bk: DataFrame): DataFrame =
       seedPairs(bk, 4 * degree)
         .join(newIds.select(col("vec_id").as("node")), Seq("node"), "left_semi")
@@ -642,12 +672,21 @@ object Similarity {
     * point, so an empty bucket can't strand a query); each of `steps`
     * hops expands the current per-query beam's graph neighbors, scores
     * only the NEWLY visited nodes against the query, and re-cuts the beam.
-    * Queries broadcast at every step; the corpus is touched only to fetch
-    * candidate vectors (hash join on vec_id) — never scanned per hop.
     * Returns every (qid, vec_id, sim) VISITED, distinct: `topK` of it is
     * the search result, its per-qid count the visited-work measure a
     * recall/latency evaluation reports. Fixed step count keeps the result
     * deterministic.
+    *
+    * Two paths, one answer. While the corpus vectors and the graph's
+    * (node, nbr) edges fit [[GraphKernels.maxIndexBytes]] (32 MiB;
+    * observed while collecting them), they are collected and broadcast
+    * once and the whole walk runs per query in ONE stage over the query
+    * panel: a fixed handful of jobs whatever `steps` is, and the result is
+    * lazy. Above the ceiling — the 100 TB case — each hop is a join loop:
+    * the queries broadcast, the corpus touched only to fetch candidate
+    * vectors (hash join on vec_id, never scanned per hop), the beam re-cut
+    * by a window and `localCheckpoint`ed. SimilaritySpec pins that both
+    * paths return the same rows.
     */
   def graphSearchScored(
       graph: DataFrame,
@@ -657,7 +696,21 @@ object Similarity {
       steps: Int,
       planes: Int,
       dims: Int,
-      probes: Int = 1): DataFrame = {
+      probes: Int = 1): DataFrame =
+    GraphKernels
+      .search(graph, corpus, queries, beam, steps, planes, dims, probes)
+      .getOrElse(graphSearchJoin(graph, corpus, queries, beam, steps, planes, dims, probes))
+
+  /** [[graphSearchScored]] as a join loop, `localCheckpoint` per hop. */
+  private def graphSearchJoin(
+      graph: DataFrame,
+      corpus: DataFrame,
+      queries: DataFrame,
+      beam: Int,
+      steps: Int,
+      planes: Int,
+      dims: Int,
+      probes: Int): DataFrame = {
     // multi-probe entries: the query's own LSH bucket plus its 1-bit-flip
     // neighbors ([[probeBuckets]] — shared with lshTopK); a richer entry
     // set is the cheapest recall lever a beam search has

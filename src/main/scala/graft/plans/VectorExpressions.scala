@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * fused loop over the two unsafe arrays with no allocation, and it stays
   * inside whole-stage codegen. Numerics are bit-identical to the HOF form:
   * per-element products accumulate sequentially in double, each of the
-  * three accumulators in the same order.
+  * three accumulators in the same order ([[CosineSimExpr.cosine]]).
   */
 case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -33,19 +33,35 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
     case _ => false
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val ld = elemIsDouble(left)
-    val rd = elemIsDouble(right)
+  override def nullSafeEval(a: Any, b: Any): Any = CosineSimExpr.cosine(
+    a.asInstanceOf[ArrayData], elemIsDouble(left), b.asInstanceOf[ArrayData], elemIsDouble(right))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (ld, rd) = (elemIsDouble(left), elemIsDouble(right))
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.CosineSimExpr.cosine($a, $ld, $b, $rd)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimExpr {
+
+  /** The one cosine: interpreted eval, generated code and the graph-ANN
+    * kernels ([[graft.llm.GraphKernels]]) all call it, so they agree to
+    * the bit. Per-element products accumulate sequentially in double,
+    * each of the three accumulators in element order. NOT named `eval`
+    * (see [[LshBucketExpr.lshBucket]]).
+    */
+  def cosine(x: ArrayData, xDouble: Boolean, y: ArrayData, yDouble: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
     var i = 0
     while (i < n) {
-      val xi = if (ld) x.getDouble(i) else x.getFloat(i).toDouble
-      val yi = if (rd) y.getDouble(i) else y.getFloat(i).toDouble
+      val xi = if (xDouble) x.getDouble(i) else x.getFloat(i).toDouble
+      val yi = if (yDouble) y.getDouble(i) else y.getFloat(i).toDouble
       dot += xi * yi
       nx += xi * xi
       ny += yi * yi
@@ -53,33 +69,6 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGet = if (elemIsDouble(left)) "getDouble" else "getFloat"
-    val rGet = if (elemIsDouble(right)) "getDouble" else "getFloat"
-    // Every local gets a fresh name: this expression can occur several
-    // times inside one generated projection, and fixed names collide
-    // ("Redefinition of local variable"), which silently downgrades the
-    // whole projection to interpreter mode.
-    val (n, dot, nx, ny, i) =
-      (ctx.freshName("n"), ctx.freshName("dot"), ctx.freshName("nx"), ctx.freshName("ny"), ctx.freshName("i"))
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      (a, b) => s"""
-        |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  double xi$i = (double) $a.$lGet($i);
-        |  double yi$i = (double) $b.$rGet($i);
-        |  $dot += xi$i * yi$i; $nx += xi$i * xi$i; $ny += yi$i * yi$i;
-        |}
-        |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Squared L2 distance as a native expression — the PQ/ADC hot loop
@@ -87,8 +76,11 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
   * (subvector, centroid) pair). Bit-identical to the
   * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0.0, acc+x)` HOF
   * composition (sequential accumulation, same element order), but one
-  * fused loop with no intermediate array. Same fresh-name discipline as
-  * [[CosineSimExpr]].
+  * fused loop with no intermediate array. Every generated local gets a
+  * fresh name: the expression can occur several times inside one
+  * generated projection, and fixed names collide ("Redefinition of local
+  * variable"), which silently downgrades the projection to interpreter
+  * mode.
   */
 case class L2SqExpr(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -1751,23 +1751,27 @@ object Frontier3 {
 
   /** Graph-based ANN, the HNSW-family recall/latency point, Spark-first:
     * [[graft.llm.Similarity.knnGraph]] builds a bounded-degree k-NN graph
-    * by NN-DESCENT (LSH-seeded neighbor lists refined by two
+    * by NN-DESCENT (LSH-seeded neighbor lists refined by three
     * neighbor-of-neighbor rounds — the distributed stand-in for HNSW's
     * driver-bound sequential insert), and
     * [[graft.llm.Similarity.graphSearchScored]] answers queries by beam
-    * search over it (LSH-bucket + fixed global entry points, three hops,
-    * beam 48). Deterministic end to end, so the hash pins real
-    * guarantees per query: the exact brute-force top-1 (the oracle
+    * search over it (multi-probe LSH-bucket + fixed global entry points,
+    * four hops, beam max(48, n/16)). Deterministic end to end, so the
+    * hash pins real guarantees per query: the exact brute-force top-1 (the oracle
     * recomputes it — the baseline every ANN evaluation needs), a per-query
     * graph recall@10 floor plus a panel MEAN recall@10 of at least 0.5, and a sublinear-visits bound — a graph too
     * poor to navigate, or a search that degraded to scanning, breaks the
     * hash. The exact measured recall trajectory (mean ≈ 0.8 on the
     * synthetic gaussian fixture — the structureless worst case for
-    * navigable graphs) is law-tested in SimilaritySpec. At 100 TB: build cost is a fixed number of
-    * degree-bounded self-joins per round (never all-pairs), search cost
-    * per hop is a broadcast-frontier hash join touching only candidate
-    * vectors — the recall-vs-latency trade IVF can't reach at high recall
-    * targets, expressed without a single driver-side graph structure.
+    * navigable graphs) is law-tested in SimilaritySpec. The build is a
+    * fixed number of degree-bounded self-joins per round (never
+    * all-pairs). The search depends on the index size: while the corpus
+    * vectors and graph edges fit the kernel ceiling (32 MiB; sf0.1 is
+    * 2,000 × 64 floats and ≈24k edges, under 1 MB) they are collected and
+    * broadcast once and every query walks all four hops in one stage; at
+    * 100 TB, above the ceiling, each hop is a broadcast-frontier hash join
+    * touching only candidate vectors. Both paths return the same rows —
+    * the recall-vs-latency trade IVF can't reach at high recall targets.
     */
   def q221(s: SparkSession, d: String): DataFrame = {
     import graft.llm.Similarity
@@ -1870,10 +1874,15 @@ object Frontier3 {
     * `parity_ok`: the appended graph's panel recall clears the absolute
     * navigability floor AND lands within 0.15 mean of a FULL REBUILD
     * searched identically — append-then-search ≡ rebuild-then-search, up
-    * to the ANN envelope. At 100 TB: a day's vectors cost O(slice) seed +
-    * refine work and O(touched) re-cuts; the other 99.99 % of the graph
-    * is read, never recomputed — the rebuild the parity check runs is
-    * exactly the cost this operator exists to avoid.
+    * to the ANN envelope. A day's vectors cost O(slice) seed + refine
+    * work and O(touched) re-cuts; the rest of the graph is carried over
+    * verbatim — the rebuild the parity check runs is exactly the cost this
+    * operator exists to avoid. Below the kernel ceiling (32 MiB of
+    * vectors and edges; sf0.1 is under 1 MB) the append collects and
+    * broadcasts the index once and runs one job per round, and both
+    * searches walk in one stage each; at 100 TB, above it, the append's
+    * steps and the searches' hops are join loops that read the old graph
+    * and never recompute it.
     */
   def q223(s: SparkSession, d: String): DataFrame = {
     import graft.llm.Similarity
@@ -1909,9 +1918,9 @@ object Frontier3 {
         .groupBy(col("qid"))
         .agg(count(lit(1)).as("n_hit"))
     }
-    // the two beam searches are independent too: each is 1 entry + 4 hop
-    // checkpoints of a handful of tasks — overlapped they back-fill each
-    // other's scheduling tails
+    // the two beam searches are independent too: each collects its index
+    // in a few small jobs — overlapped they back-fill each other's
+    // scheduling tails
     val (appendHits, rebuildHits) =
       graft.core.Par.two(() => hitsOver(appended), () => hitsOver(rebuilt))
     val covered = appended

@@ -892,16 +892,18 @@ object Mv {
           None
         } else if (dimsMoved) affectedKeysViaDimDelta(spark, d0, d, v1)
         else affectedKeysViaChanges(spark, d, v1)
-      val affected = incremental.getOrElse {
+      val (affected, nAffected) = incremental.getOrElse {
         // full resync: every group on either side is affected — same
         // apply path, full price, still correct for every aggregate
         val srcKeys = prepared(spark, d, tableFrame(spark, d.sourceRoot, v1))
           .select(d.keyCols.map(col): _*)
         val mvKeys = tableFrame(spark, mvRoot, -1L).select(d.keyCols.map(col): _*)
-        srcKeys.unionByName(mvKeys).distinct().persist()
+        val keys = srcKeys.unionByName(mvKeys).distinct().persist()
+        try (keys, keys.count())
+        catch { case NonFatal(e) => keys.unpersist(); throw e }
       }
       try {
-        val (rec, del) = applyDelta(spark, d, mvRoot, affected, v1)
+        val (rec, del) = applyDelta(spark, d, mvRoot, affected, nAffected, v1)
         writeDef(fs, mvPath, d.copy(refreshedVersion = v1))
         RefreshReport(d.refreshedVersion, v1, rec, del, fullResync = incremental.isEmpty)
       } finally affected.unpersist()
@@ -1668,16 +1670,16 @@ object Mv {
     org.apache.spark.sql.graft.Bridge.ofRows(spark, rel)
   }
 
-  /** The affected group keys via the row-level change feed — `None` when
-    * the window is no longer expressible (vacuumed predecessor data), in
-    * which case the caller downgrades to a full resync. The frame is
-    * persisted and FORCED here so a feed refusal surfaces before any MV
-    * mutation.
+  /** The affected group keys via the row-level change feed, with their
+    * count — `None` when the window is no longer expressible (vacuumed
+    * predecessor data), in which case the caller downgrades to a full
+    * resync. The frame is persisted and FORCED here (the count) so a feed
+    * refusal surfaces before any MV mutation.
     */
   private def affectedKeysViaChanges(
       spark: SparkSession,
       d: MvDef,
-      v1: Long): Option[DataFrame] = {
+      v1: Long): Option[(DataFrame, Long)] = {
     val keys =
       try {
         val feed = changeFeed(spark, d.sourceRoot, d.refreshedVersion, v1)
@@ -1714,8 +1716,8 @@ object Mv {
           return None
       }
     try {
-      keys.count() // force NOW: a vacuumed window surfaces here, not mid-apply
-      Some(keys)
+      // force NOW: a vacuumed window surfaces here, not mid-apply
+      Some((keys, keys.count()))
     } catch {
       case NonFatal(e) =>
         keys.unpersist()
@@ -1756,7 +1758,7 @@ object Mv {
       spark: SparkSession,
       dOld: MvDef,
       dNew: MvDef,
-      v1: Long): Option[DataFrame] = {
+      v1: Long): Option[(DataFrame, Long)] = {
     // the per-dim changed-key frames are persisted (candidate narrowing
     // re-scans them several times) and must live until the final union
     // is FORCED — released here either way
@@ -1857,8 +1859,8 @@ object Mv {
           return None
       }
     try {
-      affected.count() // force NOW: an unreadable old dim pin surfaces here
-      Some(affected)
+      // force NOW: an unreadable old dim pin surfaces here
+      Some((affected, affected.count()))
     } catch {
       case NonFatal(e) =>
         affected.unpersist()
@@ -1870,18 +1872,18 @@ object Mv {
     } finally release()
   }
 
-  /** Recompute `affected` groups from the source pinned at `v1` and merge
-    * the outcome into the view in ONE atomic MV version: fresh values
-    * upsert, vanished groups delete — NULL-keyed groups included, via the
-    * null-safe apply. Returns (groups recomputed, groups deleted).
+  /** Recompute the `n` `affected` groups from the source pinned at `v1`
+    * and merge the outcome into the view in ONE atomic MV version: fresh
+    * values upsert, vanished groups delete — NULL-keyed groups included,
+    * via the null-safe apply. Returns (groups recomputed, groups deleted).
     */
   private def applyDelta(
       spark: SparkSession,
       d: MvDef,
       mvRoot: String,
       affected: DataFrame,
+      n: Long,
       v1: Long): (Long, Long) = {
-    val n = affected.count()
     if (n == 0L) return (0L, 0L) // e.g. a pure-compaction window: nothing changed
     val srcView = Snapshots.manifestView(spark, d.sourceRoot, v1)
     val srcSchema = srcView.schema.getOrElse(

@@ -459,4 +459,127 @@ class SimilaritySpec extends SparkSpec {
     val budget = (planes + 1).toLong * 64L + beam.toLong + 4L * beam.toLong * 12L
     assert(maxVisited <= budget, s"a query visited $maxVisited > budget $budget (n=$n)")
   }
+
+  // ---- graph-ANN kernels: parity with the join loops, job counts -------
+
+  private def jobsOf(op: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      op
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** Rows with each double as its raw bits: equal means equal to the bit. */
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+    df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+      .toSeq
+      .sorted
+
+  /** The join loops, forced by an index ceiling of zero bytes. */
+  private def joinLoop[A](body: => A): A = GraphKernels.maxIndexBytes.withValue(0L)(body)
+
+  test("scalar Det.r4 equals the Column form on exact halves, negatives and NaN") {
+    import spark.implicits._
+    val xs = Seq(0.0, -0.0, 0.00005, -0.00005, 0.00015, -0.00015, 0.03125, -0.03125, 0.12345, -0.98765,
+      1.0, -1.0, 0.99995, -0.99995, 1e-300, -1e-300, 123456.78905, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, Double.MaxValue, Double.MinPositiveValue)
+    val viaColumn = xs.toDF("x").select(graft.core.Det.r4($"x")).collect().map(_.getDouble(0))
+    xs.zip(viaColumn).foreach { case (x, c) =>
+      val k = graft.core.Det.r4(x)
+      assert(java.lang.Double.doubleToRawLongBits(k) == java.lang.Double.doubleToRawLongBits(c), s"r4($x): $k vs $c")
+    }
+  }
+
+  test("graph search kernel ≡ forced join loop: steps 0/1/4, probes 1/planes+1, tied sims") {
+    val c = emb.select(col("vec_id"), col("embedding"))
+    val planes = 4
+    val graph = Similarity.knnGraph(c, degree = 12, rounds = 2, planes = planes, dims = 64)
+    val queries = c.filter(col("vec_id") < 16)
+    val beam = math.max(48, (c.count() / 16).toInt)
+    def both(g: org.apache.spark.sql.DataFrame, corpus: org.apache.spark.sql.DataFrame, steps: Int, probes: Int) = {
+      val kernel = GraphKernels.search(g, corpus, queries, beam, steps, planes, 64, probes)
+      assert(kernel.isDefined, "the fixture index must fit the kernel path")
+      val join = joinLoop(Similarity.graphSearchScored(g, corpus, queries, beam, steps, planes, 64, probes))
+      val (k, j) = (bits(kernel.get), bits(join))
+      assert(k.nonEmpty && k == j, s"steps=$steps probes=$probes: kernel ${k.size} rows vs join loop ${j.size}")
+    }
+    for (steps <- Seq(0, 1, 4); probes <- Seq(1, planes + 1)) both(graph, c, steps, probes)
+    // tied sims: every vector twice under two ids, so every sim ties and
+    // each beam cut falls on the id tie-break
+    val tied = c.unionByName(c.select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
+    both(Similarity.knnGraph(tied, degree = 12, rounds = 1, planes = planes, dims = 64), tied, 4, planes + 1)
+  }
+
+  test("graph append kernel ≡ forced join loop: rounds 0/2, a slice with an orphan") {
+    import spark.implicits._
+    val c = emb.select(col("vec_id"), col("embedding"))
+    val planes = 4
+    val old = c.filter(col("vec_id") % 5 =!= 0)
+    val slice = c.filter(col("vec_id") % 5 === 0)
+    val base = Similarity.knnGraph(old, degree = 12, rounds = 2, planes = planes, dims = 64)
+    def both(g: org.apache.spark.sql.DataFrame, o: org.apache.spark.sql.DataFrame, f: org.apache.spark.sql.DataFrame,
+        degree: Int, rounds: Int) = {
+      val kernel = GraphKernels.append(g, o, f, degree, rounds, planes, 64)
+      assert(kernel.isDefined, "the fixture index must fit the kernel path")
+      val join = joinLoop(Similarity.knnGraphAppend(g, o, f, degree, rounds, planes, 64))
+      val (k, j) = (bits(kernel.get), bits(join))
+      assert(k.nonEmpty && k == j, s"rounds=$rounds: kernel ${k.size} edges vs join loop ${j.size}")
+      k
+    }
+    Seq(0, 2).foreach(r => both(base, old, slice, 12, r))
+    // the orphan: a fresh vector alone in its LSH bucket (opposite to a
+    // one-cluster corpus) and in its cover bucket, so neither bucketing
+    // seeds it and only orphan repair gives it edges
+    val rnd = new scala.util.Random(7)
+    def near(sign: Float) = Array.fill(64)(sign * (1f + 0.05f * rnd.nextFloat()))
+    val cover = (ids: Seq[Long]) =>
+      ids.toDF("vec_id").select(Similarity.coverBucket(col("vec_id"), planes)).as[Long].collect().toSeq
+    val oldIds = (0L until 6L)
+    val taken = cover(oldIds :+ 6L).toSet
+    val orphan = (1000L until 1100L).find(id => !taken(cover(Seq(id)).head)).get
+    val small = oldIds.map(i => (i, near(1f))).toDF("vec_id", "embedding")
+    val fresh = Seq((6L, near(1f)), (orphan, near(-1f))).toDF("vec_id", "embedding")
+    val smallBase = Similarity.knnGraph(small, degree = 3, rounds = 1, planes = planes, dims = 64)
+    Seq(0, 2).foreach { r =>
+      val edges = both(smallBase, small, fresh, 3, r)
+      val repaired = edges.filter(_._1 == orphan).map(_._2)
+      assert(repaired == Seq(0L, 1L, 2L), s"orphan $orphan edges $repaired: repair links the smallest ids")
+    }
+  }
+
+  test("graph-ANN job-count law: a search's jobs do not grow with steps, an append's with rounds + a constant") {
+    val c = emb.select(col("vec_id"), col("embedding"))
+    val planes = 4
+    val graph = Similarity.knnGraph(c, degree = 12, rounds = 2, planes = planes, dims = 64)
+    val queries = c.filter(col("vec_id") < 16)
+    def search(steps: Int) = jobsOf {
+      Similarity
+        .rankTopK(Similarity.graphSearchScored(graph, c, queries, 48, steps, planes, 64, probes = planes + 1), 10)
+        .collect()
+      ()
+    }
+    val (s1, s4) = (search(1), search(4))
+    info(s"search jobs: steps=1 $s1, steps=4 $s4")
+    assert(s1 == s4 && s4 <= 8, s"search ran $s1 jobs at steps=1 and $s4 at steps=4")
+    val old = c.filter(col("vec_id") % 5 =!= 0)
+    val slice = c.filter(col("vec_id") % 5 === 0)
+    val base = Similarity.knnGraph(old, degree = 12, rounds = 2, planes = planes, dims = 64)
+    val rounds = 2
+    val appendJobs = jobsOf {
+      Similarity.knnGraphAppend(base, old, slice, 12, rounds, planes, 64).count()
+      ()
+    }
+    info(s"append jobs at rounds=$rounds: $appendJobs")
+    assert(appendJobs <= rounds + 10, s"append + count ran $appendJobs jobs at rounds=$rounds")
+  }
 }
