@@ -509,6 +509,19 @@ object Dedup {
     labels
   }
 
+  /** Every doc of `df` labeled with its component over `edges` (the
+    * smallest doc id in it; singletons label themselves) and a canonical
+    * flag — the shared tail of [[dedupClusters]] and [[lshDedupClusters]].
+    */
+  private def clusterLabels(df: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
+    val comp = connectedComponents(edges, "a_id", "b_id")
+    df.select(col(idCol))
+      .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
+      .withColumn("cluster_id", coalesce(col("label"), col(idCol)))
+      .withColumn("is_canonical", (col("cluster_id") === col(idCol)).cast("long"))
+      .select(col(idCol), col("cluster_id"), col("is_canonical"))
+  }
+
   /** End-to-end near-dup clustering: jaccard pairs at `threshold` → edge
     * list → components → every doc labeled with its cluster id (the
     * smallest doc id in its component; singletons label themselves) and a
@@ -516,12 +529,7 @@ object Dedup {
     */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double): DataFrame = {
     val edges = jaccardPairs(df, idCol, textCol, n, threshold).select("a_id", "b_id")
-    val comp = connectedComponents(edges, "a_id", "b_id")
-    df.select(col(idCol))
-      .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("label"), col(idCol)))
-      .withColumn("is_canonical", (col("cluster_id") === col(idCol)).cast("long"))
-      .select(col(idCol), col("cluster_id"), col("is_canonical"))
+    clusterLabels(df, idCol, edges)
   }
 
   /** Scale-path near-dup clustering: LSH candidate pairs (banded minhash)
@@ -572,12 +580,7 @@ object Dedup {
       .join(sizes.select(col(idCol).as("b_id"), col("n_sh").as("nb")), Seq("b_id"))
       .filter(col("inter").cast("double") / (col("na") + col("nb") - col("inter")) >= threshold)
       .select("a_id", "b_id")
-    val comp = connectedComponents(edges, "a_id", "b_id")
-    df.select(col(idCol))
-      .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("label"), col(idCol)))
-      .withColumn("is_canonical", (col("cluster_id") === col(idCol)).cast("long"))
-      .select(col(idCol), col("cluster_id"), col("is_canonical"))
+    clusterLabels(df, idCol, edges)
   }
 
   /** 16-bit simhash per doc over token occurrences. Near-dup = small

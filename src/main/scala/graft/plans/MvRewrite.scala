@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.DoubleType
 
-import graft.sources.{Mv, Snapshots}
+import graft.sources.{MetaFiles, Mv, Snapshots}
 import graft.sources.snap.SnapTable
 
 /** AUTOMATIC materialized-view query rewrite — the half of the MV feature
@@ -184,12 +184,9 @@ object MvRewrite extends Rule[LogicalPlan] {
     */
   private def chainPeek(spark: SparkSession, root: String): Option[String] = {
     val p = new Path(new Path(root, Snapshots.ManifestDirName), ".chain")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim).filter(_.nonEmpty)
-      finally in.close()
-    } catch { case NonFatal(_) => None }
+    try MetaFiles.readText(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(_.trim).filter(_.nonEmpty)
+    catch { case NonFatal(_) => None }
   }
 
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {

@@ -54,20 +54,18 @@ object Constraints {
       fs.listStatus(dir)
         .toSeq
         .filterNot(st => st.getPath.getName.startsWith("."))
-        .map { st =>
-          val name = st.getPath.getName
-          val in = fs.open(st.getPath)
-          val txt =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-          val ok = lines.headOption.contains("graft-check v1") &&
-            lines.drop(1).headOption.exists(_.startsWith("expr "))
-          if (!ok)
-            sys.error(
-              s"garbled CHECK constraint file ${st.getPath}: enforcement derives from it — " +
-                "restore the file or drop and re-add the check")
-          name -> dec(lines(1).stripPrefix("expr "))
+        .flatMap { st =>
+          // a check dropped since the listing is no longer enforced
+          MetaFiles.readText(fs, st.getPath).map { txt =>
+            val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+            val ok = lines.headOption.contains("graft-check v1") &&
+              lines.drop(1).headOption.exists(_.startsWith("expr "))
+            if (!ok)
+              sys.error(
+                s"garbled CHECK constraint file ${st.getPath}: enforcement derives from it — " +
+                  "restore the file or drop and re-add the check")
+            st.getPath.getName -> dec(lines(1).stripPrefix("expr "))
+          }
         }
         .toMap
   }
@@ -85,35 +83,25 @@ object Constraints {
     * claimed against the new fingerprint — the residual window is the
     * microseconds between a writer's claim-time fingerprint read and
     * its manifest rename, not the (possibly minutes-long) validation
-    * scan. Cost: one exists probe (plus one tiny read when checks have
-    * ever existed).
+    * scan. Cost: one tiny read attempt.
     */
   private[sources] def fingerprint(spark: SparkSession, root: String): String = {
     val p = new Path(checksDir(new Path(root)), ".stamp")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) ""
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
+    MetaFiles.readText(fsOf(spark, p), p).getOrElse("")
   }
 
   /** Rewrite the check-set nonce — called by every mutation, under the
-    * table lock (so the fixed name never races a concurrent mutator;
-    * lock-free READERS of the stamp tolerate the tiny delete→rename
-    * window as a changed fingerprint either way).
+    * table lock. An overwriting [[MetaFiles.publish]]: lock-free READERS
+    * of the stamp see the old or the new nonce, or — where the rename
+    * cannot replace and the old stamp is deleted first — no stamp, a
+    * changed fingerprint either way.
     */
-  private def bumpStamp(fs: FileSystem, root: Path): Unit = {
-    val p = new Path(checksDir(root), ".stamp")
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".stamp-tmp-${java.util.UUID.randomUUID().toString}")
-    val out = fs.create(tmp, true)
-    try out.write(java.util.UUID.randomUUID().toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-  }
+  private def bumpStamp(fs: FileSystem, root: Path): Unit =
+    MetaFiles.publish(
+      fs,
+      new Path(checksDir(root), ".stamp"),
+      java.util.UUID.randomUUID().toString.getBytes(StandardCharsets.UTF_8),
+      overwrite = true)
 
   private def pendingMarker(root: Path, name: String): Path =
     new Path(checksDir(root), s".pending-$name")
@@ -216,20 +204,15 @@ object Constraints {
       require(
         Snapshots.latestVersion(spark, root) > 0L,
         s"addCheck($root): commit the table first — a check validates against committed data")
-      fs.mkdirs(p.getParent)
       // the pending marker FIRST: from here to the proof's success this
       // check is durably recorded as unproven (see CRASH ACCOUNTING)
       val marker = pendingMarker(rootPath, name)
-      val mOut = fs.create(marker, true)
-      try mOut.write("graft-check-pending v1".getBytes(StandardCharsets.UTF_8))
-      finally mOut.close()
+      if (!MetaFiles.publish(fs, marker, "graft-check-pending v1".getBytes(StandardCharsets.UTF_8)))
+        sys.error(s"recording check '$name' on $root failed: no pending marker at $marker")
       // publish next (see the ordering note above): new commits enforce
       // the pending check from this instant
-      val tmp = new Path(p.getParent, s".check-tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try out.write(s"graft-check v1\nexpr ${enc(predicateSql)}\n".getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, p)) {
+      val check = s"graft-check v1\nexpr ${enc(predicateSql)}\n".getBytes(StandardCharsets.UTF_8)
+      if (!MetaFiles.publish(fs, p, check)) {
         fs.delete(marker, false)
         sys.error(s"recording check '$name' on $root failed")
       }

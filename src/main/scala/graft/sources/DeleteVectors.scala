@@ -788,8 +788,8 @@ object DeleteVectors {
       require(keyCols.nonEmpty, "upsert needs at least one key column")
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (streamTag.nonEmpty && epochId >= 0L &&
-        lastUpsertEpoch(fs, rootPath, streamTag) >= epochId) return (0L, 0L)
+      val marker = epochMarker(new Path(rootPath, Snapshots.ManifestDirName), streamTag)
+      if (streamTag.nonEmpty && epochId >= 0L && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
       val version = Snapshots.latestVersion(spark, root)
       require(
         version > 0L,
@@ -831,7 +831,7 @@ object DeleteVectors {
               try fs.delete(new Path(rootPath, rel), false) catch { case _: Exception => () })
             throw t
         }
-      if (streamTag.nonEmpty && epochId >= 0L) writeUpsertEpoch(fs, rootPath, streamTag, epochId)
+      if (streamTag.nonEmpty && epochId >= 0L) MetaFiles.advance(fs, marker, epochId)
       res
     }
 
@@ -983,8 +983,8 @@ object DeleteVectors {
     Snapshots.withTableLock(spark, root) {
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (streamTag.nonEmpty && epochId >= 0L &&
-        lastBranchEpoch(fs, rootPath, name, streamTag) >= epochId) return (0L, 0L)
+      val marker = epochMarker(Snapshots.branchDir(rootPath, name), streamTag)
+      if (streamTag.nonEmpty && epochId >= 0L && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
       val bv = Snapshots.branchView(spark, root, name)
       val (keyFields, sourceKeys, partCols, alive) =
         upsertInputs(bv, root, keySource, appendSource, keyCols)
@@ -1007,42 +1007,17 @@ object DeleteVectors {
           }
           throw t
       }
-      if (streamTag.nonEmpty && epochId >= 0L)
-        writeBranchEpoch(fs, rootPath, name, streamTag, epochId)
+      if (streamTag.nonEmpty && epochId >= 0L) MetaFiles.advance(fs, marker, epochId)
       (changed.size.toLong, newlyDeleted)
     }
 
-  private def branchEpochMarker(rootPath: Path, name: String, tag: String): Path =
-    new Path(
-      Snapshots.branchDir(rootPath, name),
-      s".mor-epoch-${java.net.URLEncoder.encode(tag, "UTF-8")}")
-
-  private def lastBranchEpoch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: Path,
-      name: String,
-      tag: String): Long = {
-    val p = branchEpochMarker(rootPath, name, tag)
-    if (!fs.exists(p)) return -1L
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-    finally in.close()
-  }
-
-  private def writeBranchEpoch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: Path,
-      name: String,
-      tag: String,
-      epochId: Long): Unit = {
-    val p = branchEpochMarker(rootPath, name, tag)
-    val tmp = new Path(p.getParent, s"${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epochId.toString.getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-  }
+  /** The per-stream-tag epoch high-water marker ([[MetaFiles.last]] /
+    * [[MetaFiles.advance]]) in `dir`: the table's manifest dir for the
+    * main line, the branch's own dir for a branch (it dies with the
+    * branch).
+    */
+  private def epochMarker(dir: Path, tag: String): Path =
+    new Path(dir, s".mor-epoch-${java.net.URLEncoder.encode(tag, "UTF-8")}")
 
   /** Shared validation + alignment prologue of the upsert faces
     * ([[applyInternal]] and [[upsertOnBranch]]): key columns must exist
@@ -1433,38 +1408,6 @@ object DeleteVectors {
     rels
   }
 
-  private def upsertMarker(rootPath: Path, tag: String): Path =
-    new Path(
-      new Path(rootPath, Snapshots.ManifestDirName),
-      s".mor-epoch-${java.net.URLEncoder.encode(tag, "UTF-8")}")
-
-  private def lastUpsertEpoch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: Path,
-      tag: String): Long = {
-    val m = upsertMarker(rootPath, tag)
-    if (!fs.exists(m)) -1L
-    else {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeUpsertEpoch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: Path,
-      tag: String,
-      epochId: Long): Unit = {
-    val m = upsertMarker(rootPath, tag)
-    fs.mkdirs(m.getParent)
-    val tmp = new Path(m.getParent, s".mor-epoch-tmp-${java.net.URLEncoder.encode(tag, "UTF-8")}")
-    val out = fs.create(tmp, true)
-    try out.write(epochId.toString.getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(m, false)
-    if (!fs.rename(tmp, m)) sys.error(s"upsert epoch high-water update failed for $tag@$epochId")
-  }
 
   /** Which of `rels` satisfy `pred` over their hive partition-path values?
     * Exact, not pruning: each file's segments parse as the DECLARED

@@ -204,27 +204,19 @@ object Mv {
     */
   def definition(spark: SparkSession, mvRoot: String): MvDef = {
     val p = defPath(new Path(mvRoot))
-    val fs = fsOf(spark, p)
-    // heal the writeDef crash window: the next-image file is COMPLETE by
-    // construction (written and closed before the old def is deleted), so
-    // a missing def with a present next-image means the crash fell
-    // between delete and rename — finish the rename. With BOTH present
-    // the old def is authoritative (the crash fell before the delete; the
-    // stale watermark merely replays, which is idempotent).
-    val next = new Path(p.getParent, ".def-next")
-    if (!fs.exists(p) && fs.exists(next)) fs.rename(next, p)
+    // [[MetaFiles.current]] heals the writeDef crash window (def deleted,
+    // complete next image present). With BOTH present the old def is
+    // authoritative (the crash fell before the delete; the stale
+    // watermark merely replays, which is idempotent).
+    val txt = MetaFiles.current(fsOf(spark, p), p)
     require(
-      fs.exists(p),
+      txt.isDefined,
       s"$mvRoot is not a materialized view — no definition at $p (create one with Mv.create)")
     def fail(msg: String): Nothing =
       sys.error(
         s"garbled materialized-view definition $p: $msg — refusing to refresh; " +
           "restore the file or recreate the view")
-    val in = fs.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = txt.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    val lines = txt.get.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     if (lines.headOption.isEmpty || lines.head != "graft-mv v1") fail("unknown header")
     var source: Option[String] = None
     var version: Option[Long] = None
@@ -292,19 +284,15 @@ object Mv {
       refTypes.toSeq)
   }
 
-  /** Durably (re)write the definition. Unlike the epoch markers (whose
-    * loss merely replays), this file is the ONLY copy of the view's
-    * keys/aggs/filter — a delete-then-rename crash must not strand the
-    * view definition-less. The next image therefore lands under ONE
-    * deterministic name BEFORE the old def is touched, and
-    * [[definition]] heals the delete→rename window by finishing the
-    * rename. All writers hold the MV table lock, so the fixed name never
-    * races.
+  /** Durably (re)write the definition — the ONLY copy of the view's
+    * keys/aggs/filter — through [[MetaFiles.replace]] under the MV table
+    * lock: a delete-then-rename crash never strands the view
+    * definition-less, and a lock-free reader's heal finishing the rename
+    * counts as success. A failed rename with a FOREIGN image in place is
+    * refused.
     */
   private def writeDef(fs: FileSystem, mvRoot: Path, d: MvDef): Unit = {
     val p = defPath(mvRoot)
-    fs.mkdirs(p.getParent)
-    val next = new Path(p.getParent, ".def-next")
     val body = (Seq("graft-mv v1", s"source ${enc(d.sourceRoot)}", s"version ${d.refreshedVersion}") ++
       (if (d.chainId.nonEmpty) Seq(s"chain ${enc(d.chainId)}") else Seq.empty) ++
       d.filterSql.map(f => s"filter ${enc(f)}").toSeq ++
@@ -318,22 +306,7 @@ object Mv {
         s"reft ${if (o.isEmpty) "-" else enc(o)} ${enc(c)} ${enc(t)}"
       } ++
       d.aggExprs.map(a => s"agg ${enc(a)}")).mkString("", "\n", "\n")
-    val out = fs.create(next, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(next, p)) {
-      // a LOCK-FREE reader's [[definition]] heal may have finished our
-      // rename for us inside the delete→rename window — that is success,
-      // not failure, iff the def now holds exactly this image
-      val healed =
-        fs.exists(p) && {
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString == body
-          finally in.close()
-        }
-      if (!healed) sys.error(s"materialized-view definition update failed for $p")
-    }
+    if (!MetaFiles.replace(fs, p, body)) sys.error(s"materialized-view definition update failed for $p")
   }
 
   // ---- MV registry at the SOURCE root (the automatic-rewrite index) ----
@@ -362,12 +335,7 @@ object Mv {
       val dir = mvRefsDir(new Path(sourceRoot))
       val fs = fsOf(spark, dir)
       val p = new Path(dir, refName(mvRoot))
-      if (!fs.exists(p)) {
-        fs.mkdirs(dir)
-        val out = fs.create(p, true) // content-idempotent: overwrite races are benign
-        try out.write(mvRoot.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
+      if (!fs.exists(p)) MetaFiles.publish(fs, p, mvRoot.getBytes(StandardCharsets.UTF_8))
     } catch {
       case scala.util.control.NonFatal(e) =>
         log.warn(s"mv registry: cannot register $mvRoot at $sourceRoot (${e.getMessage}); " +
@@ -392,14 +360,12 @@ object Mv {
     try {
       if (!fs.exists(dir)) Seq.empty
       else
-        fs.listStatus(dir).toSeq.filter(_.isFile).flatMap { st =>
-          try {
-            val in = fs.open(st.getPath)
-            try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-              .filter(_.nonEmpty)
-            finally in.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }.sorted
+        fs.listStatus(dir).toSeq.filter(st => st.isFile && !st.getPath.getName.startsWith("."))
+          .flatMap { st =>
+            try MetaFiles.readText(fs, st.getPath).map(_.trim).filter(_.nonEmpty)
+            catch { case scala.util.control.NonFatal(_) => None }
+          }
+          .sorted
     } catch { case scala.util.control.NonFatal(_) => Seq.empty }
   }
 
@@ -709,7 +675,7 @@ object Mv {
       refSource =
         try Some(definition(spark, mvRoot).sourceRoot)
         catch { case scala.util.control.NonFatal(_) => None }
-      val there = fs.exists(p) || fs.exists(new Path(p.getParent, ".def-next"))
+      val there = fs.exists(p) || fs.exists(MetaFiles.nextImage(p))
       if (!there) {
         if (fs.exists(tombstone)) {
           // a PRIOR drop unregistered the view but its sweep never
@@ -736,11 +702,10 @@ object Mv {
         // headless-but-tombstoned husk every MV face refuses (refresh
         // refuses; create refuses on the tombstone) and a retry drop
         // resumes.
-        val out = fs.create(tombstone, true)
-        try out.write("graft-mv dropped".getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        if (!MetaFiles.publish(fs, tombstone, "graft-mv dropped".getBytes(StandardCharsets.UTF_8)))
+          sys.error(s"materialized-view drop could not record its tombstone at $tombstone")
         fs.delete(p, false)
-        fs.delete(new Path(p.getParent, ".def-next"), false)
+        fs.delete(MetaFiles.nextImage(p), false)
         true
       }
     }

@@ -23,26 +23,59 @@ import org.apache.spark.sql.types.StructField
   * an explicit [[vacuum]].
   *
   * Layout under the table root:
-  *  - `_graft_manifests/v0000000001.manifest` … — one relative data-file
-  *    path per line, sorted; committed via temp-write + atomic rename.
-  *    Underscore prefix → invisible to Spark's file index (same convention
-  *    as `_SUCCESS`/`_spark_metadata`).
   *  - `.snap-archive/<relpath>` — replaced data files, preserving their
   *    partition-dir structure (`day=X/part-….parquet`), so snapshot reads
   *    keep hive partition-column inference (archived files scan with
   *    `basePath = <root>/.snap-archive`, under which the `k=v` segments
-  *    line up exactly as the live tree's do).
+  *    line up exactly as the live tree's do). `.snap-dv/` holds deletion
+  *    vectors, `.branch/<name>/` a branch's private data files.
+  *  - `_graft_manifests/` — the metadata. Underscore prefix → invisible
+  *    to Spark's file index (same convention as `_SUCCESS` /
+  *    `_spark_metadata`). Each file names the protocol that writes it;
+  *    every small file goes through [[MetaFiles]] (`publish` = unique
+  *    temp + rename, `replace` = sealed `.<name>-next` image + delete +
+  *    rename, healed on read):
+  *    - `v0000000001.manifest` … — full checkpoints and per-commit
+  *      deltas. Writers run under the table lock or, on the lock-free
+  *      append face, optimistic concurrency: a version slot is won by a
+  *      create-exclusive `.claim-v<version>` file, the manifest is
+  *      written to a temp file and, after a fence that re-checks the
+  *      claim, renamed into place ([[tryWriteManifestClaimed]]). A loser
+  *      rebases onto the new head. Versions are dense and never reused.
+  *    - `.lock` — the table lock: create-exclusive with a heartbeat
+  *      ([[withTableLock]]). The lock and the claims are the only files
+  *      written outside [[MetaFiles]].
+  *    - `.latest-hint` — best-effort newest version (`publish`,
+  *      overwriting).
+  *    - `v….manifest.pidx` — a checkpoint's partition index (`publish`).
+  *    - `.chain` — the chain identity nonce (`publish`, once per chain).
+  *    - `bloom/`, `ndv/`, `sum/` — per-(file, column) sidecars
+  *      (`publish`, from Spark tasks too).
+  *    - `refs/<name>` — immutable pins, rewritten only to follow a
+  *      branch rebase (`publish`).
+  *    - `branches/<name>/` — a branch's delta manifests (`publish`), its
+  *      `.chain` nonce (`publish`) and its `.mor-epoch-<tag>` markers.
+  *    - `.mor-epoch-<tag>`, `.epoch-<queryId>` — the upsert and the
+  *      streaming sink's epoch high-water marks (`replace`, via
+  *      `MetaFiles.last`/`advance`).
+  *    - `mv-refs/<sha256>` — the views registered over this table
+  *      (`publish`); `mv/def` — a view's definition (`replace`) and
+  *      `mv/.def-dropped` its drop tombstone (`publish`).
+  *    - `checks/<name>`, `checks/.pending-<name>` and `checks/.stamp` —
+  *      CHECK constraints, their unproven markers and the check-set nonce
+  *      (`publish`).
   *
   * Relative paths are never reused: Spark part-file names carry a per-job
   * UUID, and [[Sources.deleteWhere]] gives rewritten files a fresh name —
   * so `<relpath>` is a stable identity and the flat archive cannot
   * collide ([[archiveFile]] still checks and fails loudly).
   *
-  * Scale: a manifest is one line per data file — the same metadata the
-  * scan's own listing materializes; commits cost one listing + one small
-  * file write, reads cost zero extra I/O (the explicit file list REPLACES
-  * the directory listing). Single-writer per table, like the maintenance
-  * ops themselves; readers need no coordination at any concurrency.
+  * Scale: a manifest is one line per data file (or, for a delta, per
+  * changed file) — the same metadata the scan's own listing
+  * materializes; reads cost zero extra I/O (the explicit file list
+  * REPLACES the directory listing). Writers serialize on the table lock
+  * or arbitrate version slots by claim; readers need no coordination at
+  * any concurrency.
   */
 object Snapshots {
 
@@ -172,10 +205,7 @@ object Snapshots {
     try localLockFile(fs, lock) match {
       case Some(nio) =>
         Some(new String(java.nio.file.Files.readAllBytes(nio), "UTF-8").trim)
-      case None =>
-        val in = fs.open(lock)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
+      case None => MetaFiles.readText(fs, lock).map(_.trim)
     } catch { case _: Exception => None } // vanished or unreadable mid-race
 
   /** Lock-tag format: `graft-lock <createdMs> <heartbeatMs> <owner> <appId>`.
@@ -442,11 +472,8 @@ object Snapshots {
     val fs = fsOf(spark, dir)
     val p = new Path(dir, ".chain")
     def read(): Option[String] =
-      try {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim).filter(_.nonEmpty)
-        finally in.close()
-      } catch { case _: java.io.IOException => None }
+      try MetaFiles.readText(fs, p).map(_.trim).filter(_.nonEmpty)
+      catch { case _: java.io.IOException => None }
     read().getOrElse {
       require(
         latestVersion(spark, root) > 0L,
@@ -459,11 +486,7 @@ object Snapshots {
         withTableLock(spark, root) {
           read().getOrElse {
             val fresh = java.util.UUID.randomUUID().toString
-            val tmp = new Path(dir, s".chain-tmp-${fresh.take(8)}")
-            val out = fs.create(tmp, true)
-            try out.write(fresh.getBytes("UTF-8"))
-            finally out.close()
-            if (!fs.rename(tmp, p)) fs.delete(tmp, false)
+            MetaFiles.publish(fs, p, fresh.getBytes("UTF-8"))
             read().getOrElse(fresh)
           }
         }
@@ -496,35 +519,17 @@ object Snapshots {
   private def latestHintPath(root: Path) = new Path(manifestDir(root), ".latest-hint")
 
   private def readLatestHint(fs: FileSystem, root: Path): Option[Long] =
-    try {
-      val p = latestHintPath(root)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try scala.util.Try(
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong).toOption
-        finally in.close()
-      }
-    } catch { case _: Exception => None } // racing hint writer: fall back
+    try MetaFiles.readLong(fs, latestHintPath(root))
+    catch { case _: Exception => None } // racing hint writer: fall back
 
   /** Best-effort hint refresh after a commit — losing a race or failing
     * outright only costs later readers extra forward probes (or one
     * listing), never a wrong answer.
     */
   private def writeLatestHint(fs: FileSystem, root: Path, version: Long): Unit =
-    try {
-      val p = latestHintPath(root)
-      val tmp = new Path(manifestDir(root), s".hint-tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try out.write(version.toString.getBytes("UTF-8"))
-      finally out.close()
-      // local rename replaces the destination atomically; concurrent
-      // writers race benignly (any committed version is a valid hint)
-      if (!fs.rename(tmp, p)) {
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-      }
-    } catch { case _: Exception => () }
+    // concurrent writers race benignly (any committed version is a valid hint)
+    try MetaFiles.publish(fs, latestHintPath(root), version.toString.getBytes("UTF-8"), overwrite = true)
+    catch { case _: Exception => () }
 
   private def listLatestVersion(fs: FileSystem, dir: Path): Long =
     fs.listStatus(dir)
@@ -1928,11 +1933,7 @@ object Snapshots {
       val nFiles = body.count(!_.startsWith("#"))
       val lines = Seq(s"#graft-pidx 1 $total $headerEnd $nFiles") ++
         groups.map(g => s"${hex(g.dir)}:${g.start}:${g.end}")
-      val tmp = new Path(target.getParent, s".pidx-tmp-${java.util.UUID.randomUUID().toString}")
-      val out = fs.create(tmp, true)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, pidxPath(target))) fs.delete(tmp, false)
+      MetaFiles.publish(fs, pidxPath(target), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     } catch { case _: Exception => () } // sidecars are an optimization only
 
   /** Parse a checkpoint's partition index, validated against the manifest
@@ -1943,13 +1944,7 @@ object Snapshots {
       fs: FileSystem,
       target: Path): Option[(Long, Long, Seq[PidxGroup])] =
     try {
-      val p = pidxPath(target)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
+      MetaFiles.readText(fs, pidxPath(target)).flatMap { text =>
         val lines = text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
         val head = lines.head.split(" ")
         if (head.length != 5 || head(0) != "#graft-pidx" || head(1) != "1") None
@@ -2898,9 +2893,14 @@ object Snapshots {
         conf: org.apache.hadoop.conf.Configuration,
         spec: FileSpec,
         sk: Sketches): Seq[(String, String, String)] = {
-      def fs(t: String) = new Path(t).getFileSystem(conf)
+      // a lost rename race is benign: sketches are deterministic per
+      // (file, col); the backfill's stale-`na` upgrade replaces instead
+      def put(target: String, bytes: Array[Byte], replace: Boolean = false): Unit = {
+        val p = new Path(target)
+        MetaFiles.publish(p.getFileSystem(conf), p, bytes, overwrite = replace)
+      }
       spec.ndv.indices.foreach { i =>
-        if (spec.ndv(i) != null) put(fs(spec.ndv(i)), spec.ndv(i), sk.regs(i))
+        if (spec.ndv(i) != null) put(spec.ndv(i), sk.regs(i))
       }
       val sums = spec.naSums.map { case (c, t) => (c, t, SumNa) } ++
         spec.sum.indices.filter(spec.sum(_) != null).map { i =>
@@ -2911,13 +2911,13 @@ object Snapshots {
           (spec.sumCols(i), spec.sum(i), content)
         }
       sums.foreach { case (_, t, content) =>
-        put(fs(t), t, content.getBytes("UTF-8"), replace = spec.replaceSums)
+        put(t, content.getBytes("UTF-8"), replace = spec.replaceSums)
       }
       spec.bloom.indices.foreach { i =>
         if (spec.bloom(i) != null) {
           val baos = new java.io.ByteArrayOutputStream()
           sk.blooms(i).writeTo(baos)
-          put(fs(spec.bloom(i)), spec.bloom(i), baos.toByteArray)
+          put(spec.bloom(i), baos.toByteArray)
         }
       }
       sums
@@ -2967,25 +2967,6 @@ object Snapshots {
     }
 
     private val NdvHexDigits = "0123456789abcdef".toCharArray
-
-    /** Atomic sidecar write: temp + rename. A lost rename race is benign
-      * (identical content — sketches are deterministic per (file, col));
-      * with `replace` (the backfill's stale-`na` upgrade) the existing
-      * target is replaced instead.
-      */
-    private def put(tfs: FileSystem, targetStr: String, bytes: Array[Byte], replace: Boolean = false): Unit = {
-      val target = new Path(targetStr)
-      val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID().toString}")
-      val out = tfs.create(tmp, true)
-      try out.write(bytes)
-      finally out.close()
-      if (!tfs.rename(tmp, target)) {
-        if (replace) {
-          tfs.delete(target, false)
-          if (!tfs.rename(tmp, target)) tfs.delete(tmp, false)
-        } else tfs.delete(tmp, false)
-      }
-    }
   }
 
   /** Build the MISSING NDV register AND SUM sidecars for every pinned
@@ -3120,16 +3101,12 @@ object Snapshots {
     if (sumMissCache.containsKey(key)) return None
     val fs = fsOf(spark, p)
     try {
-      if (!fs.exists(p)) {
+      val txt = MetaFiles.readText(fs, p).map(_.trim).getOrElse {
         if (sumMissCache.size() >= 65536)
           sumMissCache.keySet.iterator().asScala.take(16384).foreach(sumMissCache.remove)
         sumMissCache.put(key, java.lang.Boolean.TRUE)
         return None
       }
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
       val v = if (txt == SumNa) None else Some(BigInt(txt))
       if (sumCache.size() >= 65536)
         sumCache.keySet.iterator().asScala.take(16384).foreach(sumCache.remove)
@@ -3499,12 +3476,8 @@ object Snapshots {
     val v = if (version > 0) version else latestVersion(spark, root)
     require(v > 0, s"no manifest committed under $root")
     val p = manifestPath(new Path(root), v)
-    val fs = fsOf(spark, p)
-    require(fs.exists(p), s"manifest v$v does not exist under $root (vacuumed or never committed)")
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val text = MetaFiles.readText(fsOf(spark, p), p).getOrElse(throw new IllegalArgumentException(
+      s"manifest v$v does not exist under $root (vacuumed or never committed)"))
     text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
@@ -4266,12 +4239,7 @@ object Snapshots {
       }
       val p = refPath(rootPath, name)
       require(!fs.exists(p), s"ref '$name' already exists on $root — refs are immutable pins")
-      fs.mkdirs(p.getParent)
-      val tmp = new Path(p.getParent, s".tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, p)) { fs.delete(tmp, false); sys.error(s"ref '$name' creation raced") }
+      if (!MetaFiles.publish(fs, p, v.toString.getBytes("UTF-8"))) sys.error(s"ref '$name' creation raced")
       v
     }
 
@@ -4285,17 +4253,17 @@ object Snapshots {
       fs.listStatus(d)
         .toSeq
         .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
-        .map { st =>
-          val in = fs.open(st.getPath)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-          // fail LOUDLY on garbage: vacuum computes its retention set from
+        .flatMap { st =>
+          // a ref dropped since the listing is no pin; one that reads
+          // fails LOUDLY on garbage: vacuum computes its retention set from
           // this map, so silently dropping an unparsable ref would let the
           // next vacuum reclaim a pinned version's manifests and data —
           // silent data loss in the one feature whose contract is retention
-          st.getPath.getName -> scala.util.Try(txt.toLong).getOrElse(sys.error(
-            s"ref file ${st.getPath} holds unparsable content '$txt' — fix or delete it " +
-              "(refusing to treat the pin as absent: vacuum retention derives from refs)"))
+          MetaFiles.readText(fs, st.getPath).map(_.trim).map { txt =>
+            st.getPath.getName -> scala.util.Try(txt.toLong).getOrElse(sys.error(
+              s"ref file ${st.getPath} holds unparsable content '$txt' — fix or delete it " +
+                "(refusing to treat the pin as absent: vacuum retention derives from refs)"))
+          }
         }
         .toMap
   }
@@ -4308,15 +4276,9 @@ object Snapshots {
     */
   def refVersion(spark: SparkSession, root: String, name: String): Option[Long] = {
     val p = refPath(new Path(root), name)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(scala.util.Try(txt.toLong).getOrElse(sys.error(
-        s"ref file $p holds unparsable content '$txt' — fix or delete it")))
+    MetaFiles.readText(fsOf(spark, p), p).map(_.trim).map { txt =>
+      scala.util.Try(txt.toLong).getOrElse(sys.error(
+        s"ref file $p holds unparsable content '$txt' — fix or delete it"))
     }
   }
 
@@ -4355,6 +4317,12 @@ object Snapshots {
 
   private def branchManifestPath(root: Path, name: String, v: Long): Path =
     new Path(branchDir(root, name), f"v$v%010d.manifest")
+
+  private def branchManifestLines(fs: FileSystem, root: Path, name: String, v: Long): Seq[String] = {
+    val p = branchManifestPath(root, name, v)
+    MetaFiles.readText(fs, p).getOrElse(throw new java.io.FileNotFoundException(p.toString))
+      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+  }
 
   private def branchVersions(fs: FileSystem, bdir: Path): Seq[Long] =
     if (!fs.exists(bdir)) Seq.empty
@@ -4495,9 +4463,8 @@ object Snapshots {
       // marker — mtime identity alone is coarse (1 s ticks on some
       // filesystems) and two chains could share it
       val nonce = new Path(branchDir(rootPath, name), ".chain")
-      val out = fs.create(nonce, true)
-      try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-      finally out.close()
+      if (!MetaFiles.publish(fs, nonce, java.util.UUID.randomUUID().toString.getBytes("UTF-8")))
+        sys.error(s"branch '$name' chain nonce write failed at $nonce")
       v
     }
 
@@ -4527,14 +4494,8 @@ object Snapshots {
       versions == (1L to versions.length.toLong),
       s"branch '$name' of $root has a broken manifest chain (found $versions) — " +
         "a branch manifest is missing or corrupt; refusing to read around the gap")
-    val manifests: Seq[(Long, Seq[String])] = versions.map { bvv =>
-      val in = fs.open(branchManifestPath(rootPath, name, bvv))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        finally in.close()
-      bvv -> lines
-    }
+    val manifests: Seq[(Long, Seq[String])] =
+      versions.map(bvv => bvv -> branchManifestLines(fs, rootPath, name, bvv))
     // a REBASE manifest (`#fork <v>`) restarts reconstruction from main
     // version v: the chain's prefix belongs to the pre-rebase world and
     // must not fold in (the marker manifest itself carries the branch's
@@ -4598,17 +4559,13 @@ object Snapshots {
     def unreadable() = s"unreadable-${java.util.UUID.randomUUID()}"
     val chainId: String =
       try {
-        val nonce = new Path(branchDir(rootPath, name), ".chain")
-        if (fs.exists(nonce)) {
-          val in = fs.open(nonce)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        } else
+        MetaFiles.readText(fs, new Path(branchDir(rootPath, name), ".chain")).getOrElse {
           versions.headOption
             .map(v =>
               try fs.getFileStatus(branchManifestPath(rootPath, name, v)).getModificationTime.toString
               catch { case _: Exception => unreadable() })
             .getOrElse("0")
+        }
       } catch { case _: Exception => unreadable() }
     val (scannedUpTo, cachedFork) =
       Option(branchForkCache.get(key))
@@ -4621,11 +4578,8 @@ object Snapshots {
           .filter(_ > scannedUpTo)
           .reverseIterator
           .map { v =>
-            val in = fs.open(branchManifestPath(rootPath, name, v))
-            val lines =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n").toSeq
-              finally in.close()
-            lines.find(_.startsWith("#fork ")).map(_.stripPrefix("#fork ").trim.toLong)
+            branchManifestLines(fs, rootPath, name, v)
+              .find(_.startsWith("#fork ")).map(_.stripPrefix("#fork ").trim.toLong)
           }
           .collectFirst { case Some(f) => f }
         // the newest marker wins; none in the new segment keeps the old
@@ -4770,11 +4724,8 @@ object Snapshots {
       minus.sorted.map("-" + _) ++
       plus.sortBy(_._1).map { case (rel, st) => "+" + renderFileLine(rel, st) }
     val target = branchManifestPath(rootPath, name, prevB + 1L)
-    val tmp = new Path(bdir, s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, target)) { fs.delete(tmp, false); sys.error(s"branch commit raced on $target") }
+    if (!MetaFiles.publish(fs, target, (body.mkString("\n") + "\n").getBytes("UTF-8")))
+      sys.error(s"branch commit raced on $target")
     prevB + 1L
   }
 
@@ -5101,26 +5052,11 @@ object Snapshots {
     */
   private def syncRef(fs: FileSystem, rootPath: Path, name: String, v: Long): Unit = {
     val p = refPath(rootPath, name)
-    val cur =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try scala.util.Try(
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong).toOption
-        finally in.close()
-      }
-    if (!cur.contains(v)) {
-      fs.mkdirs(p.getParent)
-      val tmp = new Path(p.getParent, s".tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8"))
-      finally out.close()
-      // HDFS rename refuses an existing dst (local FS overwrites): drop
-      // the stale pin first — a crash in between is harmless, the chain's
-      // fork marker stays authoritative and the next locked op re-syncs
-      if (fs.exists(p)) fs.delete(p, false)
-      if (!fs.rename(tmp, p)) { fs.delete(tmp, false); sys.error(s"ref '$name' resync raced") }
-    }
+    val cur = scala.util.Try(MetaFiles.readLong(fs, p)).toOption.flatten
+    // a crash between an overwrite's delete and rename is harmless: the
+    // chain's fork marker stays authoritative and the next locked op re-syncs
+    if (!cur.contains(v) && !MetaFiles.publish(fs, p, v.toString.getBytes("UTF-8"), overwrite = true))
+      sys.error(s"ref '$name' resync raced")
   }
 
   /** Drop the branch whole: its manifests, its private data files and its

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.Snapshots
+import graft.sources.{MetaFiles, Snapshots}
 
 /** Exactly-once Structured Streaming sink for snapshot tables — the
   * native `df.writeStream.toTable("cat.t")` path, closing the loop the
@@ -94,22 +94,12 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
       partCols)
   }
 
-  private def lastCommitted(fs: org.apache.hadoop.fs.FileSystem, root: Path): Long = {
-    val m = epochMarker(root)
-    if (!fs.exists(m)) -1L
-    else {
-      val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val rootPath = new Path(dir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Snapshots.withTableLock(spark, dir) {
       val stage = new Path(rootPath, stageDir(epochId))
-      if (lastCommitted(fs, rootPath) >= epochId) {
+      if (MetaFiles.last(fs, epochMarker(rootPath)) >= epochId) {
         fs.delete(stage, true) // replayed epoch: nothing to do
         return
       }
@@ -159,13 +149,7 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
           spark,
           dir,
           stagedRels.filter(rel => fs.exists(new Path(rootPath, rel))))
-      val tmp = new Path(epochMarker(rootPath).getParent, s".epoch-tmp-$queryId")
-      val out = fs.create(tmp, true)
-      try out.write(epochId.toString.getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(epochMarker(rootPath), false)
-      if (!fs.rename(tmp, epochMarker(rootPath)))
-        sys.error(s"epoch high-water update failed for $queryId@$epochId")
+      MetaFiles.advance(fs, epochMarker(rootPath), epochId)
     }
   }
 

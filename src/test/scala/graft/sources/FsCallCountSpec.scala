@@ -1,0 +1,165 @@
+package graft.sources
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+import graft.SparkSpec
+
+/** A local filesystem on the custom `fscount` scheme that counts the
+  * namespace calls made through it while [[CountingFs.recording]] is on:
+  * creates, renames, deletes, mkdirs and exists probes. Internal calls
+  * (a create making its parent dirs) count too, as they cost the same.
+  */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("fscount:///")
+  override def create(
+      f: Path,
+      permission: FsPermission,
+      overwrite: Boolean,
+      bufferSize: Int,
+      replication: Short,
+      blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingFs.bump("create")
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(
+      f: Path,
+      overwrite: Boolean,
+      bufferSize: Int,
+      replication: Short,
+      blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingFs.bump("create")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CountingFs.bump("rename")
+    super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CountingFs.bump("delete")
+    super.delete(p, recursive)
+  }
+  override def mkdirs(p: Path): Boolean = {
+    CountingFs.bump("mkdirs")
+    super.mkdirs(p)
+  }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
+    CountingFs.bump("mkdirs")
+    super.mkdirs(p, permission)
+  }
+  override def exists(p: Path): Boolean = {
+    CountingFs.bump("exists")
+    super.exists(p)
+  }
+}
+
+object CountingFs {
+  val Kinds: Seq[String] = Seq("create", "rename", "delete", "mkdirs", "exists")
+  @volatile var recording = false
+  private val counts = new ConcurrentHashMap[String, AtomicLong]()
+  def bump(kind: String): Unit =
+    if (recording) counts.computeIfAbsent(kind, _ => new AtomicLong()).incrementAndGet()
+
+  /** The calls `body` issues, per kind. */
+  def during(body: => Unit): Map[String, Long] = {
+    counts.clear()
+    recording = true
+    try body
+    finally recording = false
+    Kinds.map(k => k -> Option(counts.get(k)).map(_.get).getOrElse(0L)).toMap
+  }
+}
+
+/** Count law of the metadata-file protocol: one steady-state operation of
+  * each commit family issues no more namespace calls than the bounds
+  * below, which are the counts measured before the small-file writes and
+  * reads moved into [[MetaFiles]] (the probe printed by this spec, run on
+  * that code). Each operation runs once untimed first so the counted run
+  * sees the steady state (epoch marker present, view registered).
+  */
+class FsCallCountSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  private val bounds: Map[String, Map[String, Long]] = Map(
+    "upsert_epoch" ->
+      Map("create" -> 17L, "rename" -> 16L, "delete" -> 6L, "mkdirs" -> 30L, "exists" -> 54L),
+    "commit_append" ->
+      Map("create" -> 7L, "rename" -> 6L, "delete" -> 1L, "mkdirs" -> 11L, "exists" -> 26L),
+    "mv_refresh" ->
+      Map("create" -> 10L, "rename" -> 9L, "delete" -> 6L, "mkdirs" -> 21L, "exists" -> 74L))
+
+  private def base(tag: String): String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.fscount.impl", classOf[CountingFs].getName)
+    "fscount:" + Files.createTempDirectory(tag).toString
+  }
+
+  private def table(dir: String): Unit = {
+    val rows = Seq(("d01", "a", 10L), ("d01", "b", 11L), ("d02", "a", 20L), ("d03", "c", 3L))
+      .toDF("day", "cat", "v")
+    Sources.writeParquet(rows.repartition(1), dir, partitionCols = Seq("day"))
+    Snapshots.commit(spark, dir, Seq("day", "cat"), Seq("cat"))
+  }
+
+  private def check(op: String, got: Map[String, Long]): Unit = {
+    info(s"fs-calls $op " + CountingFs.Kinds.map(k => s"$k=${got(k)}").mkString(" "))
+    CountingFs.Kinds.foreach { k =>
+      assert(got(k) <= bounds(op)(k), s"$op issues ${got(k)} $k calls, above ${bounds(op)(k)}")
+    }
+  }
+
+  test("one DeleteVectors.upsert epoch issues no more namespace calls than the bound") {
+    val dir = base("fscount_ups") + "/t"
+    table(dir)
+    def epoch(e: Long, v: Long) =
+      DeleteVectors.upsert(
+        spark, dir, Seq(("d01", "a", v), ("d04", s"n$e", v)).toDF("day", "cat", "v"),
+        Seq("day", "cat"), streamTag = "q", epochId = e)
+    epoch(0L, 100L)
+    check("upsert_epoch", CountingFs.during(epoch(1L, 101L)))
+    assert(DeleteVectors.upsert(
+      spark, dir, Seq(("d01", "a", 0L)).toDF("day", "cat", "v"), Seq("day", "cat"),
+      streamTag = "q", epochId = 1L) == ((0L, 0L)), "the counted epoch must have advanced the marker")
+  }
+
+  test("one Snapshots.commitAppend issues no more namespace calls than the bound") {
+    val dir = base("fscount_app") + "/t"
+    table(dir)
+    // lands one fresh parquet file under `day=<day>/`, uncommitted
+    def land(day: String): String = {
+      val stage = s"$dir/.stage-$day"
+      Seq(("x", 1L)).toDF("cat", "v").coalesce(1).write.parquet(stage)
+      val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val part = fs.listStatus(new Path(stage)).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+      val rel = s"day=$day/${part.getName}"
+      fs.mkdirs(new Path(s"$dir/day=$day"))
+      assert(fs.rename(part, new Path(s"$dir/$rel")))
+      fs.delete(new Path(stage), true)
+      rel
+    }
+    Snapshots.commitAppend(spark, dir, Seq(land("d05")))
+    val v = Snapshots.latestVersion(spark, dir)
+    val rel = land("d06")
+    check("commit_append", CountingFs.during(Snapshots.commitAppend(spark, dir, Seq(rel))))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+  }
+
+  test("one Mv.refresh issues no more namespace calls than the bound") {
+    val b = base("fscount_mv")
+    val (src, mv) = (s"$b/src", s"$b/mv")
+    table(src)
+    Mv.create(spark, src, mv, Seq("day"), Seq("count(*) AS n", "sum(v) AS sv"))
+    DeleteVectors.upsert(spark, src, Seq(("d02", "a", 21L)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    Mv.refresh(spark, mv)
+    DeleteVectors.upsert(spark, src, Seq(("d03", "c", 4L)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    check("mv_refresh", CountingFs.during(Mv.refresh(spark, mv)))
+    assert(Mv.definition(spark, mv).refreshedVersion == Snapshots.latestVersion(spark, src))
+  }
+}
