@@ -1,8 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.util.DynamicVariable
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.Collect
 import graft.functions.Text
 
 /** Deduplication operators for training-data pipelines.
@@ -418,9 +422,10 @@ object Dedup {
   }
 
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    // Persisted because the self-join scans it from both sides.
+    // Not persisted: both join sides are the same plan, so Spark reuses
+    // one exchange for them (or broadcasts one side when it is small),
+    // and a persist here would leave a cache entry no caller releases.
     val bands = lshBands(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val l = bands.select(col(idCol).as("a_id"), col("band"), col("bandval"))
     val r = bands.select(col(idCol).as("b_id"), col("band"), col("bandval"))
     l.join(r, Seq("band", "bandval"))
@@ -429,24 +434,90 @@ object Dedup {
       .distinct()
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: every node's label converges to the smallest
-    * node id reachable from it. This is the missing last mile of pairwise
-    * dedup — near-dup PAIRS don't dedupe a corpus, CLUSTERS do (pick one
-    * canonical doc per component, drop the rest).
+  /** Byte ceiling of the driver paths of [[connectedComponents]] and
+    * [[lshDedupClusters]]: 16 bytes per collected row, an edge, a
+    * candidate pair or an `(id, shingle hash)`, one budget shared by every
+    * collect of a call. It is observed while collecting (at most the rows
+    * the remaining budget could hold, plus one, are read), so an input
+    * above it never reaches the driver whole and runs the Spark loop. A
+    * constant; specs force the loop with `withValue(0L)`.
+    */
+  private[llm] val maxDriverBytes = new DynamicVariable[Long](32L << 20)
+  private val RowBytes = 16L
+
+  /** A two-long-column frame's rows when they fit `budget` and hold no
+    * null; None sends the caller to its Spark loop.
+    */
+  private def longPairs(pairs: DataFrame, budget: Long): Option[Array[(Long, Long)]] =
+    if (!pairs.schema.forall(_.dataType == LongType)) None
+    else
+      Collect
+        .atMost(pairs, budget / RowBytes)
+        .filterNot(_.exists(_.anyNull))
+        .map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var k = 0
+    s.indices.foreach { i => if (i == 0 || s(i) != s(k - 1)) { s(k) = s(i); k += 1 } }
+    java.util.Arrays.copyOf(s, k)
+  }
+
+  /** Connected components of `edges` by union-find, as the `(id, label)`
+    * frame the Spark loop returns: every endpoint labeled with the
+    * smallest id in its component, which is the loop's fixpoint.
+    */
+  private def componentFrame(spark: SparkSession, edges: Array[(Long, Long)], idNullable: Boolean): DataFrame = {
+    val ids = sortedDistinct(edges.flatMap { case (a, b) => Array(a, b) })
+    // positions ascend with ids, so linking the larger root under the
+    // smaller keeps every root its component's smallest id
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(java.util.Arrays.binarySearch(ids, a)), find(java.util.Arrays.binarySearch(ids, b)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val schema = StructType(Seq(StructField("id", LongType, idNullable), StructField("label", LongType)))
+    spark.createDataFrame(java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), ids(find(i)))): _*), schema)
+  }
+
+  /** Connected components over an undirected edge list: every node's
+    * label is the smallest node id reachable from it, as `(id, label)`
+    * rows (a node with no edge has no row). This is the missing last mile
+    * of pairwise dedup — near-dup PAIRS don't dedupe a corpus, CLUSTERS do
+    * (pick one canonical doc per component, drop the rest).
     *
-    * Scale shape: each iteration is one shuffle on node id (edges join
-    * labels + min-aggregate); iteration count is the graph diameter, and
-    * near-dup components are dense little cliques (diameter ~1–2), not
-    * long chains. The convergence check ships one scalar to the driver
-    * per iteration. Labels persist across iterations with the same
-    * materialize-then-unpersist discipline as ivfTrain.
+    * Two paths with one answer. While the edges are long pairs without a
+    * null and fit [[maxDriverBytes]], they are collected once and labeled
+    * by union-find on the driver: the returned frame is local, built with
+    * no further job and no `localCheckpoint`. Above the ceiling (or for a
+    * null or non-long endpoint) iterative min-label propagation runs in
+    * Spark: one shuffle on node id per round, rounds = graph diameter, one
+    * scalar shipped to the driver per round.
     *
     * The fixpoint is iteration-order independent, so the result is
     * deterministic and oracle-checkable (DuckDB computes the same closure
-    * with a recursive CTE) even though the loop is data-dependent.
+    * with a recursive CTE); DedupSpec's parity law pins both paths to the
+    * same rows.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val pairs = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    longPairs(pairs, maxDriverBytes.value) match {
+      case Some(es) => componentFrame(edges.sparkSession, es, pairs.schema.exists(_.nullable))
+      case None => componentsLoop(pairs)
+    }
+  }
+
+  /** [[connectedComponents]] above the ceiling: min-label propagation over
+    * `(src, dst)` rows to the fixpoint. Labels persist across iterations
+    * with the same materialize-then-unpersist discipline as ivfTrain.
+    */
+  private def componentsLoop(pairs: DataFrame): DataFrame = {
     // localCheckpoint (not persist): an iterative loop's real cost at
     // small-to-mid scale is DRIVER-SIDE RE-PLANNING — persist caches
     // execution but every subsequent action still re-optimizes the full
@@ -460,7 +531,7 @@ object Dedup {
     // churn / dynamic allocation, use reliable checkpointing
     // (sc.setCheckpointDir + .checkpoint()) for the same constant-size
     // plans with HDFS-durable blocks; the replanning win is identical.
-    val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).localCheckpoint()
+    val fwd = pairs.localCheckpoint()
     // Size the loop's parallelism to the MATERIALIZED edge count: the
     // near-dup edge list is orders smaller than the corpus it came from,
     // and a fixed session-wide shuffle width would make every round pay
@@ -469,7 +540,7 @@ object Dedup {
     // keeping every loop frame hash-partitioned the same way makes each
     // round's join co-partitioned (shuffle only on the aggregate).
     val edgeRows = fwd.count() * 2
-    val sessionWidth = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val sessionWidth = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val parts = math.max(1L, math.min(sessionWidth.toLong, edgeRows / 1000000L + 1L)).toInt
     val undirected = fwd
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -486,8 +557,10 @@ object Dedup {
     // Convergence statistic: labels only ever decrease (min-propagation),
     // so Σ label is strictly decreasing until the fixpoint — one scalar
     // aggregate on the checkpointed frame per round, no per-round join
-    // against the previous labels.
-    var prevSum = labels.agg(sum(col("label"))).head.getLong(0)
+    // against the previous labels. The sum of no labels is null, so an
+    // empty edge list converges after one round to empty labels.
+    def labelSum(l: DataFrame): Any = l.agg(sum(col("label"))).head.get(0)
+    var prevSum = labelSum(labels)
     var converged = false
     while (!converged) {
       // localCheckpoint keeps every round's plan the SAME constant size:
@@ -501,7 +574,7 @@ object Dedup {
         .groupBy(col("id"))
         .agg(min(col("label")).as("label"))
         .localCheckpoint()
-      val nextSum = next.agg(sum(col("label"))).head.getLong(0)
+      val nextSum = labelSum(next)
       converged = nextSum == prevSum
       prevSum = nextSum
       labels = next
@@ -509,27 +582,27 @@ object Dedup {
     labels
   }
 
-  /** Every doc of `df` labeled with its component over `edges` (the
+  /** Every doc of `df` labeled with its component in `comp` (the
     * smallest doc id in it; singletons label themselves) and a canonical
     * flag — the shared tail of [[dedupClusters]] and [[lshDedupClusters]].
     */
-  private def clusterLabels(df: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
-    val comp = connectedComponents(edges, "a_id", "b_id")
+  private def clusterLabels(df: DataFrame, idCol: String, comp: DataFrame): DataFrame =
     df.select(col(idCol))
       .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("label"), col(idCol)))
       .withColumn("is_canonical", (col("cluster_id") === col(idCol)).cast("long"))
       .select(col(idCol), col("cluster_id"), col("is_canonical"))
-  }
 
   /** End-to-end near-dup clustering: jaccard pairs at `threshold` → edge
     * list → components → every doc labeled with its cluster id (the
     * smallest doc id in its component; singletons label themselves) and a
-    * canonical flag. Downstream dedup = `filter(is_canonical)`.
+    * canonical flag. Downstream dedup = `filter(is_canonical)`. The
+    * components come from [[connectedComponents]]: union-find on the
+    * driver while the pair list fits its ceiling, the Spark loop above it.
     */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double): DataFrame = {
     val edges = jaccardPairs(df, idCol, textCol, n, threshold).select("a_id", "b_id")
-    clusterLabels(df, idCol, edges)
+    clusterLabels(df, idCol, connectedComponents(edges, "a_id", "b_id"))
   }
 
   /** Scale-path near-dup clustering: LSH candidate pairs (banded minhash)
@@ -537,19 +610,106 @@ object Dedup {
     * connected components. [[dedupClusters]]' blocking is the
     * shared-shingle self-join — correct but proportional to Σ df(shingle)²;
     * here the candidate set is the banded one (constant 128-byte signature
-    * per doc, band buckets as the join key), the jaccard joins touch only
+    * per doc, band buckets as the join key), the jaccard gate touches only
     * docs that appear in some candidate pair, and recall is the standard
     * LSH S-curve (subset-of-exact law in DedupSpec). This is the
-    * MinHash-LSH dedup recipe (Broder; GPT-3/Gopher corpus dedup) end to
-    * end as one Spark plan.
+    * MinHash-LSH dedup recipe (Broder; GPT-3/Gopher corpus dedup).
+    *
+    * Two paths with one answer. While the candidate pairs and then the
+    * candidate docs' `(id, shingle hash)` rows fit [[maxDriverBytes]]
+    * together (and the id is a long), the pairs are collected once, the
+    * hashes in one query over `df`, and the gate and union-find run on the
+    * driver: a fixed number of Spark jobs whatever the clusters'
+    * diameter, and no `localCheckpoint`. Above the ceiling the gate is
+    * Spark joins over the checkpointed candidates and the components come
+    * from [[connectedComponents]]. Both read hashes through
+    * `Text.shingleHashes` and keep a pair when both sides have a shingle,
+    * they share one, and `inter / (na + nb - inter) >= threshold` over
+    * each id's distinct hash set (a repeated id pools its rows' sets);
+    * DedupSpec's parity law pins both paths to the same rows. Neither
+    * path leaves a cache entry behind.
     */
   def lshDedupClusters(df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double): DataFrame = {
+    val cand = lshCandidatePairs(df, idCol, textCol, n)
+    val budget = maxDriverBytes.value
+    val onDriver = for {
+      pairs <- longPairs(cand, budget)
+      sets <- shingleSets(df, idCol, textCol, n, pairs, budget - RowBytes * pairs.length)
+    } yield componentFrame(df.sparkSession, exactGate(pairs, sets, threshold), df.schema(idCol).nullable)
+    val comp = onDriver.getOrElse(connectedComponents(gateLoop(df, idCol, textCol, n, threshold, cand), "a_id", "b_id"))
+    clusterLabels(df, idCol, comp)
+  }
+
+  /** The sorted distinct shingle hashes of every doc named in `pairs`,
+    * read by ONE query over `df` (a repeated id pools its rows; a doc
+    * without a shingle has no entry), or None when its `(id, hash)` rows
+    * do not fit `budget`.
+    */
+  private def shingleSets(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      pairs: Array[(Long, Long)],
+      budget: Long): Option[Map[Long, Array[Long]]] =
+    if (pairs.isEmpty) Some(Map.empty)
+    else {
+      // the candidate ids ride a broadcast variable, not a broadcast
+      // join: shipping them costs no Spark job
+      val ids = df.sparkSession.sparkContext.broadcast(sortedDistinct(pairs.flatMap { case (a, b) => Array(a, b) }))
+      val candidate = udf((id: Long) => java.util.Arrays.binarySearch(ids.value, id) >= 0)
+      val hashes = df
+        .filter(candidate(col(idCol)))
+        .select(col(idCol), explode(array_distinct(Text.shingleHashes(col(textCol), n))).as("__h"))
+      try
+        Collect
+          .atMost(hashes, budget / RowBytes)
+          .filterNot(_.exists(_.anyNull))
+          .map(_.groupMap(_.getLong(0))(_.getLong(1)).map { case (id, hs) => id -> sortedDistinct(hs) })
+      finally ids.destroy()
+    }
+
+  /** The pairs the Spark gate keeps: both sides have a shingle, they share
+    * one, and the jaccard — the same double division — reaches
+    * `threshold`.
+    */
+  private def exactGate(
+      pairs: Array[(Long, Long)],
+      sets: Map[Long, Array[Long]],
+      threshold: Double): Array[(Long, Long)] =
+    pairs.filter { case (a, b) =>
+      (sets.get(a), sets.get(b)) match {
+        case (Some(sa), Some(sb)) =>
+          // both sorted and distinct: one merge pass counts the overlap
+          var i = 0
+          var j = 0
+          var inter = 0L
+          while (i < sa.length && j < sb.length) {
+            if (sa(i) < sb(j)) i += 1
+            else if (sa(i) > sb(j)) j += 1
+            else { inter += 1; i += 1; j += 1 }
+          }
+          inter > 0 && inter.toDouble / (sa.length.toLong + sb.length - inter) >= threshold
+        case _ => false
+      }
+    }
+
+  /** [[lshDedupClusters]]' exact-jaccard gate as Spark joins: the edges
+    * among `cand` that pass it.
+    */
+  private def gateLoop(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      threshold: Double,
+      cand0: DataFrame): DataFrame = {
     // localCheckpoint, not persist: the candidate pairs feed three
     // downstream consumers (candIds broadcast, two gate joins) and sit on
     // top of the banded self-join plan — checkpointing makes every later
     // action plan against a LogicalRDD instead of re-optimizing that tree
-    // (see connectedComponents for the measured planning-cost rationale).
-    val cand = lshCandidatePairs(df, idCol, textCol, n).localCheckpoint()
+    // (see componentsLoop for the measured planning-cost rationale).
+    val cand = cand0.localCheckpoint()
     // The exact-jaccard gate only ever reads shingles of docs that appear
     // in some candidate pair — semi-join BEFORE exploding, so the shingle
     // shuffle is Σ|candidate docs| not Σ|corpus| (at 100 TB the candidate
@@ -575,12 +735,11 @@ object Dedup {
       .join(sh.select(col(idCol).as("b_id"), col("__h")), Seq("b_id", "__h"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("inter"))
-    val edges = inter
+    inter
       .join(sizes.select(col(idCol).as("a_id"), col("n_sh").as("na")), Seq("a_id"))
       .join(sizes.select(col(idCol).as("b_id"), col("n_sh").as("nb")), Seq("b_id"))
       .filter(col("inter").cast("double") / (col("na") + col("nb") - col("inter")) >= threshold)
       .select("a_id", "b_id")
-    clusterLabels(df, idCol, edges)
   }
 
   /** 16-bit simhash per doc over token occurrences. Near-dup = small

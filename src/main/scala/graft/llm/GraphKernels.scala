@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Det
+import graft.core.{Collect, Det}
 import graft.functions.Vectors
 import graft.plans.CosineSimExpr
 
@@ -74,11 +74,7 @@ private[llm] object GraphKernels {
 
   /** `df` collected when it has at most `maxRows` rows and no null field. */
   private def collectAtMost(df: DataFrame, maxRows: Long): Option[Array[Row]] =
-    if (maxRows <= 0) None
-    else {
-      val rows = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length > maxRows || rows.exists(_.anyNull)) None else Some(rows)
-    }
+    Collect.atMost(df, maxRows).filterNot(_.exists(_.anyNull))
 
   /** A `(vec_id, embedding, longs...)` frame as [[Vecs]] and its bytes,
     * when it fits `budget`. `dims` bounds the rows read: a vector holds at

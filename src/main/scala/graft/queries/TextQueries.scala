@@ -100,10 +100,12 @@ object TextQueries {
   /** Pairwise near-dup → CLUSTERS: connected components over the q24 edge
     * set, every doc labeled with its component's smallest doc id and a
     * canonical flag — the actual corpus-dedup deliverable (keep one doc
-    * per cluster). Spark side iterates min-label propagation to the
-    * fixpoint; the oracle computes the same fixpoint with a recursive CTE.
-    * The fixpoint is iteration-order independent — deterministic, hence
-    * hash-checkable despite the data-dependent loop.
+    * per cluster). The components are the min-label fixpoint: at this
+    * size the edge list is collected once and labeled by union-find on
+    * the driver; above `Dedup.connectedComponents`' ceiling Spark iterates
+    * min-label propagation to it. The oracle computes the same fixpoint
+    * with a recursive CTE. The fixpoint is iteration-order independent —
+    * deterministic, hence hash-checkable on either path.
     */
   def q78(s: SparkSession, d: String): DataFrame =
     Dedup
@@ -232,8 +234,13 @@ object TextQueries {
     * components → per-doc cluster labels. q78's exact twin blocks on
     * shared shingles (Σ df² join fan-out); this blocks on LSH bands
     * (constant 128-byte signature per doc) — the shape that survives when
-    * even the shingle join is too hot. Oracle replays signatures, bands,
-    * candidate gate and the component fixpoint (recursive CTE).
+    * even the shingle join is too hot. At this size the candidate pairs
+    * and the candidate docs' shingle hashes are collected once and the
+    * gate and union-find run on the driver (a fixed number of jobs);
+    * above `Dedup.lshDedupClusters`' ceiling the gate is Spark joins and
+    * the components a min-label loop, with identical rows. Oracle replays
+    * signatures, bands, candidate gate and the component fixpoint
+    * (recursive CTE).
     */
   def q123(s: SparkSession, d: String): DataFrame =
     Dedup

@@ -1228,32 +1228,32 @@ object DeleteVectors {
       // backfill epoch touching more partitions than the cap keeps the
       // broadcast semi-join. NULL-bearing tuples match nothing under SQL
       // equality in BOTH shapes, so they drop.
-      val cap = 1024
-      val tuples = touched.limit(cap + 1).collect()
-      if (tuples.length <= cap) {
-        val nonNull = tuples.filter(r => !r.anyNull)
-        if (nonNull.isEmpty) Seq.empty
-        else {
-          val pred = nonNull
-            .map(r =>
-              partCols.zipWithIndex
-                .map { case (c, i) => col(c) === lit(r.get(i)) }
-                .reduce(_ && _))
-            .reduce(_ || _)
+      graft.core.Collect.atMost(touched, 1024) match {
+        case Some(tuples) =>
+          val nonNull = tuples.filter(r => !r.anyNull)
+          if (nonNull.isEmpty) Seq.empty
+          else {
+            val pred = nonNull
+              .map(r =>
+                partCols.zipWithIndex
+                  .map { case (c, i) => col(c) === lit(r.get(i)) }
+                  .reduce(_ && _))
+              .reduce(_ || _)
+            relDf
+              .filter(pred)
+              .select(col("__graft_scope_rel__"))
+              .collect()
+              .map(_.getString(0))
+              .toSeq
+          }
+        case None =>
           relDf
-            .filter(pred)
+            .join(broadcast(touched), partCols.toSeq, "left_semi")
             .select(col("__graft_scope_rel__"))
             .collect()
             .map(_.getString(0))
             .toSeq
-        }
-      } else
-        relDf
-          .join(broadcast(touched), partCols.toSeq, "left_semi")
-          .select(col("__graft_scope_rel__"))
-          .collect()
-          .map(_.getString(0))
-          .toSeq
+      }
     } else narrowByKeyStats(spark, root, view, alive, keys0, keyCount, keyFields, ranges)
 
   /** The files that can possibly hold a row with NULL in some

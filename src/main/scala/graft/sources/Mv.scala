@@ -1277,9 +1277,9 @@ object Mv {
     val rendered = matched.selectExpr(
       statBoundSql(loSql, f.dataType) + " AS lo",
       statBoundSql(hiSql, f.dataType) + " AS hi")
-    val collected = rendered.limit(MaxCyclicProbes + 1).collect()
-    if (collected.length > MaxCyclicProbes) None
-    else Some(collected.toSeq.map(r => (r.getString(0), r.getString(1))))
+    graft.core.Collect
+      .atMost(rendered, MaxCyclicProbes)
+      .map(_.toSeq.map(r => (r.getString(0), r.getString(1))))
   }
 
   /** One part of an auto-split mixed derived key ([[concatSplit]]). */
@@ -1570,17 +1570,14 @@ object Mv {
                   def rendered(src: DataFrame) = src.selectExpr(
                     statBoundSql("lo", f.dataType) + " AS lo",
                     statBoundSql("hi", f.dataType) + " AS hi")
-                  val collected = rendered(typed).limit(MaxIntervalProbes + 1).collect()
-                  val intervals =
-                    if (collected.length > MaxIntervalProbes)
+                  val collected = graft.core.Collect
+                    .atMost(rendered(typed), MaxIntervalProbes)
+                    .getOrElse(
                       rendered(typed.agg(
                         org.apache.spark.sql.functions.min(col("lo")).as("lo"),
                         org.apache.spark.sql.functions.max(col("hi")).as("hi")))
-                        .collect()
-                        .toSeq
-                        .map(r => (r.getString(0), r.getString(1)))
-                    else collected.toSeq.map(r => (r.getString(0), r.getString(1)))
-                  Some(intervals)
+                        .collect())
+                  Some(collected.toSeq.map(r => (r.getString(0), r.getString(1))))
                 })
               }
             case None =>

@@ -273,4 +273,115 @@ class DedupSpec extends SparkSpec {
     assert(incr.length <= slice.count() - copies.count())
     assert(incr.nonEmpty)
   }
+
+  // ---- driver path (union-find, driver-side gate) vs the Spark loop ----
+
+  /** The Spark loops, forced by a driver ceiling of zero bytes. */
+  private def sparkLoop[A](body: => A): A = Dedup.maxDriverBytes.withValue(0L)(body)
+
+  private def jobsOf(op: => Unit): Int = org.apache.spark.SpecBus.jobsOf(spark.sparkContext)(op)
+
+  /** Space-separated distinct tokens `w<from>` .. `w<until - 1>`. */
+  private def words(from: Int, until: Int): String = (from until until).map(i => s"w$i").mkString(" ")
+
+  private def corpusOf(rows: (Long, String)*) = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  // 38 shingles per doc; consecutive docs share 37 (jaccard 37/39 ≈ 0.95),
+  // docs two apart 36 (36/40 = 0.9): at 0.92 only neighbours link
+  private val chainDocs = (0 until 9).map(i => (i.toLong, words(i, i + 40)))
+
+  /** Name -> (docs, threshold) fixtures for the lshDedupClusters laws. */
+  private lazy val clusterFixtures: Seq[(String, org.apache.spark.sql.DataFrame, Double)] = Seq(
+    ("chain, diameter 8", corpusOf(chainDocs: _*), 0.92),
+    ("clique", corpusOf((0 until 5).map(i => (10L + i, words(0, 30))): _*), 0.9),
+    ("singletons", corpusOf((0 until 4).map(i => (20L + i, words(100 * i, 100 * i + 20))): _*), 0.5),
+    ("no near-duplicate pair", corpusOf(30L -> words(0, 10), 31L -> words(50, 60)), 0.5),
+    // id 40's two rows pool into one 56-shingle set: 41 and 42 each
+    // share 28 shingles with it (jaccard 28/57) though each is a near
+    // copy of one row; 43 is a copy of 41
+    ("repeated doc id", corpusOf(40L -> words(0, 30), 40L -> words(200, 230), 41L -> words(200, 231),
+      42L -> words(0, 31), 43L -> words(200, 231)), 0.8),
+    ("doc with fewer than n tokens", corpusOf(50L -> "w1 w2", 51L -> words(0, 25), 52L -> words(0, 26),
+      53L -> "", 54L -> "w1 w2"), 0.8),
+    // 9 shingles inside 10: jaccard 9/10 is exactly the threshold
+    ("jaccard equal to the threshold", corpusOf(60L -> words(0, 11), 61L -> words(0, 12)), 0.9))
+
+  test("no near-duplicate pair: every doc labels itself on both paths") {
+    import spark.implicits._
+    val docs2 = corpusOf(1L -> words(0, 10), 2L -> words(50, 60))
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    for (forced <- Seq(false, true)) {
+      def run[A](body: => A): A = if (forced) sparkLoop(body) else body
+      assert(run(Dedup.connectedComponents(empty, "a", "b").collect()).isEmpty, s"forced=$forced")
+      def labels(rows: Array[org.apache.spark.sql.Row]) = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val self = Set((1L, 1L, 1L), (2L, 2L, 1L))
+      assert(labels(run(Dedup.lshDedupClusters(docs2, "doc_id", "text", 3, 0.5).collect())) == self, s"forced=$forced")
+      assert(labels(run(Dedup.dedupClusters(docs2, "doc_id", "text", 3, 0.5).collect())) == self, s"forced=$forced")
+    }
+  }
+
+  test("clustering parity law: union-find and the driver-side gate equal the Spark loops (rows and schema)") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val edgeFixtures = Seq(
+      "chain" -> Seq((11L, 10L), (11L, 12L), (12L, 13L), (13L, 14L), (15L, 14L)),
+      "clique" -> Seq((20L, 21L), (21L, 22L), (20L, 22L), (23L, 20L), (23L, 21L), (23L, 22L)),
+      "singletons" -> Seq((5L, 5L), (7L, 7L)),
+      "empty" -> Seq.empty[(Long, Long)],
+      "repeated ids" -> Seq((1L, 2L), (1L, 2L), (2L, 1L), (3L, 1L), (3L, 3L), (9L, 3L)))
+    val nullable = Seq((Option(4L), Option(3L)), (Option(3L), Option(2L))).toDF("a", "b")
+    val withNull = nullable.unionByName(Seq((Option(8L), Option.empty[Long])).toDF("a", "b"))
+    for ((name, edges) <- edgeFixtures.map { case (k, es) => k -> es.toDF("a", "b") } ++
+        Seq("nullable columns" -> nullable, "a null endpoint" -> withNull)) {
+      val driver = Dedup.connectedComponents(edges, "a", "b")
+      val loop = sparkLoop(Dedup.connectedComponents(edges, "a", "b"))
+      assert(driver.schema == loop.schema, s"$name: ${driver.schema} vs ${loop.schema}")
+      assert(rows(driver) == rows(loop), s"$name: components differ")
+    }
+    for ((name, docs, t) <- clusterFixtures) {
+      val driver = Dedup.lshDedupClusters(docs, "doc_id", "text", 3, t)
+      val loop = sparkLoop(Dedup.lshDedupClusters(docs, "doc_id", "text", 3, t))
+      assert(driver.schema == loop.schema, s"$name: ${driver.schema} vs ${loop.schema}")
+      assert(rows(driver) == rows(loop), s"$name: clusters differ")
+    }
+    // the fixtures exercise what they are named for
+    def labels(name: String) = {
+      val (_, docs, t) = clusterFixtures.find(_._1 == name).get
+      Dedup.lshDedupClusters(docs, "doc_id", "text", 3, t).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    }
+    assert(labels("chain, diameter 8") == (0L until 9L).map(_ -> 0L).toSet)
+    assert(labels("clique") == (10L until 15L).map(_ -> 10L).toSet)
+    assert(labels("jaccard equal to the threshold") == Set(60L -> 60L, 61L -> 60L))
+    assert(labels("repeated doc id") == Set(40L -> 40L, 41L -> 41L, 42L -> 42L, 43L -> 41L))
+    assert(labels("doc with fewer than n tokens") ==
+      Set(50L -> 50L, 51L -> 51L, 52L -> 51L, 53L -> 53L, 54L -> 54L))
+  }
+
+  test("lshDedupClusters job-count law: the same constant number of jobs at diameter 1 and diameter 8") {
+    val clique = corpusOf((0 until 9).map(i => (i.toLong, words(0, 40))): _*)
+    val chain = corpusOf(chainDocs: _*)
+    def jobs(docs: org.apache.spark.sql.DataFrame) =
+      jobsOf { Dedup.lshDedupClusters(docs, "doc_id", "text", 3, 0.92).collect(); () }
+    val (d1, d8) = (jobs(clique), jobs(chain))
+    val (l1, l8) = sparkLoop((jobs(clique), jobs(chain)))
+    info(s"driver path: $d1 jobs at diameter 1, $d8 at diameter 8; Spark loop: $l1 and $l8")
+    assert(d1 == d8 && d8 <= 8, s"driver path ran $d1 jobs at diameter 1 and $d8 at diameter 8")
+    assert(l8 > l1, "the chain fixture must cost the label loop extra rounds")
+  }
+
+  test("lshDedupClusters and lshCandidatePairs leave no new cache entry") {
+    val docs = corpusOf(chainDocs: _*)
+    val runs = Seq[(String, () => Unit)](
+      "driver path" -> (() => { Dedup.lshDedupClusters(docs, "doc_id", "text", 3, 0.92).collect(); () }),
+      "Spark loop" -> (() => { sparkLoop(Dedup.lshDedupClusters(docs, "doc_id", "text", 3, 0.92).collect()); () }),
+      "candidate pairs" -> (() => { Dedup.lshCandidatePairs(docs, "doc_id", "text", 3).collect(); () }))
+    for ((name, run) <- runs) {
+      val before = org.apache.spark.sql.SpecCache.entries(spark)
+      run()
+      assert(org.apache.spark.sql.SpecCache.entries(spark) == before, name)
+    }
+  }
 }

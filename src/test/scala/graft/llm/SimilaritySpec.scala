@@ -462,21 +462,7 @@ class SimilaritySpec extends SparkSpec {
 
   // ---- graph-ANN kernels: parity with the join loops, job counts -------
 
-  private def jobsOf(op: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.SpecBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      op
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
+  private def jobsOf(op: => Unit): Int = org.apache.spark.SpecBus.jobsOf(spark.sparkContext)(op)
 
   /** Rows with each double as its raw bits: equal means equal to the bit. */
   private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
