@@ -1570,14 +1570,14 @@ object Mv {
                   def rendered(src: DataFrame) = src.selectExpr(
                     statBoundSql("lo", f.dataType) + " AS lo",
                     statBoundSql("hi", f.dataType) + " AS hi")
-                  val collected = graft.core.Collect
+                  val rows = graft.core.Collect
                     .atMost(rendered(typed), MaxIntervalProbes)
                     .getOrElse(
                       rendered(typed.agg(
                         org.apache.spark.sql.functions.min(col("lo")).as("lo"),
                         org.apache.spark.sql.functions.max(col("hi")).as("hi")))
                         .collect())
-                  Some(collected.toSeq.map(r => (r.getString(0), r.getString(1))))
+                  Some(rows.toSeq.map(r => (r.getString(0), r.getString(1))))
                 })
               }
             case None =>
