@@ -61,6 +61,38 @@ object Par {
     results.toSeq.asInstanceOf[Seq[A]]
   }
 
+  /** Driver-side parallel foreach over independent per-item work — footer
+    * reads, single-file Spark jobs, file copies — on at most `width`
+    * threads. The first failure stops the hand-out: items not yet started
+    * never run, every started item finishes, and only then is that first
+    * failure rethrown. So no item is still running when this returns or
+    * throws, and a caller that holds a lock releases it only after its
+    * items are done.
+    */
+  def each[A](items: Seq[A], width: Int = 8)(f: A => Unit): Unit = {
+    val work = items.toIndexedSeq
+    if (work.sizeIs <= 1) return work.foreach(f)
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val firstFailure = new AtomicReference[Throwable]()
+    val threads = (0 until math.min(work.size, width)).map { i =>
+      val th = new Thread(
+        () => {
+          var k = next.getAndIncrement()
+          while (k < work.size && firstFailure.get == null) {
+            try f(work(k))
+            catch { case e: Throwable => firstFailure.compareAndSet(null, e) }
+            k = next.getAndIncrement()
+          }
+        },
+        s"graft-par-each-$i")
+      th.setDaemon(true)
+      th.start()
+      th
+    }
+    threads.foreach(_.join())
+    Option(firstFailure.get).foreach(e => throw e)
+  }
+
   /** Two-ary convenience keeping call sites typed. */
   def two[A, B](a: () => A, b: () => B): (A, B) = {
     val r = all[Any](() => a(), () => b())

@@ -190,7 +190,7 @@ object DeleteVectors {
 
   /** Apply a batch of freshly-written sidecar results as ONE commit,
     * under the bounded-MoR policy — the shared back half of the MoR
-    * DELETE and the delta-based UPDATE/MERGE write:
+    * DELETE, the upsert and the delta-based UPDATE/MERGE write:
     *
     *  - a file whose new position set equals its old one is NOT restated
     *    (count equality IS set equality — the merged set is a superset of
@@ -199,26 +199,26 @@ object DeleteVectors {
     *  - files whose deleted fraction crossed
     *    `spark.graft.dv.maxDeletedFraction` (with survivors) REWRITE in
     *    the same commit instead of pointing: replacements stage first
-    *    (no live-tree mutation), then archive+land+commit runs with a
-    *    rollback — a failed commit restores the originals and removes the
-    *    landed replacements, so a failed statement stays a clean no-op
-    *    that no later listing-based commit can half-adopt;
+    *    (no live-tree mutation), then one [[DataFiles.swap]] archives the
+    *    originals, lands the replacements and the caller's staged
+    *    appends, and commits — a failed statement leaves the live tree
+    *    and the archive as they were;
     *  - map-typed tables never auto-rewrite: the change feed's multiset
     *    cancellation cannot byte-key map values across a rewrite, and DV
     *    pointer updates are the feed's map-safe representation.
     *
-    * `addedRels`: files the caller already landed (the delta DML's
-    * inserts) to record in the same version. Returns (files with changed
-    * pointers or rewrites, newly deleted rows).
+    * `added`: staged files (path, live rel) the caller appends in the same
+    * version — the upsert's rows, the delta DML's inserts. Returns (files
+    * with changed pointers or rewrites, newly deleted rows).
     */
   private[sources] def boundedCommit(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
       written: Seq[(String, String, Long)],
-      addedRels: Seq[String] = Seq.empty): (Long, Long) = {
+      added: Seq[(Path, String)] = Seq.empty): (Long, Long) = {
     val (changed, newlyDeleted) = pointerUpdatesOf(view, written)
-    if (changed.isEmpty && addedRels.isEmpty) return (0L, 0L)
+    if (changed.isEmpty && added.isEmpty) return (0L, 0L)
     val mapTyped =
       view.schema.exists(s => s.fields.exists(f => Snapshots.containsMapType(f.dataType)))
     val threshold = maxDeletedFraction(spark)
@@ -230,62 +230,16 @@ object DeleteVectors {
           val cnt = Snapshots.dvOf(st).map(_._2).getOrElse(0L)
           rows.exists(r => cnt < r && cnt.toDouble > threshold * r.toDouble)
         }
-    if (rewriteNow.isEmpty) {
-      Snapshots.commitRestated(spark, root, pointerUpdates, addedRels)
-      return (changed.size.toLong, newlyDeleted)
-    }
-    // phase A — stage every replacement with NO live-tree mutation
-    val staged = new java.util.concurrent.ConcurrentLinkedQueue[(String, Path, String, Long)]()
-    Snapshots.parEach(rewriteNow.toSeq) { case (rel, st) =>
-      val (dvRel, dvCnt) = Snapshots.dvOf(st).get
-      staged.add(stageRewrite(spark, root, rel, dvRel, dvCnt))
-    }
-    import scala.jdk.CollectionConverters._
-    val stagedSeq = staged.asScala.toSeq
-    // phase B — archive originals, land replacements, ONE commit; any
-    // failure rolls the live tree back to exactly the pre-statement state
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var landed = List.empty[Path]
-    var archived = List.empty[String]
-    try {
-      stagedSeq.foreach { case (rel, part, newRel, survivors) =>
-        Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel))
-        archived ::= rel
-        // zero-survivor replacements never land (row-count-less manifests
-        // can't detect full deletion up front; the staged footer can) —
-        // the original's removal alone is the correct commit
-        if (survivors > 0L) {
-          val to = new Path(rootPath, newRel)
-          if (!fs.rename(part, to)) sys.error(s"bounded rewrite failed to land $newRel")
-          landed ::= to
-        }
+    val replaced = rewriteNow.keys.toSeq
+    DataFiles.rewrite(spark, fs, rootPath, replaced, added) { stage =>
+      graft.core.Par.each(rewriteNow.toSeq) { case (rel, st) =>
+        val (dvRel, dvCnt) = Snapshots.dvOf(st).get
+        stageRewrite(spark, root, stage, rel, dvRel, dvCnt)
       }
-      Snapshots.commitRestated(
-        spark,
-        root,
-        pointerUpdates,
-        addedRels = addedRels ++ stagedSeq.collect { case (_, _, nr, s) if s > 0L => nr },
-        removedRels = stagedSeq.map(_._1))
-    } catch {
-      case t: Throwable =>
-        landed.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-        // restore by COPY from the archive (never rename back out: the
-        // archived bytes may also serve OLDER pinned manifests)
-        archived.foreach { rel =>
-          try {
-            val live = new Path(rootPath, rel)
-            val arch = new Path(new Path(rootPath, Snapshots.ArchiveDirName), rel)
-            if (!fs.exists(live) && fs.exists(arch))
-              org.apache.hadoop.fs.FileUtil
-                .copy(fs, arch, fs, live, false, spark.sparkContext.hadoopConfiguration)
-          } catch { case _: Exception => () }
-        }
-        throw t
-    } finally {
-      stagedSeq.foreach { case (_, part, _, _) =>
-        try fs.delete(part.getParent, true) catch { case _: Exception => () }
-      }
+    } { landed =>
+      Snapshots.commitRestated(spark, root, pointerUpdates, addedRels = landed, removedRels = replaced)
     }
     (changed.size.toLong, newlyDeleted)
   }
@@ -317,21 +271,18 @@ object DeleteVectors {
     (changed, newlyDeleted)
   }
 
-  /** Phase A of a per-file rewrite: write the file's survivors (minus its
-    * sidecar's positions) into a hidden temp dir NEXT TO it — no
-    * live-tree mutation. Returns (rel, staged part path, replacement rel,
-    * surviving rows); the caller archives + lands (and can roll back) —
-    * and must NOT land a zero-survivor replacement (a table whose
-    * manifest predates row counts can't detect full deletion up front,
-    * so the staged footer is the authority: committing an empty file
-    * would make every future scan open it for nothing).
+  /** Stage one file's rewrite: its survivors (minus its sidecar's
+    * positions), landing beside the original. Nothing is staged when
+    * nothing survives — a table whose manifest predates row counts can't
+    * detect full deletion up front, so the staged footer is the authority.
     */
   private def stageRewrite(
       spark: SparkSession,
       root: String,
+      stage: DataFiles.Rewrites,
       rel: String,
       dvRel: String,
-      dvCount: Long): (String, Path, String, Long) = {
+      dvCount: Long): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(rootPath, rel)
@@ -354,44 +305,8 @@ object DeleteVectors {
     val keep = data
       .join(positions, data("__graft_dv_pos__") === positions("pos"), "left_anti")
       .drop("__graft_dv_pos__")
-    val tmpDir = new Path(live.getParent, s".dv-materialize-${live.getName}")
-    keep.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir.toString)
-    val part = fs
-      .listStatus(tmpDir)
-      .map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"rewrite of $rel produced no part file"))
-    val cut = rel.lastIndexOf('/')
-    val newRel = if (cut < 0) part.getName else rel.substring(0, cut + 1) + part.getName
-    val survivors = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(part, spark.sparkContext.hadoopConfiguration))
-      try r.getRecordCount
-      finally r.close()
-    }
-    (rel, part, newRel, survivors)
-  }
-
-  /** Stage + archive + land in one step — [[materialize]]'s shape, where
-    * the closing listing-based commit immediately follows under the same
-    * lock. A zero-survivor staged file archives the original WITHOUT
-    * landing (the no-row-count-manifest case full deletion can't detect
-    * up front).
-    */
-  private def rewriteSansPositions(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      dvRel: String,
-      dvCount: Long): Unit = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, part, newRel, survivors) = stageRewrite(spark, root, rel, dvRel, dvCount)
-    Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel))
-    if (survivors > 0L && !fs.rename(part, new Path(rootPath, newRel)))
-      throw new IllegalStateException(s"rewrite of $rel failed to land $part")
-    fs.delete(part.getParent, true)
+    stage.into(DataFiles.dirOf(rel))(sub =>
+      keep.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sub.toString))
   }
 
   /** Re-home one DV sidecar after its data file MOVED to a new rel (the
@@ -687,16 +602,14 @@ object DeleteVectors {
       if (dvd.isEmpty) return (0L, 0L)
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Snapshots.parEach(dvd.toSeq) { case (rel, (dvRel, dvCnt)) =>
-        val st = view.stats.getOrElse(rel, Map.empty[String, ColStat])
-        if (Snapshots.fullyDeleted(st)) {
-          // every recorded row is deleted: nothing survives — archive only
-          val live = new Path(rootPath, rel)
-          require(fs.exists(live), s"materialize: $rel is not live under $root")
-          Snapshots.archiveFile(fs, rootPath, live)
-        } else rewriteSansPositions(spark, root, rel, dvRel, dvCnt)
-      }
-      Snapshots.commit(spark, root) // rewritten files get fresh stats; pointers die with the rels
+      DataFiles.rewrite(spark, fs, rootPath, dvd.keys.toSeq) { stage =>
+        graft.core.Par.each(dvd.toSeq) { case (rel, (dvRel, dvCnt)) =>
+          // every recorded row deleted: nothing survives — archive only
+          if (Snapshots.fullyDeleted(view.stats.getOrElse(rel, Map.empty[String, ColStat])))
+            require(fs.exists(new Path(rootPath, rel)), s"materialize: $rel is not live under $root")
+          else stageRewrite(spark, root, stage, rel, dvRel, dvCnt)
+        }
+      }(_ => Snapshots.commit(spark, root)) // rewritten files get fresh stats; pointers die with the rels
       (dvd.size.toLong, dvd.values.map(_._2).sum)
     }
 
@@ -808,7 +721,7 @@ object DeleteVectors {
           spark, root, view, alive, sourceKeys, keyCols, keyFields, partCols, commitTag,
           nullSafe = nullSafeKeys)
       // the ad-hoc prefix is CONSTANT on purpose: the crashed-attempt
-      // sweep in [[landAppend]] keys on the prefix, and a per-attempt
+      // sweep in [[stageAppend]] keys on the prefix, and a per-attempt
       // random tag could never match a PRIOR attempt's leftovers — a hard
       // crash between landing and commit would leave live uncommitted
       // files for the next listing-based commit to adopt as duplicates.
@@ -818,19 +731,13 @@ object DeleteVectors {
         if (streamTag.nonEmpty && epochId >= 0L)
           s"mor-${java.net.URLEncoder.encode(streamTag, "UTF-8")}-$epochId-"
         else "mor-adhoc-"
-      val addedRels =
-        landAppend(spark, fs, rootPath, aligned, partCols, commitTag, epochPrefix, view.rels.toSet)
-      if (written.isEmpty && addedRels.isEmpty) return (0L, 0L)
+      val stage = DataFiles.stageDir(rootPath)
       val res =
-        try boundedCommit(spark, root, view, written, addedRels)
-        catch {
-          case t: Throwable =>
-            // a failed commit must not leave landed files for a later
-            // listing-based commit to adopt
-            addedRels.foreach(rel =>
-              try fs.delete(new Path(rootPath, rel), false) catch { case _: Exception => () })
-            throw t
-        }
+        try {
+          val added = stageAppend(spark, fs, rootPath, stage, aligned, partCols, epochPrefix, view.rels.toSet)
+          if (written.isEmpty && added.isEmpty) return (0L, 0L)
+          boundedCommit(spark, root, view, written, added)
+        } finally fs.delete(stage, true)
       if (streamTag.nonEmpty && epochId >= 0L) MetaFiles.advance(fs, marker, epochId)
       res
     }
@@ -1345,33 +1252,27 @@ object DeleteVectors {
     }
   }
 
-  /** Write `df` into the table's hive layout via a hidden stage dir and
-    * land each part file under the table root, prefixed `epochPrefix` so
-    * a crashed attempt's leftovers are DISCOVERABLE. Two orphan defenses
-    * (a listing-based commit would otherwise silently adopt strays as
-    * duplicate rows):
-    *  - before landing, every target directory is swept for uncommitted
-    *    files carrying this epoch's prefix — a prior attempt that crashed
-    *    between landing and commit — and they are deleted (bounded by the
-    *    batch's own partitions, not the table);
-    *  - a landing failure rolls back the files this attempt already
-    *    landed before rethrowing.
-    * The part names keep their Spark-generated uniqueness under the
-    * prefix, so rels are never reused (the archive invariant). Returns
-    * the landed rels; the caller commits them (and deletes them if the
-    * commit itself fails).
+  /** Write `df` into the table's hive layout under `stage` and return
+    * its non-empty part files as landing targets, each part name prefixed
+    * `epochPrefix` so a crashed attempt's leftovers are DISCOVERABLE:
+    * before returning, every target directory is swept for uncommitted
+    * files carrying this epoch's prefix — a prior attempt that crashed
+    * between landing and commit — and they are deleted (bounded by the
+    * batch's own partitions, not the table); a listing-based commit would
+    * otherwise silently adopt them as duplicate rows. The part names keep
+    * their Spark-generated uniqueness under the prefix, so rels are never
+    * reused (the archive invariant). The caller lands and commits them in
+    * one [[DataFiles.swap]].
     */
-  private def landAppend(
+  private def stageAppend(
       spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       rootPath: Path,
+      stage: Path,
       df: DataFrame,
       partCols: Seq[String],
-      tag: String,
       epochPrefix: String,
-      committedRels: Set[String]): Seq[String] = {
-    val stage = new Path(rootPath, s".mor-upsert-$tag")
-    if (fs.exists(stage)) fs.delete(stage, true)
+      committedRels: Set[String]): Seq[(Path, String)] = {
     val writer =
       if (partCols.nonEmpty)
         // co-locate each partition's rows (the mergeIntoPartitioned
@@ -1379,11 +1280,10 @@ object DeleteVectors {
         df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
       else df.coalesce(1).write
     writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-    // shared landing discipline ([[Snapshots.stagedParts]]): zero-row
-    // parts never land — a pure-delete CDC epoch must not commit an empty
-    // parquet file — and footer checks run in the driver pool
+    // zero-row parts never land — a pure-delete CDC epoch must not commit
+    // an empty parquet file
     val rootUri = fs.makeQualified(rootPath).toUri.getPath
-    val targets = Snapshots.stagedParts(spark, fs, stage).map { case (p, stageRel) =>
+    val targets = DataFiles.staged(spark, fs, stage).map { case (p, stageRel) =>
       val cut = stageRel.lastIndexOf('/')
       val rel =
         if (cut < 0) epochPrefix + stageRel
@@ -1403,11 +1303,8 @@ object DeleteVectors {
         }
       }
     }
-    val rels = Snapshots.landParts(fs, rootPath, targets)
-    fs.delete(stage, true)
-    rels
+    targets
   }
-
 
   /** Which of `rels` satisfy `pred` over their hive partition-path values?
     * Exact, not pruning: each file's segments parse as the DECLARED

@@ -70,6 +70,18 @@ import org.apache.spark.sql.types.StructField
   * so `<relpath>` is a stable identity and the flat archive cannot
   * collide ([[archiveFile]] still checks and fails loudly).
   *
+  * Data files land through ONE module, [[DataFiles]]. Every write stages
+  * its parquet parts under a hidden `.stage-<id>` dir (beside the files
+  * an in-place rewrite replaces, or under the table or branch root), then
+  * one `DataFiles.swap` archives the replaced files, renames the staged
+  * parts onto their live rels and runs the commit — archive first, so a
+  * directory lister may see a gap but never old and new rows at once.
+  * The archive invariant: when any step of a swap fails, the live tree
+  * and `.snap-archive/` end exactly as they were before it — landed files
+  * are deleted, archived files renamed back, a dropped restored duplicate
+  * copied back — so no later listing-based [[commit]] can adopt a
+  * half-swapped tree.
+  *
   * Scale: a manifest is one line per data file (or, for a delta, per
   * changed file) — the same metadata the scan's own listing
   * materializes; reads cost zero extra I/O (the explicit file list
@@ -394,29 +406,6 @@ object Snapshots {
       // THIRD writer on top of them
       try if (readLockTag(fs, lock).exists(_.contains(owner))) fs.delete(lock, false)
       catch { case _: Exception => () }
-    }
-  }
-
-  /** Driver-side parallel foreach (default 8-wide) over independent
-    * per-item work — single-file Spark jobs, footer reads, file copies:
-    * the shared scaffold of every maintenance op, extracted so failure
-    * semantics (first exception propagates, pool always shut down) are
-    * fixed in ONE place.
-    */
-  private[sources] def parEach[A](items: Seq[A], width: Int = 8)(f: A => Unit): Unit = {
-    if (items.isEmpty) ()
-    else if (items.size == 1) f(items.head)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, width))
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-        val fut =
-          scala.concurrent.Future.traverse(items)(a => scala.concurrent.Future(f(a))(ec))(
-            implicitly,
-            ec)
-        scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf)
-        ()
-      } finally pool.shutdown()
     }
   }
 
@@ -1145,7 +1134,7 @@ object Snapshots {
                     if (pathColsFirst.nonEmpty || files.size > 256) None
                     else {
                       val fs = new Array[org.apache.spark.sql.types.StructType](files.size)
-                      parEach(files.zipWithIndex) { case (rel, i) =>
+                      graft.core.Par.each(files.zipWithIndex) { case (rel, i) =>
                         fs(i) = footerSchemaOf(spark, new Path(rootPath, rel))
                       }
                       if (fs.forall(_ == fs(0)))
@@ -1172,7 +1161,7 @@ object Snapshots {
                       new Array[org.apache.spark.sql.types.StructType](newRels.size)
                     // reads parallel (driver metadata I/O), fold in rel
                     // order — deterministic appended-column order
-                    parEach(newRels.zipWithIndex) { case (rel, i) =>
+                    graft.core.Par.each(newRels.zipWithIndex) { case (rel, i) =>
                       footers(i) = footerSchemaOf(spark, new Path(rootPath, rel))
                     }
                     // asNullable mirrors the relation-derived schema the
@@ -1233,35 +1222,20 @@ object Snapshots {
             if (version > 1L && statsColsOf(spark, root, version - 1L) == statsCols)
               fileStats(spark, root, version - 1L)
             else Map.empty
-          // footer reads are independent metadata I/O: parallel on the
-          // driver, the deleteWhere/compactInPlace pool discipline
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(math.max(files.size, 1), 8))
-          val reads = new java.util.concurrent.atomic.AtomicLong(0L)
-          val stats =
-            try {
-              implicit val ec: scala.concurrent.ExecutionContext =
-                scala.concurrent.ExecutionContext.fromExecutor(pool)
-              val futs = files.map { rel =>
-                prevStats.get(rel) match {
-                  // carried entries must also carry the null counts this
-                  // writer records — a pre-null-count entry re-reads its
-                  // footer ONCE and is carried forward thereafter
-                  case Some(st)
-                      if st.nonEmpty && statsCols.forall(c => st.contains(nullCountKey(c))) =>
-                    scala.concurrent.Future.successful(rel -> st)
-                  case _ =>
-                    scala.concurrent.Future {
-                      reads.incrementAndGet()
-                      rel -> fileColStats(conf, new Path(rootPath, rel), rel, statsCols)
-                    }
-                }
-              }
-              scala.concurrent.Await.result(
-                scala.concurrent.Future.sequence(futs),
-                scala.concurrent.duration.Duration.Inf)
-            } finally pool.shutdown()
-          lastCommitFooterReads.set(reads.get())
-          stats.foreach { case (rel, st) => statsByRel(rel) = withDv(rel, st) }
+          // carried entries must also carry the null counts this writer
+          // records — a pre-null-count entry re-reads its footer ONCE and
+          // is carried forward thereafter; footer reads are independent
+          // metadata I/O, run in parallel on the driver
+          val stats = files.toIndexedSeq.map { rel =>
+            rel -> prevStats.get(rel).filter(st =>
+              st.nonEmpty && statsCols.forall(c => st.contains(nullCountKey(c))))
+          }
+          val read = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
+          graft.core.Par.each(stats.collect { case (rel, None) => rel }) { rel =>
+            read.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, statsCols))
+          }
+          lastCommitFooterReads.set(read.size.toLong)
+          stats.foreach { case (rel, st) => statsByRel(rel) = withDv(rel, st.getOrElse(read.get(rel))) }
           header ++ stats.map { case (rel, _) =>
             val st = statsByRel(rel)
             if (st.isEmpty) rel
@@ -1444,7 +1418,7 @@ object Snapshots {
         if (statsCols.nonEmpty) {
           val missing = fresh.filterNot(newStats.containsKey)
           val reads = new java.util.concurrent.atomic.AtomicLong(0L)
-          parEach(missing) { rel =>
+          graft.core.Par.each(missing) { rel =>
             reads.incrementAndGet()
             newStats.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, statsCols))
           }
@@ -1610,7 +1584,7 @@ object Snapshots {
       }
       if (prev.statsCols.nonEmpty) {
         val missingStats = added.filterNot(newStats.containsKey)
-        parEach(missingStats) { rel =>
+        graft.core.Par.each(missingStats) { rel =>
           newStats.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, prev.statsCols))
         }
       }
@@ -2588,7 +2562,7 @@ object Snapshots {
     val tz = spark.conf.get("spark.sql.session.timeZone")
     val driverMaxBytes = sidecarDriverBuildMaxBytes.value
     val large = new java.util.concurrent.ConcurrentLinkedQueue[(Path, SidecarKernel.FileSpec)]()
-    parEach(work) { rel =>
+    graft.core.Par.each(work) { rel =>
       val p = resolve(spark, root, rel)
       // schema, row count and length from the FOOTER (driver metadata):
       // DataFrameReader schema inference launches one Spark job per call
@@ -3391,7 +3365,7 @@ object Snapshots {
               sys.error(s"clone copy failed: $ds -> $dd")
           }
         }
-        parEach(view.rels)(copyOne)
+        graft.core.Par.each(view.rels)(copyOne)
         // the reconstructed view re-renders as the clone's FULL v1 —
         // written AFTER the data so a reader never sees a manifest
         // promising absent files. A verbatim copy would be wrong when the
@@ -4088,28 +4062,10 @@ object Snapshots {
   }
 
   /** Move a replaced data file into the archive, preserving its relative
-    * path. Called by the maintenance ops INSTEAD of delete.
-    *
-    * A rel path denotes ONE immutable file forever, so an already-archived
-    * dst can only mean the live file is a [[restore]]d duplicate of the
-    * archived bytes — drop the duplicate (length-checked) instead of
-    * failing; any length mismatch still fails loudly (it would mean the
-    * never-reuse invariant broke).
+    * path ([[DataFiles.archive]]). Called by the maintenance ops INSTEAD of
+    * delete.
     */
-  def archiveFile(fs: FileSystem, root: Path, live: Path): Unit = {
-    val rootUri = root.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri
-    val rel = rootUri.relativize(live.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri).getPath
-    require(!rel.startsWith("/") && rel.nonEmpty, s"$live is not under $root")
-    val dst = new Path(new Path(root, ArchiveDirName), rel)
-    if (fs.exists(dst)) {
-      if (fs.getFileStatus(dst).getLen != fs.getFileStatus(live).getLen)
-        sys.error(s"archive collision at $dst with DIFFERENT size — rel path reused, invariant broken")
-      fs.delete(live, false) // restored duplicate of immutable archived bytes
-    } else {
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(live, dst)) sys.error(s"archive rename $live -> $dst failed")
-    }
-  }
+  def archiveFile(fs: FileSystem, root: Path, live: Path): Unit = DataFiles.archive(fs, root, live)
 
   /** RESTORE the table to manifest `version` — the O(files) undo of a bad
     * delete/merge/compaction. The LIVE tree is rewritten to exactly that
@@ -4165,13 +4121,7 @@ object Snapshots {
         val name = st.getPath.getName
         val childRel = if (rel.isEmpty) name else s"$rel/$name"
         if (st.isDirectory) walk(st.getPath, childRel)
-        else if (!isHidden(name)) {
-          val dst = new Path(new Path(root, ArchiveDirName), childRel)
-          if (fs.exists(dst))
-            sys.error(s"archive collision at $dst — relative data-file paths must never be reused")
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst)) sys.error(s"archive rename ${st.getPath} -> $dst failed")
-        }
+        else if (!isHidden(name)) DataFiles.archiveAs(fs, root, st.getPath, childRel)
       }
     if (fs.exists(dir)) {
       walk(dir, relBase)
@@ -4227,7 +4177,7 @@ object Snapshots {
         s"table $root has no manifest version $v (vacuumed or never committed)")
       if (v != latest) {
         val missing = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        parEach(manifestView(spark, root, v).rels) { rel =>
+        graft.core.Par.each(manifestView(spark, root, v).rels) { rel =>
           // resolve errors on a neither-live-nor-archived rel — exactly
           // the vacuumed case this guard exists for
           if (scala.util.Try(resolve(spark, root, rel)).isFailure) missing.add(rel)
@@ -4334,92 +4284,6 @@ object Snapshots {
           n.stripPrefix("v").stripSuffix(".manifest").toLong
         }
         .sorted
-
-  /** Walk a finished stage dir and return its non-empty part files as
-    * (path, stage-relative rel). Zero-row parts are dropped HERE — the
-    * unpartitioned single-dir writer creates its part file eagerly even
-    * for an empty frame, and committing one would bloat the manifest
-    * with a file every future scan opens for nothing. Footer record
-    * counts are driver metadata, read in PARALLEL (the footer-pool
-    * discipline — a K-partition epoch must not pay K sequential
-    * round-trips). Shared by the MoR upsert landing and branch appends.
-    */
-  private[sources] def stagedParts(
-      spark: SparkSession,
-      fs: FileSystem,
-      stage: Path): Seq[(Path, String)] = {
-    def walk(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.flatMap(st =>
-        if (st.isDirectory) walk(st.getPath) else Seq(st.getPath))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val all = walk(stage).filter(p =>
-      p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-    val nonEmpty = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
-    parEach(all) { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      val n =
-        try r.getRecordCount
-        finally r.close()
-      if (n > 0L) nonEmpty.add(p)
-    }
-    val stageUri = fs.makeQualified(stage).toUri.getPath
-    all.filter(nonEmpty.contains).map { p =>
-      p -> fs.makeQualified(p).toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-    }
-  }
-
-  /** Land (path → root-relative rel) pairs with a rollback: a mid-loop
-    * rename failure deletes THIS attempt's already-landed files before
-    * rethrowing, so no later listing-based commit can adopt a partial
-    * landing. Returns the landed rels.
-    */
-  private[sources] def landParts(
-      fs: FileSystem,
-      rootPath: Path,
-      targets: Seq[(Path, String)]): Seq[String] = {
-    var landed = List.empty[Path]
-    try
-      targets.map { case (p, rel) =>
-        val to = new Path(rootPath, rel)
-        fs.mkdirs(to.getParent)
-        if (!fs.rename(p, to)) sys.error(s"failed to land $rel")
-        landed ::= to
-        rel
-      }
-    catch {
-      case t: Throwable =>
-        landed.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-        throw t
-    }
-  }
-
-  /** Roll a REFUSED (or failed) overwrite-shaped write back to the exact
-    * pre-op live tree: delete the files this write landed (a later
-    * listing commit must never adopt a refused batch) and move what it
-    * archived back live (leaving them archived would let a later listing
-    * commit silently truncate the overwritten partitions). Per-file
-    * best-effort — everything still RESOLVES either way (live first,
-    * archive fallback), so a partially-applied rollback degrades reads
-    * not at all; shared by the SQL INSERT and the DSv2 dynamic-overwrite
-    * failure paths so the discipline cannot drift.
-    */
-  private[sources] def rollbackRefusedLanding(
-      fs: FileSystem,
-      rootPath: Path,
-      landed: Seq[String],
-      archived: Seq[String]): Unit = {
-    landed.foreach(rel =>
-      try fs.delete(new Path(rootPath, rel), false)
-      catch { case _: Exception => () })
-    val archiveRoot = new Path(rootPath, ArchiveDirName)
-    archived.foreach { rel =>
-      try {
-        val live = new Path(rootPath, rel)
-        if (!fs.exists(live)) fs.rename(new Path(archiveRoot, rel), live)
-      } catch { case _: Exception => () } // still resolves archived
-    }
-  }
 
   /** Is `name` a WRITABLE branch (vs an immutable tag)? */
   def isBranch(spark: SparkSession, root: String, name: String): Boolean =
@@ -4649,23 +4513,24 @@ object Snapshots {
       schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     val partCols = if (bv.partCols.nonEmpty) bv.partCols else partitionColsFromRels(bv.rels)
     val dataDir = branchDataDir(rootPath, name)
-    val stage = new Path(dataDir, s".stage-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (fs.exists(stage)) fs.delete(stage, true)
+    val stage = DataFiles.stageDir(dataDir)
     val writer =
       if (partCols.nonEmpty)
         aligned.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
       else aligned.coalesce(1).write
     writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
     val conf = spark.sparkContext.hadoopConfiguration
-    // shared landing discipline (zero-row drop + rollback on a partial
-    // landing): a mid-loop failure leaves no orphans under .branch/
-    val rels = landParts(
-      fs,
-      rootPath,
-      stagedParts(spark, fs, stage).map { case (p, stageRel) =>
-        p -> s"$BranchDataDirName/$name/$stageRel"
-      })
-    fs.delete(stage, true)
+    // zero-row parts never land, and a failed landing leaves no orphans
+    // under .branch/
+    val rels =
+      try
+        DataFiles.land(
+          fs,
+          rootPath,
+          DataFiles.staged(spark, fs, stage).map { case (p, stageRel) =>
+            p -> s"$BranchDataDirName/$name/$stageRel"
+          })
+      finally fs.delete(stage, true)
     if (rels.isEmpty) return Seq.empty
     // CHECK constraints hold on branch lines too — a branch append that
     // violated them would smuggle bad rows past the gate at fast-forward
@@ -4673,7 +4538,7 @@ object Snapshots {
     // the main commit's stats discipline, branch-locally: footer stats
     // per new file (pooled), value-index sidecars when the table has them
     val statsByRel = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-    parEach(rels) { rel =>
+    graft.core.Par.each(rels) { rel =>
       statsByRel.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, bv.statsCols))
     }
     if (bv.bloomCols.nonEmpty || bv.statsCols.nonEmpty)
@@ -4844,7 +4709,7 @@ object Snapshots {
           }
           val rehomed =
             new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-          parEach(dvMoved) { case (_, target, dvRel, cnt) =>
+          graft.core.Par.each(dvMoved) { case (_, target, dvRel, cnt) =>
             val newDvRel = DeleteVectors.rehomeSidecar(spark, root, dvRel, target)
             rehomed.put(
               target,

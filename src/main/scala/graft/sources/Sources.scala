@@ -518,7 +518,7 @@ object Sources {
       affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) })
     if (affected.nonEmpty) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
     val targetBytes = rewriteTargetBytes(spark)
-    def rewriteOne(uri: String, matching: Long): Unit = {
+    def rewriteOne(stage: DataFiles.Rewrites, uri: String, matching: Long): Unit = {
       val filePath = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
       // whole-file delete detected from the FOOTER row count (driver-side
       // metadata, no Spark job) — the file dies iff every row matched
@@ -528,9 +528,7 @@ object Sources {
         try r.getRecordCount
         finally r.close()
       }
-      if (footerRows == matching) {
-        Snapshots.archiveFile(fs, hadoopPath, filePath)
-      } else {
+      if (footerRows != matching) {
         // three-valued logic: a NULL predicate row must be KEPT (the delete
         // didn't match it) — bare !predicate is NULL there and filter drops
         // it, silently deleting rows a GDPR-style delete never targeted.
@@ -552,39 +550,32 @@ object Sources {
           .parquet(uri)
           .filter(!coalesce(predicate, lit(false)))
           .drop(partCols: _*)
-        val tmpDir = new org.apache.hadoop.fs.Path(filePath.getParent, s".rewrite-${filePath.getName}")
         // size the rewrite from the SOURCE file's on-disk bytes (the
         // survivors are a subset, so this can only over-provision): an
         // oversized input rewrites in parallel to ~targetBytes files
         // instead of one unbounded single-task file. coalesce never
-        // shuffles — it merges (or keeps) the scan's own splits.
+        // shuffles — it merges (or keeps) the scan's own splits. The
+        // rewrite lands under the PART JOB'S OWN generated names: rel
+        // paths are never reused, so a pinned manifest entry denotes
+        // exactly one immutable file forever
         val n = rewriteFileCount(fs.getFileStatus(filePath).getLen, targetBytes)
-        sizedLayout(keep, n).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-        val parts = fs
-          .listStatus(tmpDir)
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        if (parts.isEmpty)
-          throw new IllegalStateException(s"rewrite of $uri produced no part file")
-        // archive the old file (atomic rename — becomes invisible to
-        // directory readers), then land the rewrite under the PART JOB'S
-        // OWN generated names: rel paths are never reused, so a pinned
-        // manifest entry denotes exactly one immutable file forever
-        Snapshots.archiveFile(fs, hadoopPath, filePath)
-        parts.foreach { part =>
-          if (!fs.rename(part, new org.apache.hadoop.fs.Path(filePath.getParent, part.getName)))
-            throw new IllegalStateException(s"delete rewrite of $uri failed to land $part")
-        }
-        fs.delete(tmpDir, true)
+        val staged = stage.into(DataFiles.dirOf(relOfFileUri(fs, hadoopPath, uri)))(sub =>
+          sizedLayout(keep, n).write.mode(SaveMode.Overwrite).parquet(sub.toString))
+        if (staged == 0) throw new IllegalStateException(s"rewrite of $uri produced no part file")
       }
     }
+    // every survivor rewrite stages first (no live-tree mutation), then
+    // ONE swap archives the affected files, lands the rewrites and
+    // commits, so a failure anywhere leaves the table as it was. The
     // per-file rewrites are independent single-file jobs: submit them
     // CONCURRENTLY so the wall clock is the slowest file, not the sum —
     // driver-blocking job latency dominates small rewrites (measured:
     // q184's 30 per-day rewrites serialized to seconds). Spark job
     // submission is thread-safe; each touched path is distinct.
-    Snapshots.parEach(affected.toSeq) { case (u, m) => rewriteOne(u, m) }
-    if (affected.nonEmpty) Snapshots.commit(spark, root)
+    if (affected.nonEmpty)
+      DataFiles.rewrite(spark, fs, hadoopPath, affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) }) {
+        stage => graft.core.Par.each(affected.toSeq) { case (u, m) => rewriteOne(stage, u, m) }
+      }(_ => Snapshots.commit(spark, root))
     (affected.length.toLong, affected.map(_._2).sum)
   }
   }
@@ -664,7 +655,7 @@ object Sources {
       affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) })
     if (affected.nonEmpty) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
     val targetBytes = rewriteTargetBytes(spark)
-    def rewriteOne(uri: String): Unit = {
+    def rewriteOne(stage: DataFiles.Rewrites, uri: String): Unit = {
       val filePath = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
       val partCols = filePath.toUri.getPath
         .stripPrefix(new org.apache.hadoop.fs.Path(qualifiedRoot).toUri.getPath)
@@ -690,27 +681,19 @@ object Sources {
             .getOrElse(col(c))
         }: _*)
         .drop(partCols: _*)
-      val tmpDir = new org.apache.hadoop.fs.Path(filePath.getParent, s".rewrite-${filePath.getName}")
       // UPDATE preserves row count, so the source file's on-disk bytes are
       // the right size estimate — same parallel-rewrite discipline as
       // deleteWhere (one oversized file must not rewrite as one task)
       val n = rewriteFileCount(fs.getFileStatus(filePath).getLen, targetBytes)
-      sizedLayout(updated, n).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-      val parts = fs
-        .listStatus(tmpDir)
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      if (parts.isEmpty)
-        throw new IllegalStateException(s"rewrite of $uri produced no part file")
-      Snapshots.archiveFile(fs, hadoopPath, filePath)
-      parts.foreach { part =>
-        if (!fs.rename(part, new org.apache.hadoop.fs.Path(filePath.getParent, part.getName)))
-          throw new IllegalStateException(s"update rewrite of $uri failed to land $part")
-      }
-      fs.delete(tmpDir, true)
+      val staged = stage.into(DataFiles.dirOf(relOfFileUri(fs, hadoopPath, uri)))(sub =>
+        sizedLayout(updated, n).write.mode(SaveMode.Overwrite).parquet(sub.toString))
+      if (staged == 0) throw new IllegalStateException(s"rewrite of $uri produced no part file")
     }
-    Snapshots.parEach(affected.toSeq) { case (u, _) => rewriteOne(u) }
-    if (affected.nonEmpty) Snapshots.commit(spark, root)
+    // stage every rewrite, then ONE swap (the deleteWhere discipline)
+    if (affected.nonEmpty)
+      DataFiles.rewrite(spark, fs, hadoopPath, affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) }) {
+        stage => graft.core.Par.each(affected.toSeq) { case (u, _) => rewriteOne(stage, u) }
+      }(_ => Snapshots.commit(spark, root))
     (affected.length.toLong, affected.map(_._2).sum)
   }
   }
@@ -932,9 +915,9 @@ object Sources {
     val targetBytes = rewriteTargetBytes(spark)
     val landedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
     def compactOne(
+        stage: DataFiles.Rewrites,
         dir: org.apache.hadoop.fs.Path,
         files: Seq[(org.apache.hadoop.fs.Path, Long)]): Unit = {
-      val stage = new org.apache.hadoop.fs.Path(dir, s".compact-${java.util.UUID.randomUUID().toString}")
       // provably-empty files (every recorded row MoR-deleted) contribute
       // nothing: archive without reading a byte
       val live = files.filterNot { case (f, _) =>
@@ -954,33 +937,21 @@ object Sources {
         // the scan's own splits (no shuffle); small scopes still land one
         // file, so prior layouts (and their query hashes) are unchanged.
         val n = rewriteFileCount(live.map(_._2).sum, targetBytes)
-        sizedLayout(
-          foldDvPositions(spark, rootPath, base, live.map(f => relOf(fs, rootPath, f._1)), dv),
-          n)
-          .write
-          .mode(SaveMode.Overwrite)
-          .parquet(stage.toString)
-        val parts = fs
-          .listStatus(stage)
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        if (parts.isEmpty)
-          throw new IllegalStateException(s"compaction of $dir produced no part file")
-        landedFiles.addAndGet(parts.length.toLong)
-        // land the compacted files FIRST (a directory lister sees old+new
-        // for a moment — duplicate-safe readers are the manifest readers,
-        // and the final state is committed below), then archive the
-        // originals
-        parts.foreach { part =>
-          if (!fs.rename(part, new org.apache.hadoop.fs.Path(dir, part.getName)))
-            throw new IllegalStateException(s"compaction of $dir failed to land $part")
-        }
+        landedFiles.addAndGet(stage.into(relOf(fs, rootPath, dir)) { sub =>
+          sizedLayout(
+            foldDvPositions(spark, rootPath, base, live.map(f => relOf(fs, rootPath, f._1)), dv),
+            n).write
+            .mode(SaveMode.Overwrite)
+            .parquet(sub.toString)
+        }.toLong)
       }
-      files.foreach { case (f, _) => Snapshots.archiveFile(fs, rootPath, f) }
-      fs.delete(stage, true)
     }
-    Snapshots.parEach(targets) { case (d, fls) => compactOne(d, fls) }
-    Snapshots.commit(spark, root)
+    // stage every scope's rewrite, then ONE swap: the originals archive,
+    // the compacted files land and the table commits — a failure anywhere
+    // leaves the table as it was
+    DataFiles.rewrite(spark, fs, rootPath, targets.flatMap(_._2.map(f => relOf(fs, rootPath, f._1)))) {
+      stage => graft.core.Par.each(targets) { case (d, fls) => compactOne(stage, d, fls) }
+    }(_ => Snapshots.commit(spark, root))
     // filesAfter counts LANDED replacement files only — a dir whose every
     // file was provably fully-deleted archives all and lands nothing; an
     // oversized scope lands several ~targetBytes files
@@ -1128,8 +1099,9 @@ object Sources {
     *
     * Scopes are hive partition dirs when present (rows never change
     * partition), else the whole table: ONE distributed range-shuffle per
-    * scope sized by `filesPerScope`, rewritten via the same stage → land →
-    * archive protocol as [[compactInPlace]] — replaced files are archived,
+    * scope sized by `filesPerScope`, rewritten via the same stage, then
+    * archive + land + commit protocol as [[compactInPlace]]
+    * ([[DataFiles.rewrite]]) — replaced files are archived,
     * never destroyed, so every pinned manifest keeps resolving and the
     * pre-cluster state stays restorable. Runs under the table lock;
     * the closing commit inherits the table's stats discipline. Returns
@@ -1178,8 +1150,10 @@ object Sources {
       val pcs = Snapshots.partitionColsFromRels(Snapshots.listDataFiles(spark, root)).toSet
       org.apache.spark.sql.types.StructType(s.filterNot(f => pcs.contains(f.name)))
     }
-    def clusterOne(dir: org.apache.hadoop.fs.Path, files: Seq[org.apache.hadoop.fs.Path]): Unit = {
-      val stage = new org.apache.hadoop.fs.Path(dir, s".cluster-${java.util.UUID.randomUUID().toString}")
+    def clusterOne(
+        stage: DataFiles.Rewrites,
+        dir: org.apache.hadoop.fs.Path,
+        files: Seq[org.apache.hadoop.fs.Path]): Unit = {
       val live = files.filterNot { f =>
         dvView.exists(v =>
           Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
@@ -1188,31 +1162,20 @@ object Sources {
         val rd = spark.read
         dataSchema.foreach(rd.schema)
         val base = rd.parquet(live.map(_.toString): _*)
-        foldDvPositions(spark, rootPath, base, live.map(relOf(fs, rootPath, _)), dv)
-          .repartitionByRange(filesPerScope, key)
-          .sortWithinPartitions(key)
-          .write
-          .mode(SaveMode.Overwrite)
-          .parquet(stage.toString)
-        val parts = fs
-          .listStatus(stage)
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        if (parts.isEmpty)
-          throw new IllegalStateException(s"clustering of $dir produced no part files")
-        // land the clustered files FIRST, then archive the originals — same
-        // momentary old+new window as compactInPlace; manifest readers are
-        // the consistency surface and the closing commit defines the result
-        parts.foreach { p =>
-          if (!fs.rename(p, new org.apache.hadoop.fs.Path(dir, p.getName)))
-            throw new IllegalStateException(s"clustering of $dir failed to land $p")
+        stage.into(relOf(fs, rootPath, dir)) { sub =>
+          foldDvPositions(spark, rootPath, base, live.map(relOf(fs, rootPath, _)), dv)
+            .repartitionByRange(filesPerScope, key)
+            .sortWithinPartitions(key)
+            .write
+            .mode(SaveMode.Overwrite)
+            .parquet(sub.toString)
         }
       }
-      files.foreach(f => Snapshots.archiveFile(fs, rootPath, f))
-      fs.delete(stage, true)
     }
-    Snapshots.parEach(targets) { case (d, fls) => clusterOne(d, fls) }
-    Snapshots.commit(spark, root)
+    // stage every scope, then ONE swap (the compactInPlace protocol)
+    DataFiles.rewrite(spark, fs, rootPath, targets.flatMap(_._2.map(relOf(fs, rootPath, _)))) {
+      stage => graft.core.Par.each(targets) { case (d, fls) => clusterOne(stage, d, fls) }
+    }(_ => Snapshots.commit(spark, root))
     (targets.length.toLong, targets.map(_._2.length.toLong).sum)
   }
   }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.Snapshots
+import graft.sources.{DataFiles, Snapshots}
 
 /** SQL-native catalog over the graft snapshot table format
   * ([[graft.sources.Snapshots]]) — the layer that turns a directory of
@@ -540,18 +540,8 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
         case Right(matched) if matched.nonEmpty =>
           val rootPath = new Path(dir)
           val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val done = mutable.ArrayBuffer.empty[String]
-          try {
-            matched.foreach { rel =>
-              Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel))
-              done += rel
-            }
-            Snapshots.commitRestated(spark, dir, Map.empty, removedRels = matched)
-          } catch {
-            case e: Throwable =>
-              Snapshots.rollbackRefusedLanding(fs, rootPath, Seq.empty, done.toSeq)
-              throw e
-          }
+          DataFiles.swap(fs, rootPath, matched, Seq.empty)(
+            Snapshots.commitRestated(spark, dir, Map.empty, removedRels = matched))
         case Right(_) => () // nothing matched: no commit
         case Left(_) => // some filter is not partition-exact, so there is at least one
           val pred = filters
@@ -1035,37 +1025,33 @@ object SnapWriteBuilder {
       // tables adopted via Snapshots.commit, which never declared one
       val partCols =
         if (latest.partCols.nonEmpty) latest.partCols else partitionColsOf(layoutRels)
-      // what the overwrite archived, for the refusal rollback below
-      var archivedForRollback: Seq[String] = Seq.empty
-      if (owFilters.isDefined) {
-        // archive the REPLACED files BEFORE the new data lands: pinned
-        // readers keep resolving, and the pre-overwrite state stays
-        // restorable — an overwrite is a new version, not a destruction.
-        // Which files count as replaced:
-        //  - plain OVERWRITE (AlwaysTrue): everything;
-        //  - a pushed partition spec: files whose dir values match every
-        //    filter — requires partition-exact filters over canonically-
-        //    rendered dirs (over- OR under-archiving corrupts semantics,
-        //    so anything weaker refuses);
-        // (dynamic mode runs through [[SnapDynamicOverwriteWrite]], the
-        // DSv2 batch write — the partitions the tasks actually wrote.)
-        val rootPath = new Path(dir)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val replaced: Seq[String] = SnapFilters
-          .partitionExactFiles(
-            Snapshots.listDataFiles(spark, dir),
-            partCols,
-            latest.schema.getOrElse(data.schema),
-            owFilters.get.toSeq)
-          .fold(
-            reason =>
-              throw new UnsupportedOperationException(
-                s"INSERT OVERWRITE on $dir: $reason — only partition-spec overwrites (and full " +
-                  "overwrites) over a canonical hive layout are supported; use DELETE + INSERT " +
-                  "for row-level replacement"),
-            identity)
-        replaced.foreach(rel => Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel)))
-        archivedForRollback = replaced
+      // the REPLACED files are archived, not deleted: pinned readers keep
+      // resolving, and the pre-overwrite state stays restorable — an
+      // overwrite is a new version, not a destruction. Which files count
+      // as replaced:
+      //  - plain OVERWRITE (AlwaysTrue): everything;
+      //  - a pushed partition spec: files whose dir values match every
+      //    filter — requires partition-exact filters over canonically-
+      //    rendered dirs (over- OR under-archiving corrupts semantics, so
+      //    anything weaker refuses);
+      // (dynamic mode runs through [[SnapDynamicOverwriteWrite]], the DSv2
+      // batch write — the partitions the tasks actually wrote.)
+      val replaced: Seq[String] = owFilters match {
+        case None => Seq.empty
+        case Some(filters) =>
+          SnapFilters
+            .partitionExactFiles(
+              Snapshots.listDataFiles(spark, dir),
+              partCols,
+              latest.schema.getOrElse(data.schema),
+              filters.toSeq)
+            .fold(
+              reason =>
+                throw new UnsupportedOperationException(
+                  s"INSERT OVERWRITE on $dir: $reason — only partition-spec overwrites (and full " +
+                    "overwrites) over a canonical hive layout are supported; use DELETE + INSERT " +
+                    "for row-level replacement"),
+              identity)
       }
       // cluster the incoming rows by the hive layout before writing: an
       // arbitrary upstream partitioning would emit tasks×partition-values
@@ -1076,33 +1062,24 @@ object SnapWriteBuilder {
       // AQE the hint is a no-op and the write is merely what it was.
       val clustered =
         if (partCols.nonEmpty) data.hint("rebalance", partCols.map(col(_)): _*) else data
-      // stage + land (the shared landing discipline): the INSERT then
-      // knows exactly which files are its own, so a refused commit (a
-      // CHECK violation) rolls back precisely them — a listing-diff
-      // rollback could misattribute and delete a concurrent lock-free
-      // appender's file that landed (or even committed) mid-window.
+      // stage, then ONE swap: archive the replaced files, land the staged
+      // ones, commit. The INSERT knows exactly which files are its own, so
+      // a failure anywhere — a landing rename or a refused commit (a CHECK
+      // violation) — restores precisely the pre-op live tree; a
+      // listing-diff rollback could misattribute and delete a concurrent
+      // lock-free appender's file that landed (or even committed)
+      // mid-window, and a rollback that left the replaced files archived
+      // would let the next listing commit silently truncate the
+      // overwritten partitions.
       val rootPath = new Path(dir)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val stage = new Path(rootPath, s".insert-stage-${java.util.UUID.randomUUID().toString.take(8)}")
-      // ONE failure scope from the stage write through the commit: the
-      // replaced files were archived ABOVE, so a failure anywhere in
-      // between (not just a CHECK refusal at commit) must restore the
-      // exact pre-op live tree — otherwise the next listing commit
-      // silently truncates the overwritten partitions (landParts already
-      // deletes its own partial landing before rethrowing)
-      var landed: Seq[String] = Seq.empty
+      val stage = DataFiles.stageDir(rootPath)
       try {
         val w = clustered.write.mode("overwrite")
         (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(stage.toString)
-        landed =
-          try Snapshots.landParts(fs, rootPath, Snapshots.stagedParts(spark, fs, stage))
-          finally fs.delete(stage, true)
-        Snapshots.commit(spark, dir, statsCols)
-      } catch {
-        case e: Throwable =>
-          Snapshots.rollbackRefusedLanding(fs, rootPath, landed, archivedForRollback)
-          throw e
-      }
+        DataFiles.swap(fs, rootPath, replaced, DataFiles.staged(spark, fs, stage))(
+          Snapshots.commit(spark, dir, statsCols))
+      } finally fs.delete(stage, true)
     }
   }
 }

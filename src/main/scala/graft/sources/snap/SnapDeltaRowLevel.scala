@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{DeleteVectors, Snapshots}
+import graft.sources.{DataFiles, DeleteVectors, Snapshots}
 
 /** SQL `UPDATE cat.t SET …`, `MERGE INTO cat.t` and un-pushable
   * `DELETE`s — Spark's DELTA-BASED row-level operation ([[SupportsDelta]])
@@ -169,8 +169,8 @@ class SnapDeltaBatchWrite(
   private def spark: SparkSession = SparkSession.active
 
   private val tag = java.util.UUID.randomUUID().toString.take(8)
-  private val insertStage = s".delta-ins-$tag"
-  private val dvStage = s".delta-dv-$tag"
+  private val insertStage = DataFiles.stageDir(new Path(dir), tag).getName
+  private val dvStage = DataFiles.stageDir(new Path(dir), s"$tag-dv").getName
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val conf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
@@ -204,21 +204,8 @@ class SnapDeltaBatchWrite(
       val insertStagePath = new Path(rootPath, insertStage)
       val dvStagePath = new Path(rootPath, dvStage)
       val addedRels = results.flatMap(_.insertedRels).sorted
-      var landed = List.empty[Path]
       try {
-        // 1. land the inserted files (new rels under their hive dirs) —
-        //    footer stats are read at their final paths, so landing must
-        //    precede the manifest write; a commit failure rolls them back
-        //    below (an orphan left in a LIVE dir would be silently
-        //    ADOPTED by the next listing-based commit as phantom rows)
-        addedRels.foreach { rel =>
-          val to = new Path(rootPath, rel)
-          fs.mkdirs(to.getParent)
-          if (!fs.rename(new Path(insertStagePath, rel), to))
-            sys.error(s"merge-on-read insert landing failed: $rel")
-          landed ::= to
-        }
-        // 2. fold the DV fragments with any existing sidecars into one
+        // 1. fold the DV fragments with any existing sidecars into one
         //    new sidecar per touched file — the same sorted-merge kernel
         //    the MoR DELETE uses. ONLY the fragment files the committed
         //    task messages name are read: a dead task attempt's orphan
@@ -245,21 +232,18 @@ class SnapDeltaBatchWrite(
               tag,
               rawRowBound = Some(results.map(_.fragments.map(_._3).sum).sum))
           }
-        // 3. ONE commit covers both sides — readers see the delete and
-        //    the insert atomically or not at all. boundedCommit applies
+        // 2. ONE commit covers both sides — readers see the delete and
+        //    the insert atomically or not at all. boundedCommit lands the
+        //    inserted files (new rels under their hive dirs) in the same
+        //    swap as its commit, so a failure leaves no orphan in a LIVE
+        //    dir for the next listing-based commit to adopt; it applies
         //    the deleted-fraction threshold here too: a MERGE/UPDATE that
         //    pushes a file past it rewrites that file in the same commit
         //    (the README's "MoR is bounded" claim holds for the whole DML
         //    surface, not just pushable DELETEs).
         if (written.nonEmpty || addedRels.nonEmpty)
-          DeleteVectors.boundedCommit(spark, dir, view, written, addedRels)
-      } catch {
-        case t: Throwable =>
-          // roll the landed files back out of the live tree (no manifest
-          // references them — the commit did not happen); best-effort,
-          // the statement is failing with `t` either way
-          landed.foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
-          throw t
+          DeleteVectors.boundedCommit(
+            spark, dir, view, written, DataFiles.staged(insertStagePath, addedRels))
       } finally {
         fs.delete(insertStagePath, true)
         fs.delete(dvStagePath, true)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.write.{
 }
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.Snapshots
+import graft.sources.{DataFiles, Snapshots}
 
 // Row-level plumbing of the snapshot table's DSv2 writes: the read side
 // of SQL UPDATE / MERGE INTO / un-pushable DELETE ([[SnapRowLevelScan]],
@@ -335,7 +335,7 @@ class SnapDynamicOverwriteWrite(dir: String, schema: StructType, partCols: Seq[S
 
   override def toBatch: BatchWrite = new BatchWrite {
     private def spark: SparkSession = SparkSession.active
-    private val stage = s".dynover-${java.util.UUID.randomUUID().toString}"
+    private val stage = DataFiles.stageDir(new Path(dir)).getName
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val conf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
@@ -367,31 +367,16 @@ class SnapDynamicOverwriteWrite(dir: String, schema: StructType, partCols: Seq[S
             val cut = rel.lastIndexOf('/')
             cut > 0 && touched.contains(rel.substring(0, cut))
           }
-        // ONE failure scope from the archive step through the commit: a
-        // mid-loop landing failure or a refused commit (CHECK violation)
-        // must restore the exact pre-op live tree — delete whatever this
-        // write already landed and move the replaced originals back from
-        // the archive; otherwise a later listing commit would adopt a
-        // partial never-committed batch AND silently truncate the
+        // ONE swap from the archive step through the commit: a mid-loop
+        // landing failure or a refused commit (CHECK violation) leaves the
+        // pre-op live tree — otherwise a later listing commit would adopt
+        // a partial never-committed batch AND silently truncate the
         // overwritten partitions
-        val landedSoFar = scala.collection.mutable.ListBuffer.empty[String]
-        try {
-          replaced.foreach(rel => Snapshots.archiveFile(fs, rootPath, new Path(rootPath, rel)))
-          val stagePath = new Path(rootPath, stage)
-          stagedRels.foreach { rel =>
-            val to = new Path(rootPath, rel)
-            fs.mkdirs(to.getParent)
-            if (!fs.rename(new Path(stagePath, rel), to))
-              sys.error(s"dynamic overwrite landing failed: $rel")
-            landedSoFar += rel
-          }
-          fs.delete(stagePath, true)
-          Snapshots.commit(spark, dir) // inherits the table's stats + bloom discipline
-        } catch {
-          case e: Throwable =>
-            Snapshots.rollbackRefusedLanding(fs, rootPath, landedSoFar.toSeq, replaced)
-            throw e
-        }
+        val stagePath = new Path(rootPath, stage)
+        try
+          DataFiles.swap(fs, rootPath, replaced, DataFiles.staged(stagePath, stagedRels))(
+            Snapshots.commit(spark, dir)) // inherits the table's stats + bloom discipline
+        finally fs.delete(stagePath, true)
       }
     }
 

@@ -7,14 +7,14 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{MetaFiles, Snapshots}
+import graft.sources.{DataFiles, MetaFiles, Snapshots}
 
 /** Exactly-once Structured Streaming sink for snapshot tables — the
   * native `df.writeStream.toTable("cat.t")` path, closing the loop the
   * repo previously served through `foreachBatch` + idempotent appends:
   *
   *  - each epoch's tasks stage parquet under
-  *    `.stream-<queryId>-<epochId>/` with DETERMINISTIC file names
+  *    `.stage-stream-<queryId>-<epochId>/` with DETERMINISTIC file names
   *    (`stream-<queryId>-<epoch>-<partition>.parquet`) — a replayed epoch
   *    rewrites the same names (parquet writer in OVERWRITE mode), so no
   *    landing order can double a row;
@@ -46,7 +46,6 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
 
   private def spark: SparkSession = SparkSession.active
 
-  private def stageDir(epochId: Long) = s".stream-$queryId-$epochId"
 
   private def epochMarker(root: Path) =
     new Path(new Path(root, Snapshots.ManifestDirName), s".epoch-$queryId")
@@ -98,7 +97,7 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
     val rootPath = new Path(dir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Snapshots.withTableLock(spark, dir) {
-      val stage = new Path(rootPath, stageDir(epochId))
+      val stage = SnapStreamWriterFactory.stageDir(dir, queryId, epochId)
       if (MetaFiles.last(fs, epochMarker(rootPath)) >= epochId) {
         fs.delete(stage, true) // replayed epoch: nothing to do
         return
@@ -113,42 +112,34 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
         case SnapStagedPartFiles(rels, _) => rels
         case other => sys.error(s"unexpected commit message $other")
       }
-      var landed = 0
-      stagedRels.foreach { rel =>
-        val from = new Path(stage, rel)
-        val to = new Path(rootPath, rel)
-        // replay safety — NEVER delete or re-land a rel that already has a
-        // history here: a live file with this rel is this epoch's own
-        // earlier landing (deterministic content — skipping is exact), and
-        // an ARCHIVED one means maintenance already moved the rows into a
-        // rewritten file (re-landing would duplicate every row of the
-        // epoch). Only a genuinely unseen rel lands.
-        val archived = new Path(new Path(rootPath, Snapshots.ArchiveDirName), rel)
-        if (!fs.exists(to) && !fs.exists(archived)) {
-          fs.mkdirs(to.getParent)
-          if (!fs.rename(from, to)) sys.error(s"stream epoch $epochId landing failed: $from")
-          landed += 1
-        }
+      // replay safety — NEVER delete or re-land a rel that already has a
+      // history here: a live file with this rel is this epoch's own
+      // earlier landing (deterministic content — skipping is exact), and
+      // an ARCHIVED one means maintenance already moved the rows into a
+      // rewritten file (re-landing would duplicate every row of the
+      // epoch). Only a genuinely unseen rel lands.
+      val live = stagedRels.filter(rel => fs.exists(new Path(rootPath, rel))).toSet
+      val fresh = DataFiles.staged(stage, stagedRels).filter { case (_, rel) =>
+        !live(rel) && !fs.exists(new Path(new Path(rootPath, Snapshots.ArchiveDirName), rel))
       }
-      fs.delete(stage, true)
+      val landing = fresh.map(_._2).toSet
       // commit when this epoch changed the live tree: fresh landings, or a
       // crash-before-commit replay whose files already sit live but
       // UNCOMMITTED. An epoch that changed nothing (all-empty tasks, or a
       // fully-committed replay) must not churn out an identical manifest
       // version — a watermark-advance batch per trigger would otherwise
       // grow history unboundedly.
-      val uncommittedLive = stagedRels.exists { rel =>
-        !committedRels.contains(rel) && fs.exists(new Path(rootPath, rel))
-      }
-      if (landed > 0 || uncommittedLive)
-        // O(delta) epoch commit: the epoch knows exactly which rels it
-        // landed — no directory listing, and a few-line delta manifest
-        // instead of a full live-list rewrite per trigger (stats + bloom
-        // disciplines still inherited; checkpoint versions stay periodic)
-        Snapshots.commitAppend(
-          spark,
-          dir,
-          stagedRels.filter(rel => fs.exists(new Path(rootPath, rel))))
+      try
+        DataFiles.swap(fs, rootPath, Seq.empty, fresh) {
+          if (landing.nonEmpty || live.exists(rel => !committedRels.contains(rel)))
+            // O(delta) epoch commit: the epoch knows exactly which rels it
+            // landed — no directory listing, and a few-line delta manifest
+            // instead of a full live-list rewrite per trigger (stats +
+            // bloom disciplines still inherited; checkpoint versions stay
+            // periodic)
+            Snapshots.commitAppend(spark, dir, stagedRels.filter(rel => live(rel) || landing(rel)))
+        }
+      finally fs.delete(stage, true)
       MetaFiles.advance(fs, epochMarker(rootPath), epochId)
     }
   }
@@ -156,7 +147,7 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val rootPath = new Path(dir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(rootPath, stageDir(epochId)), true)
+    fs.delete(SnapStreamWriterFactory.stageDir(dir, queryId, epochId), true)
   }
 }
 
@@ -175,21 +166,29 @@ case class SnapStreamWriterFactory(
     // deterministic per-(epoch, partition[, partition-value]) name at
     // task commit
     val finalName = f"stream-$queryId-$epochId-$partitionId%05d.parquet"
+    val stage = SnapStreamWriterFactory.stageDir(dir, queryId, epochId)
     if (partCols.isEmpty)
       new SnapParquetDataWriter(
-        new Path(
-          s"$dir/.stream-$queryId-$epochId",
-          f"attempt-$taskId-$partitionId%05d.parquet"),
+        new Path(stage, f"attempt-$taskId-$partitionId%05d.parquet"),
         schema,
         org.apache.spark.sql.graft.Bridge.confOf(conf),
         finalName = Some(finalName))
     else
       new SnapHivePartitionedDataWriter(
-        s"$dir/.stream-$queryId-$epochId",
+        stage.toString,
         schema,
         partCols,
         org.apache.spark.sql.graft.Bridge.confOf(conf),
         f"attempt-$taskId-$partitionId%05d.parquet",
         finalName = Some(finalName))
   }
+}
+
+object SnapStreamWriterFactory {
+
+  /** An epoch's stage dir: named by (query, epoch), so a replayed epoch's
+    * tasks and its commit find the same one.
+    */
+  def stageDir(dir: String, queryId: String, epochId: Long): Path =
+    DataFiles.stageDir(new Path(dir), s"stream-$queryId-$epochId")
 }

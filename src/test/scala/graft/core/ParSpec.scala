@@ -29,4 +29,24 @@ class ParSpec extends SparkSpec {
     while (active.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     assert(active.isEmpty, "a cancelled sibling left a running job")
   }
+
+  test("each: no item is still running when it rethrows, and items not yet started never run") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val err = intercept[IllegalStateException] {
+      Par.each(0 until 10, width = 2) { i =>
+        started.incrementAndGet()
+        if (i == 0) {
+          while (started.get < 2) Thread.sleep(5) // the sibling is running
+          throw new IllegalStateException("boom")
+        }
+        Thread.sleep(1000)
+        finished.incrementAndGet()
+      }
+    }
+    assert(err.getMessage == "boom")
+    val (s, f) = (started.get, finished.get)
+    assert(f == s - 1, s"$s items started but only $f finished before the rethrow")
+    assert(s == 2, s"$s items started: the hand-out went on after the failure")
+  }
 }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.functions.sum
 
 import graft.SparkSpec
 
@@ -77,12 +78,15 @@ object CountingFs {
   }
 }
 
-/** Count law of the metadata-file protocol: one steady-state operation of
-  * each commit family issues no more namespace calls than the bounds
-  * below, which are the counts measured before the small-file writes and
-  * reads moved into [[MetaFiles]] (the probe printed by this spec, run on
-  * that code). Each operation runs once untimed first so the counted run
-  * sees the steady state (epoch marker present, view registered).
+/** Count law of the metadata-file and data-file protocols: one
+  * steady-state operation of each commit family issues no more namespace
+  * calls than the bounds below. The upsert, append and refresh bounds are
+  * the counts measured before the small-file writes and reads moved into
+  * [[MetaFiles]]; the compaction and UPDATE bounds the counts measured
+  * before data files landed through [[DataFiles]] (the probe printed by
+  * this spec, run on that code). Each operation runs once untimed first so
+  * the counted run sees the steady state (epoch marker present, view
+  * registered).
   */
 class FsCallCountSpec extends SparkSpec {
 
@@ -94,7 +98,11 @@ class FsCallCountSpec extends SparkSpec {
     "commit_append" ->
       Map("create" -> 7L, "rename" -> 6L, "delete" -> 1L, "mkdirs" -> 11L, "exists" -> 26L),
     "mv_refresh" ->
-      Map("create" -> 10L, "rename" -> 9L, "delete" -> 6L, "mkdirs" -> 21L, "exists" -> 74L))
+      Map("create" -> 10L, "rename" -> 9L, "delete" -> 6L, "mkdirs" -> 21L, "exists" -> 74L),
+    "call_compact" ->
+      Map("create" -> 9L, "rename" -> 12L, "delete" -> 5L, "mkdirs" -> 22L, "exists" -> 60L),
+    "sql_update" ->
+      Map("create" -> 17L, "rename" -> 12L, "delete" -> 4L, "mkdirs" -> 26L, "exists" -> 55L))
 
   private def base(tag: String): String = {
     spark.sparkContext.hadoopConfiguration.set("fs.fscount.impl", classOf[CountingFs].getName)
@@ -161,5 +169,42 @@ class FsCallCountSpec extends SparkSpec {
     DeleteVectors.upsert(spark, src, Seq(("d03", "c", 4L)).toDF("day", "cat", "v"), Seq("day", "cat"))
     check("mv_refresh", CountingFs.during(Mv.refresh(spark, mv)))
     assert(Mv.definition(spark, mv).refreshedVersion == Snapshots.latestVersion(spark, src))
+  }
+
+  /** A catalog named `name` over the tables under `b`. */
+  private def catalog(name: String, b: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[graft.sources.snap.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", b)
+  }
+
+  test("one scoped CALL compact issues no more namespace calls than the bound") {
+    val b = base("fscount_compact")
+    val dir = s"$b/t"
+    table(dir)
+    catalog("fscc", b)
+    // two small appends to one day, then that day's compaction
+    def appends(): Unit = Seq(101L, 102L).foreach { v =>
+      DeleteVectors.upsert(spark, dir, Seq(("d01", s"x$v", v)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    }
+    def compact() = spark.sql("CALL fscc.compact(table => 't', where => \"day = 'd01'\")").collect()
+    appends()
+    compact()
+    appends()
+    val v = Snapshots.latestVersion(spark, dir)
+    check("call_compact", CountingFs.during(compact()))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+    assert(Snapshots.listDataFiles(spark, dir).count(_.startsWith("day=d01/")) == 1)
+  }
+
+  test("one SQL UPDATE issues no more namespace calls than the bound") {
+    val b = base("fscount_update")
+    val dir = s"$b/t"
+    table(dir)
+    catalog("fscu", b)
+    spark.sql("UPDATE fscu.t SET v = v + 1 WHERE cat = 'a'")
+    val v = Snapshots.latestVersion(spark, dir)
+    check("sql_update", CountingFs.during(spark.sql("UPDATE fscu.t SET v = v + 1 WHERE cat = 'a'")))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+    assert(Snapshots.readSnapshot(spark, dir).filter($"cat" === "a").select(sum($"v")).head().getLong(0) == 34L)
   }
 }
