@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 
 /** Bounded collects: bring a frame to the driver only when it is small.
   * Every "collect it if it fits, else stay distributed" choice in graft
@@ -9,15 +12,64 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Collect {
 
+  /** Partitions read by [[atMost]]'s first job. Each of them may send up
+    * to `maxRows + 1` rows, so this count, not the frame's, bounds what
+    * the driver takes in from one job; later jobs read four times as many
+    * partitions as the one before, each task taking only the rows still
+    * missing (Spark's incremental take, from a wider first step).
+    */
+  private[graft] val FirstJobPartitions = 16
+
   /** `df`'s rows when it has at most `maxRows` of them; None when it has
     * more, or when `maxRows` is not positive (such a bound never collects,
     * which is how a zero ceiling forces a distributed path). Nulls are
     * returned as they are: each caller decides what a null means.
+    *
+    * A frame of at most [[FirstJobPartitions]] partitions is read in ONE
+    * Spark job, each task stopping after `maxRows + 1` rows; a frame that
+    * plans to a local table scan is read with no job at all. Rows keep the
+    * frame's partition order, as `limit(n).collect()` does.
     */
   def atMost(df: DataFrame, maxRows: Long): Option[Array[Row]] =
     if (maxRows <= 0) None
     else {
-      val rows = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
-      if (rows.length > maxRows) None else Some(rows)
+      val lim = math.min(maxRows, Int.MaxValue - 1L).toInt + 1
+      val qe = df.queryExecution
+      qe.executedPlan match {
+        case _: LocalTableScanExec => Some(df.limit(lim).collect()).filter(_.length <= maxRows)
+        case _ =>
+          SQLExecution.withNewExecutionId(qe, Some("Collect.atMost")) {
+            val rdd = qe.executedPlan.execute()
+            val nParts = rdd.getNumPartitions
+            val parts = new Array[Array[InternalRow]](nParts)
+            var total = 0L
+            var scanned = 0
+            var step = FirstJobPartitions.toLong
+            while (total < lim && scanned < nParts) {
+              val left = (lim - total).toInt
+              val from = scanned
+              val upTo = math.min(nParts.toLong, scanned + step).toInt
+              df.sparkSession.sparkContext.runJob(
+                rdd,
+                (_: org.apache.spark.TaskContext, it: Iterator[InternalRow]) =>
+                  it.take(left).map(_.copy()).toArray,
+                from until upTo,
+                (i: Int, got: Array[InternalRow]) => {
+                  // `i` indexes this job's partitions; past the bound the
+                  // answer is None, so what arrives is dropped
+                  if (total + got.length <= maxRows) parts(from + i) = got
+                  total += got.length
+                })
+              scanned = upTo
+              step *= 4
+            }
+            if (total > maxRows) None
+            else {
+              val toRow =
+                ExpressionEncoder(RowEncoder.encoderFor(df.schema)).resolveAndBind().createDeserializer()
+              Some(parts.iterator.filter(_ != null).flatMap(_.iterator).map(toRow).toArray)
+            }
+          }
+      }
     }
 }

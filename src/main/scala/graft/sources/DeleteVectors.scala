@@ -757,6 +757,12 @@ object DeleteVectors {
     * every epoch. The key set broadcasts only when provably small (a
     * backfill epoch carrying tens of millions of keys takes a real join,
     * not an OOM). Sets [[lastUpsertCandidateFiles]].
+    *
+    * A key source that plans to a local relation (a driver-built batch,
+    * [[Mv]]'s change frame) keeps its keys on the driver: the distinct
+    * set, the [[keyMeta]] and the partition tuples come from its rows
+    * with no Spark job, and the match scan filters on the key set
+    * ([[graft.core.LocalFrames.in]]) instead of broadcasting it.
     */
   private def matchKeyUpserts(
       spark: SparkSession,
@@ -769,7 +775,11 @@ object DeleteVectors {
       partCols: Seq[String],
       commitTag: String,
       nullSafe: Boolean = false): Seq[(String, String, Long)] = {
-    val keys0 = sourceKeys.distinct().persist()
+    val local = graft.core.LocalFrames
+      .rowsOf(sourceKeys)
+      .map(graft.core.LocalFrames.distinctRows(_, sourceKeys.schema))
+    val keys0 = local.fold(sourceKeys.distinct().persist())(rows =>
+      graft.core.LocalFrames.of(spark, rows.toSeq, sourceKeys.schema))
     val (candidates, written) =
       try {
         // ONE action: materializes the persist and computes the count +
@@ -784,16 +794,24 @@ object DeleteVectors {
           if (candidates.isEmpty) Seq.empty
           else {
             val scan = Snapshots.scanRelsWithPos(spark, root, candidates, view.schema)
-            val keys =
-              if (keyCount <= Snapshots.DvBroadcastMaxPositions) broadcast(keys0) else keys0
             // `<=>` when the caller matches null-safely (Mv's NULL-keyed
             // groups); plain name-equality join otherwise — EqualNullSafe
             // still hash-joins, but the default face keeps SQL equality
             // (a NULL key matching nothing IS merge semantics)
-            val matched =
-              if (nullSafe)
-                scan.join(keys, keyCols.map(c => scan(c) <=> keys(c)).reduce(_ && _), "left_semi")
-              else scan.join(keys, keyCols, "left_semi")
+            val matched = local match {
+              case Some(rows) =>
+                // the rows are the key columns in order; the set probe
+                // matches under `<=>`, so SQL equality drops the
+                // null-bearing keys first
+                val probe = if (nullSafe) rows else rows.filterNot(_.anyNull)
+                scan.filter(graft.core.LocalFrames.in(keyCols.map(scan(_)), keyFields.map(_.dataType), probe))
+              case None =>
+                val keys =
+                  if (keyCount <= Snapshots.DvBroadcastMaxPositions) broadcast(keys0) else keys0
+                if (nullSafe)
+                  scan.join(keys, keyCols.map(c => scan(c) <=> keys(c)).reduce(_ && _), "left_semi")
+                else scan.join(keys, keyCols, "left_semi")
+            }
             val matches = matched
               .select(col("__graft_dv_rel__").as("rel"), col("__graft_dv_pos__").as("pos"))
             val oldDvByRel = candidates.flatMap { rel =>
@@ -803,7 +821,7 @@ object DeleteVectors {
               spark, root, matches, oldDvByRel, commitTag, rawRowBound(view, candidates))
           }
         (candidates, written)
-      } finally keys0.unpersist()
+      } finally if (local.isEmpty) keys0.unpersist()
     lastUpsertCandidateFiles.set(candidates.size.toLong)
     written
   }
@@ -992,6 +1010,57 @@ object DeleteVectors {
   private[sources] def keyMeta(
       keys0: DataFrame,
       keyCols: Seq[String],
+      keyFields: Seq[StructField]): KeyMeta =
+    graft.core.LocalFrames.rowsOf(keys0) match {
+      case Some(rows) => keyMetaOnDriver(rows, keys0.schema, keyCols, keyFields)
+      case None => keyMetaBySpark(keys0, keyCols, keyFields)
+    }
+
+  /** [[keyMeta]] of a local key batch from its rows, with no Spark job:
+    * the same counts, and each range bound is the aggregate's — the
+    * minimum or maximum under Spark's ordering of the probe type (FLOAT
+    * widened to DOUBLE by Spark's own `Cast`), rendered by Spark's own
+    * `CAST(… AS STRING)` in the session time zone.
+    */
+  private[sources] def keyMetaOnDriver(
+      rows: Array[org.apache.spark.sql.Row],
+      schema: StructType,
+      keyCols: Seq[String],
+      keyFields: Seq[StructField]): KeyMeta = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val tz = Option(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    val keyIdx = keyCols.map(schema.fieldIndex)
+    val nullFree = rows.filterNot(r => keyIdx.exists(r.isNullAt))
+    def range(f: StructField, of: Array[org.apache.spark.sql.Row]) = {
+      val i = schema.fieldIndex(f.name)
+      val dt = schema(i).dataType
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+      val (probeType, probe): (org.apache.spark.sql.types.DataType, Any => Any) = f.dataType match {
+        case FloatType => (DoubleType, v => Cast(Literal(v, dt), DoubleType, tz).eval())
+        case _ => (dt, v => v)
+      }
+      val vals = of.iterator.filterNot(_.isNullAt(i)).map(r => probe(toCatalyst(r.get(i)))).toSeq
+      if (vals.isEmpty) (f.name, None, None)
+      else {
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(probeType)
+        def render(v: Any) = Some(Cast(Literal(v, probeType), StringType, tz).eval().toString)
+        (f.name, render(vals.min(ord)), render(vals.max(ord)))
+      }
+    }
+    KeyMeta(
+      count = rows.length.toLong,
+      nullCounts = keyIdx.map(i => rows.count(_.isNullAt(i)).toLong),
+      nAny = (rows.length - nullFree.length).toLong,
+      plainRanges = keyFields.map(range(_, rows)),
+      nullFreeRanges = keyFields.map(range(_, nullFree)))
+  }
+
+  /** [[keyMeta]] as one Spark aggregate over `keys0`. */
+  private[sources] def keyMetaBySpark(
+      keys0: DataFrame,
+      keyCols: Seq[String],
       keyFields: Seq[StructField]): KeyMeta = {
     import org.apache.spark.sql.functions.{count => scount, max => smax, min => smin}
     val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
@@ -1127,7 +1196,7 @@ object DeleteVectors {
       ranges: Seq[(String, Option[String], Option[String])]): Seq[String] =
     if (partCols.nonEmpty && partCols.forall(keyCols.contains)) {
       val relDf = partitionValuesDf(spark, view, alive, partCols)
-      val touched = keys0.select(partCols.map(col): _*).distinct()
+      val touched = keys0.select(partCols.map(col): _*)
       // the epoch's distinct partition tuples are usually FEW: collect
       // them (capped — the limit not binding proves the set is complete)
       // and match the LOCAL relation driver-side with the same EqualTo
@@ -1135,7 +1204,7 @@ object DeleteVectors {
       // backfill epoch touching more partitions than the cap keeps the
       // broadcast semi-join. NULL-bearing tuples match nothing under SQL
       // equality in BOTH shapes, so they drop.
-      graft.core.Collect.atMost(touched, 1024) match {
+      graft.core.Collect.atMost(graft.core.LocalFrames.distinct(touched), 1024) match {
         case Some(tuples) =>
           val nonNull = tuples.filter(r => !r.anyNull)
           if (nonNull.isEmpty) Seq.empty
@@ -1155,7 +1224,7 @@ object DeleteVectors {
           }
         case None =>
           relDf
-            .join(broadcast(touched), partCols.toSeq, "left_semi")
+            .join(broadcast(touched.distinct()), partCols.toSeq, "left_semi")
             .select(col("__graft_scope_rel__"))
             .collect()
             .map(_.getString(0))
@@ -1274,10 +1343,14 @@ object DeleteVectors {
       epochPrefix: String,
       committedRels: Set[String]): Seq[(Path, String)] = {
     val writer =
-      if (partCols.nonEmpty)
+      if (partCols.nonEmpty && !graft.core.LocalFrames.isLocal(df))
         // co-locate each partition's rows (the mergeIntoPartitioned
         // small-files discipline): ~one file per touched partition value
         df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
+      else if (partCols.nonEmpty)
+        // a driver-held batch writes from one task, which sorts by the
+        // partition columns: the same one file per value, no shuffle
+        df.coalesce(1).write.partitionBy(partCols: _*)
       else df.coalesce(1).write
     writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
     // zero-row parts never land — a pure-delete CDC epoch must not commit

@@ -10,6 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr, lit}
 import org.apache.spark.sql.types.StructField
 
+import graft.core.{Collect, LocalFrames}
+
 /** Incrementally-maintained MATERIALIZED VIEWS over snapshot tables —
   * `CREATE MATERIALIZED VIEW … GROUP BY …` with a refresh that prices at
   * the CHANGE, not the table.
@@ -791,6 +793,22 @@ object Mv {
     * zeros. Snapshot-consistent under concurrent source writers: the
     * whole refresh reads the source PINNED at the head observed on entry,
     * and the watermark records exactly that version.
+    *
+    * DRIVER-HELD path: an incremental window (fact feed or dim delta)
+    * whose affected groups number at most [[driverMaxGroups]] (2^16) is
+    * collected ONCE through [[Collect.atMost]] and re-seated as a local
+    * frame. The trace tuples and their key metadata, the derived-key
+    * interval and mixed-concat probes and the unconstrained-dim checks
+    * then read driver rows; the recompute is one scan-and-aggregate over
+    * the candidate files filtered by the key set; the vanished groups and
+    * both counts come from the collected arrays; and the delta applies
+    * through [[DeleteVectors.applyChanges]] as a local change frame. What
+    * stays is the job floor: the change-feed read, the recompute scan and
+    * its aggregate, the view's match scan that feeds the sidecar write,
+    * and the parquet append. Above the ceiling, on a full resync, or with
+    * the `private[sources]` seam at zero (`driverMaxGroups.withValue(0L)`,
+    * how specs force it) the distributed chain runs instead — the parity
+    * reference, same rows, same report.
     */
   def refresh(spark: SparkSession, mvRoot: String): RefreshReport =
     Snapshots.withTableLock(spark, mvRoot) {
@@ -1249,11 +1267,18 @@ object Mv {
       if (monthly)
         s"sequence(trunc(to_date('$d0'), 'MONTH'), to_date('$d1'), interval 1 month)"
       else s"sequence(to_date('$d0'), to_date('$d1'), interval 1 day)"
-    val base = spark.range(1).selectExpr(s"explode($starts) AS d")
+    // the period starts, evaluated by Spark over one driver-held row
+    val starts0 = LocalFrames
+      .of(spark, Seq(org.apache.spark.sql.Row()), new org.apache.spark.sql.types.StructType())
+      .selectExpr(s"$starts AS ds")
+    val base = LocalFrames.of(
+      spark,
+      starts0.head().getSeq[Any](0).map(org.apache.spark.sql.Row(_)),
+      new org.apache.spark.sql.types.StructType().add("d", org.apache.spark.sql.types.DateType))
     val matched = kind match {
-      case "hour" => vals.crossJoin(base) // every day holds every hour
+      case "hour" => LocalFrames.crossJoin(vals, base) // every day holds every hour
       case _ =>
-        vals.crossJoin(base).where(expr(s"$kind(d) = cast(__v as int)"))
+        LocalFrames.crossJoin(vals, base).where(expr(s"$kind(d) = cast(__v as int)"))
     }
     val endSql = kind match {
       case "month" => "add_months(d, 1)"
@@ -1277,7 +1302,7 @@ object Mv {
     val rendered = matched.selectExpr(
       statBoundSql(loSql, f.dataType) + " AS lo",
       statBoundSql(hiSql, f.dataType) + " AS hi")
-    graft.core.Collect
+    Collect
       .atMost(rendered, MaxCyclicProbes)
       .map(_.toSeq.map(r => (r.getString(0), r.getString(1))))
   }
@@ -1366,6 +1391,7 @@ object Mv {
       affected: DataFrame,
       candidates: Seq[String]): Seq[String] = {
     val factCols = srcSchema.fieldNames.toSet
+    val driver = LocalFrames.isLocal(affected)
     lazy val dimVisible: Seq[(MvDim, Set[String])] = d.dims.flatMap { dim =>
       Snapshots
         .schemaOf(spark, dim.root)
@@ -1381,7 +1407,7 @@ object Mv {
           srcSchema.fields.find(_.name == fc) match {
             case None => cands // schema drifted; the evolution gate refuses elsewhere
             case Some(field) =>
-              val vals = affected.select(col(k).cast("string").as("__g")).distinct()
+              val vals = LocalFrames.distinct(affected.select(col(k).cast("string").as("__g")))
               if (!vals.where(col("__g").isNull).isEmpty) cands // NULL group: stand down
               else {
                 val dimSchema = Snapshots
@@ -1391,23 +1417,28 @@ object Mv {
                 val dimExprs = parts.zipWithIndex.collect { case (DimPart(sql), i) =>
                   expr(sql).as(s"__p$i")
                 }
-                var tuples = Snapshots
+                val dimTuples = Snapshots
                   .readSnapshot(spark, dim.root, dim.version)
                   .select(dimExprs: _*)
                   .distinct()
+                var tuples =
+                  if (!driver) dimTuples
+                  else
+                    Collect
+                      .atMost(dimTuples, driverMaxGroups.value)
+                      .fold(dimTuples)(rows => LocalFrames.of(spark, rows.toSeq, dimTuples.schema))
                 if (dim.joinType != "inner") {
                   // the unmatched rows' tuple: every dim part at its
                   // NULL-IMAGE (null-intolerant parts image to NULL and
                   // drop out below — exactly the rows whose key is NULL)
-                  val imageRow = spark
-                    .range(1)
+                  val imageRow = LocalFrames
+                    .of(spark, Seq(org.apache.spark.sql.Row()), new org.apache.spark.sql.types.StructType())
                     .select(parts.zipWithIndex.collect { case (DimPart(sql), i) =>
                       nullImageLit(spark, dimSchema, sql).cast("string").as(s"__p$i")
                     }: _*)
-                  tuples = tuples
-                    .select(dimPartIdx.map(i => col(s"__p$i").cast("string")): _*)
-                    .unionByName(imageRow)
-                    .distinct()
+                  tuples = LocalFrames.distinct(LocalFrames.union(
+                    tuples.select(dimPartIdx.map(i => col(s"__p$i").cast("string")): _*),
+                    imageRow))
                 }
                 val factIdx = parts.indexWhere(_.isInstanceOf[FactPart])
                 def sideSql(sel: Seq[(MixedPart, Int)]): String =
@@ -1429,8 +1460,9 @@ object Mv {
                     }.mkString(", ") + ")"
                 val preSql = sideSql(parts.zipWithIndex.take(factIdx))
                 val sufSql = sideSql(parts.zipWithIndex.drop(factIdx + 1))
-                val vf = vals
-                  .crossJoin(broadcast(tuples))
+                val crossed =
+                  if (driver) LocalFrames.crossJoin(vals, tuples) else vals.crossJoin(broadcast(tuples))
+                val vf0 = crossed
                   .selectExpr(s"($preSql) AS __pre", s"($sufSql) AS __suf", "__g")
                   .selectExpr(
                     "CASE WHEN length(__g) >= length(__pre) + length(__suf) " +
@@ -1441,8 +1473,7 @@ object Mv {
                   .where(col("__vf").isNotNull)
                   .select(col("__vf").cast(field.dataType).as(fc))
                   .where(col(fc).isNotNull) // an uncastable split admits nothing
-                  .distinct()
-                  .persist()
+                val vf = distinctHeld(spark, vf0, driver)
                 try {
                   val vMeta = DeleteVectors.keyMeta(vf, Seq(fc), Seq(field))
                   if (vMeta.count == 0L) Seq.empty // no (value, tuple) solves: groups vanish
@@ -1570,13 +1601,9 @@ object Mv {
                   def rendered(src: DataFrame) = src.selectExpr(
                     statBoundSql("lo", f.dataType) + " AS lo",
                     statBoundSql("hi", f.dataType) + " AS hi")
-                  val rows = graft.core.Collect
+                  val rows = Collect
                     .atMost(rendered(typed), MaxIntervalProbes)
-                    .getOrElse(
-                      rendered(typed.agg(
-                        org.apache.spark.sql.functions.min(col("lo")).as("lo"),
-                        org.apache.spark.sql.functions.max(col("hi")).as("hi")))
-                        .collect())
+                    .getOrElse(rendered(LocalFrames.extremes(typed, "lo", "hi")).collect())
                   Some(rows.toSeq.map(r => (r.getString(0), r.getString(1))))
                 })
               }
@@ -1593,7 +1620,7 @@ object Mv {
         inverse match {
           case None => cands // unrecognized shape: no constraint from this key
           case Some((f, intervalsOf)) =>
-            val vals = affected.select(col(k).as("__v")).distinct()
+            val vals = LocalFrames.distinct(affected.select(col(k).as("__v")))
             intervalsOf(vals) match {
               case None => cands // no usable span / probe cap: no constraint
               case Some(intervals) =>
@@ -1616,6 +1643,50 @@ object Mv {
       }
     }
 
+  /** Affected-group ceiling of the DRIVER-HELD refresh: an incremental
+    * window naming at most this many distinct groups is collected once
+    * ([[Collect.atMost]]) and every later probe, the vanished groups and
+    * both counts run on the driver rows; above it, on a full resync, or
+    * at zero (specs: `driverMaxGroups.withValue(0L)`) the distributed
+    * chain runs. A constant, no conf: 2^16 groups of keys and aggregates
+    * are a few MB on the driver.
+    */
+  private[sources] val driverMaxGroups = new scala.util.DynamicVariable[Long](1L << 16)
+
+  /** `keys` distinct, with their count, FORCED: held on the driver as a
+    * local frame when they number at most [[driverMaxGroups]], else
+    * persisted and counted. `keys` holds one row per changed row: when
+    * those fit the ceiling they are collected as they are (one job, no
+    * shuffle) and distinct on the driver; else Spark distincts them
+    * before the bounded collect.
+    */
+  private def heldKeys(spark: SparkSession, keys: DataFrame): (DataFrame, Long) = {
+    val distinct = keys.distinct()
+    Collect
+      .atMost(keys, driverMaxGroups.value)
+      .map(LocalFrames.distinctRows(_, keys.schema))
+      .orElse(Collect.atMost(distinct, driverMaxGroups.value)) match {
+      case Some(rows) => (LocalFrames.of(spark, rows.toSeq, distinct.schema), rows.length.toLong)
+      case None =>
+        val p = distinct.persist()
+        try (p, p.count())
+        catch { case NonFatal(e) => p.unpersist(); throw e }
+    }
+  }
+
+  /** `df` distinct for a probe that re-reads it. On the driver path
+    * (`driver`) a local `df` distincts on its rows and any other is held
+    * through one bounded collect when it fits [[driverMaxGroups]]; else
+    * (and always on the distributed chain) it is persisted — the caller
+    * unpersists, a no-op on a local frame.
+    */
+  private def distinctHeld(spark: SparkSession, df: DataFrame, driver: Boolean): DataFrame =
+    if (driver && LocalFrames.isLocal(df)) LocalFrames.distinct(df)
+    else
+      (if (driver) Collect.atMost(df.distinct(), driverMaxGroups.value) else None)
+        .map(rows => LocalFrames.of(spark, rows.toSeq, df.schema))
+        .getOrElse(df.distinct().persist())
+
   /** The row-level change feed of a snapshot table over `(fromV, toV]` —
     * reads only the versions' CHANGED files; raises when the window is
     * no longer expressible (vacuumed predecessor data).
@@ -1635,8 +1706,8 @@ object Mv {
   /** The affected group keys via the row-level change feed, with their
     * count — `None` when the window is no longer expressible (vacuumed
     * predecessor data), in which case the caller downgrades to a full
-    * resync. The frame is persisted and FORCED here (the count) so a feed
-    * refusal surfaces before any MV mutation.
+    * resync. The keys are FORCED here ([[heldKeys]]) so a feed refusal
+    * surfaces before any MV mutation.
     */
   private def affectedKeysViaChanges(
       spark: SparkSession,
@@ -1668,7 +1739,7 @@ object Mv {
             fullDimImage(d, dim, touched, srcSchema, keepKeys = false)
               .select(d.keyCols.map(col): _*))
         }
-        keys.distinct().persist()
+        keys
       } catch {
         case NonFatal(e) =>
           log.warn(
@@ -1679,10 +1750,9 @@ object Mv {
       }
     try {
       // force NOW: a vacuumed window surfaces here, not mid-apply
-      Some((keys, keys.count()))
+      Some(heldKeys(spark, keys))
     } catch {
       case NonFatal(e) =>
-        keys.unpersist()
         log.warn(
           s"materialized-view refresh: change feed for ${d.sourceRoot} " +
             s"(${d.refreshedVersion}, $v1] unreadable (${e.getMessage}); full resync",
@@ -1810,7 +1880,7 @@ object Mv {
         }
         val parts = factSide ++ dimSide
         if (parts.isEmpty) { release(); return None } // nothing moved: caller resyncs
-        parts.reduce(_ unionByName _).distinct().persist()
+        parts.reduce(_ unionByName _)
       } catch {
         case NonFatal(e) =>
           release()
@@ -1822,10 +1892,9 @@ object Mv {
       }
     try {
       // force NOW: an unreadable old dim pin surfaces here
-      Some((affected, affected.count()))
+      Some(heldKeys(spark, affected))
     } catch {
       case NonFatal(e) =>
-        affected.unpersist()
         log.warn(
           s"materialized-view refresh: dim-delta window unreadable (${e.getMessage}); " +
             "full resync",
@@ -1880,6 +1949,10 @@ object Mv {
     // compare in the TABLE's key domain (the upsert prologue's cast)
     val affectedCast =
       affected.select(keyFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    // the DRIVER-HELD path: the affected keys are a local frame, so every
+    // probe below reads driver rows and the recompute filters on them
+    val driver = LocalFrames.isLocal(affectedCast)
+    lazy val affectedRows = affectedCast.collect()
     val srcPartCols =
       if (srcView.partCols.nonEmpty) srcView.partCols
       else Snapshots.partitionColsFromRels(srcView.rels)
@@ -1968,10 +2041,10 @@ object Mv {
           srcSchema.fields
             .find(_.name == c)
             .getOrElse(sys.error(s"join column '$c' is no longer a column of ${d.sourceRoot}")))
-        val traceTuples = trace
-          .select(traceFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-          .distinct()
-          .persist()
+        val traceTuples = distinctHeld(
+          spark,
+          trace.select(traceFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*),
+          driver)
         try {
           val tMeta = DeleteVectors.keyMeta(traceTuples, traceCols, traceFields)
           DeleteVectors.candidateRelsForKeys(
@@ -1995,41 +2068,69 @@ object Mv {
       else mixedConcatPrune(spark, d, srcView, srcSchema, srcPartCols, affectedCast, c1)
     }
     val fullDim = d.dims.find(_.joinType == "full")
-    val recomputed = (if (candidates.isEmpty && fullDim.isEmpty) {
-                        // every affected group's last row vanished: nothing to recompute
-                        spark.createDataFrame(
-                          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                          mvSchema)
-                      } else {
-                        val scan =
-                          if (candidates.isEmpty)
-                            // a FULL dim's (c)-side groups need no fact
-                            // files — recompute proceeds over an empty
-                            // fact frame plus the images below
-                            spark.createDataFrame(
-                              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
-                          else Snapshots.scanRels(
-                            spark, d.sourceRoot, candidates, srcView.schema,
-                            Snapshots.dvByRel(srcView))
-                        // the scan demotes FULL to LEFT (a full join over
-                        // the candidate SUBSET would fabricate unmatched-
-                        // dim rows the other files match); the true
-                        // (c)-side unions in from the whole-fact probe
-                        val preLeft = prepared(spark, demoteFull(d), scan)
-                        val pre = fullDim match {
-                          case None => preLeft
-                          case Some(dim) =>
-                            preLeft.unionByName(fullDimCSide(
-                              spark, d, dim, srcView, srcSchema, srcPartCols, alive,
-                              affectedCast, n))
-                        }
-                        val keysB =
-                          if (n <= Snapshots.DvBroadcastMaxPositions) broadcast(affectedCast)
-                          else affectedCast
-                        // null-safe semi-join: NULL is a legitimate group key
-                        val cond = d.keyCols.map(c => pre(c) <=> keysB(c)).reduce(_ && _)
-                        aggregatedFrom(pre.join(keysB, cond, "left_semi"), d)
-                      }).persist()
+    // the affected groups' aggregation over the candidate files; None
+    // when every affected group's last row vanished (nothing to read)
+    val recompute: Option[DataFrame] =
+      if (candidates.isEmpty && fullDim.isEmpty) None
+      else {
+        val scan =
+          if (candidates.isEmpty)
+            // a FULL dim's (c)-side groups need no fact files — recompute
+            // proceeds over an empty fact frame plus the images below
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
+          else Snapshots.scanRels(spark, d.sourceRoot, candidates, srcView.schema, Snapshots.dvByRel(srcView))
+        // the scan demotes FULL to LEFT (a full join over the candidate
+        // SUBSET would fabricate unmatched-dim rows the other files
+        // match); the true (c)-side unions in from the whole-fact probe
+        val preLeft = prepared(spark, demoteFull(d), scan)
+        val pre = fullDim match {
+          case None => preLeft
+          case Some(dim) =>
+            preLeft.unionByName(fullDimCSide(
+              spark, d, dim, srcView, srcSchema, srcPartCols, alive, affectedCast, n))
+        }
+        // null-safe: NULL is a legitimate group key. Driver-held keys
+        // filter as one set probe; the chain semi-joins them
+        val kept =
+          if (driver)
+            pre.filter(LocalFrames.in(d.keyCols.map(pre(_)), keyFields.map(_.dataType), affectedRows))
+          else {
+            val keysB =
+              if (n <= Snapshots.DvBroadcastMaxPositions) broadcast(affectedCast) else affectedCast
+            pre.join(keysB, d.keyCols.map(c => pre(c) <=> keysB(c)).reduce(_ && _), "left_semi")
+          }
+        Some(aggregatedFrom(kept, d))
+      }
+    val opCol = "__graft_mv_op__"
+    def shaped(df: DataFrame, keysOnly: Boolean): DataFrame =
+      df.select(mvSchema.fields.toSeq.map { f =>
+        (if (!keysOnly || d.keyCols.contains(f.name)) col(f.name).cast(f.dataType)
+         else lit(null).cast(f.dataType)).as(f.name)
+      }: _*)
+    // nullSafeKeys: a NULL-keyed group's old view row matches its fresh
+    // image through `<=>`, so NULL groups ride the SAME atomic commit as
+    // every other group (no separate pre-delete version — a reader
+    // between two commits could otherwise see a view state corresponding
+    // to no source snapshot)
+    def apply(recomputed: DataFrame, vanished: DataFrame, union: (DataFrame, DataFrame) => DataFrame) =
+      DeleteVectors.applyChanges(
+        spark, mvRoot,
+        union(
+          shaped(recomputed, keysOnly = false).withColumn(opCol, lit("u")),
+          shaped(vanished, keysOnly = true).withColumn(opCol, lit("d"))),
+        d.keyCols, opCol, nullSafeKeys = true)
+    if (driver) {
+      // Spark's own aggregate, collected: one row per recomputed group;
+      // the vanished groups are the affected keys it did not return
+      val rec = recompute.fold(LocalFrames.of(spark, Seq.empty, mvSchema))(r =>
+        LocalFrames.of(spark, r.collect().toSeq, r.schema))
+      val recKeys = rec.select(keyFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*).collect()
+      val gone = LocalFrames.antiRows(affectedRows, recKeys, affectedCast.schema)
+      apply(rec, LocalFrames.of(spark, gone.toSeq, affectedCast.schema), LocalFrames.union)
+      return (recKeys.length.toLong, gone.length.toLong)
+    }
+    val recomputed = recompute.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mvSchema)).persist()
     try {
       val recKeys = recomputed.select(d.keyCols.map(col): _*)
       val vanished = affectedCast
@@ -2044,21 +2145,7 @@ object Mv {
           .head()
         val recCount = cntRow.getLong(0)
         val delCount = cntRow.getLong(1)
-        val opCol = "__graft_mv_op__"
-        def shaped(df: DataFrame, keysOnly: Boolean): DataFrame =
-          df.select(mvSchema.fields.toSeq.map { f =>
-            (if (!keysOnly || d.keyCols.contains(f.name)) col(f.name).cast(f.dataType)
-             else lit(null).cast(f.dataType)).as(f.name)
-          }: _*)
-        val changes = shaped(recomputed, keysOnly = false)
-          .withColumn(opCol, lit("u"))
-          .unionByName(shaped(vanished, keysOnly = true).withColumn(opCol, lit("d")))
-        // nullSafeKeys: a NULL-keyed group's old view row matches its
-        // fresh image through `<=>`, so NULL groups ride the SAME atomic
-        // commit as every other group (no separate pre-delete version —
-        // a reader between two commits could otherwise see a view state
-        // corresponding to no source snapshot)
-        DeleteVectors.applyChanges(spark, mvRoot, changes, d.keyCols, opCol, nullSafeKeys = true)
+        apply(recomputed, vanished, _ unionByName _)
         (recCount, delCount)
       } finally vanished.unpersist()
     } finally recomputed.unpersist()

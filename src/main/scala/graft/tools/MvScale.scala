@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * times create, one single-day upsert + refresh, and a no-op refresh.
   *
   * Usage: runMain graft.tools.MvScale <fixtureDir> <scratchDir> [label]
-  * Prints one JSON line: {"label":…,"rows":N,"create_s":…,"refresh_s":…,
-  * "noop_s":…,"groups":N}.
+  * Runs at `local[SPARK_GRAFT_CPUS]`, default the machine's processor
+  * count. Prints one JSON line: {"label":…,"rows":N,"create_s":…,
+  * "upsert_s":…,"refresh_s":…,"refresh_jobs":N,"noop_s":…,"groups":N};
+  * `refresh_jobs` counts the Spark jobs the timed refresh started.
   */
 object MvScale {
 
@@ -20,7 +22,7 @@ object MvScale {
     val src = args(0)
     val scratch = args(1)
     val label = if (args.length > 2) args(2) else src
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -77,12 +79,25 @@ object MvScale {
     val (_, upsertS) = timed {
       graft.sources.DeleteVectors.upsert(spark, dir, oneRow, Seq("day", "ts"))
     }
+    // the refresh's Spark jobs, counted by a listener on this session
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
     val (_, refreshS) = timed(graft.sources.Mv.refresh(spark, mv))
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(counter)
+    val refreshJobs = jobs.get()
     val (_, noopS) = timed(graft.sources.Mv.refresh(spark, mv))
 
     println(
       s"""{"label":"$label","rows":$rows,"create_s":${f"$createS%.2f"},""" +
         s""""upsert_s":${f"$upsertS%.2f"},"refresh_s":${f"$refreshS%.2f"},""" +
+        s""""refresh_jobs":$refreshJobs,""" +
         s""""noop_s":${f"$noopS%.2f"},"groups":$groups}""")
     fs.delete(base, true)
     spark.stop()

@@ -12,6 +12,18 @@ object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Block until every posted listener event is delivered
+    * (`listenerBus` is `private[spark]`): a tool counting jobs reads its
+    * listener after this.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** `e` with NaN and -0.0 normalized as Spark normalizes grouping and
+    * join keys (`NormalizeFloatingNumbers.normalize` is `private[sql]`).
+    */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Build a DataFrame from a hand-constructed logical plan (custom
     * operator entry point — same door `Dataset.ofRows` opens for Spark's
     * own DSL).

@@ -1218,4 +1218,75 @@ class DeleteVectorsSpec extends SparkSpec {
       s"driver path must cost fewer jobs than the shuffle path ($jobsFast vs $jobsSlow)")
     assert(rowSet(Snapshots.readSnapshot(spark, dir)) == slowRows)
   }
+
+  test("keyMeta on the driver equals Spark's aggregate for every key type, NULL-bearing tuples and an empty batch") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType), StructField("f", FloatType),
+      StructField("d", DoubleType), StructField("m", DecimalType(12, 3)), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("s", StringType)))
+    def row(i: Integer, l: java.lang.Long, f: java.lang.Float, d: java.lang.Double, m: String,
+        dt: String, ts: String, s: String): Row =
+      Row(i, l, f, d, Option(m).map(new java.math.BigDecimal(_)).orNull,
+        Option(dt).map(java.sql.Date.valueOf).orNull, Option(ts).map(java.sql.Timestamp.valueOf).orNull, s)
+    val rows = Seq(
+      row(3, 30L, 1.1f, -2.5, "10.125", "2024-03-01", "2024-03-01 00:10:00.123456", "b"),
+      row(-7, Long.MinValue, 0.3f, 1e300, "-0.001", "1999-12-31", "2024-03-02 23:59:59", "a"),
+      row(null, 5L, null, 7.25, null, "2024-02-29", null, "zz"),
+      row(1, null, 3.4028235e38f, null, "999999999.999", null, "1970-01-01 00:00:00", null),
+      row(2, 2L, -1.5f, 0.1, "0.000", "2024-01-01", "2023-12-31 12:00:00", "ä"))
+    val keyFields = schema.fields.toSeq
+    val keyCols = keyFields.map(_.name)
+    Seq(rows, rows.take(2), Seq.empty[Row]).foreach { batch =>
+      val local = graft.core.LocalFrames.of(spark, batch, schema)
+      val viaSpark = DeleteVectors.keyMetaBySpark(local, keyCols, keyFields)
+      var viaDriver: DeleteVectors.KeyMeta = null
+      assert(org.apache.spark.SpecBus.jobsOf(spark.sparkContext) {
+        viaDriver = DeleteVectors.keyMeta(local, keyCols, keyFields)
+      } == 0, "a local batch's key metadata must run no Spark job")
+      assert(viaDriver == viaSpark, s"batch of ${batch.size}")
+    }
+    // one key column per type keeps the null-free ranges per column
+    keyFields.foreach { f =>
+      val one = graft.core.LocalFrames.of(spark, rows.map(r => Row(r.get(schema.fieldIndex(f.name)))), StructType(Seq(f)))
+      assert(
+        DeleteVectors.keyMeta(one, Seq(f.name), Seq(f)) ==
+          DeleteVectors.keyMetaBySpark(one, Seq(f.name), Seq(f)), f.name)
+    }
+  }
+
+  test("a driver-built upsert batch runs no Spark job before its match scan") {
+    val dir = Files.createTempDirectory("dv_localjobs").toString + "/t"
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    Sources.writeParquet(
+      spark.range(0L, 1200L).select(
+        element_at(typedLit(days), (col("id") % 3L + 1L).cast("int")).cast("date").as("day"),
+        col("id").as("seq"), (col("id") * 0.5).as("v")).repartition(col("day")),
+      dir, Seq("day"))
+    Snapshots.commit(spark, dir, Seq("day", "seq"))
+    // 400 rows of the last day, built on the driver like a late-arrival batch
+    val batch = (0L until 1200L).filter(_ % 3L == 2L).take(400)
+      .map(seq => (java.sql.Date.valueOf(days(2)), seq, seq + 0.25)).toDF("day", "seq", "v")
+    var res = (0L, 0L)
+    // a job's recorded call site keeps this many stack frames (a system
+    // property Spark reads per job): deep enough to reach the sidecar write
+    val depth = System.getProperty("spark.callstack.depth")
+    System.setProperty("spark.callstack.depth", "400")
+    val sites =
+      try org.apache.spark.SpecBus.jobSitesOf(spark.sparkContext) {
+        res = DeleteVectors.upsert(spark, dir, batch, Seq("day", "seq"))
+      } finally
+        if (depth == null) System.clearProperty("spark.callstack.depth")
+        else System.setProperty("spark.callstack.depth", depth)
+    // the first job must be the match scan (the sidecar write collects
+    // it), the only other one the append
+    assert(
+      sites.headOption.exists(_.contains("writeSidecars")) && sites.size <= 2,
+      s"${sites.size} jobs, the first not the match scan:\n${sites.mkString("\n---\n")}")
+    assert(res._2 == 400L)
+    val got = Snapshots.readSnapshot(spark, dir)
+    assert(got.count() == 1200L && got.where($"v" === $"seq" + 0.25).count() == 400L)
+    assert(DeleteVectors.lastUpsertCandidateFiles.get() == 1L, "partition-exact: one day's file")
+  }
 }

@@ -1940,4 +1940,166 @@ class MvSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got2 == want2)
   }
+
+  // ---- the driver-held refresh against the forced distributed chain ----
+
+  /** perfbench's shape: (sid, ts, v, seq) partitioned by day, 480 rows in
+    * 15-minute steps over five days (eight series), and an hourly view
+    * keyed (sid, h) with `h = date_trunc('hour', ts)`. Row `seq` sits in
+    * the group (seq % 8, hour seq / 4), so seqs 0 until g name g groups.
+    */
+  private def hourlyFixture(base: String): String = {
+    val (src, mv) = (s"$base/src", s"$base/mv")
+    val rows = spark.range(0L, 480L).select(
+      (col("id") % 8L).as("sid"),
+      timestamp_micros(lit(1709251200000000L) + col("id") * 900000000L).as("ts"),
+      (col("id") * 0.5 + 0.125).as("v"),
+      col("id").as("seq"))
+    withMicros(Sources.writeParquet(rows.withColumn("day", to_date($"ts")).repartition($"day"), src, Seq("day")))
+    Snapshots.commit(spark, src, Seq("day", "sid", "ts"))
+    Mv.create(
+      spark, src, mv, Seq("sid", "h"), Seq("count(*) AS n", "sum(v) AS s"),
+      keyExprs = Map("h" -> "date_trunc('hour', ts)"))
+    mv
+  }
+
+  /** A driver-built late batch rewriting `seqs` of [[hourlyFixture]]. */
+  private def hourlyUpsert(base: String, seqs: Seq[Long], bump: Double): Unit = {
+    val batch = seqs
+      .map(q => (q % 8L, new java.sql.Timestamp(1709251200000L + q * 900000L), q * 0.5 + bump, q))
+      .toDF("sid", "ts", "v", "seq")
+      .withColumn("day", to_date($"ts"))
+    withMicros(DeleteVectors.upsert(spark, s"$base/src", batch, Seq("day", "seq")))
+  }
+
+  /** Run one scenario twice from fresh copies — `build(base)` makes the
+    * tables and the view, each window mutates them — once as is (the
+    * driver-held refresh) and once with the distributed chain forced
+    * through the seam. Every refresh must leave the same view rows and
+    * the same report, and make the same namespace writes (creates,
+    * renames, deletes, mkdirs on the counting filesystem of
+    * [[FsCallCountSpec]]). Exists probes are not compared: most come
+    * from each planning of the change-feed scan (its `latestVersion`),
+    * so they count how often Spark plans the feed, which differs between
+    * a bounded collect and a persist, not the landing protocol.
+    * Returns the driver side's reports.
+    */
+  private def refreshParity(tag: String)(build: String => String)(
+      windows: (String => Unit)*): Seq[Mv.RefreshReport] = {
+    spark.sparkContext.hadoopConfiguration.set("fs.fscount.impl", classOf[CountingFs].getName)
+    def run(forced: Boolean): Seq[(Seq[String], Mv.RefreshReport, Map[String, Long])] = {
+      val base = "fscount:" + Files.createTempDirectory(tag).toString
+      val mv = build(base)
+      windows.map { w =>
+        w(base)
+        var r: Mv.RefreshReport = null
+        val calls = CountingFs.during {
+          r = if (forced) Mv.driverMaxGroups.withValue(0L)(Mv.refresh(spark, mv)) else Mv.refresh(spark, mv)
+        }
+        (Snapshots.readSnapshot(spark, mv).collect().map(_.toString).toSeq.sorted, r, calls)
+      }
+    }
+    val driver = run(forced = false)
+    val chain = run(forced = true)
+    driver.zip(chain).zipWithIndex.foreach { case (((rowsD, repD, fsD), (rowsC, repC, fsC)), i) =>
+      assert(rowsD == rowsC, s"$tag window $i: view rows differ")
+      assert(repD == repC, s"$tag window $i: report $repD vs $repC")
+      assert(fsD - "exists" == fsC - "exists", s"$tag window $i: namespace calls $fsD vs $fsC")
+    }
+    driver.map(_._2)
+  }
+
+  test("driver-held refresh ≡ forced chain: hourly derived key (perfbench's shape) with vanished groups") {
+    val reps = refreshParity("mv_par_hourly")(hourlyFixture)(
+      base => hourlyUpsert(base, (0L until 40L) ++ Seq(300L, 301L), 0.25),
+      base => DeleteVectors.deleteWhere(spark, s"$base/src", $"seq" >= 100L && $"seq" < 104L),
+      base => hourlyUpsert(base, Seq(7L), 1.5))
+    assert(reps.map(r => (r.groupsRecomputed, r.groupsDeleted, r.fullResync)) ==
+      Seq((42L, 0L, false), (0L, 4L, false), (1L, 0L, false)))
+  }
+
+  test("driver-held refresh ≡ forced chain: NULL groups, a filter and an empty window") {
+    val reps = refreshParity("mv_par_null") { base =>
+      val (src, mv) = (s"$base/src", s"$base/mv")
+      val rows = Seq((Some("x"), 1L, 10L), (Some("y"), 2L, 20L), (None, 3L, 30L), (None, 4L, 40L))
+        .toDF("k", "id", "v")
+      Sources.writeParquet(rows.repartition(1), src)
+      Snapshots.commit(spark, src, Seq("k", "id"))
+      Mv.create(spark, src, mv, Seq("k"), Seq("count(*) AS n", "sum(v) AS sv"), filterSql = Some("v < 1000"))
+      mv
+    }(
+      base => DeleteVectors.upsert(
+        spark, s"$base/src", Seq((Option.empty[String], 3L, 35L), (Some("z"), 5L, 1L)).toDF("k", "id", "v"),
+        Seq("id")),
+      // only filtered-out rows change: a window naming no group
+      base => DeleteVectors.upsert(
+        spark, s"$base/src", Seq((Option("x"), 9L, 5000L)).toDF("k", "id", "v"), Seq("id")),
+      base => DeleteVectors.deleteWhere(spark, s"$base/src", $"k".isNull))
+    assert(reps.map(r => (r.groupsRecomputed, r.groupsDeleted)) == Seq((2L, 0L), (0L, 0L), (0L, 1L)))
+  }
+
+  /** A fact partitioned by its join key `cat` and a dim `ck → grp`. */
+  private def starAt(base: String, dimRows: Seq[(String, String, Long)]): Unit = {
+    val f = Seq(("a", 1L, 10L), ("a", 2L, 11L), ("b", 3L, 20L), ("c", 4L, 30L), ("x", 5L, 5L))
+      .toDF("cat", "id", "v")
+    Sources.writeParquet(f.repartition(1), s"$base/fact", partitionCols = Seq("cat"))
+    Snapshots.commit(spark, s"$base/fact", Seq("cat", "id"))
+    Sources.writeParquet(dimRows.toDF("ck", "grp", "w").repartition(1), s"$base/dim")
+    Snapshots.commit(spark, s"$base/dim", Seq("ck"))
+  }
+
+  private def factUpsert(base: String, rows: (String, Long, Long)*): Unit = {
+    DeleteVectors.upsert(spark, s"$base/fact", rows.toDF("cat", "id", "v"), Seq("cat", "id")); ()
+  }
+
+  private def dimUpsert(base: String, rows: (String, String, Long)*): Unit = {
+    DeleteVectors.upsert(spark, s"$base/dim", rows.toDF("ck", "grp", "w"), Seq("ck")); ()
+  }
+
+  test("driver-held refresh ≡ forced chain: LEFT and FULL dims, fact and dim-delta windows") {
+    Seq("left", "full").foreach { jt =>
+      refreshParity(s"mv_par_$jt") { base =>
+        starAt(base, Seq(("a", "g1", 2L), ("b", "g1", 3L), ("c", "g2", 5L), ("z", "g9", 7L)))
+        Mv.create(
+          spark, s"$base/fact", s"$base/mv", Seq("grp"), Seq("count(*) AS n", "sum(v) AS sv"),
+          dims = Seq(Mv.MvJoinSpec(s"$base/dim", Seq("cat"), Seq("ck"), joinType = jt)))
+        s"$base/mv"
+      }(
+        base => factUpsert(base, ("x", 6L, 6L), ("a", 1L, 12L)),
+        base => dimUpsert(base, ("x", "g3", 1L)),
+        base => { factUpsert(base, ("z", 8L, 30L)); dimUpsert(base, ("c", "g1", 5L)) },
+        base => DeleteVectors.deleteWhere(spark, s"$base/dim", $"ck" === "b"))
+    }
+  }
+
+  test("driver-held refresh ≡ forced chain: the mixed concat auto-split key through a dim move") {
+    refreshParity("mv_par_mixed") { base =>
+      starAt(base, Seq(("a", "g1", 2L), ("b", "g1", 3L), ("c", "g2", 5L), ("x", "g3", 1L)))
+      Mv.create(
+        spark, s"$base/fact", s"$base/mv", Seq("g2"), Seq("count(*) AS n", "sum(v) AS sv"),
+        dims = Seq(Mv.MvJoinSpec(s"$base/dim", Seq("cat"), Seq("ck"))),
+        keyExprs = Map("g2" -> "concat(cat, '|', grp)"))
+      s"$base/mv"
+    }(
+      base => factUpsert(base, ("a", 7L, 12L), ("c", 4L, 31L)),
+      base => dimUpsert(base, ("a", "g9", 2L)),
+      base => DeleteVectors.deleteWhere(spark, s"$base/fact", $"cat" === "b"))
+  }
+
+  test("driver-held refresh: Spark jobs per refresh do not grow with the affected groups") {
+    val base = Files.createTempDirectory("mv_jobs").toString
+    val mv = hourlyFixture(base)
+    def jobs(seqs: Seq[Long]): (Int, Mv.RefreshReport) = {
+      hourlyUpsert(base, seqs, 0.75)
+      var r: Mv.RefreshReport = null
+      (org.apache.spark.SpecBus.jobsOf(spark.sparkContext) { r = Mv.refresh(spark, mv) }, r)
+    }
+    val runs = Seq(Seq(0L), 100L until 112L, 200L until 320L).map(jobs)
+
+    assert(runs.map(_._2.groupsRecomputed) == Seq(1L, 12L, 120L))
+    val perRefresh = runs.map(_._1)
+    info(s"jobs per refresh at 1, 12 and 120 groups: ${perRefresh.mkString(", ")}")
+    assert(perRefresh.distinct.size == 1, s"jobs grew with the groups: $perRefresh")
+    assert(perRefresh.head <= 8, s"${perRefresh.head} jobs per refresh, above the floor's 8")
+  }
 }

@@ -6,12 +6,14 @@ package org.apache.spark
 object SpecBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
-  /** The Spark jobs `op` starts, counted with every event delivered. */
-  def jobsOf(sc: SparkContext)(op: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The call site (long form: the driver stack that started it) of each
+    * Spark job `op` starts, in start order, with every event delivered.
+    */
+  def jobSitesOf(sc: SparkContext)(op: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        sites.add(j.stageInfos.map(_.details).mkString("\n")); ()
       }
     }
     drain(sc)
@@ -20,6 +22,9 @@ object SpecBus {
       op
       drain(sc)
     } finally sc.removeSparkListener(listener)
-    jobs.get()
+    scala.jdk.CollectionConverters.CollectionHasAsScala(sites).asScala.toSeq
   }
+
+  /** The Spark jobs `op` starts, counted with every event delivered. */
+  def jobsOf(sc: SparkContext)(op: => Unit): Int = jobSitesOf(sc)(op).size
 }
