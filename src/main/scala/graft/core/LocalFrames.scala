@@ -74,20 +74,19 @@ object LocalFrames {
     a.filterNot(r => present.contains(key(r)))
   }
 
-  /** `a.crossJoin(b)`, on the driver when both are local and the product
-    * stays small.
+  /** `a.crossJoin(b)` with `b` the small side: on the driver when both
+    * are local and the product stays small, else in Spark with `b`
+    * broadcast.
     */
-  def crossJoin(a: DataFrame, b: DataFrame): DataFrame = {
-    val joined = a.crossJoin(b)
+  def crossJoin(a: DataFrame, b: DataFrame): DataFrame =
     (rowsOf(a), rowsOf(b)) match {
       case (Some(ra), Some(rb)) if ra.length.toLong * rb.length <= MaxLocalProduct =>
         of(
           a.sparkSession,
           for { x <- ra.toSeq; y <- rb.toSeq } yield Row.fromSeq(x.toSeq ++ y.toSeq),
-          joined.schema)
-      case _ => joined
+          a.crossJoin(b).schema)
+      case _ => a.crossJoin(org.apache.spark.sql.functions.broadcast(b))
     }
-  }
 
   /** `a.unionByName(b)`, on the driver when both are local (each side
     * cast to the union's types by Spark first).
@@ -102,22 +101,32 @@ object LocalFrames {
     }
   }
 
+  /** The least and greatest non-null value of column `i` of `rows`,
+    * each mapped by `convert` to a Catalyst value of `dt` and compared
+    * under Spark's ordering of `dt`; nulls are skipped as `min`/`max` skip
+    * them, and None means every value is null. The bounds are the
+    * converted values.
+    */
+  def bounds(rows: Iterator[Row], i: Int, dt: DataType, convert: Any => Any): Option[(Any, Any)] = {
+    val vals = rows.filterNot(_.isNullAt(i)).map(r => convert(r.get(i))).toSeq
+    if (vals.isEmpty) None
+    else {
+      val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+      Some((vals.min(ord), vals.max(ord)))
+    }
+  }
+
   /** `df.agg(min(lo) AS lo, max(hi) AS hi)`, on the driver when `df` is
-    * local: each bound under Spark's ordering of its column's type, nulls
-    * skipped as the aggregates skip them.
+    * local ([[bounds]]).
     */
   def extremes(df: DataFrame, lo: String, hi: String): DataFrame = rowsOf(df) match {
     case Some(rows) =>
       def pick(c: String, max: Boolean): Any = {
         val i = df.schema.fieldIndex(c)
         val dt = df.schema(i).dataType
-        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-        val vals = rows.iterator.filterNot(_.isNullAt(i)).map(r => toCatalyst(r.get(i))).toSeq
-        if (vals.isEmpty) null
-        else {
-          val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
-          CatalystTypeConverters.createToScalaConverter(dt)(if (max) vals.max(ord) else vals.min(ord))
-        }
+        bounds(rows.iterator, i, dt, CatalystTypeConverters.createToCatalystConverter(dt))
+          .map { case (l, h) => CatalystTypeConverters.createToScalaConverter(dt)(if (max) h else l) }
+          .orNull
       }
       of(
         df.sparkSession,

@@ -759,10 +759,12 @@ object DeleteVectors {
     * not an OOM). Sets [[lastUpsertCandidateFiles]].
     *
     * A key source that plans to a local relation (a driver-built batch,
-    * [[Mv]]'s change frame) keeps its keys on the driver: the distinct
-    * set, the [[keyMeta]] and the partition tuples come from its rows
-    * with no Spark job, and the match scan filters on the key set
-    * ([[graft.core.LocalFrames.in]]) instead of broadcasting it.
+    * [[Mv]]'s change frame) and holds at most [[Mv.driverMaxGroups]]
+    * distinct keys keeps them on the driver: the [[keyMeta]] and the
+    * partition tuples come from its rows with no Spark job, and the match
+    * scan filters on the key set ([[graft.core.LocalFrames.in]]) instead
+    * of broadcasting it. The set rides every task's closure, hence the
+    * ceiling; a larger batch takes the broadcast or shuffle semi-join.
     */
   private def matchKeyUpserts(
       spark: SparkSession,
@@ -778,6 +780,7 @@ object DeleteVectors {
     val local = graft.core.LocalFrames
       .rowsOf(sourceKeys)
       .map(graft.core.LocalFrames.distinctRows(_, sourceKeys.schema))
+      .filter(_.length <= Mv.driverMaxGroups.value)
     val keys0 = local.fold(sourceKeys.distinct().persist())(rows =>
       graft.core.LocalFrames.of(spark, rows.toSeq, sourceKeys.schema))
     val (candidates, written) =
@@ -1038,15 +1041,13 @@ object DeleteVectors {
       val dt = schema(i).dataType
       val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
       val (probeType, probe): (org.apache.spark.sql.types.DataType, Any => Any) = f.dataType match {
-        case FloatType => (DoubleType, v => Cast(Literal(v, dt), DoubleType, tz).eval())
-        case _ => (dt, v => v)
+        case FloatType => (DoubleType, v => Cast(Literal(toCatalyst(v), dt), DoubleType, tz).eval())
+        case _ => (dt, toCatalyst)
       }
-      val vals = of.iterator.filterNot(_.isNullAt(i)).map(r => probe(toCatalyst(r.get(i)))).toSeq
-      if (vals.isEmpty) (f.name, None, None)
-      else {
-        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(probeType)
-        def render(v: Any) = Some(Cast(Literal(v, probeType), StringType, tz).eval().toString)
-        (f.name, render(vals.min(ord)), render(vals.max(ord)))
+      def render(v: Any) = Some(Cast(Literal(v, probeType), StringType, tz).eval().toString)
+      graft.core.LocalFrames.bounds(of.iterator, i, probeType, probe) match {
+        case None => (f.name, None, None)
+        case Some((lo, hi)) => (f.name, render(lo), render(hi))
       }
     }
     KeyMeta(

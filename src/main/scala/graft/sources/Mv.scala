@@ -808,7 +808,10 @@ object Mv {
     * and the parquet append. Above the ceiling, on a full resync, or with
     * the `private[sources]` seam at zero (`driverMaxGroups.withValue(0L)`,
     * how specs force it) the distributed chain runs instead — the parity
-    * reference, same rows, same report.
+    * reference, same rows, same report. Above the ceiling it also pays
+    * the bounded collects that found the window too large: one over the
+    * feed's raw key rows and one over the persisted distinct keys, whose
+    * count then reads the same cache.
     */
   def refresh(spark: SparkSession, mvRoot: String): RefreshReport =
     Snapshots.withTableLock(spark, mvRoot) {
@@ -1460,9 +1463,8 @@ object Mv {
                     }.mkString(", ") + ")"
                 val preSql = sideSql(parts.zipWithIndex.take(factIdx))
                 val sufSql = sideSql(parts.zipWithIndex.drop(factIdx + 1))
-                val crossed =
-                  if (driver) LocalFrames.crossJoin(vals, tuples) else vals.crossJoin(broadcast(tuples))
-                val vf0 = crossed
+                val vf0 = LocalFrames
+                  .crossJoin(vals, tuples)
                   .selectExpr(s"($preSql) AS __pre", s"($sufSql) AS __suf", "__g")
                   .selectExpr(
                     "CASE WHEN length(__g) >= length(__pre) + length(__suf) " +
@@ -1473,7 +1475,7 @@ object Mv {
                   .where(col("__vf").isNotNull)
                   .select(col("__vf").cast(field.dataType).as(fc))
                   .where(col(fc).isNotNull) // an uncastable split admits nothing
-                val vf = distinctHeld(spark, vf0, driver)
+                val (vf, _) = held(spark, vf0, driver)
                 try {
                   val vMeta = DeleteVectors.keyMeta(vf, Seq(fc), Seq(field))
                   if (vMeta.count == 0L) Seq.empty // no (value, tuple) solves: groups vanish
@@ -1653,39 +1655,51 @@ object Mv {
     */
   private[sources] val driverMaxGroups = new scala.util.DynamicVariable[Long](1L << 16)
 
-  /** `keys` distinct, with their count, FORCED: held on the driver as a
-    * local frame when they number at most [[driverMaxGroups]], else
-    * persisted and counted. `keys` holds one row per changed row: when
-    * those fit the ceiling they are collected as they are (one job, no
-    * shuffle) and distinct on the driver; else Spark distincts them
-    * before the bounded collect.
+  /** `df` distinct for a refresh that re-reads it, with its row count
+    * when that is known for free. On the driver path (`driver`) it is
+    * held on the driver as a local frame when it has at most
+    * [[driverMaxGroups]] rows: a local `df` distincts on its rows; with
+    * `rawFirst` (`df` holds one row per changed row, so it usually fits as
+    * it is) its rows are collected before any shuffle and distinct on the
+    * driver; else Spark's distinct is persisted ONCE and read by one
+    * bounded collect, kept persisted when it does not fit. Off the driver
+    * path it is persisted, the distributed chain's step. The caller
+    * unpersists, a no-op on a local frame.
     */
-  private def heldKeys(spark: SparkSession, keys: DataFrame): (DataFrame, Long) = {
-    val distinct = keys.distinct()
-    Collect
-      .atMost(keys, driverMaxGroups.value)
-      .map(LocalFrames.distinctRows(_, keys.schema))
-      .orElse(Collect.atMost(distinct, driverMaxGroups.value)) match {
-      case Some(rows) => (LocalFrames.of(spark, rows.toSeq, distinct.schema), rows.length.toLong)
-      case None =>
-        val p = distinct.persist()
-        try (p, p.count())
-        catch { case NonFatal(e) => p.unpersist(); throw e }
+  private def held(
+      spark: SparkSession,
+      df: DataFrame,
+      driver: Boolean,
+      rawFirst: Boolean = false): (DataFrame, Option[Long]) = {
+    def local(rows: Array[org.apache.spark.sql.Row]) =
+      (LocalFrames.of(spark, rows.toSeq, df.schema), Some(rows.length.toLong))
+    val rows =
+      if (!driver) None
+      else
+        LocalFrames
+          .rowsOf(df)
+          .orElse(if (rawFirst) Collect.atMost(df, driverMaxGroups.value) else None)
+          .map(LocalFrames.distinctRows(_, df.schema))
+    rows.map(local).getOrElse {
+      val p = df.distinct().persist()
+      try
+        (if (driver) Collect.atMost(p, driverMaxGroups.value) else None) match {
+          case Some(rows) => p.unpersist(); local(rows)
+          case None => (p, None)
+        }
+      catch { case NonFatal(e) => p.unpersist(); throw e }
     }
   }
 
-  /** `df` distinct for a probe that re-reads it. On the driver path
-    * (`driver`) a local `df` distincts on its rows and any other is held
-    * through one bounded collect when it fits [[driverMaxGroups]]; else
-    * (and always on the distributed chain) it is persisted — the caller
-    * unpersists, a no-op on a local frame.
+  /** `keys` distinct and counted, FORCED ([[held]], the raw rows first):
+    * a local frame on the driver path, else persisted; the count of a
+    * persisted frame reads the same cache.
     */
-  private def distinctHeld(spark: SparkSession, df: DataFrame, driver: Boolean): DataFrame =
-    if (driver && LocalFrames.isLocal(df)) LocalFrames.distinct(df)
-    else
-      (if (driver) Collect.atMost(df.distinct(), driverMaxGroups.value) else None)
-        .map(rows => LocalFrames.of(spark, rows.toSeq, df.schema))
-        .getOrElse(df.distinct().persist())
+  private def heldKeys(spark: SparkSession, keys: DataFrame): (DataFrame, Long) = {
+    val (k, n) = held(spark, keys, driver = true, rawFirst = true)
+    try (k, n.getOrElse(k.count()))
+    catch { case NonFatal(e) => k.unpersist(); throw e }
+  }
 
   /** The row-level change feed of a snapshot table over `(fromV, toV]` —
     * reads only the versions' CHANGED files; raises when the window is
@@ -2041,7 +2055,7 @@ object Mv {
           srcSchema.fields
             .find(_.name == c)
             .getOrElse(sys.error(s"join column '$c' is no longer a column of ${d.sourceRoot}")))
-        val traceTuples = distinctHeld(
+        val (traceTuples, _) = held(
           spark,
           trace.select(traceFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*),
           driver)

@@ -45,4 +45,49 @@ class CollectSpec extends SparkSpec {
     val withNull = spark.range(0L, 3L, 1L, 2).selectExpr("IF(id = 1, NULL, id) AS v")
     assert(Collect.atMost(withNull, 3L).map(_.count(_.isNullAt(0))) == Some(1))
   }
+
+  /** The serialized task results `op`'s jobs send to the driver, in bytes. */
+  private def resultBytesOf(op: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    SpecBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      op
+      SpecBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    bytes.get
+  }
+
+  test("atMost bounds the bytes a job sends: 16+ partitions each above n + 1 rows ship the budget, not 16 (n + 1) rows") {
+    val n = 20L
+    val jobBytes = 64L << 10
+    // 32 partitions of 50 rows of about 1 KiB: a task stopping at n + 1
+    // rows alone would send 21 KiB, 16 of them 336 KiB in the first job
+    val wide = spark.range(0L, 32L * 50L, 1L, 32).selectExpr("id", "repeat('x', 1024) AS s")
+    var got: Option[Array[org.apache.spark.sql.Row]] = Some(Array.empty)
+    var jobs = 0
+    val shipped = resultBytesOf {
+      jobs = SpecBus.jobsOf(spark.sparkContext) { got = Collect.atMost(wide, n, jobBytes) }
+    }
+    assert(got.isEmpty)
+    assert(jobs == 1)
+    // what a task result carries besides its rows (metrics, accumulators)
+    val overhead = resultBytesOf { Collect.atMost(wide.where("id < 0"), n, jobBytes) }
+    info(s"shipped $shipped bytes against a budget of $jobBytes (+ $overhead without rows)")
+    assert(shipped <= jobBytes + overhead, s"$shipped bytes shipped for a $jobBytes-byte budget")
+    assert(shipped - overhead < (n + 1) * 1024L * 4, "the rows shipped are within 4 (n + 1)")
+  }
+
+  test("atMost with a task cut short at its byte share below the bound reads the rows through Spark") {
+    val df = spark.range(0L, 40L, 1L, 4).selectExpr("id", "repeat('y', 1024) AS s")
+    // a 2 KiB share holds one row: every task is cut short after it, with
+    // 4 rows seen of a bound of 100, so the count decides nothing
+    val got = Collect.atMost(df, 100L, 8L << 10)
+    assert(got.map(_.map(_.getLong(0)).toSeq) == Some((0L until 40L).toSeq))
+    assert(Collect.atMost(df, 39L, 8L << 10).isEmpty)
+  }
 }

@@ -1256,8 +1256,12 @@ class DeleteVectorsSpec extends SparkSpec {
     }
   }
 
-  test("a driver-built upsert batch runs no Spark job before its match scan") {
-    val dir = Files.createTempDirectory("dv_localjobs").toString + "/t"
+  /** 1200 rows over three days, then a driver-built late batch rewriting
+    * 400 rows of the last day: checks the outcome and returns the call
+    * sites of the upsert's Spark jobs.
+    */
+  private def localUpsertSites(tag: String): Seq[String] = {
+    val dir = Files.createTempDirectory(tag).toString + "/t"
     val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
     Sources.writeParquet(
       spark.range(0L, 1200L).select(
@@ -1265,7 +1269,6 @@ class DeleteVectorsSpec extends SparkSpec {
         col("id").as("seq"), (col("id") * 0.5).as("v")).repartition(col("day")),
       dir, Seq("day"))
     Snapshots.commit(spark, dir, Seq("day", "seq"))
-    // 400 rows of the last day, built on the driver like a late-arrival batch
     val batch = (0L until 1200L).filter(_ % 3L == 2L).take(400)
       .map(seq => (java.sql.Date.valueOf(days(2)), seq, seq + 0.25)).toDF("day", "seq", "v")
     var res = (0L, 0L)
@@ -1279,14 +1282,32 @@ class DeleteVectorsSpec extends SparkSpec {
       } finally
         if (depth == null) System.clearProperty("spark.callstack.depth")
         else System.setProperty("spark.callstack.depth", depth)
+    assert(res._2 == 400L)
+    val got = Snapshots.readSnapshot(spark, dir)
+    assert(got.count() == 1200L && got.where($"v" === $"seq" + 0.25).count() == 400L)
+    assert(DeleteVectors.lastUpsertCandidateFiles.get() == 1L, "partition-exact: one day's file")
+    sites
+  }
+
+  test("a driver-built upsert batch runs no Spark job before its match scan") {
+    val sites = localUpsertSites("dv_localjobs")
     // the first job must be the match scan (the sidecar write collects
     // it), the only other one the append
     assert(
       sites.headOption.exists(_.contains("writeSidecars")) && sites.size <= 2,
       s"${sites.size} jobs, the first not the match scan:\n${sites.mkString("\n---\n")}")
-    assert(res._2 == 400L)
-    val got = Snapshots.readSnapshot(spark, dir)
-    assert(got.count() == 1200L && got.where($"v" === $"seq" + 0.25).count() == 400L)
-    assert(DeleteVectors.lastUpsertCandidateFiles.get() == 1L, "partition-exact: one day's file")
+  }
+
+  test("a driver-built upsert batch above the key ceiling takes Spark's key path, same outcome") {
+    // 400 distinct keys: at a ceiling of 400 the batch stays on the
+    // driver, at 399 its keys are aggregated and semi-joined by Spark
+    val at = Mv.driverMaxGroups.withValue(400L)(localUpsertSites("dv_localceil_at"))
+    assert(
+      at.headOption.exists(_.contains("writeSidecars")) && !at.exists(_.contains("keyMetaBySpark")),
+      at.mkString("\n---\n"))
+    val above = Mv.driverMaxGroups.withValue(399L)(localUpsertSites("dv_localceil_above"))
+    assert(
+      above.exists(_.contains("keyMetaBySpark")),
+      s"no job of the key aggregate:\n${above.mkString("\n---\n")}")
   }
 }

@@ -2102,4 +2102,24 @@ class MvSpec extends SparkSpec {
     assert(perRefresh.distinct.size == 1, s"jobs grew with the groups: $perRefresh")
     assert(perRefresh.head <= 8, s"${perRefresh.head} jobs per refresh, above the floor's 8")
   }
+  test("just above the ceiling a refresh is the forced chain's, plus at most two bounded collects") {
+    def run(ceiling: Long): (Int, Mv.RefreshReport, Seq[String]) = {
+      val base = Files.createTempDirectory("mv_ceil").toString
+      val mv = hourlyFixture(base)
+      hourlyUpsert(base, 200L until 320L, 0.75)
+      var r: Mv.RefreshReport = null
+      val jobs = org.apache.spark.SpecBus.jobsOf(spark.sparkContext) {
+        r = Mv.driverMaxGroups.withValue(ceiling)(Mv.refresh(spark, mv))
+      }
+      (jobs, r, Snapshots.readSnapshot(spark, mv).collect().map(_.toString).toSeq.sorted)
+    }
+    val (chainJobs, chainRep, chainRows) = run(0L)
+    // 120 groups, one row each in the feed: both the raw rows and the
+    // distinct keys miss a ceiling of 119
+    val (aboveJobs, aboveRep, aboveRows) = run(119L)
+    assert(aboveRep.groupsRecomputed == 120L)
+    assert(aboveRep == chainRep && aboveRows == chainRows)
+    info(s"jobs per refresh: forced chain $chainJobs, just above the ceiling $aboveJobs")
+    assert(aboveJobs <= chainJobs + 2, s"$aboveJobs jobs above the ceiling vs $chainJobs on the chain")
+  }
 }
