@@ -85,16 +85,8 @@ object MvRewrite extends Rule[LogicalPlan] {
   private def unwrap(
       plan: LogicalPlan): Option[(SnapTable, Seq[Expression], Map[ExprId, Expression])] =
     plan match {
-      case r: DataSourceV2Relation =>
-        r.table match {
-          case t: SnapTable if t.branch.isEmpty => Some((t, Nil, Map.empty))
-          case _ => None
-        }
-      case s: DataSourceV2ScanRelation =>
-        s.relation.table match {
-          case t: SnapTable if t.branch.isEmpty => Some((t, Nil, Map.empty))
-          case _ => None
-        }
+      case r: DataSourceV2Relation => catalogRead(r)
+      case s: DataSourceV2ScanRelation => catalogRead(s.relation)
       case p: Project =>
         unwrap(p.child).map { case (t, fs, sub) =>
           val here = p.projectList.collect { case a: Alias =>
@@ -106,6 +98,17 @@ object MvRewrite extends Rule[LogicalPlan] {
         unwrap(f.child).map { case (t, fs, sub) =>
           (t, fs :+ inlineWith(f.condition, sub), sub)
         }
+      case _ => None
+    }
+
+  /** A main-line catalog read — never a branch, never a programmatic
+    * file-list read ([[Snapshots.scanRels]]: the MV's own recompute and
+    * the grafted view read are such reads).
+    */
+  private def catalogRead(
+      r: DataSourceV2Relation): Option[(SnapTable, Seq[Expression], Map[ExprId, Expression])] =
+    r.table match {
+      case t: SnapTable if t.branch.isEmpty && t.pinnedRels.isEmpty => Some((t, Nil, Map.empty))
       case _ => None
     }
 
@@ -266,12 +269,9 @@ object MvRewrite extends Rule[LogicalPlan] {
           case al: Alias => norm(inlineWith(al.child, mvSub)) -> al.name
         }.toMap
       // ---- the replacement: project the MATERIALIZATION ----
-      // the grafted subtree joins the main plan AFTER the optimizer's
-      // "Finish Analysis" batch already ran, so RuntimeReplaceable
-      // expressions in the view's read (a MoR read's url_decode) must be
-      // replaced here or codegen meets them unexpanded
-      val mvPlan = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
-        Snapshots.readSnapshot(spark, mvRoot).queryExecution.analyzed)
+      // the view's read OPTIMIZED: the rule also runs after scan building
+      // (extraOptimizations), where a bare relation would never become a scan
+      val mvPlan = Snapshots.readSnapshot(spark, mvRoot).queryExecution.optimizedPlan
       val mvAttr: Map[String, Attribute] =
         mvPlan.output.map(a => a.name.toLowerCase(java.util.Locale.ROOT) -> a).toMap
       def attrOf(name: String): Option[Attribute] =

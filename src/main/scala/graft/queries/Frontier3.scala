@@ -2140,7 +2140,14 @@ object Frontier3 {
     val v1 = graft.sources.Snapshots.commit(s, root.toString, Seq("x", "y", "z"))
     val box = Seq(("x", "4", "9"), ("y", "10", "19"), ("z", "2", "13"))
     val prunedScan = graft.sources.Snapshots.readSnapshot(s, root.toString, v1, prune = box)
-    val kept = prunedScan.inputFiles.length
+    // files the pruned read's snapshot scan opens
+    val kept = prunedScan.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan match {
+          case scan: graft.sources.snap.SnapV2BatchScan => scan.currentRels.size
+          case _ => 0
+        }
+    }.sum
     val total = graft.sources.Snapshots.files(s, root.toString, v1).size
     prunedScan
       .filter(

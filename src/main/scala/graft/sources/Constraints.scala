@@ -153,7 +153,7 @@ object Constraints {
                 val live = view.rels.filterNot(r =>
                   Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
                 live.isEmpty || violations(
-                  Snapshots.scanRels(spark, root, live, view.schema, Snapshots.dvByRel(view)),
+                  Snapshots.scanRels(spark, root, view, live),
                   Map(name -> predicate)).isEmpty
               } catch { case scala.util.control.NonFatal(_) => false }
             if (!proven) {
@@ -225,7 +225,7 @@ object Constraints {
         val live = view.rels.filterNot(r =>
           Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
         if (live.nonEmpty) {
-          val df = Snapshots.scanRels(spark, root, live, view.schema, Snapshots.dvByRel(view))
+          val df = Snapshots.scanRels(spark, root, view, live)
           val bad = violations(df, Map(name -> predicateSql))
           require(
             bad.isEmpty,
@@ -304,14 +304,15 @@ object Constraints {
       root: String,
       freshRels: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
-      dv: Map[String, (String, Long)] = Map.empty): Unit = {
+      stats: Map[String, Map[String, Snapshots.ColStat]] = Map.empty): Unit = {
     if (freshRels.isEmpty) return
     val cs = checks(spark, root)
     if (cs.isEmpty) return
-    // `dv` matters on the ADOPTION faces (fast-forward/rebase): a branch
-    // file may carry deletion vectors from later branch DML, and a
-    // logically-deleted row must not refuse the adoption
-    val df = Snapshots.scanRels(spark, root, freshRels, schema, dv)
+    // `stats` carry deletion-vector pointers on the ADOPTION faces
+    // (fast-forward/rebase): a branch file may carry vectors from later
+    // branch DML, and a logically-deleted row must not refuse the adoption
+    val df = Snapshots.scanRels(
+      spark, root, Snapshots.ManifestView(0L, freshRels, stats, schema, Nil), freshRels)
     val bad = violations(df, cs)
     if (bad.nonEmpty)
       sys.error(

@@ -21,11 +21,10 @@ import graft.sources.Snapshots.ColStat
   * Representation here:
   *  - One sidecar parquet file of `(rel, pos)` rows per DV'd data file,
   *    under the hidden `<root>/.snap-dv/` tree ([[Snapshots.DvDirName]]).
-  *    `pos` is the file-row ordinal — Spark's `_metadata.row_index`
-  *    domain, the same coordinate system the scan recovers, so positions
-  *    survive row-group skipping and any reader parallelism. Positions
-  *    are sorted and distinct; `rel` rides INSIDE the sidecar so the
-  *    read-side anti-join needs no per-file bookkeeping.
+  *    `pos` is the file-row ordinal — the snapshot reader's `_pos`, the
+  *    row's index in its file, so positions survive any reader
+  *    parallelism. Positions are sorted and distinct; the reader
+  *    subtracts them from the file inside each scan task.
   *  - The manifest's per-file stats map carries the pointer
   *    ([[Snapshots.DvPathKey]] → sidecar rel, [[Snapshots.DvCountKey]] →
   *    exact deleted count) — so DV state flows through delta commits,
@@ -40,8 +39,9 @@ import graft.sources.Snapshots.ColStat
   * matches (manifest stats + bloom narrowing, same as the COW path), one
   * shuffle of the MATCHED (rel, pos) pairs only — not the data — a
   * distributed sidecar write, and an O(touched-files) manifest delta. No
-  * data file is read past the match scan and none is written. Reads pay a
-  * broadcast anti-join on the deleted positions until materialization.
+  * data file is read past the match scan and none is written. Reads pay
+  * one sidecar read per DV'd file, inside its scan task, until
+  * materialization.
   *
   * Semantics: snapshot-isolated (the delete applies to the version its
   * scan pinned), time-travelable (pre-delete versions keep reading the
@@ -114,9 +114,9 @@ object DeleteVectors {
     * conjuncts against the manifest's per-file intervals (the
     * `DELETE WHERE day = X` shape opens only that day's files at any
     * table size), then bloom-narrow equality probes — then ONE match
-    * scan of the candidates (RAW rows: re-matching an already-deleted
-    * row is harmless, the sidecar union dedups) and the distributed
-    * sidecar write. Returns (rel, new sidecar rel, merged count) per
+    * scan of the candidates (live rows with their `_file`/`_pos`; the
+    * sidecar union keeps the already-deleted positions) and the
+    * distributed sidecar write. Returns (rel, new sidecar rel, merged count) per
     * touched file; the caller commits (main: [[boundedCommit]]; branch:
     * a branch-delta restate).
     */
@@ -128,7 +128,7 @@ object DeleteVectors {
     val alive = view.rels.filterNot(r =>
       Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
     if (alive.isEmpty) return Seq.empty
-    val probeFrame = Snapshots.scanRels(spark, root, alive.take(1), view.schema)
+    val probeFrame = Snapshots.scanRels(spark, root, view, alive.take(1))
     val ranges = Sources.rangeProbes(probeFrame, predicate)
     val statsPruned =
       if (ranges.isEmpty) alive
@@ -144,16 +144,27 @@ object DeleteVectors {
           active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
         }
     if (candidates.isEmpty) return Seq.empty
-    val scan = Snapshots.scanRelsWithPos(spark, root, candidates, view.schema)
-    val matches = scan
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("__graft_dv_rel__").as("rel"), col("__graft_dv_pos__").as("pos"))
+    val scan = matchScan(spark, root, view, candidates)
+    val matches = Snapshots.dvCoordinates(scan, scan.filter(coalesce(predicate, lit(false))))
     val oldDvByRel: Map[String, String] = candidates.flatMap { rel =>
       Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map { case (p, _) => rel -> p }
     }.toMap
     val commitTag = java.util.UUID.randomUUID().toString.take(8)
     writeSidecars(spark, root, matches, oldDvByRel, commitTag, rawRowBound(view, candidates))
   }
+
+  /** The match scan of `rels`: [[Snapshots.scanRels]] with each row's
+    * `_file` and `_pos` as plain columns, so they survive the match's
+    * filter or join into [[Snapshots.dvCoordinates]].
+    */
+  private def matchScan(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      rels: Seq[String]): DataFrame =
+    Snapshots
+      .scanRels(spark, root, view, rels)
+      .select(col("*"), col(snap.SnapTable.FileMetaCol), col(snap.SnapTable.PosMetaCol))
 
   /** Merge-on-read DELETE on a WRITABLE BRANCH — the live line is
     * untouched: matched positions (over the BRANCH's file set, fork files
@@ -235,8 +246,7 @@ object DeleteVectors {
     val replaced = rewriteNow.keys.toSeq
     DataFiles.rewrite(spark, fs, rootPath, replaced, added) { stage =>
       graft.core.Par.each(rewriteNow.toSeq) { case (rel, st) =>
-        val (dvRel, dvCnt) = Snapshots.dvOf(st).get
-        stageRewrite(spark, root, stage, rel, dvRel, dvCnt)
+        stageRewrite(spark, root, stage, view.copy(stats = view.stats + (rel -> st)), rel)
       }
     } { landed =>
       Snapshots.commitRestated(spark, root, pointerUpdates, addedRels = landed, removedRels = replaced)
@@ -271,48 +281,34 @@ object DeleteVectors {
     (changed, newlyDeleted)
   }
 
-  /** Stage one file's rewrite: its survivors (minus its sidecar's
-    * positions), landing beside the original. Nothing is staged when
-    * nothing survives — a table whose manifest predates row counts can't
-    * detect full deletion up front, so the staged footer is the authority.
+  /** Stage one file's rewrite: its survivors (the scan of `rel` under
+    * `view`, whose recorded vector the reader subtracts), landing beside
+    * the original as the table's DATA columns (partition values stay in
+    * the dir path) — the [[Sources.compactInPlace]] discipline. Nothing
+    * is staged when nothing survives — a table whose manifest predates
+    * row counts can't detect full deletion up front, so the staged footer
+    * is the authority.
     */
   private def stageRewrite(
       spark: SparkSession,
       root: String,
       stage: DataFiles.Rewrites,
-      rel: String,
-      dvRel: String,
-      dvCount: Long): Unit = {
+      view: Snapshots.ManifestView,
+      rel: String): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(rootPath, rel)
-    require(fs.exists(live), s"rewrite: $rel is not live under $root")
-    val positions0 = spark.read
-      .schema(Snapshots.DvSidecarReadSchema)
-      .parquet(new Path(rootPath, dvRel).toString)
-      .select(col("pos"))
-    // broadcast only below the recorded-count threshold — the scan path's
-    // discipline ([[Snapshots.DvBroadcastMaxPositions]]): a near-threshold
-    // multi-million-position vector must not ship tens of MB to every
-    // rewrite task when a real join prices the same anti-join correctly
-    val positions =
-      if (dvCount <= Snapshots.DvBroadcastMaxPositions) broadcast(positions0) else positions0
-    // the file's OWN physical schema (no enforced table schema, no
-    // partition splice) — this rewrites bytes in place
-    val data = spark.read
-      .parquet(live.toString)
-      .withColumn("__graft_dv_pos__", col("_metadata.row_index"))
-    val keep = data
-      .join(positions, data("__graft_dv_pos__") === positions("pos"), "left_anti")
-      .drop("__graft_dv_pos__")
+    require(fs.exists(new Path(rootPath, rel)), s"rewrite: $rel is not live under $root")
+    val keep = Snapshots
+      .scanRels(spark, root, view, Seq(rel))
+      .drop(graft.sources.snap.SnapFilters.partValsOf(rel).map(_._1).toSeq: _*)
     stage.into(DataFiles.dirOf(rel))(sub =>
       keep.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sub.toString))
   }
 
   /** Re-home one DV sidecar after its data file MOVED to a new rel (the
-    * branch fast-forward): the sidecar's rows embed the data file's rel —
-    * the read-side anti-join matches on it — so a moved file needs a
-    * fresh sidecar carrying the NEW rel with the same positions. One
+    * branch fast-forward): the sidecar's rows embed the data file's rel,
+    * so a moved file gets a fresh sidecar carrying the NEW rel with the
+    * same positions. One
     * driver-side streaming copy (sidecars are small by construction); the
     * orphaned old sidecar dies in vacuum. Returns the new sidecar rel.
     */
@@ -603,11 +599,11 @@ object DeleteVectors {
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       DataFiles.rewrite(spark, fs, rootPath, dvd.keys.toSeq) { stage =>
-        graft.core.Par.each(dvd.toSeq) { case (rel, (dvRel, dvCnt)) =>
+        graft.core.Par.each(dvd.keys.toSeq) { rel =>
           // every recorded row deleted: nothing survives — archive only
           if (Snapshots.fullyDeleted(view.stats.getOrElse(rel, Map.empty[String, ColStat])))
             require(fs.exists(new Path(rootPath, rel)), s"materialize: $rel is not live under $root")
-          else stageRewrite(spark, root, stage, rel, dvRel, dvCnt)
+          else stageRewrite(spark, root, stage, view, rel)
         }
       }(_ => Snapshots.commit(spark, root)) // rewritten files get fresh stats; pointers die with the rels
       (dvd.size.toLong, dvd.values.map(_._2).sum)
@@ -796,7 +792,7 @@ object DeleteVectors {
         val written: Seq[(String, String, Long)] =
           if (candidates.isEmpty) Seq.empty
           else {
-            val scan = Snapshots.scanRelsWithPos(spark, root, candidates, view.schema)
+            val scan = matchScan(spark, root, view, candidates)
             // `<=>` when the caller matches null-safely (Mv's NULL-keyed
             // groups); plain name-equality join otherwise — EqualNullSafe
             // still hash-joins, but the default face keeps SQL equality
@@ -815,8 +811,7 @@ object DeleteVectors {
                   scan.join(keys, keyCols.map(c => scan(c) <=> keys(c)).reduce(_ && _), "left_semi")
                 else scan.join(keys, keyCols, "left_semi")
             }
-            val matches = matched
-              .select(col("__graft_dv_rel__").as("rel"), col("__graft_dv_pos__").as("pos"))
+            val matches = Snapshots.dvCoordinates(scan, matched)
             val oldDvByRel = candidates.flatMap { rel =>
               Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map { case (p, _) => rel -> p }
             }.toMap

@@ -490,7 +490,7 @@ object Mv {
         if (cands.isEmpty) pks.limit(0)
         else {
           val factKeys = Snapshots
-            .scanRels(spark, d.sourceRoot, cands, srcView.schema, Snapshots.dvByRel(srcView))
+            .scanRels(spark, d.sourceRoot, srcView, cands)
             .select(keyFields.map(f => col(f.name)): _*)
           factKeys
             .join(
@@ -906,7 +906,7 @@ object Mv {
     if (live.isEmpty) {
       val sch = view.schema.getOrElse(sys.error(s"$root records no schema"))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    } else Snapshots.scanRels(spark, root, live, view.schema, Snapshots.dvByRel(view))
+    } else Snapshots.scanRels(spark, root, view, live)
   }
 
   /** Which side provides each group key: `None` = the fact table,
@@ -1871,8 +1871,7 @@ object Mv {
               if (cands.isEmpty)
                 spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
               else {
-                val scan = Snapshots.scanRels(
-                  spark, dNew.sourceRoot, cands, srcView.schema, Snapshots.dvByRel(srcView))
+                val scan = Snapshots.scanRels(spark, dNew.sourceRoot, srcView, cands)
                 val pksB =
                   if (nP <= Snapshots.DvBroadcastMaxPositions) broadcast(pks) else pks
                 val cond =
@@ -2092,7 +2091,7 @@ object Mv {
             // a FULL dim's (c)-side groups need no fact files — recompute
             // proceeds over an empty fact frame plus the images below
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], srcSchema)
-          else Snapshots.scanRels(spark, d.sourceRoot, candidates, srcView.schema, Snapshots.dvByRel(srcView))
+          else Snapshots.scanRels(spark, d.sourceRoot, srcView, candidates)
         // the scan demotes FULL to LEFT (a full join over the candidate
         // SUBSET would fabricate unmatched-dim rows the other files
         // match); the true (c)-side unions in from the whole-fact probe

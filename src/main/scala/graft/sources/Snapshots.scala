@@ -681,7 +681,7 @@ object Snapshots {
 
   /** Hidden directory holding deletion-vector sidecars: one small parquet
     * file of `(rel, pos)` rows per DV'd data file — the positions (file
-    * row ordinals, the `_metadata.row_index` domain) a merge-on-read
+    * row ordinals, the reader's `_pos` domain) a merge-on-read
     * DELETE removed WITHOUT rewriting the data file. Dot-prefixed →
     * invisible to directory listers and manifests, like the archive.
     */
@@ -1578,8 +1578,7 @@ object Snapshots {
       // same view the committed manifest will serve
       if (added.nonEmpty && !checksEnforced) {
         Constraints.enforce(
-          spark, root, added, prev.schema,
-          addedDv.flatMap { case (rel, st) => dvOf(st).map(rel -> _) })
+          spark, root, added, prev.schema, addedDv)
         checksEnforced = true
       }
       if (prev.statsCols.nonEmpty) {
@@ -3519,7 +3518,8 @@ object Snapshots {
       try fs.getFileStatus(p)
       catch {
         case _: java.io.FileNotFoundException =>
-          sys.error(s"manifest v$v does not exist under $root (vacuumed or never committed)")
+          throw new IllegalArgumentException(
+            s"manifest v$v does not exist under $root (vacuumed or never committed)")
       }
     (
       p.makeQualified(fs.getUri, fs.getWorkingDirectory).toString,
@@ -3706,14 +3706,9 @@ object Snapshots {
   }
 
   /** Read the table pinned at manifest `version` (≤0 → latest): an
-    * explicit-file-list scan, immune to concurrent maintenance.
-    *
-    * Live and archived files are scanned separately, each with its own
-    * `basePath` (the archive preserves the `k=v` partition-dir structure,
-    * so hive partition-column inference works on both sides — but a single
-    * scan mixing the two roots would trip Spark's conflicting-directory
-    * check on the extra `.snap-archive` segment), then unioned by name.
-    * Still one job, two file sources — no shuffle, no extra I/O.
+    * explicit-file-list scan ([[scanRels]]), immune to concurrent
+    * maintenance — live and archived files, branch files and deletion
+    * vectors all read through the catalog's one scan.
     */
   /** Optional `prune`: inclusive (column, lo, hi) ranges applied against
     * the manifest's recorded per-file stats — files whose interval misses
@@ -3782,180 +3777,85 @@ object Snapshots {
       val s = schema.getOrElse(sys.error(s"prune removed every file and manifest records no schema"))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     }
-    scanRels(spark, root, rels, schema, dvByRel(view))
+    scanRels(spark, root, view, rels)
   }
 
-  /** Scan an explicit manifest-relative file list (live or archived) with
-    * an optional enforced schema — the core of [[readSnapshot]], shared
-    * with the SQL catalog's scan (which does its own filter-driven
-    * pruning before calling in). `rels` must be non-empty.
-    *
-    * `dv`: rel → (deletion-vector sidecar rel, deleted count) for files
-    * with merge-on-read deletes. DV'd files scan with their file-row
-    * ordinals (`_metadata.row_index` — the exact domain the DV recorded)
-    * and ANTI-JOIN the deleted positions; clean files scan untouched and
-    * union below. The join broadcasts whenever the manifest-recorded
-    * total deleted count is small (the expected case — large DV fractions
-    * are what [[graft.sources.DeleteVectors.materialize]] is for), so the
-    * data side never shuffles; past the threshold it degrades to a real
-    * join rather than an executor-OOM broadcast.
-    */
-  /** Broadcast threshold for the DV anti-join, as a recorded deleted-
-    * position count (≈16 bytes each → ~64 MB at the cap). Past it the
+  /** Broadcast threshold for the key sets the MV refresh and the keyed
+    * DV match join against a scan, as a recorded row count. Past it the
     * join degrades to a real join rather than an executor-OOM broadcast
     * (AQE may still broadcast by measured size).
     */
   val DvBroadcastMaxPositions = 4000000L
 
-  /** The DV position sidecar's read schema — fixed by construction
-    * ([[graft.sources.DeleteVectors]] writes exactly these two columns),
-    * nullable to mirror what parquet inference returns. Passing it
-    * explicitly skips the schema-inference Spark job recent
-    * `DataFrameReader.parquet` versions launch per call — one job per
-    * DV-aware table scan otherwise (guide §1.2 fixed overhead).
+  /** Scan an explicit manifest-relative file list (live or archived) of
+    * one view — the core of [[readSnapshot]] and every programmatic read.
+    * The frame is the catalog's own DSv2 relation ([[SnapTable]] pinned to
+    * `view` restricted to `rels`), so it plans as the one scan SQL reads
+    * through: the reader subtracts each file's deletion vector (the view's
+    * recorded pointer) inside the task, splices hive partition values from
+    * the path and null-fills ALTER-added columns. `_file` and `_pos`
+    * select as metadata columns ([[dvCoordinates]] maps `_file` back to
+    * the rel). A view with no recorded schema (v1) reads with
+    * [[inferredSchema]]. `rels` must be non-empty.
     */
-  val DvSidecarReadSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      Seq(
-        org.apache.spark.sql.types.StructField(
-          "rel",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(
-          "pos",
-          org.apache.spark.sql.types.LongType)))
-
   private[sources] def scanRels(
       spark: SparkSession,
       root: String,
-      rels: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      dv: Map[String, (String, Long)] = Map.empty,
-      fileCol: Option[String] = None,
-      posCol: Option[String] = None): DataFrame = {
-    val (dvRels, cleanRels) = rels.partition(dv.contains)
-    val cleanDf =
-      if (cleanRels.isEmpty) None
-      else {
-        // `_metadata` columns resolve only ON a file scan, not above the
-        // live/archive union (Union propagates no metadata output) — a
-        // _pos request takes the withMeta base, which attaches the
-        // ordinal per scan BEFORE unioning
-        val df0 = scanRelsBase(spark, root, cleanRels, schema, withMeta = posCol.isDefined)
-        val df1 = posCol.fold(df0)(c =>
-          df0.withColumnRenamed("__graft_dv_pos__", c).drop("__graft_dv_rel__"))
-        // scan-local provenance: input_file_name() evaluates per task on
-        // the scan side of any later operator — safe above the union
-        Some(fileCol.fold(df1)(c =>
-          df1.withColumn(c, org.apache.spark.sql.functions.input_file_name())))
-      }
-    val dvDf =
-      if (dvRels.isEmpty) None
-      else {
-        import org.apache.spark.sql.functions.{broadcast, col}
-        val sidecars = dvRels.map(r => new Path(new Path(root), dv(r)._1).toString).distinct
-        val positions = spark.read
-          .schema(DvSidecarReadSchema)
-          .parquet(sidecars: _*)
-          .select(col("rel").as("__dv_rel__"), col("pos").as("__dv_pos__"))
-        // broadcast only when the RECORDED deleted total says it's small
-        val totalDeleted = dvRels.map(r => dv(r)._2).sum
-        val right =
-          if (totalDeleted <= DvBroadcastMaxPositions) broadcast(positions) else positions
-        val base0 = scanRelsBase(spark, root, dvRels, schema, withMeta = true)
-        // provenance BEFORE the join, from the scan's own metadata column:
-        // input_file_name() above a non-broadcast (shuffling) anti-join
-        // evaluates post-exchange and silently yields "" — the metadata
-        // value projects through any join shape
-        val base1 = fileCol.fold(base0)(c => base0.withColumn(c, col("_metadata.file_path")))
-        val base = posCol.fold(base1)(c => base1.withColumn(c, col("__graft_dv_pos__")))
-        Some(
-          base
-            .join(
-              right,
-              base("__graft_dv_rel__") === right("__dv_rel__") &&
-                base("__graft_dv_pos__") === right("__dv_pos__"),
-              "left_anti")
-            .drop("__graft_dv_rel__", "__graft_dv_pos__"))
-      }
-    (cleanDf.toSeq ++ dvDf.toSeq).reduce(_.unionByName(_))
+      view: ManifestView,
+      rels: Seq[String]): DataFrame = {
+    val table = new graft.sources.snap.SnapTable(root, view.version, pinned = Some(view.copy(rels = rels)))
+    org.apache.spark.sql.graft.Bridge.ofRows(
+      spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
   }
 
-  /** The explicit-file-list scan PLUS each row's provenance in the DV
-    * coordinate system: `__graft_dv_rel__` (the file's root-relative
-    * path, recovered from the scan's own `_metadata.file_path`) and
-    * `__graft_dv_pos__` (`_metadata.row_index`, the file-row ordinal a
-    * deletion vector records). Shared by the DV-aware read ([[scanRels]]'
-    * anti-join side) and the merge-on-read DELETE's match scan
-    * ([[graft.sources.DeleteVectors]]).
+  /** The deletion-vector coordinates `(rel, pos)` of `rows`, a frame
+    * derived from `scan` (a [[scanRels]] frame with `_file` and `_pos`
+    * selected as plain columns): the reader's `_pos`, and its `_file`
+    * looked up among the scanned files' resolved paths (the same
+    * resolution the reader reports — no path parsing).
     */
-  private[sources] def scanRelsWithPos(
-      spark: SparkSession,
-      root: String,
-      rels: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
-    scanRelsBase(spark, root, rels, schema, withMeta = true)
+  private[sources] def dvCoordinates(scan: DataFrame, rows: DataFrame): DataFrame = {
+    val table = org.apache.spark.sql.graft.Bridge
+      .logicalPlan(scan)
+      .collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r.table
+      }
+      .collect { case t: graft.sources.snap.SnapTable => t }
+      .filter(_.pinnedRels.isDefined)
+      .getOrElse(sys.error("dvCoordinates needs a Snapshots.scanRels frame"))
+    val byPath = table.pinnedRels.get.map(r => table.pathOf(r) -> r).toMap
+    import org.apache.spark.sql.functions.{col, typedLit}
+    import graft.sources.snap.SnapTable.{FileMetaCol, PosMetaCol}
+    rows
+      .select(col(FileMetaCol), col(PosMetaCol))
+      .select(typedLit(byPath).apply(col(FileMetaCol)).as("rel"), col(PosMetaCol).as("pos"))
+  }
 
-  /** One shared live/archive two-base union scan. With `withMeta`, the
-    * rel recovery works in the ENCODED domain: `_metadata.file_path` is
-    * URI-rendered (space → %20, %% → %25; '+' stays literal — probed, and
-    * the hive-escaped on-disk dir `k=c%25d` reads back double-encoded as
-    * `k=c%2525d`), so the match prefix is the root's RAW (encoded) URI
-    * path and the extracted remainder URI-decodes back to the on-disk
-    * rel the manifest records. The '+'-protection before `url_decode`
-    * matters: URLDecoder turns bare '+' into space, but a URI path's '+'
-    * is literal.
+  /** The schema a v1 manifest's files read with (it records none):
+    * Spark's parquet inference over the files of their first base dir
+    * (root, archive, or a branch's), hive partition columns typed from
+    * the paths — what the per-base reads of these files inferred.
     */
-  private def scanRelsBase(
+  private[sources] def inferredSchema(
       spark: SparkSession,
       root: String,
       rels: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      withMeta: Boolean): DataFrame = {
+      pathOf: String => String): org.apache.spark.sql.types.StructType = {
+    require(rels.nonEmpty, s"manifest under $root lists no data files")
     val archiveBase = new Path(new Path(root), ArchiveDirName).toString
-    // ONE scan per effective base dir: live main files under the root,
-    // archived files under the archive, and each branch's private files
-    // under THEIR base (`.branch/<name>`) — hive partition inference
-    // refuses mixed base depths in a single scan (CONFLICTING_DIRECTORY_
-    // STRUCTURES), and per-base scans infer identical partition columns,
-    // so the union below is still one job over k file sources.
-    def baseOf(rel: String, p: Path): String =
-      if (p.toString.contains(s"/$ArchiveDirName/")) archiveBase
+    def baseOf(rel: String, p: String): String =
+      if (p.contains(s"/$ArchiveDirName/")) archiveBase
       else if (rel.startsWith(BranchDataDirName + "/"))
         new Path(new Path(root), rel.split("/").take(2).mkString("/")).toString
       else root
-    val grouped = rels
-      .map(rel => rel -> resolve(spark, root, rel))
+    val (base, paths) = rels
+      .map(rel => rel -> pathOf(rel))
       .groupBy { case (rel, p) => baseOf(rel, p) }
       .toSeq
-      .sortBy(_._1)
-      .map { case (base, rps) => base -> rps.map(_._2) }
-    lazy val rootPart = java.util.regex.Pattern.quote(
-      new Path(root)
-        .makeQualified(
-          fsOf(spark, new Path(root)).getUri,
-          fsOf(spark, new Path(root)).getWorkingDirectory)
-        .toUri
-        .getRawPath)
-    lazy val arch = java.util.regex.Pattern.quote(s"$ArchiveDirName/")
-    val scans = grouped.collect {
-      case (base, ps) if ps.nonEmpty =>
-        val rd = spark.read.option("basePath", base)
-        schema.foreach(rd.schema)
-        val df = rd.parquet(ps.map(_.toString): _*)
-        if (!withMeta) df
-        else {
-          import org.apache.spark.sql.functions.{col, regexp_extract, regexp_replace, url_decode}
-          df.withColumn(
-            "__graft_dv_rel__",
-            url_decode(
-              regexp_replace(
-                regexp_extract(col("_metadata.file_path"), s".*$rootPart/(?:$arch)?(.*)$$", 1),
-                "\\+",
-                "%2B")))
-            .withColumn("__graft_dv_pos__", col("_metadata.row_index"))
-        }
-    }
-    scans.reduce(_.unionByName(_))
+      .minBy(_._1)
+    spark.read.option("basePath", base).parquet(paths.map(_._2): _*).schema
   }
 
   /** Metadata-only COUNT(*) of a pinned snapshot: sums the per-file row
@@ -4038,7 +3938,7 @@ object Snapshots {
     if (added.isEmpty) {
       val s = schema.getOrElse(readSnapshot(spark, root, fromVersion).schema)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else scanRels(spark, root, added, schema, dvByRel(toView))
+    } else scanRels(spark, root, toView, added)
   }
 
   /** Row-level change feed between two pinned manifests — the
@@ -4465,7 +4365,7 @@ object Snapshots {
     val bv = branchView(spark, root, name)
     val live = bv.rels.filterNot(rel => fullyDeleted(bv.stats.getOrElse(rel, Map.empty)))
     require(live.nonEmpty, s"branch '$name' of $root lists no live data files")
-    scanRels(spark, root, live, bv.schema, dvByRel(bv))
+    scanRels(spark, root, bv, live)
   }
 
   /** Append `df` to the branch — the live line is untouched. One
@@ -4652,8 +4552,7 @@ object Snapshots {
       // no checks; O(branch delta) — the adoption's own price — when it
       // does.
       Constraints.enforce(
-        spark, root, branchRels, bv.schema,
-        dvByRel(bv).filter { case (rel, _) => !forkRels.contains(rel) })
+        spark, root, branchRels, bv.schema, bv.stats)
       // a branch MoR delete on a FORK file changed its pointer on the
       // branch line only — adoption restates the branch's stats (original
       // footer stats + the new DV keys; the sidecar's embedded rel is the
@@ -4698,9 +4597,9 @@ object Snapshots {
           }
           // a MOVED file carrying a vector (a branch delete hit a branch
           // append): the DV sidecar embeds the data file's rel, which just
-          // changed — REHOME the sidecar (rewrite its rel column) so the
-          // read-side anti-join keeps matching; the orphaned old sidecar
-          // dies in vacuum. Pooled like every per-file driver I/O —
+          // changed — REHOME the sidecar (rewrite its rel column) so it
+          // names the file it belongs to; the orphaned old sidecar dies
+          // in vacuum. Pooled like every per-file driver I/O —
           // adoption latency is O(max sidecar), not O(sum)
           val dvMoved = targets.flatMap { case (rel, target) =>
             dvOf(bv.stats.getOrElse(rel, Map.empty)).map { case (dvRel, cnt) =>
@@ -4801,11 +4700,9 @@ object Snapshots {
         .toSeq
         .sorted
       if (scoped.isEmpty) return (branchRels.size.toLong, branchRels.size.toLong)
-      val scopedSet = scoped.toSet
-      val dv = dvByRel(bv).filter { case (rel, _) => scopedSet.contains(rel) }
       // one read of exactly the rewritten scopes, vectors applied — the
       // compactInPlace fold, branch-locally
-      val df = scanRels(spark, root, scoped, bv.schema, dv)
+      val df = scanRels(spark, root, bv, scoped)
       val added = landOnBranch(spark, root, name, bv, df)
       commitBranchDelta(spark, root, name, bv, added, minus = scoped)
       (branchRels.size.toLong, (branchRels.size - scoped.size + added.size).toLong)
@@ -4873,8 +4770,7 @@ object Snapshots {
       // check, while the user still has the pre-rebase chain intact).
       // Zero cost when the table has no checks; branch DVs applied.
       Constraints.enforce(
-        spark, root, branchRels, bv.schema,
-        dvByRel(bv).filter { case (rel, _) => !forkRels.contains(rel) })
+        spark, root, branchRels, bv.schema, bv.stats)
       // fork files whose DV pointer the branch changed (deleteOnBranch /
       // upsertOnBranch restates)
       val touched = forkView.rels.filter { rel =>

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, regexp_extract, regexp_replace, split, url_decode, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.StructType
 
 /** Batch sources & sinks. The reference's entire I/O surface is whole-file
@@ -115,11 +115,10 @@ object Sources {
       java.nio.file.Paths.get(inPath).normalize() != java.nio.file.Paths.get(outPath).normalize(),
       "compactParquet cannot rewrite in place: Spark reads lazily while overwriting — use a new path and swap")
     // merge-on-read deletes FOLD through the rewrite (the compactInPlace
-    // discipline, r12's requireNoDv refusal retired): provably-empty files
-    // are never read, DV'd files rewrite without their deleted positions —
-    // matched by FULL decoded rel, because this whole-table read spans
-    // directories and one partitioned job reuses a part NAME across dirs.
-    // A raw dir with no committed manifest has no vectors by construction.
+    // discipline): provably-empty files are never read, and a committed
+    // table reads through its pinned scan, which subtracts each file's
+    // vector. A raw dir with no committed manifest has no vectors by
+    // construction and reads as plain parquet.
     val inRoot = new org.apache.hadoop.fs.Path(inPath)
     val fs = inRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ONE recursive walk serves everything below: the live (rel, bytes)
@@ -138,22 +137,16 @@ object Sources {
     val view =
       if (Snapshots.latestVersion(spark, inPath) > 0L) Some(Snapshots.manifestView(spark, inPath))
       else None
-    val dv = view.map(Snapshots.dvByRel).getOrElse(Map.empty[String, (String, Long)])
     val live = allFiles.filterNot { case (rel, _) =>
       view.exists(v => Snapshots.fullyDeleted(v.stats.getOrElse(rel, Map.empty)))
     }
     require(live.nonEmpty, s"compactParquet: every row of $inPath is MoR-deleted — nothing to rewrite")
-    val df =
-      if (dv.isEmpty) spark.read.parquet(inPath)
-      else {
-        val base = spark.read
-          .option("basePath", inPath)
-          .parquet(live.map(r => new org.apache.hadoop.fs.Path(inRoot, r._1).toString): _*)
-        foldDvPositions(spark, inRoot, base, live.map(_._1), dv, byFullRel = true)
-      }
+    val df = view match {
+      case Some(v) => Snapshots.scanRels(spark, inPath, v, live.map(_._1))
+      case None => spark.read.parquet(inPath)
+    }
     // output file count from the LIVE input's ON-DISK bytes (compressed
-    // domain — the same domain targetBytes is stated in); the optimizer's
-    // estimate of a DV-folded anti-join is not a byte count
+    // domain — the same domain targetBytes is stated in)
     val inputBytes = BigInt(live.map(_._2).sum)
     val nFiles = math.max(1L, (inputBytes / BigInt(targetBytes)).toLong +
       (if (inputBytes % BigInt(targetBytes) > 0) 1L else 0L))
@@ -296,7 +289,7 @@ object Sources {
     * flat parquet layout, rewriting ONLY the files that contain matching
     * rows — the copy-on-write delete a table format does, built on two
     * engine primitives:
-    *   1. find affected files with a `_metadata.file_path` scan under the
+    *   1. find affected files with an `input_file_name()` scan under the
     *      delete predicate — parquet row-group statistics prune the scan,
     *      so a well-clustered layout ([[compactParquet]] with sortCols /
     *      [[writeZOrdered]]) touches footers, not data, for most files;
@@ -903,15 +896,6 @@ object Sources {
     val dvView =
       if (Snapshots.latestVersion(spark, root) > 0L) Some(Snapshots.manifestView(spark, root))
       else None
-    val dv = dvView.map(Snapshots.dvByRel).getOrElse(Map.empty)
-    // declared DATA schema (partition cols live in the dir path, not the
-    // bytes): an evolved table compacts consistently — ALTER-added columns
-    // survive no matter which footer inference would have picked, dropped
-    // tombstoned columns are physically purged by the rewrite
-    val dataSchema = declaredSchemaOf(spark, root).map { s =>
-      val partCols = Snapshots.partitionColsFromRels(Snapshots.listDataFiles(spark, root)).toSet
-      org.apache.spark.sql.types.StructType(s.filterNot(f => partCols.contains(f.name)))
-    }
     val targetBytes = rewriteTargetBytes(spark)
     val landedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
     def compactOne(
@@ -925,11 +909,7 @@ object Sources {
           Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
       }
       if (live.nonEmpty) {
-        // explicit file list, partition columns irrelevant (rows keep their
-        // dir, which IS the partition value)
-        val rd = spark.read
-        dataSchema.foreach(rd.schema)
-        val base = rd.parquet(live.map(_._1.toString): _*)
+        val base = scopeRows(spark, root, fs, rootPath, dvView, live.map(_._1))
         // output sized from the scope's LIVE on-disk bytes (already in hand
         // from the listing): a hundreds-of-GB partition rewrites in
         // parallel to ~targetBytes files, never as one single-task monster
@@ -938,9 +918,7 @@ object Sources {
         // file, so prior layouts (and their query hashes) are unchanged.
         val n = rewriteFileCount(live.map(_._2).sum, targetBytes)
         landedFiles.addAndGet(stage.into(relOf(fs, rootPath, dir)) { sub =>
-          sizedLayout(
-            foldDvPositions(spark, rootPath, base, live.map(f => relOf(fs, rootPath, f._1)), dv),
-            n).write
+          sizedLayout(base, n).write
             .mode(SaveMode.Overwrite)
             .parquet(sub.toString)
         }.toLong)
@@ -1023,65 +1001,27 @@ object Sources {
     fs.makeQualified(file).toUri.getPath.stripPrefix(rootUriPath).stripPrefix("/")
   }
 
-  /** Subtract merge-on-read deleted positions from a raw multi-file read
-    * during an in-place rewrite — the fold that lets compaction/clustering
-    * run on DV'd scopes instead of refusing. Rows are matched to their
-    * vector by (file NAME, `_metadata.row_index`): all of one directory's
-    * files are rewritten together, names are unique within a directory and
-    * Spark-generated (`part-…parquet`, ASCII-safe — `_metadata.file_path`'s
-    * URI encoding cannot corrupt them), and the read pushes no parquet
-    * predicates so the row ordinal is exactly the DV's recorded domain.
-    * The positions side broadcasts only below the recorded-count threshold
-    * ([[Snapshots.DvBroadcastMaxPositions]]) — the scan-path discipline.
-    *
-    * `byFullRel`: match on the DECODED root-relative rel instead of the
-    * file name — required when one fold spans directories ([[
-    * compactParquet]]'s whole-table read): a single partitioned write job
-    * reuses its part file NAMES across partition dirs, so name-only
-    * matching could subtract one file's positions from its namesake.
-    * The decode is the scan-path discipline (`_metadata.file_path` is
-    * URI-rendered; '+' is literal and must survive `url_decode`).
+  /** The rows of one maintenance scope's files as its DATA columns
+    * (partition values live in the dir path, which the rewrite keeps). A
+    * committed table reads through its pinned scan: deletion vectors
+    * subtract, the declared schema applies (an evolved table compacts
+    * consistently — ALTER-added columns survive, dropped tombstoned
+    * columns are physically purged). A dir with no manifest reads as
+    * plain parquet.
     */
-  private def foldDvPositions(
+  private def scopeRows(
       spark: SparkSession,
+      root: String,
+      fs: org.apache.hadoop.fs.FileSystem,
       rootPath: org.apache.hadoop.fs.Path,
-      base: DataFrame,
-      rels: Seq[String],
-      dv: Map[String, (String, Long)],
-      byFullRel: Boolean = false): DataFrame = {
-    val dvd = rels.filter(dv.contains)
-    if (dvd.isEmpty) return base
-    val sidecars =
-      dvd.map(r => new org.apache.hadoop.fs.Path(rootPath, dv(r)._1).toString).distinct
-    val keyOfRel =
-      if (byFullRel) col("rel") else element_at(split(col("rel"), "/"), -1)
-    val positions = spark.read
-      .schema(Snapshots.DvSidecarReadSchema)
-      .parquet(sidecars: _*)
-      .select(keyOfRel.as("__dv_key__"), col("pos").as("__dv_pos__"))
-    val total = dvd.map(r => dv(r)._2).sum
-    val right = if (total <= Snapshots.DvBroadcastMaxPositions) broadcast(positions) else positions
-    val keyOfRow =
-      if (byFullRel) {
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val rootRaw = java.util.regex.Pattern.quote(
-          rootPath.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri.getRawPath)
-        url_decode(
-          regexp_replace(
-            regexp_extract(col("_metadata.file_path"), s".*$rootRaw/(.*)$$", 1),
-            "\\+",
-            "%2B"))
-      } else element_at(split(col("_metadata.file_path"), "/"), -1)
-    val withMeta = base
-      .withColumn("__graft_fold_key__", keyOfRow)
-      .withColumn("__graft_fold_pos__", col("_metadata.row_index"))
-    withMeta
-      .join(
-        right,
-        withMeta("__graft_fold_key__") === right("__dv_key__") &&
-          withMeta("__graft_fold_pos__") === right("__dv_pos__"),
-        "left_anti")
-      .drop("__graft_fold_key__", "__graft_fold_pos__")
+      view: Option[Snapshots.ManifestView],
+      files: Seq[org.apache.hadoop.fs.Path]): DataFrame = view match {
+    case Some(v) =>
+      val rels = files.map(relOf(fs, rootPath, _))
+      Snapshots
+        .scanRels(spark, root, v, rels)
+        .drop(graft.sources.snap.SnapFilters.partValsOf(rels.head).map(_._1).toSeq: _*)
+    case None => spark.read.parquet(files.map(_.toString): _*)
   }
 
   /** In-place CLUSTERING rewrite — the `OPTIMIZE … ZORDER BY` of the
@@ -1144,12 +1084,6 @@ object Sources {
     val dvView =
       if (Snapshots.latestVersion(spark, root) > 0L) Some(Snapshots.manifestView(spark, root))
       else None
-    val dv = dvView.map(Snapshots.dvByRel).getOrElse(Map.empty)
-    // same declared-data-schema discipline as compactInPlace
-    val dataSchema = declaredSchemaOf(spark, root).map { s =>
-      val pcs = Snapshots.partitionColsFromRels(Snapshots.listDataFiles(spark, root)).toSet
-      org.apache.spark.sql.types.StructType(s.filterNot(f => pcs.contains(f.name)))
-    }
     def clusterOne(
         stage: DataFiles.Rewrites,
         dir: org.apache.hadoop.fs.Path,
@@ -1159,11 +1093,9 @@ object Sources {
           Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
       }
       if (live.nonEmpty) {
-        val rd = spark.read
-        dataSchema.foreach(rd.schema)
-        val base = rd.parquet(live.map(_.toString): _*)
+        val base = scopeRows(spark, root, fs, rootPath, dvView, live)
         stage.into(relOf(fs, rootPath, dir)) { sub =>
-          foldDvPositions(spark, rootPath, base, live.map(relOf(fs, rootPath, _)), dv)
+          base
             .repartitionByRange(filesPerScope, key)
             .sortWithinPartitions(key)
             .write

@@ -372,16 +372,25 @@ object SnapTable {
     */
   val FileMetaCol = "_file"
 
-  /** Metadata column: the row's file-row ordinal (`_metadata.row_index`
-    * — the deletion-vector coordinate). `(_file, _pos)` together are the
-    * table's stable row identity: the delta-based row-level operations'
-    * rowId, and the provenance pair a `SELECT _file, _pos` debug query
-    * reads.
+  /** Metadata column: the row's file-row ordinal (the deletion-vector
+    * coordinate). `(_file, _pos)` together are the table's stable row
+    * identity: the delta-based row-level operations' rowId, and the
+    * provenance pair a `SELECT _file, _pos` debug query reads.
     */
   val PosMetaCol = "_pos"
 }
 
-class SnapTable(val dir: String, version: Long, val branch: Option[String] = None)
+/** `pinned`: a view a programmatic read pins ([[Snapshots.scanRels]]),
+  * its rels the exact files to scan. Such a relation plans from the view
+  * alone (no header shortcut, no version lookup), resolves each file once,
+  * and is a plain scan: no aggregate pushdown (the hybrid aggregate's own
+  * read of its DV'd files must not re-enter it) and no MV rewrite.
+  */
+class SnapTable(
+    val dir: String,
+    version: Long,
+    val branch: Option[String] = None,
+    pinned: Option[Snapshots.ManifestView] = None)
     extends Table
     with SupportsRead
     with SupportsWrite
@@ -414,6 +423,18 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
     */
   def pinnedVersion: Long = version
 
+  /** The explicit file list a pinned read scans (None: the catalog's). */
+  def pinnedRels: Option[Seq[String]] = pinned.map(_.rels)
+
+  // a pinned read resolves each file once: the reader's `_file` and the
+  // DV match scans' rel lookup ([[Snapshots.dvCoordinates]]) see one path
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Where `rel` is read from: live, else archived. */
+  def pathOf(rel: String): String =
+    if (pinned.isEmpty) Snapshots.resolve(spark, dir, rel).toString
+    else resolved.computeIfAbsent(rel, r => Snapshots.resolve(spark, dir, r).toString)
+
   override def name(): String =
     branch match {
       case Some(b) => s"graft-snapshot:$dir@branch:$b"
@@ -430,25 +451,26 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
   // scan builder's pruned reads all pin the SAME version even when the
   // load asked for "latest" and commits land concurrently
   private lazy val resolvedVersion: Long =
-    if (version > 0) version else Snapshots.latestVersion(spark, dir)
+    pinned.map(_.version).getOrElse(
+      if (version > 0) version else Snapshots.latestVersion(spark, dir))
 
   // a BRANCH read resolves through the branch's own manifest line: no
   // main-line header shortcut (the cold-planning path indexes main
   // manifests), the view is fork + branch deltas
   private lazy val header: Option[Snapshots.HeaderView] =
-    if (branch.isDefined) None else Snapshots.headerView(spark, dir, resolvedVersion)
+    if (branch.isDefined || pinned.isDefined) None
+    else Snapshots.headerView(spark, dir, resolvedVersion)
 
   private lazy val view: Snapshots.ManifestView =
-    branch match {
+    pinned.getOrElse(branch match {
       case Some(b) => Snapshots.branchView(spark, dir, b)
       case None => Snapshots.manifestView(spark, dir, resolvedVersion)
-    }
+    })
 
   private lazy val tableSchema: StructType =
     header
       .flatMap(_.schema)
-      .getOrElse(
-        view.schema.getOrElse(Snapshots.readSnapshot(spark, dir, resolvedVersion).schema))
+      .getOrElse(view.schema.getOrElse(Snapshots.inferredSchema(spark, dir, view.rels, pathOf)))
 
   override def schema(): StructType = tableSchema
 
@@ -489,7 +511,10 @@ class SnapTable(val dir: String, version: Long, val branch: Option[String] = Non
     Map("format" -> "graft-snapshot", "location" -> dir, "version" -> version.toString).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SnapScanBuilder(dir, view, tableSchema, options.asScala.toMap, header, resolvedVersion)
+    new SnapScanBuilder(dir, view, tableSchema, options.asScala.toMap, header, resolvedVersion) {
+      override protected def pathOf(rel: String): String = SnapTable.this.pathOf(rel)
+      override protected def allowAggregates: Boolean = pinned.isEmpty
+    }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new SnapWriteBuilder(dir, info)
@@ -1322,6 +1347,15 @@ class SnapScanBuilder(
     */
   protected def allowConsumption: Boolean = true
 
+  /** Whether aggregates may push to the manifest — a pinned file-list
+    * read ([[SnapTable]]'s `pinned`) is a plain scan.
+    */
+  protected def allowAggregates: Boolean = true
+
+  /** Where the scan reads `rel` from: live, else archived. */
+  protected def pathOf(rel: String): String =
+    Snapshots.resolve(SparkSession.active, dir, rel).toString
+
   /** Can the source CONSUME a filter on `c` — answer it exactly from the
     * file list, no row-level re-check? Requires `c` to be a hive path
     * column of EVERY pinned file (a dir value is the value of every row
@@ -1599,13 +1633,13 @@ class SnapScanBuilder(
   }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    aggPlan(aggregation).isDefined
+    allowAggregates && aggPlan(aggregation).isDefined
 
   override def pushAggregation(aggregation: Aggregation): Boolean =
-    aggPlan(aggregation) match {
+    allowAggregates && (aggPlan(aggregation) match {
       case Some(plan) => pushedAgg = Some(plan); true
       case None => false
-    }
+    })
 
   override def build(): Scan = pushedAgg match {
     case Some((groupCols, fields)) =>
@@ -1668,7 +1702,8 @@ class SnapScanBuilder(
         kept,
         (translated ++ consumed).toSeq,
         options,
-        consumed.toSeq)
+        consumed.toSeq,
+        pathOf)
   }
 }
 
@@ -1806,20 +1841,18 @@ class SnapAggScan(
     }
 
   /** The DV'd files' exact per-group contributions, from ONE Spark job
-    * over ONLY those files (vectors applied by [[Snapshots.scanRels]]'
-    * anti-join). Group keys come back as the partition columns' canonical
-    * string renderings — the planner's `consumableCol` gate guarantees
+    * over ONLY those files (a pinned [[Snapshots.scanRels]] read: the
+    * reader subtracts each file's vector, and the plain scan never pushes
+    * this aggregate back here). Group keys come back as the partition
+    * columns' canonical string renderings — the planner's `consumableCol` gate guarantees
     * every file path value IS that rendering, so the keys align with
     * [[groupKeyOf]] exactly. O(groups) driver memory, never O(rows).
     */
   private lazy val scanned: Map[Seq[Option[String]], Array[Any]] =
     if (!needsScan) Map.empty
     else {
-      val spark = SparkSession.active
-      val schema = view.schema.getOrElse(
-        sys.error(s"hybrid aggregate pushdown on $dir needs a recorded schema"))
-      val dv = Snapshots.dvByRel(view)
-      val df = Snapshots.scanRels(spark, dir, dvdRels, Some(schema), dv)
+      require(view.schema.isDefined, s"hybrid aggregate pushdown on $dir needs a recorded schema")
+      val df = Snapshots.scanRels(SparkSession.active, dir, view, dvdRels)
       import org.apache.spark.sql.functions.{col, count, lit, max => smax, min => smin, sum => ssum}
       val aggCols = fields.zipWithIndex.map {
         // COUNT(*) folds from the manifest, never from here — a constant

@@ -59,7 +59,9 @@ class SnapV2BatchScan(
     initialRels: Seq[String],
     filters: Seq[Filter],
     options: Map[String, String],
-    consumedFilters: Seq[Filter] = Seq.empty)
+    consumedFilters: Seq[Filter],
+    /** Where a rel is read from (live, else archived). */
+    pathOf: String => String)
     extends Scan
     with Batch
     with SupportsReportPartitioning
@@ -133,7 +135,7 @@ class SnapV2BatchScan(
       }
     }
     SnapKeyedFileInput(
-      Snapshots.resolve(spark, dir, rel).toString,
+      pathOf(rel),
       pairs,
       key,
       // merge-on-read deletes: the reader subtracts the file's recorded

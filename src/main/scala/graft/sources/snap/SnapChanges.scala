@@ -59,10 +59,11 @@ class SnapChangesTable(dir: String, pinnedVersion: Long = -1L) extends Table wit
 
   override def name(): String = s"graft-snapshot:$dir#changes"
 
-  private lazy val dataSchema: StructType =
-    Snapshots
-      .schemaOf(spark, dir)
-      .getOrElse(Snapshots.readSnapshot(spark, dir).schema)
+  private lazy val dataSchema: StructType = {
+    val view = Snapshots.manifestView(spark, dir)
+    view.schema.getOrElse(
+      Snapshots.inferredSchema(spark, dir, view.rels, Snapshots.resolve(spark, dir, _).toString))
+  }
 
   override def schema(): StructType = SnapChanges.outSchema(dataSchema)
 
@@ -261,13 +262,20 @@ class SnapChangesScan(dir: String, dataSchema: StructType, options: Map[String, 
   /** Batch range: `startingVersion` (default 1 — history from the
     * start) through `endingVersion` (default latest; a `VERSION AS OF`
     * pin lowers it). The starting version emits as its own delta except
-    * version 1, the creation image.
+    * version 1, the creation image. Only an open end reads the table
+    * head; a pinned end is checked by reading its manifest, which
+    * planning reads anyway (views cache), so Spark's repeated plannings
+    * of one window probe no head.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val latest = Snapshots.latestVersion(spark, dir)
+    val pinnedEnd = options.get("endingversion").map(_.toLong)
     val from = options.get("startingversion").map(_.toLong).getOrElse(1L)
-    val to = options.get("endingversion").map(_.toLong).getOrElse(latest)
-    require(from >= 1L && from <= to && to <= latest, s"changes range [$from, $to] out of history")
+    val to = pinnedEnd.getOrElse(Snapshots.latestVersion(spark, dir))
+    def committed: Boolean =
+      pinnedEnd.isEmpty ||
+        (try { Snapshots.manifestView(spark, dir, to); true }
+         catch { case _: IllegalArgumentException => false })
+    require(from >= 1L && from <= to && committed, s"changes range [$from, $to] out of history")
     val mapTyped = dataSchema.fields.exists(f => SnapChanges.containsMap(f.dataType))
     (from to to).flatMap(v => SnapChanges.planVersion(spark, dir, v, sliceBytes, mapTyped)).toArray
   }

@@ -407,8 +407,8 @@ case class SnapStreamReadFactory(
     // only data-column predicates reach the file reader: a spliced
     // column's value is constant per file and was decided by file pruning.
     // A DV'd file (or a _pos request) additionally DISABLES parquet-level
-    // predicate pushdown: the ordinal counter below equals `row_index`
-    // only when no row group is skipped — Spark re-applies every residual
+    // predicate pushdown: the ordinal counter below is the row's index in
+    // its file only when no row group is skipped — Spark re-applies every residual
     // predicate above this reader, so dropping the in-file skipping costs
     // I/O, never correctness.
     val pushable =
@@ -516,10 +516,10 @@ object SnapStreamReadFactory {
 }
 
 /** Sequential parquet read minus a sorted set of file-row ordinals — the
-  * executor half of a deletion vector. The ordinal counter equals
-  * `_metadata.row_index` (the DV's coordinate system) exactly because the
-  * wrapped reader never skips a row group (DV'd files read with parquet
-  * predicate pushdown disabled).
+  * executor half of a deletion vector. The ordinal counter equals the
+  * row's index in its file (the DV's coordinate system) exactly because
+  * the wrapped reader never skips a row group (DV'd files read with
+  * parquet predicate pushdown disabled).
   */
 private[snap] final class SnapDvSkippingReader(
     inner: org.apache.parquet.hadoop.ParquetReader[InternalRow],

@@ -42,7 +42,7 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   /** Which roots the query's scans actually open files under (AQE-wrapped
-    * subtrees — a MoR view read has a broadcast anti-join — unwrapped).
+    * subtrees unwrapped).
     */
   private def allScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
     p.collect {

@@ -396,7 +396,7 @@ class DeleteVectorsSpec extends SparkSpec {
     DeleteVectors.deleteWhere(spark, dir, $"id" % 2 === 0)
     val viaCatalog =
       spark.sql("SELECT id, v FROM dvv2.ev ORDER BY id").collect().map(_.getLong(0)).toSeq
-    // the scanRels path (anti-join on the vectors) agrees
+    // the programmatic read (the same scan, pinned to the file list) agrees
     val direct = Snapshots
       .readSnapshot(spark, dir)
       .select($"id")

@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
@@ -57,6 +59,7 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   }
   override def exists(p: Path): Boolean = {
     CountingFs.bump("exists")
+    if (CountingFs.recording) CountingFs.probed.add(p.toString)
     super.exists(p)
   }
 }
@@ -65,12 +68,16 @@ object CountingFs {
   val Kinds: Seq[String] = Seq("create", "rename", "delete", "mkdirs", "exists")
   @volatile var recording = false
   private val counts = new ConcurrentHashMap[String, AtomicLong]()
+
+  /** The paths the recorded exists probes named. */
+  val probed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def bump(kind: String): Unit =
     if (recording) counts.computeIfAbsent(kind, _ => new AtomicLong()).incrementAndGet()
 
   /** The calls `body` issues, per kind. */
   def during(body: => Unit): Map[String, Long] = {
     counts.clear()
+    probed.clear()
     recording = true
     try body
     finally recording = false
@@ -206,5 +213,31 @@ class FsCallCountSpec extends SparkSpec {
     check("sql_update", CountingFs.during(spark.sql("UPDATE fscu.t SET v = v + 1 WHERE cat = 'a'")))
     assert(Snapshots.latestVersion(spark, dir) == v + 1L)
     assert(Snapshots.readSnapshot(spark, dir).filter($"cat" === "a").select(sum($"v")).head().getLong(0) == 34L)
+  }
+
+  test("planning a pinned change-feed window probes no table head; an end past the head still fails") {
+    val dir = base("fscount_cdf") + "/t"
+    table(dir)
+    DeleteVectors.upsert(spark, dir, Seq(("d01", "a", 12L)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    DeleteVectors.upsert(spark, dir, Seq(("d02", "z", 5L)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    val head = Snapshots.latestVersion(spark, dir)
+    def feed(to: Long): org.apache.spark.sql.DataFrame = {
+      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        Map("startingversion" -> "2", "endingversion" -> to.toString).asJava)
+      org.apache.spark.sql.graft.Bridge.ofRows(
+        spark,
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          .create(new graft.sources.snap.SnapChangesTable(dir), None, None, opts))
+    }
+    val n = feed(head).count() // warms the manifest views
+    // the table reads its schema when the relation is built; only the
+    // planning (and the read) of the window is counted
+    val window = feed(head)
+    CountingFs.during(assert(window.count() == n))
+    val headProbes =
+      CountingFs.probed.asScala.filter(_.contains(s"/${Snapshots.ManifestDirName}")).toSeq
+    assert(headProbes.isEmpty, s"a pinned window probed the manifests: $headProbes")
+    val e = intercept[Exception](feed(head + 1L).count())
+    assert(e.getMessage.contains(s"changes range [2, ${head + 1L}] out of history"), e.getMessage)
   }
 }

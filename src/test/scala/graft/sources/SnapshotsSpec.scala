@@ -708,10 +708,14 @@ class SnapshotsSpec extends SparkSpec {
     java.nio.file.Files.delete(lock.toPath)
   }
 
+  /** Files the read's snapshot scan opens. */
   private def nScanned(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location.inputFiles.length
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan match {
+          case s: graft.sources.snap.SnapV2BatchScan => s.currentRels.size
+          case _ => 0
+        }
     }.sum
 
   test("v2 manifest: a day-range pinned read opens ONLY the matching files (plan-asserted)") {
