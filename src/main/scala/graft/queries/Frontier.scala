@@ -1136,21 +1136,22 @@ object Frontier {
        |  max(cusum) AS max_cusum
        |FROM lagd GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  // -- q177: MERGE partition-overwrite upsert ---------------------------
+  // -- q177: MERGE upsert into a partitioned table ----------------------
 
   /** The MERGE lifecycle loop, hash-proved: a v1 ingest of per-(day, user)
     * event stats that MISSED purchase events is corrected by merging a CDC
     * delta (full stats for every (day, user) pair that has a purchase)
     * through [[graft.sources.Sources.mergeIntoPartitioned]] — matched
-    * keys update, unmatched insert (purchase-only users), untouched day
-    * partitions are never rewritten (byte-identical, proved in
-    * SourcesSpec). The merged table's per-day report must then equal the
+    * keys update, unmatched insert (purchase-only users); the files that
+    * held a matched key are rewritten without it in the same commit, so
+    * the raw directory read below sees only current rows, and untouched
+    * day partitions keep their bytes (proved in SourcesSpec). The merged
+    * table's per-day report must then equal the
     * ORACLE's direct computation from raw events (users without purchases
     * are already correct in v1), so the hash gate proves
     * merge(v1, delta) ≡ recompute — the q170/q143 materialization-law
     * pattern applied to the MERGE operator. The scratch table lives at a
-    * deterministic temp path rebuilt per run (same discipline as the
-    * merge's own staging dirs).
+    * deterministic temp path rebuilt per run.
     */
   def q177(s: SparkSession, d: String): DataFrame = {
     val micro = floor(col("value") * lit(1000000.0) + lit(0.5)).cast("long")

@@ -615,8 +615,9 @@ object Frontier2 {
     * through [[graft.sources.Snapshots.diff]] — the `table_changes()`
     * surface. The diff of (v1, v2) must be EXACTLY the per-day click
     * stats rows tagged `removed` and nothing `added`, even though the
-    * delete REWROTE shared files: surviving rows appear identically in
-    * both snapshots and cancel under `exceptAll`'s multiset semantics.
+    * delete's purge REWROTE shared files: surviving rows appear
+    * identically in both snapshots and cancel under `exceptAll`'s
+    * multiset semantics.
     * The ORACLE recomputes the click rows from raw events. At 100 TB
     * this is CDC-from-storage: a consumer reconciles two manifests
     * without any change log, cost = two snapshot scans + one
@@ -655,9 +656,9 @@ object Frontier2 {
   /** Snapshot-isolation law, hash-proved: a per-(day, event_type) stats
     * table is committed as manifest v1 ([[graft.sources.Snapshots]]),
     * then a GDPR-style [[graft.sources.Sources.deleteWhere]] removes
-    * every `click` row — rewriting (or wholly archiving) a file in EVERY
-    * day partition and committing v2. The query reports each day twice:
-    * from the PINNED v1 snapshot (served mostly from archived files the
+    * every `click` row — its match plus one purge commit rewrite (or
+    * wholly archive) a file in EVERY day partition, committing v2. The
+    * query reports each day twice: from the PINNED v1 snapshot (served mostly from archived files the
     * live tree no longer lists) and from the latest manifest. The ORACLE
     * recomputes both sides directly from raw events, so the hash match
     * proves time travel is exact — v1 still shows the deleted rows

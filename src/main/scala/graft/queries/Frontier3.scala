@@ -456,16 +456,17 @@ object Frontier3 {
       |SELECT event_type, n AS n_pre, n AS n_post, su AS u_pre, su AS u_post
       |FROM w ORDER BY event_type""".stripMargin
 
-  // -- q203: copy-on-write UPDATE … SET ----------------------------------
+  // -- q203: programmatic UPDATE … SET -----------------------------------
 
   /** Row-level UPDATE with exact SQL semantics, hash-proved: on the
     * day-partitioned stats table, [[graft.sources.Sources.updateWhere]]
     * applies `SET n = n * 2, sum_u = sum_u + n` to click rows in the first
     * three days — BOTH right-hand sides evaluate against the OLD row (one
     * projection), so the `+ n` uses the pre-doubling count; the predicate
-    * mixes a data column with the hive PARTITION column, so only the
-    * matching days' files are rewritten (basePath read resolves `day` from
-    * the path). One SQL statement then reads v1 and live side by side and
+    * mixes a data column with the hive PARTITION column (the snapshot scan
+    * splices `day` from the path), so only the matching days' files are
+    * rewritten without the old images, the new images appended in the same
+    * commit. One SQL statement then reads v1 and live side by side and
     * the oracle recomputes both from raw events: per event type, the live
     * n gains exactly the matched raw-event count and the live sum gains the
     * same (old-n semantics), while v1 keeps the original totals — a wrong
@@ -725,9 +726,9 @@ object Frontier3 {
     * deletion-vector positions and lands the new ones as appended parquet
     * in one commit. The oracle is q203's: per type, live n gains exactly
     * the matched raw count and live sum the same, v1 keeps the originals
-    * — so the hash proves SQL UPDATE ≡ the programmatic copy-on-write
-    * update. At 100 TB a day-bounded correction writes the changed rows
-    * only, issued from any SQL client.
+    * — so the hash proves SQL UPDATE ≡ the programmatic update, whose
+    * purge leaves no vector behind. At 100 TB a day-bounded correction
+    * writes the changed rows only, issued from any SQL client.
     */
   def q207(s: SparkSession, d: String): DataFrame = {
     val (cat, _) = flatStatsTable(s, d, "snapq207")
@@ -3586,7 +3587,7 @@ object Frontier3 {
   def q246(s: SparkSession, d: String): DataFrame = {
     val (cat, dir) = statsTable(s, d, "snapq246", Seq("day"))
     val m = Tables.events(s, d).agg(min(to_date(col("ts"))).as("m")).head().getDate(0).toLocalDate
-    // v2: a COW delete rewrites day m's file (the old one archives)
+    // v2: the delete's purge rewrites day m's file (the old one archives)
     graft.sources.Sources.deleteWhere(
       s,
       dir,

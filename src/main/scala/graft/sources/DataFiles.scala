@@ -180,22 +180,15 @@ private[sources] object DataFiles {
     val rootUri = root.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri
     val rel = rootUri.relativize(live.makeQualified(fs.getUri, fs.getWorkingDirectory).toUri).getPath
     require(!rel.startsWith("/") && rel.nonEmpty, s"$live is not under $root")
-    archiveAs(fs, root, live, rel)
-  }
-
-  /** [[archive]] for a file that no longer sits at its rel: the contents
-    * of a partition dir a merge renamed aside.
-    */
-  def archiveAs(fs: FileSystem, root: Path, file: Path, rel: String): Boolean = {
     val dst = archivePath(root, rel)
     if (fs.exists(dst)) {
-      if (fs.getFileStatus(dst).getLen != fs.getFileStatus(file).getLen)
+      if (fs.getFileStatus(dst).getLen != fs.getFileStatus(live).getLen)
         sys.error(s"archive collision at $dst with DIFFERENT size — rel path reused, invariant broken")
-      fs.delete(file, false)
+      fs.delete(live, false)
       false
     } else {
       fs.mkdirs(dst.getParent)
-      if (!fs.rename(file, dst)) sys.error(s"archive rename $file -> $dst failed")
+      if (!fs.rename(live, dst)) sys.error(s"archive rename $live -> $dst failed")
       true
     }
   }

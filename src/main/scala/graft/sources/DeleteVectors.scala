@@ -9,14 +9,17 @@ import graft.sources.Snapshots.ColStat
 
 /** Merge-on-read DELETE for snapshot tables — deletion vectors.
   *
-  * The copy-on-write delete ([[Sources.deleteWhere]]) prices a deletion at
-  * the size of every file holding a match: correct, but exactly the wrong
-  * cost model for the common 100 TB case — deleting 0.01 % of rows (a GDPR
-  * erasure, a bad-record purge) from files of a million rows each rewrites
-  * a million rows per file to remove a hundred. The lakehouse answer
-  * (Delta's deletion vectors, Iceberg's position deletes) is MERGE-ON-READ:
-  * record WHICH row positions died and subtract them at scan time; rewrite
-  * nothing until a compaction ([[materialize]]) folds the vectors in.
+  * Rewriting every file that holds a match prices a deletion at the size
+  * of those files: exactly the wrong cost model for the common 100 TB
+  * case — deleting 0.01 % of rows (a GDPR erasure, a bad-record purge)
+  * from files of a million rows each rewrites a million rows per file to
+  * remove a hundred. The lakehouse answer (Delta's deletion vectors,
+  * Iceberg's position deletes) is MERGE-ON-READ: record WHICH row
+  * positions died and subtract them at scan time; rewrite nothing until
+  * a compaction ([[materialize]]) folds the vectors in. The programmatic
+  * DML of [[Sources]] runs the same match and folds the touched files in
+  * the same commit ([[purge]]), for callers that need no live file to
+  * hold a deleted row.
   *
   * Representation here:
   *  - One sidecar parquet file of `(rel, pos)` rows per DV'd data file,
@@ -36,7 +39,7 @@ import graft.sources.Snapshots.ColStat
   *    Old sidecars keep serving pinned versions until [[Snapshots.vacuum]].
   *
   * Scale shape of [[deleteWhere]]: one pruned snapshot scan to find
-  * matches (manifest stats + bloom narrowing, same as the COW path), one
+  * matches (manifest stats + bloom narrowing), one
   * shuffle of the MATCHED (rel, pos) pairs only — not the data — a
   * distributed sidecar write, and an O(touched-files) manifest delta. No
   * data file is read past the match scan and none is written. Reads pay
@@ -87,7 +90,7 @@ object DeleteVectors {
     * data file is rewritten. Returns (files touched, rows newly deleted).
     *
     * NULL-predicate rows are NOT matched (kept), the same three-valued
-    * rule as the COW delete. Rows already deleted by an earlier DV are
+    * rule as every row-level op. Rows already deleted by an earlier DV are
     * never double-counted: the new sidecar is the DISTINCT union of old
     * and new positions and the recorded count is exact.
     */
@@ -102,32 +105,42 @@ object DeleteVectors {
         view.schema.isDefined,
         s"merge-on-read delete on $root needs a v2 manifest (recorded schema) — " +
           "commit with statsCols to upgrade")
-      if (view.rels.isEmpty) return (0L, 0L)
-      val written = matchDeletes(spark, root, view, predicate)
-      if (written.isEmpty) return (0L, 0L)
-      boundedCommit(spark, root, view, written)
+      boundedCommit(spark, root, view, matchDeletes(spark, root, view, predicate))
     }
 
   /** The MoR delete's match core over one VIEW's files (main line or a
-    * branch): candidate narrowing BEFORE any data I/O — skip provably-
-    * fully-deleted files, stats-prune the predicate's top-level range
-    * conjuncts against the manifest's per-file intervals (the
-    * `DELETE WHERE day = X` shape opens only that day's files at any
-    * table size), then bloom-narrow equality probes — then ONE match
-    * scan of the candidates (live rows with their `_file`/`_pos`; the
-    * sidecar union keeps the already-deleted positions) and the
-    * distributed sidecar write. Returns (rel, new sidecar rel, merged count) per
-    * touched file; the caller commits (main: [[boundedCommit]]; branch:
-    * a branch-delta restate).
+    * branch): [[predicateMatch]], then the sidecar write
+    * ([[writeSidecarsOf]]). Returns (rel, new sidecar rel, merged count)
+    * per touched file; the caller commits (main: [[boundedCommit]] or
+    * [[purge]]; branch: a branch-delta restate).
     */
-  private def matchDeletes(
+  private[sources] def matchDeletes(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
-      predicate: Column): Seq[(String, String, Long)] = {
+      predicate: Column): Seq[(String, String, Long)] =
+    predicateMatch(spark, root, view, predicate).fold(Seq.empty[(String, String, Long)]) {
+      case (scan, matched, candidates) => writeSidecarsOf(spark, root, view, candidates, scan, matched)
+    }
+
+  /** The rows of `view` matching `predicate`, found with candidate
+    * narrowing BEFORE any data I/O: skip provably-fully-deleted files,
+    * stats-prune the predicate's top-level range conjuncts against the
+    * manifest's per-file intervals (the `DELETE WHERE day = X` shape opens
+    * only that day's files at any table size), then bloom-narrow equality
+    * probes. Returns the candidates' match scan (live rows with their
+    * `_file`/`_pos`), its rows where the predicate holds (a NULL
+    * predicate row is not matched) and the candidates; None when no file
+    * can match.
+    */
+  private[sources] def predicateMatch(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      predicate: Column): Option[(DataFrame, DataFrame, Seq[String])] = {
     val alive = view.rels.filterNot(r =>
       Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
-    if (alive.isEmpty) return Seq.empty
+    if (alive.isEmpty) return None
     val probeFrame = Snapshots.scanRels(spark, root, view, alive.take(1))
     val ranges = Sources.rangeProbes(probeFrame, predicate)
     val statsPruned =
@@ -143,14 +156,29 @@ object DeleteVectors {
         statsPruned.filter { rel =>
           active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
         }
-    if (candidates.isEmpty) return Seq.empty
+    if (candidates.isEmpty) return None
     val scan = matchScan(spark, root, view, candidates)
-    val matches = Snapshots.dvCoordinates(scan, scan.filter(coalesce(predicate, lit(false))))
+    Some((scan, scan.filter(coalesce(predicate, lit(false))), candidates))
+  }
+
+  /** The sidecar write of one match: `matched` (rows of `scan`, the match
+    * scan of `candidates`) become positions merged into each candidate's
+    * recorded vector under a fresh commit tag.
+    */
+  private[sources] def writeSidecarsOf(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      candidates: Seq[String],
+      scan: DataFrame,
+      matched: DataFrame): Seq[(String, String, Long)] = {
     val oldDvByRel: Map[String, String] = candidates.flatMap { rel =>
       Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map { case (p, _) => rel -> p }
     }.toMap
     val commitTag = java.util.UUID.randomUUID().toString.take(8)
-    writeSidecars(spark, root, matches, oldDvByRel, commitTag, rawRowBound(view, candidates))
+    writeSidecars(
+      spark, root, Snapshots.dvCoordinates(scan, matched), oldDvByRel, commitTag,
+      rawRowBound(view, candidates))
   }
 
   /** The match scan of `rels`: [[Snapshots.scanRels]] with each row's
@@ -284,10 +312,12 @@ object DeleteVectors {
   /** Stage one file's rewrite: its survivors (the scan of `rel` under
     * `view`, whose recorded vector the reader subtracts), landing beside
     * the original as the table's DATA columns (partition values stay in
-    * the dir path) — the [[Sources.compactInPlace]] discipline. Nothing
-    * is staged when nothing survives — a table whose manifest predates
-    * row counts can't detect full deletion up front, so the staged footer
-    * is the authority.
+    * the dir path) — the [[Sources.compactInPlace]] discipline, sized
+    * the same way: a file over `spark.graft.rewrite.targetBytes` on disk
+    * rewrites in parallel to ~target-sized files, a smaller one to one
+    * file. Nothing is staged when nothing survives — a table whose
+    * manifest predates row counts can't detect full deletion up front,
+    * so the staged footer is the authority.
     */
   private def stageRewrite(
       spark: SparkSession,
@@ -297,64 +327,23 @@ object DeleteVectors {
       rel: String): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(rootPath, rel)), s"rewrite: $rel is not live under $root")
+    val bytes = fs.getFileStatus(new Path(rootPath, rel)).getLen // a rel no longer live fails here
     val keep = Snapshots
       .scanRels(spark, root, view, Seq(rel))
       .drop(graft.sources.snap.SnapFilters.partValsOf(rel).map(_._1).toSeq: _*)
+    val n = Sources.rewriteFileCount(bytes, Sources.rewriteTargetBytes(spark))
     stage.into(DataFiles.dirOf(rel))(sub =>
-      keep.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sub.toString))
-  }
-
-  /** Re-home one DV sidecar after its data file MOVED to a new rel (the
-    * branch fast-forward): the sidecar's rows embed the data file's rel,
-    * so a moved file gets a fresh sidecar carrying the NEW rel with the
-    * same positions. One
-    * driver-side streaming copy (sidecars are small by construction); the
-    * orphaned old sidecar dies in vacuum. Returns the new sidecar rel.
-    */
-  private[sources] def rehomeSidecar(
-      spark: SparkSession,
-      root: String,
-      oldDvRel: String,
-      newDataRel: String): String = {
-    val rootPath = new Path(root)
-    // the SESSION conf, like every other engine-side parquet I/O path —
-    // sparkContext.hadoopConfiguration would silently drop session
-    // overrides (Bridge.sessionHadoopConf's documented contract)
-    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    val newDvRel =
-      s"${Snapshots.DvDirName}/$newDataRel.dv-ff-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-    val r = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-      new Path(rootPath, oldDvRel),
-      StructType(Seq(StructField("pos", LongType, nullable = false))),
-      hconf)
-    val w = org.apache.spark.sql.graft.Bridge.parquetRowWriter(
-      new Path(rootPath, newDvRel),
-      sidecarSchema,
-      hconf)
-    val relU = org.apache.spark.unsafe.types.UTF8String.fromString(newDataRel)
-    try {
-      var row = r.read()
-      while (row != null) {
-        w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](relU, row.getLong(0))))
-        row = r.read()
-      }
-    } finally {
-      try r.close()
-      finally w.close() // each closes even if the other throws
-    }
-    newDvRel
+      Sources.sizedLayout(keep, n).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sub.toString))
   }
 
   /** Union two deletion-vector sidecars of the SAME data file into one
     * fresh sidecar — the rebase resolution when both the branch line and
     * the live line vectored the file (both position domains address the
     * same immutable bytes, so the union is each line's deletes applied).
-    * Either side may be absent. Driver-side and bounded by the two
-    * vectors' sizes; no sort-order assumption on the inputs. Returns
-    * (new sidecar rel, distinct position count); the superseded sidecars
-    * die in vacuum.
+    * Either side may be absent. Driver-side, through the one sidecar
+    * write kernel ([[writeMergedSidecar]]; every sidecar holds ascending
+    * positions, the kernel writes them so). Returns (new sidecar rel,
+    * distinct position count); the superseded sidecars die in vacuum.
     */
   private[sources] def unionSidecars(
       spark: SparkSession,
@@ -362,37 +351,11 @@ object DeleteVectors {
       dataRel: String,
       aRel: Option[String],
       bRel: Option[String]): (String, Long) = {
-    val rootPath = new Path(root)
     val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    def positions(rel: String): Array[Long] = {
-      val r = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-        new Path(rootPath, rel),
-        StructType(Seq(StructField("pos", LongType, nullable = false))),
-        hconf)
-      val buf = scala.collection.mutable.ArrayBuilder.make[Long]
-      try {
-        var row = r.read()
-        while (row != null) {
-          buf += row.getLong(0)
-          row = r.read()
-        }
-      } finally r.close()
-      buf.result()
-    }
-    val merged = (aRel.map(positions).getOrElse(Array.empty[Long]) ++
-      bRel.map(positions).getOrElse(Array.empty[Long])).distinct.sorted
     val newDvRel =
       s"${Snapshots.DvDirName}/$dataRel.dv-rb-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-    val w = org.apache.spark.sql.graft.Bridge.parquetRowWriter(
-      new Path(rootPath, newDvRel),
-      sidecarSchema,
-      hconf)
-    val relU = org.apache.spark.unsafe.types.UTF8String.fromString(dataRel)
-    try merged.foreach { pos =>
-      w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](relU, pos)))
-    } finally w.close()
-    (newDvRel, merged.length.toLong)
+    val fresh = bRel.fold(Iterator.empty[Long])(positionsOf(hconf, root, _))
+    (newDvRel, writeMergedSidecar(hconf, root, dataRel, newDvRel, aRel, fresh))
   }
 
   /** Matched-row ceiling under which a keyed delete/upsert writes its
@@ -425,7 +388,31 @@ object DeleteVectors {
           .map(cs => s + cs.min.toLong))
     }
 
-  /** The single per-rel sidecar write kernel BOTH sidecar paths run — the
+  /** The positions of the sidecar `rel`, streamed in its (ascending)
+    * order; the reader closes at the end.
+    */
+  private def positionsOf(
+      hconf: org.apache.hadoop.conf.Configuration,
+      rootStr: String,
+      rel: String): Iterator[Long] = {
+    val r = org.apache.spark.sql.graft.Bridge.parquetRowReader(
+      new Path(new Path(rootStr), rel),
+      StructType(Seq(StructField("pos", LongType, nullable = false))),
+      hconf)
+    new Iterator[Long] {
+      private var cur = r.read()
+      if (cur == null) r.close()
+      override def hasNext: Boolean = cur != null
+      override def next(): Long = {
+        val v = cur.getLong(0)
+        cur = r.read()
+        if (cur == null) r.close()
+        v
+      }
+    }
+  }
+
+  /** The single per-rel sidecar write kernel every sidecar path runs — the
     * distributed tasks and the driver fast path produce byte-identical
     * files by construction: a streaming sorted-merge of the old sidecar's
     * positions and the fresh matches (both ascending, duplicates collapse)
@@ -438,24 +425,7 @@ object DeleteVectors {
       dvRel: String,
       oldRel: Option[String],
       fresh: Iterator[Long]): Long = {
-    val old: Iterator[Long] = oldRel match {
-      case None => Iterator.empty
-      case Some(o) =>
-        val r = org.apache.spark.sql.graft.Bridge.parquetRowReader(
-          new Path(new Path(rootStr), o),
-          StructType(Seq(StructField("pos", LongType, nullable = false))),
-          hconf)
-        new Iterator[Long] {
-          private var cur = r.read()
-          override def hasNext: Boolean = cur != null
-          override def next(): Long = {
-            val v = cur.getLong(0)
-            cur = r.read()
-            if (cur == null) r.close()
-            v
-          }
-        }
-    }
+    val old = oldRel.fold(Iterator.empty[Long])(positionsOf(hconf, rootStr, _))
     val w = org.apache.spark.sql.graft.Bridge.parquetRowWriter(
       new Path(new Path(rootStr), dvRel),
       sidecarSchema,
@@ -487,8 +457,7 @@ object DeleteVectors {
     * per rel it owns (positions sorted-distinct, previous sidecar's
     * positions merge-deduped in — a streaming merge of two sorted runs,
     * O(1) memory). Returns (rel, sidecar rel, total positions) per rel —
-    * O(touched files) driver metadata, the same footprint as the COW
-    * delete's affected-file list. Task-attempt-unique sidecar names keep
+    * O(touched files) driver metadata. Task-attempt-unique sidecar names keep
     * retries safe: only the winning attempt's names are committed,
     * orphans die in vacuum.
     *
@@ -577,8 +546,8 @@ object DeleteVectors {
     * partition-path values (mis-renderable values fall conservatively out
     * of scope); it cannot reference data columns — position-level scoping
     * below a partition is what the vectors themselves already are.
-    * Unscoped (`where = None`) folds everything; after that, raw-reading
-    * maintenance ops accept the whole table again.
+    * Unscoped (`where = None`) folds everything: afterwards no live file
+    * holds a deleted row.
     */
   def materialize(
       spark: SparkSession,
@@ -596,18 +565,92 @@ object DeleteVectors {
           all.filter { case (rel, _) => kept(rel) }
       }
       if (dvd.isEmpty) return (0L, 0L)
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      DataFiles.rewrite(spark, fs, rootPath, dvd.keys.toSeq) { stage =>
-        graft.core.Par.each(dvd.keys.toSeq) { rel =>
-          // every recorded row deleted: nothing survives — archive only
-          if (Snapshots.fullyDeleted(view.stats.getOrElse(rel, Map.empty[String, ColStat])))
-            require(fs.exists(new Path(rootPath, rel)), s"materialize: $rel is not live under $root")
-          else stageRewrite(spark, root, stage, view, rel)
-        }
-      }(_ => Snapshots.commit(spark, root)) // rewritten files get fresh stats; pointers die with the rels
+      fold(spark, root, view, dvd.keys.toSeq)
       (dvd.size.toLong, dvd.values.map(_._2).sum)
     }
+
+  /** Fold `rels`' vectors under `view` into the data files in ONE landing
+    * and ONE listing commit — the shared body of [[materialize]] (the
+    * committed pointers) and [[purge]] (fresh sidecars overlaid on the
+    * view): each file rewrites without its deleted positions
+    * ([[stageRewrite]]) or, when every recorded row is deleted, just
+    * archives; `added` (staged files and their live rels) lands in the
+    * same swap. The closing commit gives rewritten files fresh stats, and
+    * the folded pointers die with their rels.
+    */
+  private def fold(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      rels: Seq[String],
+      added: Seq[(Path, String)] = Seq.empty): Unit = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DataFiles.rewrite(spark, fs, rootPath, rels, added) { stage =>
+      graft.core.Par.each(rels) { rel =>
+        if (Snapshots.fullyDeleted(view.stats.getOrElse(rel, Map.empty[String, ColStat])))
+          require(fs.exists(new Path(rootPath, rel)), s"fold: $rel is not live under $root")
+        else stageRewrite(spark, root, stage, view, rel)
+      }
+    }(_ => Snapshots.commit(spark, root))
+  }
+
+  /** The purge that closes [[Sources.deleteWhere]], [[Sources.updateWhere]]
+    * and [[Sources.mergeIntoPartitioned]] (Delta's `REORG … APPLY (PURGE)`
+    * scoped to one op): the match's fresh sidecars (`written`) overlay
+    * `view` in memory, as [[boundedCommit]]'s threshold rewrite does, and
+    * ONE [[fold]] rewrites every touched file without its deleted
+    * positions, lands `appended` (written into `partCols` dirs) and
+    * commits. No manifest points at the fresh sidecars (vacuum reaps
+    * them): no live file holds a deleted row, no touched file keeps a
+    * vector, untouched files keep theirs — one version, in the table's
+    * own manifest format. A table with no manifest first commits its
+    * pre-state; an op that matches and appends nothing commits nothing.
+    * Returns (files touched, rows deleted).
+    */
+  private[sources] def purge(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      written: Seq[(String, String, Long)],
+      appended: Option[DataFrame] = None,
+      partCols: Seq[String] = Seq.empty): (Long, Long) = {
+    val (changed, newlyDeleted) = pointerUpdatesOf(view, written)
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = DataFiles.stageDir(rootPath)
+    try {
+      val added = appended.fold(Seq.empty[(Path, String)])(df =>
+        stageAppend(spark, fs, rootPath, stage, df, partCols, "mor-adhoc-", view.rels.toSet))
+      if (changed.isEmpty && added.isEmpty) return (0L, 0L)
+      if (view.rels.nonEmpty) Snapshots.ensureBaseline(spark, root)
+      fold(spark, root, view.copy(stats = view.stats ++ changed), changed.keys.toSeq, added)
+    } finally fs.delete(stage, true)
+    (changed.size.toLong, newlyDeleted)
+  }
+
+  /** The file set a purge matches over: the latest committed view plus
+    * every live file no commit lists yet (the closing listing commit
+    * adopts those, so the match must see them), or the live listing alone
+    * as an unversioned view when the table has no manifest (or does not
+    * exist). A non-empty view with no recorded schema carries the one
+    * inferred from its files, so the op's scans share one inference.
+    */
+  private[sources] def liveView(spark: SparkSession, root: String): Snapshots.ManifestView = {
+    val rootPath = new Path(root)
+    val listed =
+      if (rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(rootPath))
+        Snapshots.listDataFiles(spark, root)
+      else Seq.empty
+    val committed =
+      if (Snapshots.latestVersion(spark, root) > 0L) Snapshots.manifestView(spark, root)
+      else Snapshots.ManifestView(0L, Seq.empty, Map.empty, None, Seq.empty)
+    val rels = committed.rels ++ listed.filterNot(committed.rels.toSet)
+    committed.copy(
+      rels = rels,
+      schema = committed.schema.orElse(Option.when(rels.nonEmpty)(
+        Snapshots.inferredSchema(spark, root, rels, new Path(rootPath, _).toString))))
+  }
 
   /** Merge-on-read UPSERT — the streaming-CDC-apply primitive: every
     * source row lands in APPENDED files, and table rows matching a source
@@ -704,18 +747,14 @@ object DeleteVectors {
         version > 0L,
         s"merge-on-read upsert on $root needs a committed manifest — Snapshots.commit / createTable first")
       val view = Snapshots.manifestView(spark, root, version)
+      val schema = view.schema.getOrElse(
+        sys.error(s"merge-on-read upsert on $root needs a v2 manifest (recorded schema)"))
       val (keyFields, sourceKeys, partCols, alive) =
-        upsertInputs(view, root, keySource, appendSource, keyCols)
-      // aligned to the recorded schema: order and types (a malformed value
-      // fails loudly here, never lands half-cast)
-      val schema = view.schema.get // upsertInputs verified it
-      val aligned = appendSource.select(
-        schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-      val commitTag = java.util.UUID.randomUUID().toString.take(8)
+        upsertInputs(view, schema, keySource, appendSource, keyCols)
+      val aligned = alignedTo(schema, appendSource)
       val written =
         matchKeyUpserts(
-          spark, root, view, alive, sourceKeys, keyCols, keyFields, partCols, commitTag,
-          nullSafe = nullSafeKeys)
+          spark, root, view, alive, sourceKeys, keyCols, keyFields, partCols, nullSafe = nullSafeKeys)
       // the ad-hoc prefix is CONSTANT on purpose: the crashed-attempt
       // sweep in [[stageAppend]] keys on the prefix, and a per-attempt
       // random tag could never match a PRIOR attempt's leftovers — a hard
@@ -762,7 +801,7 @@ object DeleteVectors {
     * of broadcasting it. The set rides every task's closure, hence the
     * ceiling; a larger batch takes the broadcast or shuffle semi-join.
     */
-  private def matchKeyUpserts(
+  private[sources] def matchKeyUpserts(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
@@ -771,7 +810,6 @@ object DeleteVectors {
       keyCols: Seq[String],
       keyFields: Seq[StructField],
       partCols: Seq[String],
-      commitTag: String,
       nullSafe: Boolean = false): Seq[(String, String, Long)] = {
     val local = graft.core.LocalFrames
       .rowsOf(sourceKeys)
@@ -811,12 +849,7 @@ object DeleteVectors {
                   scan.join(keys, keyCols.map(c => scan(c) <=> keys(c)).reduce(_ && _), "left_semi")
                 else scan.join(keys, keyCols, "left_semi")
             }
-            val matches = Snapshots.dvCoordinates(scan, matched)
-            val oldDvByRel = candidates.flatMap { rel =>
-              Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map { case (p, _) => rel -> p }
-            }.toMap
-            writeSidecars(
-              spark, root, matches, oldDvByRel, commitTag, rawRowBound(view, candidates))
+            writeSidecarsOf(spark, root, view, candidates, scan, matched)
           }
         (candidates, written)
       } finally if (local.isEmpty) keys0.unpersist()
@@ -832,7 +865,7 @@ object DeleteVectors {
     * single branch delta commits both. The live line never changes until
     * [[Snapshots.fastForward]] adopts the branch — whose machinery
     * already carries BOTH sides (fork-file pointers restate; appended
-    * files move with their sidecars, vectors rehomed). With
+    * files move with their sidecar pointers). With
     * [[deleteOnBranch]] this completes branch DML: replay a day's CDC
     * onto a ten-byte fork, validate the branch read, adopt or drop.
     * Ad-hoc only (no epoch markers — streaming sinks target the live
@@ -909,11 +942,12 @@ object DeleteVectors {
       val marker = epochMarker(Snapshots.branchDir(rootPath, name), streamTag)
       if (streamTag.nonEmpty && epochId >= 0L && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
       val bv = Snapshots.branchView(spark, root, name)
+      val schema = bv.schema.getOrElse(
+        sys.error(s"merge-on-read upsert on $root needs a v2 manifest (recorded schema)"))
       val (keyFields, sourceKeys, partCols, alive) =
-        upsertInputs(bv, root, keySource, appendSource, keyCols)
-      val commitTag = java.util.UUID.randomUUID().toString.take(8)
+        upsertInputs(bv, schema, keySource, appendSource, keyCols)
       val written =
-        matchKeyUpserts(spark, root, bv, alive, sourceKeys, keyCols, keyFields, partCols, commitTag)
+        matchKeyUpserts(spark, root, bv, alive, sourceKeys, keyCols, keyFields, partCols)
       val (changed, newlyDeleted) = pointerUpdatesOf(bv, written)
       // landOnBranch aligns the source to the recorded schema itself
       val added = Snapshots.landOnBranch(spark, root, name, bv, appendSource)
@@ -943,20 +977,19 @@ object DeleteVectors {
     new Path(dir, s".mor-epoch-${java.net.URLEncoder.encode(tag, "UTF-8")}")
 
   /** Shared validation + alignment prologue of the upsert faces
-    * ([[applyInternal]] and [[upsertOnBranch]]): key columns must exist
-    * on both sides, sources carry FULL replacement rows, keys cast to
-    * the TABLE's key types so the match join compares in one domain.
-    * Returns (keyFields, sourceKeys, partCols, alive).
+    * ([[applyInternal]], [[upsertOnBranch]] and [[Sources.mergeIntoPartitioned]]):
+    * key columns must exist on both sides of `schema` (the table's), sources
+    * carry FULL replacement rows, keys cast to the TABLE's key types so
+    * the match join compares in one domain. Returns (keyFields,
+    * sourceKeys, partCols, alive).
     */
-  private def upsertInputs(
+  private[sources] def upsertInputs(
       view: Snapshots.ManifestView,
-      root: String,
+      schema: StructType,
       keySource: DataFrame,
       appendSource: DataFrame,
       keyCols: Seq[String]): (Seq[StructField], DataFrame, Seq[String], Seq[String]) = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val schema = view.schema.getOrElse(
-      sys.error(s"merge-on-read upsert on $root needs a v2 manifest (recorded schema)"))
     keyCols.foreach(k =>
       require(
         schema.fieldNames.contains(k) && keySource.columns.contains(k),
@@ -974,6 +1007,12 @@ object DeleteVectors {
       Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
     (keyFields, sourceKeys, partCols, alive)
   }
+
+  /** `df` aligned to the table `schema`: its order and types (a malformed
+    * value fails loudly here, never lands half-cast).
+    */
+  private[sources] def alignedTo(schema: StructType, df: DataFrame): DataFrame =
+    df.select(schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Candidate files the most recent upsert/CDC-apply on this thread
     * match-scanned — observability for the narrowing laws (a spec must be
@@ -1329,7 +1368,7 @@ object DeleteVectors {
     * reused (the archive invariant). The caller lands and commits them in
     * one [[DataFiles.swap]].
     */
-  private def stageAppend(
+  private[sources] def stageAppend(
       spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       rootPath: Path,

@@ -8,16 +8,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructField
 
 /** Manifest-pinned snapshot reads for maintained parquet tables — the
-  * minimal table-format commit layer over [[Sources.deleteWhere]] /
-  * [[Sources.mergeIntoPartitioned]] / [[Sources.compactParquet]].
+  * table-format commit layer under the row-level DML ([[DeleteVectors]],
+  * [[Sources.deleteWhere]] / [[Sources.mergeIntoPartitioned]]) and the
+  * maintenance ops ([[Sources.compactInPlace]], [[Sources.compactParquet]]).
   *
-  * Problem: those maintenance ops are crash-safe per file/partition, but a
-  * concurrent reader listing the directory mid-operation can see a
-  * half-swapped file set, and yesterday's version is unrecoverable the
-  * moment the swap lands. The lakehouse answer (Iceberg/Delta) is to make
-  * the FILE LIST the unit of commit: a reader pins a manifest — an
-  * explicit list of data files — and reads exactly those files, immune to
-  * concurrent directory churn; maintenance never deletes a replaced file,
+  * Problem: a concurrent reader listing the directory while an op
+  * replaces files can see a half-swapped file set, and yesterday's
+  * version is unrecoverable the moment the swap lands. The lakehouse
+  * answer (Iceberg/Delta) is to make the FILE LIST the unit of commit: a
+  * reader pins a manifest — an explicit list of data files — and reads
+  * exactly those files, immune to concurrent directory churn;
+  * maintenance never deletes a replaced file,
   * it ARCHIVES it (rename into a dot-prefixed sibling tree, invisible to
   * directory listers), so every pinned manifest stays fully readable until
   * an explicit [[vacuum]].
@@ -66,9 +67,10 @@ import org.apache.spark.sql.types.StructField
   *      (`publish`).
   *
   * Relative paths are never reused: Spark part-file names carry a per-job
-  * UUID, and [[Sources.deleteWhere]] gives rewritten files a fresh name —
-  * so `<relpath>` is a stable identity and the flat archive cannot
-  * collide ([[archiveFile]] still checks and fails loudly).
+  * UUID, and every in-place rewrite ([[DataFiles.rewrite]]) lands under
+  * its own job's fresh names — so `<relpath>` is a stable identity and
+  * the flat archive cannot collide ([[archiveFile]] still checks and
+  * fails loudly).
   *
   * Data files land through ONE module, [[DataFiles]]. Every write stages
   * its parquet parts under a hidden `.stage-<id>` dir (beside the files
@@ -770,30 +772,6 @@ object Snapshots {
     */
   private[sources] def fullyDeleted(st: Map[String, ColStat]): Boolean =
     logicalRowsOf(st).contains(0L) && hasDv(st)
-
-  /** Loud guard for copy-on-write DML: refuse only when a deletion-
-    * vectored file is in the OP'S OWN file set (the files a copy-on-write
-    * DML will actually rewrite). One day's MoR delete must not suspend
-    * maintenance of every other partition — a COW delete/update/merge
-    * whose candidates never touch a DV'd file is exactly as safe as on a
-    * clean table (untouched files' pointers carry through the closing
-    * commit). `rels` are manifest-relative paths.
-    */
-  private[sources] def requireNoDvIn(
-      spark: SparkSession,
-      root: String,
-      op: String,
-      rels: Iterable[String]): Unit =
-    if (latestVersion(spark, root) > 0L) {
-      val stats = manifestView(spark, root).stats
-      val dvd = rels.filter(r => stats.get(r).exists(hasDv)).toSeq.sorted
-      if (dvd.nonEmpty)
-        sys.error(
-          s"$op on $root would rewrite ${dvd.size} file(s) carrying deletion vectors " +
-            s"(e.g. ${dvd.head}) from their raw bytes — that would resurrect deleted rows. " +
-            "Narrow the operation away from the DV'd files, or fold their vectors first: " +
-            "DeleteVectors.materialize (SQL: CALL cat.dv_materialize(table => …, where => …)).")
-    }
 
   /** Footer opens performed by the CALLING thread's last stats commit —
     * observability for the incremental-commit contract (SnapshotsSpec
@@ -4010,25 +3988,6 @@ object Snapshots {
     finally dvCarryOverride.remove()
   }
 
-  /** Archive every (non-hidden) file under `dir`, mapping it to the
-    * archive path it would have had under `relBase` (the directory's
-    * original root-relative location), then remove `dir`. Used by merge,
-    * whose old partition dir has already been renamed aside.
-    */
-  def archiveDirContents(fs: FileSystem, root: Path, dir: Path, relBase: String): Unit = {
-    def walk(d: Path, rel: String): Unit =
-      fs.listStatus(d).foreach { st =>
-        val name = st.getPath.getName
-        val childRel = if (rel.isEmpty) name else s"$rel/$name"
-        if (st.isDirectory) walk(st.getPath, childRel)
-        else if (!isHidden(name)) DataFiles.archiveAs(fs, root, st.getPath, childRel)
-      }
-    if (fs.exists(dir)) {
-      walk(dir, relBase)
-      fs.delete(dir, true) // only hidden markers remain
-    }
-  }
-
   // ---- zero-copy branch/tag refs ----------------------------------------
 
   /** Refs: NAMED manifest pointers (`_graft_manifests/refs/<name>`, one
@@ -4596,27 +4555,11 @@ object Snapshots {
             rel -> target
           }
           // a MOVED file carrying a vector (a branch delete hit a branch
-          // append): the DV sidecar embeds the data file's rel, which just
-          // changed — REHOME the sidecar (rewrite its rel column) so it
-          // names the file it belongs to; the orphaned old sidecar dies
-          // in vacuum. Pooled like every per-file driver I/O —
-          // adoption latency is O(max sidecar), not O(sum)
-          val dvMoved = targets.flatMap { case (rel, target) =>
-            dvOf(bv.stats.getOrElse(rel, Map.empty)).map { case (dvRel, cnt) =>
-              (rel, target, dvRel, cnt)
-            }
-          }
-          val rehomed =
-            new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-          graft.core.Par.each(dvMoved) { case (_, target, dvRel, cnt) =>
-            val newDvRel = DeleteVectors.rehomeSidecar(spark, root, dvRel, target)
-            rehomed.put(
-              target,
-              Map(
-                DvPathKey -> ColStat("s", newDvRel, newDvRel),
-                DvCountKey -> ColStat("l", cnt.toString, cnt.toString)))
-          }
-          val addedDv: Map[String, Map[String, ColStat]] = rehomed.asScala.toMap
+          // append) keeps its sidecar pointer: readers take only `pos`
+          // from a sidecar, and vacuum keeps every referenced one
+          val addedDv: Map[String, Map[String, ColStat]] = targets.flatMap { case (rel, target) =>
+            Some(dvEntries(bv.stats.getOrElse(rel, Map.empty))).filter(_.nonEmpty).map(target -> _)
+          }.toMap
           // checksPreEnforced: the adoption gate above already scanned
           // exactly these rows (same bytes, pre-move paths) under the
           // SAME table lock — the commit must not pay the scan twice

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Batch sources & sinks. The reference's entire I/O surface is whole-file
@@ -165,7 +165,9 @@ object Sources {
   }
 
   /** Target on-disk bytes per output file for the IN-PLACE rewrite paths
-    * ([[compactInPlace]], [[deleteWhere]], [[updateWhere]]) —
+    * ([[compactInPlace]], and the vector folds behind [[deleteWhere]],
+    * [[updateWhere]], [[mergeIntoPartitioned]], `DeleteVectors.materialize`
+    * and the threshold rewrite) —
     * `spark.graft.rewrite.targetBytes`, default 128 MiB (the
     * [[compactParquet]] default). A 100 TB table's hot partition can hold
     * hundreds of GB: rewriting it as ONE task producing ONE file destroys
@@ -201,7 +203,7 @@ object Sources {
     * single-monster-file failure this sizing exists to prevent. The
     * shuffle is confined to the oversized scope, never the table.
     */
-  private def sizedLayout(df: DataFrame, n: Int): DataFrame =
+  private[sources] def sizedLayout(df: DataFrame, n: Int): DataFrame =
     if (n <= 1) df.coalesce(1) else df.repartition(n)
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
@@ -285,50 +287,6 @@ object Sources {
   def writeJson(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
 
-  /** Targeted row deletion (the GDPR/right-to-erasure operator) over a
-    * flat parquet layout, rewriting ONLY the files that contain matching
-    * rows — the copy-on-write delete a table format does, built on two
-    * engine primitives:
-    *   1. find affected files with an `input_file_name()` scan under the
-    *      delete predicate — parquet row-group statistics prune the scan,
-    *      so a well-clustered layout ([[compactParquet]] with sortCols /
-    *      [[writeZOrdered]]) touches footers, not data, for most files;
-    *   2. rewrite each affected file without its matching rows (temp file
-    *      + rename), delete it outright if nothing survives.
-    * Untouched files are never read past their footer and never
-    * rewritten — deleting one user from a 100 TB table costs a handful
-    * of file rewrites, not a table rewrite. Returns
-    * (affectedFiles, rowsDeleted).
-    *
-    * Concurrency note: the swap is per-file atomic but the multi-file
-    * delete is not transactional — a DIRECTORY-listing reader can see some
-    * files rewritten before others. Readers that need a consistent view
-    * pin a manifest ([[Snapshots.readSnapshot]]): replaced files are
-    * archived, never destroyed, so every committed manifest stays
-    * readable until [[Snapshots.vacuum]]. A baseline manifest is
-    * committed before the first mutation and a new one after the delete.
-    */
-  /** Top-level equality conjuncts of a predicate, rendered in the
-    * stats-string domain the manifest blooms were built with
-    * (`CAST(col AS STRING)`): `user_id = 7 AND day <= d` yields
-    * `("user_id", "7")`. Only shapes whose rendering is exact are
-    * returned — anything else simply doesn't narrow.
-    */
-  /** The table's manifest-declared schema, when one is recorded — the
-    * maintenance ops enforce it on every MULTI-file read, so a table whose
-    * schema evolved (ALTER-added columns only some files carry, widened
-    * types, dropped tombstones) scans consistently no matter which file's
-    * footer Spark's inference would have picked. Single-file DELETE
-    * rewrites stay footer-faithful on purpose (a keep-filter must preserve
-    * exactly what the file holds); UPDATE rewrites enforce the declared
-    * schema instead, so `SET added_col = …` can backfill a column the old
-    * file predates — the post-ALTER workflow.
-    */
-  private def declaredSchemaOf(
-      spark: SparkSession,
-      root: String): Option[org.apache.spark.sql.types.StructType] =
-    if (Snapshots.latestVersion(spark, root) > 0L) Snapshots.schemaOf(spark, root) else None
-
   /** The resolved top-level conjuncts of `predicate` against `df`'s real
     * schema: the caller's Column is a lazy unresolved node tree; planning
     * `df.filter(predicate)` (no execution) yields resolved catalyst
@@ -374,6 +332,12 @@ object Sources {
     }
   }
 
+  /** Top-level equality conjuncts of a predicate, rendered in the
+    * stats-string domain the manifest blooms were built with
+    * (`CAST(col AS STRING)`): `user_id = 7 AND day <= d` yields
+    * `("user_id", "7")`. Only shapes whose rendering is exact are
+    * returned — anything else simply doesn't narrow.
+    */
   private[sources] def equalityProbes(df: DataFrame, predicate: Column): Seq[(String, String)] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
     resolvedConjuncts(df, predicate).flatMap {
@@ -427,174 +391,44 @@ object Sources {
     }
   }
 
-  /** Root-relative rel of a file URI as reported by `input_file_name()`
-    * (URI-encoded): `java.net.URI.getPath` decodes the escapes back to the
-    * on-disk path the manifest records. Shared by the scoped DV guards of
-    * the copy-on-write DML ops.
+  /** Targeted row deletion (the GDPR/right-to-erasure operator): the
+    * merge-on-read delete's match ([[DeleteVectors.matchDeletes]]:
+    * manifest range and bloom narrowing, one snapshot scan of the
+    * candidates) closed by one purge commit ([[DeleteVectors.purge]]), so
+    * no live file keeps a deleted row. Only files holding a match are
+    * rewritten (archived outright when nothing survives), vectors they
+    * already carried fold in, untouched files keep their bytes and
+    * vectors: deleting one user from a 100 TB table costs a handful of
+    * file rewrites. NULL-predicate rows are kept (three-valued logic).
+    * Returns (affectedFiles, rowsDeleted).
     */
-  private def relOfFileUri(
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: org.apache.hadoop.fs.Path,
-      uri: String): String = {
-    val rootUriPath = fs.makeQualified(rootPath).toUri.getPath
-    new java.net.URI(uri).getPath.stripPrefix(rootUriPath).stripPrefix("/")
-  }
-
-  def deleteWhere(spark: SparkSession, root: String, predicate: Column): (Long, Long) = {
+  def deleteWhere(spark: SparkSession, root: String, predicate: Column): (Long, Long) =
     Snapshots.withTableLock(spark, root) {
-    val liveFiles = Snapshots.listDataFiles(spark, root)
-    if (liveFiles.isEmpty) return (0L, 0L) // already empty
-    import org.apache.spark.sql.functions.input_file_name
-    // manifest-narrowed candidate scan: the predicate's top-level range
-    // conjuncts prune files by recorded per-file intervals (zero I/O — a
-    // day-bounded delete opens only that day's files), and equality
-    // probes on bloom-indexed columns prune further (a point erasure —
-    // `user_id = k`, the GDPR shape — against an unclustered 100 TB
-    // table reads one or two files). Files newer than the manifest have
-    // no stats and cannot be excluded.
-    val declared = declaredSchemaOf(spark, root)
-    def rootRead = {
-      val rd = spark.read
-      declared.foreach(rd.schema)
-      rd.parquet(root)
+      val view = DeleteVectors.liveView(spark, root)
+      DeleteVectors.purge(spark, root, view, DeleteVectors.matchDeletes(spark, root, view, predicate))
     }
-    val candidates: Seq[String] = {
-      val view =
-        if (Snapshots.latestVersion(spark, root) > 0L) Snapshots.manifestView(spark, root)
-        else Snapshots.ManifestView(0L, Seq.empty, Map.empty, None, Seq.empty)
-      val ranges = rangeProbes(rootRead, predicate)
-      val probes = equalityProbes(rootRead, predicate)
-      val active = probes.filter { case (c, _) => view.bloomCols.contains(c) }
-      if (ranges.isEmpty && active.isEmpty) liveFiles
-      else {
-        val inManifest = view.rels.toSet
-        liveFiles.filter { rel =>
-          !inManifest.contains(rel) || { // post-manifest file: cannot exclude
-            // manifest range pruning first (zero I/O), blooms second
-            // (one sidecar read per surviving equality-probed file)
-            Snapshots.fileMatchesRanges(view.stats.getOrElse(rel, Map.empty), ranges) &&
-            active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
-          }
-        }
-      }
-    }
-    if (candidates.isEmpty) return (0L, 0L)
-    val rootPathForScan = new org.apache.hadoop.fs.Path(root)
-    val fsForScan = rootPathForScan.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val scanBase = fsForScan.makeQualified(rootPathForScan).toString
-    val scan =
-      if (candidates.size == liveFiles.size) rootRead
-      else {
-        val rd = spark.read.option("basePath", scanBase)
-        declared.foreach(rd.schema)
-        rd.parquet(candidates.map(rel => s"$scanBase/$rel"): _*)
-      }
-    val affected = scan
-      .filter(predicate)
-      .select(input_file_name().as("f"))
-      .groupBy(col("f"))
-      .count()
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val hadoopPath = new org.apache.hadoop.fs.Path(root)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // SCOPED merge-on-read guard: only the files this delete will actually
-    // rewrite matter — a DV'd file elsewhere in the table is never read
-    // past the match scan and its pointer carries through the closing
-    // commit untouched. (The match scan reads raw bytes, so a DV'd file
-    // whose only matches are already-deleted rows still refuses — loud
-    // and conservative, never silent resurrection.)
-    Snapshots.requireNoDvIn(
-      spark,
-      root,
-      "copy-on-write deleteWhere",
-      affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) })
-    if (affected.nonEmpty) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
-    val targetBytes = rewriteTargetBytes(spark)
-    def rewriteOne(stage: DataFiles.Rewrites, uri: String, matching: Long): Unit = {
-      val filePath = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
-      // whole-file delete detected from the FOOTER row count (driver-side
-      // metadata, no Spark job) — the file dies iff every row matched
-      val footerRows = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(filePath, spark.sparkContext.hadoopConfiguration))
-        try r.getRecordCount
-        finally r.close()
-      }
-      if (footerRows != matching) {
-        // three-valued logic: a NULL predicate row must be KEPT (the delete
-        // didn't match it) — bare !predicate is NULL there and filter drops
-        // it, silently deleting rows a GDPR-style delete never targeted.
-        // basePath read: the predicate may reference HIVE PARTITION columns
-        // (a day-bounded GDPR delete), which live in the file's dir path,
-        // not its bytes — read with the table root as basePath so they
-        // resolve with their inferred types, then drop them before the
-        // rewrite lands (hive data files never embed their partition cols)
-        val qualifiedRoot = fs.makeQualified(hadoopPath).toString
-        val partCols = filePath.toUri.getPath
-          .stripPrefix(new org.apache.hadoop.fs.Path(qualifiedRoot).toUri.getPath)
-          .split("/")
-          .filter(_.contains("="))
-          .map(_.split("=", 2)(0))
-          .toSeq
-          .distinct
-        val keep = spark.read
-          .option("basePath", qualifiedRoot)
-          .parquet(uri)
-          .filter(!coalesce(predicate, lit(false)))
-          .drop(partCols: _*)
-        // size the rewrite from the SOURCE file's on-disk bytes (the
-        // survivors are a subset, so this can only over-provision): an
-        // oversized input rewrites in parallel to ~targetBytes files
-        // instead of one unbounded single-task file. coalesce never
-        // shuffles — it merges (or keeps) the scan's own splits. The
-        // rewrite lands under the PART JOB'S OWN generated names: rel
-        // paths are never reused, so a pinned manifest entry denotes
-        // exactly one immutable file forever
-        val n = rewriteFileCount(fs.getFileStatus(filePath).getLen, targetBytes)
-        val staged = stage.into(DataFiles.dirOf(relOfFileUri(fs, hadoopPath, uri)))(sub =>
-          sizedLayout(keep, n).write.mode(SaveMode.Overwrite).parquet(sub.toString))
-        if (staged == 0) throw new IllegalStateException(s"rewrite of $uri produced no part file")
-      }
-    }
-    // every survivor rewrite stages first (no live-tree mutation), then
-    // ONE swap archives the affected files, lands the rewrites and
-    // commits, so a failure anywhere leaves the table as it was. The
-    // per-file rewrites are independent single-file jobs: submit them
-    // CONCURRENTLY so the wall clock is the slowest file, not the sum —
-    // driver-blocking job latency dominates small rewrites (measured:
-    // q184's 30 per-day rewrites serialized to seconds). Spark job
-    // submission is thread-safe; each touched path is distinct.
-    if (affected.nonEmpty)
-      DataFiles.rewrite(spark, fs, hadoopPath, affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) }) {
-        stage => graft.core.Par.each(affected.toSeq) { case (u, m) => rewriteOne(stage, u, m) }
-      }(_ => Snapshots.commit(spark, root))
-    (affected.length.toLong, affected.map(_._2).sum)
-  }
-  }
 
-  /** Copy-on-write UPDATE … SET — the third row-level DML next to
-    * [[deleteWhere]] (erasure) and [[mergeIntoPartitioned]] (upsert):
-    * apply `sets` (column → new-value expression) to every row matching
-    * `predicate`, rewriting ONLY the files that contain matched rows.
-    * SQL UPDATE semantics are kept exactly:
+  /** UPDATE … SET — the third row-level DML next to [[deleteWhere]]
+    * (erasure) and [[mergeIntoPartitioned]] (upsert): apply `sets`
+    * (column → new-value expression) to every row matching `predicate`.
+    * The matched rows' positions are deleted and their updated images
+    * appended, in one purge commit ([[DeleteVectors.purge]]). SQL UPDATE
+    * semantics are kept exactly:
     *  - every SET right-hand side AND the predicate evaluate against the
-    *    OLD row — all new values come from ONE projection over the source
-    *    frame, so `SET n = n * 2, u = u + n` uses the pre-update `n` in
-    *    both places (a fold of sequential `withColumn`s would leak the
-    *    updated value into later expressions);
+    *    OLD row — all new values come from ONE projection over the
+    *    matched rows, so `SET n = n * 2, u = u + n` uses the pre-update
+    *    `n` in both places (a fold of sequential `withColumn`s would leak
+    *    the updated value into later expressions);
     *  - a NULL predicate row is NOT matched (kept unchanged), the same
     *    three-valued rule [[deleteWhere]] applies;
+    *  - new values cast to the column's table type;
     *  - hive PARTITION columns are refused as SET targets — updating one
     *    moves rows across directories, which is a MERGE
-    *    ([[mergeIntoPartitioned]]), not an in-place file rewrite. They may
-    *    still appear in the predicate (day-bounded updates prune to the
-    *    matching partitions' files).
-    * Untouched files are never read past their footer; replaced files are
-    * archived so every pinned manifest keeps resolving; the closing commit
-    * inherits the table's stats discipline. At 100 TB: correcting one
-    * mislabeled day costs that day's file rewrites, not a table pass.
-    * Returns (affectedFiles, rowsUpdated).
+    *    ([[mergeIntoPartitioned]]). They may still appear in the
+    *    predicate (day-bounded updates prune to the matching partitions'
+    *    files).
+    * At 100 TB: correcting one mislabeled day costs that day's file
+    * rewrites, not a table pass. Returns (affectedFiles, rowsUpdated).
     */
   def updateWhere(
       spark: SparkSession,
@@ -603,202 +437,87 @@ object Sources {
       sets: Map[String, Column]): (Long, Long) = {
     require(sets.nonEmpty, "updateWhere needs at least one SET column")
     Snapshots.withTableLock(spark, root) {
-    if (Snapshots.listDataFiles(spark, root).isEmpty) return (0L, 0L) // empty table
-    import org.apache.spark.sql.functions.input_file_name
-    val hadoopPath = new org.apache.hadoop.fs.Path(root)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qualifiedRoot = fs.makeQualified(hadoopPath).toString
-    // validate SET targets BEFORE any scan or rewrite: a mistyped column
-    // or a partition-column SET must fail loudly even when the predicate
-    // matches nothing (per-file checks alone would silently "succeed" on
-    // zero matches). ONE frame serves both validation and the match scan.
-    val declared = declaredSchemaOf(spark, root)
-    val table = {
-      val rd = spark.read
-      declared.foreach(rd.schema)
-      rd.parquet(root)
-    }
-    val unknownSet = sets.keys.filterNot(k => table.columns.exists(_.equalsIgnoreCase(k)))
-    require(unknownSet.isEmpty, s"SET column(s) not in table: ${unknownSet.mkString(", ")}")
-    val tablePartCols = fs
-      .listStatus(hadoopPath)
-      .toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .map(_.getPath.getName.split("=", 2)(0))
-      .distinct
-    val illegalSet = tablePartCols.filter(pc => sets.keys.exists(_.equalsIgnoreCase(pc)))
-    require(
-      illegalSet.isEmpty,
-      s"cannot SET hive partition column(s) ${illegalSet.mkString(", ")}: rows would change " +
-        "directories — rewrite partition membership with mergeIntoPartitioned instead")
-    val affected = table
-      .filter(predicate)
-      .select(input_file_name().as("f"))
-      .groupBy(col("f"))
-      .count()
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    // SCOPED merge-on-read guard (the deleteWhere discipline): refuse only
-    // when a file this update will rewrite carries a deletion vector —
-    // updates bounded away from the DV'd files run untouched
-    Snapshots.requireNoDvIn(
-      spark,
-      root,
-      "copy-on-write updateWhere",
-      affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) })
-    if (affected.nonEmpty) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
-    val targetBytes = rewriteTargetBytes(spark)
-    def rewriteOne(stage: DataFiles.Rewrites, uri: String): Unit = {
-      val filePath = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
-      val partCols = filePath.toUri.getPath
-        .stripPrefix(new org.apache.hadoop.fs.Path(qualifiedRoot).toUri.getPath)
-        .split("/")
-        .filter(_.contains("="))
-        .map(_.split("=", 2)(0))
-        .toSeq
-        .distinct
-      val src = {
-        // declared schema enforced: the rewrite materializes ALTER-added
-        // columns (null where the old file predates them), so SET can
-        // backfill them — and purges dropped tombstoned columns
-        val rd = spark.read.option("basePath", qualifiedRoot)
-        declared.foreach(rd.schema)
-        rd.parquet(uri)
+      val view = DeleteVectors.liveView(spark, root)
+      if (view.rels.isEmpty) return (0L, 0L)
+      val schema = view.schema.get // liveView infers one for a non-empty view
+      // validate SET targets BEFORE any scan: a mistyped column or a
+      // partition-column SET fails loudly even when nothing matches
+      val unknownSet = sets.keys.filterNot(k => schema.fieldNames.exists(_.equalsIgnoreCase(k)))
+      require(unknownSet.isEmpty, s"SET column(s) not in table: ${unknownSet.mkString(", ")}")
+      val partCols =
+        if (view.partCols.nonEmpty) view.partCols else Snapshots.partitionColsFromRels(view.rels)
+      val illegalSet = partCols.filter(pc => sets.keys.exists(_.equalsIgnoreCase(pc)))
+      require(
+        illegalSet.isEmpty,
+        s"cannot SET hive partition column(s) ${illegalSet.mkString(", ")}: rows would change " +
+          "directories — rewrite partition membership with mergeIntoPartitioned instead")
+      DeleteVectors.predicateMatch(spark, root, view, predicate) match {
+        case None => (0L, 0L)
+        case Some((scan, matched, candidates)) =>
+          val written = DeleteVectors.writeSidecarsOf(spark, root, view, candidates, scan, matched)
+          if (written.isEmpty) (0L, 0L)
+          else {
+            // ONE projection: the predicate and every SET expression see the old row
+            val images = matched.select(schema.fields.toIndexedSeq.map { f =>
+              sets
+                .collectFirst { case (k, e) if k.equalsIgnoreCase(f.name) => e }
+                .getOrElse(col(f.name))
+                .cast(f.dataType)
+                .as(f.name)
+            }: _*)
+            DeleteVectors.purge(spark, root, view, written, Some(images), partCols)
+          }
       }
-      val hit = coalesce(predicate, lit(false))
-      // ONE projection: predicate + every SET expression see the old row
-      val updated = src
-        .select(src.columns.toIndexedSeq.map { c =>
-          sets
-            .collectFirst { case (k, e) if k.equalsIgnoreCase(c) => when(hit, e).otherwise(col(c)).as(c) }
-            .getOrElse(col(c))
-        }: _*)
-        .drop(partCols: _*)
-      // UPDATE preserves row count, so the source file's on-disk bytes are
-      // the right size estimate — same parallel-rewrite discipline as
-      // deleteWhere (one oversized file must not rewrite as one task)
-      val n = rewriteFileCount(fs.getFileStatus(filePath).getLen, targetBytes)
-      val staged = stage.into(DataFiles.dirOf(relOfFileUri(fs, hadoopPath, uri)))(sub =>
-        sizedLayout(updated, n).write.mode(SaveMode.Overwrite).parquet(sub.toString))
-      if (staged == 0) throw new IllegalStateException(s"rewrite of $uri produced no part file")
     }
-    // stage every rewrite, then ONE swap (the deleteWhere discipline)
-    if (affected.nonEmpty)
-      DataFiles.rewrite(spark, fs, hadoopPath, affected.map { case (u, _) => relOfFileUri(fs, hadoopPath, u) }) {
-        stage => graft.core.Par.each(affected.toSeq) { case (u, _) => rewriteOne(stage, u) }
-      }(_ => Snapshots.commit(spark, root))
-    (affected.length.toLong, affected.map(_._2).sum)
-  }
   }
 
   /** MERGE-style upsert into a hive-partitioned parquet table: apply a
     * delta (new + changed rows, keyed by `keyCols` within `partitionCol`)
-    * by rewriting ONLY the partitions the delta touches — the
-    * copy-on-write MERGE a table format runs, built from engine
-    * primitives. Complements [[deleteWhere]] (file-level delete) and
-    * [[expirePartitions]] (metadata-level TTL) as the third lifecycle
-    * operator, and closes the loop on the q111 CDC snapshot: compact the
-    * changelog to a delta, merge the delta here, and the analytics table
-    * is current without a table rewrite.
+    * — MERGE WHEN MATCHED THEN UPDATE, WHEN NOT MATCHED THEN INSERT, the
+    * delta winning every collision. Complements [[deleteWhere]]
+    * (file-level delete) and [[expirePartitions]] (metadata-level TTL) as
+    * the third lifecycle operator, and closes the loop on the q111 CDC
+    * snapshot: compact the changelog to a delta, merge the delta here,
+    * and the analytics table is current without a table rewrite.
     *
-    *  1. affected partition values come from the delta itself (one
-    *     distinct over the delta — rows ∝ touched partitions);
-    *  2. ONE distributed job reads root filtered to those values (plain
-    *     partition pruning: unaffected partitions are never opened),
-    *     anti-joins existing rows against the delta's keys, unions the
-    *     delta (delta wins collisions — MERGE WHEN MATCHED THEN UPDATE,
-    *     WHEN NOT MATCHED THEN INSERT), and writes all rebuilt partitions
-    *     to a staging dir in one pass;
-    *  3. each affected `col=value` dir is swapped in via the
-    *     rename-aside protocol (old dir is renamed to a dot-prefixed
-    *     sibling first — hidden from Spark's file index, so a crash
-    *     leaves every partition readable at one of its two states, and
-    *     leftovers are invisible to readers).
-    *
-    * At 100 TB: merging a day's CDC delta rewrites the touched day
-    * partitions only; the job's shuffle is sized by those partitions,
-    * not the table. Returns the affected partition values, sorted.
+    * The merge-on-read upsert's key match
+    * ([[DeleteVectors.matchKeyUpserts]]) on `keyCols :+ partitionCol`
+    * prunes to the delta's own partitions; the delta (FULL table rows)
+    * lands hive-partitioned by `partitionCol` — creating the table if
+    * needed — and one purge commit ([[DeleteVectors.purge]]) rewrites the
+    * files that held a matched row without it. Returns the affected
+    * partition values, sorted.
     */
   def mergeIntoPartitioned(
       spark: SparkSession,
       root: String,
       delta: DataFrame,
       partitionCol: String,
-      keyCols: Seq[String]): Seq[String] = {
+      keyCols: Seq[String]): Seq[String] =
     Snapshots.withTableLock(spark, root) {
-    val hadoopPath = new org.apache.hadoop.fs.Path(root)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val affected = delta
-      .select(col(partitionCol).cast("string").as("p"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .sorted
-      .toSeq
-    // SCOPED merge-on-read guard: the merge rebuilds exactly the delta's
-    // partition dirs — refuse only when a DV'd file lives in one of them;
-    // vectors in untouched partitions carry through the closing commit
-    if (Snapshots.latestVersion(spark, root) > 0L) {
-      val affectedSet = affected.toSet
-      val inScope = Snapshots
-        .dvByRel(Snapshots.manifestView(spark, root))
-        .keys
-        .filter { rel =>
-          val seg = rel.split("/").head
-          seg.startsWith(s"$partitionCol=") && {
-            val raw = seg.substring(partitionCol.length + 1)
-            raw != "__HIVE_DEFAULT_PARTITION__" &&
-            affectedSet.contains(Snapshots.unescapePathName(raw))
-          }
-        }
-      Snapshots.requireNoDvIn(spark, root, "mergeIntoPartitioned", inScope.toSeq)
+      // the partition values, the key match and the landing share one delta computation
+      val owned = !graft.core.LocalFrames.isLocal(delta) && !delta.storageLevel.isValid // not held yet
+      if (owned) delta.persist()
+      try {
+        val affected = delta
+          .select(col(partitionCol).cast("string").as("p"))
+          .distinct()
+          .collect()
+          .map(_.getString(0))
+          .sorted
+          .toSeq
+        val view = DeleteVectors.liveView(spark, root)
+        val schema = view.schema.getOrElse(delta.schema) // no table yet: the delta's
+        val keys = keyCols :+ partitionCol
+        val (keyFields, sourceKeys, partCols, alive) =
+          DeleteVectors.upsertInputs(view, schema, delta, delta, keys)
+        val written =
+          DeleteVectors.matchKeyUpserts(spark, root, view, alive, sourceKeys, keys, keyFields, partCols)
+        DeleteVectors.purge(
+          spark, root, view, written, Some(DeleteVectors.alignedTo(schema, delta)), Seq(partitionCol))
+        affected
+      } finally if (owned) delta.unpersist()
     }
-    if (fs.exists(hadoopPath)) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
-    val existingDirs = affected
-      .map(v => new org.apache.hadoop.fs.Path(hadoopPath, s"$partitionCol=$v"))
-      .filter(fs.exists)
-    val stage = new org.apache.hadoop.fs.Path(hadoopPath, ".merge-stage")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    val rebuilt = {
-      val d = delta
-      if (existingDirs.isEmpty) d
-      else {
-        val existing = spark.read
-          .option("basePath", root)
-          .parquet(existingDirs.map(_.toString): _*)
-          .select(d.columns.map(col): _*) // column order alignment
-        existing
-          .join(d.select((keyCols :+ partitionCol).map(col): _*), keyCols :+ partitionCol, "left_anti")
-          .unionByName(d)
-      }
-    }
-    rebuilt
-      // co-locate each partition's rows in one task before the dynamic
-      // write: without this every shuffle task writes a sliver into every
-      // affected dir (32 tasks × N dirs small files), tripling the
-      // downstream listing/open cost of the table this merge maintains
-      .repartition(col(partitionCol))
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(stage.toString)
-    affected.foreach { v =>
-      val live = new org.apache.hadoop.fs.Path(hadoopPath, s"$partitionCol=$v")
-      val fresh = new org.apache.hadoop.fs.Path(stage, s"$partitionCol=$v")
-      val aside = new org.apache.hadoop.fs.Path(hadoopPath, s".merge-old-$partitionCol=$v")
-      // leftover aside from an earlier crash: its files belong to a
-      // then-committed manifest — archive them (never destroy)
-      Snapshots.archiveDirContents(fs, hadoopPath, aside, s"$partitionCol=$v")
-      val hadLive = fs.exists(live)
-      if (hadLive) fs.rename(live, aside)
-      if (fs.exists(fresh)) fs.rename(fresh, live)
-      if (hadLive) Snapshots.archiveDirContents(fs, hadoopPath, aside, s"$partitionCol=$v")
-    }
-    fs.delete(stage, true)
-    Snapshots.commit(spark, root)
-    affected
-  }
-  }
 
   /** Retention / TTL expiry over a partitioned layout: drop every
     * `col=value` partition directory whose value fails `keep` — the
@@ -831,8 +550,9 @@ object Sources {
       Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
       // archive, don't destroy: still rename-only metadata ops, and every
       // committed manifest keeps reading until Snapshots.vacuum
-      expired.foreach(p => Snapshots.archiveDirContents(fs, hadoopPath, p, p.getName))
-      Snapshots.commit(spark, root)
+      val rels = expired.flatMap(d => Snapshots.listDataFiles(spark, d.toString).map(r => s"${d.getName}/$r"))
+      DataFiles.swap(fs, hadoopPath, rels, Seq.empty)(Snapshots.commit(spark, root))
+      expired.foreach(fs.delete(_, true)) // only hidden markers remain
     }
     expired.map(_.getName.stripPrefix(prefix)).sorted
   }
@@ -963,7 +683,8 @@ object Sources {
       require(cols.size == 1, s"mixed partition columns at one level: $cols")
       cols.head
     }
-    val declared = declaredSchemaOf(spark, root).flatMap(_.fields.find(_.name == partCol))
+    val declared = (if (Snapshots.latestVersion(spark, root) > 0L) Snapshots.schemaOf(spark, root) else None)
+      .flatMap(_.fields.find(_.name == partCol))
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val raw = spark.createDataFrame(

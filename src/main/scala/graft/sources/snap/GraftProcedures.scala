@@ -356,8 +356,8 @@ private[snap] object GraftProcedures {
       "fold deletion vectors into their data files (rewrite without the deleted positions; " +
         "provably-empty files archive) and commit. An optional `where` over the table's hive " +
         "partition columns scopes the fold (e.g. where => \"day = DATE'2024-01-03'\") — " +
-        "out-of-scope vectors carry forward; unscoped, it ends the merge-on-read era so " +
-        "raw-reading maintenance ops (COW delete/update/merge) accept the whole table again"
+        "out-of-scope vectors carry forward; unscoped, it ends the merge-on-read era: " +
+        "afterwards no live file holds a deleted row"
     override def parameters(): Array[ProcedureParameter] =
       Array(in("table", StringType), inDefault("where", StringType, "''"))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {

@@ -128,42 +128,83 @@ class DeleteVectorsSpec extends SparkSpec {
     assert(rowSet(Snapshots.readSnapshot(spark, dir, v1)).size == 4)
   }
 
-  test("COW DML guards are SCOPED: ops touching a DV'd file refuse, ops bounded away run") {
-    val dir = Files.createTempDirectory("dv_guard").toString + "/t"
-    table(dir)
-    DeleteVectors.deleteWhere(spark, dir, $"id" === 2L) // DV on day=01's file
-    // touching the DV'd file refuses loudly (raw rewrite would resurrect)
-    val e1 = intercept[RuntimeException](Sources.deleteWhere(spark, dir, $"id" === 1L))
-    assert(e1.getMessage.contains("deletion vectors"))
-    val e2 = intercept[RuntimeException](Sources.updateWhere(spark, dir, $"id" === 1L, Map("v" -> lit(0.0))))
-    assert(e2.getMessage.contains("deletion vectors"))
-    // bounded away from the DV'd file, the same ops run — and the vector
-    // carries through their commits untouched
-    val (df0, dr0) = Sources.deleteWhere(spark, dir, $"id" === 4L) // day=03's clean file
-    assert(df0 == 1L && dr0 == 1L)
-    val (uf0, ur0) = Sources.updateWhere(spark, dir, $"id" === 3L, Map("v" -> lit(21.0)))
-    assert(uf0 == 1L && ur0 == 1L)
-    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).size == 1)
-    assert(rowSet(Snapshots.readSnapshot(spark, dir)) ==
-      Set((1L, "2024-01-01", 10.0), (3L, "2024-01-02", 21.0)))
-    // a partitioned MERGE into an un-DV'd partition runs; into the DV'd one refuses
-    val e3 = intercept[RuntimeException](Sources.mergeIntoPartitioned(
-      spark, dir, Seq((9L, "2024-01-01", 90.0)).toDF("id", "day", "v"), "day", Seq("id")))
-    assert(e3.getMessage.contains("deletion vectors"))
-    Sources.mergeIntoPartitioned(
-      spark, dir, Seq((9L, "2024-01-09", 90.0)).toDF("id", "day", "v"), "day", Seq("id"))
-    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).size == 1)
-    // materialize folds the vector in: reads unchanged (plus the merge row),
-    // pointers gone, COW ops on the formerly-DV'd file accepted again
-    val liveBefore = rowSet(Snapshots.readSnapshot(spark, dir))
-    val (mf, mp) = DeleteVectors.materialize(spark, dir)
-    assert(mf == 1L && mp == 1L)
-    assert(Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).isEmpty)
-    assert(rowSet(Snapshots.readSnapshot(spark, dir)) == liveBefore)
-    // physical agreement: a raw directory read now matches too
-    assert(spark.read.parquet(dir).count() == 3L)
-    val (df2, dr2) = Sources.deleteWhere(spark, dir, $"id" === 1L)
-    assert(df2 == 1L && dr2 == 1L)
+  /** (id, day, v) rows of `df`, sorted — duplicates kept. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Double)] =
+    df.select($"id", $"day".cast("string"), $"v")
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .toSeq
+      .sorted
+
+  /** The purge law of [[Sources.deleteWhere]], [[Sources.updateWhere]] and
+    * [[Sources.mergeIntoPartitioned]] over `dir` (rows `start`, with the
+    * files of day=2024-01-09 never touched): after every op a RAW parquet
+    * read of the live files (no vector applied) equals a plain-Scala model
+    * of the rows, no touched file keeps a vector while `keep` (an
+    * untouched file's vector) survives as it was, each op that changes
+    * rows commits exactly one version and an op that matches nothing
+    * commits nothing.
+    */
+  private def purgeLaw(dir: String, start: Seq[(Long, String, Double)], keep: Map[String, (String, Long)]): Unit = {
+    var model = start
+    def step(expectChange: Boolean)(op: => Any)(next: Seq[(Long, String, Double)] => Seq[(Long, String, Double)]): Unit = {
+      val v0 = Snapshots.latestVersion(spark, dir)
+      op
+      model = next(model)
+      assert(
+        Snapshots.latestVersion(spark, dir) == v0 + (if (expectChange) 1L else 0L),
+        s"one version per op, none for a no-op (was v$v0, now v${Snapshots.latestVersion(spark, dir)})")
+      val untouched = "2024-01-09"
+      assert(
+        rowsOf(spark.read.parquet(dir).filter($"day".cast("string") =!= untouched)) ==
+          model.filter(_._2 != untouched).sorted,
+        "a raw read of the live files must hold exactly the model's rows")
+      assert(rowsOf(Snapshots.readSnapshot(spark, dir)) == model.sorted)
+      assert(
+        Snapshots.dvByRel(Snapshots.manifestView(spark, dir)) == keep,
+        "touched files keep no vector; the untouched file keeps its own")
+    }
+    step(expectChange = true)(Sources.deleteWhere(spark, dir, $"id" === 1L))(_.filterNot(_._1 == 1L))
+    step(expectChange = true)(
+      Sources.updateWhere(spark, dir, $"day" === "2024-01-02" && $"id" >= 5L, Map("v" -> $"v" * 10)))(
+      _.map { case (i, d, v) => if (d == "2024-01-02" && i >= 5L) (i, d, v * 10) else (i, d, v) })
+    val delta = Seq((3L, "2024-01-01", 33.0), (10L, "2024-01-03", 100.0))
+    step(expectChange = true)(
+      Sources.mergeIntoPartitioned(spark, dir, delta.toDF("id", "day", "v"), "day", Seq("id")))(m =>
+      m.filterNot(r => delta.exists(d => d._1 == r._1 && d._2 == r._2)) ++ delta)
+    step(expectChange = false)(Sources.deleteWhere(spark, dir, $"id" === 999L))(identity)
+    step(expectChange = false)(
+      Sources.updateWhere(spark, dir, $"id" === 999L, Map("v" -> lit(0.0))))(identity)
+  }
+
+  private val purgeRows = Seq(
+    (1L, "2024-01-01", 10.0),
+    (2L, "2024-01-01", 11.0),
+    (3L, "2024-01-01", 12.0),
+    (4L, "2024-01-02", 20.0),
+    (5L, "2024-01-02", 21.0),
+    (6L, "2024-01-02", 22.0),
+    (7L, "2024-01-09", 90.0),
+    (8L, "2024-01-09", 91.0))
+
+  test("purge law: the Sources DML folds the vectors of the files it touches, one version per op") {
+    val dir = Files.createTempDirectory("dv_purge").toString + "/t"
+    Sources.writeParquet(purgeRows.toDF("id", "day", "v").repartition(1), dir, partitionCols = Seq("day"))
+    Snapshots.commit(spark, dir, Seq("day", "id"))
+    // vectors on a file every op below touches (day=01) and on one none touches (day=09)
+    DeleteVectors.deleteWhere(spark, dir, $"id" === 2L || $"id" === 8L)
+    val keep = Snapshots.dvByRel(Snapshots.manifestView(spark, dir)).filter(_._1.startsWith("day=2024-01-09/"))
+    assert(keep.size == 1)
+    purgeLaw(dir, purgeRows.filterNot(r => r._1 == 2L || r._1 == 8L), keep)
+  }
+
+  test("purge law on a v1 table (manifest with no recorded schema)") {
+    val dir = Files.createTempDirectory("dv_purge_v1").toString + "/t"
+    Sources.writeParquet(purgeRows.toDF("id", "day", "v").repartition(1), dir, partitionCols = Seq("day"))
+    Snapshots.commit(spark, dir)
+    assert(Snapshots.manifestView(spark, dir).schema.isEmpty, "fixture must be a v1 manifest")
+    purgeLaw(dir, purgeRows, Map.empty)
+    assert(Snapshots.manifestView(spark, dir).schema.isEmpty, "the purge keeps the table's manifest format")
   }
 
   test("compactInPlace FOLDS the rewritten scope's vectors and leaves other scopes pointed") {
@@ -264,10 +305,8 @@ class DeleteVectorsSpec extends SparkSpec {
     val dv = Snapshots.dvByRel(Snapshots.manifestView(spark, dir))
     assert(dv.keySet.map(_.split("/").head) == Set("day=2024-01-01"), dv.toString)
     assert(rowSet(Snapshots.readSnapshot(spark, dir)).map(_._1) == Set(1L, 3L))
-    // the folded partition accepts COW DML again; the pointed one refuses
     val (uf, ur) = Sources.updateWhere(spark, dir, $"day" === "2024-01-03", Map("v" -> lit(0.0)))
     assert(uf == 0L && ur == 0L, "day=03's only row was deleted — nothing to update")
-    intercept[RuntimeException](Sources.deleteWhere(spark, dir, $"id" === 1L))
     // an unscoped pass finishes the job
     val (mf2, _) = DeleteVectors.materialize(spark, dir)
     assert(mf2 == 1L)
@@ -985,21 +1024,31 @@ class DeleteVectorsSpec extends SparkSpec {
     Snapshots.vacuum(spark, dir, keepLast = 1)
     assert(idsOf2(Snapshots.readBranch(spark, dir, "dev")) == Set(1L, 3L, 4L, 9L))
     // fast-forward adopts BOTH vector kinds: the fork file's pointer
-    // restates on main (same sidecar — its embedded rel didn't move), the
-    // moved branch file's sidecar is REHOMED to the new rel
+    // restates on main, the moved branch file keeps its sidecar pointer —
+    // adoption writes no sidecar at all
+    def dvFiles(): Set[String] = {
+      val root = new java.io.File(s"$dir/${Snapshots.DvDirName}")
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
+      if (root.exists()) walk(root).toSet else Set.empty
+    }
+    val sidecarsBefore = dvFiles()
+    val branchBefore = Snapshots.readBranch(spark, dir, "dev").select($"id", $"day".cast("string"), $"v")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted
     val v = Snapshots.fastForward(spark, dir, "dev")
     assert(v == 2L)
+    assert(dvFiles() == sidecarsBefore, "adoption must write no new .snap-dv file")
+    val liveAfter = Snapshots.readSnapshot(spark, dir).select($"id", $"day".cast("string"), $"v")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted
+    assert(liveAfter == branchBefore, "the live line reads exactly what the branch read")
+    // the moved file's pointer still names the sidecar the branch wrote,
+    // which vacuum keeps while a retained manifest references it
+    Snapshots.vacuum(spark, dir, keepLast = 1)
     assert(idsOf2(Snapshots.readSnapshot(spark, dir)) == Set(1L, 3L, 4L, 9L))
     assert(Snapshots.countRows(spark, dir) == 4L, "metadata count subtracts the adopted vectors")
     val dv = Snapshots.dvByRel(Snapshots.manifestView(spark, dir))
     assert(dv.size == 2, s"both adopted files carry pointers: $dv")
     assert(dv.keySet.forall(!_.startsWith(Snapshots.BranchDataDirName)), dv.keySet.toString)
-    // the rehomed sidecar's embedded rel matches its moved file (the
-    // anti-join would silently resurrect id=10 otherwise — the read above
-    // already proved it, this pins the mechanism)
-    val movedRel = dv.keySet.find(_.startsWith("day=2024-01-09/")).get
-    val sidecar = spark.read.parquet(s"$dir/${dv(movedRel)._1}")
-    assert(sidecar.select($"rel").as[String].collect().toSet == Set(movedRel))
   }
 
   private def idsOf2(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -1037,7 +1086,7 @@ class DeleteVectorsSpec extends SparkSpec {
       ((0L, 0L)))
     assert(rowSet(Snapshots.readBranch(spark, dir, "dev")) == branchBefore)
     // adoption carries both sides: the fork pointer restates, the moved
-    // branch files' vectors rehome, the new rows arrive
+    // branch files keep their vectors, the new rows arrive
     Snapshots.fastForward(spark, dir, "dev")
     assert(rowSet(Snapshots.readSnapshot(spark, dir)) == Set(
       (1L, "2024-01-01", 10.0),

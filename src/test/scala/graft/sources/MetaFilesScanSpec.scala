@@ -28,7 +28,6 @@ class MetaFilesScanSpec extends AnyFunSuite {
     ("Snapshots.scala", "tryWriteManifestClaimed") ->
       (3, "the manifest slot claim: break a stale claim, restore it, publish the fenced manifest"),
     ("Snapshots.scala", "fastForward") -> (4, "branch fast-forward: move branch files live, and back on failure"),
-    ("Sources.scala", "mergeIntoPartitioned") -> (2, "the partition-dir swap: rename aside, rename the rebuilt dir in"),
     ("Sources.scala", "idempotentBatchAppend") -> (1, "plain-parquet batch append: the dir rename is the commit"),
     ("SnapRowLevel.scala", "commit") -> (2, "DSv2 writers' task commits onto their final names"),
     ("Frontier3.scala", "q235") -> (1, "the query's upsert input fixture"),

@@ -2244,25 +2244,28 @@ class SnapCatalogSpec extends SparkSpec {
     to
   }
 
-  /** Live rows of the catalog table `t` equal the reference table's at
-    * `refDir`, as multisets (maps compared as entry arrays).
+  /** The DML model's row domain: `df`'s `cols` as plain rows, sorted by
+    * rendering (a multiset compare).
     */
-  private def assertSameRows(t: String, refDir: String): Unit = {
-    val got = spark.table(t)
-    val cols = got.columns.toSeq.filterNot(_.startsWith("_"))
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map { c =>
-        if (df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-          map_entries(col(c)).as(c)
-        else col(c)
-      }: _*)
-    val a = norm(got)
-    val b = norm(Snapshots.readSnapshot(spark, refDir))
-    assert(a.count() == b.count(), s"$t: ${a.count()} rows vs reference ${b.count()}")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$t differs from the reference")
+  private def modelRows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[org.apache.spark.sql.Row] =
+    df.select(cols.map(col): _*).collect().toSeq.sortBy(_.toString)
+
+  /** Both the catalog table `t` and the reference table at `refDir` hold
+    * exactly the `model` rows.
+    */
+  private def assertModel(t: String, refDir: String, cols: Seq[String], model: Seq[org.apache.spark.sql.Row]): Unit = {
+    val want = model.sortBy(_.toString)
+    assert(modelRows(spark.table(t), cols) == want, s"SQL table $t differs from the model")
+    assert(modelRows(Snapshots.readSnapshot(spark, refDir), cols) == want, s"reference $refDir differs from the model")
   }
 
-  test("SQL DELETE, UPDATE and MERGE leave the same rows as the programmatic copy-on-write ops") {
+  test("SQL DELETE, UPDATE and MERGE and the programmatic ops leave the rows of a plain-Scala model") {
+    import org.apache.spark.sql.Row
+    // the model: each statement applied to the collected pre-state rows in
+    // plain Scala, with SQL's NULL rule (a NULL comparison never matches)
+    def nn(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    def set(r: Row, i: Int, v: Any): Row = Row.fromSeq(r.toSeq.updated(i, v))
+
     // flat table with NULLs in v: a NULL predicate row is never matched
     val flatBase = Files.createTempDirectory("snapequiv_flat").toString
     spark
@@ -2275,40 +2278,57 @@ class SnapCatalogSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.snapeq1", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.snapeq1.root", flatBase)
     val flatRef = copyTable(s"$flatBase/t", s"$flatBase/ref")
+    val flatCols = Seq("id", "v")
+    var flat = modelRows(spark.table("snapeq1.t"), flatCols)
     spark.sql("DELETE FROM snapeq1.t WHERE v = 3") // pushable: deletion vectors
     Sources.deleteWhere(spark, flatRef, col("v") === 3)
+    flat = flat.filterNot(r => nn(r, 1).contains(3L))
     spark.sql("DELETE FROM snapeq1.t WHERE v + 0 = 4") // un-pushable: row-level operation
     Sources.deleteWhere(spark, flatRef, col("v") + 0 === 4)
+    flat = flat.filterNot(r => nn(r, 1).contains(4L))
     spark.sql("UPDATE snapeq1.t SET v = v * 10 WHERE id % 3 = 0 AND v > 1")
     Sources.updateWhere(spark, flatRef, col("id") % 3 === 0 && col("v") > 1, Map("v" -> col("v") * 10))
+    flat = flat.map(r =>
+      if (r.getLong(0) % 3 == 0 && nn(r, 1).exists(_ > 1L)) set(r, 1, r.getLong(1) * 10) else r)
     spark.range(0L, 200L, 4L).toDF("sid").createOrReplaceTempView("snapeq1_src")
     spark.sql("""MERGE INTO snapeq1.t t USING snapeq1_src s ON t.id = s.sid
       WHEN MATCHED AND t.v = 5 THEN DELETE
       WHEN MATCHED THEN UPDATE SET v = t.v + 100""")
     Sources.deleteWhere(spark, flatRef, col("id") % 4 === 0 && col("v") === 5)
     Sources.updateWhere(spark, flatRef, col("id") % 4 === 0, Map("v" -> (col("v") + 100)))
-    assertSameRows("snapeq1.t", flatRef)
+    flat = flat
+      .filterNot(r => r.getLong(0) % 4 == 0 && nn(r, 1).contains(5L))
+      .map(r => if (r.getLong(0) % 4 == 0) set(r, 1, nn(r, 1).map(_ + 100).orNull) else r)
+    assertModel("snapeq1.t", flatRef, flatCols, flat)
     assert(spark.sql("SELECT count(*) FROM snapeq1.t WHERE v IS NULL").as[Long].head() == 20L)
 
     // hive-partitioned: a data-column DELETE, a partition-exact DELETE,
     // an UPDATE across partitions and a MERGE
     val (_, dir) = fixture("snapeq2")
     val hiveRef = copyTable(dir, dir + "_ref")
+    val hiveCols = Seq("id", "day", "event_type", "v")
+    val d = java.sql.Date.valueOf(_: String)
+    var hive = modelRows(spark.table("snapeq2.ev"), hiveCols)
     spark.sql("DELETE FROM snapeq2.ev WHERE event_type = 'click' AND v > 15")
     Sources.deleteWhere(spark, hiveRef, col("event_type") === "click" && col("v") > 15)
+    hive = hive.filterNot(r => r.getString(2) == "click" && r.getDouble(3) > 15)
     spark.sql("DELETE FROM snapeq2.ev WHERE day = DATE'2024-01-04'")
-    Sources.deleteWhere(spark, hiveRef, col("day") === lit(java.sql.Date.valueOf("2024-01-04")))
+    Sources.deleteWhere(spark, hiveRef, col("day") === lit(d("2024-01-04")))
+    hive = hive.filterNot(_.getDate(1).toString == "2024-01-04")
     spark.sql("UPDATE snapeq2.ev SET v = v + 1 WHERE day = DATE'2024-01-03' OR id = 1")
     Sources.updateWhere(
       spark,
       hiveRef,
-      col("day") === lit(java.sql.Date.valueOf("2024-01-03")) || col("id") === 1L,
+      col("day") === lit(d("2024-01-03")) || col("id") === 1L,
       Map("v" -> (col("v") + 1)))
+    hive = hive.map(r =>
+      if (r.getDate(1).toString == "2024-01-03" || r.getLong(0) == 1L) set(r, 3, r.getDouble(3) + 1) else r)
     Seq(2L, 4L).toDF("sid").createOrReplaceTempView("snapeq2_src")
     spark.sql("""MERGE INTO snapeq2.ev t USING snapeq2_src s ON t.id = s.sid
       WHEN MATCHED THEN UPDATE SET v = t.v * 2""")
     Sources.updateWhere(spark, hiveRef, col("id").isin(2L, 4L), Map("v" -> (col("v") * 2)))
-    assertSameRows("snapeq2.ev", hiveRef)
+    hive = hive.map(r => if (Set(2L, 4L)(r.getLong(0))) set(r, 3, r.getDouble(3) * 2) else r)
+    assertModel("snapeq2.ev", hiveRef, hiveCols, hive)
 
     // every column shape, map included
     val shapesBase = Files.createTempDirectory("snapequiv_types").toString
@@ -2327,11 +2347,15 @@ class SnapCatalogSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.snapeq3", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.snapeq3.root", shapesBase)
     val shapesRef = copyTable(s"$shapesBase/t", s"$shapesBase/ref")
+    val shapesCols = Seq("id", "d", "ts", "day", "dec", "flag", "arr", "st", "m")
+    var shapes = modelRows(spark.table("snapeq3.t"), shapesCols)
     spark.sql("UPDATE snapeq3.t SET d = d * 2 WHERE id >= 25")
     Sources.updateWhere(spark, shapesRef, col("id") >= 25, Map("d" -> (col("d") * 2)))
+    shapes = shapes.map(r => if (r.getLong(0) >= 25L) set(r, 1, r.getDouble(1) * 2) else r)
     spark.sql("DELETE FROM snapeq3.t WHERE flag AND id < 10")
     Sources.deleteWhere(spark, shapesRef, col("flag") && col("id") < 10)
-    assertSameRows("snapeq3.t", shapesRef)
+    shapes = shapes.filterNot(r => r.getBoolean(5) && r.getLong(0) < 10L)
+    assertModel("snapeq3.t", shapesRef, shapesCols, shapes)
   }
 
   test("a partition-exact SQL DELETE archives the matched files in zero Spark jobs, no vector") {

@@ -838,22 +838,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.count() == 2L)
   }
 
-  test("merge crash leftovers are archived, not destroyed") {
-    val dir = Files.createTempDirectory("snap_crash").toString + "/t"
-    val base = Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0)).toDF("id", "day", "v")
-    Sources.writeParquet(base, dir, partitionCols = Seq("day"))
-    // a crashed earlier merge left the partition's OLD file renamed aside
-    val aside = new java.io.File(s"$dir/.merge-old-day=2024-01-02")
-    aside.mkdirs()
-    java.nio.file.Files.write(aside.toPath.resolve("stranded.parquet"), Array[Byte](1, 2, 3))
-    val delta = Seq((2L, "2024-01-02", 99.0)).toDF("id", "day", "v")
-    Sources.mergeIntoPartitioned(spark, dir, delta, "day", Seq("id"))
-    assert(!aside.exists())
-    val archived = new java.io.File(s"$dir/${Snapshots.ArchiveDirName}/day=2024-01-02/stranded.parquet")
-    assert(archived.exists(), "stranded pre-crash file must be archived for manifest readers")
-    assert(java.nio.file.Files.readAllBytes(archived.toPath).toSeq == Seq[Byte](1, 2, 3))
-  }
-
   test("an append commit reads only the NEW files' footers (incremental stats carry-forward)") {
     val dir = Files.createTempDirectory("snap_incr").toString + "/t"
     table(dir) // 3 day partitions, one file each
