@@ -1142,9 +1142,10 @@ object Frontier {
     * event stats that MISSED purchase events is corrected by merging a CDC
     * delta (full stats for every (day, user) pair that has a purchase)
     * through [[graft.sources.Sources.mergeIntoPartitioned]] — matched
-    * keys update, unmatched insert (purchase-only users); the files that
-    * held a matched key are rewritten without it in the same commit, so
-    * the raw directory read below sees only current rows, and untouched
+    * keys update, unmatched insert (purchase-only users); the files of
+    * the delta's days are rewritten without the replaced rows in the job
+    * that lands the delta, in one commit, so the raw directory read below
+    * sees only current rows, and untouched
     * day partitions keep their bytes (proved in SourcesSpec). The merged
     * table's per-day report must then equal the
     * ORACLE's direct computation from raw events (users without purchases

@@ -465,8 +465,8 @@ object Frontier3 {
     * projection), so the `+ n` uses the pre-doubling count; the predicate
     * mixes a data column with the hive PARTITION column (the snapshot scan
     * splices `day` from the path), so only the matching days' files are
-    * rewritten without the old images, the new images appended in the same
-    * commit. One SQL statement then reads v1 and live side by side and
+    * rewritten, each matched row replaced by its new image in place, in
+    * one commit. One SQL statement then reads v1 and live side by side and
     * the oracle recomputes both from raw events: per event type, the live
     * n gains exactly the matched raw-event count and the live sum gains the
     * same (old-n semantics), while v1 keeps the original totals — a wrong

@@ -84,6 +84,11 @@ private[sources] object DataFiles {
   def land(fs: FileSystem, root: Path, targets: Seq[(Path, String)]): Seq[String] =
     swap(fs, root, Seq.empty, targets)(targets.map(_._2))
 
+  /** The partition column of a [[Rewrites.intoDirs]] write: the live dir
+    * each row lands in.
+    */
+  val DirCol = "__graft_dir__"
+
   /** Stages the rewrites of one in-place op ([[rewrite]]). */
   final class Rewrites private[DataFiles] (spark: SparkSession, fs: FileSystem, root: Path) {
     private[DataFiles] val stages = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
@@ -102,6 +107,25 @@ private[sources] object DataFiles {
       val prefix = if (dirRel.isEmpty) "" else dirRel + "/"
       val got = staged(spark, fs, stage)
       got.foreach { case (p, r) => parts.add(p -> (prefix + r)) }
+      got.size
+    }
+
+    /** Stage one write that spans live dirs: `write` fills a fresh stage
+      * dir partitioned by [[DirCol]], whose value names the live dir each
+      * row lands in ("" for the root, which the writer renders as the
+      * default partition); the non-empty parts land there under their
+      * own part names. Returns how many parts were staged.
+      */
+    def intoDirs(write: Path => Unit): Int = {
+      val stage = stageDir(root)
+      stages.add(stage)
+      write(stage)
+      val got = staged(spark, fs, stage).map { case (p, r) =>
+        val cut = r.indexOf('/')
+        val dir = Snapshots.unescapePathName(r.substring(0, cut).stripPrefix(DirCol + "="))
+        p -> (if (dir == "__HIVE_DEFAULT_PARTITION__") r.substring(cut + 1) else dir + r.substring(cut))
+      }
+      got.foreach(parts.add)
       got.size
     }
   }

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum, when}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, lit}
+import org.apache.spark.sql.functions.{pmod, sum, typedLit, udf, when}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.Snapshots.ColStat
@@ -109,38 +111,39 @@ object DeleteVectors {
     }
 
   /** The MoR delete's match core over one VIEW's files (main line or a
-    * branch): [[predicateMatch]], then the sidecar write
-    * ([[writeSidecarsOf]]). Returns (rel, new sidecar rel, merged count)
-    * per touched file; the caller commits (main: [[boundedCommit]] or
-    * [[purge]]; branch: a branch-delta restate).
+    * branch): the match scan of the [[predicateCandidates]], whose rows
+    * where the predicate holds (a NULL predicate row is not matched)
+    * become sidecars ([[writeSidecarsOf]]). Returns (rel, new sidecar
+    * rel, merged count) per touched file; the caller commits (main:
+    * [[boundedCommit]]; branch: a branch-delta restate).
     */
   private[sources] def matchDeletes(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
-      predicate: Column): Seq[(String, String, Long)] =
-    predicateMatch(spark, root, view, predicate).fold(Seq.empty[(String, String, Long)]) {
-      case (scan, matched, candidates) => writeSidecarsOf(spark, root, view, candidates, scan, matched)
+      predicate: Column): Seq[(String, String, Long)] = {
+    val candidates = predicateCandidates(spark, root, view, predicate)
+    if (candidates.isEmpty) Seq.empty
+    else {
+      val scan = matchScan(spark, root, view, candidates)
+      writeSidecarsOf(spark, root, view, candidates, scan, scan.filter(coalesce(predicate, lit(false))))
     }
+  }
 
-  /** The rows of `view` matching `predicate`, found with candidate
-    * narrowing BEFORE any data I/O: skip provably-fully-deleted files,
-    * stats-prune the predicate's top-level range conjuncts against the
-    * manifest's per-file intervals (the `DELETE WHERE day = X` shape opens
-    * only that day's files at any table size), then bloom-narrow equality
-    * probes. Returns the candidates' match scan (live rows with their
-    * `_file`/`_pos`), its rows where the predicate holds (a NULL
-    * predicate row is not matched) and the candidates; None when no file
-    * can match.
+  /** The files of `view` that may hold a row matching `predicate`, found
+    * BEFORE any data I/O: skip provably-fully-deleted files, stats-prune
+    * the predicate's top-level range conjuncts against the manifest's
+    * per-file intervals (the `DELETE WHERE day = X` shape opens only that
+    * day's files at any table size), then bloom-narrow equality probes.
     */
-  private[sources] def predicateMatch(
+  private[sources] def predicateCandidates(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
-      predicate: Column): Option[(DataFrame, DataFrame, Seq[String])] = {
+      predicate: Column): Seq[String] = {
     val alive = view.rels.filterNot(r =>
       Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
-    if (alive.isEmpty) return None
+    if (alive.isEmpty) return Seq.empty
     val probeFrame = Snapshots.scanRels(spark, root, view, alive.take(1))
     val ranges = Sources.rangeProbes(probeFrame, predicate)
     val statsPruned =
@@ -150,22 +153,18 @@ object DeleteVectors {
           Snapshots.fileMatchesRanges(view.stats.getOrElse(rel, Map.empty), ranges))
     val probes = Sources.equalityProbes(probeFrame, predicate)
     val active = probes.filter { case (c, _) => view.bloomCols.contains(c) }
-    val candidates =
-      if (active.isEmpty) statsPruned
-      else
-        statsPruned.filter { rel =>
-          active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
-        }
-    if (candidates.isEmpty) return None
-    val scan = matchScan(spark, root, view, candidates)
-    Some((scan, scan.filter(coalesce(predicate, lit(false))), candidates))
+    if (active.isEmpty) statsPruned
+    else
+      statsPruned.filter { rel =>
+        active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
+      }
   }
 
   /** The sidecar write of one match: `matched` (rows of `scan`, the match
     * scan of `candidates`) become positions merged into each candidate's
     * recorded vector under a fresh commit tag.
     */
-  private[sources] def writeSidecarsOf(
+  private def writeSidecarsOf(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
@@ -176,14 +175,27 @@ object DeleteVectors {
       Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).map { case (p, _) => rel -> p }
     }.toMap
     val commitTag = java.util.UUID.randomUUID().toString.take(8)
-    writeSidecars(
-      spark, root, Snapshots.dvCoordinates(scan, matched), oldDvByRel, commitTag,
-      rawRowBound(view, candidates))
+    val coordinates = matched.select(
+      Snapshots.relOfScanned(scan).as("rel"), col(snap.SnapTable.PosMetaCol).as("pos"))
+    writeSidecars(spark, root, coordinates, oldDvByRel, commitTag, rawRowBound(view, candidates))
+  }
+
+  /** [[matchScan]] read by at most `tasks` tasks: the snapshot scan reads
+    * one file per task, and a job over many small files pays per task.
+    */
+  private def packedScan(
+      spark: SparkSession,
+      root: String,
+      view: Snapshots.ManifestView,
+      rels: Seq[String],
+      tasks: Int): DataFrame = {
+    val scan = matchScan(spark, root, view, rels)
+    if (rels.size > tasks) scan.coalesce(tasks) else scan
   }
 
   /** The match scan of `rels`: [[Snapshots.scanRels]] with each row's
     * `_file` and `_pos` as plain columns, so they survive the match's
-    * filter or join into [[Snapshots.dvCoordinates]].
+    * filter or join into [[Snapshots.relOfScanned]].
     */
   private def matchScan(
       spark: SparkSession,
@@ -273,9 +285,7 @@ object DeleteVectors {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val replaced = rewriteNow.keys.toSeq
     DataFiles.rewrite(spark, fs, rootPath, replaced, added) { stage =>
-      graft.core.Par.each(rewriteNow.toSeq) { case (rel, st) =>
-        stageRewrite(spark, root, stage, view.copy(stats = view.stats + (rel -> st)), rel)
-      }
+      stageRewrites(spark, root, stage, view.copy(stats = view.stats ++ rewriteNow), replaced)
     } { landed =>
       Snapshots.commitRestated(spark, root, pointerUpdates, addedRels = landed, removedRels = replaced)
     }
@@ -309,32 +319,85 @@ object DeleteVectors {
     (changed, newlyDeleted)
   }
 
-  /** Stage one file's rewrite: its survivors (the scan of `rel` under
-    * `view`, whose recorded vector the reader subtracts), landing beside
-    * the original as the table's DATA columns (partition values stay in
-    * the dir path) — the [[Sources.compactInPlace]] discipline, sized
-    * the same way: a file over `spark.graft.rewrite.targetBytes` on disk
-    * rewrites in parallel to ~target-sized files, a smaller one to one
-    * file. Nothing is staged when nothing survives — a table whose
-    * manifest predates row counts can't detect full deletion up front,
-    * so the staged footer is the authority.
+  /** Stage the rewrite of `rels` under `view` in ONE Spark job
+    * ([[DataFiles.Rewrites.intoDirs]]): `keep` maps their match scan
+    * (recorded vectors subtracted) to the rows they keep, with
+    * `_file`/`_pos`, and each row lands in its file's own dir. `landing`
+    * (rows, their partition columns) adds rows to the dirs Spark's
+    * partitioned writer would name. A provably fully-deleted file is
+    * never read. Layout: each dir's output is sized from the on-disk
+    * bytes of its rewritten files (`spark.graft.rewrite.targetBytes`).
+    * When every dir fits the target and nothing lands, the scan tasks
+    * (small files packed into shared tasks, each task's input near the
+    * target) write their rows with no shuffle; otherwise rows shuffle by
+    * (dir, bucket), one ~target-sized file per bucket, and landed rows
+    * join their dir's first bucket (one file per dir).
     */
-  private def stageRewrite(
+  private def stageRewrites(
       spark: SparkSession,
       root: String,
       stage: DataFiles.Rewrites,
       view: Snapshots.ManifestView,
-      rel: String): Unit = {
+      rels: Seq[String],
+      keep: DataFrame => DataFrame = identity,
+      landing: Option[(DataFrame, Seq[String])] = None): Unit = {
+    import graft.sources.snap.SnapTable.{FileMetaCol, PosMetaCol}
+    val live = rels.filterNot(r => Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
+    if (live.isEmpty && landing.isEmpty) return
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getFileStatus(new Path(rootPath, rel)).getLen // a rel no longer live fails here
-    val keep = Snapshots
-      .scanRels(spark, root, view, Seq(rel))
-      .drop(graft.sources.snap.SnapFilters.partValsOf(rel).map(_._1).toSeq: _*)
-    val n = Sources.rewriteFileCount(bytes, Sources.rewriteTargetBytes(spark))
-    stage.into(DataFiles.dirOf(rel))(sub =>
-      Sources.sizedLayout(keep, n).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sub.toString))
+    val target = Sources.rewriteTargetBytes(spark)
+    val dirs = live.map(r => r -> DataFiles.dirOf(r)).toMap
+    // a rel no longer live fails here
+    val bytes = live.map(r => r -> fs.getFileStatus(new Path(rootPath, r)).getLen).toMap
+    val buckets = live.groupBy(dirs).map { case (dir, rs) =>
+      dir -> Sources.rewriteFileCount(rs.map(bytes).sum, target)
+    }
+    val pathCols = (live.flatMap(snap.SnapFilters.partValsOf(_).map(_._1)) ++
+      landing.toSeq.flatMap(_._2)).distinct
+    val oversized = buckets.filter(_._2 > 1)
+    // a task's unshuffled output stays near the target size
+    val tasks =
+      math.max(spark.sparkContext.defaultParallelism, Sources.rewriteFileCount(bytes.values.sum, target))
+    val scan = Option.when(live.nonEmpty)(packedScan(spark, root, view, live, tasks))
+    val dataCols = scan
+      .getOrElse(landing.get._1)
+      .columns
+      .filterNot((pathCols ++ Seq(FileMetaCol, PosMetaCol)).contains)
+      .toSeq
+    val rewritten = scan.map { s =>
+      val dir = typedLit(dirs).apply(Snapshots.relOfScanned(s))
+      keep(s).select(dataCols.map(col) ++ Seq(
+        dir.as(DataFiles.DirCol),
+        (if (oversized.isEmpty) lit(0L)
+         else pmod(col(PosMetaCol), coalesce(typedLit(oversized).apply(dir), lit(1)).cast(LongType)))
+          .as(BucketCol)): _*)
+    }
+    val landed = landing.map { case (rows, partCols) =>
+      // the dir Spark's partitioned writer names for the row's values
+      val seg = partCols.map(c => udf((v: String) => ExternalCatalogUtils.getPartitionPathString(c, v)))
+      rows.select(dataCols.map(col) ++ Seq(
+        concat_ws("/", partCols.zip(seg).map { case (c, f) => f(col(c).cast(StringType)) }: _*)
+          .as(DataFiles.DirCol),
+        lit(0L).as(BucketCol)): _*)
+    }
+    val rows = (rewritten ++ landed).reduce(_ unionByName _)
+    val laid =
+      if (oversized.nonEmpty)
+        rows.repartition(buckets.values.sum + landing.size, col(DataFiles.DirCol), col(BucketCol))
+      else if (landing.nonEmpty) rows.repartition(col(DataFiles.DirCol))
+      else rows
+    stage.intoDirs(sub =>
+      laid
+        .drop(BucketCol)
+        .write
+        .partitionBy(DataFiles.DirCol)
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(sub.toString))
   }
+
+  /** The bucket of a row within its dir in [[stageRewrites]]' layout. */
+  private val BucketCol = "__graft_bucket__"
 
   /** Union two deletion-vector sidecars of the SAME data file into one
     * fresh sidecar — the rebase resolution when both the branch line and
@@ -569,72 +632,69 @@ object DeleteVectors {
       (dvd.size.toLong, dvd.values.map(_._2).sum)
     }
 
-  /** Fold `rels`' vectors under `view` into the data files in ONE landing
-    * and ONE listing commit — the shared body of [[materialize]] (the
-    * committed pointers) and [[purge]] (fresh sidecars overlaid on the
-    * view): each file rewrites without its deleted positions
-    * ([[stageRewrite]]) or, when every recorded row is deleted, just
-    * archives; `added` (staged files and their live rels) lands in the
-    * same swap. The closing commit gives rewritten files fresh stats, and
-    * the folded pointers die with their rels.
+  /** Rewrite `rels` under `view` ([[stageRewrites]]) in ONE landing that
+    * archives them and ONE listing commit — the body of [[materialize]],
+    * [[purge]] and [[Sources.mergeIntoPartitioned]]. The folded pointers
+    * die with their rels.
     */
-  private def fold(
+  private[sources] def fold(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
       rels: Seq[String],
-      added: Seq[(Path, String)] = Seq.empty): Unit = {
+      keep: DataFrame => DataFrame = identity,
+      landing: Option[(DataFrame, Seq[String])] = None): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DataFiles.rewrite(spark, fs, rootPath, rels, added) { stage =>
-      graft.core.Par.each(rels) { rel =>
-        if (Snapshots.fullyDeleted(view.stats.getOrElse(rel, Map.empty[String, ColStat])))
-          require(fs.exists(new Path(rootPath, rel)), s"fold: $rel is not live under $root")
-        else stageRewrite(spark, root, stage, view, rel)
-      }
+    DataFiles.rewrite(spark, fs, rootPath, rels) { stage =>
+      stageRewrites(spark, root, stage, view, rels, keep, landing)
     }(_ => Snapshots.commit(spark, root))
   }
 
-  /** The purge that closes [[Sources.deleteWhere]], [[Sources.updateWhere]]
-    * and [[Sources.mergeIntoPartitioned]] (Delta's `REORG … APPLY (PURGE)`
-    * scoped to one op): the match's fresh sidecars (`written`) overlay
-    * `view` in memory, as [[boundedCommit]]'s threshold rewrite does, and
-    * ONE [[fold]] rewrites every touched file without its deleted
-    * positions, lands `appended` (written into `partCols` dirs) and
-    * commits. No manifest points at the fresh sidecars (vacuum reaps
-    * them): no live file holds a deleted row, no touched file keeps a
-    * vector, untouched files keep theirs — one version, in the table's
-    * own manifest format. A table with no manifest first commits its
-    * pre-state; an op that matches and appends nothing commits nothing.
-    * Returns (files touched, rows deleted).
+  /** The purge that closes [[Sources.deleteWhere]] and
+    * [[Sources.updateWhere]] (Delta's `REORG … APPLY (PURGE)` scoped to
+    * one op): one job counts, per file, the rows of the match scan of
+    * `candidates` where `hit` holds; then one [[fold]] rewrites each file
+    * holding one through `keep`. No vector is written, so no live file
+    * holds a deleted row, no touched file keeps a vector and untouched
+    * files keep theirs — one version, in the table's own manifest format
+    * (a table with none first commits its pre-state). An op that matches
+    * nothing commits nothing. Returns (files touched, rows matched).
     */
   private[sources] def purge(
       spark: SparkSession,
       root: String,
       view: Snapshots.ManifestView,
-      written: Seq[(String, String, Long)],
-      appended: Option[DataFrame] = None,
-      partCols: Seq[String] = Seq.empty): (Long, Long) = {
-    val (changed, newlyDeleted) = pointerUpdatesOf(view, written)
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = DataFiles.stageDir(rootPath)
-    try {
-      val added = appended.fold(Seq.empty[(Path, String)])(df =>
-        stageAppend(spark, fs, rootPath, stage, df, partCols, "mor-adhoc-", view.rels.toSet))
-      if (changed.isEmpty && added.isEmpty) return (0L, 0L)
-      if (view.rels.nonEmpty) Snapshots.ensureBaseline(spark, root)
-      fold(spark, root, view.copy(stats = view.stats ++ changed), changed.keys.toSeq, added)
-    } finally fs.delete(stage, true)
-    (changed.size.toLong, newlyDeleted)
+      candidates: Seq[String],
+      hit: Column,
+      keep: DataFrame => DataFrame): (Long, Long) = {
+    val touched: Seq[(String, Long)] =
+      if (candidates.isEmpty) Seq.empty
+      else {
+        val scan = packedScan(spark, root, view, candidates, spark.sparkContext.defaultParallelism)
+        scan
+          .filter(hit)
+          .groupBy(Snapshots.relOfScanned(scan))
+          .count()
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+          .sortBy(_._1)
+          .toSeq
+      }
+    if (touched.isEmpty) return (0L, 0L)
+    Snapshots.ensureBaseline(spark, root)
+    fold(spark, root, view, touched.map(_._1), keep)
+    (touched.size.toLong, touched.map(_._2).sum)
   }
 
   /** The file set a purge matches over: the latest committed view plus
     * every live file no commit lists yet (the closing listing commit
     * adopts those, so the match must see them), or the live listing alone
     * as an unversioned view when the table has no manifest (or does not
-    * exist). A non-empty view with no recorded schema carries the one
-    * inferred from its files, so the op's scans share one inference.
+    * exist). A non-empty view with no recorded schema carries the union
+    * of its files' footer schemas (`mergeSchema`, the inference a first
+    * schema-recording commit runs), so a rewrite keeps every column any
+    * file holds and the op's scans share one inference.
     */
   private[sources] def liveView(spark: SparkSession, root: String): Snapshots.ManifestView = {
     val rootPath = new Path(root)
@@ -649,7 +709,11 @@ object DeleteVectors {
     committed.copy(
       rels = rels,
       schema = committed.schema.orElse(Option.when(rels.nonEmpty)(
-        Snapshots.inferredSchema(spark, root, rels, new Path(rootPath, _).toString))))
+        spark.read
+          .option("mergeSchema", "true")
+          .option("basePath", root)
+          .parquet(rels.map(new Path(rootPath, _).toString): _*)
+          .schema)))
   }
 
   /** Merge-on-read UPSERT — the streaming-CDC-apply primitive: every
@@ -1379,8 +1443,8 @@ object DeleteVectors {
       committedRels: Set[String]): Seq[(Path, String)] = {
     val writer =
       if (partCols.nonEmpty && !graft.core.LocalFrames.isLocal(df))
-        // co-locate each partition's rows (the mergeIntoPartitioned
-        // small-files discipline): ~one file per touched partition value
+        // co-locate each partition's rows: ~one file per touched
+        // partition value
         df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
       else if (partCols.nonEmpty)
         // a driver-held batch writes from one task, which sorts by the
@@ -1422,7 +1486,7 @@ object DeleteVectors {
     * full Column expressiveness (IN lists, ranges, date arithmetic) with
     * O(DV'd files) driver metadata, never a data read.
     */
-  private def scopeByPartitions(
+  private[sources] def scopeByPartitions(
       spark: SparkSession,
       view: Snapshots.ManifestView,
       rels: Seq[String],

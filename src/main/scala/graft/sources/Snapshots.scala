@@ -3772,7 +3772,7 @@ object Snapshots {
     * through: the reader subtracts each file's deletion vector (the view's
     * recorded pointer) inside the task, splices hive partition values from
     * the path and null-fills ALTER-added columns. `_file` and `_pos`
-    * select as metadata columns ([[dvCoordinates]] maps `_file` back to
+    * select as metadata columns ([[relOfScanned]] maps `_file` back to
     * the rel). A view with no recorded schema (v1) reads with
     * [[inferredSchema]]. `rels` must be non-empty.
     */
@@ -3788,13 +3788,12 @@ object Snapshots {
         .create(table, None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
   }
 
-  /** The deletion-vector coordinates `(rel, pos)` of `rows`, a frame
-    * derived from `scan` (a [[scanRels]] frame with `_file` and `_pos`
-    * selected as plain columns): the reader's `_pos`, and its `_file`
-    * looked up among the scanned files' resolved paths (the same
-    * resolution the reader reports — no path parsing).
+  /** The rel of a row's `_file` in a frame derived from `scan` (a
+    * [[scanRels]] frame with `_file` selected as a plain column), looked
+    * up among the scanned files' resolved paths — the same resolution
+    * the reader reports, no path parsing.
     */
-  private[sources] def dvCoordinates(scan: DataFrame, rows: DataFrame): DataFrame = {
+  private[sources] def relOfScanned(scan: DataFrame): org.apache.spark.sql.Column = {
     val table = org.apache.spark.sql.graft.Bridge
       .logicalPlan(scan)
       .collectFirst {
@@ -3802,13 +3801,10 @@ object Snapshots {
       }
       .collect { case t: graft.sources.snap.SnapTable => t }
       .filter(_.pinnedRels.isDefined)
-      .getOrElse(sys.error("dvCoordinates needs a Snapshots.scanRels frame"))
+      .getOrElse(sys.error("relOfScanned needs a Snapshots.scanRels frame"))
     val byPath = table.pinnedRels.get.map(r => table.pathOf(r) -> r).toMap
     import org.apache.spark.sql.functions.{col, typedLit}
-    import graft.sources.snap.SnapTable.{FileMetaCol, PosMetaCol}
-    rows
-      .select(col(FileMetaCol), col(PosMetaCol))
-      .select(typedLit(byPath).apply(col(FileMetaCol)).as("rel"), col(PosMetaCol).as("pos"))
+    typedLit(byPath).apply(col(graft.sources.snap.SnapTable.FileMetaCol))
   }
 
   /** The schema a v1 manifest's files read with (it records none):

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types.StructType
 
 /** Batch sources & sinks. The reference's entire I/O surface is whole-file
@@ -147,10 +147,7 @@ object Sources {
     }
     // output file count from the LIVE input's ON-DISK bytes (compressed
     // domain — the same domain targetBytes is stated in)
-    val inputBytes = BigInt(live.map(_._2).sum)
-    val nFiles = math.max(1L, (inputBytes / BigInt(targetBytes)).toLong +
-      (if (inputBytes % BigInt(targetBytes) > 0) 1L else 0L))
-    val n = math.min(nFiles, Int.MaxValue.toLong).toInt
+    val n = rewriteFileCount(live.map(_._2).sum, targetBytes)
     val laid =
       if (sortCols.nonEmpty) {
         import org.apache.spark.sql.functions.col
@@ -161,7 +158,7 @@ object Sources {
     // the compacted layout is a maintenance commit: give it a pinnable
     // baseline manifest (the Overwrite wiped any prior history at outPath)
     Snapshots.commit(spark, outPath)
-    nFiles
+    n.toLong
   }
 
   /** Target on-disk bytes per output file for the IN-PLACE rewrite paths
@@ -194,17 +191,6 @@ object Sources {
     val n = math.max(1L, liveBytes / targetBytes + (if (liveBytes % targetBytes > 0L) 1L else 0L))
     math.min(n, Int.MaxValue.toLong).toInt
   }
-
-  /** Lay a rewrite out as `n` output files. The common fits-the-target
-    * case keeps the shuffle-free `coalesce(1)`; an OVERSIZED rewrite
-    * takes one round-robin shuffle of just this rewrite's rows —
-    * `coalesce(n)` cannot SPLIT (the scan may pack many small inputs into
-    * fewer partitions than n), and under-delivering here is exactly the
-    * single-monster-file failure this sizing exists to prevent. The
-    * shuffle is confined to the oversized scope, never the table.
-    */
-  private[sources] def sizedLayout(df: DataFrame, n: Int): DataFrame =
-    if (n <= 1) df.coalesce(1) else df.repartition(n)
 
   /** Dynamic partition overwrite: replace ONLY the partitions present in
     * `df`, leaving every other partition untouched — the partition-level
@@ -392,33 +378,36 @@ object Sources {
   }
 
   /** Targeted row deletion (the GDPR/right-to-erasure operator): the
-    * merge-on-read delete's match ([[DeleteVectors.matchDeletes]]:
-    * manifest range and bloom narrowing, one snapshot scan of the
-    * candidates) closed by one purge commit ([[DeleteVectors.purge]]), so
-    * no live file keeps a deleted row. Only files holding a match are
-    * rewritten (archived outright when nothing survives), vectors they
-    * already carried fold in, untouched files keep their bytes and
-    * vectors: deleting one user from a 100 TB table costs a handful of
-    * file rewrites. NULL-predicate rows are kept (three-valued logic).
-    * Returns (affectedFiles, rowsDeleted).
+    * merge-on-read delete's narrowing
+    * ([[DeleteVectors.predicateCandidates]]: manifest range and bloom
+    * pruning) and match, closed by one purge commit
+    * ([[DeleteVectors.purge]]), so no live file keeps a deleted row. Only
+    * files holding a match are rewritten (archived outright when nothing
+    * survives), vectors they already carried fold in, untouched files
+    * keep their bytes and vectors: deleting one user from a 100 TB table
+    * costs a handful of file rewrites. NULL-predicate rows are kept
+    * (three-valued logic). Returns (affectedFiles, rowsDeleted).
     */
   def deleteWhere(spark: SparkSession, root: String, predicate: Column): (Long, Long) =
     Snapshots.withTableLock(spark, root) {
       val view = DeleteVectors.liveView(spark, root)
-      DeleteVectors.purge(spark, root, view, DeleteVectors.matchDeletes(spark, root, view, predicate))
+      val hit = coalesce(predicate, lit(false))
+      DeleteVectors.purge(
+        spark, root, view, DeleteVectors.predicateCandidates(spark, root, view, predicate), hit,
+        _.filter(!hit))
     }
 
   /** UPDATE … SET — the third row-level DML next to [[deleteWhere]]
     * (erasure) and [[mergeIntoPartitioned]] (upsert): apply `sets`
     * (column → new-value expression) to every row matching `predicate`.
-    * The matched rows' positions are deleted and their updated images
-    * appended, in one purge commit ([[DeleteVectors.purge]]). SQL UPDATE
-    * semantics are kept exactly:
+    * The files holding a matched row are rewritten in place, each row
+    * replaced by its image, in one purge commit ([[DeleteVectors.purge]]),
+    * so an update adds no file. SQL UPDATE semantics are kept exactly:
     *  - every SET right-hand side AND the predicate evaluate against the
-    *    OLD row — all new values come from ONE projection over the
-    *    matched rows, so `SET n = n * 2, u = u + n` uses the pre-update
-    *    `n` in both places (a fold of sequential `withColumn`s would leak
-    *    the updated value into later expressions);
+    *    OLD row — all new values come from ONE projection over the scan,
+    *    so `SET n = n * 2, u = u + n` uses the pre-update `n` in both
+    *    places (a fold of sequential `withColumn`s would leak the updated
+    *    value into later expressions);
     *  - a NULL predicate row is NOT matched (kept unchanged), the same
     *    three-valued rule [[deleteWhere]] applies;
     *  - new values cast to the column's table type;
@@ -451,23 +440,19 @@ object Sources {
         illegalSet.isEmpty,
         s"cannot SET hive partition column(s) ${illegalSet.mkString(", ")}: rows would change " +
           "directories — rewrite partition membership with mergeIntoPartitioned instead")
-      DeleteVectors.predicateMatch(spark, root, view, predicate) match {
-        case None => (0L, 0L)
-        case Some((scan, matched, candidates)) =>
-          val written = DeleteVectors.writeSidecarsOf(spark, root, view, candidates, scan, matched)
-          if (written.isEmpty) (0L, 0L)
-          else {
-            // ONE projection: the predicate and every SET expression see the old row
-            val images = matched.select(schema.fields.toIndexedSeq.map { f =>
-              sets
-                .collectFirst { case (k, e) if k.equalsIgnoreCase(f.name) => e }
-                .getOrElse(col(f.name))
-                .cast(f.dataType)
-                .as(f.name)
-            }: _*)
-            DeleteVectors.purge(spark, root, view, written, Some(images), partCols)
-          }
-      }
+      val hit = coalesce(predicate, lit(false))
+      // ONE projection: the predicate and every SET expression see the old row
+      def images(scan: DataFrame): DataFrame =
+        scan.select(schema.fields.toIndexedSeq.map { f =>
+          sets
+            .collectFirst { case (k, e) if k.equalsIgnoreCase(f.name) =>
+              when(hit, e.cast(f.dataType)).otherwise(col(f.name))
+            }
+            .getOrElse(col(f.name))
+            .as(f.name)
+        } ++ Seq(col(snap.SnapTable.FileMetaCol), col(snap.SnapTable.PosMetaCol)): _*)
+      DeleteVectors.purge(
+        spark, root, view, DeleteVectors.predicateCandidates(spark, root, view, predicate), hit, images)
     }
   }
 
@@ -480,13 +465,17 @@ object Sources {
     * snapshot: compact the changelog to a delta, merge the delta here,
     * and the analytics table is current without a table rewrite.
     *
-    * The merge-on-read upsert's key match
-    * ([[DeleteVectors.matchKeyUpserts]]) on `keyCols :+ partitionCol`
-    * prunes to the delta's own partitions; the delta (FULL table rows)
-    * lands hive-partitioned by `partitionCol` — creating the table if
-    * needed — and one purge commit ([[DeleteVectors.purge]]) rewrites the
-    * files that held a matched row without it. Returns the affected
-    * partition values, sorted.
+    * The files of the delta's own partitions (their typed path values,
+    * the narrowing [[DeleteVectors.materialize]] scopes with) are the
+    * candidates; one fold ([[DeleteVectors.fold]]) rewrites them without
+    * the rows whose `keyCols :+ partitionCol` the delta holds (SQL
+    * equality: a NULL key matches nothing) in the job that lands the
+    * delta (FULL table rows) hive-partitioned by `partitionCol` —
+    * creating the table if needed — and commits once, so no live file
+    * keeps a replaced row. A touched dir gets one file for its survivors
+    * and its delta rows (more when its rewritten files exceed
+    * `spark.graft.rewrite.targetBytes`); untouched partitions keep their
+    * bytes. Returns the affected partition values, sorted.
     */
   def mergeIntoPartitioned(
       spark: SparkSession,
@@ -509,12 +498,20 @@ object Sources {
         val view = DeleteVectors.liveView(spark, root)
         val schema = view.schema.getOrElse(delta.schema) // no table yet: the delta's
         val keys = keyCols :+ partitionCol
-        val (keyFields, sourceKeys, partCols, alive) =
-          DeleteVectors.upsertInputs(view, schema, delta, delta, keys)
-        val written =
-          DeleteVectors.matchKeyUpserts(spark, root, view, alive, sourceKeys, keys, keyFields, partCols)
-        DeleteVectors.purge(
-          spark, root, view, written, Some(DeleteVectors.alignedTo(schema, delta)), Seq(partitionCol))
+        val (_, sourceKeys, _, alive) = DeleteVectors.upsertInputs(view, schema, delta, delta, keys)
+        // the files of the delta's partitions, by their typed path values
+        val candidates =
+          if (alive.isEmpty) Seq.empty
+          else {
+            val inDelta = DeleteVectors.scopeByPartitions(
+              spark, view.copy(partCols = Seq(partitionCol)), alive,
+              col(partitionCol).cast("string").isin(affected: _*))
+            alive.filter(inDelta)
+          }
+        if (view.rels.nonEmpty) Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
+        DeleteVectors.fold(
+          spark, root, view, candidates, _.join(sourceKeys, keys, "left_anti"),
+          Some((DeleteVectors.alignedTo(schema, delta), Seq(partitionCol))))
         affected
       } finally if (owned) delta.unpersist()
     }
@@ -570,8 +567,8 @@ object Sources {
     * Returns (dirsCompacted, filesBefore, filesAfter-for-those-dirs).
     *
     * Scale: per-dir rewrites are independent single-dir Spark jobs,
-    * submitted concurrently (the [[deleteWhere]] discipline — wall clock
-    * is the largest dir, not the sum); untouched dirs are never read,
+    * submitted concurrently (wall clock is the largest dir, not the
+    * sum); untouched dirs are never read,
     * listed cost is the listing the table scan already pays. Unlike
     * [[compactParquet]] (whole-table rewrite to a NEW path), this runs
     * against the live path a maintained table actually serves.
@@ -580,134 +577,119 @@ object Sources {
       spark: SparkSession,
       root: String,
       where: Option[Column] = None): (Long, Long, Long) = {
-    Snapshots.withTableLock(spark, root) {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // keep the byte lengths from the one listing the scan already pays:
-    // they size each scope's rewrite below (no extra getFileStatus RPCs)
-    def dataFiles(dir: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, Long)] = fs
-      .listStatus(dir)
-      .toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map(st => st.getPath -> st.getLen)
-    val partDirs = fs
-      .listStatus(rootPath)
-      .toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .map(_.getPath)
-    // partition-scoped OPTIMIZE: at 100 TB the nightly pass compacts the
-    // day that just closed, not the table — `where` narrows the scopes by
-    // their typed partition values (the scoped-materialize discipline)
-    val scoped = where match {
-      case None => partDirs
-      case Some(pred) => scopeDirs(spark, root, partDirs, pred)
-    }
-    val targets = (if (partDirs.nonEmpty) scoped else Seq(rootPath))
-      .map(d => d -> dataFiles(d))
-      .filter(_._2.length > 1)
-    if (targets.isEmpty) return (0L, 0L, 0L)
-    Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
-    // merge-on-read deletes FOLD during the rewrite (the Delta-OPTIMIZE
-    // discipline): a rewritten file's deleted positions are subtracted, so
-    // its replacement carries no pointer — while DV'd files in scopes this
-    // pass never touches (single-file dirs here) keep their vectors
-    // through the closing commit. One day's MoR delete no longer suspends
-    // the nightly OPTIMIZE of every other partition.
-    val dvView =
-      if (Snapshots.latestVersion(spark, root) > 0L) Some(Snapshots.manifestView(spark, root))
-      else None
     val targetBytes = rewriteTargetBytes(spark)
     val landedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
-    def compactOne(
-        stage: DataFiles.Rewrites,
-        dir: org.apache.hadoop.fs.Path,
-        files: Seq[(org.apache.hadoop.fs.Path, Long)]): Unit = {
-      // provably-empty files (every recorded row MoR-deleted) contribute
-      // nothing: archive without reading a byte
-      val live = files.filterNot { case (f, _) =>
-        dvView.exists(v =>
-          Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
-      }
-      if (live.nonEmpty) {
-        val base = scopeRows(spark, root, fs, rootPath, dvView, live.map(_._1))
-        // output sized from the scope's LIVE on-disk bytes (already in hand
-        // from the listing): a hundreds-of-GB partition rewrites in
-        // parallel to ~targetBytes files, never as one single-task monster
-        // — the compactParquet arithmetic applied in place. coalesce keeps
-        // the scan's own splits (no shuffle); small scopes still land one
-        // file, so prior layouts (and their query hashes) are unchanged.
-        val n = rewriteFileCount(live.map(_._2).sum, targetBytes)
-        landedFiles.addAndGet(stage.into(relOf(fs, rootPath, dir)) { sub =>
-          sizedLayout(base, n).write
-            .mode(SaveMode.Overwrite)
-            .parquet(sub.toString)
-        }.toLong)
-      }
+    val scopes = rewriteScopes(spark, root, where, minFiles = 2) { (stage, dir, rows, liveBytes) =>
+      // output sized from the scope's LIVE on-disk bytes (already in hand
+      // from the listing): a hundreds-of-GB partition rewrites in
+      // parallel to ~targetBytes files, never as one single-task monster
+      // — the compactParquet arithmetic applied in place. A scope that
+      // fits keeps the shuffle-free coalesce(1), so prior layouts (and
+      // their query hashes) are unchanged; an oversized one takes one
+      // round-robin shuffle of its own rows (coalesce(n) cannot split).
+      val n = rewriteFileCount(liveBytes, targetBytes)
+      landedFiles.addAndGet(stage.into(dir) { sub =>
+        (if (n <= 1) rows.coalesce(1) else rows.repartition(n)).write
+          .mode(SaveMode.Overwrite)
+          .parquet(sub.toString)
+      }.toLong)
     }
-    // stage every scope's rewrite, then ONE swap: the originals archive,
-    // the compacted files land and the table commits — a failure anywhere
-    // leaves the table as it was
-    DataFiles.rewrite(spark, fs, rootPath, targets.flatMap(_._2.map(f => relOf(fs, rootPath, f._1)))) {
-      stage => graft.core.Par.each(targets) { case (d, fls) => compactOne(stage, d, fls) }
-    }(_ => Snapshots.commit(spark, root))
     // filesAfter counts LANDED replacement files only — a dir whose every
     // file was provably fully-deleted archives all and lands nothing; an
     // oversized scope lands several ~targetBytes files
-    (targets.length.toLong, targets.map(_._2.length.toLong).sum, landedFiles.get())
-  }
+    (scopes.size.toLong, scopes.map(_.toLong).sum, landedFiles.get())
   }
 
+  /** The in-place maintenance body of [[compactInPlace]] and
+    * [[clusterInPlace]]. Scopes are the hive partition dirs (narrowed by
+    * `where` over their typed values, [[scopeDirs]]) or, unpartitioned,
+    * the root; those holding at least `minFiles` data files rewrite. Each
+    * scope's live rows ([[scopeRows]]) and their on-disk bytes go to
+    * `write`, which stages the scope's replacement into its dir; then ONE
+    * swap archives the originals, lands the replacements and commits — a
+    * failure anywhere leaves the table as it was. Merge-on-read deletes
+    * FOLD during the rewrite (the Delta-OPTIMIZE discipline): a provably
+    * fully-deleted file is archived without a byte read, a rewritten
+    * file's deleted positions are subtracted, and DV'd files in scopes
+    * this pass never touches keep their vectors through the closing
+    * commit. Per-scope rewrites are independent jobs, submitted
+    * concurrently. Returns the file count of each rewritten scope.
+    */
+  private def rewriteScopes(
+      spark: SparkSession,
+      root: String,
+      where: Option[Column],
+      minFiles: Int)(write: (DataFiles.Rewrites, String, DataFrame, Long) => Unit): Seq[Int] =
+    Snapshots.withTableLock(spark, root) {
+      val rootPath = new org.apache.hadoop.fs.Path(root)
+      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // keep the byte lengths from the one listing the scan already pays:
+      // they size each scope's rewrite (no extra getFileStatus RPCs)
+      def dataFiles(dir: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, Long)] = fs
+        .listStatus(dir)
+        .toSeq
+        .filter(st => st.isFile && !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
+        .map(st => st.getPath -> st.getLen)
+      val partDirs = fs
+        .listStatus(rootPath)
+        .toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+        .map(_.getPath)
+      // partition-scoped maintenance: at 100 TB the nightly pass rewrites
+      // the day that just closed, not the table
+      def committed =
+        if (Snapshots.latestVersion(spark, root) > 0L) Some(Snapshots.manifestView(spark, root))
+        else None
+      val scoped = where match {
+        case None => partDirs
+        case Some(pred) => scopeDirs(spark, committed, partDirs, pred)
+      }
+      val targets = (if (partDirs.nonEmpty) scoped else Seq(rootPath))
+        .map(d => d -> dataFiles(d))
+        .filter(_._2.length >= minFiles)
+      if (targets.isEmpty) return Seq.empty
+      Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
+      val dvView = committed
+      DataFiles.rewrite(spark, fs, rootPath, targets.flatMap(_._2.map(f => relOf(fs, rootPath, f._1)))) {
+        stage =>
+          graft.core.Par.each(targets) { case (dir, files) =>
+            val live = files.filterNot { case (f, _) =>
+              dvView.exists(v =>
+                Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
+            }
+            if (live.nonEmpty)
+              write(
+                stage,
+                relOf(fs, rootPath, dir),
+                scopeRows(spark, root, fs, rootPath, dvView, live.map(_._1)),
+                live.map(_._2).sum)
+          }
+      }(_ => Snapshots.commit(spark, root))
+      targets.map(_._2.length)
+    }
+
   /** Which single-level hive partition dirs satisfy `pred` over their
-    * TYPED partition values — the per-dir twin of the scoped
-    * materialize's per-file evaluation: segment values parse as the
-    * declared column type via `try_cast` (an unparseable or sentinel
-    * value reads NULL and falls conservatively out of any value
-    * predicate), and the predicate evaluates in one tiny local job.
+    * TYPED partition values — the scoped materialize's per-file
+    * evaluation ([[DeleteVectors.scopeByPartitions]]) applied to dirs:
+    * values parse as the `view`'s declared column type via `try_cast`
+    * (an unparseable or sentinel value reads NULL and falls
+    * conservatively out of any value predicate), with no Spark job.
     */
   private def scopeDirs(
       spark: SparkSession,
-      root: String,
+      view: Option[Snapshots.ManifestView],
       dirs: Seq[org.apache.hadoop.fs.Path],
       pred: Column): Seq[org.apache.hadoop.fs.Path] = {
     require(
       dirs.nonEmpty,
       "scoped maintenance needs a hive-partitioned table — omit `where` for the whole table")
-    val parsed = dirs.map { d =>
-      val Array(k, raw) = d.getName.split("=", 2)
-      // ONE decode discipline across scoped materialize / upsert
-      // narrowing / scoped maintenance: segValue's sentinel + unescape
-      (d, k, graft.sources.snap.SnapFilters.segValue(raw).orNull)
-    }
-    val partCol = {
-      val cols = parsed.map(_._2).distinct
-      require(cols.size == 1, s"mixed partition columns at one level: $cols")
-      cols.head
-    }
-    val declared = (if (Snapshots.latestVersion(spark, root) > 0L) Snapshots.schemaOf(spark, root) else None)
-      .flatMap(_.fields.find(_.name == partCol))
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        parsed.zipWithIndex.map { case ((_, _, v), i) => Row(i.toLong, v) },
-        1),
-      StructType(Seq(
-        StructField("__graft_scope_idx__", LongType, nullable = false),
-        StructField(partCol, StringType, nullable = true))))
-    val typed = declared match {
-      case Some(f) =>
-        raw.withColumn(
-          partCol,
-          org.apache.spark.sql.functions.expr(s"try_cast(`$partCol` AS ${f.dataType.sql})"))
-      case None => raw
-    }
-    val kept = typed
-      .filter(pred)
-      .select(col("__graft_scope_idx__"))
-      .collect()
-      .map(_.getLong(0))
-      .toSet
-    parsed.zipWithIndex.collect { case ((d, _, _), i) if kept(i.toLong) => d }
+    val cols = dirs.map(_.getName.split("=", 2)(0)).distinct
+    require(cols.size == 1, s"mixed partition columns at one level: $cols")
+    // a dir is scoped as a rel of one file in it
+    val empty = Snapshots.ManifestView(0L, Seq.empty, Map.empty, None, Seq.empty)
+    val kept = DeleteVectors.scopeByPartitions(
+      spark, view.getOrElse(empty).copy(partCols = cols), dirs.map(_.getName + "/_"), pred)
+    dirs.filter(d => kept(d.getName + "/_"))
   }
 
   /** Root-relative rel of a live file path (driver-side string op on the
@@ -775,61 +757,18 @@ object Sources {
       filesPerScope: Int,
       where: Option[Column] = None): (Long, Long) = {
     require(filesPerScope >= 1, s"filesPerScope must be >= 1, got $filesPerScope")
-    Snapshots.withTableLock(spark, root) {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(dir: org.apache.hadoop.fs.Path) = fs
-      .listStatus(dir)
-      .toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map(_.getPath)
-    val partDirs = fs
-      .listStatus(rootPath)
-      .toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .map(_.getPath)
-    // partition-scoped clustering (the compactInPlace discipline): only
-    // the matching scopes range-rewrite; the rest keep their layout
-    val scoped = where match {
-      case None => partDirs
-      case Some(pred) => scopeDirs(spark, root, partDirs, pred)
-    }
-    val targets = (if (partDirs.nonEmpty) scoped else Seq(rootPath))
-      .map(d => d -> dataFiles(d))
-      .filter(_._2.nonEmpty)
-    if (targets.isEmpty) return (0L, 0L)
-    Snapshots.ensureBaseline(spark, root) // pre-state stays pinnable
-    // clustering rewrites EVERY scope, so a clustering pass folds every
-    // deletion vector it meets (compactInPlace discipline) — the rewritten
-    // layout carries no pointers
-    val dvView =
-      if (Snapshots.latestVersion(spark, root) > 0L) Some(Snapshots.manifestView(spark, root))
-      else None
-    def clusterOne(
-        stage: DataFiles.Rewrites,
-        dir: org.apache.hadoop.fs.Path,
-        files: Seq[org.apache.hadoop.fs.Path]): Unit = {
-      val live = files.filterNot { f =>
-        dvView.exists(v =>
-          Snapshots.fullyDeleted(v.stats.getOrElse(relOf(fs, rootPath, f), Map.empty)))
-      }
-      if (live.nonEmpty) {
-        val base = scopeRows(spark, root, fs, rootPath, dvView, live)
-        stage.into(relOf(fs, rootPath, dir)) { sub =>
-          base
-            .repartitionByRange(filesPerScope, key)
-            .sortWithinPartitions(key)
-            .write
-            .mode(SaveMode.Overwrite)
-            .parquet(sub.toString)
-        }
+    // clustering rewrites EVERY matching scope, so a clustering pass folds
+    // every deletion vector it meets — the rewritten layout carries no pointers
+    val scopes = rewriteScopes(spark, root, where, minFiles = 1) { (stage, dir, rows, _) =>
+      stage.into(dir) { sub =>
+        rows
+          .repartitionByRange(filesPerScope, key)
+          .sortWithinPartitions(key)
+          .write
+          .mode(SaveMode.Overwrite)
+          .parquet(sub.toString)
       }
     }
-    // stage every scope, then ONE swap (the compactInPlace protocol)
-    DataFiles.rewrite(spark, fs, rootPath, targets.flatMap(_._2.map(relOf(fs, rootPath, _)))) {
-      stage => graft.core.Par.each(targets) { case (d, fls) => clusterOne(stage, d, fls) }
-    }(_ => Snapshots.commit(spark, root))
-    (targets.length.toLong, targets.map(_._2.length.toLong).sum)
-  }
+    (scopes.size.toLong, scopes.map(_.toLong).sum)
   }
 }

@@ -427,7 +427,7 @@ class SnapTable(
   def pinnedRels: Option[Seq[String]] = pinned.map(_.rels)
 
   // a pinned read resolves each file once: the reader's `_file` and the
-  // DV match scans' rel lookup ([[Snapshots.dvCoordinates]]) see one path
+  // DV match scans' rel lookup ([[Snapshots.relOfScanned]]) see one path
   private val resolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Where `rel` is read from: live, else archived. */

@@ -136,21 +136,31 @@ class DeleteVectorsSpec extends SparkSpec {
       .toSeq
       .sorted
 
+  /** Every file under `dir`'s sidecar tree. */
+  private def sidecarFiles(dir: String): Set[String] = {
+    def walk(f: java.io.File): Seq[String] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
+    val root = new java.io.File(s"$dir/${Snapshots.DvDirName}")
+    if (root.exists()) walk(root).toSet else Set.empty
+  }
+
   /** The purge law of [[Sources.deleteWhere]], [[Sources.updateWhere]] and
     * [[Sources.mergeIntoPartitioned]] over `dir` (rows `start`, with the
     * files of day=2024-01-09 never touched): after every op a RAW parquet
     * read of the live files (no vector applied) equals a plain-Scala model
     * of the rows, no touched file keeps a vector while `keep` (an
-    * untouched file's vector) survives as it was, each op that changes
-    * rows commits exactly one version and an op that matches nothing
-    * commits nothing.
+    * untouched file's vector) survives as it was, no op writes a sidecar,
+    * each op that changes rows commits exactly one version and an op that
+    * matches nothing commits nothing.
     */
   private def purgeLaw(dir: String, start: Seq[(Long, String, Double)], keep: Map[String, (String, Long)]): Unit = {
     var model = start
     def step(expectChange: Boolean)(op: => Any)(next: Seq[(Long, String, Double)] => Seq[(Long, String, Double)]): Unit = {
       val v0 = Snapshots.latestVersion(spark, dir)
+      val sidecars0 = sidecarFiles(dir)
       op
       model = next(model)
+      assert(sidecarFiles(dir) == sidecars0, "a purge writes no sidecar")
       assert(
         Snapshots.latestVersion(spark, dir) == v0 + (if (expectChange) 1L else 0L),
         s"one version per op, none for a no-op (was v$v0, now v${Snapshots.latestVersion(spark, dir)})")
@@ -205,6 +215,41 @@ class DeleteVectorsSpec extends SparkSpec {
     assert(Snapshots.manifestView(spark, dir).schema.isEmpty, "fixture must be a v1 manifest")
     purgeLaw(dir, purgeRows, Map.empty)
     assert(Snapshots.manifestView(spark, dir).schema.isEmpty, "the purge keeps the table's manifest format")
+  }
+
+  test("purge law on a manifest-less dir whose later partition adds a column: no column is lost") {
+    val dir = Files.createTempDirectory("dv_purge_evolved").toString + "/t"
+    Sources.writeParquet(
+      Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-01", 11.0)).toDF("id", "day", "v").repartition(1),
+      dir,
+      partitionCols = Seq("day"))
+    Seq((3L, "2024-01-02", 20.0, "a"), (4L, "2024-01-02", 21.0, "b"), (5L, "2024-01-02", 22.0, "c"))
+      .toDF("id", "day", "v", "tag")
+      .repartition(1)
+      .write
+      .mode("append")
+      .partitionBy("day")
+      .parquet(dir)
+    assert(Snapshots.latestVersion(spark, dir) == 0L, "fixture must have no manifest")
+    def day02Files(): Seq[String] =
+      Snapshots.listDataFiles(spark, dir).filter(_.startsWith("day=2024-01-02/"))
+    def raw: Set[(Long, Double, String)] =
+      spark.read
+        .parquet(s"$dir/day=2024-01-02")
+        .select($"id", $"v", $"tag")
+        .collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
+        .toSet
+    assert(Sources.deleteWhere(spark, dir, $"day" === "2024-01-02" && $"id" === 3L) == ((1L, 1L)))
+    assert(raw == Set((4L, 21.0, "b"), (5L, 22.0, "c")), "the delete's rewrite must keep `tag`")
+    val files = day02Files()
+    assert(Sources.updateWhere(spark, dir, $"id" === 4L, Map("v" -> $"v" * 10)) == ((1L, 1L)))
+    assert(raw == Set((4L, 210.0, "b"), (5L, 22.0, "c")), "the update's rewrite must keep `tag`")
+    assert(day02Files().size == files.size, "an update rewrites in place: the file count stays")
+    assert(
+      spark.read.parquet(s"$dir/day=2024-01-01").select($"id").collect().map(_.getLong(0)).toSet ==
+        Set(1L, 2L),
+      "an untouched partition keeps its rows")
   }
 
   test("compactInPlace FOLDS the rewritten scope's vectors and leaves other scopes pointed") {
@@ -1026,18 +1071,12 @@ class DeleteVectorsSpec extends SparkSpec {
     // fast-forward adopts BOTH vector kinds: the fork file's pointer
     // restates on main, the moved branch file keeps its sidecar pointer —
     // adoption writes no sidecar at all
-    def dvFiles(): Set[String] = {
-      val root = new java.io.File(s"$dir/${Snapshots.DvDirName}")
-      def walk(f: java.io.File): Seq[String] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
-      if (root.exists()) walk(root).toSet else Set.empty
-    }
-    val sidecarsBefore = dvFiles()
+    val sidecarsBefore = sidecarFiles(dir)
     val branchBefore = Snapshots.readBranch(spark, dir, "dev").select($"id", $"day".cast("string"), $"v")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted
     val v = Snapshots.fastForward(spark, dir, "dev")
     assert(v == 2L)
-    assert(dvFiles() == sidecarsBefore, "adoption must write no new .snap-dv file")
+    assert(sidecarFiles(dir) == sidecarsBefore, "adoption must write no new .snap-dv file")
     val liveAfter = Snapshots.readSnapshot(spark, dir).select($"id", $"day".cast("string"), $"v")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sorted
     assert(liveAfter == branchBefore, "the live line reads exactly what the branch read")
