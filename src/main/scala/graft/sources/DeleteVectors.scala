@@ -1065,8 +1065,7 @@ object DeleteVectors {
     val keyFields = keyCols.map(k => schema.fields.find(_.name == k).get)
     val sourceKeys = keySource.select(
       keyFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    val partCols =
-      if (view.partCols.nonEmpty) view.partCols else Snapshots.partitionColsFromRels(view.rels)
+    val partCols = view.layout
     val alive = view.rels.filterNot(r =>
       Snapshots.fullyDeleted(view.stats.getOrElse(r, Map.empty)))
     (keyFields, sourceKeys, partCols, alive)
@@ -1491,8 +1490,7 @@ object DeleteVectors {
       view: Snapshots.ManifestView,
       rels: Seq[String],
       pred: Column): Set[String] = {
-    val partCols =
-      if (view.partCols.nonEmpty) view.partCols else Snapshots.partitionColsFromRels(view.rels)
+    val partCols = view.layout
     require(
       partCols.nonEmpty,
       "scoped materialize needs a hive-partitioned table — omit `where` to fold everything")

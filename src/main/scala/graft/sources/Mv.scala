@@ -1815,9 +1815,7 @@ object Mv {
         val srcView = Snapshots.manifestView(spark, dNew.sourceRoot, v1)
         val srcSchema = srcView.schema.getOrElse(
           sys.error(s"source ${dNew.sourceRoot} records no schema"))
-        val srcPartCols =
-          if (srcView.partCols.nonEmpty) srcView.partCols
-          else Snapshots.partitionColsFromRels(srcView.rels)
+        val srcPartCols = srcView.layout
         val alive = srcView.rels.filterNot(r =>
           Snapshots.fullyDeleted(srcView.stats.getOrElse(r, Map.empty)))
         def groupsUnderBoth(rows: DataFrame): DataFrame =
@@ -1966,9 +1964,7 @@ object Mv {
     // probe below reads driver rows and the recompute filters on them
     val driver = LocalFrames.isLocal(affectedCast)
     lazy val affectedRows = affectedCast.collect()
-    val srcPartCols =
-      if (srcView.partCols.nonEmpty) srcView.partCols
-      else Snapshots.partitionColsFromRels(srcView.rels)
+    val srcPartCols = srcView.layout
     val alive = srcView.rels.filterNot(r =>
       Snapshots.fullyDeleted(srcView.stats.getOrElse(r, Map.empty)))
     // TRACE EXPANSION: the fact-column tuples that can reach the affected

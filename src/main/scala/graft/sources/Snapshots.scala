@@ -124,26 +124,6 @@ object Snapshots {
         })
       .getOrElse(DefaultCheckpointInterval)
 
-  /** Set for the duration of [[checkpoint]]'s commit on ITS thread only —
-    * forcing a full manifest without mutating session-shared conf (a conf
-    * flip would race concurrent callers and silently force every
-    * concurrent commit full during the window).
-    */
-  private val forceFullCheckpoint: ThreadLocal[Boolean] = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
-  }
-
-  /** Deletion-vector pointers the NEXT [[commit]] on this thread must
-    * record per rel, INSTEAD of carrying the previous version's — set by
-    * [[restore]] (the restored state's DV pointers are the TARGET
-    * version's, which may differ from — or be absent relative to — the
-    * latest version's that a plain carry would propagate).
-    */
-  private val dvCarryOverride: ThreadLocal[Option[Map[String, Map[String, ColStat]]]] =
-    new ThreadLocal[Option[Map[String, Map[String, ColStat]]]] {
-      override def initialValue(): Option[Map[String, Map[String, ColStat]]] = None
-    }
-
   /** Commit a FULL manifest checkpoint NOW (next version, file list +
     * stats re-rendered complete, off-interval): bounds the delta
     * reconstruction chain, (re)writes the partition-index sidecar and
@@ -152,18 +132,15 @@ object Snapshots {
     * cold-read load, or to upgrade a table adopted from pre-index
     * manifests.
     */
-  def checkpoint(spark: SparkSession, root: String): Long = {
-    forceFullCheckpoint.set(true)
-    try commit(spark, root)
-    finally forceFullCheckpoint.remove()
-  }
+  def checkpoint(spark: SparkSession, root: String): Long =
+    withTableLock(spark, root)(listingCommit(spark, root, None, None, forceFull = true))
 
   /** Is version `v` a checkpoint (full manifest) under the session's
     * interval policy? v1 is always full — the chain base.
     */
   private def isCheckpointVersion(spark: SparkSession, v: Long): Boolean = {
     val every = checkpointEvery(spark)
-    v == 1L || every <= 1 || v % every == 0L || forceFullCheckpoint.get()
+    v == 1L || every <= 1 || v % every == 0L
   }
 
   /** Parsed-manifest cache, keyed by (qualified path, mtime, length): a
@@ -791,8 +768,8 @@ object Snapshots {
     * query) to plan time (zero opens: the manifest already knows).
     */
   private def fileColStats(
-      conf: org.apache.hadoop.conf.Configuration,
-      file: Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      len: Long,
       rel: String,
       cols: Seq[String]): Map[String, ColStat] = {
     val partPairs: Seq[(String, String)] = rel
@@ -827,10 +804,7 @@ object Snapshots {
     val want = cols.filterNot(fromPath.contains)
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    val fromFooter =
-      try {
+    val fromFooter = {
         import scala.jdk.CollectionConverters._
         // per-column bookkeeping beyond min/max: how many chunks carried
         // stats at all, how many were provably all-null (no value but a
@@ -842,7 +816,7 @@ object Snapshots {
         val nullSum = mutable.Map.empty[String, Long].withDefaultValue(0L)
         val nullsKnown = mutable.Map.empty[String, Boolean].withDefaultValue(true)
         for {
-          block <- reader.getFooter.getBlocks.asScala
+          block <- footer.getBlocks.asScala
           chunk <- block.getColumns.asScala
           name = chunk.getPath.toDotString
           if want.contains(name)
@@ -856,7 +830,7 @@ object Snapshots {
             allNullChunks(name) += 1
         }
         val perChunk = for {
-          block <- reader.getFooter.getBlocks.asScala.toSeq
+          block <- footer.getBlocks.asScala.toSeq
           chunk <- block.getColumns.asScala
           name = chunk.getPath.toDotString
           if want.contains(name)
@@ -899,7 +873,7 @@ object Snapshots {
         // group) — unless the statless groups are provably ALL-NULL, in
         // which case the other groups' interval still bounds every value
         val grouped = perChunk.groupBy(_._1)
-        val blocks = reader.getFooter.getBlocks
+        val blocks = footer.getBlocks
         val rowGroups = blocks.size()
         val rows = {
           import scala.jdk.CollectionConverters._
@@ -925,8 +899,7 @@ object Snapshots {
             nullCountKey(c) -> ColStat("u", "-1", "-1")
         }
         valueStats ++ nullStats ++ Map(RowCountKey -> ColStat("l", rows.toString, rows.toString))
-      } finally reader.close()
-    val len = file.getFileSystem(conf).getFileStatus(file).getLen
+      }
     // a non-sentinel hive partition value is present on every row of the
     // file by construction — null count is exactly zero (the sentinel
     // case fell through to the footer rule above: absent → all rows null)
@@ -952,8 +925,8 @@ object Snapshots {
     * from the manifest ALONE — at 100 TB that is planning from one small
     * file instead of opening N footers per query. v1 manifests (plain
     * path-per-line) keep parsing unchanged.
-    */
-  /** The no-args overload INHERITS the table's existing stats discipline:
+    *
+    * The no-args overload INHERITS the table's existing stats discipline:
     * if the latest manifest was a stats commit, the new commit keeps the
     * same stats columns (incrementally — unchanged files carry forward),
     * so maintenance ops (delete/merge/compact/restore, which all end in
@@ -963,50 +936,18 @@ object Snapshots {
     * concurrent stats commit landing while this writer queues can't be
     * overridden by a stale pre-lock read.
     */
-  def commit(spark: SparkSession, root: String): Long = withTableLock(spark, root) {
-    val prev = latestVersion(spark, root)
-    val inherited = if (prev > 0L) statsColsOf(spark, root, prev) else Seq.empty
-    commit(spark, root, inherited)
-  }
+  def commit(spark: SparkSession, root: String): Long =
+    withTableLock(spark, root)(listingCommit(spark, root, None, None))
 
   /** Commit with stats columns, INHERITING the table's bloom discipline:
     * a caller that re-states statsCols (the SQL INSERT path) must not
     * silently degrade a bloom-indexed table to a stats-only one.
     */
   def commit(spark: SparkSession, root: String, statsCols: Seq[String]): Long =
-    withTableLock(spark, root) {
-      val prev = latestVersion(spark, root)
-      val inheritedBlooms = if (prev > 0L) manifestView(spark, root, prev).bloomCols else Seq.empty
-      commit(spark, root, statsCols, inheritedBlooms)
-    }
+    withTableLock(spark, root)(listingCommit(spark, root, Some(statsCols), None))
 
   def commit(spark: SparkSession, root: String, statsCols0: Seq[String], bloomCols0: Seq[String]): Long =
-    withTableLock(spark, root) {
-      // the table lock serializes maintenance writers, but LOCK-FREE
-      // concurrent appenders ([[commitAppend]]) claim version slots — a
-      // lost slot means one slipped in, so re-run the whole attempt
-      // (re-list: the appender's file must not read as removed in our
-      // manifest; carried-forward stats keep the retry O(delta)). The
-      // bound is WALL TIME, not attempts: a crashed claimant's slot only
-      // frees via the 60 s staleness breaker, which a short attempt
-      // budget could never reach.
-      val deadline = System.currentTimeMillis() + SlotRaceDeadlineMs
-      // CHECK enforcement is attempt-invariant per rel (files are
-      // immutable): remember what each retry already validated so a lost
-      // slot race never re-scans the batch
-      val checksEnforced = scala.collection.mutable.Set.empty[String]
-      var res: Option[Long] = None
-      while (res.isEmpty) {
-        res = commitOnce(spark, root, statsCols0, bloomCols0, checksEnforced)
-        if (res.isEmpty) {
-          if (System.currentTimeMillis() > deadline)
-            sys.error(
-              s"commit on $root could not win a version slot within ${SlotRaceDeadlineMs} ms — giving up")
-          Thread.sleep(100) // let a mid-write claimant's manifest land
-        }
-      }
-      res.get
-    }
+    withTableLock(spark, root)(listingCommit(spark, root, Some(statsCols0), Some(bloomCols0)))
 
   /** How long a writer keeps retrying lost version-slot races before
     * failing: must exceed the stale-claim threshold (60 s) with margin so
@@ -1014,30 +955,280 @@ object Snapshots {
     */
   private val SlotRaceDeadlineMs = 150000L
 
-  private def commitOnce(
+  /** One version as a commit face states it against the latest version:
+    * its header (empty for a plain v1 list), the rels it drops and the
+    * rels it adds or re-states with their complete stats (in `+`-line
+    * order); every other rel carries its line. `line` renders one body
+    * line; `smallest` (the listing commit) keeps the full body when the
+    * delta is not smaller; `valid` is re-checked right before the claim
+    * (false re-runs the attempt at once).
+    */
+  private final case class Next(
+      header: Seq[String],
+      removed: Seq[String] = Seq.empty,
+      upserts: Seq[(String, Map[String, ColStat])] = Seq.empty,
+      line: (String, Map[String, ColStat]) => String = renderFileLine,
+      smallest: Boolean = false,
+      valid: () => Boolean = () => true)
+
+  /** THE commit kernel: the one version-slot claim loop behind every
+    * main-line commit face (listing, append/restate, DDL, clone). Each
+    * attempt reads the latest version FIRST, then lets the face state the
+    * next version against it — or finish without one (`Left`) — renders
+    * it ([[renderVersion]]) and claims slot latest + 1
+    * ([[tryWriteManifest]]). A lost slot means another writer slipped in
+    * (the table lock serializes maintenance writers, but lock-free
+    * [[commitAppend]]s claim slots too): the attempt re-runs against the
+    * new latest version, with the same added-files pass (its work is
+    * cached). The bound is WALL TIME, not attempts: a crashed claimant's
+    * slot only frees via the 60 s staleness breaker, which a short
+    * attempt budget could never reach. `forceFull` renders the version as
+    * a checkpoint; `preEnforced` rels skip their CHECK scan.
+    */
+  private def commitVersion(
       spark: SparkSession,
       root: String,
-      statsCols0: Seq[String],
-      bloomCols0: Seq[String],
-      checksEnforced: scala.collection.mutable.Set[String] = scala.collection.mutable.Set.empty)
-      : Option[Long] = {
-      val rootPath = new Path(root)
-      val fs = fsOf(spark, rootPath)
-      // version BEFORE the listing — the ordering is load-bearing: a
-      // lock-free commitAppend landing DURING a (slow) directory walk
-      // must not have its file recorded as removed. With the version read
-      // first, an appender that commits mid-listing claims OUR slot, our
-      // claim fails, and the retry re-lists; an appender whose file made
-      // the listing but whose commit hasn't landed is simply adopted
-      // (its own commit then finds nothing fresh). Listing-first would
-      // let the appender commit into version-1 and this commit publish a
-      // manifest that silently drops the appended file.
-      val version = latestVersion(spark, root) + 1L
+      face: String,
+      forceFull: Boolean = false,
+      preEnforced: Seq[String] = Seq.empty)(
+      attempt: (Long, Option[ManifestView], AddedFiles) => Either[Long, Next]): Long = {
+    val rootPath = new Path(root)
+    val fs = fsOf(spark, rootPath)
+    val pass = new AddedFiles(spark, root)
+    pass.enforced ++= preEnforced
+    val deadline = System.currentTimeMillis() + SlotRaceDeadlineMs
+    var result = -1L
+    while (result < 0L) {
+      val prevV = latestVersion(spark, root)
+      val prev = if (prevV > 0L) Some(manifestView(spark, root, prevV)) else None
+      attempt(prevV, prev, pass) match {
+        case Left(v) => result = v
+        case Right(next) =>
+          val version = prevV + 1L
+          val body = renderVersion(version, prev, next, forceFull || isCheckpointVersion(spark, version))
+          if (!next.valid()) () // re-validate against the new state at once
+          else if (tryWriteManifest(fs, rootPath, version, body)) result = version
+          else if (System.currentTimeMillis() > deadline)
+            sys.error(s"$face on $root could not win a version slot within $SlotRaceDeadlineMs ms — giving up")
+          else Thread.sleep(100) // let a mid-write claimant's manifest land
+      }
+    }
+    lastCommitFooterReads.set(pass.reads)
+    result
+  }
+
+  /** THE version renderer. DELTA vs checkpoint: off-interval v2 commits
+    * record only what changed vs the previous version — the manifest
+    * WRITE becomes O(delta) like the footer-stat pass (a million-file
+    * table's append commit writes a few lines, not ~100 MB). The full
+    * body (header + every live file's line, sorted by rel) is written
+    * for a checkpoint (`full`), a first version, a plain v1 list, or when
+    * a rel collides with the `+`/`-` line prefixes. The listing commit,
+    * which holds the full list anyway, also keeps the full body when the
+    * delta would not be smaller (restore, a stats-column change); every
+    * other face's delta stays O(delta).
+    */
+  private def renderVersion(
+      version: Long,
+      prev: Option[ManifestView],
+      next: Next,
+      full: Boolean): Seq[String] = {
+    lazy val fullBody: Seq[String] = {
+      val gone = next.removed.toSet ++ next.upserts.map(_._1)
+      val carried = prev.toSeq.flatMap(p =>
+        p.rels.filterNot(gone).map(rel => rel -> p.stats.getOrElse(rel, Map.empty)))
+      next.header ++ (carried ++ next.upserts).sortBy(_._1).map(next.line.tupled)
+    }
+    def bytes(body: Seq[String]) = body.map(_.length + 1L).sum
+    val unsafe =
+      (next.removed ++ next.upserts.map(_._1)).exists(r => r.startsWith("+") || r.startsWith("-"))
+    if (full || prev.isEmpty || next.header.isEmpty || unsafe) fullBody
+    else {
+      val delta = deltaBody(version, next)
+      if (!next.smallest || bytes(delta) < bytes(fullBody)) delta else fullBody
+    }
+  }
+
+  /** A `#delta <version − 1>` body: the header, then `-rel` and `+line`. */
+  private def deltaBody(version: Long, next: Next): Seq[String] =
+    next.header ++ Seq(s"#delta ${version - 1L}") ++ next.removed.map("-" + _) ++
+      next.upserts.map { case (rel, st) => "+" + next.line(rel, st) }
+
+  /** The listing commit's body line: the stats columns, their null
+    * counts, rows and bytes, then the deletion-vector keys.
+    */
+  private def statsLine(statsCols: Seq[String])(rel: String, st: Map[String, ColStat]): String =
+    if (st.isEmpty) rel
+    else
+      rel + "\t" + ((statsCols ++ statsCols.map(nullCountKey) :+ RowCountKey :+ LengthKey) ++
+        st.keys.filter(isDvKey).toSeq.sorted)
+        .flatMap(c => st.get(c).map(cs => s"${hex(c)}:${cs.typ}:${hex(cs.min)}:${hex(cs.max)}"))
+        .mkString("\t")
+
+  /** The added-files pass of one commit call, kept across slot-race
+    * attempts (a rel names one immutable file): CHECK constraints
+    * enforced once per rel, each footer opened once for both its stats
+    * and its schema, sidecars built once per rel. `reads` counts the
+    * footers opened — what [[lastCommitFooterReads]] reports.
+    */
+  private final class AddedFiles(spark: SparkSession, root: String) {
+    private val rootPath = new Path(root)
+    private val opened = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val footers = new java.util.concurrent.ConcurrentHashMap[
+      String, (Seq[String], Map[String, ColStat], org.apache.spark.sql.types.StructType)]()
+    private val sidecarsBuilt = mutable.Set.empty[String]
+
+    /** Rels whose CHECK constraints passed against the current check set. */
+    val enforced: mutable.Set[String] = mutable.Set.empty[String]
+
+    def reads: Long = opened.get()
+
+    /** CHECK constraints gate new files before any sidecar or manifest
+      * side effect — a violating batch refuses here and readers never
+      * see it (zero cost when the table has no checks). `dv`: vectors an
+      * adopted file already carries (its live rows are what is checked).
+      */
+    def enforce(
+        rels: Seq[String],
+        schema: Option[org.apache.spark.sql.types.StructType],
+        dv: Map[String, Map[String, ColStat]] = Map.empty): Unit = {
+      val todo = rels.filterNot(enforced)
+      Constraints.enforce(spark, root, todo, schema, dv)
+      enforced ++= todo
+    }
+
+    /** Opens the footers `rels` still need — parallel driver metadata
+      * I/O; `cols` Some re-opens a footer read for other stats columns.
+      */
+    private def open(rels: Seq[String], cols: Option[Seq[String]]): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      graft.core.Par.each(rels.distinct.filter(rel =>
+        Option(footers.get(rel)).forall(f => cols.exists(_ != f._1)))) { rel =>
+        opened.incrementAndGet()
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(rootPath, rel), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val want = cols.getOrElse(Seq.empty)
+        try
+          footers.put(rel, (
+            want,
+            fileColStats(r.getFooter, in.getLength, rel, want),
+            org.apache.spark.sql.graft.BridgeSchema.footerSchema(spark, r.getFooter.getFileMetaData.getSchema)))
+        finally r.close()
+      }
+    }
+
+    /** Footer stats of `rels` over `cols`. */
+    def stats(rels: Seq[String], cols: Seq[String]): Map[String, Map[String, ColStat]] = {
+      open(rels, Some(cols))
+      rels.map(rel => rel -> footers.get(rel)._2).toMap
+    }
+
+    /** Physical schemas of `rels`, in order, as `spark.read.parquet`
+      * infers them (the session's conversion flags), minus its job.
+      */
+    private def schemas(rels: Seq[String]): Seq[org.apache.spark.sql.types.StructType] = {
+      open(rels, None)
+      rels.map(footers.get(_)._3)
+    }
+
+    /** A table recording schema for the first time: when the layout has
+      * NO hive path columns the inference reduces to the data schemas —
+      * read the footers driver-side (bounded batch) and, when every
+      * footer agrees (the overwhelmingly common single-write first
+      * commit; identical schemas merge to themselves in any order), skip
+      * the Spark job the mergeSchema read launches. Any disagreement, any
+      * path column, or a large batch keeps the full inference, whose
+      * merge order is authoritative.
+      */
+    def inferred(all: Seq[String], partCols: Seq[String]): org.apache.spark.sql.types.StructType = {
+      val pathCols = layoutOf(partCols, all)
+      val footers = if (pathCols.nonEmpty || all.size > 256) Seq.empty else schemas(all)
+      if (footers.nonEmpty && footers.forall(_ == footers.head))
+        org.apache.spark.sql.graft.BridgeSchema.asNullable(footers.head)
+      else spark.read.option("mergeSchema", "true").parquet(root).schema
+    }
+
+    /** The recorded schema evolved by what the `fresh` files carry
+      * ([[mergeEvolved]]) — O(delta) I/O, the same incremental
+      * discipline as the footer stats. When every partition column is
+      * declared (its declared type wins regardless of path inference)
+      * the inference reduces to the DATA schemas: the fresh footers merge
+      * driver-side in rel order — same converter, same fold as
+      * mergeSchema's SchemaMergeUtils, without the Spark job
+      * DataFrameReader inference launches. A path column the declared
+      * schema does not know keeps the full inference (it types the
+      * column from the path strings).
+      */
+    def evolved(
+        base: org.apache.spark.sql.types.StructType,
+        fresh: Seq[String],
+        all: Seq[String],
+        partCols: Seq[String]): org.apache.spark.sql.types.StructType = {
+      val pathCols = layoutOf(partCols, all).toSet
+      if (fresh.isEmpty) base
+      else {
+        val inferred =
+          if (pathCols.forall(base.fieldNames.contains))
+            // asNullable mirrors the relation-derived schema of the Spark
+            // read (footers keep parquet required/optional; the read
+            // forces nullable)
+            org.apache.spark.sql.graft.BridgeSchema.asNullable(
+              schemas(fresh).reduce(org.apache.spark.sql.graft.BridgeSchema.mergeDataSchemas))
+          else
+            spark.read
+              .option("mergeSchema", "true")
+              .option("basePath", root)
+              .parquet(fresh.map(rel => new Path(rootPath, rel).toString): _*)
+              .schema
+        mergeEvolved(base, inferred, root, pathCols)
+      }
+    }
+
+    /** Bloom/NDV/SUM sidecars BEFORE the manifest lands: a reader of
+      * version N must never see its #bloomcols promise unfulfilled. A rel
+      * names one immutable file forever (archive invariant), so a sidecar
+      * keyed by (rel, col) is computed ONCE — commits only build the
+      * missing pairs. SUM sidecars ride the pass even on a bloom-less
+      * stats table — manifest-only SUM/AVG must not silently require
+      * declared blooms.
+      */
+    def sidecars(rels: Seq[String], bloomCols: Seq[String], statsCols: Seq[String]): Unit = {
+      val todo = rels.filterNot(sidecarsBuilt)
+      if (todo.nonEmpty && (bloomCols.nonEmpty || statsCols.nonEmpty)) {
+        buildSidecars(spark, root, todo, bloomCols, statsCols = statsCols)
+        sidecarsBuilt ++= todo
+      }
+    }
+  }
+
+  /** The listing commit: the next version records exactly the files
+    * [[listDataFiles]] finds. `statsCols0`/`bloomCols0` None inherit the
+    * latest version's discipline; `forceFull` is [[checkpoint]]'s;
+    * `dvOverride` is [[restore]]'s — the deletion-vector entries every
+    * rel records INSTEAD of carrying the latest version's. Caller holds
+    * the table lock.
+    */
+  private def listingCommit(
+      spark: SparkSession,
+      root: String,
+      statsCols0: Option[Seq[String]],
+      bloomCols0: Option[Seq[String]],
+      forceFull: Boolean = false,
+      dvOverride: Option[Map[String, Map[String, ColStat]]] = None): Long = {
+    commitVersion(spark, root, "commit", forceFull) { (_, prevView, pass) =>
+      // the kernel read the latest version BEFORE this listing — the
+      // ordering is load-bearing: a lock-free commitAppend landing DURING
+      // a (slow) directory walk must not have its file recorded as
+      // removed. With the version read first, an appender that commits
+      // mid-listing claims OUR slot, our claim fails, and the retry
+      // re-lists; an appender whose file made the listing but whose
+      // commit hasn't landed is simply adopted (its own commit then finds
+      // nothing fresh). Listing-first would let the appender commit into
+      // version-1 and this commit publish a manifest that silently drops
+      // the appended file.
       val files = listDataFiles(spark, root)
-      val dir = manifestDir(rootPath)
-      fs.mkdirs(dir)
-      val prevView: Option[ManifestView] =
-        if (version > 1L) Some(manifestView(spark, root, version - 1L)) else None
+      val prevRels = prevView.map(_.rels.toSet).getOrElse(Set.empty[String])
+      val newRels = files.filterNot(prevRels)
       // DDL state carries forward on EVERY commit: dropped-column
       // tombstones (a later inference must not resurrect a dropped
       // column from old files) and the declared hive layout
@@ -1045,131 +1236,77 @@ object Snapshots {
       val partCols = prevView.map(_.partCols).getOrElse(Seq.empty)
       // a stale caller re-stating a since-dropped stats/bloom column must
       // not resurrect it in the table's discipline
-      val statsCols = statsCols0.filterNot(dropped.contains)
-      val bloomCols = bloomCols0.filterNot(dropped.contains)
+      val statsCols =
+        statsCols0.getOrElse(prevView.map(_.statsCols).getOrElse(Seq.empty)).filterNot(dropped.contains)
+      val bloomCols =
+        bloomCols0.getOrElse(prevView.map(_.bloomCols).getOrElse(Seq.empty)).filterNot(dropped.contains)
       val declared = prevView.flatMap(_.schema)
-      // CHECK constraints gate the version's NEW files before any
-      // sidecar or manifest side effect — a violating batch refuses here
-      // and readers never see it (O(new files), zero when no checks;
-      // rels a lost slot race already validated are skipped — immutable)
-      val toEnforce = files
-        .filterNot(prevView.map(_.rels.toSet).getOrElse(Set.empty[String]))
-        .filterNot(checksEnforced)
-      Constraints.enforce(spark, root, toEnforce, declared)
-      checksEnforced ++= toEnforce
+      pass.enforce(newRels, declared)
       // once a table records schema metadata it never degrades back to a
       // bare file list: created/evolved schemas, tombstones and layout
       // must survive stats-less commits too
       val v2 = statsCols.nonEmpty || declared.isDefined || dropped.nonEmpty || partCols.nonEmpty
-      // Deletion-vector pointers are COMMIT-LAYER state, not footer state:
-      // a full recompute (new stats columns, adopted table) reads footers
-      // that know nothing of them, so every surviving rel's DV entries
-      // carry from the previous version (or the restore override) — a
-      // commit that silently dropped a DV pointer would resurrect the
+      require(
+        bloomCols.isEmpty || statsCols.nonEmpty,
+        "bloom sidecars ride on a v2 stats commit — pass statsCols (at least the partition column)")
+      // Deletion-vector pointers are COMMIT-LAYER state, not footer
+      // state: a full recompute (new stats columns, adopted table) reads
+      // footers that know nothing of them, so every surviving rel's DV
+      // entries carry from the previous version (or the restore override)
+      // — a commit that silently dropped a DV pointer would resurrect the
       // deleted rows on the next read.
-      val dvSource: Map[String, Map[String, ColStat]] =
-        dvCarryOverride
-          .get()
-          .getOrElse(prevView.map(_.stats).getOrElse(Map.empty[String, Map[String, ColStat]]))
+      val dvSource = dvOverride.getOrElse(prevView.map(_.stats).getOrElse(Map.empty))
       def withDv(rel: String, st: Map[String, ColStat]): Map[String, ColStat] = {
         val dv = dvSource.get(rel).map(dvEntries).getOrElse(Map.empty[String, ColStat])
-        if (dvCarryOverride.get().isDefined) st.filterNot(e => isDvKey(e._1)) ++ dv
+        if (dvOverride.isDefined) st.filterNot(e => isDvKey(e._1)) ++ dv
         else st ++ dv // carried entries keep their own; fresh footer reads gain prev's
       }
-      val statsByRel = scala.collection.mutable.Map.empty[String, Map[String, ColStat]]
-      val body: Seq[String] =
-        if (!v2) files
+      // INCREMENTAL stats: a rel path names one immutable file forever
+      // (never reused — see the archive invariant), so the previous
+      // manifest's per-file stats are still exact for every file it
+      // lists; only files NEW since that manifest need a footer read. At
+      // 100 TB this turns the append-commit from O(table) footer opens
+      // into O(delta). Carried forward only when the stats-column set is
+      // unchanged (else recompute everything), and only entries that
+      // carry the null counts this writer records — a pre-null-count
+      // entry re-reads its footer ONCE.
+      val entries: Map[String, Map[String, ColStat]] =
+        if (!v2) Map.empty
+        else if (statsCols.isEmpty)
+          // stat-less v2 commit: lines are bare rels EXCEPT where a DV
+          // pointer must carry (dropping it would resurrect deleted rows)
+          files.map(rel => rel -> withDv(rel, Map.empty)).toMap
+        else {
+          val prevStats = prevView.filter(_.statsCols == statsCols).map(_.stats).getOrElse(Map.empty)
+          val carried = files.map { rel =>
+            rel -> prevStats.get(rel).filter(st =>
+              st.nonEmpty && statsCols.forall(c => st.contains(nullCountKey(c))))
+          }
+          val read = pass.stats(carried.collect { case (rel, None) => rel }, statsCols)
+          carried.map { case (rel, st) => rel -> withDv(rel, st.getOrElse(read(rel))) }.toMap
+        }
+      val header =
+        if (!v2) Seq.empty
         else {
           // The recorded schema is the DECLARED one evolved by what new
-          // data actually carries: start from the previous manifest's
-          // schema (keeps ALTER-added columns no file has yet, dropped
-          // tombstones, and declared widenings) and merge in the footer
-          // schemas of files NEW since that manifest — O(delta) I/O, the
-          // same incremental discipline as the footer stats. A table
-          // recording schema for the first time pays one full
-          // mergeSchema inference (same order as its first stats pass).
-          // A table truncated to zero live files carries the declared
-          // schema forward so pinned reads of the empty version stay
-          // typed.
-          val evolved: org.apache.spark.sql.types.StructType =
-            if (files.isEmpty)
-              declared.getOrElse(new org.apache.spark.sql.types.StructType())
-            else
-              declared match {
-                case None =>
-                  // a table recording schema for the first time: when the
-                  // layout has NO hive path columns the inference reduces
-                  // to the data schemas — read the footers driver-side
-                  // (bounded batch) and, when every footer agrees (the
-                  // overwhelmingly common single-write first commit;
-                  // identical schemas merge to themselves in any order),
-                  // skip the Spark job the mergeSchema read launches. Any
-                  // disagreement, any path column, or a large batch keeps
-                  // the full inference, whose merge order is authoritative.
-                  val pathColsFirst =
-                    (if (partCols.nonEmpty) partCols else partitionColsFromRels(files)).toSet
-                  val firstFooters: Option[org.apache.spark.sql.types.StructType] =
-                    if (pathColsFirst.nonEmpty || files.size > 256) None
-                    else {
-                      val fs = new Array[org.apache.spark.sql.types.StructType](files.size)
-                      graft.core.Par.each(files.zipWithIndex) { case (rel, i) =>
-                        fs(i) = footerSchemaOf(spark, new Path(rootPath, rel))
-                      }
-                      if (fs.forall(_ == fs(0)))
-                        Some(org.apache.spark.sql.graft.BridgeSchema.asNullable(fs(0)))
-                      else None
-                    }
-                  firstFooters.getOrElse(
-                    spark.read.option("mergeSchema", "true").parquet(root).schema)
-                case Some(base) =>
-                  val prevRels = prevView.map(_.rels.toSet).getOrElse(Set.empty[String])
-                  val newRels = files.filterNot(prevRels)
-                  val pathColsHere =
-                    (if (partCols.nonEmpty) partCols else partitionColsFromRels(files)).toSet
-                  if (newRels.isEmpty) base
-                  else if (pathColsHere.forall(base.fieldNames.contains)) {
-                    // every partition column is already declared (its
-                    // declared type wins in mergeEvolved regardless of
-                    // path inference), so the delta inference reduces to
-                    // the DATA schemas: merge the new files' footers
-                    // driver-side — same converter, same fold as
-                    // mergeSchema's SchemaMergeUtils, WITHOUT the Spark
-                    // job DataFrameReader inference launches per commit
-                    val footers =
-                      new Array[org.apache.spark.sql.types.StructType](newRels.size)
-                    // reads parallel (driver metadata I/O), fold in rel
-                    // order — deterministic appended-column order
-                    graft.core.Par.each(newRels.zipWithIndex) { case (rel, i) =>
-                      footers(i) = footerSchemaOf(spark, new Path(rootPath, rel))
-                    }
-                    // asNullable mirrors the relation-derived schema the
-                    // Spark read produced here before (footers keep
-                    // parquet required/optional; the read forces nullable)
-                    val inferred = org.apache.spark.sql.graft.BridgeSchema.asNullable(
-                      footers.reduce(org.apache.spark.sql.graft.BridgeSchema.mergeDataSchemas))
-                    mergeEvolved(base, inferred, root, pathColsHere)
-                  } else
-                    // a path column the declared schema does not know —
-                    // keep the full inference (it types the column from
-                    // the path strings)
-                    mergeEvolved(
-                      base,
-                      spark.read
-                        .option("mergeSchema", "true")
-                        .option("basePath", root)
-                        .parquet(newRels.map(rel => new Path(rootPath, rel).toString): _*)
-                        .schema,
-                      root,
-                      pathColsHere)
-              }
+          // data actually carries: the previous manifest's schema (keeps
+          // ALTER-added columns no file has yet, dropped tombstones, and
+          // declared widenings) merged with the footer schemas of files
+          // NEW since that manifest. A table recording schema for the
+          // first time pays one full inference; a table truncated to zero
+          // live files carries the declared schema forward so pinned
+          // reads of the empty version stay typed.
+          val evolved =
+            if (files.isEmpty) declared.getOrElse(new org.apache.spark.sql.types.StructType())
+            else declared.fold(pass.inferred(files, partCols))(pass.evolved(_, newRels, files, partCols))
           val schemaRec =
             org.apache.spark.sql.types.StructType(evolved.filterNot(f => dropped.contains(f.name)))
           // which hive path columns are canonically rendered in EVERY
           // file — recorded so a cold planner can consume partition
           // filters without sweeping the list (this commit path is
           // already O(table): it listed the directory)
-          val pathColsEff = if (partCols.nonEmpty) partCols else partitionColsFromRels(files)
-          val header = renderHeader(
+          val pathColsEff = layoutOf(partCols, files)
+          renderHeader(
             Some(schemaRec),
             statsCols,
             bloomCols,
@@ -1181,105 +1318,31 @@ object Snapshots {
               else None,
             nFiles = Some(files.size.toLong),
             pathCols = if (files.nonEmpty) Some(pathColsEff) else None)
-          if (statsCols.isEmpty) {
-            // stat-less v2 commit: lines are bare rels EXCEPT where a DV
-            // pointer must carry (dropping it would resurrect deleted rows)
-            files.foreach(rel => statsByRel(rel) = withDv(rel, Map.empty))
-            header ++ files.map(rel => renderFileLine(rel, statsByRel(rel)))
-          } else {
-          val conf = spark.sparkContext.hadoopConfiguration
-          // INCREMENTAL stats: a rel path names one immutable file forever
-          // (never reused — see the archive invariant), so the previous
-          // manifest's per-file stats are still exact for every file it
-          // lists; only files NEW since that manifest need a footer read.
-          // At 100 TB this turns the append-commit from O(table) footer
-          // opens into O(delta) — the difference between a million opens
-          // and one per appended file. Carried forward only when the
-          // stats-column set is unchanged (else recompute everything).
-          val prevStats: Map[String, Map[String, ColStat]] =
-            if (version > 1L && statsColsOf(spark, root, version - 1L) == statsCols)
-              fileStats(spark, root, version - 1L)
-            else Map.empty
-          // carried entries must also carry the null counts this writer
-          // records — a pre-null-count entry re-reads its footer ONCE and
-          // is carried forward thereafter; footer reads are independent
-          // metadata I/O, run in parallel on the driver
-          val stats = files.toIndexedSeq.map { rel =>
-            rel -> prevStats.get(rel).filter(st =>
-              st.nonEmpty && statsCols.forall(c => st.contains(nullCountKey(c))))
-          }
-          val read = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-          graft.core.Par.each(stats.collect { case (rel, None) => rel }) { rel =>
-            read.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, statsCols))
-          }
-          lastCommitFooterReads.set(read.size.toLong)
-          stats.foreach { case (rel, st) => statsByRel(rel) = withDv(rel, st.getOrElse(read.get(rel))) }
-          header ++ stats.map { case (rel, _) =>
-            val st = statsByRel(rel)
-            if (st.isEmpty) rel
-            else
-              rel + "\t" + ((statsCols ++ statsCols.map(nullCountKey) :+ RowCountKey :+ LengthKey) ++
-                st.keys.filter(isDvKey).toSeq.sorted)
-                .flatMap(c => st.get(c).map(cs => s"${hex(c)}:${cs.typ}:${hex(cs.min)}:${hex(cs.max)}"))
-                .mkString("\t")
-          }
-          }
         }
-      require(
-        bloomCols.isEmpty || statsCols.nonEmpty,
-        "bloom sidecars ride on a v2 stats commit — pass statsCols (at least the partition column)")
-      // bloom sidecars BEFORE the manifest lands: a reader of version N
-      // must never see its #bloomcols promise unfulfilled. A rel names one
-      // immutable file forever (archive invariant), so a sidecar keyed by
-      // (rel, col) is computed ONCE — commits only build the missing
-      // pairs, the same O(delta) discipline as the footer stats.
-      // SUM sidecars ride the pass even on a bloom-less stats table —
-      // manifest-only SUM/AVG must not silently require declared blooms
-      if (bloomCols.nonEmpty || statsCols.nonEmpty)
-        buildSidecars(spark, root, files, bloomCols, statsCols = statsCols)
-      // DELTA vs checkpoint: off-interval v2 commits record only what
-      // changed vs the previous version — the manifest WRITE becomes
-      // O(delta) like the footer-stat pass (a million-file table's append
-      // commit writes a few lines, not ~100 MB). Falls back to the full
-      // body when the delta wouldn't be smaller (restore, stats-column
-      // change) or a rel collides with the +/- line prefixes.
-      val chosen: Seq[String] =
-        if (!v2 || isCheckpointVersion(spark, version) || prevView.isEmpty) body
-        else {
-          val prev = prevView.get
-          val header = body.filter(_.startsWith("#"))
-          val fileLines = body.filterNot(_.startsWith("#"))
-          val lineByRel = fileLines.map(l => l.split("\t").head -> l).toMap
-          val prevRels = prev.rels.toSet
-          val filesSet = files.toSet
-          val removed = prev.rels.filterNot(filesSet).sorted
-          val changedOrAdded = files.filter { rel =>
-            !prevRels.contains(rel) ||
-            prev.stats.getOrElse(rel, Map.empty) != statsByRel.getOrElse(rel, Map.empty)
-          }.sorted
-          val unsafe =
-            (removed ++ changedOrAdded).exists(r => r.startsWith("+") || r.startsWith("-"))
-          if (unsafe) body
-          else {
-            val deltaBody = header ++ Seq(s"#delta ${version - 1L}") ++
-              removed.map("-" + _) ++ changedOrAdded.map(rel => "+" + lineByRel(rel))
-            if (deltaBody.map(_.length + 1L).sum < body.map(_.length + 1L).sum) deltaBody
-            else body
-          }
-        }
-      if (tryWriteManifest(fs, rootPath, version, chosen)) Some(version) else None
+      pass.sidecars(files, bloomCols, statsCols)
+      val filesSet = files.toSet
+      def entry(rel: String) = entries.getOrElse(rel, Map.empty[String, ColStat])
+      Right(Next(
+        header,
+        removed = prevView.toSeq.flatMap(_.rels).filterNot(filesSet).sorted,
+        upserts = files
+          .filter(rel => !prevRels(rel) || prevView.flatMap(_.stats.get(rel)).getOrElse(Map.empty) != entry(rel))
+          .map(rel => rel -> entry(rel)),
+        line = statsLine(statsCols),
+        smallest = true))
     }
+  }
 
   /** O(delta) append commit: record `addedRels` (root-relative paths of
     * data files the caller ALREADY wrote under the table root) as the
     * next version WITHOUT listing the directory — the writer knows what
     * it added, so a million-file table's streaming epoch costs one
-    * manifest-chain read, the new files' footer stats, and a few-line
-    * delta write. The table's stats/bloom/DDL discipline carries forward;
-    * the recorded schema evolves by what the new files carry (same rules
-    * as [[commit]]). Rels already in the previous version are ignored
-    * (the exactly-once replay case); an empty fresh set returns the
-    * previous version unchanged — no empty manifest churn.
+    * manifest-chain read, the new files' footers, and a few-line delta
+    * write. The table's stats/bloom/DDL discipline carries forward; the
+    * recorded schema evolves by what the new files carry (same rules as
+    * [[commit]]). Rels already in the previous version are ignored (the
+    * exactly-once replay case); an empty fresh set returns the previous
+    * version unchanged — no empty manifest churn.
     *
     * CONCURRENCY: append commits are LOCK-FREE optimistic — pure file
     * additions never conflict with each other, so two appenders don't
@@ -1288,167 +1351,186 @@ object Snapshots {
     * rename) decides races: a loser re-reads the new latest version,
     * REBASES its delta on it (per-file stats are immutable and cached
     * across attempts — the retry is metadata-only), and claims the next
-    * slot, bounded times. Safe against concurrent maintenance too: the
-    * locked [[commit]] path re-lists and retries when an appender takes
-    * its slot, so neither side ever publishes a manifest that drops the
-    * other's files.
-    */
-  /** `checksPreEnforced`: set ONLY by a caller that already enforced the
-    * current check set over exactly `addedRels` AND holds the table lock
-    * (fast-forward — addCheck takes the same lock, so the set cannot
-    * change under it); the commit then skips its own enforcement scan
-    * instead of reading the same bytes twice.
+    * slot. Safe against concurrent maintenance too: the locked [[commit]]
+    * path re-lists and retries when an appender takes its slot, so
+    * neither side ever publishes a manifest that drops the other's files.
+    *
+    * `checksPreEnforced`: set ONLY by a caller that already enforced the
+    * current check set over exactly `addedRels`; the commit then skips
+    * its own enforcement scan instead of reading the same bytes twice (a
+    * changed check set still re-validates).
     */
   def commitAppend(
       spark: SparkSession,
       root: String,
       addedRels: Seq[String],
-      checksPreEnforced: Boolean = false): Long = {
+      checksPreEnforced: Boolean = false): Long =
+    commitChange(spark, root, addedRels, Seq.empty, Map.empty, Map.empty, checksPreEnforced, lockFree = true)
+
+  /** Commit a new version that RE-STATES the per-file stats of existing
+    * rels — same file, same bytes, changed metadata (the deletion-vector
+    * commit: a merge-on-read DELETE updates the touched files' DV
+    * pointers and nothing else) — and/or adds and removes files in the
+    * SAME version. Caller holds the table lock (DV commits are
+    * maintenance — they must serialize with other row-removing ops);
+    * lock-free APPENDS may still take version slots mid-flight, which is
+    * safe (an append never touches an existing rel's stats) — the slot
+    * claim loop rebases like every other commit.
+    *
+    * `addedRels`: data files the caller already landed under the root
+    * (the merge-on-read UPDATE/MERGE shape — deletes restate pointers,
+    * reinserted rows arrive as new files, ONE atomic commit covers both),
+    * under the table's stats/bloom discipline like [[commitAppend]]'s.
+    * `removedRels`: rels the caller already ARCHIVED to drop from the
+    * manifest (the bounded-MoR rewrite: a file whose deleted fraction
+    * crossed the threshold is replaced instead of pointed at).
+    * `addedDv`: deletion-vector stat entries to merge onto an added rel's
+    * footer stats — what a branch fast-forward needs when an adopted file
+    * already carries a vector (footer reads know nothing of DV state).
+    * `checksPreEnforced`: the caller scanned exactly `addedRels` under the
+    * same lock.
+    */
+  private[sources] def commitRestated(
+      spark: SparkSession,
+      root: String,
+      restated: Map[String, Map[String, ColStat]],
+      addedRels: Seq[String] = Seq.empty,
+      removedRels: Seq[String] = Seq.empty,
+      addedDv: Map[String, Map[String, ColStat]] = Map.empty,
+      checksPreEnforced: Boolean = false): Long = withTableLock(spark, root) {
+    require(
+      restated.nonEmpty || addedRels.nonEmpty || removedRels.nonEmpty,
+      "commitRestated: nothing to commit")
+    require(
+      removedRels.toSet.intersect(restated.keySet).isEmpty,
+      "commitRestated: a rel cannot be both restated and removed")
+    require(
+      removedRels.toSet.intersect(addedRels.toSet).isEmpty,
+      "commitRestated: a rel cannot be both added and removed")
+    commitChange(spark, root, addedRels, removedRels, restated, addedDv, checksPreEnforced, lockFree = false)
+  }
+
+  /** The one body behind [[commitAppend]] and [[commitRestated]]: the
+    * next version is the latest one with `removed0` dropped, `restated`
+    * re-stated and `added0` added. `lockFree` (the append face, which
+    * takes no lock): added rels the latest version already lists are
+    * skipped, a candidate no longer live must have been adopted by some
+    * manifest, and the CHECK set's fingerprint is re-read at the claim.
+    * Otherwise every named rel must be (restated, removed) or not be
+    * (added) in the latest version.
+    */
+  private def commitChange(
+      spark: SparkSession,
+      root: String,
+      added0: Seq[String],
+      removed0: Seq[String],
+      restated: Map[String, Map[String, ColStat]],
+      addedDv: Map[String, Map[String, ColStat]],
+      checksPreEnforced: Boolean,
+      lockFree: Boolean): Long = {
     val rootPath = new Path(root)
     val fs = fsOf(spark, rootPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    // per-rel stats and blooms are attempt-invariant (a rel names one
-    // immutable file): computed once, reused across rebase attempts
-    val newStats = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-    var bloomsBuilt = false
-    // the check-set FINGERPRINT the last enforcement validated against:
-    // this face is lock-free, so an addCheck (which holds the table lock
-    // this path never takes) can land between our validation and our slot
-    // claim — a changed fingerprint forces a re-validation
-    var enforcedChecks: Option[String] =
-      if (checksPreEnforced) Some(Constraints.fingerprint(spark, root)) else None
-    // the fresh files' merged footer schema is attempt-invariant unless a
-    // concurrent DDL changes the declared base — cache it keyed by that
-    // base so a rebase retry is metadata-only (like the stats and blooms)
-    var evolvedCache: Option[(Option[org.apache.spark.sql.types.StructType],
-      Option[org.apache.spark.sql.types.StructType])] = None
-    val deadline = System.currentTimeMillis() + SlotRaceDeadlineMs
-    var result = -1L
-    while (result < 0L) {
-      val prevV = latestVersion(spark, root)
+    val added = added0.distinct.sorted
+    val removed = removed0.distinct.sorted
+    // the check-set FINGERPRINT the enforcement validated against: the
+    // lock-free face never takes the table lock an addCheck holds, so a
+    // check can land between our validation and our slot claim — a
+    // changed fingerprint forces a re-validation
+    var checkedAt =
+      if (checksPreEnforced && lockFree) Some(Constraints.fingerprint(spark, root)) else None
+    val face = if (lockFree) "commitAppend" else "commitRestated"
+    val preEnforced = if (checksPreEnforced) added else Nil
+    commitVersion(spark, root, face, preEnforced = preEnforced) { (prevV, latest, pass) =>
       require(
         prevV > 0L,
-        s"commitAppend($root): no manifest yet — adopt the table with commit() first")
-      val prev = manifestView(spark, root, prevV)
+        if (lockFree) s"commitAppend($root): no manifest yet — adopt the table with commit() first"
+        else s"commitRestated($root): no manifest committed yet")
+      val prev = latest.get
       val prevRels = prev.rels.toSet
-      val candidates = addedRels.distinct.filterNot(prevRels).sorted
-      // a candidate that is neither in the previous manifest nor live was
-      // ARCHIVED by a concurrent writer — but archived does NOT always
-      // mean adopted: a maintenance commit that LISTED the file archives
-      // it after rewriting its rows (they are in the table — skip), while
-      // an INSERT OVERWRITE archives every live file of its partitions
-      // WITHOUT adopting rows that were never committed. Silently
-      // skipping the second case would drop acknowledged rows, so the
-      // skip is allowed only when some committed manifest provably listed
-      // the rel; otherwise this is a real write conflict — fail loudly so
-      // the appender rewrites its data and retries.
-      val fresh = candidates.filter { rel =>
-        if (fs.exists(new Path(rootPath, rel))) true
-        else {
-          val arch = new Path(new Path(rootPath, ArchiveDirName), rel)
-          if (fs.exists(arch)) {
-            if (relEverCommitted(spark, root, rel, fs.getFileStatus(arch).getModificationTime))
-              false // adopted and rewritten by maintenance: rows are in the table
-            else
-              sys.error(
-                s"commitAppend($root): $rel was archived by a concurrent overwrite before this " +
-                  "append committed — its rows were never adopted by any manifest; rewrite the " +
-                  "data files and retry the append")
-          } else
-            sys.error(s"commitAppend($root): $rel is not a live file under the table root")
-        }
-      }
-      if (fresh.isEmpty) result = prevV
-      else {
-        val version = prevV + 1L
-        val statsCols = prev.statsCols
-        // CHECK constraints gate the appended files BEFORE sidecars or
-        // the manifest land; attempt-invariant while the check SET is
-        // (rels are immutable) — a concurrently-recorded check changes
-        // the fingerprint and forces a re-validation on the retry
-        val checkFp = Constraints.fingerprint(spark, root)
-        if (!enforcedChecks.contains(checkFp)) {
-          Constraints.enforce(spark, root, fresh, prev.schema)
-          enforcedChecks = Some(checkFp)
-        }
-        // evolved schema: the declared base merged with what the new
-        // files carry — one O(delta) footer-schema read, computed once
-        // and reused across rebase attempts (recomputed only if a
-        // concurrent DDL changed the declared base)
-        val evolved = evolvedCache match {
-          case Some((base, result0)) if base == prev.schema => result0
-          case _ =>
-            val computed = prev.schema.map { base =>
-              mergeEvolved(
-                base,
-                spark.read
-                  .option("mergeSchema", "true")
-                  .option("basePath", root)
-                  .parquet(fresh.map(rel => new Path(rootPath, rel).toString): _*)
-                  .schema,
-                root,
-                (if (prev.partCols.nonEmpty) prev.partCols
-                 else partitionColsFromRels(prev.rels ++ fresh)).toSet)
+      val fresh =
+        if (lockFree)
+          // a candidate that is neither in the previous manifest nor live
+          // was ARCHIVED by a concurrent writer — but archived does NOT
+          // always mean adopted: a maintenance commit that LISTED the file
+          // archives it after rewriting its rows (they are in the table —
+          // skip), while an INSERT OVERWRITE archives every live file of
+          // its partitions WITHOUT adopting rows that were never
+          // committed. Silently skipping the second case would drop
+          // acknowledged rows, so the skip is allowed only when some
+          // committed manifest provably listed the rel; otherwise this is
+          // a real write conflict — fail loudly so the appender rewrites
+          // its data and retries.
+          added.filterNot(prevRels).filter { rel =>
+            if (fs.exists(new Path(rootPath, rel))) true
+            else {
+              val arch = new Path(new Path(rootPath, ArchiveDirName), rel)
+              if (fs.exists(arch)) {
+                if (relEverCommitted(spark, root, rel, fs.getFileStatus(arch).getModificationTime))
+                  false // adopted and rewritten by maintenance: rows are in the table
+                else
+                  sys.error(
+                    s"commitAppend($root): $rel was archived by a concurrent overwrite before this " +
+                      "append committed — its rows were never adopted by any manifest; rewrite the " +
+                      "data files and retry the append")
+              } else
+                sys.error(s"commitAppend($root): $rel is not a live file under the table root")
             }
-            evolvedCache = Some((prev.schema, computed))
-            computed
-        }
-        if (statsCols.nonEmpty) {
-          val missing = fresh.filterNot(newStats.containsKey)
-          val reads = new java.util.concurrent.atomic.AtomicLong(0L)
-          graft.core.Par.each(missing) { rel =>
-            reads.incrementAndGet()
-            newStats.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, statsCols))
           }
-          lastCommitFooterReads.set(reads.get())
+        else {
+          val missing = (restated.keys ++ removed).filterNot(prevRels)
+          require(
+            missing.isEmpty,
+            s"commitRestated($root): rel(s) not in v$prevV: ${missing.take(3).mkString(", ")}")
+          val dupes = added.filter(prevRels)
+          require(
+            dupes.isEmpty,
+            s"commitRestated($root): added rel(s) already in v$prevV: ${dupes.take(3).mkString(", ")}")
+          added
         }
-        if ((prev.bloomCols.nonEmpty || statsCols.nonEmpty) && !bloomsBuilt) {
-          buildSidecars(spark, root, fresh, prev.bloomCols, statsCols = statsCols)
-          bloomsBuilt = true
+      if (fresh.isEmpty && restated.isEmpty && removed.isEmpty) Left(prevV)
+      else {
+        if (lockFree) {
+          val fp = Constraints.fingerprint(spark, root)
+          if (!checkedAt.contains(fp)) {
+            pass.enforced.clear()
+            checkedAt = Some(fp)
+          }
         }
-        def statOf(rel: String): Map[String, ColStat] =
-          Option(newStats.get(rel)).getOrElse(Map.empty)
+        pass.enforce(fresh, prev.schema, addedDv)
+        val stats =
+          if (prev.statsCols.isEmpty) Map.empty[String, Map[String, ColStat]]
+          else pass.stats(fresh, prev.statsCols)
+        val removedSet = removed.toSet
+        val all = prev.rels.filterNot(removedSet) ++ fresh
+        val evolved = prev.schema.map(pass.evolved(_, fresh, all, prev.partCols))
+        pass.sidecars(fresh, prev.bloomCols, prev.statsCols)
         val header = renderHeader(
           evolved.map(s =>
-            org.apache.spark.sql.types
-              .StructType(s.filterNot(f => prev.dropped.contains(f.name)))),
-          statsCols,
+            org.apache.spark.sql.types.StructType(s.filterNot(f => prev.dropped.contains(f.name)))),
+          prev.statsCols,
           prev.bloomCols,
           prev.dropped,
           prev.partCols,
           // canonicality carries O(delta): the previous version's recorded
-          // set intersected with what THIS slice's paths render canonically
+          // set intersected with what the added paths render canonically
           // (an unknown — pre-partcanon — base stays unknown)
           partCanon = headerView(spark, root, prevV)
             .flatMap(_.partCanon)
-            .map(pc => canonicalPathCols(fresh, pc, evolved.orElse(prev.schema))),
-          nFiles = Some((prev.rels.size + fresh.size).toLong),
-          pathCols = Some(
-            if (prev.partCols.nonEmpty) prev.partCols
-            else partitionColsFromRels(prev.rels ++ fresh)))
-        val freshLines = fresh.map(rel => renderFileLine(rel, statOf(rel)))
-        val body =
-          if (isCheckpointVersion(spark, version) ||
-            fresh.exists(r => r.startsWith("+") || r.startsWith("-")))
-            header ++ (prev.rels.map(rel => rel -> prev.stats.getOrElse(rel, Map.empty)) ++
-              fresh.map(rel => rel -> statOf(rel)))
-              .sortBy(_._1)
-              .map { case (rel, st) => renderFileLine(rel, st) }
-          else header ++ Seq(s"#delta $prevV") ++ freshLines.map("+" + _)
-        // re-read the check fingerprint AT the claim: the stats/bloom
-        // builds above can take long enough for an addCheck to land
-        // mid-attempt — a changed set retries the attempt (the builds are
-        // cached, so the retry re-validates and re-claims, nothing more)
-        if (enforcedChecks.exists(_ != Constraints.fingerprint(spark, root))) {
-          enforcedChecks = None
-        } else if (tryWriteManifest(fs, rootPath, version, body)) result = version
-        else if (System.currentTimeMillis() > deadline)
-          sys.error(
-            s"commitAppend on $root could not win a version slot within ${SlotRaceDeadlineMs} ms — giving up")
-        else Thread.sleep(100) // another writer claimed the slot: rebase and retry
+            .map(pc => if (fresh.isEmpty) pc else canonicalPathCols(fresh, pc, evolved)),
+          nFiles = Some(all.size.toLong),
+          pathCols = Some(layoutOf(prev.partCols, all)))
+        Right(Next(
+          header,
+          removed,
+          restated.toSeq.sortBy(_._1) ++ fresh.map(rel =>
+            rel -> (stats.getOrElse(rel, Map.empty) ++ addedDv.getOrElse(rel, Map.empty))),
+          // re-read the check fingerprint AT the claim: the stats/sidecar
+          // builds above can take long enough for an addCheck to land
+          // mid-attempt (the builds are cached, so the retry re-validates
+          // and re-claims, nothing more)
+          valid = () => !lockFree || checkedAt.contains(Constraints.fingerprint(spark, root))))
       }
     }
-    result
   }
 
   /** Was `rel` ever listed by a committed manifest? Walks versions
@@ -1484,133 +1566,6 @@ object Snapshots {
     older.map(_._1).sorted(Ordering[Long].reverse).exists(listedBy)
   }
 
-  /** Commit a new version that RE-STATES the per-file stats of existing
-    * rels — same file list, same bytes, changed metadata (the
-    * deletion-vector commit: a merge-on-read DELETE updates the touched
-    * files' DV pointers and nothing else). O(restated) delta write on
-    * off-checkpoint versions, like [[commitAppend]]. Caller holds the
-    * table lock (DV commits are maintenance — they must serialize with
-    * other row-removing ops); lock-free APPENDS may still take version
-    * slots mid-flight, which is safe (an append never touches an existing
-    * rel's stats) — the slot-claim loop rebases like every other commit.
-    */
-  /** `addedRels`: data files the caller already landed under the root to
-    * record in the SAME version (the merge-on-read UPDATE/MERGE shape —
-    * deletes restate pointers, reinserted rows arrive as new files, ONE
-    * atomic commit covers both). Their footer stats and bloom sidecars
-    * follow the table's discipline, computed once across retry attempts.
-    * `removedRels`: rels the caller already ARCHIVED to drop from the
-    * manifest (the bounded-MoR rewrite: a file whose deleted fraction
-    * crossed the threshold is replaced instead of pointed at).
-    */
-  /** `addedDv`: deletion-vector stat entries to merge onto an added
-    * rel's freshly-computed footer stats — what a branch fast-forward
-    * needs when an adopted file already carries a vector (footer reads
-    * know nothing of DV state).
-    */
-  private[sources] def commitRestated(
-      spark: SparkSession,
-      root: String,
-      restated: Map[String, Map[String, ColStat]],
-      addedRels: Seq[String] = Seq.empty,
-      removedRels: Seq[String] = Seq.empty,
-      addedDv: Map[String, Map[String, ColStat]] = Map.empty,
-      checksPreEnforced: Boolean = false): Long = withTableLock(spark, root) {
-    require(
-      restated.nonEmpty || addedRels.nonEmpty || removedRels.nonEmpty,
-      "commitRestated: nothing to commit")
-    require(
-      removedRels.toSet.intersect(restated.keySet).isEmpty,
-      "commitRestated: a rel cannot be both restated and removed")
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val added = addedRels.distinct.sorted
-    val removed = removedRels.distinct.sorted
-    require(
-      removed.toSet.intersect(added.toSet).isEmpty,
-      "commitRestated: a rel cannot be both added and removed")
-    val newStats = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-    var bloomsBuilt = false
-    // pre-enforced (see commitAppend's note): the caller scanned exactly
-    // these rels under the same lock — the set cannot have changed
-    var checksEnforced = checksPreEnforced
-    val deadline = System.currentTimeMillis() + SlotRaceDeadlineMs
-    var result = -1L
-    while (result < 0L) {
-      val prevV = latestVersion(spark, root)
-      require(prevV > 0L, s"commitRestated($root): no manifest committed yet")
-      val prev = manifestView(spark, root, prevV)
-      val missing = (restated.keys ++ removed).filterNot(prev.rels.toSet)
-      require(
-        missing.isEmpty,
-        s"commitRestated($root): rel(s) not in v$prevV: ${missing.take(3).mkString(", ")}")
-      val dupes = added.filter(prev.rels.toSet)
-      require(
-        dupes.isEmpty,
-        s"commitRestated($root): added rel(s) already in v$prevV: ${dupes.take(3).mkString(", ")}")
-      // CHECK constraints gate the added files (upsert/CDC images, branch
-      // adoptions) before sidecars or the manifest land; attempt-invariant.
-      // An adopted branch file may arrive ALREADY vectored (a branch MoR
-      // delete hit a branch append) — enforce over its live rows only, the
-      // same view the committed manifest will serve
-      if (added.nonEmpty && !checksEnforced) {
-        Constraints.enforce(
-          spark, root, added, prev.schema, addedDv)
-        checksEnforced = true
-      }
-      if (prev.statsCols.nonEmpty) {
-        val missingStats = added.filterNot(newStats.containsKey)
-        graft.core.Par.each(missingStats) { rel =>
-          newStats.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, prev.statsCols))
-        }
-      }
-      if ((prev.bloomCols.nonEmpty || prev.statsCols.nonEmpty) && added.nonEmpty && !bloomsBuilt) {
-        buildSidecars(spark, root, added, prev.bloomCols, statsCols = prev.statsCols)
-        bloomsBuilt = true
-      }
-      def statOf(rel: String): Map[String, ColStat] =
-        Option(newStats.get(rel)).getOrElse(Map.empty[String, ColStat]) ++
-          addedDv.getOrElse(rel, Map.empty[String, ColStat])
-      val version = prevV + 1L
-      val removedSet = removed.toSet
-      val header = renderHeader(
-        prev.schema,
-        prev.statsCols,
-        prev.bloomCols,
-        prev.dropped,
-        prev.partCols,
-        partCanon = headerView(spark, root, prevV)
-          .flatMap(_.partCanon)
-          .map(pc =>
-            if (added.isEmpty) pc
-            else canonicalPathCols(added, pc, prev.schema)),
-        nFiles = Some((prev.rels.size - removed.size + added.size).toLong),
-        pathCols = Some(
-          if (prev.partCols.nonEmpty) prev.partCols
-          else partitionColsFromRels(prev.rels.filterNot(removedSet) ++ added)))
-      val unsafe =
-        (restated.keys ++ added ++ removed).exists(r => r.startsWith("+") || r.startsWith("-"))
-      val body =
-        if (isCheckpointVersion(spark, version) || unsafe)
-          header ++ (prev.rels.filterNot(removedSet).map(rel =>
-            rel -> restated.getOrElse(rel, prev.stats.getOrElse(rel, Map.empty))) ++
-            added.map(rel => rel -> statOf(rel)))
-            .sortBy(_._1)
-            .map { case (rel, st) => renderFileLine(rel, st) }
-        else
-          header ++ Seq(s"#delta $prevV") ++ removed.map("-" + _) ++
-            (restated.toSeq.sortBy(_._1) ++ added.map(rel => rel -> statOf(rel)))
-              .map { case (rel, st) => "+" + renderFileLine(rel, st) }
-      if (tryWriteManifest(fs, rootPath, version, body)) result = version
-      else if (System.currentTimeMillis() > deadline)
-        sys.error(
-          s"commitRestated on $root could not win a version slot within ${SlotRaceDeadlineMs} ms")
-      else Thread.sleep(100)
-    }
-    result
-  }
-
   /** Rels whose deletion-vector pointer CHANGED at version `v` relative
     * to v−1, with the old and new (sidecar rel, count): what the change
     * feed and the streaming source's change-commit detection key on. A
@@ -1638,8 +1593,17 @@ object Snapshots {
     }
   }
 
-  /** Atomic version-slot CLAIM + manifest write — the primitive both the
-    * locked commits and the lock-free concurrent appenders build on.
+  /** Same-JVM slot claims: `create(claim, false)` is check-then-act on
+    * the local filesystem (HDFS's create is server-side atomic), so two
+    * THREADS of one driver could both win it — the realistic contention
+    * mode on local[*]. A putIfAbsent here makes in-process claims truly
+    * atomic; cross-process local-FS writers carry the same best-effort
+    * caveat the table lock documents.
+    */
+  private val jvmClaims = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Atomic version-slot CLAIM + manifest write — the primitive the
+    * commit kernel ([[commitVersion]]) claims every version through.
     *
     * The claim is a CREATE-EXCLUSIVE `.claim-v…` marker (atomic on local
     * FS and HDFS; an object store would swap in a conditional PUT) — NOT
@@ -1651,15 +1615,6 @@ object Snapshots {
     * break the claim with the same rename-to-grave discipline the table
     * lock uses. `false` = slot lost — the caller rebases and retries.
     */
-  /** Same-JVM slot claims: `create(claim, false)` is check-then-act on
-    * the local filesystem (HDFS's create is server-side atomic), so two
-    * THREADS of one driver could both win it — the realistic contention
-    * mode on local[*]. A putIfAbsent here makes in-process claims truly
-    * atomic; cross-process local-FS writers carry the same best-effort
-    * caveat the table lock documents.
-    */
-  private val jvmClaims = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[sources] def tryWriteManifest(
       fs: FileSystem,
       rootPath: Path,
@@ -1668,18 +1623,10 @@ object Snapshots {
     val dir = manifestDir(rootPath)
     fs.mkdirs(dir)
     val target = manifestPath(rootPath, version)
-    val claim0 = new Path(dir, f".claim-v$version%010d")
-    if (fs.exists(target)) {
-      // the slot is decided forever (versions never reused) — reap the
-      // orphan claim a winner that crashed between its target rename and
-      // claim delete left behind (the staleness breaker can't: it
-      // requires target ABSENCE). Best-effort; the winner's own release
-      // is ownership-checked and tolerates the file vanishing.
-      try if (fs.exists(claim0)) fs.delete(claim0, false)
-      catch { case _: Exception => () }
-      return false
-    }
-    val claim = claim0
+    // a decided slot (versions are never reused) loses inside the claim:
+    // the create fails on an orphan claim, which the loser then reaps,
+    // or the claim wins and finds the target present
+    val claim = new Path(dir, f".claim-v$version%010d")
     val owner = java.util.UUID.randomUUID().toString
     val claimKey = claim.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
     if (jvmClaims.putIfAbsent(claimKey, owner) != null) return false
@@ -1741,8 +1688,9 @@ object Snapshots {
     if (!header.headOption.exists(_.startsWith("#graft-manifest"))) None
     else {
       val (schema, statsCols, bloomCols, dropped, partCols) = parseHeader(header.toSeq)
-      val canon = header.find(_.startsWith("#partcanon")).map { l =>
-        l.stripPrefix("#partcanon").trim match {
+      // `-` (or nothing) is the recorded empty set
+      def colsOf(tag: String): Option[Seq[String]] = header.find(_.startsWith(tag)).map { l =>
+        l.stripPrefix(tag).trim match {
           case "-" | "" => Seq.empty[String]
           case cols => cols.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
         }
@@ -1750,16 +1698,11 @@ object Snapshots {
       val nFiles = header
         .find(_.startsWith("#nfiles "))
         .flatMap(l => scala.util.Try(l.stripPrefix("#nfiles ").trim.toLong).toOption)
-      val pathCols = header.find(_.startsWith("#pathcols")).map { l =>
-        l.stripPrefix("#pathcols").trim match {
-          case "-" | "" => Seq.empty[String]
-          case cols => cols.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-        }
-      }
       val base = header
         .find(_.startsWith("#delta "))
         .map(_.stripPrefix("#delta ").trim.toLong)
-      Some(HeaderView(schema, statsCols, bloomCols, dropped, partCols, canon, nFiles, pathCols, base))
+      Some(HeaderView(
+        schema, statsCols, bloomCols, dropped, partCols, colsOf("#partcanon"), nFiles, colsOf("#pathcols"), base))
     }
   }
 
@@ -1804,12 +1747,13 @@ object Snapshots {
   private def partCanonLine(canon: Seq[String]): String =
     s"#partcanon ${if (canon.isEmpty) "-" else canon.mkString(",")}"
 
-  /** THE one manifest-header renderer — every commit path (full commit,
-    * lock-free append, DDL, clone) funnels through it, so the header
-    * format is one function and a new field can never be half-adopted
-    * (this round's clone bug was exactly a header site drifting from the
-    * others). `pathCols = Some(Seq.empty)` renders the known-flat
-    * sentinel; None omits the line (unknown).
+  /** THE one manifest-header renderer — every face of the commit kernel
+    * ([[commitVersion]]: listing, append/restate, DDL, clone) and the
+    * branch delta funnel through it, so the header format is one function
+    * and a new field can never be half-adopted (a clone bug was once
+    * exactly a header site drifting from the others). `pathCols =
+    * Some(Seq.empty)` renders the known-flat sentinel; None omits the
+    * line (unknown).
     */
   private def renderHeader(
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -2204,6 +2148,12 @@ object Snapshots {
       .map(_.split("/").dropRight(1).toSeq.filter(_.contains("=")).map(_.split("=", 2)(0)))
       .getOrElse(Seq.empty)
 
+  /** The effective hive layout: the declared partition columns, else the
+    * ones the file layout implies.
+    */
+  private[sources] def layoutOf(partCols: Seq[String], rels: Seq[String]): Seq[String] =
+    if (partCols.nonEmpty) partCols else partitionColsFromRels(rels)
+
   /** A metadata-only commit: next manifest version with the previous
     * version's file list and per-file stats carried VERBATIM (no data
     * I/O, no footer opens — DDL touches metadata, period) under a new
@@ -2218,61 +2168,25 @@ object Snapshots {
       partCols: Seq[String],
       statsCols: Seq[String],
       bloomCols: Seq[String]): Long = withTableLock(spark, root) {
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
     // DDL touches metadata only: off-checkpoint versions commit as a
     // header-only DELTA (the file list + stats carry via the chain) — a
-    // metadata commit on a million-file table writes a few hundred bytes.
-    // A lost version slot means a lock-free appender slipped in: rebase
-    // on its version and retry, bounded.
-    val deadline = System.currentTimeMillis() + SlotRaceDeadlineMs
-    var result = -1L
-    while (result < 0L) {
-      val version = latestVersion(spark, root) + 1L
+    // metadata commit on a million-file table writes a few hundred bytes
+    commitVersion(spark, root, "DDL commit") { (prevV, prev, _) =>
       // canonicality carries through DDL: dropped columns leave the set;
       // sanctioned widenings (int→long) render identically so the set is
       // still exact. A fresh table records the layout's canonical-domain
       // columns (vacuously true over zero files; the first data commit
       // recomputes from the real listing).
       val canon =
-        if (version == 1L)
+        if (prev.isEmpty)
           (if (partCols.nonEmpty) Some(canonicalPathCols(Seq.empty, partCols, Some(schema)))
            else None)
-        else
-          headerView(spark, root, version - 1L)
-            .flatMap(_.partCanon)
-            .map(_.filterNot(dropped.contains))
-      def hdr(n: Long, eff: Seq[String]): Seq[String] =
-        renderHeader(
-          Some(schema), statsCols, bloomCols, dropped, partCols, canon, Some(n), Some(eff))
-      val body =
-        if (version == 1L) hdr(0L, partCols)
-        else if (isCheckpointVersion(spark, version)) {
-          val prev = manifestView(spark, root, version - 1L)
-          val eff = if (partCols.nonEmpty) partCols else partitionColsFromRels(prev.rels)
-          hdr(prev.rels.size.toLong, eff) ++
-            prev.rels.map(rel => renderFileLine(rel, prev.stats.getOrElse(rel, Map.empty)))
-        } else {
-          // header-only delta: file count and effective layout are the
-          // previous version's, carried from its header (or the cached
-          // view for pre-#nfiles manifests)
-          val prevHdr = headerView(spark, root, version - 1L)
-          val prevN = prevHdr
-            .flatMap(_.nFiles)
-            .getOrElse(manifestView(spark, root, version - 1L).rels.size.toLong)
-          val eff = prevHdr.flatMap(_.pathCols).getOrElse {
-            if (partCols.nonEmpty) partCols
-            else partitionColsFromRels(manifestView(spark, root, version - 1L).rels)
-          }
-          hdr(prevN, eff) ++ Seq(s"#delta ${version - 1L}")
-        }
-      if (tryWriteManifest(fs, rootPath, version, body)) result = version
-      else if (System.currentTimeMillis() > deadline)
-        sys.error(
-          s"DDL commit on $root could not win a version slot within ${SlotRaceDeadlineMs} ms — giving up")
-      else Thread.sleep(100)
+        else headerView(spark, root, prevV).flatMap(_.partCanon).map(_.filterNot(dropped.contains))
+      val rels = prev.map(_.rels).getOrElse(Seq.empty)
+      Right(Next(renderHeader(
+        Some(schema), statsCols, bloomCols, dropped, partCols, canon, Some(rels.size.toLong),
+        Some(layoutOf(partCols, rels)))))
     }
-    result
   }
 
   /** Create an EMPTY snapshot table: directory + a v1 manifest recording
@@ -2366,8 +2280,7 @@ object Snapshots {
       var dropped = view.dropped
       var statsCols = view.statsCols
       var bloomCols = view.bloomCols
-      val layout =
-        if (view.partCols.nonEmpty) view.partCols else partitionColsFromRels(view.rels)
+      val layout = view.layout
       ops.foreach {
         case DdlChange.AddCols(cols) =>
           require(cols.nonEmpty, "addColumns: no columns given")
@@ -2687,20 +2600,6 @@ object Snapshots {
         sidecarsWritten(root, spec, sums)
       }
     }
-  }
-
-  /** One file's physical schema straight from its parquet footer (driver
-    * metadata I/O) with the session's conversion flags — what
-    * `spark.read.parquet(file).schema` infers, minus the Spark job recent
-    * inference versions launch per call.
-    */
-  private def footerSchemaOf(spark: SparkSession, p: Path): org.apache.spark.sql.types.StructType = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)))
-    try org.apache.spark.sql.graft.BridgeSchema
-      .footerSchema(spark, r.getFooter.getFileMetaData.getSchema)
-    finally r.close()
   }
 
   /** Executor-safe sidecar kernel: everything the distributed build's task
@@ -3305,31 +3204,22 @@ object Snapshots {
           dstFs.mkdirs(to.getParent)
           if (!org.apache.hadoop.fs.FileUtil.copy(fs, from, dstFs, to, false, false, conf))
             sys.error(s"clone copy failed: $from -> $to")
+          def copySidecar(path: (Path, String, String) => Path, c: String): Unit = {
+            val src = path(srcPath, rel, c)
+            if (fs.exists(src)) {
+              val dst = path(dstPath, rel, c)
+              dstFs.mkdirs(dst.getParent)
+              org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, false, conf)
+            }
+          }
+          // the NDV register sidecar rides the bloom discipline, SUM
+          // sidecars the stats one (keyed by rel — still valid under the
+          // new root)
           view.bloomCols.foreach { c =>
-            val bs = bloomPath(srcPath, rel, c)
-            if (fs.exists(bs)) {
-              val bd = bloomPath(dstPath, rel, c)
-              dstFs.mkdirs(bd.getParent)
-              org.apache.hadoop.fs.FileUtil.copy(fs, bs, dstFs, bd, false, false, conf)
-            }
-            // the NDV register sidecar rides the same discipline (keyed by
-            // rel — still valid under the new root)
-            val ns = ndvPath(srcPath, rel, c)
-            if (fs.exists(ns)) {
-              val nd = ndvPath(dstPath, rel, c)
-              dstFs.mkdirs(nd.getParent)
-              org.apache.hadoop.fs.FileUtil.copy(fs, ns, dstFs, nd, false, false, conf)
-            }
+            copySidecar(bloomPath, c)
+            copySidecar(ndvPath, c)
           }
-          // SUM sidecars carry too (keyed by rel, exact under any root)
-          view.statsCols.foreach { c =>
-            val ss = sumPath(srcPath, rel, c)
-            if (fs.exists(ss)) {
-              val sd = sumPath(dstPath, rel, c)
-              dstFs.mkdirs(sd.getParent)
-              org.apache.hadoop.fs.FileUtil.copy(fs, ss, dstFs, sd, false, false, conf)
-            }
-          }
+          view.statsCols.foreach(copySidecar(sumPath, _))
           // the file's deletion-vector sidecar carries with it — the
           // re-rendered manifest line keeps the pointer (rel-relative, so
           // it stays exact under the new root)
@@ -3353,28 +3243,26 @@ object Snapshots {
         // the source header — the file set is identical), and the normal
         // write path regenerates the partition-index sidecar, so the
         // clone plans O(selected) from its first query.
-        dstFs.mkdirs(manifestDir(dstPath))
-        val pathColsEff =
-          if (view.partCols.nonEmpty) view.partCols else partitionColsFromRels(view.rels)
-        val header = renderHeader(
-          view.schema,
-          view.statsCols,
-          view.bloomCols,
-          view.dropped,
-          view.partCols,
-          partCanon = headerView(spark, srcRoot, view.version).flatMap(_.partCanon),
-          nFiles = Some(view.rels.size.toLong),
-          pathCols = if (view.rels.nonEmpty) Some(pathColsEff) else None)
-        val body = header ++
-          view.rels.map(rel => renderFileLine(rel, view.stats.getOrElse(rel, Map.empty)))
         // a v1 manifest source (no header) clones as a plain v1 file list
-        val rendered = if (view.schema.isEmpty && view.statsCols.isEmpty &&
-            view.bloomCols.isEmpty && view.partCols.isEmpty && view.dropped.isEmpty)
-          view.rels
-        else body
-        require(
-          tryWriteManifest(dstFs, dstPath, 1L, rendered),
-          s"clone could not write the destination manifest under $dstRoot")
+        val plain = view.schema.isEmpty && view.statsCols.isEmpty && view.bloomCols.isEmpty &&
+          view.partCols.isEmpty && view.dropped.isEmpty
+        commitVersion(spark, dstRoot, "clone") { (dstV, _, _) =>
+          require(dstV == 0L, s"clone could not write the destination manifest under $dstRoot")
+          Right(Next(
+            if (plain) Seq.empty
+            else
+              renderHeader(
+                view.schema,
+                view.statsCols,
+                view.bloomCols,
+                view.dropped,
+                view.partCols,
+                partCanon = headerView(spark, srcRoot, view.version).flatMap(_.partCanon),
+                nFiles = Some(view.rels.size.toLong),
+                pathCols = if (view.rels.nonEmpty) Some(view.layout) else None),
+            upserts = view.rels.map(rel =>
+              rel -> (if (plain) Map.empty[String, ColStat] else view.stats.getOrElse(rel, Map.empty)))))
+        }
         view.rels.size.toLong
       }
     }
@@ -3458,7 +3346,11 @@ object Snapshots {
         * deletion-vector pointer. What [[dvChangedRels]] narrows its
         * comparison to on delta versions.
         */
-      restated: Seq[String] = Seq.empty)
+      restated: Seq[String] = Seq.empty) {
+
+    /** The effective hive layout ([[layoutOf]]). */
+    def layout: Seq[String] = layoutOf(partCols, rels)
+  }
 
   /** One manifest body line → (rel, per-column stats). */
   private def parseFileLine(line: String): (String, Map[String, ColStat]) =
@@ -3979,9 +3871,7 @@ object Snapshots {
       fs.mkdirs(dst.getParent)
       org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, spark.sparkContext.hadoopConfiguration)
     }
-    dvCarryOverride.set(Some(targetDv))
-    try commit(spark, root)
-    finally dvCarryOverride.remove()
+    listingCommit(spark, root, None, None, dvOverride = Some(targetDv))
   }
 
   // ---- zero-copy branch/tag refs ----------------------------------------
@@ -4366,7 +4256,7 @@ object Snapshots {
     // discipline: a malformed value fails loudly, never lands half-cast)
     val aligned = df.select(
       schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    val partCols = if (bv.partCols.nonEmpty) bv.partCols else partitionColsFromRels(bv.rels)
+    val partCols = bv.layout
     val dataDir = branchDataDir(rootPath, name)
     val stage = DataFiles.stageDir(dataDir)
     val writer =
@@ -4374,7 +4264,6 @@ object Snapshots {
         aligned.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
       else aligned.coalesce(1).write
     writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-    val conf = spark.sparkContext.hadoopConfiguration
     // zero-row parts never land, and a failed landing leaves no orphans
     // under .branch/
     val rels =
@@ -4387,18 +4276,15 @@ object Snapshots {
           })
       finally fs.delete(stage, true)
     if (rels.isEmpty) return Seq.empty
-    // CHECK constraints hold on branch lines too — a branch append that
-    // violated them would smuggle bad rows past the gate at fast-forward
-    Constraints.enforce(spark, root, rels, bv.schema)
-    // the main commit's stats discipline, branch-locally: footer stats
-    // per new file (pooled), value-index sidecars when the table has them
-    val statsByRel = new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColStat]]()
-    graft.core.Par.each(rels) { rel =>
-      statsByRel.put(rel, fileColStats(conf, new Path(rootPath, rel), rel, bv.statsCols))
-    }
-    if (bv.bloomCols.nonEmpty || bv.statsCols.nonEmpty)
-      buildSidecars(spark, root, rels, bv.bloomCols, statsCols = bv.statsCols)
-    rels.sorted.map(rel => rel -> statsByRel.get(rel))
+    // the main commit's added-files pass, branch-locally: CHECK
+    // constraints hold on branch lines too (a branch append that violated
+    // them would smuggle bad rows past the gate at fast-forward), footer
+    // stats per new file, value-index sidecars when the table has them
+    val pass = new AddedFiles(spark, root)
+    pass.enforce(rels, bv.schema)
+    val stats = pass.stats(rels, bv.statsCols)
+    pass.sidecars(rels, bv.bloomCols, bv.statsCols)
+    rels.sorted.map(rel => rel -> stats(rel))
   }
 
   /** Write the branch's next delta manifest recording `plus` as `+` lines
@@ -4425,6 +4311,12 @@ object Snapshots {
       s"commitBranchDelta('$name'): removed rel(s) not on the branch: " +
         s"${minus.filterNot(baseRels).take(3).mkString(", ")}")
     val newRels = plus.map(_._1).filterNot(baseRels)
+    // `#delta 0` = "the fork view"; branch reconstruction applies the
+    // line's manifests in version order, so the base pointer is
+    // informational (the chain's density is validated on read).
+    // `#fork <v>` is a REBASE marker: reconstruction restarts from main
+    // version v AT this manifest, discarding the chain prefix — writing
+    // it is the rebase's one atomic step (temp + rename, no deletes).
     val header = renderHeader(
       bv.schema,
       bv.statsCols,
@@ -4433,16 +4325,10 @@ object Snapshots {
       bv.partCols,
       partCanon = None,
       nFiles = Some(bv.rels.size.toLong + newRels.size.toLong - minus.size.toLong),
-      pathCols = None)
-    // `#delta 0` = "the fork view"; branch reconstruction applies the
-    // line's manifests in version order, so the base pointer is
-    // informational (the chain's density is validated on read).
-    // `#fork <v>` is a REBASE marker: reconstruction restarts from main
-    // version v AT this manifest, discarding the chain prefix — writing
-    // it is the rebase's one atomic step (temp + rename, no deletes).
-    val body = header ++ forkMarker.map(v => s"#fork $v").toSeq ++ Seq(s"#delta $prevB") ++
-      minus.sorted.map("-" + _) ++
-      plus.sortBy(_._1).map { case (rel, st) => "+" + renderFileLine(rel, st) }
+      pathCols = None) ++ forkMarker.map(v => s"#fork $v").toSeq
+    // a branch line is always a delta chain: no slot race (the caller
+    // holds the table lock, the publish is exclusive), no checkpoint
+    val body = deltaBody(prevB + 1L, Next(header, minus.sorted, plus.sortBy(_._1)))
     val target = branchManifestPath(rootPath, name, prevB + 1L)
     if (!MetaFiles.publish(fs, target, (body.mkString("\n") + "\n").getBytes("UTF-8")))
       sys.error(s"branch commit raced on $target")
@@ -4467,12 +4353,39 @@ object Snapshots {
     commitBranchDelta(spark, root, name, bv, restated.toSeq)
   }
 
+  /** The branch's net delta over its fork, CHECK-gated: (branch view,
+    * the branch's own rels, the fork rels whose deletion vector the
+    * branch changed — deleteOnBranch / upsertOnBranch restates). CHECKS
+    * current AT ADOPTION gate the branch's net-new rows: land-time
+    * enforcement saw the check set of ITS moment, but an `add_check`
+    * recorded since validated only main's rows (the branch's files are
+    * unreferenced by any main manifest) — adopting without re-proving
+    * them would smuggle exactly the rows the gate exists to stop. The
+    * branch's own deletion vectors apply (a logically-deleted row must
+    * not refuse the adoption). Zero cost when the table has no checks;
+    * O(branch delta) — the adoption's own price — when it does.
+    */
+  private def branchDelta(
+      spark: SparkSession,
+      root: String,
+      name: String,
+      fork: Long): (ManifestView, Seq[String], Seq[String]) = {
+    val bv = branchView(spark, root, name)
+    val forkView = manifestView(spark, root, fork)
+    val branchRels = bv.rels.filterNot(forkView.rels.toSet).sorted
+    Constraints.enforce(spark, root, branchRels, bv.schema, bv.stats)
+    val touched = forkView.rels.filter { rel =>
+      dvOf(forkView.stats.getOrElse(rel, Map.empty)) != dvOf(bv.stats.getOrElse(rel, Map.empty))
+    }
+    (bv, branchRels, touched)
+  }
+
   /** Adopt the branch into the LIVE line — allowed exactly when main has
     * not advanced past the fork (the git fast-forward contract; a
     * diverged main refuses loudly: re-apply or clone instead). The
     * branch's private files MOVE to their natural table paths (their
     * bloom/NDV/SUM sidecars rename with them — content depends only on
-    * the file bytes, so nothing recomputes), one O(delta) append commit
+    * the file bytes, so nothing recomputes), one O(delta) commit
     * records them on main, and the branch is dropped. Returns the new
     * main version.
     */
@@ -4490,33 +4403,15 @@ object Snapshots {
         s"cannot fast-forward '$name' into $root: the live line advanced past the fork " +
           s"(v$fork -> v$latest) — the lines diverged; CALL rebase(table, name) to replay " +
           "the branch's delta onto the live head, then fast-forward")
-      val bv = branchView(spark, root, name)
-      val forkView = manifestView(spark, root, fork)
-      val forkRels = forkView.rels.toSet
+      // Enforced PRE-MOVE (rels still resolve under `.branch/`)
+      val (bv, branchRels, touched) = branchDelta(spark, root, name, fork)
       val prefix = s"$BranchDataDirName/$name/"
-      val branchRels = bv.rels.filterNot(forkRels).sorted
-      // CHECKS current AT ADOPTION gate the branch's net-new rows: land-
-      // time enforcement saw the check set of ITS moment, but an
-      // `add_check` recorded between the branch landing and this
-      // fast-forward validated only main's rows (the branch's files are
-      // unreferenced by any main manifest) — adopting without re-proving
-      // them would smuggle exactly the rows the gate exists to stop.
-      // Enforced PRE-MOVE (rels still resolve under `.branch/`), with
-      // the branch's own deletion vectors applied (a logically-deleted
-      // row must not refuse the adoption). Zero cost when the table has
-      // no checks; O(branch delta) — the adoption's own price — when it
-      // does.
-      Constraints.enforce(
-        spark, root, branchRels, bv.schema, bv.stats)
       // a branch MoR delete on a FORK file changed its pointer on the
       // branch line only — adoption restates the branch's stats (original
       // footer stats + the new DV keys; the sidecar's embedded rel is the
       // fork rel, unchanged by adoption) on the main line
-      val pointerUpdates: Map[String, Map[String, ColStat]] = forkView.rels.flatMap { rel =>
-        val oldDv = dvOf(forkView.stats.getOrElse(rel, Map.empty))
-        val newDv = dvOf(bv.stats.getOrElse(rel, Map.empty))
-        if (oldDv == newDv) None else Some(rel -> bv.stats.getOrElse(rel, Map.empty))
-      }.toMap
+      val pointerUpdates =
+        touched.map(rel => rel -> bv.stats.getOrElse(rel, Map.empty[String, ColStat])).toMap
       var moved = List.empty[(Path, Path)]
       // sidecar renames roll back with their data files: leaving them
       // keyed under the never-committed target rels would orphan them
@@ -4560,22 +4455,19 @@ object Snapshots {
           // exactly these rows (same bytes, pre-move paths) under the
           // SAME table lock — the commit must not pay the scan twice
           if (targets.isEmpty && pointerUpdates.isEmpty) latest
-          else if (pointerUpdates.isEmpty && addedDv.isEmpty)
-            commitAppend(spark, root, targets.map(_._2), checksPreEnforced = true)
           else
             commitRestated(
               spark,
               root,
               pointerUpdates,
               addedRels = targets.map(_._2),
-              removedRels = Seq.empty,
               addedDv = addedDv,
               checksPreEnforced = true)
         } catch {
           case t: Throwable =>
             // rollback is PRE-COMMIT only: a half-moved branch must not
             // leave uncommitted files in the live tree for a listing-based
-            // commit to adopt. (Once commitAppend lands, the manifest
+            // commit to adopt. (Once the commit lands, the manifest
             // references the moved files — moving them back would be the
             // corruption.)
             moved.foreach { case (to, from) =>
@@ -4588,12 +4480,11 @@ object Snapshots {
                   fs.rename(to, from)
                   // the value/miss caches may have learned the target key
                   // between rename and rollback — forget both renderings
-                  sumCache.remove(to.toString)
-                  sumMissCache.remove(to.toString)
-                  ndvMissCache.remove(to.toString)
-                  sumCache.remove(from.toString)
-                  sumMissCache.remove(from.toString)
-                  ndvMissCache.remove(from.toString)
+                  Seq(to.toString, from.toString).foreach { k =>
+                    sumCache.remove(k)
+                    sumMissCache.remove(k)
+                    ndvMissCache.remove(k)
+                  }
                 }
               catch { case _: Exception => () }
             }
@@ -4687,7 +4578,6 @@ object Snapshots {
       syncRef(fs, rootPath, name, fork) // heal a crashed prior rebase's ref
       val latest = latestVersion(spark, root)
       if (latest == fork) return fork // nothing to replay — already based on head
-      val bv = branchView(spark, root, name)
       val forkView = manifestView(spark, root, fork)
       val mainView = manifestView(spark, root, latest)
       require(
@@ -4699,23 +4589,13 @@ object Snapshots {
         mainView.partCols == forkView.partCols,
         s"rebase('$name') on $root: the partition layout changed since the fork — " +
           "re-apply on a fresh fork")
-      val forkRels = forkView.rels.toSet
       val mainRels = mainView.rels.toSet
-      val branchRels = bv.rels.filterNot(forkRels).sorted
       // the fast-forward adoption gate, applied at the EARLIER door: a
       // check added on main after the branch landed rows must refuse the
       // rebase too (replaying unproven rows over the new head just
       // defers the refusal to fast-forward — refuse here, naming the
-      // check, while the user still has the pre-rebase chain intact).
-      // Zero cost when the table has no checks; branch DVs applied.
-      Constraints.enforce(
-        spark, root, branchRels, bv.schema, bv.stats)
-      // fork files whose DV pointer the branch changed (deleteOnBranch /
-      // upsertOnBranch restates)
-      val touched = forkView.rels.filter { rel =>
-        dvOf(forkView.stats.getOrElse(rel, Map.empty)) !=
-          dvOf(bv.stats.getOrElse(rel, Map.empty))
-      }
+      // check, while the user still has the pre-rebase chain intact)
+      val (bv, branchRels, touched) = branchDelta(spark, root, name, fork)
       val conflicts = touched.filterNot(mainRels).sorted
       if (conflicts.nonEmpty)
         sys.error(

@@ -433,8 +433,7 @@ object Sources {
       // partition-column SET fails loudly even when nothing matches
       val unknownSet = sets.keys.filterNot(k => schema.fieldNames.exists(_.equalsIgnoreCase(k)))
       require(unknownSet.isEmpty, s"SET column(s) not in table: ${unknownSet.mkString(", ")}")
-      val partCols =
-        if (view.partCols.nonEmpty) view.partCols else Snapshots.partitionColsFromRels(view.rels)
+      val partCols = view.layout
       val illegalSet = partCols.filter(pc => sets.keys.exists(_.equalsIgnoreCase(pc)))
       require(
         illegalSet.isEmpty,

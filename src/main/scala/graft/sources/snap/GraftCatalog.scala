@@ -500,10 +500,7 @@ class SnapTable(
     // still pay the full-list derivation
     val cols = header
       .flatMap(h => if (h.partCols.nonEmpty) Some(h.partCols) else h.pathCols)
-      .getOrElse {
-        if (view.partCols.nonEmpty) view.partCols
-        else Snapshots.partitionColsFromRels(view.rels)
-      }
+      .getOrElse(view.layout)
     cols.map(c => org.apache.spark.sql.connector.expressions.Expressions.identity(c)).toArray
   }
 
@@ -558,9 +555,7 @@ class SnapTable(
     Snapshots.withTableLock(spark, dir) {
       val latest = Snapshots.manifestView(spark, dir)
       requireRecordedSchema("DELETE", latest)
-      val partCols =
-        if (latest.partCols.nonEmpty) latest.partCols
-        else Snapshots.partitionColsFromRels(latest.rels)
+      val partCols = latest.layout
       SnapFilters.partitionExactFiles(latest.rels, partCols, latest.schema.get, filters.toSeq) match {
         case Right(matched) if matched.nonEmpty =>
           val rootPath = new Path(dir)
@@ -909,9 +904,7 @@ class SnapWriteBuilder(dir: String, info: LogicalWriteInfo)
     // rows to partition dirs, the commit archives exactly the partitions
     // the tasks touched (no V1 fallback exists for this plan shape)
     val view = Snapshots.manifestView(SparkSession.active, dir)
-    val partCols =
-      if (view.partCols.nonEmpty) view.partCols
-      else Snapshots.partitionColsFromRels(view.rels)
+    val partCols = view.layout
     require(
       partCols.nonEmpty,
       s"dynamic partition overwrite on $dir: the table has no partition columns")
@@ -932,10 +925,7 @@ class SnapWriteBuilder(dir: String, info: LogicalWriteInfo)
         val cols = Snapshots.headerView(spark, dir) match {
           case Some(h) if h.partCols.nonEmpty => h.partCols
           case Some(h) if h.pathCols.isDefined => h.pathCols.get
-          case Some(_) =>
-            val view = Snapshots.manifestView(spark, dir)
-            if (view.partCols.nonEmpty) view.partCols
-            else Snapshots.partitionColsFromRels(view.rels)
+          case Some(_) => Snapshots.manifestView(spark, dir).layout
           case None if Snapshots.latestVersion(spark, dir) > 0L =>
             // v1 plain-list manifest: derive the layout from the rels
             Snapshots.partitionColsFromRels(Snapshots.manifestView(spark, dir).rels)
@@ -1012,13 +1002,6 @@ class SnapWriteBuilder(dir: String, info: LogicalWriteInfo)
 
 object SnapWriteBuilder {
 
-  /** The table's hive partition columns, in directory order, derived from
-    * the manifest's relative paths (every data file shares the same
-    * `k=v/...` depth structure).
-    */
-  private def partitionColsOf(rels: Seq[String]): Seq[String] =
-    Snapshots.partitionColsFromRels(rels)
-
   private def doInsert(
       dir: String,
       data: DataFrame,
@@ -1048,8 +1031,7 @@ object SnapWriteBuilder {
       // the DECLARED layout wins (CREATE TABLE … PARTITIONED BY records
       // it before any file exists); the rel-derived fallback serves
       // tables adopted via Snapshots.commit, which never declared one
-      val partCols =
-        if (latest.partCols.nonEmpty) latest.partCols else partitionColsOf(layoutRels)
+      val partCols = Snapshots.layoutOf(latest.partCols, layoutRels)
       // the REPLACED files are archived, not deleted: pinned readers keep
       // resolving, and the pre-overwrite state stays restorable — an
       // overwrite is a new version, not a destruction. Which files count
@@ -1337,9 +1319,7 @@ class SnapScanBuilder(
   private var pushedAgg: Option[(Seq[(String, DataType)], Seq[SnapAggScan.Field])] = None
 
   private lazy val pathCols: Seq[String] =
-    header.flatMap(_.pathCols).getOrElse {
-      if (view.partCols.nonEmpty) view.partCols else Snapshots.partitionColsFromRels(view.rels)
-    }
+    header.flatMap(_.pathCols).getOrElse(view.layout)
 
   /** Whether this builder may consume partition-exact filters at all —
     * the row-level operation path overrides to false (Spark re-applies

@@ -110,9 +110,7 @@ class SnapDeltaRowLevelOperation(
     * the effective partition columns.
     */
   private def validatedPartCols(): Seq[String] = {
-    val partCols =
-      if (view.partCols.nonEmpty) view.partCols
-      else Snapshots.partitionColsFromRels(view.rels)
+    val partCols = view.layout
     if (partCols.nonEmpty) {
       val incoherent = view.rels.filterNot { r =>
         val segs = SnapFilters.partSegments(r)

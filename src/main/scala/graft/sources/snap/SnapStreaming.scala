@@ -57,10 +57,7 @@ class SnapStreamingWrite(dir: String, queryId: String, schema: StructType)
   private lazy val partCols: Seq[String] =
     if (Snapshots.latestVersion(spark, dir) == 0L) Seq.empty
     else {
-      val view = Snapshots.manifestView(spark, dir)
-      val cols =
-        if (view.partCols.nonEmpty) view.partCols
-        else Snapshots.partitionColsFromRels(view.rels)
+      val cols = Snapshots.manifestView(spark, dir).layout
       cols.foreach { c =>
         val t = schema.fields
           .find(_.name == c)

@@ -71,12 +71,24 @@ object CountingFs {
 
   /** The paths the recorded exists probes named. */
   val probed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** The recorded calls per caller: the first `graft.` stack frame
+    * outside this file, as `Object.method`.
+    */
+  val byCaller = new ConcurrentHashMap[String, AtomicLong]()
   def bump(kind: String): Unit =
-    if (recording) counts.computeIfAbsent(kind, _ => new AtomicLong()).incrementAndGet()
+    if (recording) {
+      counts.computeIfAbsent(kind, _ => new AtomicLong()).incrementAndGet()
+      val caller = Thread.currentThread.getStackTrace
+        .find(f => f.getClassName.startsWith("graft.") && !f.getClassName.startsWith("graft.sources.CountingFs"))
+        .map(f => f.getClassName.split('.').last.takeWhile(_ != '$') + "." + f.getMethodName.split("\\$\\$").last)
+        .getOrElse("?")
+      byCaller.computeIfAbsent(caller, _ => new AtomicLong()).incrementAndGet()
+    }
 
   /** The calls `body` issues, per kind. */
   def during(body: => Unit): Map[String, Long] = {
     counts.clear()
+    byCaller.clear()
     probed.clear()
     recording = true
     try body
@@ -90,7 +102,9 @@ object CountingFs {
   * calls than the bounds below. The upsert, append and refresh bounds are
   * the counts measured before the small-file writes and reads moved into
   * [[MetaFiles]]; the compaction and UPDATE bounds the counts measured
-  * before data files landed through [[DataFiles]] (the probe printed by
+  * before data files landed through [[DataFiles]]; the ALTER, restore and
+  * partition-exact DELETE bounds the counts measured before every
+  * manifest commit went through one commit kernel (the probe printed by
   * this spec, run on that code). Each operation runs once untimed first so
   * the counted run sees the steady state (epoch marker present, view
   * registered).
@@ -109,7 +123,13 @@ class FsCallCountSpec extends SparkSpec {
     "call_compact" ->
       Map("create" -> 9L, "rename" -> 12L, "delete" -> 5L, "mkdirs" -> 22L, "exists" -> 60L),
     "sql_update" ->
-      Map("create" -> 17L, "rename" -> 12L, "delete" -> 4L, "mkdirs" -> 26L, "exists" -> 55L))
+      Map("create" -> 17L, "rename" -> 12L, "delete" -> 4L, "mkdirs" -> 26L, "exists" -> 55L),
+    "alter_add_columns" ->
+      Map("create" -> 3L, "rename" -> 2L, "delete" -> 2L, "mkdirs" -> 5L, "exists" -> 30L),
+    "restore" ->
+      Map("create" -> 3L, "rename" -> 4L, "delete" -> 2L, "mkdirs" -> 11L, "exists" -> 20L),
+    "sql_delete_partition" ->
+      Map("create" -> 3L, "rename" -> 3L, "delete" -> 2L, "mkdirs" -> 6L, "exists" -> 21L))
 
   private def base(tag: String): String = {
     spark.sparkContext.hadoopConfiguration.set("fs.fscount.impl", classOf[CountingFs].getName)
@@ -124,7 +144,10 @@ class FsCallCountSpec extends SparkSpec {
   }
 
   private def check(op: String, got: Map[String, Long]): Unit = {
-    info(s"fs-calls $op " + CountingFs.Kinds.map(k => s"$k=${got(k)}").mkString(" "))
+    val callers = CountingFs.byCaller.asScala.toSeq.map { case (c, n) => c -> n.get }
+    info(
+      s"fs-calls $op " + CountingFs.Kinds.map(k => s"$k=${got(k)}").mkString(" ") + " | by caller: " +
+        callers.sortBy { case (c, n) => (-n, c) }.map { case (c, n) => s"$c=$n" }.mkString(" "))
     CountingFs.Kinds.foreach { k =>
       assert(got(k) <= bounds(op)(k), s"$op issues ${got(k)} $k calls, above ${bounds(op)(k)}")
     }
@@ -213,6 +236,44 @@ class FsCallCountSpec extends SparkSpec {
     check("sql_update", CountingFs.during(spark.sql("UPDATE fscu.t SET v = v + 1 WHERE cat = 'a'")))
     assert(Snapshots.latestVersion(spark, dir) == v + 1L)
     assert(Snapshots.readSnapshot(spark, dir).filter($"cat" === "a").select(sum($"v")).head().getLong(0) == 34L)
+  }
+
+  test("one ALTER TABLE ADD COLUMNS issues no more namespace calls than the bound") {
+    val b = base("fscount_alter")
+    val dir = s"$b/t"
+    table(dir)
+    catalog("fsca", b)
+    spark.sql("ALTER TABLE fsca.t ADD COLUMNS (x1 STRING)")
+    val v = Snapshots.latestVersion(spark, dir)
+    check("alter_add_columns", CountingFs.during(spark.sql("ALTER TABLE fsca.t ADD COLUMNS (x2 STRING)")))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+    assert(Snapshots.manifestView(spark, dir).schema.get.fieldNames.takeRight(2).toSeq == Seq("x1", "x2"))
+  }
+
+  test("one Snapshots.restore issues no more namespace calls than the bound") {
+    val dir = base("fscount_restore") + "/t"
+    table(dir)
+    def upsert(v: Long) = DeleteVectors.upsert(
+      spark, dir, Seq(("d01", "a", v), ("d04", "n", v)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    upsert(100L)
+    Snapshots.restore(spark, dir, 1L)
+    upsert(101L)
+    val v = Snapshots.latestVersion(spark, dir)
+    check("restore", CountingFs.during(Snapshots.restore(spark, dir, 1L)))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+    assert(Snapshots.readSnapshot(spark, dir).select(sum($"v")).head().getLong(0) == 44L)
+  }
+
+  test("one metadata-only SQL DELETE issues no more namespace calls than the bound") {
+    val b = base("fscount_delete")
+    val dir = s"$b/t"
+    table(dir)
+    catalog("fscd", b)
+    spark.sql("DELETE FROM fscd.t WHERE day = 'd03'")
+    val v = Snapshots.latestVersion(spark, dir)
+    check("sql_delete_partition", CountingFs.during(spark.sql("DELETE FROM fscd.t WHERE day = 'd02'")))
+    assert(Snapshots.latestVersion(spark, dir) == v + 1L)
+    assert(Snapshots.readSnapshot(spark, dir).count() == 2L)
   }
 
   test("planning a pinned change-feed window probes no table head; an end past the head still fails") {

@@ -1,0 +1,183 @@
+package graft.sources
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+
+import graft.SparkSpec
+
+/** Golden law of the manifest format: one fixed script over
+  * deterministically named files drives every commit face (DDL, the
+  * lock-free append, the listing commit, the deletion-vector restate, an
+  * upsert's restate + append, a partition-exact SQL DELETE, ALTER, a
+  * forced checkpoint, restore, clone, a branch append and its
+  * fast-forward) and compares each version's manifest text and
+  * partition index with the fixture `manifest-golden.txt`. Only random
+  * names are normalized: Spark's per-job part-file UUIDs and the
+  * deletion-vector sidecar tags (decoded from the hex stats first).
+  *
+  * A version whose delta-versus-full FORM is allowed to differ from the
+  * fixture is listed in `byView`; it is compared by its reconstructed
+  * `manifestView` instead (the fixture records every version's view).
+  * The normalized output of each run is written to
+  * `target/manifest-golden.actual.txt`, which is how the fixture is
+  * captured.
+  */
+class ManifestFormatSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  private val fixture = "/graft/sources/manifest-golden.txt"
+  private val byView: Set[String] = Set.empty
+
+  private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+  private val dvTag = "\\.dv-(rb-)?[0-9a-f]{8}-".r
+
+  private def unhex(h: String): String =
+    new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, UTF_8)
+
+  private def norm(s: String): String =
+    dvTag.replaceAllIn(uuid.replaceAllIn(s, "<uuid>"), m => s".dv-${Option(m.group(1)).getOrElse("")}<tag>-")
+
+  /** One manifest body line with its stats decoded and random names
+    * normalized; header lines only normalized.
+    */
+  private def normLine(line: String): String =
+    if (line.startsWith("#")) norm(line)
+    else {
+      val parts = line.split("\t")
+      norm((parts.head +: parts.tail.toSeq.map { e =>
+        val Array(c, t, mn, mx) = e.split(":", 4)
+        s"${unhex(c)}:$t:${unhex(mn)}:${unhex(mx)}".replace("\u0000", "\\0")
+      }).mkString("\t"))
+    }
+
+  private def viewText(v: Snapshots.ManifestView): String =
+    (Seq(
+      s"schema ${v.schema.map(_.json).getOrElse("-")}",
+      s"statscols ${v.statsCols.mkString(",")}",
+      s"bloomcols ${v.bloomCols.mkString(",")}",
+      s"dropped ${v.dropped.mkString(",")}",
+      s"partcols ${v.partCols.mkString(",")}") ++
+      v.rels.sorted.map { rel =>
+        val st = v.stats.getOrElse(rel, Map.empty).toSeq.sortBy(_._1)
+        (rel +: st.map { case (c, cs) => s"$c:${cs.typ}:${cs.min}:${cs.max}" })
+          .mkString("\t")
+          .replace("\u0000", "\\0")
+      }).map(norm).mkString("\n")
+
+  /** Lands `df` as the one file `rel` under `root`. */
+  private def landAs(df: DataFrame, root: String, rel: String): String = {
+    val stage = Files.createTempDirectory("golden_stage").toString + "/s"
+    df.coalesce(1).write.parquet(stage)
+    val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(stage)).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    val to = new Path(root, rel)
+    fs.mkdirs(to.getParent)
+    assert(fs.rename(part, to))
+    fs.delete(new Path(stage), true)
+    rel
+  }
+
+  /** Every manifest, partition index and view of the table at `root`,
+    * keyed by `<tag>/<file name>` and `<tag>@<version>`.
+    */
+  private def capture(tag: String, root: String): Seq[(String, String)] = {
+    val dir = new Path(root, Snapshots.ManifestDirName)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(dir).map(_.getPath.getName).filter(n =>
+      n.startsWith("v") && (n.endsWith(".manifest") || n.endsWith(".manifest.pidx"))).sorted
+    files.toSeq.map { n =>
+      val text = MetaFiles.readText(fs, new Path(dir, n)).get
+      s"$tag/$n" -> text.split("\n").toSeq.filter(_.nonEmpty).map(normLine).mkString("\n")
+    } ++ Snapshots.manifestVersions(spark, root).map { case (v, _) =>
+      s"$tag@$v" -> viewText(Snapshots.manifestView(spark, root, v))
+    }
+  }
+
+  private def branchCapture(root: String, name: String): Seq[(String, String)] = {
+    val dir = Snapshots.branchDir(new Path(root), name)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".manifest")).sorted.toSeq.map { n =>
+      val text = MetaFiles.readText(fs, new Path(dir, n)).get
+      s"branch-$name/$n" -> text.split("\n").toSeq.filter(_.nonEmpty).map(normLine).mkString("\n")
+    }
+  }
+
+  private def parse(text: String): Map[String, String] =
+    text.split("\n=== ").toSeq.filter(_.nonEmpty).map { sec =>
+      val body = sec.stripPrefix("=== ")
+      val cut = body.indexOf('\n')
+      if (cut < 0) body -> "" else body.substring(0, cut) -> body.substring(cut + 1).stripSuffix("\n")
+    }.toMap
+
+  test("every commit face writes the manifest text and partition index of the golden fixture") {
+    val base = Files.createTempDirectory("golden").toString
+    val root = s"$base/t"
+    val key = "spark.graft.snapshot.checkpointInterval"
+    spark.conf.set(key, "3")
+    spark.conf.set("spark.sql.catalog.golden", classOf[graft.sources.snap.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.golden.root", base)
+    val out = Seq.newBuilder[(String, String)]
+    try {
+      val schema = StructType(Seq(
+        StructField("id", LongType), StructField("day", StringType), StructField("v", DoubleType)))
+      // v1: DDL
+      Snapshots.createTable(spark, root, schema, Seq("day"), Seq("day", "id"), Seq("id"))
+      // v2: lock-free append of a file carrying an added column
+      val a1 = landAs(
+        Seq((1L, 1.0, "x"), (2L, 2.0, "y"), (3L, 3.0, "z"), (4L, 4.0, "w")).toDF("id", "v", "tag"),
+        root, "day=d01/a1.parquet")
+      Snapshots.commitAppend(spark, root, Seq(a1))
+      // v3: listing commit adopting a loose file (a checkpoint at interval 3)
+      landAs(
+        Seq((5L, 5.0), (6L, 6.0), (7L, 7.0), (8L, 8.0)).toDF("id", "v"), root, "day=d02/b1.parquet")
+      Snapshots.commit(spark, root)
+      // v4: merge-on-read DELETE (a deletion-vector restate)
+      DeleteVectors.deleteWhere(spark, root, col("id") === 2L)
+      // v5: upsert (one restate + appended files)
+      DeleteVectors.upsert(
+        spark, root,
+        Seq((6L, "d02", 60.0, "u"), (9L, "d03", 9.0, "n")).toDF("id", "day", "v", "tag"),
+        Seq("id"))
+      // v6: metadata-only SQL DELETE (removed-only restate)
+      spark.sql("DELETE FROM golden.t WHERE day = 'd03'")
+      // v7: ALTER TABLE ADD COLUMNS (header-only DDL)
+      spark.sql("ALTER TABLE golden.t ADD COLUMNS (note STRING)")
+      // v8: forced checkpoint; v9: restore to the DV-delete version
+      Snapshots.checkpoint(spark, root)
+      Snapshots.restore(spark, root, 4L)
+      // clone of the latest version
+      Snapshots.cloneSnapshot(spark, root, s"$base/c")
+      // a branch append, then its fast-forward (v10)
+      Snapshots.createBranch(spark, root, "b")
+      Snapshots.appendToBranch(
+        spark, root, "b", Seq((10L, "d04", 10.0, "b", "nb")).toDF("id", "day", "v", "tag", "note"))
+      out ++= branchCapture(root, "b")
+      Snapshots.fastForward(spark, root, "b")
+      out ++= capture("t", root)
+      out ++= capture("c", s"$base/c")
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.unset("spark.sql.catalog.golden")
+      spark.conf.unset("spark.sql.catalog.golden.root")
+    }
+    val got = out.result()
+    val text = got.map { case (k, v) => s"=== $k\n$v\n" }.mkString
+    Files.createDirectories(Paths.get("target"))
+    Files.write(Paths.get("target/manifest-golden.actual.txt"), text.getBytes(UTF_8))
+    val in = getClass.getResourceAsStream(fixture)
+    assert(in != null, s"missing fixture $fixture (this run wrote target/manifest-golden.actual.txt)")
+    val want = parse(new String(in.readAllBytes(), UTF_8))
+    val have = parse(text)
+    def compared(k: String): Boolean = !byView.exists(v => k == s"$v.manifest" || k == s"$v.manifest.pidx")
+    assert(want.keySet.filter(compared) == have.keySet.filter(compared))
+    want.keys.toSeq.sorted.filter(compared).foreach { k =>
+      assert(have(k) == want(k), s"$k differs from the golden fixture")
+    }
+  }
+}

@@ -869,6 +869,23 @@ class SnapshotsSpec extends SparkSpec {
       "a different stats-col set must recompute all files")
   }
 
+  test("every commit sets the footer-read count: an upsert landing one file reads 1, an ALTER 0") {
+    val dir = Files.createTempDirectory("snap_footer_reads").toString + "/t"
+    table(dir)
+    Snapshots.commit(spark, dir, statsCols = Seq("day"))
+    assert(Snapshots.lastCommitFooterReads.get() == 3L, "the listing commit reads every footer once")
+    DeleteVectors.upsert(spark, dir, Seq((9L, "2024-01-09", 90.0)).toDF("id", "day", "v"), Seq("id"))
+    assert(Snapshots.files(spark, dir).size == 4)
+    assert(
+      Snapshots.lastCommitFooterReads.get() == 1L,
+      s"an upsert landing one file reads its footer only, read ${Snapshots.lastCommitFooterReads.get()}")
+    Snapshots.addColumns(
+      spark, dir, Seq(org.apache.spark.sql.types.StructField("note", org.apache.spark.sql.types.StringType)))
+    assert(
+      Snapshots.lastCommitFooterReads.get() == 0L,
+      s"a DDL commit reads no footer, read ${Snapshots.lastCommitFooterReads.get()}")
+  }
+
   test("readAddedSince scans only appended files; a rewrite history fails loudly") {
     val dir = Files.createTempDirectory("snap_added").toString + "/t"
     table(dir) // 4 rows over 3 day partitions
