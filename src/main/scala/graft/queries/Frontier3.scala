@@ -2587,7 +2587,7 @@ object Frontier3 {
   // -- q237: manifest NDV sketches — approx COUNT(DISTINCT), zero opens ----
 
   /** Per-(file, column) HyperLogLog register sidecars ride the bloom
-    * discipline ([[graft.sources.Snapshots.approxCountDistinct]]): every
+    * discipline ([[graft.sources.ValueIndex.approxCountDistinct]]): every
     * commit builds 256-byte register sketches for its NEW files only, and
     * a table-level approximate `COUNT(DISTINCT user_id)` merges them by
     * elementwise max — driver metadata I/O, ZERO data-file opens, at any
@@ -2636,7 +2636,7 @@ object Frontier3 {
     // zero-opens canary: junk one data file; the estimate must not notice
     val victim = graft.sources.Snapshots.files(s, dir).head
     corruptFile(s, fs, new org.apache.hadoop.fs.Path(dir, victim))
-    val est = graft.sources.Snapshots
+    val est = graft.sources.ValueIndex
       .approxCountDistinct(s, dir, "user_id")
       .getOrElse(sys.error("NDV sidecars missing — the commit discipline did not build them"))
     val estR4 = math.floor(est * 10000.0 + 0.5) / 10000.0

@@ -156,7 +156,7 @@ object DeleteVectors {
     if (active.isEmpty) statsPruned
     else
       statsPruned.filter { rel =>
-        active.forall { case (c, v) => Snapshots.bloomMightContain(spark, root, rel, c, v) }
+        active.forall { case (c, v) => ValueIndex.bloomMightContain(spark, root, rel, c, v) }
       }
   }
 
@@ -1414,7 +1414,7 @@ object DeleteVectors {
     statsPruned.filter { rel =>
       tuples.exists(t =>
         bloomKeyCols.zip(t).forall { case (c, v) =>
-          Snapshots.bloomMightContain(spark, root, rel, c, v)
+          ValueIndex.bloomMightContain(spark, root, rel, c, v)
         })
     }
   }

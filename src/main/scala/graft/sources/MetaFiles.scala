@@ -26,15 +26,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 private[graft] object MetaFiles {
 
-  /** The file's UTF-8 text, or None when it does not exist. Any other IO
-    * failure propagates.
+  /** The file's bytes, or None when it does not exist: one open, no
+    * exists probe. Any other IO failure propagates.
     */
-  def readText(fs: FileSystem, p: Path): Option[String] =
+  def readBytes(fs: FileSystem, p: Path): Option[Array[Byte]] =
     try {
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), UTF_8))
+      try Some(in.readAllBytes())
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The file's UTF-8 text, or None when it does not exist. */
+  def readText(fs: FileSystem, p: Path): Option[String] = readBytes(fs, p).map(new String(_, UTF_8))
 
   /** The file's trimmed text as a Long, None when absent; unparsable
     * content raises.

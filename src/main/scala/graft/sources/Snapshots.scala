@@ -50,8 +50,8 @@ import org.apache.spark.sql.types.StructField
   *      overwriting).
   *    - `v….manifest.pidx` — a checkpoint's partition index (`publish`).
   *    - `.chain` — the chain identity nonce (`publish`, once per chain).
-  *    - `bloom/`, `ndv/`, `sum/` — per-(file, column) sidecars
-  *      (`publish`, from Spark tasks too).
+  *    - `bloom/`, `ndv/`, `sum/` — per-(file, column) value-index
+  *      sidecars ([[ValueIndex]]; `publish`, from Spark tasks too).
   *    - `refs/<name>` — immutable pins, rewritten only to follow a
   *      branch rebase (`publish`).
   *    - `branches/<name>/` — a branch's delta manifests (`publish`), its
@@ -156,7 +156,7 @@ object Snapshots {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestDir(root: Path) = new Path(root, ManifestDirName)
+  private[sources] def manifestDir(root: Path) = new Path(root, ManifestDirName)
 
   private def manifestPath(root: Path, version: Long) =
     new Path(manifestDir(root), f"v$version%010d.manifest")
@@ -214,6 +214,21 @@ object Snapshots {
     else None
   }
 
+  /** Diagnostics only: with `-Dgraft.lock.trace=<file>`, append one line
+    * per lock acquire/release (timestamp, pid, owner, key) — what the
+    * cross-process torture spec reads to reconstruct interleavings. A
+    * no-op (one getProperty) in normal runs.
+    */
+  private def lockTrace(msg: => String): Unit = {
+    val f = System.getProperty("graft.lock.trace")
+    if (f != null)
+      try {
+        val w = new java.io.FileWriter(f, true)
+        try w.write(s"${System.currentTimeMillis()} pid${ProcessHandle.current().pid()} $msg\n")
+        finally w.close()
+      } catch { case _: Exception => () }
+  }
+
   /** Enforced single-writer: maintenance ops run under an exclusive table
     * lock (create-exclusive `_graft_manifests/.lock` — O_EXCL via
     * java.nio on local filesystems ([[localLockFile]]), hadoop's atomic
@@ -233,21 +248,6 @@ object Snapshots {
     * maintenance durations. Readers never touch the lock — snapshot reads
     * stay coordination-free at any concurrency. Reentrant per thread.
     */
-  /** Diagnostics only: with `-Dgraft.lock.trace=<file>`, append one line
-    * per lock acquire/release (timestamp, pid, owner, key) — what the
-    * cross-process torture spec reads to reconstruct interleavings. A
-    * no-op (one getProperty) in normal runs.
-    */
-  private def lockTrace(msg: => String): Unit = {
-    val f = System.getProperty("graft.lock.trace")
-    if (f != null)
-      try {
-        val w = new java.io.FileWriter(f, true)
-        try w.write(s"${System.currentTimeMillis()} pid${ProcessHandle.current().pid()} $msg\n")
-        finally w.close()
-      } catch { case _: Exception => () }
-  }
-
   def withTableLock[T](
       spark: SparkSession,
       root: String,
@@ -404,21 +404,6 @@ object Snapshots {
     walk(rootPath).sorted
   }
 
-  /** Latest committed manifest version, or 0 if none.
-    *
-    * The hot metadata call (every read plan, every commit, every
-    * streaming trigger), so it must not pay an O(versions) directory
-    * listing — a streaming sink committing an epoch per trigger grows
-    * the manifest dir into the tens of thousands of files within days.
-    * A best-effort `.latest-hint` file (written after every commit)
-    * gives a starting point; the answer is then PROBED forward with
-    * exists() calls until the next version is absent — exact by
-    * construction because versions are dense (every writer claims
-    * latest+1): never an undercount (the probe walks past the hint) and
-    * never an overcount (the hinted version itself is verified, a
-    * stale-ahead or corrupt hint falls back to the listing). Cost:
-    * O(commits since the hint) exists() probes, amortized O(1).
-    */
   /** A stable identity for this table's MANIFEST CHAIN — the main-table
     * twin of the branch `.chain` nonce: a lazily-minted UUID file in the
     * manifest dir, created exactly once per chain (create-if-absent runs
@@ -469,6 +454,21 @@ object Snapshots {
     }
   }
 
+  /** Latest committed manifest version, or 0 if none.
+    *
+    * The hot metadata call (every read plan, every commit, every
+    * streaming trigger), so it must not pay an O(versions) directory
+    * listing — a streaming sink committing an epoch per trigger grows
+    * the manifest dir into the tens of thousands of files within days.
+    * A best-effort `.latest-hint` file (written after every commit)
+    * gives a starting point; the answer is then PROBED forward with
+    * exists() calls until the next version is absent — exact by
+    * construction because versions are dense (every writer claims
+    * latest+1): never an undercount (the probe walks past the hint) and
+    * never an overcount (the hinted version itself is verified, a
+    * stale-ahead or corrupt hint falls back to the listing). Cost:
+    * O(commits since the hint) exists() probes, amortized O(1).
+    */
   def latestVersion(spark: SparkSession, root: String): Long = {
     val rootPath = new Path(root)
     val dir = manifestDir(rootPath)
@@ -542,7 +542,7 @@ object Snapshots {
 
   // hex-escape manifest stat fields so values can never collide with the
   // line format's separators (tab between entries, colon inside one)
-  private def hex(s: String): String =
+  private[sources] def hex(s: String): String =
     s.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString
   private def unhex(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, "UTF-8")
@@ -1195,7 +1195,7 @@ object Snapshots {
     def sidecars(rels: Seq[String], bloomCols: Seq[String], statsCols: Seq[String]): Unit = {
       val todo = rels.filterNot(sidecarsBuilt)
       if (todo.nonEmpty && (bloomCols.nonEmpty || statsCols.nonEmpty)) {
-        buildSidecars(spark, root, todo, bloomCols, statsCols = statsCols)
+        ValueIndex.buildSidecars(spark, root, todo, bloomCols, statsCols = statsCols)
         sidecarsBuilt ++= todo
       }
     }
@@ -2353,814 +2353,6 @@ object Snapshots {
       commitDdl(spark, root, cur, dropped, view.partCols, statsCols, bloomCols)
     }
 
-  /** Sidecar location for file `rel`'s bloom over `colName` — under the
-    * manifest dir (hidden from data listings), hex-keyed so any rel path
-    * or column name is filesystem-safe. Keyed by rel alone, NOT version:
-    * files are immutable, so one bloom serves every manifest listing the
-    * file.
-    */
-  private def bloomPath(root: Path, rel: String, colName: String): Path =
-    new Path(new Path(manifestDir(root), "bloom"), s"${hex(rel)}.${hex(colName)}")
-
-  /** Number of bloom sidecars read (possibly cached) by the most recent
-    * read-side probe on this thread — observability for specs.
-    */
-  val lastBloomReads: ThreadLocal[Long] = new ThreadLocal[Long] {
-    override def initialValue(): Long = 0L
-  }
-
-  /** Build the MISSING per-file sidecars of `rels` in one pass per file:
-    * bloom filters and NDV registers over `bloomCols`, exact SUMs over
-    * `statsCols`. Every value reaches the blooms and registers through
-    * `CAST(col AS STRING)`, the same string domain the manifest stats and
-    * pushed-filter values use. A bloom is sized for the file's footer row
-    * count at 1% fpp, capped at 1 MiB of bits per sidecar (a bigger file
-    * degrades fpp instead of bloating metadata). Files at or under
-    * [[sidecarDriverBuildMaxBytes]] are read once on the driver (zero
-    * Spark jobs); larger files batch into one distributed job per ≤64-file
-    * chunk. Both paths fold rows through [[SidecarKernel.fold]], so their
-    * bytes are identical by construction. Written temp + rename; a crash
-    * leaves at worst a missing sidecar, which reads as "cannot exclude" /
-    * "scan instead of fold".
-    */
-  private def buildSidecars(
-      spark: SparkSession,
-      root: String,
-      rels: Seq[String],
-      bloomCols: Seq[String],
-      backfill: Boolean = false,
-      statsCols: Seq[String] = Seq.empty): Unit = {
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    fs.mkdirs(new Path(manifestDir(rootPath), "bloom"))
-    fs.mkdirs(new Path(manifestDir(rootPath), "ndv"))
-    // the bloom discipline IS the NDV discipline: both are per-(file,
-    // column) value-index sidecars built once at commit time (O(delta) —
-    // a rel names one immutable file forever), so one declared column set
-    // governs both. NDV rides the bloom build for files that are MISSING
-    // THEIR BLOOM (i.e. genuinely new): an existing bloom'd table's first
-    // commit after the NDV feature landed must NOT re-read the whole
-    // table inside a routine commit — upgrading old files is an explicit
-    // choice ([[backfillNdv]] / `CALL ndv_backfill`), not a commit tax.
-    val missing = for {
-      rel <- rels
-      c <- bloomCols
-      needBloom = !fs.exists(bloomPath(rootPath, rel, c))
-      needNdv = (needBloom || backfill) && !fs.exists(ndvPath(rootPath, rel, c))
-      if needBloom || needNdv
-    } yield (rel, c, needBloom, needNdv)
-    // SUM sidecars ride the same pass under the same upgrade gate: new
-    // files (missing a bloom) — or an explicit backfill — get their
-    // summable stats columns' exact sums recorded while the data is
-    // being read anyway; pre-feature files are never re-read by a
-    // routine commit
-    // a bloom-less stats table has no "missing bloom" signal for newness
-    // AND no commit-time data read to ride: it opts INTO the sum
-    // discipline via an explicit `CALL ndv_backfill` (a routine commit
-    // must not grow a per-commit data-read tax the table never asked
-    // for). Once ANY sum sidecar exists, new files keep the discipline —
-    // the one fs probe per commit is O(1).
-    val freshRels =
-      if (backfill) rels.distinct
-      else if (bloomCols.isEmpty) {
-        val sumDir = new Path(manifestDir(rootPath), "sum")
-        val disciplineOn =
-          fs.exists(sumDir) && fs.listStatusIterator(sumDir).hasNext
-        if (disciplineOn) rels.distinct else Seq.empty
-      } else missing.collect { case (r, _, nb, _) if nb => r }.distinct
-    // `backfill` also upgrades: a sum sidecar recorded `na` under an OLDER
-    // summability rule (pre-DECIMAL builds wrote `na` once per decimal
-    // column, permanently) counts as missing and is recomputed under the
-    // current rule — without it the documented backfill upgrade path can
-    // never enable DECIMAL SUM pushdown on a pre-feature table
-    val sumWant: Map[String, Seq[String]] =
-      if (statsCols.isEmpty) Map.empty
-      else {
-        fs.mkdirs(new Path(manifestDir(rootPath), "sum"))
-        freshRels
-          .map(rel =>
-            rel -> statsCols.filter(c =>
-              !fs.exists(sumPath(rootPath, rel, c)) ||
-                (backfill && fileSumOf(spark, root, rel, c).isEmpty)))
-          .filter(_._2.nonEmpty)
-          .toMap
-      }
-    val bloomWant = missing.groupBy(_._1)
-    val work = (missing.map(_._1) ++ freshRels.filter(sumWant.contains)).distinct
-    if (work.isEmpty) return
-    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    val tz = spark.conf.get("spark.sql.session.timeZone")
-    val driverMaxBytes = sidecarDriverBuildMaxBytes.value
-    val large = new java.util.concurrent.ConcurrentLinkedQueue[(Path, SidecarKernel.FileSpec)]()
-    graft.core.Par.each(work) { rel =>
-      val p = resolve(spark, root, rel)
-      // schema, row count and length from the FOOTER (driver metadata):
-      // DataFrameReader schema inference launches one Spark job per call
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val (schema, rows) =
-        try (
-          org.apache.spark.sql.graft.BridgeSchema
-            .footerSchema(spark, r.getFooter.getFileMetaData.getSchema),
-          r.getRecordCount)
-        finally r.close()
-      val spec = fileSpec(
-        rootPath, rel, schema, rows, bloomWant.getOrElse(rel, Nil), sumWant.getOrElse(rel, Nil), backfill)
-      if (spec.schema.nonEmpty && in.getLength > driverMaxBytes) large.add((p, spec))
-      else {
-        val sketches =
-          if (spec.schema.isEmpty) SidecarKernel.fold(spec, tz, Iterator.empty)
-          else {
-            val reader = org.apache.spark.sql.graft.Bridge.parquetRowReader(p, spec.schema, hconf)
-            try SidecarKernel.fold(spec, tz, Iterator.continually(reader.read()).takeWhile(_ != null))
-            finally reader.close()
-          }
-        sidecarsWritten(root, spec, SidecarKernel.write(hconf, spec, sketches))
-      }
-    }
-    if (!large.isEmpty) buildSidecarsDistributed(spark, root, tz, large.asScala.toSeq)
-  }
-
-  /** Size ceiling of the driver-side sidecar build: at or under 32 MiB a
-    * file's one streamed read costs microseconds to milliseconds, while a
-    * Spark job per commit batch is pure fixed overhead (plan, codegen,
-    * 1-task stages). At 100 TB the large files always take the
-    * distributed path. A constant; specs lower it with `withValue(0L)` to
-    * force the distributed path.
-    */
-  private[sources] val sidecarDriverBuildMaxBytes =
-    new scala.util.DynamicVariable[Long](32L * 1024 * 1024)
-
-  /** What one file still needs, resolved on the driver: the read schema
-    * (the union of its missing columns, physical names) and, per read
-    * column, the bloom/NDV/SUM sidecar targets. Stats columns the file
-    * cannot sum — non-summable types, or hive path columns that are not
-    * physical — record the `na` sentinel without a read. A bloom column
-    * must be physical: hive partition values prune exactly from the path.
-    */
-  private def fileSpec(
-      rootPath: Path,
-      rel: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Long,
-      blooms: Seq[(String, String, Boolean, Boolean)],
-      sums: Seq[String],
-      replaceSums: Boolean): SidecarKernel.FileSpec = {
-    def fieldOf(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
-    blooms.foreach { case (_, c, _, _) =>
-      require(
-        fieldOf(c).isDefined,
-        s"bloom column '$c' is not a physical column of $rel — hive partition values " +
-          "prune exactly from the path; blooms are for data columns")
-    }
-    val (summable, na) = sums.partition(c => fieldOf(c).exists(f => isSummable(f.dataType)))
-    val read = (blooms.map(b => fieldOf(b._2).get) ++ summable.map(c => fieldOf(c).get))
-      .distinctBy(_.name)
-      .map(_.copy(nullable = true))
-    def colAt(cols: Seq[String]): Array[String] =
-      read.map(f => cols.find(f.name.equalsIgnoreCase).orNull).toArray
-    def targets(cols: Array[String], path: (Path, String, String) => Path): Array[String] =
-      cols.map(c => if (c == null) null else path(rootPath, rel, c).toString)
-    val sumCols = colAt(summable)
-    SidecarKernel.FileSpec(
-      rel = rel,
-      schema = org.apache.spark.sql.types.StructType(read),
-      rows = rows,
-      bloom = targets(colAt(blooms.collect { case (_, c, true, _) => c }), bloomPath),
-      ndv = targets(colAt(blooms.collect { case (_, c, _, true) => c }), ndvPath),
-      sumCols = sumCols,
-      sum = targets(sumCols, sumPath),
-      naSums = na.map(c => c -> sumPath(rootPath, rel, c).toString),
-      replaceSums = replaceSums)
-  }
-
-  /** The driver-side half of every sidecar write: drop the read caches'
-    * entries for the sidecars that just landed. A cached absent NDV or
-    * SUM, or a cached `na` decode, is now stale; and a real sum means the
-    * table MAY be complete for its column — the next planning pass
-    * re-probes (an `na` changes nothing).
-    */
-  private def sidecarsWritten(
-      root: String,
-      spec: SidecarKernel.FileSpec,
-      sums: Seq[(String, String, String)]): Unit = {
-    spec.ndv.foreach(t => if (t != null) ndvMissCache.remove(t))
-    sums.foreach { case (c, target, content) =>
-      sumMissCache.remove(target)
-      sumCache.remove(target)
-      if (content != SumNa) sumIncompleteCache.remove(sumMemoKey(root, c))
-    }
-  }
-
-  /** ONE distributed job per ≤64-file chunk of large files: each file's
-    * scan splits fold their rows into per-file partial sketches (the
-    * kernel the driver path runs), only the SKETCHES shuffle (bitset OR,
-    * register max, SUM and count add — all order-independent), and the
-    * reduce tasks write the merged sidecars themselves. Files whose key
-    * never reaches the reduce (zero rows) get their empty sketches — the
-    * explicit empty filter, zero registers, sum `0` — written driver-side
-    * afterwards. Event-log shape: O(1) jobs per commit batch.
-    */
-  private def buildSidecarsDistributed(
-      spark: SparkSession,
-      root: String,
-      tz: String,
-      files: Seq[(Path, SidecarKernel.FileSpec)]): Unit = {
-    val hconf = org.apache.spark.sql.graft.Bridge.sessionHadoopConf(spark)
-    val serConf = org.apache.spark.sql.graft.Bridge.serializableConf(hconf)
-    files.sortBy(_._2.rel).grouped(64).foreach { chunk =>
-      val specs = chunk.map { case (_, spec) => spec.rel -> spec }.toMap
-      val partials = chunk.map { case (p, spec) =>
-        spark.read
-          // explicit pruned schema: no per-call inference job
-          .schema(spec.schema)
-          .parquet(p.toString)
-          .queryExecution
-          .toRdd
-          .mapPartitions(rows =>
-            if (rows.hasNext) Iterator(spec.rel -> SidecarKernel.fold(spec, tz, rows))
-            else Iterator.empty)
-      }
-      // session confs reach the tasks: the kernel's CAST runs there
-      val written = org.apache.spark.sql.graft.Bridge.withSqlConfPropagated(spark) {
-        spark.sparkContext
-          .union(partials)
-          .reduceByKey(SidecarKernel.merge _)
-          .map { case (rel, sketches) =>
-            val conf = org.apache.spark.sql.graft.Bridge.confOf(serConf)
-            rel -> SidecarKernel.write(conf, specs(rel), sketches)
-          }
-          .collect()
-          .toMap
-      }
-      chunk.foreach { case (_, spec) =>
-        val sums = written.getOrElse(
-          spec.rel,
-          SidecarKernel.write(hconf, spec, SidecarKernel.fold(spec, tz, Iterator.empty)))
-        sidecarsWritten(root, spec, sums)
-      }
-    }
-  }
-
-  /** Executor-safe sidecar kernel: everything the distributed build's task
-    * closures call lives HERE (a sibling object) and not on [[Snapshots]]
-    * itself — a lambda calling a method of its own enclosing object
-    * captures the (non-serializable) module instance, while calls into a
-    * separate object resolve statically at execution time. The driver
-    * path calls the same [[fold]] and [[write]], so the two paths can
-    * never silently diverge (byte parity law in SnapshotsSpec).
-    */
-  private[sources] object SidecarKernel {
-    import java.math.BigInteger
-
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import org.apache.spark.util.sketch.BloomFilter
-
-    /** One file's pending sidecars, resolved on the driver. Per column of
-      * the read `schema`: the bloom, NDV and SUM target paths (null where
-      * that sidecar exists already), and `sumCols` the stats column each
-      * SUM records. `naSums` are (column, target) pairs recorded `na`
-      * without a read; `replaceSums` lets a SUM replace an existing
-      * (stale `na`) sidecar — the explicit backfill's upgrade.
-      */
-    final case class FileSpec(
-        rel: String,
-        schema: StructType,
-        rows: Long,
-        bloom: Array[String],
-        ndv: Array[String],
-        sumCols: Array[String],
-        sum: Array[String],
-        naSums: Seq[(String, String)],
-        replaceSums: Boolean)
-
-    /** One file's sketches, partial or whole: per read column, a bloom
-      * and NDV registers (null where not needed), and an exact unscaled
-      * SUM with its non-null count.
-      */
-    final class Sketches(
-        val blooms: Array[BloomFilter],
-        val regs: Array[Array[Byte]],
-        val sums: Array[BigInteger],
-        val counts: Array[Long])
-        extends Serializable
-
-    /** Fold `rows` (laid out as `spec.schema`) into fresh sketches. Bloom
-      * and NDV see each non-null value through the live
-      * `Cast(col, StringType)` and `putBinary(utf8)`, the insertion
-      * `bloom_filter_agg`'s BinaryUpdater performs; the bloom is sized for
-      * the footer row count at 1% fpp, capped at 8 Mi bits.
-      */
-    def fold(spec: FileSpec, tz: String, rows: Iterator[InternalRow]): Sketches = {
-      val n = math.max(spec.rows, 1L)
-      val bits = math.min(BloomFilter.optimalNumOfBits(n, 0.01), 8L * 1024 * 1024)
-      val k = spec.schema.length
-      val out = new Sketches(
-        spec.bloom.map(t => if (t == null) null else BloomFilter.create(n, bits)),
-        spec.ndv.map(t => if (t == null) null else new Array[Byte](NdvRegisters)),
-        Array.fill(k)(BigInteger.ZERO),
-        new Array[Long](k))
-      val casts = Array.tabulate(k) { i =>
-        if (spec.bloom(i) == null && spec.ndv(i) == null) null
-        else
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            org.apache.spark.sql.catalyst.expressions
-              .BoundReference(i, spec.schema(i).dataType, nullable = true),
-            StringType,
-            Some(tz))
-      }
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.foreach { row =>
-        var i = 0
-        while (i < k) {
-          if (!row.isNullAt(i)) {
-            if (casts(i) != null) {
-              val bytes =
-                casts(i).eval(row).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-              if (out.blooms(i) != null) out.blooms(i).putBinary(bytes)
-              if (out.regs(i) != null) ndvUpdate(md, bytes, out.regs(i))
-            }
-            if (spec.sum(i) != null) {
-              out.counts(i) += 1L
-              out.sums(i) = out.sums(i).add(unscaled(row, i, spec.schema(i).dataType))
-            }
-          }
-          i += 1
-        }
-      }
-      out
-    }
-
-    /** A summable value in its exact unscaled integer domain. */
-    private def unscaled(row: InternalRow, i: Int, dt: DataType): BigInteger = dt match {
-      case d: DecimalType => row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.unscaledValue()
-      case LongType => BigInteger.valueOf(row.getLong(i))
-      case IntegerType => BigInteger.valueOf(row.getInt(i).toLong)
-      case ShortType => BigInteger.valueOf(row.getShort(i).toLong)
-      case _ => BigInteger.valueOf(row.getByte(i).toLong)
-    }
-
-    /** Merge two partials of one file (into `a`): bitset OR, register
-      * max, SUM and count add — associative and commutative, so split
-      * order never shows in the bytes.
-      */
-    def merge(a: Sketches, b: Sketches): Sketches = {
-      var i = 0
-      while (i < a.counts.length) {
-        if (a.blooms(i) != null) a.blooms(i).mergeInPlace(b.blooms(i))
-        if (a.regs(i) != null) {
-          val (r1, r2) = (a.regs(i), b.regs(i))
-          var j = 0
-          while (j < r1.length) { if (r2(j) > r1(j)) r1(j) = r2(j); j += 1 }
-        }
-        a.sums(i) = a.sums(i).add(b.sums(i))
-        a.counts(i) += b.counts(i)
-        i += 1
-      }
-      a
-    }
-
-    /** Registers per NDV sketch — see [[Snapshots.NdvRegisters]]. */
-    val NdvRegisters = 256
-
-    /** The SUM sidecar sentinel for "no exact sum: scan instead of fold". */
-    val SumNa = "na"
-
-    private val Max38 = BigInteger.TEN.pow(38)
-
-    /** Write a file's finished sketches, NDV and SUM strictly BEFORE the
-      * bloom: the bloom is the "file is new" marker, so a crash between
-      * them leaves the bloom missing and the next commit still treats the
-      * file as new, building whatever it lacks. A SUM
-      * records `0` when the file has no non-null value (the manifest null
-      * count disambiguates) and `na` when |sum| ≥ 10^38, past
-      * Decimal(38, s) — fall back to scanning rather than fold a value no
-      * SUM result type can hold. Returns the (column, target, content) of
-      * every SUM written.
-      */
-    def write(
-        conf: org.apache.hadoop.conf.Configuration,
-        spec: FileSpec,
-        sk: Sketches): Seq[(String, String, String)] = {
-      // a lost rename race is benign: sketches are deterministic per
-      // (file, col); the backfill's stale-`na` upgrade replaces instead
-      def put(target: String, bytes: Array[Byte], replace: Boolean = false): Unit = {
-        val p = new Path(target)
-        MetaFiles.publish(p.getFileSystem(conf), p, bytes, overwrite = replace)
-      }
-      spec.ndv.indices.foreach { i =>
-        if (spec.ndv(i) != null) put(spec.ndv(i), sk.regs(i))
-      }
-      val sums = spec.naSums.map { case (c, t) => (c, t, SumNa) } ++
-        spec.sum.indices.filter(spec.sum(_) != null).map { i =>
-          val content =
-            if (sk.counts(i) == 0L) "0"
-            else if (sk.sums(i).abs.compareTo(Max38) >= 0) SumNa
-            else sk.sums(i).toString
-          (spec.sumCols(i), spec.sum(i), content)
-        }
-      sums.foreach { case (_, t, content) =>
-        put(t, content.getBytes("UTF-8"), replace = spec.replaceSums)
-      }
-      spec.bloom.indices.foreach { i =>
-        if (spec.bloom(i) != null) {
-          val baos = new java.io.ByteArrayOutputStream()
-          sk.blooms(i).writeTo(baos)
-          put(spec.bloom(i), baos.toByteArray)
-        }
-      }
-      sums
-    }
-
-    /** Fold one CAST-to-string value into a 256-register NDV sketch — the
-      * portable HyperLogLog behind `approxCountDistinct`. The DuckDB
-      * oracle recomputes the merged estimate bit-for-bit (q237), so this
-      * arithmetic is a contract: take the md5 hex of the value; its first
-      * 13 hex digits with leading zeros stripped give rho = 4 × (zero
-      * digits) + (4 − bit length of the first non-zero digit) + 1, or 53
-      * when all 13 are zero; hex digits 14–15 give the bucket; a register
-      * keeps its bucket's max rho (≤ 53 fits a byte; absent buckets stay
-      * 0). Nulls never reach it — `count(DISTINCT c)`'s own rule.
-      */
-    private def ndvUpdate(
-        md: java.security.MessageDigest,
-        bytes: Array[Byte],
-        reg: Array[Byte]): Unit = {
-      val hexDigits = NdvHexDigits
-      md.reset()
-      val d = md.digest(bytes)
-      val hex = new Array[Char](16)
-      var i = 0
-      while (i < 8) {
-        hex(2 * i) = hexDigits((d(i) >> 4) & 0xf)
-        hex(2 * i + 1) = hexDigits(d(i) & 0xf)
-        i += 1
-      }
-      var lead = 0
-      while (lead < 13 && hex(lead) == '0') lead += 1
-      val stripLen = 13 - lead
-      val rho =
-        if (stripLen == 0) 53
-        else {
-          val bits = hex(lead) match {
-            case '8' | '9' | 'a' | 'b' | 'c' | 'd' | 'e' | 'f' => 4
-            case '4' | '5' | '6' | '7' => 3
-            case '2' | '3' => 2
-            case _ => 1
-          }
-          4 * (13 - stripLen) + (4 - bits) + 1
-        }
-      val bucket =
-        (Character.digit(hex(13), 16) << 4) | Character.digit(hex(14), 16)
-      if (rho > reg(bucket)) reg(bucket) = rho.toByte
-    }
-
-    private val NdvHexDigits = "0123456789abcdef".toCharArray
-  }
-
-  /** Build the MISSING NDV register AND SUM sidecars for every pinned
-    * file of the latest manifest — the explicit upgrade pass for tables
-    * whose sidecars predate those features (a routine commit
-    * deliberately skips them; see [[buildSidecars]]). It also re-records
-    * stale `na` SUMs written under an older, narrower summability rule,
-    * and it is how a bloom-less stats table opts into SUM sidecars (the
-    * only way its pre-feature files ever get manifest-only SUM/AVG). One
-    * bounded data-reading pass over exactly the files that lack a
-    * sidecar; returns how many NDV (file, column) sidecars were built.
-    * SQL: `CALL cat.ndv_backfill`.
-    */
-  def backfillNdv(spark: SparkSession, root: String): Long =
-    withTableLock(spark, root) {
-      val version = latestVersion(spark, root)
-      if (version == 0L) return 0L
-      val view = manifestView(spark, root, version)
-      if (view.bloomCols.isEmpty && view.statsCols.isEmpty) return 0L
-      val rootPath = new Path(root)
-      val fs = fsOf(spark, rootPath)
-      val missing = (for {
-        rel <- view.rels
-        c <- view.bloomCols
-        if !fs.exists(ndvPath(rootPath, rel, c))
-      } yield (rel, c)).size.toLong
-      buildSidecars(
-        spark, root, view.rels, view.bloomCols, backfill = true, statsCols = view.statsCols)
-      missing
-    }
-
-  // ---- per-file SUM sidecars (manifest-only SUM/AVG pushdown) -------------
-
-  /** Parquet footers carry min/max/null counts but never SUMS, so exact
-    * `SUM(x)` / `AVG(x)` pushdown needs one number the commit's pooled
-    * data-reading pass (bloom + NDV sidecars) can record at near-zero
-    * marginal cost: the file's exact sum of each SUMMABLE stats column —
-    * integrals AND fixed-scale DECIMALs (recorded as the UNSCALED BigInt;
-    * the scale is the column's, known from the schema) —
-    * one tiny sidecar per (file, column) under `_graft_manifests/sum/`.
-    * Sums fold exactly (BigInt — no order sensitivity, no overflow), so
-    * a clean table answers `SUM(x)` with zero file opens and a DV'd one
-    * scans only its DV'd files — the hybrid MIN/MAX discipline.
-    * Non-summable and hive-partition stats columns record the `na`
-    * sentinel ONCE so later commits never re-probe them (floating sums
-    * are order-sensitive — folding them would not reproduce Spark's
-    * result bit-for-bit). Files whose blooms predate this feature are
-    * upgraded by [[backfillNdv]], never by a routine commit.
-    */
-  private def sumPath(root: Path, rel: String, colName: String): Path =
-    new Path(new Path(manifestDir(root), "sum"), s"${hex(rel)}.${hex(colName)}")
-
-  private val SumNa = SidecarKernel.SumNa
-
-  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-    case _ => false
-  }
-
-  /** Can a column's per-file sum be recorded exactly? Integrals and
-    * fixed-scale DECIMALs — a decimal sum is exactly as order-insensitive
-    * as an integer's (the sidecar records the UNSCALED BigInt; the scale
-    * is the column's, known from the schema). Floats stay excluded:
-    * their sums are order-sensitive, a fold would not reproduce Spark's
-    * result bit-for-bit.
-    */
-  private def isSummable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    isIntegral(dt) || dt.isInstanceOf[org.apache.spark.sql.types.DecimalType]
-
-  // sidecars are immutable and tiny: cache decoded values (None = the
-  // `na` sentinel), plus absence (the ndvMissCache discipline)
-  private val sumCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[BigInt]]()
-  private val sumMissCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  // per-(table, column) "sums incomplete" memo: the SUM planning gate
-  // probes one sidecar per clean rel per SUM expression per planning
-  // pass; a pre-feature table with more files than the bounded miss
-  // cache holds would re-pay O(files) driver fs.exists RPCs on EVERY
-  // pass. One negative memo bounds that to a single probe run, and is
-  // invalidated the moment a real (non-`na`) sum sidecar for the pair is
-  // written — commit, branch land or backfill alike.
-  // value = the WITNESS rel observed missing, so a LATER query whose rel
-  // set does not contain the witness (a pruned subset, an older pinned
-  // version) still probes — one stale negative must not disable pushdown
-  // for file sets that are complete
-  private val sumIncompleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def sumMemoKey(root: String, colName: String): String =
-    new Path(root).toString + "\u0000" + colName
-
-  /** Does EVERY rel in `rels` carry a decodable (non-`na`) sum sidecar
-    * for `colName`? The SUM pushdown planning gate — lazily
-    * short-circuits on the first miss and memoizes the negative per
-    * (table, column) so repeated planning against an un-backfilled table
-    * costs one containsKey, not one filesystem probe per file.
-    */
-  private[sources] def allSumsPresent(
-      spark: SparkSession,
-      root: String,
-      colName: String,
-      rels: Seq[String]): Boolean = {
-    val key = sumMemoKey(root, colName)
-    val witness = sumIncompleteCache.get(key)
-    if (witness != null && rels.contains(witness)) return false
-    var firstMissing: String = null
-    val ok = rels.forall { r =>
-      val present = fileSumOf(spark, root, r, colName).isDefined
-      if (!present && firstMissing == null) firstMissing = r
-      present
-    }
-    if (!ok) sumIncompleteCache.put(key, firstMissing)
-    ok
-  }
-
-  /** The file's recorded exact sum of `colName`'s non-null values (0 when
-    * all null — the manifest null count disambiguates), or None when the
-    * sidecar is absent or `na`: callers must fall back to scanning, never
-    * guess.
-    */
-  private[sources] def fileSumOf(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      colName: String): Option[BigInt] = {
-    val p = sumPath(new Path(root), rel, colName)
-    val key = p.toString
-    val cached = sumCache.get(key)
-    if (cached != null) return cached
-    if (sumMissCache.containsKey(key)) return None
-    val fs = fsOf(spark, p)
-    try {
-      val txt = MetaFiles.readText(fs, p).map(_.trim).getOrElse {
-        if (sumMissCache.size() >= 65536)
-          sumMissCache.keySet.iterator().asScala.take(16384).foreach(sumMissCache.remove)
-        sumMissCache.put(key, java.lang.Boolean.TRUE)
-        return None
-      }
-      val v = if (txt == SumNa) None else Some(BigInt(txt))
-      if (sumCache.size() >= 65536)
-        sumCache.keySet.iterator().asScala.take(16384).foreach(sumCache.remove)
-      sumCache.put(key, v)
-      v
-    } catch { case _: Exception => None }
-  }
-
-  // ---- NDV register sidecars (portable HyperLogLog) -----------------------
-
-  /** Registers per (file, column) NDV sketch: 256 — the q48 scheme, kept
-    * deliberately PORTABLE (md5-derived buckets and rho read off the hex
-    * string, integer-domain register sums) so a DuckDB oracle recomputes
-    * the merged estimate bit-for-bit. One sidecar is 256 bytes; merging
-    * is elementwise max — associative, commutative, idempotent, so any
-    * partition of history into commits yields the same table-level
-    * estimate as a single pass (merge invariance).
-    */
-  val NdvRegisters: Int = SidecarKernel.NdvRegisters
-
-  private def ndvPath(root: Path, rel: String, colName: String): Path =
-    new Path(new Path(manifestDir(root), "ndv"), s"${hex(rel)}.${hex(colName)}")
-
-  // decoded register sidecars are immutable and tiny (256 B): cache per
-  // JVM like blooms, bounded
-  private val ndvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
-  // ABSENCE is cached too: a pre-NDV or partially-sidecar'd table would
-  // otherwise pay O(kept rels × ndv cols) fs.exists RPCs on EVERY stats
-  // estimation (columnStats runs per plan). Entries are invalidated by
-  // the one writer that can create a sidecar (buildSidecars).
-  private val ndvMissCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** The file's NDV registers for `colName`, None when the sidecar is
-    * absent/unreadable (callers must fall back, never guess).
-    */
-  def ndvRegisters(spark: SparkSession, root: String, rel: String, colName: String): Option[Array[Byte]] = {
-    val p = ndvPath(new Path(root), rel, colName)
-    val key = p.toString
-    val cached = ndvCache.get(key)
-    if (cached != null) return Some(cached)
-    if (ndvMissCache.containsKey(key)) return None
-    val fs = fsOf(spark, p)
-    try {
-      if (!fs.exists(p)) {
-        if (ndvMissCache.size() >= 65536)
-          ndvMissCache.keySet.iterator().asScala.take(16384).foreach(ndvMissCache.remove)
-        ndvMissCache.put(key, java.lang.Boolean.TRUE)
-        return None
-      }
-      val in = fs.open(p)
-      val buf =
-        try {
-          val b = new Array[Byte](NdvRegisters)
-          org.apache.hadoop.io.IOUtils.readFully(in, b, 0, NdvRegisters)
-          b
-        } finally in.close()
-      // 256 B per entry ⇒ ~16 MB at the cap: a table with tens of
-      // thousands of files estimates without evicting mid-merge (the old
-      // 4096 cap thrashed — every eviction is a sidecar re-read)
-      if (ndvCache.size() >= 65536)
-        ndvCache.keySet.iterator().asScala.take(16384).foreach(ndvCache.remove)
-      ndvCache.put(key, buf)
-      Some(buf)
-    } catch { case _: Exception => None }
-  }
-
-  /** The q48 HyperLogLog estimate from merged registers: integer-domain
-    * register sum (aggregation order cannot perturb it), absent buckets
-    * contribute 2^53, linear counting below 2.5·m — the exact arithmetic
-    * a DuckDB oracle reproduces.
-    */
-  def ndvEstimate(reg: Array[Byte]): Double = {
-    val m = reg.length
-    val alphaM2 = 0.7213 / (1 + 1.079 / m) * m * m
-    val two53 = 9007199254740992L // 2^53
-    var nz = 0L
-    var sp = 0L
-    var i = 0
-    while (i < m) {
-      val r = reg(i).toInt
-      if (r > 0) { nz += 1L; sp += (1L << (53 - r)) }
-      i += 1
-    }
-    val raw = alphaM2 / ((sp + (m - nz) * two53).toDouble / two53.toDouble)
-    if (raw <= 2.5 * m && nz < m) m.toDouble * math.log(m.toDouble / (m - nz)) else raw
-  }
-
-  /** Manifest-only approximate COUNT(DISTINCT col): merge every pinned
-    * file's register sidecar (driver metadata I/O — 256 bytes per file,
-    * cached; ZERO data-file opens) and estimate. None when any pinned
-    * file lacks a sidecar (pre-NDV commits, non-indexed columns) — the
-    * caller falls back to a real scan rather than undercounting.
-    *
-    * Deletion vectors make this an UPPER estimate (registers are
-    * insert-time sketches; deletes don't shrink them) — the same
-    * direction a planner wants for join sizing. Fully-deleted files still
-    * contribute for the same reason.
-    */
-  def approxCountDistinct(
-      spark: SparkSession,
-      root: String,
-      colName: String,
-      version: Long = -1L): Option[Double] = {
-    val view = manifestView(spark, root, version)
-    if (view.rels.isEmpty) return Some(0.0)
-    mergedNdvEstimate(spark, root, view.rels, colName)
-  }
-
-  /** Merge an explicit file list's register sidecars into one estimate —
-    * the planner-facing form ([[graft.sources.snap.SnapScanStats]] reports
-    * it as the scan's per-column `distinctCount`). None when any listed
-    * file lacks a sidecar.
-    */
-  private[sources] def mergedNdvEstimate(
-      spark: SparkSession,
-      root: String,
-      rels: Seq[String],
-      colName: String): Option[Double] = {
-    if (rels.isEmpty) return Some(0.0)
-    // short-circuit on the FIRST missing sidecar and merge into one
-    // accumulator: a partially-sidecar'd table must not probe (or hold)
-    // every remaining register array after the answer is already None
-    val merged = new Array[Byte](NdvRegisters)
-    val it = rels.iterator
-    while (it.hasNext) {
-      ndvRegisters(spark, root, it.next(), colName) match {
-        case None => return None
-        case Some(r) =>
-          var i = 0
-          while (i < NdvRegisters) {
-            if (r(i) > merged(i)) merged(i) = r(i)
-            i += 1
-          }
-      }
-    }
-    Some(ndvEstimate(merged))
-  }
-
-  // decoded sidecars are immutable (rel names one file forever): cache
-  // them per JVM so a point-probe-heavy session reads each ONCE. Byte-
-  // budgeted LRU (the d12771d NDV-cache lesson): sizing by ENTRY count
-  // thrashed — 256 mostly-tiny filters is a few MiB, yet a table with
-  // >256 live (rel, col) sidecars re-read up to 1 MiB from the FS on
-  // every narrowing epoch past the cap. Budget the actual bytes instead
-  // and evict least-recently-USED, never random.
-  private val BloomCacheBudgetBytes: Long = 256L * 1024 * 1024
-  private var bloomCacheBytes: Long = 0L
-  private val bloomCache =
-    new java.util.LinkedHashMap[String, (org.apache.spark.util.sketch.BloomFilter, Long)](
-      1024, 0.75f, /* accessOrder = */ true)
-
-  private def bloomCacheGet(key: String): org.apache.spark.util.sketch.BloomFilter =
-    bloomCache.synchronized {
-      val e = bloomCache.get(key) // get() refreshes LRU order
-      if (e == null) null else e._1
-    }
-
-  private def bloomCachePut(key: String, bf: org.apache.spark.util.sketch.BloomFilter): Unit =
-    bloomCache.synchronized {
-      if (!bloomCache.containsKey(key)) {
-        val bytes = math.max(bf.bitSize() / 8L, 64L) // object floor, honest enough
-        bloomCache.put(key, (bf, bytes))
-        bloomCacheBytes += bytes
-        val it = bloomCache.entrySet().iterator()
-        while (bloomCacheBytes > BloomCacheBudgetBytes && bloomCache.size() > 1) {
-          val eldest = it.next()
-          bloomCacheBytes -= eldest.getValue._2
-          it.remove()
-        }
-      }
-    }
-
-  /** Can file `rel` possibly contain `value` in `colName`? `true` when the
-    * sidecar is absent/unreadable (cannot exclude — pruning must only ever
-    * skip DEFINITE misses); `false` is definitive. `value` is in the
-    * stats-string domain ([[graft.sources.snap.SnapFilters.statString]] /
-    * `CAST(col AS STRING)` — the same rendering the sidecar was built
-    * with).
-    */
-  def bloomMightContain(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      colName: String,
-      value: String): Boolean = {
-    val p = bloomPath(new Path(root), rel, colName)
-    val key = p.toString
-    var bf = bloomCacheGet(key)
-    if (bf == null) {
-      lastBloomReads.set(lastBloomReads.get() + 1L)
-      val fs = fsOf(spark, p)
-      if (!fs.exists(p)) return true
-      val in = fs.open(p)
-      try bf = org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      catch { case _: Exception => return true }
-      finally in.close()
-      bloomCachePut(key, bf)
-    }
-    bf.mightContainString(value)
-  }
-
   /** Deep-clone one pinned version of a snapshot table into a fresh root —
     * the CLONE a lakehouse offers for dev/test forks: the clone is a fully
     * independent table (its own files, manifests, sidecars) whose v1 is
@@ -3204,22 +2396,11 @@ object Snapshots {
           dstFs.mkdirs(to.getParent)
           if (!org.apache.hadoop.fs.FileUtil.copy(fs, from, dstFs, to, false, false, conf))
             sys.error(s"clone copy failed: $from -> $to")
-          def copySidecar(path: (Path, String, String) => Path, c: String): Unit = {
-            val src = path(srcPath, rel, c)
-            if (fs.exists(src)) {
-              val dst = path(dstPath, rel, c)
-              dstFs.mkdirs(dst.getParent)
-              org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, false, conf)
-            }
+          // value-index sidecars are keyed by rel — still valid under the new root
+          ValueIndex.files(srcPath, rel, view).zip(ValueIndex.files(dstPath, rel, view)).foreach {
+            case (src, dst) =>
+              if (fs.exists(src)) org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, false, conf)
           }
-          // the NDV register sidecar rides the bloom discipline, SUM
-          // sidecars the stats one (keyed by rel — still valid under the
-          // new root)
-          view.bloomCols.foreach { c =>
-            copySidecar(bloomPath, c)
-            copySidecar(ndvPath, c)
-          }
-          view.statsCols.foreach(copySidecar(sumPath, _))
           // the file's deletion-vector sidecar carries with it — the
           // re-rendered manifest line keeps the pointer (rel-relative, so
           // it stays exact under the new root)
@@ -3579,8 +2760,8 @@ object Snapshots {
     * explicit-file-list scan ([[scanRels]]), immune to concurrent
     * maintenance — live and archived files, branch files and deletion
     * vectors all read through the catalog's one scan.
-    */
-  /** Optional `prune`: inclusive (column, lo, hi) ranges applied against
+    *
+    * Optional `prune`: inclusive (column, lo, hi) ranges applied against
     * the manifest's recorded per-file stats — files whose interval misses
     * every range are dropped from the scan BEFORE any footer is opened
     * (zero I/O planning; a v1 manifest or a stat-less column prunes
@@ -3638,7 +2819,7 @@ object Snapshots {
             (!intervalTrusted(st, c) || st.get(c).forall(cs => overlaps(cs, lo, hi))) &&
             !allNull(st, c)
           } &&
-          probes.forall { case (c, v) => bloomMightContain(spark, root, rel, c, v) }
+          probes.forall { case (c, v) => ValueIndex.bloomMightContain(spark, root, rel, c, v) }
         }
       }
     if (rels.isEmpty) {
@@ -4126,12 +3307,6 @@ object Snapshots {
     }
   }
 
-  /** The branch's CURRENT base (fork) version: the last rebase marker in
-    * its chain, else the ref pin. Chain-authoritative — a crash between a
-    * rebase's marker write and its ref rewrite must not change what the
-    * branch reads over, what vacuum retains, or what fast-forward
-    * compares against.
-    */
   /** Marker-scan memo per (root, branch): the newest branch version whose
     * manifest was already inspected, and the newest `#fork` marker found
     * so far. Branch manifests are immutable, so a later call only reads
@@ -4146,6 +3321,12 @@ object Snapshots {
   private[sources] def dropBranchForkMemo(root: String, name: String): Unit =
     branchForkCache.remove(new Path(root).toString + "\u0000" + name)
 
+  /** The branch's CURRENT base (fork) version: the last rebase marker in
+    * its chain, else the ref pin. Chain-authoritative — a crash between a
+    * rebase's marker write and its ref rewrite must not change what the
+    * branch reads over, what vacuum retains, or what fast-forward
+    * compares against.
+    */
   private[sources] def branchForkVersion(spark: SparkSession, root: String, name: String): Long = {
     val rootPath = new Path(root)
     val fs = fsOf(spark, rootPath)
@@ -4432,17 +3613,14 @@ object Snapshots {
             moved ::= (to, from)
             // sidecars are keyed by rel but their CONTENT is a pure function
             // of the file bytes — rename instead of recomputing
-            (bv.bloomCols.map(c => (bloomPath(rootPath, rel, c), bloomPath(rootPath, target, c))) ++
-              bv.bloomCols.map(c => (ndvPath(rootPath, rel, c), ndvPath(rootPath, target, c))) ++
-              bv.statsCols.map(c => (sumPath(rootPath, rel, c), sumPath(rootPath, target, c))))
-              .foreach { case (f, t) =>
+            ValueIndex.files(rootPath, rel, bv).zip(ValueIndex.files(rootPath, target, bv)).foreach {
+              case (f, t) =>
                 if (fs.exists(f)) {
                   fs.rename(f, t)
                   movedSidecars ::= (t, f)
-                  ndvMissCache.remove(t.toString)
-                  sumMissCache.remove(t.toString)
+                  ValueIndex.forget(Seq(f.toString, t.toString))
                 }
-              }
+            }
             rel -> target
           }
           // a MOVED file carrying a vector (a branch delete hit a branch
@@ -4478,13 +3656,9 @@ object Snapshots {
               try
                 if (fs.exists(to)) {
                   fs.rename(to, from)
-                  // the value/miss caches may have learned the target key
-                  // between rename and rollback — forget both renderings
-                  Seq(to.toString, from.toString).foreach { k =>
-                    sumCache.remove(k)
-                    sumMissCache.remove(k)
-                    ndvMissCache.remove(k)
-                  }
+                  // the cache may have learned either key between the
+                  // move and the rollback
+                  ValueIndex.forget(Seq(to.toString, from.toString))
                 }
               catch { case _: Exception => () }
             }
@@ -4716,22 +3890,11 @@ object Snapshots {
         // branch lives; a corrupt branch fails this loudly — retention
         // must never silently shrink.
         // ONE branch-chain reconstruction serves BOTH retention sets
-        // below (sidecar hex and DV sidecars) — branchView re-reads the
+        // below (value-index and DV sidecars) — branchView re-reads the
         // chain from the filesystem on every call
         val branchViews: Seq[ManifestView] =
           branches(spark, root).map(n => branchView(spark, root, n))
-        val branchRelsHex: Set[String] = branchViews.flatMap(_.rels).map(hex).toSet
-        val referencedHex = referenced.map(hex) ++ branchRelsHex
-        Seq("bloom", "ndv", "sum").foreach { kind =>
-          val d = new Path(manifestDir(rootPath), kind)
-          if (fs.exists(d)) {
-            fs.listStatus(d).foreach { st =>
-              val name = st.getPath.getName
-              if (!name.startsWith(".") && !referencedHex.contains(name.split("\\.")(0)))
-                fs.delete(st.getPath, false)
-            }
-          }
-        }
+        ValueIndex.reap(fs, rootPath, referenced ++ branchViews.flatMap(_.rels))
         // deletion-vector sidecars: keep exactly those some RETAINED
         // manifest's stats point at (a pinned read — or a restore — of a
         // retained version needs its version of each file's DV); every

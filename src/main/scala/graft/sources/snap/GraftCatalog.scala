@@ -19,7 +19,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{DataFiles, Snapshots}
+import graft.sources.{DataFiles, Snapshots, ValueIndex}
 
 /** SQL-native catalog over the graft snapshot table format
   * ([[graft.sources.Snapshots]]) — the layer that turns a directory of
@@ -755,7 +755,7 @@ class SnapMetaScan(dir: String, version: Long, kind: String, schema: StructType)
       case "ndv" =>
         val mv = Snapshots.manifestView(spark, dir, version)
         mv.bloomCols.sorted.flatMap { c =>
-          Snapshots.mergedNdvEstimate(spark, dir, mv.rels, c).map(est => Row(c, est))
+          ValueIndex.mergedNdvEstimate(spark, dir, mv.rels, c).map(est => Row(c, est))
         }
       case "checks" =>
         val pending = graft.sources.Constraints.pendingChecks(spark, dir).toSet
@@ -1590,14 +1590,12 @@ class SnapScanBuilder(
         declared <- tableSchema.fields.find(_.name == c).map(_.dataType)
         // integrals AND fixed-scale decimals fold exactly (the sidecar
         // records the unscaled BigInt); floats stay scan-only
-        if declared == ByteType || declared == ShortType ||
-          declared == IntegerType || declared == LongType ||
-          declared.isInstanceOf[org.apache.spark.sql.types.DecimalType]
+        if ValueIndex.isSummable(declared)
         if nullsKnown(c) // implies dvdScannable
         // short-circuits on the first missing sidecar AND memoizes the
         // negative per (table, column) — a pre-feature table must not
         // re-pay O(files) driver probes on every planning pass
-        if Snapshots.allSumsPresent(SparkSession.active, dir, c, cleanRels)
+        if ValueIndex.allSumsPresent(SparkSession.active, dir, c, cleanRels)
       } yield SnapAggScan.SumF(c, declared): SnapAggScan.Field
 
     val fields = agg.aggregateExpressions.toSeq.map {
@@ -1665,10 +1663,10 @@ class SnapScanBuilder(
             notNullCols.forall(c => !Snapshots.allNull(st, c)) &&
             isNullCols.forall(c => Snapshots.nullCountOf(st, c).forall(_ > 0L)) &&
             probes.forall { case (c, v) =>
-              Snapshots.bloomMightContain(SparkSession.active, dir, rel, c, v)
+              ValueIndex.bloomMightContain(SparkSession.active, dir, rel, c, v)
             } &&
             inProbes.forall { case (c, vs) =>
-              vs.exists(v => Snapshots.bloomMightContain(SparkSession.active, dir, rel, c, v))
+              vs.exists(v => ValueIndex.bloomMightContain(SparkSession.active, dir, rel, c, v))
             }
           }
       // consumed filters ride along for display only: they were already
@@ -1717,7 +1715,7 @@ private[snap] object SnapScanStats {
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
       ndvCols.foreach { c =>
-        Snapshots.mergedNdvEstimate(spark, dir, keptRels, c).foreach { est =>
+        ValueIndex.mergedNdvEstimate(spark, dir, keptRels, c).foreach { est =>
           val n = math.max(0L, math.round(est))
           out.put(
             org.apache.spark.sql.connector.expressions.Expressions.column(c),
@@ -1900,7 +1898,7 @@ class SnapAggScan(
           st(Snapshots.RowCountKey).min.toLong - Snapshots.nullCountOf(st, c).get
         }.sum
         val manifestSide = clean
-          .map(r => Snapshots.fileSumOf(spark, dir, r, c).getOrElse(sys.error(
+          .map(r => ValueIndex.fileSumOf(spark, dir, r, c).getOrElse(sys.error(
             s"sum sidecar for $r.$c vanished between planning and execution")))
           .sum
         val scanSide = scannedVal(i) // null when no DV'd file (or no non-null row) contributed

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{Snapshots, Sources}
+import graft.sources.{Snapshots, Sources, ValueIndex}
 
 /** SQL `CALL` surface for the snapshot format's maintenance operators —
   * the lakehouse procedures (Iceberg's `CALL cat.system.rewrite_…` shape,
@@ -378,7 +378,7 @@ private[snap] object GraftProcedures {
         "whose bloom sidecars predate the NDV feature; routine commits deliberately skip them"
     override def parameters(): Array[ProcedureParameter] = Array(in("table", StringType))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val built = Snapshots.backfillNdv(spark, dirOf(input.getUTF8String(0).toString))
+      val built = ValueIndex.backfillNdv(spark, dirOf(input.getUTF8String(0).toString))
       result(out("sidecars_built" -> LongType), Seq(built))
     }
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Snapshots
+import graft.sources.{Snapshots, ValueIndex}
 
 /** THE batch scan of a snapshot table — every catalog data read plans
   * as this one native DSv2 scan, which carries the two biggest join wins
@@ -206,11 +206,11 @@ class SnapV2BatchScan(
             // as no-stat; the bloom still applies (built post-upgrade)
             case Some(_) if !Snapshots.intervalTrusted(st, c) =>
               !view.bloomCols.contains(c) ||
-              vs.exists(v => Snapshots.bloomMightContain(s, dir, rel, c, v))
+              vs.exists(v => ValueIndex.bloomMightContain(s, dir, rel, c, v))
             case Some(cs) =>
               vs.exists { v =>
                 Snapshots.overlapsRange(cs, Some(v), Some(v)) &&
-                (!view.bloomCols.contains(c) || Snapshots.bloomMightContain(s, dir, rel, c, v))
+                (!view.bloomCols.contains(c) || ValueIndex.bloomMightContain(s, dir, rel, c, v))
               }
             case None => true // no interval recorded: cannot exclude
           })

@@ -990,15 +990,15 @@ class DeleteVectorsSpec extends SparkSpec {
     // the per-epoch driver-I/O tax the entry-capped cache used to pay
     DeleteVectors.upsert(
       spark, dir, Seq((2L, "2024-01-02", 22.0)).toDF("id", "day", "v"), Seq("id"))
-    Snapshots.lastBloomReads.set(0L)
+    ValueIndex.lastBloomReads.set(0L)
     // key id=3: range keeps exactly the two ORIGINAL files (epoch 1's
     // appended file spans [2,2] and is range-excluded), both of whose
     // sidecars epoch 1 already decoded
     DeleteVectors.upsert(
       spark, dir, Seq((3L, "2024-01-01", 33.0)).toDF("id", "day", "v"), Seq("id"))
     assert(
-      Snapshots.lastBloomReads.get() == 0L,
-      s"second epoch re-read ${Snapshots.lastBloomReads.get()} bloom sidecars from the FS")
+      ValueIndex.lastBloomReads.get() == 0L,
+      s"second epoch re-read ${ValueIndex.lastBloomReads.get()} bloom sidecars from the FS")
   }
 
   test("ad-hoc upsert sweeps a crashed PRIOR attempt's leftovers (constant prefix)") {

@@ -167,24 +167,25 @@ class FsCallCountSpec extends SparkSpec {
       streamTag = "q", epochId = 1L) == ((0L, 0L)), "the counted epoch must have advanced the marker")
   }
 
+  /** Lands one fresh parquet file under `<dir>/day=<day>/`, uncommitted. */
+  private def land(dir: String, day: String): String = {
+    val stage = s"$dir/.stage-$day"
+    Seq(("x", 1L)).toDF("cat", "v").coalesce(1).write.parquet(stage)
+    val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new Path(stage)).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    val rel = s"day=$day/${part.getName}"
+    fs.mkdirs(new Path(s"$dir/day=$day"))
+    assert(fs.rename(part, new Path(s"$dir/$rel")))
+    fs.delete(new Path(stage), true)
+    rel
+  }
+
   test("one Snapshots.commitAppend issues no more namespace calls than the bound") {
     val dir = base("fscount_app") + "/t"
     table(dir)
-    // lands one fresh parquet file under `day=<day>/`, uncommitted
-    def land(day: String): String = {
-      val stage = s"$dir/.stage-$day"
-      Seq(("x", 1L)).toDF("cat", "v").coalesce(1).write.parquet(stage)
-      val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val part = fs.listStatus(new Path(stage)).map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      val rel = s"day=$day/${part.getName}"
-      fs.mkdirs(new Path(s"$dir/day=$day"))
-      assert(fs.rename(part, new Path(s"$dir/$rel")))
-      fs.delete(new Path(stage), true)
-      rel
-    }
-    Snapshots.commitAppend(spark, dir, Seq(land("d05")))
+    Snapshots.commitAppend(spark, dir, Seq(land(dir, "d05")))
     val v = Snapshots.latestVersion(spark, dir)
-    val rel = land("d06")
+    val rel = land(dir, "d06")
     check("commit_append", CountingFs.during(Snapshots.commitAppend(spark, dir, Seq(rel))))
     assert(Snapshots.latestVersion(spark, dir) == v + 1L)
   }
@@ -300,5 +301,47 @@ class FsCallCountSpec extends SparkSpec {
     assert(headProbes.isEmpty, s"a pinned window probed the manifests: $headProbes")
     val e = intercept[Exception](feed(head + 1L).count())
     assert(e.getMessage.contains(s"changes range [2, ${head + 1L}] out of history"), e.getMessage)
+  }
+
+  test("a table with stats columns and no bloom columns makes no sidecar dirs") {
+    val dir = base("fscount_nodirs") + "/t"
+    val schema = Seq(("d01", "a", 1L)).toDF("day", "cat", "v").schema
+    Snapshots.createTable(spark, dir, schema, Seq("day"), Seq("day", "cat", "v"))
+    Snapshots.commitAppend(spark, dir, Seq(land(dir, "d01")))
+    DeleteVectors.upsert(spark, dir, Seq(("d01", "x", 2L)).toDF("day", "cat", "v"), Seq("day", "cat"))
+    assert(Snapshots.readSnapshot(spark, dir).count() == 1L)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val made = Seq("bloom", "ndv", "sum").filter(d => fs.exists(new Path(s"$dir/${Snapshots.ManifestDirName}/$d")))
+    assert(made.isEmpty, s"sidecar dirs made with nothing to write: $made")
+  }
+
+  test("a missing sidecar is read once, and the commit that rebuilds it reaches the cache") {
+    val dir = base("fscount_sidecar") + "/t"
+    val rows = Seq(("d01", "a", 10L), ("d01", "b", 11L), ("d02", "a", 20L)).toDF("day", "cat", "v")
+    Sources.writeParquet(rows.repartition(1), dir, partitionCols = Seq("day"))
+    Snapshots.commit(spark, dir, Seq("day", "cat", "v"), Seq("cat"))
+    val rel = Snapshots.files(spark, dir).filter(_.startsWith("day=d01/")).head
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hex(s: String) = s.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString
+    def sidecar(kind: String, c: String) = new Path(s"$dir/${Snapshots.ManifestDirName}/$kind/${hex(rel)}.${hex(c)}")
+    Seq(("bloom", "cat"), ("ndv", "cat"), ("sum", "v")).foreach { case (k, c) => assert(fs.delete(sidecar(k, c), false)) }
+    val zero = CountingFs.Kinds.map(_ -> 0L).toMap
+    // each absent sidecar reads as "cannot exclude" / "fall back", and the
+    // second probe of it is answered from memory
+    def twice[T](probe: => T): T = {
+      val first = probe
+      val calls = CountingFs.during(assert(probe == first))
+      assert(calls == zero, s"the second probe of an absent sidecar issued $calls")
+      first
+    }
+    assert(twice(ValueIndex.bloomMightContain(spark, dir, rel, "cat", "zz")))
+    assert(twice(ValueIndex.ndvRegisters(spark, dir, rel, "cat")).isEmpty)
+    assert(twice(ValueIndex.fileSumOf(spark, dir, rel, "v")).isEmpty)
+    // the listing commit rebuilds all three; the cache must drop the absences
+    Snapshots.commit(spark, dir)
+    assert(!ValueIndex.bloomMightContain(spark, dir, rel, "cat", "zz"), "the rebuilt bloom must exclude")
+    assert(ValueIndex.bloomMightContain(spark, dir, rel, "cat", "b"))
+    assert(ValueIndex.ndvRegisters(spark, dir, rel, "cat").isDefined)
+    assert(ValueIndex.fileSumOf(spark, dir, rel, "v").contains(BigInt(21)))
   }
 }

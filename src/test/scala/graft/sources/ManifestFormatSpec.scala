@@ -26,12 +26,17 @@ import graft.SparkSpec
   * The normalized output of each run is written to
   * `target/manifest-golden.actual.txt`, which is how the fixture is
   * captured.
+  *
+  * The same script records the value-index sidecar trees (`bloom/`,
+  * `ndv/`, `sum/`) of every table after every step: each file's name with
+  * its hex rel and column decoded (part-file UUIDs normalized) and the
+  * SHA-256 of its bytes, compared with `sidecar-golden.txt` (captured
+  * from `target/sidecar-golden.actual.txt` the same way).
   */
 class ManifestFormatSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val fixture = "/graft/sources/manifest-golden.txt"
   private val byView: Set[String] = Set.empty
 
   private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
@@ -108,6 +113,23 @@ class ManifestFormatSpec extends SparkSpec {
     }
   }
 
+  /** The sidecar trees of the table at `root`: one line per file,
+    * `<kind>/<rel>.<column> <sha-256 of the bytes>`, sorted.
+    */
+  private def sidecarTrees(root: String): String = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("bloom", "ndv", "sum").flatMap { kind =>
+      val dir = new Path(new Path(root, Snapshots.ManifestDirName), kind)
+      val files = if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).toSeq else Nil
+      files.filterNot(_.getName.startsWith(".")).map { p =>
+        val Array(rel, c) = p.getName.split("\\.", 2).map(unhex)
+        val bytes = Files.readAllBytes(Paths.get(p.toUri))
+        val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes).map(b => f"${b & 0xff}%02x").mkString
+        s"$kind/${norm(rel)}.$c $sha"
+      }
+    }.sorted.mkString("\n")
+  }
+
   private def parse(text: String): Map[String, String] =
     text.split("\n=== ").toSeq.filter(_.nonEmpty).map { sec =>
       val body = sec.stripPrefix("=== ")
@@ -115,7 +137,10 @@ class ManifestFormatSpec extends SparkSpec {
       if (cut < 0) body -> "" else body.substring(0, cut) -> body.substring(cut + 1).stripSuffix("\n")
     }.toMap
 
-  test("every commit face writes the manifest text and partition index of the golden fixture") {
+  /** Runs the script once: the manifests and views it leaves, and the
+    * sidecar trees after each step.
+    */
+  private lazy val script: (Seq[(String, String)], Seq[(String, String)]) = {
     val base = Files.createTempDirectory("golden").toString
     val root = s"$base/t"
     val key = "spark.graft.snapshot.checkpointInterval"
@@ -123,42 +148,58 @@ class ManifestFormatSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.golden", classOf[graft.sources.snap.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.golden.root", base)
     val out = Seq.newBuilder[(String, String)]
+    val trees = Seq.newBuilder[(String, String)]
+    def step(tag: String)(op: => Unit): Unit = {
+      op
+      trees += s"$tag t" -> sidecarTrees(root)
+    }
     try {
       val schema = StructType(Seq(
         StructField("id", LongType), StructField("day", StringType), StructField("v", DoubleType)))
       // v1: DDL
-      Snapshots.createTable(spark, root, schema, Seq("day"), Seq("day", "id"), Seq("id"))
+      step("v1 createTable")(Snapshots.createTable(spark, root, schema, Seq("day"), Seq("day", "id"), Seq("id")))
       // v2: lock-free append of a file carrying an added column
-      val a1 = landAs(
-        Seq((1L, 1.0, "x"), (2L, 2.0, "y"), (3L, 3.0, "z"), (4L, 4.0, "w")).toDF("id", "v", "tag"),
-        root, "day=d01/a1.parquet")
-      Snapshots.commitAppend(spark, root, Seq(a1))
+      step("v2 commitAppend") {
+        val a1 = landAs(
+          Seq((1L, 1.0, "x"), (2L, 2.0, "y"), (3L, 3.0, "z"), (4L, 4.0, "w")).toDF("id", "v", "tag"),
+          root, "day=d01/a1.parquet")
+        Snapshots.commitAppend(spark, root, Seq(a1))
+      }
       // v3: listing commit adopting a loose file (a checkpoint at interval 3)
-      landAs(
-        Seq((5L, 5.0), (6L, 6.0), (7L, 7.0), (8L, 8.0)).toDF("id", "v"), root, "day=d02/b1.parquet")
-      Snapshots.commit(spark, root)
+      step("v3 commit") {
+        landAs(
+          Seq((5L, 5.0), (6L, 6.0), (7L, 7.0), (8L, 8.0)).toDF("id", "v"), root, "day=d02/b1.parquet")
+        Snapshots.commit(spark, root)
+      }
       // v4: merge-on-read DELETE (a deletion-vector restate)
-      DeleteVectors.deleteWhere(spark, root, col("id") === 2L)
+      step("v4 deleteWhere")(DeleteVectors.deleteWhere(spark, root, col("id") === 2L))
       // v5: upsert (one restate + appended files)
-      DeleteVectors.upsert(
-        spark, root,
-        Seq((6L, "d02", 60.0, "u"), (9L, "d03", 9.0, "n")).toDF("id", "day", "v", "tag"),
-        Seq("id"))
+      step("v5 upsert") {
+        DeleteVectors.upsert(
+          spark, root,
+          Seq((6L, "d02", 60.0, "u"), (9L, "d03", 9.0, "n")).toDF("id", "day", "v", "tag"),
+          Seq("id"))
+      }
       // v6: metadata-only SQL DELETE (removed-only restate)
-      spark.sql("DELETE FROM golden.t WHERE day = 'd03'")
+      step("v6 sql delete")(spark.sql("DELETE FROM golden.t WHERE day = 'd03'"))
       // v7: ALTER TABLE ADD COLUMNS (header-only DDL)
-      spark.sql("ALTER TABLE golden.t ADD COLUMNS (note STRING)")
+      step("v7 alter")(spark.sql("ALTER TABLE golden.t ADD COLUMNS (note STRING)"))
       // v8: forced checkpoint; v9: restore to the DV-delete version
-      Snapshots.checkpoint(spark, root)
-      Snapshots.restore(spark, root, 4L)
+      step("v8 checkpoint")(Snapshots.checkpoint(spark, root))
+      step("v9 restore")(Snapshots.restore(spark, root, 4L))
       // clone of the latest version
-      Snapshots.cloneSnapshot(spark, root, s"$base/c")
+      step("clone") {
+        Snapshots.cloneSnapshot(spark, root, s"$base/c")
+        trees += "clone c" -> sidecarTrees(s"$base/c")
+      }
       // a branch append, then its fast-forward (v10)
-      Snapshots.createBranch(spark, root, "b")
-      Snapshots.appendToBranch(
-        spark, root, "b", Seq((10L, "d04", 10.0, "b", "nb")).toDF("id", "day", "v", "tag", "note"))
+      step("createBranch")(Snapshots.createBranch(spark, root, "b"))
+      step("appendToBranch") {
+        Snapshots.appendToBranch(
+          spark, root, "b", Seq((10L, "d04", 10.0, "b", "nb")).toDF("id", "day", "v", "tag", "note"))
+      }
       out ++= branchCapture(root, "b")
-      Snapshots.fastForward(spark, root, "b")
+      step("v10 fastForward")(Snapshots.fastForward(spark, root, "b"))
       out ++= capture("t", root)
       out ++= capture("c", s"$base/c")
     } finally {
@@ -166,18 +207,38 @@ class ManifestFormatSpec extends SparkSpec {
       spark.conf.unset("spark.sql.catalog.golden")
       spark.conf.unset("spark.sql.catalog.golden.root")
     }
-    val got = out.result()
+    (out.result(), trees.result())
+  }
+
+  /** Writes `got` to `target/<name>.actual.txt`; its sections must equal
+    * the fixture's, except the versions `compared` leaves out.
+    */
+  private def assertGolden(
+      name: String,
+      got: Seq[(String, String)],
+      compared: String => Boolean = _ => true): Unit = {
     val text = got.map { case (k, v) => s"=== $k\n$v\n" }.mkString
     Files.createDirectories(Paths.get("target"))
-    Files.write(Paths.get("target/manifest-golden.actual.txt"), text.getBytes(UTF_8))
-    val in = getClass.getResourceAsStream(fixture)
-    assert(in != null, s"missing fixture $fixture (this run wrote target/manifest-golden.actual.txt)")
+    Files.write(Paths.get(s"target/$name.actual.txt"), text.getBytes(UTF_8))
+    val resource = s"/graft/sources/$name.txt"
+    val in = getClass.getResourceAsStream(resource)
+    assert(in != null, s"missing fixture $resource (this run wrote target/$name.actual.txt)")
     val want = parse(new String(in.readAllBytes(), UTF_8))
     val have = parse(text)
-    def compared(k: String): Boolean = !byView.exists(v => k == s"$v.manifest" || k == s"$v.manifest.pidx")
     assert(want.keySet.filter(compared) == have.keySet.filter(compared))
     want.keys.toSeq.sorted.filter(compared).foreach { k =>
       assert(have(k) == want(k), s"$k differs from the golden fixture")
     }
+  }
+
+  test("every commit face writes the manifest text and partition index of the golden fixture") {
+    assertGolden(
+      "manifest-golden",
+      script._1,
+      k => !byView.exists(v => k == s"$v.manifest" || k == s"$v.manifest.pidx"))
+  }
+
+  test("every commit face leaves the sidecar names and bytes of the golden fixture") {
+    assertGolden("sidecar-golden", script._2)
   }
 }

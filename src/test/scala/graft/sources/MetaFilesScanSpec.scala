@@ -19,8 +19,6 @@ class MetaFilesScanSpec extends AnyFunSuite {
       (2, "the manifest slot claim (create-exclusive) and its fenced manifest temp file"),
     ("Snapshots.scala", "headerView") -> (1, "streams a manifest's header lines only"),
     ("Snapshots.scala", "prunedViewByDir") -> (1, "byte-range reads of a manifest's partition groups"),
-    ("Snapshots.scala", "ndvRegisters") -> (1, "binary NDV register read"),
-    ("Snapshots.scala", "bloomMightContain") -> (1, "binary bloom filter read"),
     ("Frontier3.scala", "corruptFile") -> (1, "a query's deliberately corrupted scratch data file"))
 
   private val renameAllowed: Map[(String, String), (Int, String)] = Map(

@@ -1512,7 +1512,7 @@ class SnapCatalogSpec extends SparkSpec {
     assert(scanOf(spark.sql("SELECT sum(m) AS sm FROM snsumnb.t")).isInstanceOf[SnapV2BatchScan])
     // …until the explicit upgrade: CALL ndv_backfill builds the sum
     // sidecars independently of blooms, and the discipline then sticks
-    Snapshots.backfillNdv(spark, dir)
+    ValueIndex.backfillNdv(spark, dir)
     val df = spark.sql("SELECT sum(m) AS sm FROM snsumnb.t")
     assert(scanOf(df).isInstanceOf[SnapAggScan], scanOf(df).description())
     assert(scanOf(df).description().contains("manifest-only"), scanOf(df).description())

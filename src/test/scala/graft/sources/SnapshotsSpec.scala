@@ -99,11 +99,11 @@ class SnapshotsSpec extends SparkSpec {
     val dirB = Files.createTempDirectory("ndv_b").toString + "/t"
     df.repartition(5).write.parquet(dirB)
     Snapshots.commit(spark, dirB, Seq("id"), Seq("k"))
-    val ea = Snapshots.approxCountDistinct(spark, dirA, "k")
-    val eb = Snapshots.approxCountDistinct(spark, dirB, "k")
+    val ea = ValueIndex.approxCountDistinct(spark, dirA, "k")
+    val eb = ValueIndex.approxCountDistinct(spark, dirB, "k")
     assert(ea.isDefined && ea == eb, s"merge invariance: $ea vs $eb")
     assert(math.abs(ea.get - 700.0) / 700.0 < 0.25, s"estimate ${ea.get} far from 700")
-    assert(Snapshots.approxCountDistinct(spark, dirA, "id").isEmpty,
+    assert(ValueIndex.approxCountDistinct(spark, dirA, "id").isEmpty,
       "a column without the sidecar discipline must refuse, not guess")
     // incremental: an appended commit builds only the new file's sidecar,
     // and new values move the estimate up
@@ -111,12 +111,12 @@ class SnapshotsSpec extends SparkSpec {
     spark.range(9000L, 9200L).select($"id".as("k"), $"id".as("id"))
       .repartition(1).write.mode("append").parquet(dirA)
     Snapshots.commit(spark, dirA, Seq("id"), Seq("k"))
-    val after = Snapshots.approxCountDistinct(spark, dirA, "k").get
+    val after = ValueIndex.approxCountDistinct(spark, dirA, "k").get
     assert(after > before, s"estimate must grow: $before -> $after")
     // clone carries the register sidecars — identical estimate, no rebuild
     val dst = Files.createTempDirectory("ndv_clone").toString + "/t"
     Snapshots.cloneSnapshot(spark, dirA, dst)
-    assert(Snapshots.approxCountDistinct(spark, dst, "k").contains(after))
+    assert(ValueIndex.approxCountDistinct(spark, dst, "k").contains(after))
     // the DSv2 scan reports the merged estimate as per-column NDV
     spark.conf.set("spark.sql.catalog.ndvcat", classOf[graft.sources.snap.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ndvcat.root", baseA)
@@ -153,7 +153,7 @@ class SnapshotsSpec extends SparkSpec {
         s"orphan NDV sidecar survived vacuum: ${st.getPath.getName}")
     }
     // and the rewritten table still answers (fresh sidecars at the commit)
-    assert(Snapshots.approxCountDistinct(spark, dirB, "k").isDefined)
+    assert(ValueIndex.approxCountDistinct(spark, dirB, "k").isDefined)
   }
 
   test("NDV upgrade: routine commits skip pre-NDV files; ndv_backfill upgrades explicitly") {
@@ -176,15 +176,15 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit(spark, dir, Seq("id"), Seq("k"))
     assert(fs.listStatus(ndvDir).count(!_.getPath.getName.startsWith(".")) == 1,
       "the commit must build NDV for the new file only, not backfill the table")
-    assert(Snapshots.approxCountDistinct(spark, dir, "k").isEmpty,
+    assert(ValueIndex.approxCountDistinct(spark, dir, "k").isEmpty,
       "a partially-sidecar'd table must refuse to estimate, never guess")
     // the explicit upgrade pass reads exactly the missing files — and the
     // estimate becomes available (the negative lookup cache must have been
     // invalidated by the build)
-    assert(Snapshots.backfillNdv(spark, dir) == 1L)
-    val est = Snapshots.approxCountDistinct(spark, dir, "k")
+    assert(ValueIndex.backfillNdv(spark, dir) == 1L)
+    val est = ValueIndex.approxCountDistinct(spark, dir, "k")
     assert(est.isDefined && math.abs(est.get - 97.0) / 97.0 < 0.3, s"estimate $est far from 97")
-    assert(Snapshots.backfillNdv(spark, dir) == 0L, "idempotent: nothing left to build")
+    assert(ValueIndex.backfillNdv(spark, dir) == 0L, "idempotent: nothing left to build")
     // SQL surface
     spark.conf.set("spark.sql.catalog.ndvbf", classOf[graft.sources.snap.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ndvbf.root", base)
@@ -360,7 +360,7 @@ class SnapshotsSpec extends SparkSpec {
     // is available immediately, with no rebuild (no data read)
     val v = Snapshots.fastForward(spark, dir, "dev")
     assert(Snapshots.latestVersion(spark, dir) == v)
-    val est = Snapshots.approxCountDistinct(spark, dir, "id")
+    val est = ValueIndex.approxCountDistinct(spark, dir, "id")
     assert(est.isDefined && est.get > 4.0, s"post-ff estimate must cover the appended key: $est")
     assert(Snapshots.countRows(spark, dir) == 5L)
   }
@@ -489,7 +489,7 @@ class SnapshotsSpec extends SparkSpec {
     fs.delete(blocker, false)
     Snapshots.fastForward(spark, dir, "dev")
     assert(Snapshots.countRows(spark, dir) == 6L)
-    val est = Snapshots.approxCountDistinct(spark, dir, "id")
+    val est = ValueIndex.approxCountDistinct(spark, dir, "id")
     assert(est.isDefined && est.get > 4.0, s"post-heal NDV must still serve: $est")
   }
 
@@ -1534,7 +1534,7 @@ class SnapshotsSpec extends SparkSpec {
     // below is actually observed (an in-JVM cache legitimately cannot
     // see external edits; the pre-feature scenario this simulates never
     // had the values cached in the first place)
-    assert(Snapshots.backfillNdv(spark, dir) == 0L)
+    assert(ValueIndex.backfillNdv(spark, dir) == 0L)
     val rels = Snapshots.files(spark, dir)
     // simulate the pre-DECIMAL era: the sidecar holds the permanent `na`
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1546,13 +1546,13 @@ class SnapshotsSpec extends SparkSpec {
       finally out.close()
     }
     assert(
-      !Snapshots.allSumsPresent(spark, dir, "price", rels),
+      !ValueIndex.allSumsPresent(spark, dir, "price", rels),
       "the planning gate must see the stale `na` and fall back")
     // the explicit backfill must REWRITE the `na`, not skip the existing
     // sidecar — without the upgrade the pushdown is disabled forever
-    assert(Snapshots.backfillNdv(spark, dir) == 0L)
+    assert(ValueIndex.backfillNdv(spark, dir) == 0L)
     assert(
-      Snapshots.allSumsPresent(spark, dir, "price", rels),
+      ValueIndex.allSumsPresent(spark, dir, "price", rels),
       "the explicit backfill must upgrade a stale `na` for a now-summable column")
   }
   test("sidecar build parity: driver-side fast path emits byte-identical bloom/NDV sidecars") {
@@ -1604,7 +1604,7 @@ class SnapshotsSpec extends SparkSpec {
       new java.io.File(s"$dir/${Snapshots.ManifestDirName}/$kind")
         .listFiles().filterNot(_.getName.startsWith(".")).foreach(_.delete())
     }
-    Snapshots.sidecarDriverBuildMaxBytes.withValue(0L)(Snapshots.backfillNdv(spark, dir))
+    ValueIndex.sidecarDriverBuildMaxBytes.withValue(0L)(ValueIndex.backfillNdv(spark, dir))
     val slow = sidecarBytes()
     assert(slow.keySet == fast.keySet, s"sidecar sets differ: ${slow.keySet} vs ${fast.keySet}")
     val diff = fast.keys.filter(k => fast(k) != slow(k))
@@ -1613,7 +1613,7 @@ class SnapshotsSpec extends SparkSpec {
     val rels = Snapshots.files(spark, dir)
     val max38 = BigInt(10).pow(38)
     rels.foreach { rel =>
-      assert(Snapshots.fileSumOf(spark, dir, rel, "big").isEmpty, s"big must record na: $rel")
+      assert(ValueIndex.fileSumOf(spark, dir, rel, "big").isEmpty, s"big must record na: $rel")
       val exact = spark.read
         .parquet(Snapshots.resolve(spark, dir, rel).toString)
         .select($"mix")
@@ -1622,7 +1622,7 @@ class SnapshotsSpec extends SparkSpec {
         .map(v => BigInt(v.toBigInteger))
         .sum
       val want = if (exact.abs >= max38) None else Some(exact)
-      assert(Snapshots.fileSumOf(spark, dir, rel, "mix") == want, s"mix sum of $rel")
+      assert(ValueIndex.fileSumOf(spark, dir, rel, "mix") == want, s"mix sum of $rel")
     }
   }
   test("batched sidecar build: a commit batch costs O(1) jobs, not O(files x columns)") {
@@ -1659,7 +1659,7 @@ class SnapshotsSpec extends SparkSpec {
     val nDriver = jobsOf(Snapshots.commit(spark, small, Seq("id", "s", "v"), Seq("id", "s", "v")))
     assert(nDriver == 0, s"the driver-side sidecar build ran $nDriver Spark jobs")
     val dir = fixture()
-    val n = Snapshots.sidecarDriverBuildMaxBytes.withValue(0L) {
+    val n = ValueIndex.sidecarDriverBuildMaxBytes.withValue(0L) {
       jobsOf(Snapshots.commit(spark, dir, Seq("id", "s", "v"), Seq("id", "s", "v")))
     }
     assert(n == 1, s"the forced-distributed commit launched $n jobs — one sidecar job expected")
