@@ -4130,7 +4130,7 @@ object Frontier3 {
       graft.sources.Snapshots.readBranch(s, dir, "staging").count() == nBranch &&
         s.sql(s"SELECT count(*) FROM $cat.ev").head().getLong(0) == nMain
     // a branch MoR delete of the violating row clears the gate
-    graft.sources.DeleteVectors.deleteOnBranch(s, dir, "staging", col("n") < 0)
+    graft.sources.DeleteVectors.deleteWhere(s, dir, col("n") < 0, branch = "staging")
     s.sql(s"CALL $cat.fast_forward(table => 'ev', name => 'staging')").collect()
     val dvClears = s.sql(s"SELECT count(*) FROM $cat.ev").head().getLong(0) == nMain + 1L
     s.sql(s"""

@@ -11,28 +11,29 @@ import org.apache.spark.sql.SparkSession
   * too. Call sites name the stage, the replaced rels and the commit,
   * nothing else.
   *
-  * Three primitives, and [[rewrite]] for the in-place ops built on them:
+  * Two primitives, and [[rewrite]] for the in-place ops built on them:
   *  - [[staged]]: the non-empty part files of a finished stage dir.
   *    Zero-row parts (the single-dir writer creates one even for an empty
   *    frame) never land; their footers are read in parallel. DSv2 writes
   *    pass the files their tasks reported instead, which are non-empty by
   *    construction, so they read no footer.
-  *  - [[land]]: rename staged files onto their live rels.
-  *  - [[swap]]: archive the replaced files, land the targets, then run the
-  *    caller's commit.
+  *  - [[swap]]: archive the replaced files, land the targets (rename them
+  *    onto their live rels), then run the caller's commit.
   *
   * Order: archive first, then land. A directory lister may see a
   * replaced file gone before its replacement arrives, never both at
   * once. Manifest readers see neither window: they read the version the
   * commit writes.
   *
-  * One rollback rule: when anything inside [[swap]] or [[land]] fails,
+  * One rollback rule: when anything inside [[swap]] fails,
   * the live tree and the archive end exactly as they were before the
-  * call. Files this call landed are deleted; files it renamed into the
-  * archive are renamed back; a live duplicate that [[archive]] deleted
-  * because the archive already held its bytes is copied back. The
-  * original failure is rethrown, with any rollback failure suppressed
-  * under it.
+  * call. A file this call landed goes back where it came from (for a
+  * staged file that is its stage dir, which the caller removes anyway; a
+  * fast-forward's branch file returns to its branch); files it renamed
+  * into the archive are renamed back; a live duplicate that [[archive]]
+  * deleted because the archive already held its bytes is copied back.
+  * The original failure is rethrown, with any rollback failure
+  * suppressed under it.
   */
 private[sources] object DataFiles {
 
@@ -79,10 +80,6 @@ private[sources] object DataFiles {
 
   /** The root-relative dir holding `rel` ("" at the root). */
   def dirOf(rel: String): String = rel.substring(0, math.max(rel.lastIndexOf('/'), 0))
-
-  /** Land (staged path, root-relative rel) pairs; returns the rels. */
-  def land(fs: FileSystem, root: Path, targets: Seq[(Path, String)]): Seq[String] =
-    swap(fs, root, Seq.empty, targets)(targets.map(_._2))
 
   /** The partition column of a [[Rewrites.intoDirs]] write: the live dir
     * each row lands in.
@@ -158,7 +155,7 @@ private[sources] object DataFiles {
   def swap[A](fs: FileSystem, root: Path, replaced: Seq[String], targets: Seq[(Path, String)])(
       commit: => A): A = {
     val archived = mutable.ArrayBuffer.empty[(String, Boolean)]
-    val landed = mutable.ArrayBuffer.empty[Path]
+    val landed = mutable.ArrayBuffer.empty[(Path, Path)]
     try {
       replaced.foreach(rel => archived += rel -> archive(fs, root, new Path(root, rel)))
       // a dir that held a replaced file or holds the staged file exists
@@ -170,7 +167,7 @@ private[sources] object DataFiles {
         if (!fs.makeQualified(from).toString.startsWith(dir + "/") && made.add(dir))
           fs.mkdirs(to.getParent)
         if (!fs.rename(from, to)) sys.error(s"failed to land $rel from $from")
-        landed += to
+        landed += from -> to
       }
       commit
     } catch {
@@ -178,7 +175,9 @@ private[sources] object DataFiles {
         def undo(step: => Unit): Unit =
           try step
           catch { case e: Throwable => t.addSuppressed(e) }
-        landed.foreach(p => undo(fs.delete(p, false)))
+        landed.foreach { case (from, to) =>
+          undo(if (!fs.rename(to, from)) sys.error(s"rollback failed to move $to back to $from"))
+        }
         archived.reverseIterator.foreach { case (rel, moved) =>
           val live = new Path(root, rel)
           val arch = archivePath(root, rel)

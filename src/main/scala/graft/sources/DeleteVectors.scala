@@ -95,40 +95,27 @@ object DeleteVectors {
     * rule as every row-level op. Rows already deleted by an earlier DV are
     * never double-counted: the new sidecar is the DISTINCT union of old
     * and new positions and the recorded count is exact.
+    *
+    * `branch` names a writable branch to delete on instead of the live
+    * line ([[Snapshots.Line]]): the same match over the branch's files,
+    * recorded as one branch version, so `readBranch` / `VERSION AS OF
+    * '<branch>'` subtract the rows while every main read keeps them until
+    * [[Snapshots.fastForward]] adopts the pointers — the staging area for
+    * a risky bulk delete, with no byte of data rewritten.
     */
-  def deleteWhere(spark: SparkSession, root: String, predicate: Column): (Long, Long) =
+  def deleteWhere(spark: SparkSession, root: String, predicate: Column, branch: String = ""): (Long, Long) =
     Snapshots.withTableLock(spark, root) {
-      val version = Snapshots.latestVersion(spark, root)
-      require(
-        version > 0L,
-        s"merge-on-read delete on $root needs a committed manifest — Snapshots.commit / createTable first")
-      val view = Snapshots.manifestView(spark, root, version)
-      require(
-        view.schema.isDefined,
-        s"merge-on-read delete on $root needs a v2 manifest (recorded schema) — " +
-          "commit with statsCols to upgrade")
-      boundedCommit(spark, root, view, matchDeletes(spark, root, view, predicate))
+      val line = Snapshots.line(spark, root, Option(branch).filter(_.nonEmpty))
+      val view = line.view
+      val candidates = predicateCandidates(spark, root, view, predicate)
+      val written =
+        if (candidates.isEmpty) Seq.empty
+        else {
+          val scan = matchScan(spark, root, view, candidates)
+          writeSidecarsOf(spark, root, view, candidates, scan, scan.filter(coalesce(predicate, lit(false))))
+        }
+      boundedCommit(spark, root, line, written)
     }
-
-  /** The MoR delete's match core over one VIEW's files (main line or a
-    * branch): the match scan of the [[predicateCandidates]], whose rows
-    * where the predicate holds (a NULL predicate row is not matched)
-    * become sidecars ([[writeSidecarsOf]]). Returns (rel, new sidecar
-    * rel, merged count) per touched file; the caller commits (main:
-    * [[boundedCommit]]; branch: a branch-delta restate).
-    */
-  private[sources] def matchDeletes(
-      spark: SparkSession,
-      root: String,
-      view: Snapshots.ManifestView,
-      predicate: Column): Seq[(String, String, Long)] = {
-    val candidates = predicateCandidates(spark, root, view, predicate)
-    if (candidates.isEmpty) Seq.empty
-    else {
-      val scan = matchScan(spark, root, view, candidates)
-      writeSidecarsOf(spark, root, view, candidates, scan, scan.filter(coalesce(predicate, lit(false))))
-    }
-  }
 
   /** The files of `view` that may hold a row matching `predicate`, found
     * BEFORE any data I/O: skip provably-fully-deleted files, stats-prune
@@ -206,42 +193,9 @@ object DeleteVectors {
       .scanRels(spark, root, view, rels)
       .select(col("*"), col(snap.SnapTable.FileMetaCol), col(snap.SnapTable.PosMetaCol))
 
-  /** Merge-on-read DELETE on a WRITABLE BRANCH — the live line is
-    * untouched: matched positions (over the BRANCH's file set, fork files
-    * and branch appends alike) become deletion vectors recorded by a
-    * branch-delta restate, so `readBranch` / `VERSION AS OF '<branch>'`
-    * subtract them while every main read keeps the rows. Combined with
-    * [[Snapshots.fastForward]] — which carries the branch's pointer
-    * changes into the live line when main hasn't diverged — a branch is
-    * the STAGING AREA for a risky bulk delete: run it on the fork,
-    * validate the branch read, then adopt (or drop) it, all without a
-    * byte of data rewrite. Same narrowing as [[deleteWhere]]; no
-    * threshold rewrite on branches (vectors fold on the main line after
-    * adoption, by the ordinary maintenance passes). Returns
-    * (files touched, rows newly deleted).
-    */
-  def deleteOnBranch(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      predicate: Column): (Long, Long) =
-    Snapshots.withTableLock(spark, root) {
-      val bv = Snapshots.branchView(spark, root, name)
-      require(
-        bv.schema.isDefined,
-        s"merge-on-read branch delete on $root needs a v2 manifest (recorded schema)")
-      val written = matchDeletes(spark, root, bv, predicate)
-      val (changed, newlyDeleted) = pointerUpdatesOf(bv, written)
-      if (changed.isEmpty) return (0L, 0L)
-      // the view was built under THIS table lock — pass it through, no
-      // second branch-chain read
-      Snapshots.restateOnBranch(spark, root, name, bv, changed)
-      (changed.size.toLong, newlyDeleted)
-    }
-
-  /** Apply a batch of freshly-written sidecar results as ONE commit,
-    * under the bounded-MoR policy — the shared back half of the MoR
-    * DELETE, the upsert and the delta-based UPDATE/MERGE write:
+  /** Apply a batch of freshly-written sidecar results as ONE commit on
+    * `line`, under the bounded-MoR policy — the shared back half of the
+    * MoR DELETE, the upsert and the delta-based UPDATE/MERGE write:
     *
     *  - a file whose new position set equals its old one is NOT restated
     *    (count equality IS set equality — the merged set is a superset of
@@ -256,53 +210,22 @@ object DeleteVectors {
     *    and the archive as they were;
     *  - map-typed tables never auto-rewrite: the change feed's multiset
     *    cancellation cannot byte-key map values across a rewrite, and DV
-    *    pointer updates are the feed's map-safe representation.
+    *    pointer updates are the feed's map-safe representation;
+    *  - a branch never rewrites or archives a file: its vectors fold on
+    *    the main line after adoption, by the ordinary maintenance passes.
     *
-    * `added`: staged files (path, live rel) the caller appends in the same
-    * version — the upsert's rows, the delta DML's inserts. Returns (files
-    * with changed pointers or rewrites, newly deleted rows).
+    * `added`: staged files (path, rel) the caller appends in the same
+    * version — the upsert's rows, the delta DML's inserts; they land in
+    * the same swap. Returns (files with changed pointers or rewrites,
+    * newly deleted rows).
     */
   private[sources] def boundedCommit(
       spark: SparkSession,
       root: String,
-      view: Snapshots.ManifestView,
+      line: Snapshots.Line,
       written: Seq[(String, String, Long)],
       added: Seq[(Path, String)] = Seq.empty): (Long, Long) = {
-    val (changed, newlyDeleted) = pointerUpdatesOf(view, written)
-    if (changed.isEmpty && added.isEmpty) return (0L, 0L)
-    val mapTyped =
-      view.schema.exists(s => s.fields.exists(f => Snapshots.containsMapType(f.dataType)))
-    val threshold = maxDeletedFraction(spark)
-    val (rewriteNow, pointerUpdates) =
-      if (mapTyped) (Map.empty[String, Map[String, ColStat]], changed)
-      else
-        changed.partition { case (_, st) =>
-          val rows = st.get(Snapshots.RowCountKey).map(_.min.toLong)
-          val cnt = Snapshots.dvOf(st).map(_._2).getOrElse(0L)
-          rows.exists(r => cnt < r && cnt.toDouble > threshold * r.toDouble)
-        }
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val replaced = rewriteNow.keys.toSeq
-    DataFiles.rewrite(spark, fs, rootPath, replaced, added) { stage =>
-      stageRewrites(spark, root, stage, view.copy(stats = view.stats ++ rewriteNow), replaced)
-    } { landed =>
-      Snapshots.commitRestated(spark, root, pointerUpdates, addedRels = landed, removedRels = replaced)
-    }
-    (changed.size.toLong, newlyDeleted)
-  }
-
-  /** Fresh-sidecar results folded into per-file POINTER UPDATES — the one
-    * encoding of DV state both commit faces share (main-line
-    * [[boundedCommit]] and the branch restate): a file whose merged count
-    * equals its old one is a NO-OP (count equality IS set equality — the
-    * merged sidecar is a superset; the fresh sidecar becomes an orphan
-    * vacuum reaps), every other file's stats are re-stated with the new
-    * pointer. Returns (rel → new stats, rows newly deleted).
-    */
-  private def pointerUpdatesOf(
-      view: Snapshots.ManifestView,
-      written: Seq[(String, String, Long)]): (Map[String, Map[String, ColStat]], Long) = {
+    val view = line.view
     var newlyDeleted = 0L
     val changed: Map[String, Map[String, ColStat]] = written.flatMap {
       case (rel, dvRel, cnt) =>
@@ -316,7 +239,28 @@ object DeleteVectors {
             Snapshots.DvCountKey -> ColStat("l", cnt.toString, cnt.toString))))
         }
     }.toMap
-    (changed, newlyDeleted)
+    if (changed.isEmpty && added.isEmpty) return (0L, 0L)
+    val mapTyped =
+      view.schema.exists(s => s.fields.exists(f => Snapshots.containsMapType(f.dataType)))
+    val (rewriteNow, pointerUpdates) =
+      if (mapTyped || line.branch.isDefined) (Map.empty[String, Map[String, ColStat]], changed)
+      else {
+        val threshold = maxDeletedFraction(spark)
+        changed.partition { case (_, st) =>
+          val rows = st.get(Snapshots.RowCountKey).map(_.min.toLong)
+          val cnt = Snapshots.dvOf(st).map(_._2).getOrElse(0L)
+          rows.exists(r => cnt < r && cnt.toDouble > threshold * r.toDouble)
+        }
+      }
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val replaced = rewriteNow.keys.toSeq
+    DataFiles.rewrite(spark, fs, rootPath, replaced, added) { stage =>
+      stageRewrites(spark, root, stage, view.copy(stats = view.stats ++ rewriteNow), replaced)
+    } { landed =>
+      line.commit(spark, root, pointerUpdates, landed, replaced)
+    }
+    (changed.size.toLong, newlyDeleted)
   }
 
   /** Stage the rewrite of `rels` under `view` in ONE Spark job
@@ -740,6 +684,14 @@ object DeleteVectors {
     * as vectors, the fresh copies land — same logical table, the change
     * feed shows the churn), the standard foreachBatch-upsert contract.
     *
+    * `branch` names a writable branch to apply the batch on instead of
+    * the live line ([[Snapshots.Line]]): the same match, landing and
+    * epoch rules, recorded as one branch version with the landed files
+    * under `.branch/<name>/` and the epoch marker in the branch's own dir
+    * (it dies with the branch, so a recreated branch starts its epochs
+    * fresh). Replay a day's CDC onto a ten-byte fork, validate the branch
+    * read, then adopt it with [[Snapshots.fastForward]] or drop it.
+    *
     * Returns (files with changed pointers or rewrites, rows newly
     * deleted); appended files ride the same commit.
     */
@@ -749,8 +701,9 @@ object DeleteVectors {
       source: DataFrame,
       keyCols: Seq[String],
       streamTag: String = "",
-      epochId: Long = -1L): (Long, Long) =
-    applyInternal(spark, root, source, source, keyCols, streamTag, epochId)
+      epochId: Long = -1L,
+      branch: String = ""): (Long, Long) =
+    applyInternal(spark, root, source, source, keyCols, streamTag, epochId, branch = branch)
 
   /** Full CDC-apply — [[upsert]] plus DELETES in the same atomic epoch:
     * `changes` rows whose `opCol` value is in `deleteOps` remove their key
@@ -758,9 +711,10 @@ object DeleteVectors {
     * other row is an upsert (matched rows die, the new image appends).
     * One commit covers the whole batch. Same contracts as [[upsert]]
     * (full replacement rows on the non-delete side, one op per key per
-    * batch, the exactly-once epoch marker); delete rows only need their
-    * KEY columns populated. This is the end-to-end CDC sink: a Debezium-
-    * style (op, key, image) feed applies at merge-on-read prices.
+    * batch, the exactly-once epoch marker, the `branch` target); delete
+    * rows only need their KEY columns populated. This is the end-to-end
+    * CDC sink: a Debezium-style (op, key, image) feed applies at
+    * merge-on-read prices.
     */
   def applyChanges(
       spark: SparkSession,
@@ -771,7 +725,8 @@ object DeleteVectors {
       deleteOps: Set[String] = Set("d", "delete"),
       streamTag: String = "",
       epochId: Long = -1L,
-      nullSafeKeys: Boolean = false): (Long, Long) = {
+      nullSafeKeys: Boolean = false,
+      branch: String = ""): (Long, Long) = {
     require(
       changes.columns.contains(opCol),
       s"applyChanges needs the op column '$opCol' in the change feed")
@@ -784,12 +739,14 @@ object DeleteVectors {
       keyCols = keyCols,
       streamTag = streamTag,
       epochId = epochId,
-      nullSafeKeys = nullSafeKeys)
+      nullSafeKeys = nullSafeKeys,
+      branch = branch)
   }
 
   /** The shared apply core: table rows matching ANY `keySource` key die
     * as deletion vectors; `appendSource` rows (full table rows) land as
-    * appended files; one [[boundedCommit]].
+    * appended files; one [[boundedCommit]] on the `branch` line (main
+    * when empty).
     */
   private def applyInternal(
       spark: SparkSession,
@@ -799,23 +756,20 @@ object DeleteVectors {
       keyCols: Seq[String],
       streamTag: String,
       epochId: Long,
-      nullSafeKeys: Boolean = false): (Long, Long) =
+      nullSafeKeys: Boolean = false,
+      branch: String = ""): (Long, Long) =
     Snapshots.withTableLock(spark, root) {
       require(keyCols.nonEmpty, "upsert needs at least one key column")
       val rootPath = new Path(root)
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = epochMarker(new Path(rootPath, Snapshots.ManifestDirName), streamTag)
-      if (streamTag.nonEmpty && epochId >= 0L && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
-      val version = Snapshots.latestVersion(spark, root)
-      require(
-        version > 0L,
-        s"merge-on-read upsert on $root needs a committed manifest — Snapshots.commit / createTable first")
-      val view = Snapshots.manifestView(spark, root, version)
-      val schema = view.schema.getOrElse(
-        sys.error(s"merge-on-read upsert on $root needs a v2 manifest (recorded schema)"))
+      val line = Snapshots.line(spark, root, Option(branch).filter(_.nonEmpty))
+      val streamed = streamTag.nonEmpty && epochId >= 0L
+      val tag = java.net.URLEncoder.encode(streamTag, "UTF-8")
+      val marker = new Path(line.markerDir(rootPath), s".mor-epoch-$tag")
+      if (streamed && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
+      val view = line.view
       val (keyFields, sourceKeys, partCols, alive) =
-        upsertInputs(view, schema, keySource, appendSource, keyCols)
-      val aligned = alignedTo(schema, appendSource)
+        upsertInputs(view, view.schema.get, keySource, appendSource, keyCols)
       val written =
         matchKeyUpserts(
           spark, root, view, alive, sourceKeys, keyCols, keyFields, partCols, nullSafe = nullSafeKeys)
@@ -827,23 +781,18 @@ object DeleteVectors {
       // All upserts serialize on the table lock, so sweeping every
       // uncommitted `mor-adhoc-` file in the target dirs is safe.
       val epochPrefix =
-        if (streamTag.nonEmpty && epochId >= 0L)
-          s"mor-${java.net.URLEncoder.encode(streamTag, "UTF-8")}-$epochId-"
-        else "mor-adhoc-"
-      val stage = DataFiles.stageDir(rootPath)
-      val res =
-        try {
-          val added = stageAppend(spark, fs, rootPath, stage, aligned, partCols, epochPrefix, view.rels.toSet)
-          if (written.isEmpty && added.isEmpty) return (0L, 0L)
-          boundedCommit(spark, root, view, written, added)
-        } finally fs.delete(stage, true)
-      if (streamTag.nonEmpty && epochId >= 0L) MetaFiles.advance(fs, marker, epochId)
+        if (streamed) s"mor-$tag-$epochId-" else "mor-adhoc-"
+      val res = stageAppend(spark, root, line, appendSource, epochPrefix) { added =>
+        if (written.isEmpty && added.isEmpty) return (0L, 0L)
+        boundedCommit(spark, root, line, written, added)
+      }
+      if (streamed) MetaFiles.advance(fs, marker, epochId)
       res
     }
 
-  /** The key-match core shared by the main-line upsert/CDC-apply and the
-    * branch upsert: ONE distinct-key frame feeds the range probes, the
-    * bloom probes, the broadcast decision and the match join.
+  /** The key-match core of the upsert/CDC-apply on either line: ONE
+    * distinct-key frame feeds the range probes, the bloom probes, the
+    * broadcast decision and the match join.
     *
     * Candidate narrowing: keys ⊇ partition columns ⇒ partition-exact in
     * the TYPED domain (the same per-file parse [[scopeByPartitions]]
@@ -921,127 +870,8 @@ object DeleteVectors {
     written
   }
 
-  /** Merge-on-read UPSERT on a WRITABLE BRANCH — [[upsert]]'s semantics
-    * on the branch line, ONE branch-local version: branch rows (fork
-    * files and branch appends alike) matching a source row's key become
-    * deletion-vector positions recorded by restate lines, the source's
-    * full replacement rows land as branch-private appended files, and a
-    * single branch delta commits both. The live line never changes until
-    * [[Snapshots.fastForward]] adopts the branch — whose machinery
-    * already carries BOTH sides (fork-file pointers restate; appended
-    * files move with their sidecar pointers). With
-    * [[deleteOnBranch]] this completes branch DML: replay a day's CDC
-    * onto a ten-byte fork, validate the branch read, adopt or drop.
-    * Ad-hoc only (no epoch markers — streaming sinks target the live
-    * line). Returns (files with changed pointers, rows newly deleted);
-    * appended files ride the same branch version.
-    */
-  def upsertOnBranch(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      streamTag: String = "",
-      epochId: Long = -1L): (Long, Long) =
-    applyOnBranchInternal(spark, root, name, source, source, keyCols, streamTag, epochId)
-
-  /** Full CDC-apply ON A BRANCH — [[applyChanges]]'s semantics on the
-    * branch line: delete-op rows vector their keys (nothing appends),
-    * the rest upsert, ONE branch version per batch. With the `streamTag`/
-    * `epochId` pair this is the streaming replay target: a day's CDC feed
-    * replays onto a ten-byte fork at epoch prices, exactly-once per
-    * (branch, tag), while the live line never moves —
-    * [[graft.streaming.Streaming.applyChangesMorSink]] with a `branch`
-    * routes here.
-    */
-  def applyChangesOnBranch(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      changes: DataFrame,
-      keyCols: Seq[String],
-      opCol: String,
-      deleteOps: Set[String] = Set("d", "delete"),
-      streamTag: String = "",
-      epochId: Long = -1L): (Long, Long) = {
-    require(
-      changes.columns.contains(opCol),
-      s"applyChangesOnBranch needs the op column '$opCol' in the change feed")
-    val isDelete = col(opCol).isin(deleteOps.toSeq: _*)
-    applyOnBranchInternal(
-      spark,
-      root,
-      name,
-      keySource = changes,
-      appendSource = changes.filter(!coalesce(isDelete, lit(false))).drop(opCol),
-      keyCols = keyCols,
-      streamTag = streamTag,
-      epochId = epochId)
-  }
-
-  /** The shared branch apply core ([[upsertOnBranch]] /
-    * [[applyChangesOnBranch]]). Exactly-once: the per-(branch, tag) epoch
-    * high-water marker lives INSIDE the branch's manifest dir — it dies
-    * with the branch (drop/fast-forward), so a recreated branch of the
-    * same name starts its epochs fresh; the crash window between commit
-    * and marker falls back to the upsert's logical idempotence, the main
-    * line's contract. Crashed-attempt file leftovers need no sweep here:
-    * branch reads are MANIFEST-driven (never listing-based), so an
-    * uncommitted landed file is invisible and dies when the branch dir
-    * is removed whole.
-    */
-  private def applyOnBranchInternal(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      keySource: DataFrame,
-      appendSource: DataFrame,
-      keyCols: Seq[String],
-      streamTag: String,
-      epochId: Long): (Long, Long) =
-    Snapshots.withTableLock(spark, root) {
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = epochMarker(Snapshots.branchDir(rootPath, name), streamTag)
-      if (streamTag.nonEmpty && epochId >= 0L && MetaFiles.last(fs, marker) >= epochId) return (0L, 0L)
-      val bv = Snapshots.branchView(spark, root, name)
-      val schema = bv.schema.getOrElse(
-        sys.error(s"merge-on-read upsert on $root needs a v2 manifest (recorded schema)"))
-      val (keyFields, sourceKeys, partCols, alive) =
-        upsertInputs(bv, schema, keySource, appendSource, keyCols)
-      val written =
-        matchKeyUpserts(spark, root, bv, alive, sourceKeys, keyCols, keyFields, partCols)
-      val (changed, newlyDeleted) = pointerUpdatesOf(bv, written)
-      // landOnBranch aligns the source to the recorded schema itself
-      val added = Snapshots.landOnBranch(spark, root, name, bv, appendSource)
-      if (changed.isEmpty && added.isEmpty) return (0L, 0L)
-      try Snapshots.commitBranchDelta(spark, root, name, bv, changed.toSeq ++ added)
-      catch {
-        case t: Throwable =>
-          // a failed branch commit must be a clean no-op like the main
-          // line's: remove this statement's landed files (the orphaned DV
-          // sidecars are vacuum-reapable, the same contract as
-          // applyInternal's failure path)
-          added.foreach { case (rel, _) =>
-            try fs.delete(new Path(rootPath, rel), false) catch { case _: Exception => () }
-          }
-          throw t
-      }
-      if (streamTag.nonEmpty && epochId >= 0L) MetaFiles.advance(fs, marker, epochId)
-      (changed.size.toLong, newlyDeleted)
-    }
-
-  /** The per-stream-tag epoch high-water marker ([[MetaFiles.last]] /
-    * [[MetaFiles.advance]]) in `dir`: the table's manifest dir for the
-    * main line, the branch's own dir for a branch (it dies with the
-    * branch).
-    */
-  private def epochMarker(dir: Path, tag: String): Path =
-    new Path(dir, s".mor-epoch-${java.net.URLEncoder.encode(tag, "UTF-8")}")
-
   /** Shared validation + alignment prologue of the upsert faces
-    * ([[applyInternal]], [[upsertOnBranch]] and [[Sources.mergeIntoPartitioned]]):
+    * ([[applyInternal]] and [[Sources.mergeIntoPartitioned]]):
     * key columns must exist on both sides of `schema` (the table's), sources
     * carry FULL replacement rows, keys cast to the TABLE's key types so
     * the match join compares in one domain. Returns (keyFields,
@@ -1419,62 +1249,74 @@ object DeleteVectors {
     }
   }
 
-  /** Write `df` into the table's hive layout under `stage` and return
-    * its non-empty part files as landing targets, each part name prefixed
-    * `epochPrefix` so a crashed attempt's leftovers are DISCOVERABLE:
-    * before returning, every target directory is swept for uncommitted
-    * files carrying this epoch's prefix — a prior attempt that crashed
-    * between landing and commit — and they are deleted (bounded by the
-    * batch's own partitions, not the table); a listing-based commit would
-    * otherwise silently adopt them as duplicate rows. The part names keep
-    * their Spark-generated uniqueness under the prefix, so rels are never
-    * reused (the archive invariant). The caller lands and commits them in
-    * one [[DataFiles.swap]].
+  /** The one landing of appended rows, on either line: `df`, aligned to
+    * the line's schema ([[alignedTo]]), is written in the table's hive
+    * layout under a fresh stage dir, and `land` gets its non-empty part
+    * files as landing targets under the line's data dir
+    * ([[Snapshots.Line.dataDir]]); the caller lands and commits them in
+    * one [[DataFiles.swap]], and the stage is removed either way.
+    *
+    * Each part name is prefixed `epochPrefix` so a crashed attempt's
+    * leftovers are DISCOVERABLE: before `land` runs, every target
+    * directory is swept for files carrying this prefix that the line's
+    * view does not list — a prior attempt that crashed between landing
+    * and commit — and they are deleted (bounded by the batch's own
+    * partitions, not the table); a listing-based commit would otherwise
+    * silently adopt them as duplicate rows. An empty prefix (a plain
+    * branch append or compaction, whose files no listing ever adopts)
+    * sweeps nothing. The part names keep their Spark-generated uniqueness
+    * under the prefix, so rels are never reused (the archive invariant).
     */
-  private[sources] def stageAppend(
+  private[sources] def stageAppend[A](
       spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      rootPath: Path,
-      stage: Path,
+      root: String,
+      line: Snapshots.Line,
       df: DataFrame,
-      partCols: Seq[String],
-      epochPrefix: String,
-      committedRels: Set[String]): Seq[(Path, String)] = {
-    val writer =
-      if (partCols.nonEmpty && !graft.core.LocalFrames.isLocal(df))
-        // co-locate each partition's rows: ~one file per touched
-        // partition value
-        df.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
-      else if (partCols.nonEmpty)
-        // a driver-held batch writes from one task, which sorts by the
-        // partition columns: the same one file per value, no shuffle
-        df.coalesce(1).write.partitionBy(partCols: _*)
-      else df.coalesce(1).write
-    writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-    // zero-row parts never land — a pure-delete CDC epoch must not commit
-    // an empty parquet file
-    val rootUri = fs.makeQualified(rootPath).toUri.getPath
-    val targets = DataFiles.staged(spark, fs, stage).map { case (p, stageRel) =>
-      val cut = stageRel.lastIndexOf('/')
-      val rel =
-        if (cut < 0) epochPrefix + stageRel
-        else stageRel.substring(0, cut + 1) + epochPrefix + stageRel.substring(cut + 1)
-      (p, rel)
-    }
-    // sweep crashed-attempt leftovers from exactly the dirs this batch
-    // lands into: same epoch prefix, present on disk, absent from the
-    // committed manifest
-    targets.map(t => new Path(rootPath, t._2).getParent).distinct.foreach { dir =>
-      if (fs.exists(dir)) {
-        fs.listStatus(dir).foreach { st =>
-          if (st.isFile && st.getPath.getName.startsWith(epochPrefix)) {
-            val rel = fs.makeQualified(st.getPath).toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-            if (!committedRels.contains(rel)) fs.delete(st.getPath, false)
+      epochPrefix: String)(land: Seq[(Path, String)] => A): A = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val aligned = alignedTo(line.view.schema.get, df)
+    val partCols = line.view.layout
+    val stage = DataFiles.stageDir(rootPath)
+    try {
+      val writer =
+        if (partCols.nonEmpty && !graft.core.LocalFrames.isLocal(aligned))
+          // co-locate each partition's rows: ~one file per touched
+          // partition value
+          aligned.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
+        else if (partCols.nonEmpty)
+          // a driver-held batch writes from one task, which sorts by the
+          // partition columns: the same one file per value, no shuffle
+          aligned.coalesce(1).write.partitionBy(partCols: _*)
+        else aligned.coalesce(1).write
+      writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
+      // zero-row parts never land — a pure-delete CDC epoch must not
+      // commit an empty parquet file
+      val targets = DataFiles.staged(spark, fs, stage).map { case (p, stageRel) =>
+        val cut = stageRel.lastIndexOf('/')
+        (p, line.dataDir + stageRel.substring(0, cut + 1) + epochPrefix + stageRel.substring(cut + 1))
+      }
+      // sweep crashed-attempt leftovers from exactly the dirs this batch
+      // lands into: same epoch prefix, present on disk, absent from the
+      // line's view
+      if (epochPrefix.nonEmpty) {
+        val rootUri = fs.makeQualified(rootPath).toUri.getPath
+        val committed = line.view.rels.toSet
+        targets.map(t => new Path(rootPath, t._2).getParent).distinct.foreach { dir =>
+          // a dir the batch is the first to land in lists as absent
+          val listed =
+            try fs.listStatus(dir).toSeq
+            catch { case _: java.io.FileNotFoundException => Seq.empty }
+          listed.foreach { st =>
+            if (st.isFile && st.getPath.getName.startsWith(epochPrefix)) {
+              val rel = fs.makeQualified(st.getPath).toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+              if (!committed.contains(rel)) fs.delete(st.getPath, false)
+            }
           }
         }
       }
-    }
-    targets
+      land(targets)
+    } finally fs.delete(stage, true)
   }
 
   /** Which of `rels` satisfy `pred` over their hive partition-path values?

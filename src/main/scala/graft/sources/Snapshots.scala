@@ -3394,85 +3394,94 @@ object Snapshots {
     scanRels(spark, root, bv, live)
   }
 
-  /** Append `df` to the branch — the live line is untouched. One
-    * branch-local delta manifest records the landed files with the same
-    * footer stats (and bloom/NDV/SUM sidecars) a main-line commit would,
-    * so branch reads prune and pushdown-fold exactly like main reads.
-    * Priced O(epoch): the appended bytes + their footer reads + one small
-    * manifest write. Returns the branch-local version.
+  /** The line a row-level write targets, resolved once per op under the
+    * table lock ([[line]]): the live (main) line, or the writable branch
+    * `branch`. It holds only what differs between lines — the view the op
+    * reads, where appended rows land, how the version commits and where
+    * the epoch markers live — so the delete, upsert, CDC-apply, append
+    * and compaction cores run the same code on either.
+    */
+  private[sources] final case class Line(branch: Option[String], view: ManifestView) {
+
+    /** The root-relative prefix appended rows land under: the root on
+      * main, the branch's private `.branch/<name>/` tree on a branch.
+      */
+    def dataDir: String = branch.fold("")(b => s"$BranchDataDirName/$b/")
+
+    /** The dir of the line's per-stream epoch markers: the manifest dir
+      * on main, the branch's own dir on a branch (its markers die with it).
+      */
+    def markerDir(root: Path): Path = branch.fold(manifestDir(root))(branchDir(root, _))
+
+    /** Commit `restated` stats, `added` landed rels and `removed` rels as
+      * the line's next version: [[commitRestated]] on main (`removed` were
+      * archived by the caller), [[commitBranchDelta]] on a branch, which
+      * archives nothing. Returns the line's new version.
+      */
+    def commit(
+        spark: SparkSession,
+        root: String,
+        restated: Map[String, Map[String, ColStat]],
+        added: Seq[String],
+        removed: Seq[String] = Seq.empty): Long =
+      branch match {
+        case None => commitRestated(spark, root, restated, addedRels = added, removedRels = removed)
+        case Some(b) => commitBranchDelta(spark, root, b, view, restated.toSeq, added = added, minus = removed)
+      }
+  }
+
+  /** Resolve the line `branch` names (None: main) under the caller's
+    * table lock: main reads its latest committed version, a branch its
+    * current [[branchView]]. Row-level writes need a recorded schema.
+    */
+  private[sources] def line(spark: SparkSession, root: String, branch: Option[String]): Line = {
+    val view = branch match {
+      case Some(b) => branchView(spark, root, b)
+      case None =>
+        val version = latestVersion(spark, root)
+        require(
+          version > 0L,
+          s"merge-on-read writes on $root need a committed manifest — Snapshots.commit / createTable first")
+        manifestView(spark, root, version)
+    }
+    require(
+      view.schema.isDefined,
+      s"merge-on-read writes on $root need a v2 manifest (recorded schema) — commit with statsCols to upgrade")
+    Line(branch, view)
+  }
+
+  /** Append `df` to the branch — the live line is untouched. The rows
+    * land through the one append landing ([[DeleteVectors.stageAppend]])
+    * under `.branch/<name>/`, and one branch-local delta records them with
+    * the same footer stats (and bloom/NDV/SUM sidecars) a main-line commit
+    * would, so branch reads prune and pushdown-fold exactly like main
+    * reads. Priced O(epoch): the appended bytes + their footer reads + one
+    * small manifest write. Returns the branch-local version.
     */
   def appendToBranch(spark: SparkSession, root: String, name: String, df: DataFrame): Long =
     withTableLock(spark, root) {
       val rootPath = new Path(root)
       val fs = fsOf(spark, rootPath)
-      val bdir = branchDir(rootPath, name)
-      require(
-        fs.exists(bdir),
-        s"no branch '$name' under $root — createBranch first (tags are immutable)")
-      val bv = branchView(spark, root, name)
-      val added = landOnBranch(spark, root, name, bv, df)
-      if (added.isEmpty) // an empty epoch commits nothing
-        return branchVersions(fs, bdir).lastOption.getOrElse(0L)
-      commitBranchDelta(spark, root, name, bv, added)
+      val target = line(spark, root, Some(name))
+      DeleteVectors.stageAppend(spark, root, target, df, epochPrefix = "") { added =>
+        if (added.isEmpty) // an empty epoch commits nothing
+          branchVersions(fs, branchDir(rootPath, name)).lastOption.getOrElse(0L)
+        else DataFiles.swap(fs, rootPath, Seq.empty, added)(target.commit(spark, root, Map.empty, added.map(_._2)))
+      }
     }
 
-  /** Land `df` under the branch's private data tree and return the landed
-    * rels WITH their footer stats (value-index sidecars built when the
-    * table has them) — the landing half shared by [[appendToBranch]] and
-    * the branch MoR upsert, which commits appends and pointer restates in
-    * ONE branch delta. Caller holds the table lock.
-    */
-  private[sources] def landOnBranch(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      bv: ManifestView,
-      df: DataFrame): Seq[(String, Map[String, ColStat])] = {
-    val rootPath = new Path(root)
-    val fs = fsOf(spark, rootPath)
-    val schema = bv.schema.getOrElse(
-      sys.error(s"branch writes on $root need a v2 manifest (recorded schema) at the fork"))
-    import org.apache.spark.sql.functions.col
-    // aligned to the recorded schema — order and types (the MoR-upsert
-    // discipline: a malformed value fails loudly, never lands half-cast)
-    val aligned = df.select(
-      schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    val partCols = bv.layout
-    val dataDir = branchDataDir(rootPath, name)
-    val stage = DataFiles.stageDir(dataDir)
-    val writer =
-      if (partCols.nonEmpty)
-        aligned.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
-      else aligned.coalesce(1).write
-    writer.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage.toString)
-    // zero-row parts never land, and a failed landing leaves no orphans
-    // under .branch/
-    val rels =
-      try
-        DataFiles.land(
-          fs,
-          rootPath,
-          DataFiles.staged(spark, fs, stage).map { case (p, stageRel) =>
-            p -> s"$BranchDataDirName/$name/$stageRel"
-          })
-      finally fs.delete(stage, true)
-    if (rels.isEmpty) return Seq.empty
-    // the main commit's added-files pass, branch-locally: CHECK
-    // constraints hold on branch lines too (a branch append that violated
-    // them would smuggle bad rows past the gate at fast-forward), footer
-    // stats per new file, value-index sidecars when the table has them
-    val pass = new AddedFiles(spark, root)
-    pass.enforce(rels, bv.schema)
-    val stats = pass.stats(rels, bv.statsCols)
-    pass.sidecars(rels, bv.bloomCols, bv.statsCols)
-    rels.sorted.map(rel => rel -> stats(rel))
-  }
-
-  /** Write the branch's next delta manifest recording `plus` as `+` lines
-    * — appends (new rels) or RESTATES (a re-added rel is a stats
-    * replacement under [[applyDelta]], which is how a branch MoR delete
-    * records its deletion-vector pointers). Caller holds the table lock.
-    * Returns the branch-local version.
+  /** Write the branch's next delta manifest — the branch's commit face: a
+    * dense version in the branch dir, with no slot-claim loop (the caller
+    * holds the table lock, the publish is exclusive), no checkpoint and no
+    * latest-version hint. `plus` are stated `+` lines: RESTATES of the
+    * branch's rels (a re-added rel is a stats replacement under
+    * [[applyDelta]], which is how branch DML records its deletion-vector
+    * pointers) or rebase's carried files. `added` are rels the caller
+    * landed: the main commit's [[AddedFiles]] pass runs on them
+    * branch-locally — CHECK constraints hold on branch lines too (a
+    * branch append that violated them would smuggle bad rows past the
+    * gate at fast-forward), footer stats per new file, value-index
+    * sidecars when the table has them. Returns the branch-local version.
     */
   private[sources] def commitBranchDelta(
       spark: SparkSession,
@@ -3480,6 +3489,7 @@ object Snapshots {
       name: String,
       bv: ManifestView,
       plus: Seq[(String, Map[String, ColStat])],
+      added: Seq[String] = Seq.empty,
       forkMarker: Option[Long] = None,
       minus: Seq[String] = Seq.empty): Long = {
     val rootPath = new Path(root)
@@ -3491,7 +3501,12 @@ object Snapshots {
       minus.forall(baseRels),
       s"commitBranchDelta('$name'): removed rel(s) not on the branch: " +
         s"${minus.filterNot(baseRels).take(3).mkString(", ")}")
-    val newRels = plus.map(_._1).filterNot(baseRels)
+    val pass = new AddedFiles(spark, root)
+    pass.enforce(added, bv.schema)
+    val stats = pass.stats(added, bv.statsCols)
+    pass.sidecars(added, bv.bloomCols, bv.statsCols)
+    val upserts = plus ++ added.map(rel => rel -> stats(rel))
+    val newRels = upserts.map(_._1).filterNot(baseRels)
     // `#delta 0` = "the fork view"; branch reconstruction applies the
     // line's manifests in version order, so the base pointer is
     // informational (the chain's density is validated on read).
@@ -3507,36 +3522,16 @@ object Snapshots {
       partCanon = None,
       nFiles = Some(bv.rels.size.toLong + newRels.size.toLong - minus.size.toLong),
       pathCols = None) ++ forkMarker.map(v => s"#fork $v").toSeq
-    // a branch line is always a delta chain: no slot race (the caller
-    // holds the table lock, the publish is exclusive), no checkpoint
-    val body = deltaBody(prevB + 1L, Next(header, minus.sorted, plus.sortBy(_._1)))
+    val body = deltaBody(prevB + 1L, Next(header, minus.sorted, upserts.sortBy(_._1)))
     val target = branchManifestPath(rootPath, name, prevB + 1L)
     if (!MetaFiles.publish(fs, target, (body.mkString("\n") + "\n").getBytes("UTF-8")))
       sys.error(s"branch commit raced on $target")
     prevB + 1L
   }
 
-  /** Restate existing branch rels' stats (the branch MoR delete's commit
-    * face): one branch-delta manifest whose `+` lines replace the rels'
-    * stats — deletion-vector pointers ride the stats map exactly as on
-    * the main line. Caller holds the table lock.
-    */
-  private[sources] def restateOnBranch(
-      spark: SparkSession,
-      root: String,
-      name: String,
-      bv: ManifestView,
-      restated: Map[String, Map[String, ColStat]]): Long = {
-    val missing = restated.keys.filterNot(bv.rels.toSet)
-    require(
-      missing.isEmpty,
-      s"restateOnBranch('$name'): rel(s) not on the branch: ${missing.take(3).mkString(", ")}")
-    commitBranchDelta(spark, root, name, bv, restated.toSeq)
-  }
-
   /** The branch's net delta over its fork, CHECK-gated: (branch view,
     * the branch's own rels, the fork rels whose deletion vector the
-    * branch changed — deleteOnBranch / upsertOnBranch restates). CHECKS
+    * branch changed — branch delete / upsert restates). CHECKS
     * current AT ADOPTION gate the branch's net-new rows: land-time
     * enforcement saw the check set of ITS moment, but an `add_check`
     * recorded since validated only main's rows (the branch's files are
@@ -3564,11 +3559,12 @@ object Snapshots {
   /** Adopt the branch into the LIVE line — allowed exactly when main has
     * not advanced past the fork (the git fast-forward contract; a
     * diverged main refuses loudly: re-apply or clone instead). The
-    * branch's private files MOVE to their natural table paths (their
-    * bloom/NDV/SUM sidecars rename with them — content depends only on
-    * the file bytes, so nothing recomputes), one O(delta) commit
-    * records them on main, and the branch is dropped. Returns the new
-    * main version.
+    * branch's private files MOVE to their natural table paths with their
+    * bloom/NDV/SUM sidecars (content depends only on the file bytes, so
+    * nothing recomputes) in one [[DataFiles.swap]] around ONE O(delta)
+    * commit that records them on main — a failure before the commit
+    * lands moves every file back onto the branch — and the branch is
+    * dropped. Returns the new main version.
     */
   def fastForward(spark: SparkSession, root: String, name: String): Long =
     withTableLock(spark, root) {
@@ -3593,77 +3589,46 @@ object Snapshots {
       // fork rel, unchanged by adoption) on the main line
       val pointerUpdates =
         touched.map(rel => rel -> bv.stats.getOrElse(rel, Map.empty[String, ColStat])).toMap
-      var moved = List.empty[(Path, Path)]
-      // sidecar renames roll back with their data files: leaving them
-      // keyed under the never-committed target rels would orphan them
-      // (the next vacuum reaps unreferenced sidecars) and silently
-      // degrade the surviving branch's bloom/NDV/SUM probes to the
-      // no-sidecar fallback
-      var movedSidecars = List.empty[(Path, Path)]
+      val targets = branchRels.map { rel =>
+        require(rel.startsWith(prefix), s"unexpected non-branch rel $rel on branch '$name'")
+        val target = rel.stripPrefix(prefix)
+        require(!fs.exists(new Path(rootPath, target)), s"fast-forward target $target already exists — rel reuse")
+        rel -> target
+      }
+      // sidecars are keyed by rel but their CONTENT is a pure function of
+      // the file bytes: each moves right after its file instead of
+      // recomputing
+      val sidecars = targets.map { case (rel, target) =>
+        ValueIndex.files(rootPath, rel, bv).zip(ValueIndex.files(rootPath, target, bv)).filter(m => fs.exists(m._1))
+      }
+      val rootDir = rootPath.toUri.getPath
+      val moves = targets.zip(sidecars).flatMap { case ((rel, target), files) =>
+        (new Path(rootPath, rel) -> target) +:
+          files.map { case (f, t) => f -> t.toUri.getPath.stripPrefix(rootDir).stripPrefix("/") }
+      }
+      // a MOVED file carrying a vector (a branch delete hit a branch
+      // append) keeps its sidecar pointer: readers take only `pos` from a
+      // sidecar, and vacuum keeps every referenced one
+      val addedDv: Map[String, Map[String, ColStat]] = targets.flatMap { case (rel, target) =>
+        Some(dvEntries(bv.stats.getOrElse(rel, Map.empty))).filter(_.nonEmpty).map(target -> _)
+      }.toMap
       val v =
-        try {
-          val targets = branchRels.map { rel =>
-            require(rel.startsWith(prefix), s"unexpected non-branch rel $rel on branch '$name'")
-            val target = rel.stripPrefix(prefix)
-            val from = new Path(rootPath, rel)
-            val to = new Path(rootPath, target)
-            require(!fs.exists(to), s"fast-forward target $target already exists — rel reuse")
-            fs.mkdirs(to.getParent)
-            if (!fs.rename(from, to)) sys.error(s"fast-forward failed to move $rel")
-            moved ::= (to, from)
-            // sidecars are keyed by rel but their CONTENT is a pure function
-            // of the file bytes — rename instead of recomputing
-            ValueIndex.files(rootPath, rel, bv).zip(ValueIndex.files(rootPath, target, bv)).foreach {
-              case (f, t) =>
-                if (fs.exists(f)) {
-                  fs.rename(f, t)
-                  movedSidecars ::= (t, f)
-                  ValueIndex.forget(Seq(f.toString, t.toString))
-                }
-            }
-            rel -> target
-          }
-          // a MOVED file carrying a vector (a branch delete hit a branch
-          // append) keeps its sidecar pointer: readers take only `pos`
-          // from a sidecar, and vacuum keeps every referenced one
-          val addedDv: Map[String, Map[String, ColStat]] = targets.flatMap { case (rel, target) =>
-            Some(dvEntries(bv.stats.getOrElse(rel, Map.empty))).filter(_.nonEmpty).map(target -> _)
-          }.toMap
+        if (targets.isEmpty && pointerUpdates.isEmpty) latest
+        else
           // checksPreEnforced: the adoption gate above already scanned
           // exactly these rows (same bytes, pre-move paths) under the
-          // SAME table lock — the commit must not pay the scan twice
-          if (targets.isEmpty && pointerUpdates.isEmpty) latest
-          else
-            commitRestated(
-              spark,
-              root,
-              pointerUpdates,
-              addedRels = targets.map(_._2),
-              addedDv = addedDv,
-              checksPreEnforced = true)
-        } catch {
-          case t: Throwable =>
-            // rollback is PRE-COMMIT only: a half-moved branch must not
-            // leave uncommitted files in the live tree for a listing-based
-            // commit to adopt. (Once the commit lands, the manifest
-            // references the moved files — moving them back would be the
-            // corruption.)
-            moved.foreach { case (to, from) =>
-              try if (fs.exists(to)) fs.rename(to, from)
-              catch { case _: Exception => () }
-            }
-            movedSidecars.foreach { case (to, from) =>
-              try
-                if (fs.exists(to)) {
-                  fs.rename(to, from)
-                  // the cache may have learned either key between the
-                  // move and the rollback
-                  ValueIndex.forget(Seq(to.toString, from.toString))
-                }
-              catch { case _: Exception => () }
-            }
-            throw t
-        }
+          // SAME table lock — the commit must not pay the scan twice.
+          // The cache may learn either sidecar key while the files move.
+          try
+            DataFiles.swap(fs, rootPath, Seq.empty, moves)(
+              commitRestated(
+                spark,
+                root,
+                pointerUpdates,
+                addedRels = targets.map(_._2),
+                addedDv = addedDv,
+                checksPreEnforced = true))
+          finally ValueIndex.forget(sidecars.flatten.flatMap { case (f, t) => Seq(f.toString, t.toString) })
       // post-commit cleanup is BEST-EFFORT: the adoption is already
       // durable, so a transient delete failure must not trigger any
       // rollback — at worst a dropped-branch husk lingers (harmless: its
@@ -3691,12 +3656,9 @@ object Snapshots {
     withTableLock(spark, root) {
       val rootPath = new Path(root)
       val fs = fsOf(spark, rootPath)
-      require(
-        fs.exists(branchDir(rootPath, name)),
-        s"no branch '$name' under $root (tags have no private files to compact)")
-      val bv = branchView(spark, root, name)
-      val prefix = s"$BranchDataDirName/$name/"
-      val branchRels = bv.rels.filter(_.startsWith(prefix))
+      val target = line(spark, root, Some(name))
+      val bv = target.view
+      val branchRels = bv.rels.filter(_.startsWith(target.dataDir))
       val byDir = branchRels.groupBy(r => new Path(r).getParent.toString)
       val scoped = byDir.valuesIterator
         .filter(g => g.size >= 2 || g.exists(r => hasDv(bv.stats.getOrElse(r, Map.empty))))
@@ -3707,9 +3669,12 @@ object Snapshots {
       // one read of exactly the rewritten scopes, vectors applied — the
       // compactInPlace fold, branch-locally
       val df = scanRels(spark, root, bv, scoped)
-      val added = landOnBranch(spark, root, name, bv, df)
-      commitBranchDelta(spark, root, name, bv, added, minus = scoped)
-      (branchRels.size.toLong, (branchRels.size - scoped.size + added.size).toLong)
+      val added = DeleteVectors.stageAppend(spark, root, target, df, epochPrefix = "") { added =>
+        DataFiles.swap(fs, rootPath, Seq.empty, added)(
+          target.commit(spark, root, Map.empty, added.map(_._2), removed = scoped))
+        added.size
+      }
+      (branchRels.size.toLong, (branchRels.size - scoped.size + added).toLong)
     }
 
   /** Re-base a DIVERGED branch onto the live line's head — the forward
@@ -3847,6 +3812,7 @@ object Snapshots {
       if (latest == 0L) Nil
       else {
         val keepFrom = math.max(1L, latest - keepLast + 1L)
+        val branchNames = branches(spark, root)
         // ref-pinned versions are retained EXACTLY like recent ones: their
         // manifests (and delta chains), data files, bloom and DV sidecars
         // all survive for as long as the ref lives — the zero-copy-fork
@@ -3857,7 +3823,7 @@ object Snapshots {
             // a REBASED branch's base is its chain's fork marker, which
             // may be ahead of a (lagging, crash-window) ref pin — retain
             // the chain-authoritative version explicitly
-            branches(spark, root).map(b => branchForkVersion(spark, root, b))
+            branchNames.map(b => branchForkVersion(spark, root, b))
               .filter(v => v >= 1L && v < keepFrom)).distinct.sorted
         val referenced: Set[String] =
           keptVersions.flatMap(v => files(spark, root, v)).toSet
@@ -3892,8 +3858,7 @@ object Snapshots {
         // ONE branch-chain reconstruction serves BOTH retention sets
         // below (value-index and DV sidecars) — branchView re-reads the
         // chain from the filesystem on every call
-        val branchViews: Seq[ManifestView] =
-          branches(spark, root).map(n => branchView(spark, root, n))
+        val branchViews: Seq[ManifestView] = branchNames.map(n => branchView(spark, root, n))
         ValueIndex.reap(fs, rootPath, referenced ++ branchViews.flatMap(_.rels))
         // deletion-vector sidecars: keep exactly those some RETAINED
         // manifest's stats point at (a pinned read — or a restore — of a

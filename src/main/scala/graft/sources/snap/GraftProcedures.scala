@@ -421,8 +421,9 @@ private[snap] object GraftProcedures {
   private class FastForward(rootDir: String) extends SnapProcedure("fast_forward", rootDir) {
     override def description: String =
       "adopt a branch into the live line (allowed iff main hasn't advanced past the fork): " +
-        "branch files MOVE to their table paths with their sidecars, one O(delta) append " +
-        "commit records them, the branch is dropped; returns the new main version"
+        "branch files MOVE to their table paths with their sidecars in one landing around one " +
+        "O(delta) commit (a failure moves them all back onto the branch), the branch is " +
+        "dropped; returns the new main version"
     override def parameters(): Array[ProcedureParameter] =
       Array(in("table", StringType), in("name", StringType))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
@@ -436,10 +437,10 @@ private[snap] object GraftProcedures {
 
   private class BranchDelete(rootDir: String) extends SnapProcedure("branch_delete", rootDir) {
     override def description: String =
-      "merge-on-read DELETE on a writable branch: matched positions become deletion vectors " +
-        "recorded by a branch-delta restate — the live line is untouched until " +
-        "CALL fast_forward adopts the pointers (or drop_branch discards them); the staging " +
-        "area for a risky bulk delete"
+      "merge-on-read DELETE on a writable branch — the main-line delete with a branch " +
+        "target: matched positions become deletion vectors recorded by one branch version, " +
+        "the live line is untouched until CALL fast_forward adopts the pointers (or " +
+        "drop_branch discards them); the staging area for a risky bulk delete"
     override def parameters(): Array[ProcedureParameter] =
       Array(in("table", StringType), in("name", StringType), in("where", StringType))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
@@ -447,20 +448,21 @@ private[snap] object GraftProcedures {
         .whereOf(input.getUTF8String(2).toString)
         .getOrElse(throw new IllegalArgumentException(
           "branch_delete needs a non-empty `where` — a WHERE-less branch delete would vector every row"))
-      val (files, rows) = graft.sources.DeleteVectors.deleteOnBranch(
+      val (files, rows) = graft.sources.DeleteVectors.deleteWhere(
         spark,
         dirOf(input.getUTF8String(0).toString),
-        input.getUTF8String(1).toString,
-        pred)
+        pred,
+        branch = input.getUTF8String(1).toString)
       result(out("files_touched" -> LongType, "rows_deleted" -> LongType), Seq(files, rows))
     }
   }
 
   private class BranchUpsert(rootDir: String) extends SnapProcedure("branch_upsert", rootDir) {
     override def description: String =
-      "merge-on-read UPSERT on a writable branch: branch rows matching a source row's key " +
-        "become deletion vectors, the source's full replacement rows land as branch-private " +
-        "appends, ONE branch version — the SQL face of the staged CDC replay. `source` is a " +
+      "merge-on-read UPSERT on a writable branch — the main-line upsert with a branch " +
+        "target: branch rows matching a source row's key become deletion vectors, the " +
+        "source's full replacement rows land as branch-private appends, ONE branch version " +
+        "(a failed landing rolls back) — the SQL face of the staged CDC replay. `source` is a " +
         "SELECT (or a dotted table name) providing FULL table rows; `keys` a comma list"
     override def parameters(): Array[ProcedureParameter] =
       Array(
@@ -476,12 +478,12 @@ private[snap] object GraftProcedures {
           spark.sql(srcSql)
         else spark.table(srcSql)
       val keys = input.getUTF8String(3).toString.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      val (files, rows) = graft.sources.DeleteVectors.upsertOnBranch(
+      val (files, rows) = graft.sources.DeleteVectors.upsert(
         spark,
         dirOf(input.getUTF8String(0).toString),
-        input.getUTF8String(1).toString,
         src,
-        keys)
+        keys,
+        branch = input.getUTF8String(1).toString)
       result(out("files_touched" -> LongType, "rows_replaced" -> LongType), Seq(files, rows))
     }
   }

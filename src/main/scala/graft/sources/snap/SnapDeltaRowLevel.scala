@@ -239,7 +239,8 @@ class SnapDeltaBatchWrite(
         //    pushes a file past it rewrites that file in the same commit
         //    (the README's "MoR is bounded" claim holds for the whole DML
         //    surface, not just pushable DELETEs).
-        DeleteVectors.boundedCommit(spark, dir, view, written, DataFiles.staged(insertStagePath, addedRels))
+        DeleteVectors.boundedCommit(
+          spark, dir, Snapshots.Line(None, view), written, DataFiles.staged(insertStagePath, addedRels))
       } finally {
         fs.delete(insertStagePath, true)
         fs.delete(dvStagePath, true)

@@ -593,7 +593,10 @@ object Streaming {
     * rewrite. Exactly-once: the per-query epoch high-water marker skips
     * replayed epochs; the crash window between commit and marker falls
     * back to the upsert's logical idempotence (full replacement rows
-    * keyed by `keyCols`). Usage:
+    * keyed by `keyCols`). A non-empty `branch` replays the stream onto
+    * that writable fork under the same rules (exactly-once per (branch,
+    * tag)); the live table never moves until fast_forward adopts the
+    * whole replay. Usage:
     *
     * {{{
     * df.writeStream
@@ -607,34 +610,22 @@ object Streaming {
       tag: String = "upsert",
       branch: String = ""): (Dataset[org.apache.spark.sql.Row], Long) => Unit =
     (batch, epochId) => {
-      if (branch.nonEmpty)
-        // the BRANCH-targeted replay: every epoch lands on the fork's
-        // line (exactly-once per (branch, tag)); the live table never
-        // moves until fast_forward adopts the whole replay
-        graft.sources.DeleteVectors.upsertOnBranch(
-          batch.sparkSession,
-          root,
-          branch,
-          batch.toDF(),
-          keyCols,
-          streamTag = tag,
-          epochId = epochId)
-      else
-        graft.sources.DeleteVectors.upsert(
-          batch.sparkSession,
-          root,
-          batch.toDF(),
-          keyCols,
-          streamTag = tag,
-          epochId = epochId)
+      graft.sources.DeleteVectors.upsert(
+        batch.sparkSession,
+        root,
+        batch.toDF(),
+        keyCols,
+        streamTag = tag,
+        epochId = epochId,
+        branch = branch)
       ()
     }
 
   /** The full streaming CDC-apply sink — [[upsertMorSink]] plus DELETES:
     * rows whose `opCol` value is in `deleteOps` remove their key (vectors
     * only, nothing appends); the rest upsert. One atomic commit per
-    * epoch, same exactly-once marker discipline. A Debezium-style
-    * (op, key, image) feed applies at merge-on-read prices.
+    * epoch, same exactly-once marker discipline and `branch` target. A
+    * Debezium-style (op, key, image) feed applies at merge-on-read prices.
     */
   def applyChangesMorSink(
       root: String,
@@ -644,31 +635,16 @@ object Streaming {
       tag: String = "cdc-apply",
       branch: String = ""): (Dataset[org.apache.spark.sql.Row], Long) => Unit =
     (batch, epochId) => {
-      if (branch.nonEmpty)
-        // replay a CDC feed onto a writable fork: deletes vector, the
-        // rest upsert, one branch version per epoch — validate the
-        // branch read, then fast_forward (or rebase first if the live
-        // line moved) adopts the whole replay at metadata cost
-        graft.sources.DeleteVectors.applyChangesOnBranch(
-          batch.sparkSession,
-          root,
-          branch,
-          batch.toDF(),
-          keyCols,
-          opCol,
-          deleteOps,
-          streamTag = tag,
-          epochId = epochId)
-      else
-        graft.sources.DeleteVectors.applyChanges(
-          batch.sparkSession,
-          root,
-          batch.toDF(),
-          keyCols,
-          opCol,
-          deleteOps,
-          streamTag = tag,
-          epochId = epochId)
+      graft.sources.DeleteVectors.applyChanges(
+        batch.sparkSession,
+        root,
+        batch.toDF(),
+        keyCols,
+        opCol,
+        deleteOps,
+        streamTag = tag,
+        epochId = epochId,
+        branch = branch)
       ()
     }
 

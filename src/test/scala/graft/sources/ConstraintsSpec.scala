@@ -167,7 +167,7 @@ class ConstraintsSpec extends SparkSpec {
     assert(Snapshots.readBranch(spark, dir, "dev").count() == 4L)
     // a branch MoR delete of the violating row clears the gate — the
     // enforcement scan applies the branch's deletion vectors
-    DeleteVectors.deleteOnBranch(spark, dir, "dev", $"v" < 0)
+    DeleteVectors.deleteWhere(spark, dir, $"v" < 0, branch = "dev")
     Snapshots.fastForward(spark, dir, "dev")
     assert(Snapshots.readSnapshot(spark, dir).count() == 3L)
   }
@@ -183,7 +183,7 @@ class ConstraintsSpec extends SparkSpec {
     val e = intercept[RuntimeException] { Snapshots.rebase(spark, dir, "dev") }
     assert(e.getMessage.contains("v_pos"), s"rebase must name the check: ${e.getMessage}")
     // the pre-rebase chain is intact: fix the branch, then rebase + adopt
-    DeleteVectors.deleteOnBranch(spark, dir, "dev", $"v" < 0)
+    DeleteVectors.deleteWhere(spark, dir, $"v" < 0, branch = "dev")
     Snapshots.rebase(spark, dir, "dev")
     Snapshots.fastForward(spark, dir, "dev")
     assert(Snapshots.readSnapshot(spark, dir).count() == 4L)

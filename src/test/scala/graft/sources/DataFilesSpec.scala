@@ -132,6 +132,23 @@ class DataFilesSpec extends SparkSpec {
     lawHolds(dir, 2)(spark.sql("UPDATE dflf.ev SET v = v + 1 WHERE id IN (1, 2, 3, 4)"))
   }
 
+  test("Snapshots.fastForward: a failed landing moves every file and sidecar back onto the branch") {
+    val dir = base("df_ff") + "/t"
+    partitioned(dir, 1)
+    Snapshots.commit(spark, dir, Seq("day", "id"), Seq("id")) // blooms + NDV + sums
+    Snapshots.createBranch(spark, dir, "dev")
+    Snapshots.appendToBranch(spark, dir, "dev", Seq(("d03", 30L, 1.0), ("d04", 40L, 2.0)).toDF("day", "id", "v"))
+    val (branchFiles, sidecars) = (filesUnder(dir, ".branch"), filesUnder(dir, Snapshots.ManifestDirName))
+    // the second file fails to land after the first moved with its sidecars
+    lawHolds(dir, 2)(Snapshots.fastForward(spark, dir, "dev"))
+    assert(filesUnder(dir, ".branch") == branchFiles, "the branch files moved back")
+    assert(
+      filesUnder(dir, Snapshots.ManifestDirName).filter(_.matches("(bloom|ndv|sum)/.*")) ==
+        sidecars.filter(_.matches("(bloom|ndv|sum)/.*")),
+      "the sidecars moved back")
+    assert(Snapshots.readBranch(spark, dir, "dev").count() == 26L)
+  }
+
   test("swap rollback: a renamed original moves back, a dropped duplicate is copied back") {
     val dir = base("df_swap") + "/t"
     partitioned(dir, 1)

@@ -1054,7 +1054,7 @@ class DeleteVectorsSpec extends SparkSpec {
     Snapshots.appendToBranch(
       spark, dir, "dev", Seq((9L, "2024-01-09", 90.0), (10L, "2024-01-09", 100.0)).toDF("id", "day", "v"))
     // delete id=2 (a FORK file's row) and id=10 (a BRANCH file's row) — on the branch
-    val (f1, r1) = DeleteVectors.deleteOnBranch(spark, dir, "dev", $"id" === 2L || $"id" === 10L)
+    val (f1, r1) = DeleteVectors.deleteWhere(spark, dir, $"id" === 2L || $"id" === 10L, branch = "dev")
     assert(f1 == 2L && r1 == 2L, s"got ($f1, $r1)")
     // the LIVE line is byte-for-byte untouched: no version, no pointers
     assert(Snapshots.latestVersion(spark, dir) == 1L)
@@ -1063,7 +1063,7 @@ class DeleteVectorsSpec extends SparkSpec {
     // the branch subtracts both
     assert(idsOf2(Snapshots.readBranch(spark, dir, "dev")) == Set(1L, 3L, 4L, 9L))
     // idempotence: re-deleting already-deleted rows commits nothing
-    assert(DeleteVectors.deleteOnBranch(spark, dir, "dev", $"id" === 2L) == ((0L, 0L)))
+    assert(DeleteVectors.deleteWhere(spark, dir, $"id" === 2L, branch = "dev") == ((0L, 0L)))
     // vacuum keeps branch-line DV sidecars alive (they live only in
     // branch manifests)
     Snapshots.vacuum(spark, dir, keepLast = 1)
@@ -1093,6 +1093,60 @@ class DeleteVectorsSpec extends SparkSpec {
   private def idsOf2(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select($"id").as[Long].collect().toSet
 
+  /** Each file of `view` under `dir` with its deletion-vector positions,
+    * keyed by its dir (a branch file's private prefix stripped) and its
+    * raw rows, so the same write on two lines pairs up.
+    */
+  private def vectorsOf(dir: String, view: Snapshots.ManifestView): Seq[(String, Seq[Long])] =
+    view.rels.map { rel =>
+      val home = DataFiles.dirOf(rel).replaceFirst("^\\.branch/[^/]+/?", "")
+      val raw = spark.read.parquet(s"$dir/$rel").collect().map(_.toString).mkString(";")
+      val positions = Snapshots.dvOf(view.stats.getOrElse(rel, Map.empty)).toSeq.flatMap { case (dv, _) =>
+        spark.read.parquet(s"$dir/$dv").select($"pos").as[Long].collect().sorted.toSeq
+      }
+      s"$home|$raw" -> positions
+    }.sortBy(_._1)
+
+  test("law: main ≡ branch — one DML script leaves the same rows and vectors on either line") {
+    val base = Files.createTempDirectory("dv_line_law").toString
+    val (mainDir, forkDir) = (s"$base/m", s"$base/b")
+    table(mainDir)
+    // an identical table: the same files under the same rels
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(
+      fs, new org.apache.hadoop.fs.Path(mainDir), fs, new org.apache.hadoop.fs.Path(forkDir), false, fs.getConf)
+    Snapshots.createBranch(spark, forkDir, "dev")
+    def script(dir: String, branch: String): Unit = {
+      DeleteVectors.deleteWhere(spark, dir, $"id" === 2L, branch = branch)
+      DeleteVectors.upsert(
+        spark, dir, Seq((3L, "2024-01-02", 21.0), (5L, "2024-01-05", 50.0)).toDF("id", "day", "v"),
+        Seq("day", "id"), branch = branch)
+      DeleteVectors.applyChanges(
+        spark, dir, Seq((4L, "2024-01-03", 0.0, "d"), (6L, "2024-01-06", 60.0, "u")).toDF("id", "day", "v", "op"),
+        Seq("day", "id"), "op", branch = branch)
+      // two streaming CDC epochs, then a replay of the first (skipped)
+      val sink = graft.streaming.Streaming.applyChangesMorSink(dir, Seq("day", "id"), "op", branch = branch)
+      val e0 = Seq((1L, "2024-01-01", 12.0, "u"), (5L, "2024-01-05", 0.0, "d")).toDF("id", "day", "v", "op")
+      sink(e0, 0L)
+      sink(Seq((7L, "2024-01-07", 70.0, "u"), (3L, "2024-01-02", 22.0, "u")).toDF("id", "day", "v", "op"), 1L)
+      sink(e0, 0L)
+    }
+    script(mainDir, "")
+    script(forkDir, "dev")
+    val want = Set(
+      (1L, "2024-01-01", 12.0), (3L, "2024-01-02", 22.0), (6L, "2024-01-06", 60.0), (7L, "2024-01-07", 70.0))
+    assert(rowSet(Snapshots.readSnapshot(spark, mainDir)) == want)
+    assert(rowSet(Snapshots.readBranch(spark, forkDir, "dev")) == want)
+    val mainVectors = vectorsOf(mainDir, Snapshots.manifestView(spark, mainDir))
+    assert(mainVectors.count(_._2.nonEmpty) == 5, mainVectors.toString)
+    assert(vectorsOf(forkDir, Snapshots.branchView(spark, forkDir, "dev")) == mainVectors)
+    // the fork table's live line never moved; adoption makes it the main run
+    assert(Snapshots.latestVersion(spark, forkDir) == 1L)
+    Snapshots.fastForward(spark, forkDir, "dev")
+    assert(rowSet(Snapshots.readSnapshot(spark, forkDir)) == want)
+    assert(vectorsOf(forkDir, Snapshots.manifestView(spark, forkDir)) == mainVectors)
+  }
+
   test("branch MoR upsert: matched rows vector + rows append in ONE branch version; adoption carries both") {
     val dir = Files.createTempDirectory("dv_branch_ups").toString + "/t"
     val v1 = table(dir)
@@ -1105,7 +1159,7 @@ class DeleteVectorsSpec extends SparkSpec {
       (2L, "2024-01-01", 110.0),
       (9L, "2024-01-09", 91.0),
       (11L, "2024-01-11", 111.0)).toDF("id", "day", "v")
-    val (touched, deleted) = DeleteVectors.upsertOnBranch(spark, dir, "dev", src, Seq("day", "id"))
+    val (touched, deleted) = DeleteVectors.upsert(spark, dir, src, Seq("day", "id"), branch = "dev")
     assert(touched == 2L && deleted == 2L, s"got ($touched, $deleted)")
     assert(rowSet(Snapshots.readBranch(spark, dir, "dev")) == Set(
       (1L, "2024-01-01", 10.0),
@@ -1121,7 +1175,7 @@ class DeleteVectorsSpec extends SparkSpec {
     // a NO-OP upsert (empty source) returns (0, 0), commits no branch
     // version and changes nothing
     val branchBefore = rowSet(Snapshots.readBranch(spark, dir, "dev"))
-    assert(DeleteVectors.upsertOnBranch(spark, dir, "dev", src.limit(0), Seq("day", "id")) ==
+    assert(DeleteVectors.upsert(spark, dir, src.limit(0), Seq("day", "id"), branch = "dev") ==
       ((0L, 0L)))
     assert(rowSet(Snapshots.readBranch(spark, dir, "dev")) == branchBefore)
     // adoption carries both sides: the fork pointer restates, the moved

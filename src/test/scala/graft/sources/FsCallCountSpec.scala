@@ -104,8 +104,9 @@ object CountingFs {
   * [[MetaFiles]]; the compaction and UPDATE bounds the counts measured
   * before data files landed through [[DataFiles]]; the ALTER, restore and
   * partition-exact DELETE bounds the counts measured before every
-  * manifest commit went through one commit kernel (the probe printed by
-  * this spec, run on that code). Each operation runs once untimed first so
+  * manifest commit went through one commit kernel; the branch upsert and
+  * branch delete bounds the counts measured before branch writes ran the
+  * main-line cores (the probe printed by this spec, run on that code). Each operation runs once untimed first so
   * the counted run sees the steady state (epoch marker present, view
   * registered).
   */
@@ -129,7 +130,11 @@ class FsCallCountSpec extends SparkSpec {
     "restore" ->
       Map("create" -> 3L, "rename" -> 4L, "delete" -> 2L, "mkdirs" -> 11L, "exists" -> 20L),
     "sql_delete_partition" ->
-      Map("create" -> 3L, "rename" -> 3L, "delete" -> 2L, "mkdirs" -> 6L, "exists" -> 21L))
+      Map("create" -> 3L, "rename" -> 3L, "delete" -> 2L, "mkdirs" -> 6L, "exists" -> 21L),
+    "branch_upsert_epoch" ->
+      Map("create" -> 14L, "rename" -> 15L, "delete" -> 5L, "mkdirs" -> 24L, "exists" -> 34L),
+    "branch_delete" ->
+      Map("create" -> 2L, "rename" -> 1L, "delete" -> 1L, "mkdirs" -> 3L, "exists" -> 6L))
 
   private def base(tag: String): String = {
     spark.sparkContext.hadoopConfiguration.set("fs.fscount.impl", classOf[CountingFs].getName)
@@ -165,6 +170,32 @@ class FsCallCountSpec extends SparkSpec {
     assert(DeleteVectors.upsert(
       spark, dir, Seq(("d01", "a", 0L)).toDF("day", "cat", "v"), Seq("day", "cat"),
       streamTag = "q", epochId = 1L) == ((0L, 0L)), "the counted epoch must have advanced the marker")
+  }
+
+  test("one branch upsert epoch issues no more namespace calls than the bound") {
+    val dir = base("fscount_bups") + "/t"
+    table(dir)
+    Snapshots.createBranch(spark, dir, "dev")
+    def epoch(e: Long, v: Long) =
+      DeleteVectors.upsert(
+        spark, dir, Seq(("d01", "a", v), ("d04", s"n$e", v)).toDF("day", "cat", "v"),
+        Seq("day", "cat"), streamTag = "q", epochId = e, branch = "dev")
+    epoch(0L, 100L)
+    check("branch_upsert_epoch", CountingFs.during(epoch(1L, 101L)))
+    assert(DeleteVectors.upsert(
+      spark, dir, Seq(("d01", "a", 0L)).toDF("day", "cat", "v"), Seq("day", "cat"),
+      streamTag = "q", epochId = 1L, branch = "dev") == ((0L, 0L)), "the counted epoch must have advanced the marker")
+    assert(Snapshots.readBranch(spark, dir, "dev").select(sum($"v")).head().getLong(0) == 336L)
+  }
+
+  test("one branch delete issues no more namespace calls than the bound") {
+    val dir = base("fscount_bdel") + "/t"
+    table(dir)
+    Snapshots.createBranch(spark, dir, "dev")
+    DeleteVectors.deleteWhere(spark, dir, $"cat" === "b", branch = "dev")
+    check("branch_delete", CountingFs.during(DeleteVectors.deleteWhere(spark, dir, $"cat" === "c", branch = "dev")))
+    assert(Snapshots.readBranch(spark, dir, "dev").count() == 2L)
+    assert(Snapshots.readSnapshot(spark, dir).count() == 4L)
   }
 
   /** Lands one fresh parquet file under `<dir>/day=<day>/`, uncommitted. */

@@ -15,7 +15,7 @@ import graft.SparkSpec
   * lock-free append, the listing commit, the deletion-vector restate, an
   * upsert's restate + append, a partition-exact SQL DELETE, ALTER, a
   * forced checkpoint, restore, clone, a branch append and its
-  * fast-forward) and compares each version's manifest text and
+  * fast-forward, a branch delete and upsert and their fast-forward) and compares each version's manifest text and
   * partition index with the fixture `manifest-golden.txt`. Only random
   * names are normalized: Spark's per-job part-file UUIDs and the
   * deletion-vector sidecar tags (decoded from the hex stats first).
@@ -38,6 +38,16 @@ class ManifestFormatSpec extends SparkSpec {
   import spark.implicits._
 
   private val byView: Set[String] = Set.empty
+
+  /** The entries the branch-DML steps add. Their upsert files carry the
+    * shared append landing's `mor-adhoc-` name prefix, which branch
+    * upserts gained when they began to run the main-line core; it is
+    * normalized away in these entries only (the main-line upsert's
+    * files in them too), as UUIDs are everywhere.
+    */
+  private def branchDml(key: String): Boolean =
+    key.startsWith("branch-d/") || key.startsWith("t/v0000000011.") || key == "t@11" ||
+      Set("createBranch d t", "branch delete t", "branch upsert t", "v11 fastForward d t")(key)
 
   private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
   private val dvTag = "\\.dv-(rb-)?[0-9a-f]{8}-".r
@@ -200,6 +210,18 @@ class ManifestFormatSpec extends SparkSpec {
       }
       out ++= branchCapture(root, "b")
       step("v10 fastForward")(Snapshots.fastForward(spark, root, "b"))
+      // branch DML on a second branch: a delete vectoring a fork file, an
+      // upsert vectoring it again and appending, then its fast-forward (v11)
+      step("createBranch d")(Snapshots.createBranch(spark, root, "d"))
+      step("branch delete")(DeleteVectors.deleteWhere(spark, root, col("id") === 5L, branch = "d"))
+      step("branch upsert") {
+        DeleteVectors.upsert(
+          spark, root,
+          Seq((7L, "d02", 70.0, "u", "nu"), (11L, "d05", 11.0, "n", "nn")).toDF("id", "day", "v", "tag", "note"),
+          Seq("id"), branch = "d")
+      }
+      out ++= branchCapture(root, "d")
+      step("v11 fastForward d")(Snapshots.fastForward(spark, root, "d"))
       out ++= capture("t", root)
       out ++= capture("c", s"$base/c")
     } finally {
@@ -207,7 +229,10 @@ class ManifestFormatSpec extends SparkSpec {
       spark.conf.unset("spark.sql.catalog.golden")
       spark.conf.unset("spark.sql.catalog.golden.root")
     }
-    (out.result(), trees.result())
+    // a tree is a sorted line set: it re-sorts after the prefix goes
+    def normDml(entries: Seq[(String, String)], lines: String => String) =
+      entries.map { case (k, v) => k -> (if (branchDml(k)) lines(v.replace("mor-adhoc-", "")) else v) }
+    (normDml(out.result(), identity), normDml(trees.result(), _.split("\n").sorted.mkString("\n")))
   }
 
   /** Writes `got` to `target/<name>.actual.txt`; its sections must equal

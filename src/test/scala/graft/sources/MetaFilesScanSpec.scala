@@ -25,7 +25,6 @@ class MetaFilesScanSpec extends AnyFunSuite {
     ("Snapshots.scala", "withTableLock") -> (2, "the table lock: break a stale lock by rename, restore it"),
     ("Snapshots.scala", "tryWriteManifestClaimed") ->
       (3, "the manifest slot claim: break a stale claim, restore it, publish the fenced manifest"),
-    ("Snapshots.scala", "fastForward") -> (4, "branch fast-forward: move branch files live, and back on failure"),
     ("Sources.scala", "idempotentBatchAppend") -> (1, "plain-parquet batch append: the dir rename is the commit"),
     ("SnapRowLevel.scala", "commit") -> (2, "DSv2 writers' task commits onto their final names"),
     ("Frontier3.scala", "q235") -> (1, "the query's upsert input fixture"),
@@ -106,6 +105,6 @@ class MetaFilesScanSpec extends AnyFunSuite {
     checkAllowed(
       hitsOf("""\.rename\(""".r, Set("MetaFiles.scala", "DataFiles.scala")),
       renameAllowed,
-      "hand-written rename outside MetaFiles and DataFiles (land data files with DataFiles.land/swap)")
+      "hand-written rename outside MetaFiles and DataFiles (land data files with DataFiles.swap)")
   }
 }

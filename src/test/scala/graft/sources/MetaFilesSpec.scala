@@ -137,9 +137,9 @@ class MetaFilesSpec extends SparkSpec {
       dir, partitionCols = Seq("day"))
     Snapshots.commit(spark, dir, Seq("day", "cat"))
     Snapshots.createBranch(spark, dir, "dev")
-    def epoch(e: Long, v: Long) = DeleteVectors.upsertOnBranch(
-      spark, dir, "dev", Seq(("d01", "a", v)).toDF("day", "cat", "v"), Seq("day", "cat"),
-      streamTag = "q", epochId = e)
+    def epoch(e: Long, v: Long) = DeleteVectors.upsert(
+      spark, dir, Seq(("d01", "a", v)).toDF("day", "cat", "v"), Seq("day", "cat"),
+      streamTag = "q", epochId = e, branch = "dev")
     epoch(0L, 10L)
     epoch(1L, 11L)
     val marker = new Path(s"$dir/${Snapshots.ManifestDirName}/branches/dev/.mor-epoch-q")
@@ -178,8 +178,8 @@ class MetaFilesSpec extends SparkSpec {
     MarkerFaultFs.armed.set(true)
     try {
       val e = intercept[RuntimeException] {
-        DeleteVectors.applyChangesOnBranch(
-          spark, dir, "dev", changes, Seq("day", "cat"), opCol = "op", streamTag = "t", epochId = 0L)
+        DeleteVectors.applyChanges(
+          spark, dir, changes, Seq("day", "cat"), opCol = "op", streamTag = "t", epochId = 0L, branch = "dev")
       }
       assert(e.getMessage.contains("epoch high-water update failed"), e.getMessage)
     } finally MarkerFaultFs.armed.set(false)

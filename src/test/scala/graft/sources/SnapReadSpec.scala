@@ -87,7 +87,7 @@ class SnapReadSpec extends SparkSpec {
     Snapshots.createBranch(spark, dir, "b1")
     val branchRows = rowsOf(30L to 31L, Some(9))
     Snapshots.appendToBranch(spark, dir, "b1", frameOf(branchRows, withW = true))
-    DeleteVectors.deleteOnBranch(spark, dir, "b1", $"id" === 17L)
+    DeleteVectors.deleteWhere(spark, dir, $"id" === 17L, branch = "b1")
     val onBranch = (live ++ branchRows).filterNot(_._1 == 17L)
 
     assert(model(Snapshots.readSnapshot(spark, dir)) == sorted(live))

@@ -372,8 +372,8 @@ class SnapshotsSpec extends SparkSpec {
     val v1 = Snapshots.commit(spark, dir, Seq("day", "id"), Seq("id"))
     Snapshots.createBranch(spark, dir, "dev")
     // branch DML: vector two FORK files, append one private file
-    DeleteVectors.deleteOnBranch(spark, dir, "dev", $"id" === 3L)
-    DeleteVectors.deleteOnBranch(spark, dir, "dev", $"id" === 1L)
+    DeleteVectors.deleteWhere(spark, dir, $"id" === 3L, branch = "dev")
+    DeleteVectors.deleteWhere(spark, dir, $"id" === 1L, branch = "dev")
     Snapshots.appendToBranch(
       spark, dir, "dev", Seq((9L, "2024-01-09", 90.0)).toDF("id", "day", "v"))
     // main DIVERGES: an upsert-append AND a MoR delete vectoring the SAME
@@ -410,7 +410,7 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.createBranch(spark, dir, "dev")
     val day03 = Snapshots.files(spark, dir).find(_.startsWith("day=2024-01-03/")).get
     // the branch vectors day=03's file…
-    DeleteVectors.deleteOnBranch(spark, dir, "dev", $"id" === 4L)
+    DeleteVectors.deleteWhere(spark, dir, $"id" === 4L, branch = "dev")
     // …and main REMOVES that file via a COW delete (the branch's DV is
     // branch-local, so main's COW guard rightly lets the rewrite run)
     Sources.deleteWhere(spark, dir, $"id" === 4L)
